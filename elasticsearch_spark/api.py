@@ -1315,9 +1315,10 @@ class Engine:
         """POST /{index}/_search: full search body. Returns
         {"hits": DataFrame, "aggregations": {name: DataFrame}}.
 
-        ``routing`` (the ``?routing=`` query param): prunes the index
-        fast path to the routing value's shard segments — same results
-        when docs were indexed with that routing, ~P× less scan work.
+        ``routing`` (the ``?routing=`` query param): prunes every index
+        path (match, phrase, intervals, spans, sorted scan) to the routing
+        value's shard segments — same results when docs were indexed with
+        that routing, ~P× less scan work.
 
         `match`-family queries at the TOP level of the body run through the
         inverted index (postings + block-max WAND); compound/filter bodies
@@ -1467,7 +1468,7 @@ class Engine:
                 # reads only its first k live rows
                 from .operators.topk import sorted_scan
 
-                hits = sorted_scan(self.spark, d, k=size)
+                hits = sorted_scan(self.spark, d, k=size, routing=routing)
                 out = {"hits": hits}
                 if "aggs" in body:
                     out["aggregations"] = aggs_mod.aggregate(_apply_runtime(self._docs_view(index)), body["aggs"])
@@ -1512,7 +1513,7 @@ class Engine:
             # spans exist only on the index path — implement `from` here
             # (the other fast paths fall back to the DSL path for it)
             frm = int(body.get("from", 0) or 0)
-            hits = search_spans(self.spark, d, q, k=size + frm)
+            hits = search_spans(self.spark, d, q, k=size + frm, routing=routing)
             if frm:
                 from pyspark.sql import Window as _W
 
@@ -1552,20 +1553,21 @@ class Engine:
                     m = ispec["match"]
                     hits = search_intervals(
                         self.spark, d, m["query"], ordered=m.get("ordered", False),
-                        max_gaps=m.get("max_gaps", -1), k=size,
+                        max_gaps=m.get("max_gaps", -1), k=size, routing=routing,
                     )
                 else:
                     # full source algebra (prefix/wildcard/fuzzy/regexp
                     # leaves, any_of/all_of, interval filters)
                     from .operators.intervals import search_intervals_source
 
-                    hits = search_intervals_source(self.spark, d, ispec, k=size)
+                    hits = search_intervals_source(
+                        self.spark, d, ispec, k=size, routing=routing)
             else:
                 (fld, mspec), = spec.items()
                 text = mspec["query"] if isinstance(mspec, dict) else mspec
                 slop = mspec.get("slop", 0) if isinstance(mspec, dict) else 0
                 fn = search_phrase if kind == "match_phrase" else search_phrase_prefix
-                hits = fn(self.spark, d, text, k=size, slop=slop)
+                hits = fn(self.spark, d, text, k=size, slop=slop, routing=routing)
         else:
             # runtime mappings are applied INSIDE dsl.search (applying
             # them here too would double-apply shadowing scripts)

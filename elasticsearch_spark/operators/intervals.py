@@ -10,8 +10,8 @@ document; a document matches when the root set is non-empty. Minimal sets
 sorted by start have strictly increasing ends, which every combinator here
 exploits for O(n log n) evaluation.
 
-Execution = the same distributed shape as phrase/intervals-match
-(``operators/phrase.py``): term-dictionary expansion for multi-term leaf
+Execution = the shared per-segment query phase (``operators/topk.py``),
+as for phrase/intervals-match: term-dictionary expansion for multi-term leaf
 sources happens once on the driver (capped, term-ordered — deterministic
 across tasks); the per-SEGMENT task decodes only the fetched terms'
 postings (parquet term-filter pushdown), derives candidate docs from the
@@ -28,19 +28,16 @@ exists-semantics against the reference source's intervals.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import analysis, bm25
+from ..functions import analysis
 from ..sources import index_store as store
-from .topk import CAND_SCHEMA, _term_weights
+from .phrase import _POS_BITS, _POS_MASK, _occ_keys
+from .topk import HITS_SCHEMA, IndexReader, Segment, score_verified, search_segments
 
-_POS_BITS = 32
-_POS_MASK = (1 << _POS_BITS) - 1
 MAX_EXPANSIONS = 128
 
 _EMPTY_IV = np.zeros((0, 2), dtype=np.int64)
@@ -382,128 +379,71 @@ def _eval_node(node: dict, leaf_pos) -> np.ndarray:
     return iv
 
 
-def _segment_intervals_scorer(index_dir, weights, avgdl, k1, b, k, tree):
-    import pyarrow.parquet as pq
-
-    from ..functions.smallfloat import byte4_to_int
-    from .phrase import _decode_term, _occ_keys
-
+def _intervals_segment(tree: dict, weights: dict[str, tuple[float, int]],
+                       meta: store.IndexMeta, k: int):
+    """Per-segment fn: decode the tree's terms with positions, derive
+    candidates from its presence requirements, evaluate the interval
+    algebra per candidate doc, BM25-score verified docs."""
     fetch_terms = tree_terms(tree)
     score_terms = tree_terms(tree, include_filters=False)
+    avgdl, k1, b = meta.avgdl, meta.k1, meta.b
 
-    def fn(batches):
-        from .ops import seg_tombstones
+    def per_segment(seg: Segment) -> pd.DataFrame | None:
+        decoded = seg.positions(fetch_terms)
+        term_docs = {t: v[0] for t, v in decoded.items()}
+        cand = seg.live(_required_docs(tree, term_docs))
+        if len(cand) == 0:
+            return None
 
-        for pdf in batches:
-            outs = []
-            for seg in pdf["seg"]:
-                d = store.seg_dir(index_dir, int(seg))
-                tomb = seg_tombstones(index_dir, d)
-                post = pq.read_table(
-                    os.path.join(d, "postings.parquet"),
-                    columns=["term", "first_doc_id", "ids_bytes", "tf_bytes", "pos_bytes"],
-                    filters=[("term", "in", fetch_terms)],
-                ).to_pandas()
-                if len(post) == 0:
-                    continue
-                decoded = {t: _decode_term(post[post["term"] == t]) for t in set(post["term"])}
-                term_docs = {t: v[0] for t, v in decoded.items()}
-                cand = _required_docs(tree, term_docs)
-                if len(tomb) and len(cand):
-                    p = np.searchsorted(tomb, cand)
-                    dead = (p < len(tomb)) & (tomb[np.minimum(p, len(tomb) - 1)] == cand)
-                    cand = cand[~dead]
-                if len(cand) == 0:
-                    continue
+        # occurrence keys per term restricted to candidates;
+        # per-doc slices via the dense-doc prefix of the key
+        keys = {t: _occ_keys(*decoded[t], cand) for t in decoded}
 
-                # occurrence keys per term restricted to candidates;
-                # per-doc slices via the dense-doc prefix of the key
-                keys = {t: _occ_keys(*decoded[t], cand) for t in decoded}
-
-                def leaf_pos_for(dense: int):
-                    def leaf_pos(terms: list[str]) -> np.ndarray:
-                        parts = []
-                        for t in terms:
-                            kk = keys.get(t)
-                            if kk is None or not len(kk):
-                                continue
-                            lo = np.searchsorted(kk, dense << _POS_BITS)
-                            hi = np.searchsorted(kk, (dense + 1) << _POS_BITS)
-                            if hi > lo:
-                                parts.append(kk[lo:hi] & _POS_MASK)
-                        if not parts:
-                            return np.zeros(0, dtype=np.int64)
-                        return np.sort(np.concatenate(parts))
-
-                    return leaf_pos
-
-                # presence-decidable docs skip the per-doc interval algebra
-                sure = np.intersect1d(
-                    _presence_sure_docs(tree, term_docs), cand, assume_unique=True
-                )
-                sure_mask = np.zeros(len(cand), dtype=bool)
-                sure_mask[np.searchsorted(cand, sure)] = True
-                hit_mask = sure_mask.copy()
-                for dense in np.nonzero(~sure_mask)[0]:
-                    hit_mask[dense] = len(_eval_node(tree, leaf_pos_for(int(dense)))) > 0
-                verified = cand[hit_mask]
-                if len(verified) == 0:
-                    continue
-
-                docs_t = pq.read_table(
-                    os.path.join(d, "docs.parquet"), columns=["doc_id", "norm"]
-                )
-                nd = docs_t["doc_id"].to_numpy()
-                order = np.argsort(nd, kind="mergesort")
-                nd = nd[order]
-                nq = byte4_to_int(docs_t["norm"].to_numpy())[order]
-                ql = nq[np.searchsorted(nd, verified)].astype(np.float64)
-                scores = np.zeros(len(verified), dtype=np.float64)
-                matched = np.zeros(len(verified), dtype=np.int32)
-                for t in score_terms:
-                    if t not in decoded or t not in weights:
+        def leaf_pos_for(dense: int):
+            def leaf_pos(terms: list[str]) -> np.ndarray:
+                parts = []
+                for t in terms:
+                    kk = keys.get(t)
+                    if kk is None or not len(kk):
                         continue
-                    ids, tfs = decoded[t][0], decoded[t][1]
-                    p = np.searchsorted(ids, verified)
-                    ok = (p < len(ids)) & (ids[np.minimum(p, len(ids) - 1)] == verified)
-                    tf_v = np.where(ok, tfs[np.minimum(p, len(ids) - 1)], 0).astype(np.float64)
-                    scores += weights[t][0] * bm25.tf_norm(tf_v, ql, avgdl, k1, b)
-                    matched += ok.astype(np.int32)
-                idx = np.lexsort((verified, -scores))[:k]
-                outs.append(pd.DataFrame({
-                    "doc_id": verified[idx],
-                    "score": scores[idx],
-                    "n_terms_matched": matched[idx],
-                }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                    lo = np.searchsorted(kk, dense << _POS_BITS)
+                    hi = np.searchsorted(kk, (dense + 1) << _POS_BITS)
+                    if hi > lo:
+                        parts.append(kk[lo:hi] & _POS_MASK)
+                if not parts:
+                    return np.zeros(0, dtype=np.int64)
+                return np.sort(np.concatenate(parts))
 
-    return fn
+            return leaf_pos
+
+        # presence-decidable docs skip the per-doc interval algebra
+        sure = np.intersect1d(
+            _presence_sure_docs(tree, term_docs), cand, assume_unique=True
+        )
+        sure_mask = np.zeros(len(cand), dtype=bool)
+        sure_mask[np.searchsorted(cand, sure)] = True
+        hit_mask = sure_mask.copy()
+        for dense in np.nonzero(~sure_mask)[0]:
+            hit_mask[dense] = len(_eval_node(tree, leaf_pos_for(int(dense)))) > 0
+        verified = cand[hit_mask]
+        if len(verified) == 0:
+            return None
+        return score_verified(seg, decoded, score_terms, weights, verified, avgdl, k1, b, k)
+
+    return per_segment
 
 
 def search_intervals_source(
-    spark: SparkSession, index_dir: str, source: dict, k: int = 10
+    spark: SparkSession, index_dir: str, source: dict, k: int = 10,
+    routing: str | None = None,
 ) -> DataFrame:
     """intervals query with a full source AST (IntervalsSourceProvider):
     distributed per-segment verify + BM25 ranking over matched terms."""
-    meta = store.IndexMeta.load(index_dir)
-    tree = compile_source(spark, index_dir, source, meta.analyzer)
+    reader = IndexReader(spark, index_dir)
+    tree = compile_source(spark, index_dir, source, reader.meta.analyzer)
     terms = tree_terms(tree)
-    empty = spark.createDataFrame([], "doc_id long, url string, score double")
     if not terms:
-        return empty
-    weights = _term_weights(spark, index_dir, terms, meta)
-    segs = store.list_segs(index_dir)
-    if not segs:
-        return empty
-    fn = _segment_intervals_scorer(index_dir, weights, meta.avgdl, meta.k1, meta.b, k, tree)
-    n_tasks = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
-    seg_rdd = spark.sparkContext.parallelize([(int(s),) for s in segs], n_tasks)
-    cands = spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, CAND_SCHEMA)
-    top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    docs = spark.read.parquet(*store.docs_glob(index_dir)).select("doc_id", "url")
-    return (
-        top.join(docs, "doc_id")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+        return spark.createDataFrame([], HITS_SCHEMA)
+    weights = reader.term_weights(terms)
+    fn = _intervals_segment(tree, weights, reader.meta, k)
+    return search_segments(spark, index_dir, reader.meta, fn, k, routing)

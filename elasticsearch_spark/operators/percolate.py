@@ -36,11 +36,13 @@ the broadcast qterms side) → shuffle only over the collision pairs.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..plans import dsl
@@ -62,6 +64,18 @@ BROADCAST_QTERMS_MAX = 1_000_000
 # (timestamp formats, binary, decimal trailing zeros): term extractions on
 # these fields are demoted to evaluate-against-all-docs
 _UNPRUNABLE_TYPE = re.compile(r"^(timestamp|date|binary|decimal)")
+
+# string literals on a typed column compare through try_cast in the compile
+# path ("1e3" hits 1000.0, "yes" hits true), but the doc side surfaces only
+# CAST-to-STRING and canonical integer forms; a literal spelled any other
+# way is demoted to full evaluation. Integer digits are capped below each
+# type's exact range (float32 7 digits, double 15)
+_CANON_LITERAL = {
+    "boolean": r"^(true|false)$",
+    "float": r"^(0|-?[1-9][0-9]{0,5})$",
+    "double": r"^(0|-?[1-9][0-9]{0,14})$",
+}
+_CANON_INTEGER = r"^(0|-?[1-9][0-9]{0,17})$"  # tinyint … bigint
 
 
 # --------------------------------------------------------------------------
@@ -297,7 +311,7 @@ def _qterms_from_df(stored: DataFrame, analyzer_regex: str, key: str) -> DataFra
 
 
 def _doc_terms(docs: DataFrame, key: str, fields: list[str],
-               analyzer_regex: str) -> tuple[DataFrame, list[str]]:
+               analyzer_regex: str) -> tuple[DataFrame, Column | None]:
     """One-pass (doc key, field, term, kind) token table over the
     referenced fields, kinds mirroring the Extraction kinds so exact,
     numeric-equality, and containment semantics never cross:
@@ -310,27 +324,36 @@ def _doc_terms(docs: DataFrame, key: str, fields: list[str],
     - ``num`` (non-string literal equality): the values' canonical
       integer/bool forms — scalar STRING columns surface the canonical
       form of numeric-looking values ("3.0"/"1e3" → "3"/"1000", matching
-      the compile path's implicit string→double cast), numeric columns
-      surface both forms; array<string> columns surface NOTHING here
-      (the compile path compares elements byte-exactly, dsl._term_lit);
+      the compile path's implicit string→double cast) and of
+      boolean-looking ones ("1"/"yes" → "true", the compile path's
+      try_cast('boolean')), numeric columns surface both forms;
+      array<string> columns surface their elements verbatim (the compile
+      path compares the literal's canonical string to elements
+      byte-exactly, dsl._term_lit);
     - ``tok``: analyzed tokens (match-family containment).
 
     Non-integral values never alias (3.7 is skipped, never "3"). Returns
-    the frame and the UNPRUNABLE field subset (types whose string cast
-    can't mirror DSL literals — extractions on those fields are demoted
-    to full evaluation by the caller)."""
+    the frame and a predicate over extraction rows (field, term, kind)
+    that is true where the table can't mirror the compile path — fields
+    whose type's string cast can't mirror DSL literals, and string
+    literals on typed fields outside ``_CANON_LITERAL``; the caller
+    demotes those queries to full evaluation (None = nothing to demote)."""
     entries = []
-    unprunable: list[str] = []
+    unsound: list[Column] = []
     for f in fields:
         try:
             dt = docs.select(F.col(f)).schema[0].dataType.simpleString()
         except Exception:
             continue  # field absent from the doc frame → no candidates
         if _UNPRUNABLE_TYPE.match(dt):
-            unprunable.append(f)
+            unsound.append(F.col("field") == f)
             continue
         is_arr = dt.startswith("array<")
         elem = dt[6:-1] if is_arr else dt
+        if elem != "string":
+            canon_lit = _CANON_LITERAL.get(elem, _CANON_INTEGER)
+            unsound.append((F.col("field") == f) & (F.col("kind") == "raw")
+                           & ~F.col("term").rlike(canon_lit))
         if is_arr:
             raws = F.col(f).cast("array<string>")
             text = F.array_join(raws, " ")
@@ -350,7 +373,8 @@ def _doc_terms(docs: DataFrame, key: str, fields: list[str],
                 x.try_cast("double").try_cast("bigint").cast("string"))))
         if elem == "string":
             raw_terms = raws
-            num_terms = F.array().cast("array<string>") if is_arr else canon
+            num_terms = raws if is_arr else F.concat(
+                canon, F.array(F.col(f).try_cast("boolean").cast("string")))
         else:
             raw_terms = num_terms = F.concat(raws, canon)
         entries.append(F.struct(
@@ -362,17 +386,18 @@ def _doc_terms(docs: DataFrame, key: str, fields: list[str],
         entries.append(F.struct(
             F.lit(f).alias("field"), F.lit("tok").alias("kind"),
             F.array_distinct(F.array_compact(toks)).alias("terms")))
+    demote = functools.reduce(operator.or_, unsound) if unsound else None
     if not entries:
         empty = docs.where(F.lit(False))
         return (empty.select(F.col(key), F.lit("").alias("field"),
                              F.lit("").alias("term"),
-                             F.lit("").alias("kind")), unprunable)
+                             F.lit("").alias("kind")), demote)
     return (
         docs.select(F.col(key), F.explode(F.array(*entries)).alias("e"))
         .select(F.col(key), F.col("e.field").alias("field"),
                 F.col("e.kind").alias("kind"),
                 F.explode("e.terms").alias("term")),
-        unprunable,
+        demote,
     )
 
 
@@ -537,13 +562,12 @@ def percolate_pruned(
         fields = sorted({r["field"] for r in
                          qx.select("field").distinct().collect()
                          if r["field"] is not None})
-        doc_terms, unprunable = _doc_terms(docs, key, fields, regex)
+        doc_terms, demote = _doc_terms(docs, key, fields, regex)
 
         qterms = qx.where(~F.col("unanalyzable"))
-        if unprunable:
-            # extractions touching non-canonicalizable columns → full eval
-            demoted = qterms.where(F.col("field").isin(unprunable)) \
-                .select("query_id").distinct()
+        if demote is not None:
+            # extractions the token table can't mirror → full eval
+            demoted = qterms.where(demote).select("query_id").distinct()
             qterms = qterms.join(demoted, "query_id", "left_anti")
         else:
             demoted = None

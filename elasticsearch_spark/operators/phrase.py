@@ -6,10 +6,11 @@ match_phrase_prefix (``MatchPhrasePrefixQueryBuilder.java``) and intervals
 (``IntervalQueryBuilder.java``) against the DOCS_AND_FREQS_AND_POSITIONS
 postings. Execution is FULLY DISTRIBUTED: doc ids are segment-local
 (``doc_id = pid << 40 | row``), so every occurrence of a document lives in
-exactly one segment — the positional verify runs inside the per-segment
-scorer task (``mapInPandas`` over a seg-id frame, zero shuffle, no driver
-filesystem access), and the coordinator merge is the same ≤k-rows-per-task
-``orderBy(score, doc_id).limit(k)`` as the WAND query phase.
+exactly one segment — the positional verify runs inside the shared
+per-segment query phase of ``operators/topk.py`` (one task per segment
+slice, zero shuffle, no driver filesystem access), and the coordinator
+merge is the same ≤k-rows-per-task ``orderBy(score, doc_id).limit(k)`` as
+the WAND query phase.
 
 The ordered verify is a VECTORIZED GREEDY CHAIN over sorted position
 lists (the standard two-pointer sweep, O(total occurrences · n_terms)):
@@ -35,8 +36,6 @@ around the first match, ``<em>``-wrapped, as native Column expressions.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -44,47 +43,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType
 
 from ..functions import analysis
-from ..functions import bm25
 from ..sources import index_store as store
-from .topk import CAND_SCHEMA, _term_weights
+from .topk import HITS_SCHEMA, IndexReader, Segment, score_verified, search_segments
 
 _POS_BITS = 32
 _POS_MASK = (1 << _POS_BITS) - 1
-
-# footer probe results; segments are immutable so a path's answer never changes
-_POS_PROBE_CACHE: dict[str, bool | None] = {}
-
-
-def _segment_has_positions(path: str) -> bool | None:
-    """Footer-only probe: does this segment's postings file carry position
-    data? Decided from the parquet column statistics (an all-empty
-    ``pos_bytes`` chunk has ``max == b""``); None when statistics are
-    absent (unknown). No data pages are read."""
-    if path in _POS_PROBE_CACHE:
-        return _POS_PROBE_CACHE[path]
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    names = [md.schema.column(i).name for i in range(md.num_columns)]
-    out: bool | None
-    if "pos_bytes" not in names:
-        out = False
-    else:
-        i = names.index("pos_bytes")
-        out = None
-        saw = False
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(i).statistics
-            if st is None or not st.has_min_max:
-                continue
-            saw = True
-            if st.max not in (b"", None):
-                out = True
-                break
-        if out is None and saw:
-            out = False
-    _POS_PROBE_CACHE[path] = out
-    return out
 
 
 def index_has_positions(index_dir: str) -> bool:
@@ -92,38 +55,13 @@ def index_has_positions(index_dir: str) -> bool:
     (statistics absent) counts as positional — normal builds always store
     positions and must not silently take the slow text-rescan path."""
     return not any(
-        _segment_has_positions(
-            os.path.join(store.seg_dir(index_dir, s), "postings.parquet")
-        ) is False
-        for s in store.list_segs(index_dir)
+        Segment(index_dir, s).has_positions() is False for s in store.list_segs(index_dir)
     )
 
 
 # --------------------------------------------------------------------------
 # in-task decode helpers (run inside the per-segment scorer)
 # --------------------------------------------------------------------------
-
-def _decode_term(post: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """All blocks of ONE term in one segment → (doc_ids, tfs, flat_pos,
-    occ_off). Blocks concatenate cleanly: the VByte positions stream stores
-    each posting's first occurrence absolute, so per-posting offsets are
-    all that's needed to slice it."""
-    from .codec import decode_block
-    from .postings import decode_positions
-
-    ids_l, tfs_l = [], []
-    for fd, ib, tb in zip(post["first_doc_id"], post["ids_bytes"], post["tf_bytes"]):
-        ids, tfs = decode_block(ib, tb, int(fd))
-        ids_l.append(ids)
-        tfs_l.append(tfs)
-    ids = np.concatenate(ids_l)
-    tfs = np.concatenate(tfs_l)
-    stream = b"".join(x for x in post["pos_bytes"] if x)
-    if not stream:
-        raise LookupError("index has no positions")
-    flat_pos, occ_off = decode_positions(stream, tfs)
-    return ids, tfs, flat_pos, occ_off
-
 
 def _occ_keys(
     ids: np.ndarray, tfs: np.ndarray, flat_pos: np.ndarray, occ_off: np.ndarray,
@@ -217,168 +155,82 @@ def _unordered_window_verified(
     return np.array(out, dtype=np.int64)
 
 
-def _segment_positional_scorer(
-    index_dir: str,
+def _positional_segment(
     weights: dict[str, tuple[float, int]],
-    avgdl: float,
-    k1: float,
-    b: float,
+    meta: store.IndexMeta,
     k: int,
     terms: list[str],
     expansions: list[str],
     ordered: bool,
     max_total_gap: int,
 ):
-    """mapInPandas fn over a seg-id frame: per segment, decode the query
-    terms' postings WITH positions (parquet term-filter pushdown), verify
-    positionally, score verified docs by the BM25 term sum, emit ≤k rows.
+    """Per-segment fn: decode the query terms' postings WITH positions,
+    verify positionally, score verified docs by the BM25 term sum, emit ≤k
+    rows.
 
     ``expansions`` non-empty = phrase_prefix: the LAST slot's occurrence
     list is the union of the expansion terms' occurrences (Lucene's
     MultiPhraseQuery position union), and matched expansions contribute
     their own BM25 terms to the score."""
-    import pyarrow.parquet as pq
-
-    from ..functions.smallfloat import byte4_to_int
-
     slot_terms: list[list[str]] = [[t] for t in terms] + ([expansions] if expansions else [])
     fetch_terms = sorted({t for st in slot_terms for t in st})
+    score_terms = list(dict.fromkeys(t for st in slot_terms for t in st))
+    avgdl, k1, b = meta.avgdl, meta.k1, meta.b
 
-    def fn(batches):
-        from .ops import seg_tombstones
+    def per_segment(seg: Segment) -> pd.DataFrame | None:
+        decoded = seg.positions(fetch_terms, slot_terms)
+        if not decoded:
+            return None  # conjunction can't match in this segment
 
-        for pdf in batches:
-            outs = []
-            for seg in pdf["seg"]:
-                d = store.seg_dir(index_dir, int(seg))
-                tomb = seg_tombstones(index_dir, d)
-                post = pq.read_table(
-                    os.path.join(d, "postings.parquet"),
-                    columns=["term", "first_doc_id", "ids_bytes", "tf_bytes", "pos_bytes"],
-                    filters=[("term", "in", fetch_terms)],
-                ).to_pandas()
-                if len(post) == 0:
+        # candidate docs: in every slot (union of the slot's terms)
+        cand = None
+        for st in slot_terms:
+            slot_ids = np.unique(np.concatenate(
+                [decoded[t][0] for t in st if t in decoded]
+            ))
+            cand = slot_ids if cand is None else np.intersect1d(cand, slot_ids, assume_unique=True)
+            if len(cand) == 0:
+                return None
+        cand = seg.live(cand)
+        if len(cand) == 0:
+            return None
+
+        key_lists = []
+        for st in slot_terms:
+            ks = [
+                _occ_keys(*decoded[t], cand) for t in st if t in decoded
+            ]
+            ks = [x for x in ks if len(x)]
+            if not ks:
+                key_lists.append(np.zeros(0, dtype=np.int64))
+            elif len(ks) == 1:
+                key_lists.append(ks[0])
+            else:
+                key_lists.append(np.sort(np.concatenate(ks)))
+        if ordered:
+            v_dense = _ordered_chain_verified(key_lists, max_total_gap)
+        else:
+            # duplicate query terms → one list with threshold =
+            # multiplicity (intervals slots are single terms)
+            mult: dict[str, int] = {}
+            for st in slot_terms:
+                mult[st[0]] = mult.get(st[0], 0) + 1
+            uniq_lists, thrs = [], []
+            seen: set[str] = set()
+            for i, st in enumerate(slot_terms):
+                if st[0] in seen:
                     continue
-                present = set(post["term"])
-                if any(not (set(st) & present) for st in slot_terms):
-                    continue  # conjunction can't match in this segment
-                decoded = {t: _decode_term(post[post["term"] == t]) for t in present}
+                seen.add(st[0])
+                uniq_lists.append(key_lists[i])
+                thrs.append(mult[st[0]])
+            v_dense = _unordered_window_verified(uniq_lists, max_total_gap, thrs)
+        if len(v_dense) == 0:
+            return None
+        return score_verified(
+            seg, decoded, score_terms, weights, cand[v_dense], avgdl, k1, b, k
+        )
 
-                # candidate docs: in every slot (union of the slot's terms)
-                cand = None
-                for st in slot_terms:
-                    slot_ids = np.unique(np.concatenate(
-                        [decoded[t][0] for t in st if t in decoded]
-                    ))
-                    cand = slot_ids if cand is None else np.intersect1d(cand, slot_ids, assume_unique=True)
-                    if len(cand) == 0:
-                        break
-                if cand is None or len(cand) == 0:
-                    continue
-                if len(tomb):
-                    pos = np.searchsorted(tomb, cand)
-                    dead = (pos < len(tomb)) & (tomb[np.minimum(pos, len(tomb) - 1)] == cand)
-                    cand = cand[~dead]
-                    if len(cand) == 0:
-                        continue
-
-                key_lists = []
-                for st in slot_terms:
-                    ks = [
-                        _occ_keys(*decoded[t], cand) for t in st if t in decoded
-                    ]
-                    ks = [x for x in ks if len(x)]
-                    if not ks:
-                        key_lists.append(np.zeros(0, dtype=np.int64))
-                    elif len(ks) == 1:
-                        key_lists.append(ks[0])
-                    else:
-                        key_lists.append(np.sort(np.concatenate(ks)))
-                if ordered:
-                    v_dense = _ordered_chain_verified(key_lists, max_total_gap)
-                else:
-                    # duplicate query terms → one list with threshold =
-                    # multiplicity (intervals slots are single terms)
-                    mult: dict[str, int] = {}
-                    for st in slot_terms:
-                        mult[st[0]] = mult.get(st[0], 0) + 1
-                    uniq_lists, thrs = [], []
-                    seen: set[str] = set()
-                    for i, st in enumerate(slot_terms):
-                        if st[0] in seen:
-                            continue
-                        seen.add(st[0])
-                        uniq_lists.append(key_lists[i])
-                        thrs.append(mult[st[0]])
-                    v_dense = _unordered_window_verified(uniq_lists, max_total_gap, thrs)
-                if len(v_dense) == 0:
-                    continue
-                verified = cand[v_dense]
-
-                # score verified docs: BM25 sum over every matched query /
-                # expansion term (weights are GLOBAL df stats)
-                docs_t = pq.read_table(
-                    os.path.join(d, "docs.parquet"), columns=["doc_id", "norm"]
-                )
-                nd = docs_t["doc_id"].to_numpy()
-                order = np.argsort(nd, kind="mergesort")
-                nd = nd[order]
-                nq = byte4_to_int(docs_t["norm"].to_numpy())[order]
-                ql = nq[np.searchsorted(nd, verified)].astype(np.float64)
-                scores = np.zeros(len(verified), dtype=np.float64)
-                for t in dict.fromkeys(t for st in slot_terms for t in st):
-                    if t not in decoded or t not in weights:
-                        continue
-                    ids, tfs = decoded[t][0], decoded[t][1]
-                    p = np.searchsorted(ids, verified)
-                    ok = (p < len(ids)) & (ids[np.minimum(p, len(ids) - 1)] == verified)
-                    tf_v = np.where(ok, tfs[np.minimum(p, len(ids) - 1)], 0).astype(np.float64)
-                    scores += weights[t][0] * bm25.tf_norm(tf_v, ql, avgdl, k1, b)
-                idx = np.lexsort((verified, -scores))[:k]
-                outs.append(pd.DataFrame({
-                    "doc_id": verified[idx],
-                    "score": scores[idx],
-                    "n_terms_matched": np.full(len(idx), len(slot_terms), dtype=np.int32),
-                }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return fn
-
-
-def _positional_topk(
-    spark: SparkSession,
-    index_dir: str,
-    meta: store.IndexMeta,
-    terms: list[str],
-    expansions: list[str],
-    k: int,
-    ordered: bool,
-    max_total_gap: int,
-    weights: dict[str, tuple[float, int]],
-) -> DataFrame:
-    """Distributed positional query phase + fetch: one task per segment,
-    ≤k rows per task to the coordinator merge, broadcast fetch join."""
-    segs = store.list_segs(index_dir)
-    empty = spark.createDataFrame([], "doc_id long, url string, score double")
-    if not segs:
-        return empty
-    fn = _segment_positional_scorer(
-        index_dir, weights, meta.avgdl, meta.k1, meta.b, k,
-        terms, expansions, ordered, max_total_gap,
-    )
-    n_tasks = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
-    # explicit-slice parallelize: same task layout as repartition(), minus
-    # one Exchange stage per query
-    seg_rdd = spark.sparkContext.parallelize([(int(s),) for s in segs], n_tasks)
-    cands = spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, CAND_SCHEMA)
-    top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    docs = spark.read.parquet(*store.docs_glob(index_dir)).select("doc_id", "url")
-    return (
-        docs.join(F.broadcast(top), "doc_id")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+    return per_segment
 
 
 # --------------------------------------------------------------------------
@@ -391,30 +243,31 @@ def search_phrase(
     phrase: str,
     k: int = 10,
     slop: int = 0,
-    candidate_factor: int = 20,  # kept for API compat; unused (exact path)
+    routing: str | None = None,
 ) -> DataFrame:
     """match_phrase over the positional index: per-segment conjunction +
     position-chain verify + BM25 top-k (score DESC, doc_id ASC). Exact —
     every verified doc competes, not a candidate sample. Position-less
-    legacy indexes fall back to re-analyzing candidates' stored text."""
-    meta = store.IndexMeta.load(index_dir)
+    legacy indexes fall back to re-analyzing candidates' stored text.
+    ``routing`` scans only the value's shard (``query_segments``)."""
+    reader = IndexReader(spark, index_dir)
+    meta = reader.meta
     terms = analysis.analyze(phrase, meta.analyzer)
-    empty = spark.createDataFrame([], "doc_id long, url string, score double")
     if not terms:
-        return empty
-    weights = _term_weights(spark, index_dir, terms, meta)
+        return spark.createDataFrame([], HITS_SCHEMA)
+    weights = reader.term_weights(terms)
     if any(t not in weights for t in terms):
-        return empty  # conjunction with a zero-df term matches nothing
+        # conjunction with a zero-df term matches nothing
+        return spark.createDataFrame([], HITS_SCHEMA)
     if not index_has_positions(index_dir):
         # position-less segments (e.g. a merge over legacy sources that
         # dropped mixed positions): re-analyze candidates' stored text.
         # Detected DRIVER-side from the parquet footers — the positional
         # plan is lazy, so an executor-side LookupError at collect time
         # could never reach a driver try/except here
-        return _phrase_fallback(spark, index_dir, meta, terms, k, slop)
-    return _positional_topk(
-        spark, index_dir, meta, terms, [], k, True, slop, weights
-    )
+        return _phrase_fallback(spark, index_dir, meta, terms, k, slop, routing)
+    fn = _positional_segment(weights, meta, k, terms, [], True, slop)
+    return search_segments(spark, index_dir, meta, fn, k, routing)
 
 
 def search_phrase_prefix(
@@ -424,6 +277,7 @@ def search_phrase_prefix(
     k: int = 10,
     slop: int = 0,
     max_expansions: int = 50,
+    routing: str | None = None,
 ) -> DataFrame:
     """match_phrase_prefix (``MatchPhrasePrefixQueryBuilder.java``): the
     last analyzed token is a PREFIX expanded against the global term
@@ -431,11 +285,11 @@ def search_phrase_prefix(
     expansion cap), and the phrase chain must end at one of the expansions'
     positions (MultiPhraseQuery position union). Scored as the BM25 sum of
     the fixed terms plus every matched expansion term."""
-    meta = store.IndexMeta.load(index_dir)
+    reader = IndexReader(spark, index_dir)
+    meta = reader.meta
     terms = analysis.analyze(phrase, meta.analyzer)
-    empty = spark.createDataFrame([], "doc_id long, url string, score double")
     if not terms:
-        return empty
+        return spark.createDataFrame([], HITS_SCHEMA)
     if not index_has_positions(index_dir):
         # the reference raises IllegalStateException ("field was indexed
         # without position data") — surface it driver-side, not as an
@@ -454,13 +308,12 @@ def search_phrase_prefix(
     )
     expansions = [r["term"] for r in exp_rows]
     if not expansions:
-        return empty
-    weights = _term_weights(spark, index_dir, list(dict.fromkeys(fixed)) + expansions, meta)
+        return spark.createDataFrame([], HITS_SCHEMA)
+    weights = reader.term_weights(list(dict.fromkeys(fixed)) + expansions)
     if any(t not in weights for t in fixed):
-        return empty
-    return _positional_topk(
-        spark, index_dir, meta, fixed, expansions, k, True, slop, weights
-    )
+        return spark.createDataFrame([], HITS_SCHEMA)
+    fn = _positional_segment(weights, meta, k, fixed, expansions, True, slop)
+    return search_segments(spark, index_dir, meta, fn, k, routing)
 
 
 def search_intervals(
@@ -470,25 +323,24 @@ def search_intervals(
     ordered: bool = True,
     max_gaps: int = -1,
     k: int = 10,
-    candidate_factor: int = 20,  # kept for API compat; unused (exact path)
+    routing: str | None = None,
 ) -> DataFrame:
     """intervals query (``IntervalQueryBuilder.java`` match source):
     an interval containing all terms, in order when ``ordered``, total
     internal gap ≤ max_gaps (-1 = unbounded). Distributed per-segment
     verify, BM25-ranked like phrase."""
-    meta = store.IndexMeta.load(index_dir)
+    reader = IndexReader(spark, index_dir)
+    meta = reader.meta
     terms = analysis.analyze(text, meta.analyzer)
-    empty = spark.createDataFrame([], "doc_id long, url string, score double")
     if not terms:
-        return empty
-    weights = _term_weights(spark, index_dir, terms, meta)
+        return spark.createDataFrame([], HITS_SCHEMA)
+    weights = reader.term_weights(terms)
     if any(t not in weights for t in terms):
-        return empty
+        return spark.createDataFrame([], HITS_SCHEMA)
     if not index_has_positions(index_dir):
         raise ValueError("intervals requires position data; a current segment has none")
-    return _positional_topk(
-        spark, index_dir, meta, terms, [], k, ordered, max_gaps, weights
-    )
+    fn = _positional_segment(weights, meta, k, terms, [], ordered, max_gaps)
+    return search_segments(spark, index_dir, meta, fn, k, routing)
 
 
 # --------------------------------------------------------------------------
@@ -517,11 +369,11 @@ def _phrase_verify_udf(terms: list[str], analyzer: str, slop: int):
     return verify
 
 
-def _phrase_fallback(spark, index_dir, meta, terms, k, slop) -> DataFrame:
+def _phrase_fallback(spark, index_dir, meta, terms, k, slop, routing) -> DataFrame:
     from .topk import search_topk
 
     cands = search_topk(
-        spark, index_dir, terms, k=k * 20, operator="and", fetch=False
+        spark, index_dir, terms, k=k * 20, operator="and", fetch=False, routing=routing
     )
     docs = spark.read.parquet(*store.docs_glob(index_dir)).select("doc_id", "url", "text")
     verified = (
@@ -543,30 +395,9 @@ def _index_positions(index_dir: str, terms: list[str], cand_ids: set[int]) -> di
     """Per term: {doc_id: ascending positions} for candidate docs, decoded
     straight from the postings blocks. Local introspection used by tests —
     the query path decodes positions inside the segment tasks instead."""
-    import pyarrow.parquet as pq
-
-    from .codec import vbyte_decode
-    from .postings import decode_positions
-
     out: dict[str, dict[int, np.ndarray]] = {t: {} for t in terms}
-    lo, hi = min(cand_ids), max(cand_ids)
     for seg in store.list_segs(index_dir):
-        p = os.path.join(store.seg_dir(index_dir, seg), "postings.parquet")
-        tbl = pq.read_table(
-            p,
-            columns=["term", "first_doc_id", "last_doc_id", "ids_bytes", "tf_bytes", "pos_bytes"],
-            filters=[("term", "in", list(set(terms))), ("last_doc_id", ">=", lo), ("first_doc_id", "<=", hi)],
-        )
-        for i in range(tbl.num_rows):
-            ids = np.cumsum(vbyte_decode(tbl["ids_bytes"][i].as_py()).astype(np.int64)) + int(
-                tbl["first_doc_id"][i].as_py()
-            )
-            tfs = vbyte_decode(tbl["tf_bytes"][i].as_py()).astype(np.int64)
-            pb = tbl["pos_bytes"][i].as_py()
-            if not pb:
-                raise LookupError("index has no positions")
-            flat, occ_off = decode_positions(pb, tfs)
-            term = tbl["term"][i].as_py()
+        for term, (ids, _tfs, flat, occ_off) in Segment(index_dir, seg).positions(set(terms)).items():
             for j, d in enumerate(ids):
                 if int(d) in cand_ids:
                     out[term][int(d)] = flat[occ_off[j] : occ_off[j + 1]]

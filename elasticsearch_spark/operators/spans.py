@@ -8,11 +8,12 @@ SpanTermQueryBuilder.java``, ``SpanNearQueryBuilder.java``,
 ``SpanNotQueryBuilder.java``, ``SpanContainingQueryBuilder.java``,
 ``SpanWithinQueryBuilder.java``, ``SpanMultiTermQueryBuilder.java``).
 
-Execution reuses the distributed positional machinery (operators/
-phrase.py): one task per segment, postings-with-positions term-filter
-pushdown to the parquet scan, span algebra evaluated per candidate doc
-INSIDE the segment task (zero shuffle, no driver reads), BM25 scoring of
-verified docs, ≤k rows per task to the coordinator merge.
+Execution reuses the shared per-segment query phase (operators/topk.py)
+and phrase.py's occurrence keys: one task per segment slice,
+postings-with-positions term-filter pushdown to the parquet scan, span
+algebra evaluated per candidate doc INSIDE the segment task (zero
+shuffle, no driver reads), BM25 scoring of verified docs, ≤k rows per
+task to the coordinator merge.
 
 Semantics (documented subset of Lucene spans):
 - a span is an inclusive token-position interval ``(start, end)``;
@@ -40,7 +41,6 @@ df stats — the same DfsPhase determinism as the phrase path.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -48,11 +48,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import analysis
-from ..functions import bm25
 from ..sources import index_store as store
-from .phrase import _POS_BITS, _decode_term, _occ_keys
-from .topk import CAND_SCHEMA, _term_weights
+from .phrase import _POS_BITS, _occ_keys
+from .topk import HITS_SCHEMA, IndexReader, Segment, score_verified, search_segments
 
 _MAX_SPANS_PER_DOC = 256  # per-node emission cap (bounds pathological docs)
 
@@ -269,96 +267,48 @@ def _eval_spans(node: SpanNode, pos: dict[str, list[int]]) -> list[tuple[int, in
     raise ValueError(node.kind)
 
 
-def _segment_span_scorer(index_dir: str, node: SpanNode,
-                         weights: dict[str, tuple[float, int]],
-                         avgdl: float, k1: float, b: float, k: int):
-    """mapInPandas fn over a seg-id frame: decode leaf-term postings with
-    positions, prefilter candidates by the conjunctive skeleton, evaluate
-    the span tree per candidate doc, BM25-score verified docs."""
-    import pyarrow.parquet as pq
-
-    from ..functions.smallfloat import byte4_to_int
-
+def _span_segment(node: SpanNode, weights: dict[str, tuple[float, int]],
+                  meta: store.IndexMeta, k: int):
+    """Per-segment fn: decode leaf-term postings with positions, prefilter
+    candidates by the conjunctive skeleton, evaluate the span tree per
+    candidate doc, BM25-score verified docs."""
     fetch_terms = sorted(leaf_terms(node))
     score_terms = sorted(match_terms(node))
+    avgdl, k1, b = meta.avgdl, meta.k1, meta.b
 
-    def fn(batches):
-        from .ops import seg_tombstones
+    def per_segment(seg: Segment) -> pd.DataFrame | None:
+        decoded = seg.positions(fetch_terms)
+        cand = seg.live(np.unique(_cand_docs(node, decoded)))
+        if len(cand) == 0:
+            return None
 
-        for pdf in batches:
-            outs = []
-            for seg in pdf["seg"]:
-                d = store.seg_dir(index_dir, int(seg))
-                tomb = seg_tombstones(index_dir, d)
-                post = pq.read_table(
-                    os.path.join(d, "postings.parquet"),
-                    columns=["term", "first_doc_id", "ids_bytes", "tf_bytes", "pos_bytes"],
-                    filters=[("term", "in", fetch_terms)],
-                ).to_pandas()
-                if len(post) == 0:
-                    continue
-                decoded = {t: _decode_term(post[post["term"] == t]) for t in set(post["term"])}
-                cand = np.unique(_cand_docs(node, decoded))
-                if len(tomb) and len(cand):
-                    p = np.searchsorted(tomb, cand)
-                    dead = (p < len(tomb)) & (tomb[np.minimum(p, len(tomb) - 1)] == cand)
-                    cand = cand[~dead]
-                if len(cand) == 0:
-                    continue
+        # per-doc position lists: occurrence keys sliced per dense doc
+        per_term_pos: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        for t in decoded:
+            keys = _occ_keys(*decoded[t], cand)
+            per_term_pos[t] = (keys >> _POS_BITS, keys & ((1 << _POS_BITS) - 1))
+        # presence-decidable docs skip the per-doc span evaluator
+        sure = np.intersect1d(
+            _presence_sure_spans(node, decoded), cand, assume_unique=True
+        )
+        sure_mask = np.zeros(len(cand), dtype=bool)
+        sure_mask[np.searchsorted(cand, sure)] = True
+        verified = list(sure)
+        for dense in np.nonzero(~sure_mask)[0]:
+            pos = {}
+            for t, (dd, pp) in per_term_pos.items():
+                lo = np.searchsorted(dd, dense)
+                hi = np.searchsorted(dd, dense, side="right")
+                if hi > lo:
+                    pos[t] = pp[lo:hi].tolist()
+            if pos and _eval_spans(node, pos):
+                verified.append(cand[dense])
+        if not verified:
+            return None
+        verified = np.sort(np.array(verified, dtype=np.int64))
+        return score_verified(seg, decoded, score_terms, weights, verified, avgdl, k1, b, k)
 
-                # per-doc position lists: occurrence keys sliced per dense doc
-                per_term_pos: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-                for t in decoded:
-                    keys = _occ_keys(*decoded[t], cand)
-                    per_term_pos[t] = (keys >> _POS_BITS, keys & ((1 << _POS_BITS) - 1))
-                # presence-decidable docs skip the per-doc span evaluator
-                sure = np.intersect1d(
-                    _presence_sure_spans(node, decoded), cand, assume_unique=True
-                )
-                sure_mask = np.zeros(len(cand), dtype=bool)
-                sure_mask[np.searchsorted(cand, sure)] = True
-                verified = list(sure)
-                for dense in np.nonzero(~sure_mask)[0]:
-                    pos = {}
-                    for t, (dd, pp) in per_term_pos.items():
-                        lo = np.searchsorted(dd, dense)
-                        hi = np.searchsorted(dd, dense, side="right")
-                        if hi > lo:
-                            pos[t] = pp[lo:hi].tolist()
-                    if pos and _eval_spans(node, pos):
-                        verified.append(cand[dense])
-                verified.sort()
-                if not verified:
-                    continue
-                verified = np.array(verified, dtype=np.int64)
-
-                docs_t = pq.read_table(
-                    os.path.join(d, "docs.parquet"), columns=["doc_id", "norm"]
-                )
-                nd = docs_t["doc_id"].to_numpy()
-                order = np.argsort(nd, kind="mergesort")
-                nd = nd[order]
-                nq = byte4_to_int(docs_t["norm"].to_numpy())[order]
-                ql = nq[np.searchsorted(nd, verified)].astype(np.float64)
-                scores = np.zeros(len(verified), dtype=np.float64)
-                for t in score_terms:
-                    if t not in decoded or t not in weights:
-                        continue
-                    ids, tfs = decoded[t][0], decoded[t][1]
-                    p = np.searchsorted(ids, verified)
-                    ok = (p < len(ids)) & (ids[np.minimum(p, len(ids) - 1)] == verified)
-                    tf_v = np.where(ok, tfs[np.minimum(p, len(ids) - 1)], 0).astype(np.float64)
-                    scores += weights[t][0] * bm25.tf_norm(tf_v, ql, avgdl, k1, b)
-                idx = np.lexsort((verified, -scores))[:k]
-                outs.append(pd.DataFrame({
-                    "doc_id": verified[idx],
-                    "score": scores[idx],
-                    "n_terms_matched": np.full(len(idx), len(score_terms), dtype=np.int32),
-                }))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return fn
+    return per_segment
 
 
 def dict_expander(spark: SparkSession, index_dir: str, max_expansions: int = 50):
@@ -394,26 +344,14 @@ def dict_expander(spark: SparkSession, index_dir: str, max_expansions: int = 50)
     return expand_field
 
 
-def search_spans(spark: SparkSession, index_dir: str, span_body: dict, k: int = 10) -> DataFrame:
+def search_spans(spark: SparkSession, index_dir: str, span_body: dict, k: int = 10,
+                 routing: str | None = None) -> DataFrame:
     """Distributed span query → (doc_id, url, score) top-k."""
-    meta = store.IndexMeta.load(index_dir)
+    reader = IndexReader(spark, index_dir)
     node = parse_span(span_body, dict_expander(spark, index_dir))
     terms = sorted(leaf_terms(node))
-    empty = spark.createDataFrame([], "doc_id long, url string, score double")
     if not terms:
-        return empty
-    weights = _term_weights(spark, index_dir, terms, meta)
-    segs = store.list_segs(index_dir)
-    if not segs:
-        return empty
-    fn = _segment_span_scorer(index_dir, node, weights, meta.avgdl, meta.k1, meta.b, k)
-    n_tasks = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
-    seg_rdd = spark.sparkContext.parallelize([(int(s),) for s in segs], n_tasks)
-    cands = spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, CAND_SCHEMA)
-    top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    docs = spark.read.parquet(*store.docs_glob(index_dir)).select("doc_id", "url")
-    return (
-        docs.join(F.broadcast(top), "doc_id")
-        .select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+        return spark.createDataFrame([], HITS_SCHEMA)
+    weights = reader.term_weights(terms)
+    fn = _span_segment(node, weights, reader.meta, k)
+    return search_segments(spark, index_dir, reader.meta, fn, k, routing)

@@ -1,6 +1,8 @@
-"""Top-k BM25 retrieval over the segment store.
+"""Top-k BM25 retrieval over the segment store, and the per-segment query
+phase every index query runs through.
 
-Two physical strategies, both returning identical results (tested):
+Two physical strategies for term queries, both returning identical
+results (tested):
 
 - ``naive``: decode every postings block of the query terms, score, and
   aggregate — the correctness reference.
@@ -16,24 +18,36 @@ Two physical strategies, both returning identical results (tested):
   k-th score. Everything inside a region is fully scored, so the stop is
   exact — rank-identical to naive.
 
-Distribution model (SURVEY §3.1): per-segment scoring runs as one Spark
-task via cogroup-applyInPandas (postings ⋈ norms on segment id) — the
-"per-shard query phase"; each task emits ≤k candidates; the global
-``orderBy(score desc, doc_id asc).limit(k)`` is the coordinator's k-way
-merge (``SearchPhaseController.java:186-205``) with the reference's
-deterministic tie-break. df/avgdl are read from the build-time stats
-tables and shipped as broadcast locals — the dfs-phase determinism
-mechanism (``DfsPhase.java:31-81``): scores never depend on partitioning.
+Distribution model (SURVEY §3.1) — the reference's one collector per
+shard (``QueryPhase.java:98``), shared by match, msearch, phrase,
+intervals, spans and the index-sorted scan:
+
+- ``query_segments`` lists the segments a query scans (a PIT's pinned set
+  or the current ones, pruned to a routing value's shard);
+- ``launch`` runs a per-segment function as ``mapInPandas`` over an
+  explicit-slice seg-id frame: one Spark task per slice, zero shuffle;
+- inside a task, ``Segment`` is the only reader of the segment files: the
+  term-filtered postings slice, the live-doc mask and the SmallFloat doc
+  lengths (read only when a doc must be scored);
+- each task emits ≤k candidates, and ``merge_fetch`` is the coordinator's
+  k-way merge ``orderBy(score desc, doc_id asc).limit(k)``
+  (``SearchPhaseController.java:186-205``, the reference's deterministic
+  tie-break) plus the broadcast fetch join (``FetchSearchPhase.java``).
+
+df/avgdl are read from the build-time stats tables and shipped as
+broadcast locals — the dfs-phase determinism mechanism
+(``DfsPhase.java:31-81``): scores never depend on partitioning.
 """
 
 from __future__ import annotations
 
+import functools
 import heapq
 import os
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import bm25
@@ -41,21 +55,151 @@ from ..sources import index_store as store
 from .codec import decode_block
 
 CAND_SCHEMA = "doc_id long, score double, n_terms_matched int"
+MCAND_SCHEMA = "qid string, doc_id long, score double, n_terms_matched int"
+
+_BLOCK_COLS = ["term", "first_doc_id", "last_doc_id", "n", "max_tf", "min_ql", "ids_bytes", "tf_bytes"]
+_POSITION_COLS = ["term", "first_doc_id", "ids_bytes", "tf_bytes", "pos_bytes"]
+
+# footer probe results; segments are immutable so a path's answer never changes
+_POS_PROBE_CACHE: dict[str, bool | None] = {}
 
 
-def _term_weights(spark: SparkSession, index_dir: str, terms: list[str], meta: store.IndexMeta) -> dict[str, tuple[float, int]]:
-    """term -> (idf·(k1+1) weight, df). Tiny lookup (|terms| rows) against the
-    build-time stats table; unseen terms get df=0 and drop out."""
-    rows = (
-        spark.read.parquet(store.term_stats_path(index_dir))
-        .where(F.col("term").isin(terms))
-        .collect()
-    )
-    out = {}
-    for r in rows:
-        w = float(bm25.idf(np.float64(r["df"]), meta.doc_count) * (meta.k1 + 1.0))
-        out[r["term"]] = (w, int(r["df"]))
-    return out
+def _member(a: np.ndarray, sorted_b: np.ndarray) -> np.ndarray:
+    """Mask of the elements of ``a`` that occur in the sorted ``sorted_b``."""
+    if len(sorted_b) == 0:
+        return np.zeros(len(a), dtype=bool)
+    pos = np.searchsorted(sorted_b, a)
+    return (pos < len(sorted_b)) & (sorted_b[np.minimum(pos, len(sorted_b) - 1)] == a)
+
+
+def _decode_term(post: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """All blocks of ONE term in one segment → (doc_ids, tfs, flat_pos,
+    occ_off). Blocks concatenate cleanly: the VByte positions stream stores
+    each posting's first occurrence absolute, so per-posting offsets are
+    all that's needed to slice it."""
+    from .postings import decode_positions
+
+    ids_l, tfs_l = [], []
+    for fd, ib, tb in zip(post["first_doc_id"], post["ids_bytes"], post["tf_bytes"]):
+        ids, tfs = decode_block(ib, tb, int(fd))
+        ids_l.append(ids)
+        tfs_l.append(tfs)
+    ids = np.concatenate(ids_l)
+    tfs = np.concatenate(tfs_l)
+    stream = b"".join(x for x in post["pos_bytes"] if x)
+    if not stream:
+        raise LookupError("index has no positions")
+    flat_pos, occ_off = decode_positions(stream, tfs)
+    return ids, tfs, flat_pos, occ_off
+
+
+class Segment:
+    """One segment of the store, read inside a segment task — the only code
+    that knows the segment file layout. Every read is lazy and runs at most
+    once per handle."""
+
+    def __init__(self, index_dir: str, seg: int):
+        self.index_dir = index_dir
+        self.dir = store.seg_dir(index_dir, int(seg))
+        self.postings_path = os.path.join(self.dir, "postings.parquet")
+        self.docs_path = os.path.join(self.dir, "docs.parquet")
+
+    def postings(self, terms, positions: bool = False) -> pd.DataFrame:
+        """Postings blocks of ``terms`` (parquet predicate + column pushdown
+        on the term-sorted file: tail terms cost ~nothing per non-matching
+        segment); ``positions`` selects the positional columns instead of
+        the block-max ones."""
+        import pyarrow.parquet as pq
+
+        return pq.read_table(
+            self.postings_path,
+            columns=_POSITION_COLS if positions else _BLOCK_COLS,
+            filters=[("term", "in", list(terms))],
+        ).to_pandas()
+
+    def positions(self, terms, slots=()) -> dict[str, tuple]:
+        """term -> ``_decode_term`` tuple for each of ``terms`` present;
+        empty, with nothing decoded, when one of ``slots`` (lists of
+        alternative terms) has none of its terms present."""
+        post = self.postings(terms, positions=True)
+        present = dict.fromkeys(post["term"])
+        if any(not any(t in present for t in st) for st in slots):
+            return {}
+        return {t: _decode_term(post[post["term"] == t]) for t in present}
+
+    def has_positions(self) -> bool | None:
+        """Footer-only probe: does the postings file carry position data?
+        Decided from the parquet column statistics (an all-empty
+        ``pos_bytes`` chunk has ``max == b""``); None when statistics are
+        absent (unknown). No data pages are read."""
+        path = self.postings_path
+        if path in _POS_PROBE_CACHE:
+            return _POS_PROBE_CACHE[path]
+        import pyarrow.parquet as pq
+
+        md = pq.ParquetFile(path).metadata
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        out: bool | None
+        if "pos_bytes" not in names:
+            out = False
+        else:
+            i = names.index("pos_bytes")
+            out = None
+            saw = False
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(i).statistics
+                if st is None or not st.has_min_max:
+                    continue
+                saw = True
+                if st.max not in (b"", None):
+                    out = True
+                    break
+            if out is None and saw:
+                out = False
+        _POS_PROBE_CACHE[path] = out
+        return out
+
+    @functools.cached_property
+    def tombstones(self) -> np.ndarray:
+        """Sorted deleted doc ids in this segment's doc-id range: the
+        segment range-reads ONLY its own tombstone slice, so a giant
+        delete_by_query never becomes a per-task memory tax."""
+        from .ops import seg_tombstones
+
+        return seg_tombstones(self.index_dir, self.dir)
+
+    def live(self, ids: np.ndarray) -> np.ndarray:
+        """``ids`` minus deleted and superseded docs (the liveDocs mask)."""
+        if len(ids) == 0 or len(self.tombstones) == 0:
+            return ids
+        return ids[~_member(ids, self.tombstones)]
+
+    @functools.cached_property
+    def norms(self) -> tuple[np.ndarray, np.ndarray]:
+        """(sorted doc ids, SmallFloat-decoded doc lengths)."""
+        import pyarrow.parquet as pq
+
+        from ..functions.smallfloat import byte4_to_int
+
+        docs = pq.read_table(self.docs_path, columns=["doc_id", "norm"])
+        ids = docs["doc_id"].to_numpy()
+        order = np.argsort(ids, kind="mergesort")
+        return ids[order], byte4_to_int(docs["norm"].to_numpy())[order]
+
+    @functools.cached_property
+    def allowed(self) -> np.ndarray | None:
+        """Sorted live doc ids, or None when no doc of the segment is dead."""
+        ids = self.norms[0]
+        live = self.live(ids)
+        return None if len(live) == len(ids) else live
+
+    def docs_batches(self, columns: list[str], batch_size: int):
+        """Stream the stored docs in file (index-sort) order."""
+        import pyarrow.parquet as pq
+
+        yield from pq.ParquetFile(self.docs_path).iter_batches(
+            batch_size=batch_size, columns=columns
+        )
 
 
 def _score_segment_arrays(
@@ -87,12 +231,8 @@ def _score_segment_arrays(
     docs = np.concatenate(all_docs)
     scores = np.concatenate(all_scores)
     if allowed is not None:
-        if len(allowed) == 0:
-            docs, scores = docs[:0], scores[:0]
-        else:
-            pos = np.searchsorted(allowed, docs)
-            ok = (pos < len(allowed)) & (allowed[np.minimum(pos, len(allowed) - 1)] == docs)
-            docs, scores = docs[ok], scores[ok]
+        ok = _member(docs, allowed)
+        docs, scores = docs[ok], scores[ok]
     if len(docs) == 0:
         return docs, scores, np.zeros(0, dtype=np.int64)
     uniq, inv, counts = np.unique(docs, return_inverse=True, return_counts=True)
@@ -113,40 +253,6 @@ def _topk_from_arrays(docs, scores, counts, k, msm) -> pd.DataFrame:
     return pd.DataFrame(
         {"doc_id": docs[idx], "score": scores[idx], "n_terms_matched": counts[idx].astype(np.int32)}
     )
-
-
-def segment_scorer(
-    weights: dict[str, tuple[float, int]],
-    avgdl: float,
-    k1: float,
-    b: float,
-    k: int,
-    msm: int,
-    mode: str,
-):
-    """cogroup-applyInPandas fn: (postings of one segment, norms of one
-    segment) → ≤k candidate rows."""
-
-    def fn(post: pd.DataFrame, norms: pd.DataFrame) -> pd.DataFrame:
-        if len(post) == 0 or len(norms) == 0:
-            return pd.DataFrame({"doc_id": [], "score": [], "n_terms_matched": []}).astype(
-                {"doc_id": "int64", "score": "float64", "n_terms_matched": "int32"}
-            )
-        nsort = np.argsort(norms["doc_id"].to_numpy(), kind="mergesort")
-        norm_doc_ids = norms["doc_id"].to_numpy()[nsort]
-        norm_ql = norms["ql"].to_numpy()[nsort]
-        allowed = None
-        if "allowed" in norms.columns:
-            al = norms["allowed"].to_numpy()[nsort]
-            allowed = norm_doc_ids[al.astype(bool)]
-        if mode == "wand" and msm <= 1:
-            return _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed)
-        docs, scores, counts = _score_segment_arrays(
-            post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, allowed
-        )
-        return _topk_from_arrays(docs, scores, counts, k, msm)
-
-    return fn
 
 
 def _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed) -> pd.DataFrame:
@@ -215,12 +321,8 @@ def _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed
         docs = np.concatenate(docs_acc)
         scores = np.concatenate(score_acc)
         if allowed is not None and len(docs):
-            if len(allowed) == 0:
-                docs, scores = docs[:0], scores[:0]
-            else:
-                pos = np.searchsorted(allowed, docs)
-                ok = (pos < len(allowed)) & (allowed[np.minimum(pos, len(allowed) - 1)] == docs)
-                docs, scores = docs[ok], scores[ok]
+            ok = _member(docs, allowed)
+            docs, scores = docs[ok], scores[ok]
         if len(docs) == 0:
             continue
         uniq, inv, counts = np.unique(docs, return_inverse=True, return_counts=True)
@@ -246,34 +348,101 @@ def _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed
     )
 
 
+def score_verified(
+    seg: Segment,
+    decoded: dict[str, tuple],
+    terms,
+    weights: dict[str, tuple[float, int]],
+    verified: np.ndarray,
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int,
+) -> pd.DataFrame:
+    """The BM25 scorer for positionally verified docs (sorted ids of one
+    segment): the sum over ``terms`` present in ``decoded`` (global df
+    weights), ≤k rows by score desc, doc_id asc."""
+    norm_doc_ids, norm_ql = seg.norms
+    ql = norm_ql[np.searchsorted(norm_doc_ids, verified)].astype(np.float64)
+    scores = np.zeros(len(verified), dtype=np.float64)
+    matched = np.zeros(len(verified), dtype=np.int32)
+    for t in terms:
+        if t not in decoded or t not in weights:
+            continue
+        ids, tfs = decoded[t][0], decoded[t][1]
+        p = np.minimum(np.searchsorted(ids, verified), len(ids) - 1)
+        ok = ids[p] == verified
+        tf_v = np.where(ok, tfs[p], 0).astype(np.float64)
+        scores += weights[t][0] * bm25.tf_norm(tf_v, ql, avgdl, k1, b)
+        matched += ok
+    return _topk_from_arrays(verified, scores, matched, k, 1)
+
+
+def _bm25_segment(
+    per_q: dict[str | None, tuple[list, int, str]],
+    weights: dict[str, tuple[float, int]],
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int,
+):
+    """Per-segment fn for a batch of term queries: the segment's postings
+    are read ONCE for the union of every query's terms (one parquet probe,
+    one norms read, one tombstone mask), then the WAND / scored loop runs
+    per query on the in-memory slice. per_q: qid -> (live_terms, msm,
+    mode); qid None = a single query, emitted without a qid column."""
+    live = sorted({t for terms, _, _ in per_q.values() for t in terms})
+
+    def per_segment(seg: Segment) -> pd.DataFrame | None:
+        post = seg.postings(live)
+        if len(post) == 0:
+            return None
+        norm_doc_ids, norm_ql = seg.norms
+        outs = []
+        for qid, (terms, msm, mode) in per_q.items():
+            post_q = post[post["term"].isin(terms)]
+            if len(post_q) == 0:
+                continue
+            if mode == "wand" and msm <= 1:
+                r = _wand_segment(
+                    post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, seg.allowed
+                )
+            else:
+                r = _topk_from_arrays(
+                    *_score_segment_arrays(
+                        post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, seg.allowed
+                    ),
+                    k, msm,
+                )
+            if qid is not None:
+                r.insert(0, "qid", qid)
+            outs.append(r)
+        return pd.concat(outs, ignore_index=True) if outs else None
+
+    return per_segment
+
+
 class IndexReader:
-    """Open index handle: caches the postings/docs frames and term-stats in
-    memory across queries — the Spark analog of ES keeping segment readers
-    open (and the OS page cache warm) between searches. At serving scale the
-    cache level is ``MEMORY_AND_DISK`` per executor; the frames stay
-    partitioned by segment so the per-query cogroup shuffles only cached
-    compact blocks, never the raw corpus."""
+    """Open index handle: the index meta plus a per-term stats cache — the
+    DfsPhase's per-query stats round-trip. At web scale the term
+    dictionary is 10^8-10^9 rows, so the reader never collects the whole
+    table; each lookup pulls only the terms not seen yet (term IN (...)
+    pushes to the term-sorted parquet row groups), and hot terms amortize
+    to zero across queries of a long-lived reader."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
         self.meta = store.IndexMeta.load(index_dir)
-        self.postings = spark.read.parquet(*store.postings_glob(index_dir)).select(
-            "term", "seg_id", "first_doc_id", "last_doc_id", "n",
-            "max_tf", "min_ql", "ids_bytes", "tf_bytes",
-        ).persist()
-        self.docs = spark.read.parquet(*store.docs_glob(index_dir)).persist()
-        # term stats: LAZY per-term lookup with a cache — at web scale the
-        # term dictionary is 10^8-10^9 rows, so the reader never collects
-        # the whole table; each query pulls only its own terms (term IN
-        # (...) pushes to the term-sorted parquet row groups), exactly the
-        # DfsPhase's per-query stats round-trip, and hot terms amortize to
-        # zero via the cache
-        self._stats_df = spark.read.parquet(store.term_stats_path(index_dir))
         self._stats: dict[str, tuple[int, int] | None] = {}
 
+    @functools.cached_property
+    def _stats_df(self) -> DataFrame:
+        return self.spark.read.parquet(store.term_stats_path(self.index_dir))
+
     def term_weights(self, terms: list[str]) -> dict[str, tuple[float, int]]:
-        missing = [t for t in terms if t not in self._stats]
+        """term -> (idf·(k1+1) weight, df); zero-df terms drop out."""
+        missing = [t for t in dict.fromkeys(terms) if t not in self._stats]
         if missing:
             rows = self._stats_df.where(F.col("term").isin(missing)).collect()
             found = {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
@@ -289,78 +458,7 @@ class IndexReader:
         return out
 
     def close(self) -> None:
-        self.postings.unpersist()
-        self.docs.unpersist()
-
-
-def _segment_task_scorer(
-    index_dir: str,
-    weights: dict[str, tuple[float, int]],
-    avgdl: float,
-    k1: float,
-    b: float,
-    k: int,
-    msm: int,
-    mode: str,
-):
-    """mapInPandas fn over a seg-id frame: each task reads ITS segment's
-    postings (parquet predicate+column pushdown on the term-sorted file)
-    and norms directly from the store — the per-shard query phase with
-    ZERO shuffle (the reference's one-collector-per-shard model,
-    ``QueryPhase.java:98``). Tail terms cost ~nothing per non-matching
-    segment: the term filter prunes on row-group stats."""
-    import pyarrow.parquet as pq
-
-    from ..functions.smallfloat import byte4_to_int
-
-    live = list(weights)
-
-    def fn(batches):
-        # liveDocs mask: tombstoned ids (delete / superseded-version) are
-        # excluded from scoring — each segment range-reads ONLY its own
-        # tombstone slice (footer-stats range + row-group pruning), so a
-        # giant delete_by_query never becomes a per-task memory tax
-        from .ops import seg_tombstones
-
-        for pdf in batches:
-            outs = []
-            for seg in pdf["seg"]:
-                d = store.seg_dir(index_dir, int(seg))
-                tomb = seg_tombstones(index_dir, d)
-                post = pq.read_table(
-                    os.path.join(d, "postings.parquet"),
-                    columns=["term", "first_doc_id", "last_doc_id", "n",
-                             "max_tf", "min_ql", "ids_bytes", "tf_bytes"],
-                    filters=[("term", "in", live)],
-                ).to_pandas()
-                if len(post) == 0:
-                    continue
-                docs = pq.read_table(
-                    os.path.join(d, "docs.parquet"), columns=["doc_id", "norm"]
-                )
-                norm_doc_ids = docs["doc_id"].to_numpy()
-                order = np.argsort(norm_doc_ids, kind="mergesort")
-                norm_doc_ids = norm_doc_ids[order]
-                norm_ql = byte4_to_int(docs["norm"].to_numpy())[order]
-                allowed = None
-                if len(tomb):
-                    pos = np.searchsorted(tomb, norm_doc_ids)
-                    dead = (pos < len(tomb)) & (tomb[np.minimum(pos, len(tomb) - 1)] == norm_doc_ids)
-                    if dead.any():
-                        allowed = norm_doc_ids[~dead]
-                if mode == "wand" and msm <= 1:
-                    outs.append(
-                        _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed)
-                    )
-                else:
-                    docs_a, scores_a, counts_a = _score_segment_arrays(
-                        post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, allowed
-                    )
-                    outs.append(_topk_from_arrays(docs_a, scores_a, counts_a, k, msm))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return fn
+        self._stats.clear()
 
 
 def routing_shard(spark: SparkSession, value: str, num_shards: int) -> int:
@@ -398,6 +496,97 @@ def routed_segs(
     ]
 
 
+def query_segments(
+    spark: SparkSession,
+    index_dir: str,
+    meta: store.IndexMeta,
+    pit_segs: list[int] | None = None,
+    routing: str | None = None,
+) -> list[int]:
+    """Segments a query scans. ``pit_segs`` is a point-in-time reader's
+    pinned set (segments are immutable, so pinning the set at open time
+    gives repeatable reads across concurrent bulks); ``routing``
+    (``?routing=``, IndexRouting.java) keeps only the value's shard plus
+    unknown-shard segments — query cost drops from O(segments) to
+    O(segments/P), the shard-pruning the reference gets by sending the
+    search to one shard."""
+    segs = pit_segs if pit_segs is not None else store.list_segs(index_dir)
+    return segs if routing is None else routed_segs(spark, index_dir, segs, routing, meta)
+
+
+def launch(
+    spark: SparkSession,
+    index_dir: str,
+    segs: list[int],
+    per_segment,
+    schema=CAND_SCHEMA,
+) -> DataFrame:
+    """Run ``per_segment(Segment) -> pandas frame | None`` over ``segs`` and
+    concatenate the results. The seg-id frame is an explicit-slice
+    ``parallelize`` (not createDataFrame().repartition()): the same task
+    layout without an Exchange stage per query."""
+
+    def fn(batches):
+        for pdf in batches:
+            outs = [per_segment(Segment(index_dir, s)) for s in pdf["seg"]]
+            outs = [r for r in outs if r is not None and len(r)]
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
+
+    n_tasks = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
+    seg_rdd = spark.sparkContext.parallelize([(int(s),) for s in segs], n_tasks)
+    return spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, schema)
+
+
+def fetch_hits(
+    spark: SparkSession,
+    index_dir: str,
+    top: DataFrame,
+    fields=("url", "lang", "warc_ts"),
+    order=(),
+) -> DataFrame:
+    """Fetch phase: ship the tiny global top-k back to the wide store and
+    broadcast-join (the second round-trip of query_then_fetch,
+    FetchSearchPhase.java / FetchPhase.java:62)."""
+    docs = spark.read.parquet(*store.docs_glob(index_dir)).select("doc_id", *fields)
+    return docs.join(F.broadcast(top), "doc_id").orderBy(
+        *order, F.desc("score"), F.asc("doc_id")
+    )
+
+
+def merge_fetch(
+    spark: SparkSession,
+    index_dir: str,
+    cands: DataFrame,
+    k: int,
+    fetch: bool = True,
+    fields=("url", "lang", "warc_ts"),
+) -> DataFrame:
+    """Coordinator k-way merge of the per-segment candidates, then fetch."""
+    top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return fetch_hits(spark, index_dir, top, fields) if fetch else top
+
+
+HITS_SCHEMA = "doc_id long, url string, score double"
+
+
+def search_segments(
+    spark: SparkSession,
+    index_dir: str,
+    meta: store.IndexMeta,
+    per_segment,
+    k: int,
+    routing: str | None = None,
+) -> DataFrame:
+    """Positional query phase + fetch: ``per_segment`` over the routed
+    segments, merged to the global top-k, fetched as ``HITS_SCHEMA`` rows."""
+    segs = query_segments(spark, index_dir, meta, routing=routing)
+    if not segs:
+        return spark.createDataFrame([], HITS_SCHEMA)
+    cands = launch(spark, index_dir, segs, per_segment)
+    return merge_fetch(spark, index_dir, cands, k, fields=("url",)).drop("n_terms_matched")
+
+
 def search_topk(
     spark: SparkSession,
     index_dir: str,
@@ -406,201 +595,30 @@ def search_topk(
     operator: str = "or",
     minimum_should_match: int | None = None,
     mode: str = "wand",
-    doc_filter=None,
     fetch: bool = True,
     reader: IndexReader | None = None,
     pit_segs: list[int] | None = None,
     routing: str | None = None,
 ) -> DataFrame:
-    """Multi-term BM25 top-k over the index (query-then-fetch lifecycle).
+    """Multi-term BM25 top-k over the index (query-then-fetch lifecycle):
+    the one-query case of the batched per-segment scorer.
 
-    doc_filter: optional fn(docs_df) -> Column — the bool.filter context,
-    evaluated on the docs table (unscored, like the reference's filter
-    clauses), restricting which docs may match.
-
-    pit_segs: optional pinned segment list (a point-in-time reader —
-    segments are immutable, so pinning the set at open time gives
-    repeatable reads across concurrent bulks, the reference's PIT
-    contract).
-
-    routing: optional routing value (``?routing=`` — IndexRouting.java):
-    only segments of the value's shard (plus unknown-shard segments) are
-    scanned — query cost drops from O(segments) to O(segments/P), the
-    shard-pruning the reference gets by sending the search to one shard.
-    Shard-aware tiered merge keeps merged segments prunable."""
-    meta = reader.meta if reader else store.IndexMeta.load(index_dir)
+    pit_segs / routing: the segment pinning and shard pruning of
+    ``query_segments``. Shard-aware tiered merge keeps merged segments
+    prunable."""
+    reader = reader or IndexReader(spark, index_dir)
+    meta = reader.meta
     terms = list(dict.fromkeys(query_terms))
-    weights = (
-        reader.term_weights(terms) if reader else _term_weights(spark, index_dir, terms, meta)
-    )
+    weights = reader.term_weights(terms)
     live = [t for t in terms if t in weights]
     msm = len(live) if operator == "and" else int(minimum_should_match or 1)
-    empty = spark.createDataFrame([], CAND_SCHEMA)
     if not live or (operator == "and" and len(live) < len(terms)):
-        cands = empty
-    elif doc_filter is None:
-        # file-direct per-segment query phase (default): one task per
-        # segment, zero shuffle — each task reads its own postings (term
-        # filter pushed to parquet row groups) and norms from the store
-        segs = pit_segs if pit_segs is not None else store.list_segs(index_dir)
-        if routing is not None:
-            segs = routed_segs(spark, index_dir, segs, routing, meta)
-        fn = _segment_task_scorer(index_dir, weights, meta.avgdl, meta.k1, meta.b, k, msm, mode)
-        n_tasks = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
-        # parallelize with an explicit slice count instead of
-        # createDataFrame().repartition(): same task layout, one fewer
-        # Exchange stage per query (~100-200 ms of scheduler latency saved
-        # on every search)
-        seg_rdd = spark.sparkContext.parallelize([(int(s),) for s in segs], n_tasks)
-        cands = spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, CAND_SCHEMA)
+        cands = spark.createDataFrame([], CAND_SCHEMA)
     else:
-        # same segment pinning/pruning as the fast path: a PIT or routing
-        # value must narrow the filtered search too, or a filtered PIT
-        # search would read segments published after the PIT was opened
-        segs = pit_segs if pit_segs is not None else store.list_segs(index_dir)
-        if routing is not None:
-            segs = routed_segs(spark, index_dir, segs, routing, meta)
-        if not segs:
-            cands = empty
-            top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-            if not fetch:
-                return top
-            docs = (reader.docs if reader else spark.read.parquet(*store.docs_glob(index_dir))).select(
-                "doc_id", "url", "lang", "warc_ts"
-            )
-            return docs.join(F.broadcast(top), "doc_id")
-        pinned = pit_segs is not None or routing is not None
-        if reader is not None:
-            base_postings = reader.postings
-            docs = reader.docs
-            if pinned:
-                seg_ids = [int(s) for s in segs]
-                base_postings = base_postings.where(F.col("seg_id").isin(seg_ids))
-                docs = docs.where(F.col("seg_id").isin(seg_ids))
-        else:
-            base_postings = spark.read.parquet(*[
-                os.path.join(store.seg_dir(index_dir, s), "postings.parquet") for s in segs
-            ]).select(
-                "term", "seg_id", "first_doc_id", "last_doc_id", "n",
-                "max_tf", "min_ql", "ids_bytes", "tf_bytes",
-            )
-            docs = spark.read.parquet(*[
-                os.path.join(store.seg_dir(index_dir, s), "docs.parquet") for s in segs
-            ])
-        postings = base_postings.where(F.col("term").isin(live))
-        from .ops import mask_tombstones
-
-        docs = mask_tombstones(spark, index_dir, docs)
-        seg_map = {int(c): cur for c, cur in ((int(x), meta.current_seg(int(x))) for x in meta.seg_map)} if meta.seg_map else {}
-        cur_seg = F.col("seg_id")
-        if seg_map:
-            mapping = F.create_map(*[F.lit(x) for kv in seg_map.items() for x in kv])
-            cur_seg = F.coalesce(mapping[F.col("seg_id")], F.col("seg_id"))
-        norm_cols = [
-            cur_seg.alias("cseg"),
-            F.col("doc_id"),
-            F.expr(f"({bm25.sql_quantized_dl_expr('dl')})").cast("long").alias("ql"),
-        ]
-        if doc_filter is not None:
-            # bool.filter context: evaluated on the docs table, unscored
-            norm_cols.append(doc_filter(docs).cast("boolean").alias("allowed"))
-        norms = docs.select(*norm_cols)
-        postings = postings.withColumn("cseg", cur_seg if not seg_map else F.coalesce(mapping[F.col("seg_id")], F.col("seg_id")))
-        # can_match analog (CanMatchPreFilterSearchPhase.java:66): only ship
-        # norms of segments that actually contain a query term — for tail
-        # queries this prunes most of the docs-table scan
-        live_segs = [r["cseg"] for r in postings.select("cseg").distinct().collect()]
-        norms = norms.where(F.col("cseg").isin(live_segs))
-        fn = segment_scorer(weights, meta.avgdl, meta.k1, meta.b, k, msm, mode)
-        cands = (
-            postings.groupBy("cseg")
-            .cogroup(norms.groupBy("cseg"))
-            .applyInPandas(lambda pl, nr: fn(pl, nr), CAND_SCHEMA)
-        )
-    top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    if not fetch:
-        return top
-    # fetch phase: ship the tiny global top-k back to the wide store and
-    # broadcast-join (the second round-trip of query_then_fetch,
-    # FetchSearchPhase.java / FetchPhase.java:62)
-    docs = (reader.docs if reader else spark.read.parquet(*store.docs_glob(index_dir))).select(
-        "doc_id", "url", "lang", "warc_ts"
-    )
-    return docs.join(F.broadcast(top), "doc_id").orderBy(F.desc("score"), F.asc("doc_id"))
-
-
-MCAND_SCHEMA = "qid string, doc_id long, score double, n_terms_matched int"
-
-
-def _segment_task_mscorer(
-    index_dir: str,
-    per_q: dict[str, tuple[list, int, str]],
-    weights: dict[str, tuple[float, int]],
-    avgdl: float,
-    k1: float,
-    b: float,
-    k: int,
-):
-    """Batched variant of _segment_task_scorer: each segment task reads the
-    UNION of every query's terms from its postings file ONCE (one parquet
-    probe, one norms read, one tombstone mask), then runs the WAND / scored
-    loop per query on the in-memory slice. per_q: qid -> (live_terms, msm,
-    mode)."""
-    import pyarrow.parquet as pq
-
-    from ..functions.smallfloat import byte4_to_int
-
-    live = sorted({t for terms, _, _ in per_q.values() for t in terms})
-
-    def fn(batches):
-        from .ops import seg_tombstones
-
-        for pdf in batches:
-            outs = []
-            for seg in pdf["seg"]:
-                d = store.seg_dir(index_dir, int(seg))
-                tomb = seg_tombstones(index_dir, d)
-                post = pq.read_table(
-                    os.path.join(d, "postings.parquet"),
-                    columns=["term", "first_doc_id", "last_doc_id", "n",
-                             "max_tf", "min_ql", "ids_bytes", "tf_bytes"],
-                    filters=[("term", "in", live)],
-                ).to_pandas()
-                if len(post) == 0:
-                    continue
-                docs = pq.read_table(
-                    os.path.join(d, "docs.parquet"), columns=["doc_id", "norm"]
-                )
-                norm_doc_ids = docs["doc_id"].to_numpy()
-                order = np.argsort(norm_doc_ids, kind="mergesort")
-                norm_doc_ids = norm_doc_ids[order]
-                norm_ql = byte4_to_int(docs["norm"].to_numpy())[order]
-                allowed = None
-                if len(tomb):
-                    pos = np.searchsorted(tomb, norm_doc_ids)
-                    dead = (pos < len(tomb)) & (tomb[np.minimum(pos, len(tomb) - 1)] == norm_doc_ids)
-                    if dead.any():
-                        allowed = norm_doc_ids[~dead]
-                for qid, (terms, msm, mode) in per_q.items():
-                    post_q = post[post["term"].isin(terms)]
-                    if len(post_q) == 0:
-                        continue
-                    if mode == "wand" and msm <= 1:
-                        r = _wand_segment(
-                            post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed
-                        )
-                    else:
-                        docs_a, scores_a, counts_a = _score_segment_arrays(
-                            post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, allowed
-                        )
-                        r = _topk_from_arrays(docs_a, scores_a, counts_a, k, msm)
-                    if len(r):
-                        r.insert(0, "qid", qid)
-                        outs.append(r)
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return fn
+        segs = query_segments(spark, index_dir, meta, pit_segs, routing)
+        fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k)
+        cands = launch(spark, index_dir, segs, fn)
+    return merge_fetch(spark, index_dir, cands, k, fetch)
 
 
 def msearch_topk(
@@ -626,14 +644,10 @@ def msearch_topk(
     """
     if isinstance(queries, list):
         queries = {f"q{i}": {"terms": t} for i, t in enumerate(queries)}
-    meta = reader.meta if reader else store.IndexMeta.load(index_dir)
-    all_terms = list(dict.fromkeys(t for q in queries.values() for t in q["terms"]))
-    weights = (
-        reader.term_weights(all_terms)
-        if reader
-        else _term_weights(spark, index_dir, all_terms, meta)
-    )
-    per_q: dict[str, tuple[list, int, str]] = {}
+    reader = reader or IndexReader(spark, index_dir)
+    meta = reader.meta
+    weights = reader.term_weights([t for q in queries.values() for t in q["terms"]])
+    per_q: dict[str | None, tuple[list, int, str]] = {}
     for qid, q in queries.items():
         terms = list(dict.fromkeys(q["terms"]))
         live = [t for t in terms if t in weights]
@@ -644,27 +658,15 @@ def msearch_topk(
         per_q[qid] = (live, msm, mode)
     if not per_q:
         return spark.createDataFrame([], MCAND_SCHEMA)
-    segs = store.list_segs(index_dir)
-    fn = _segment_task_mscorer(index_dir, per_q, weights, meta.avgdl, meta.k1, meta.b, k)
-    n_tasks = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
-    seg_rdd = spark.sparkContext.parallelize([(int(s),) for s in segs], n_tasks)
-    cands = spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, MCAND_SCHEMA)
-    from pyspark.sql import Window
-
+    fn = _bm25_segment(per_q, weights, meta.avgdl, meta.k1, meta.b, k)
+    cands = launch(spark, index_dir, query_segments(spark, index_dir, meta), fn, MCAND_SCHEMA)
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     top = (
         cands.withColumn("__rk", F.row_number().over(w))
         .where(F.col("__rk") <= k)
         .drop("__rk")
     )
-    if not fetch:
-        return top
-    docs = (reader.docs if reader else spark.read.parquet(*store.docs_glob(index_dir))).select(
-        "doc_id", "url", "lang", "warc_ts"
-    )
-    return docs.join(F.broadcast(top), "doc_id").orderBy(
-        "qid", F.desc("score"), F.asc("doc_id")
-    )
+    return fetch_hits(spark, index_dir, top, order=("qid",)) if fetch else top
 
 
 def sorted_scan(
@@ -672,58 +674,45 @@ def sorted_scan(
     index_dir: str,
     k: int = 10,
     columns: tuple = ("doc_id", "url", "warc_ts", "lang"),
+    routing: str | None = None,
 ) -> DataFrame:
     """Early-terminated sorted fetch over an index built with
     ``index_sort`` (Lucene index sorting, ``S/index/IndexSortConfig.java``
     + the sorted-query early-termination of ``CollectorManager``/
     ``TopFieldCollector``): each segment's docs.parquet is WRITTEN in
     index-sort order, so a segment task streams the file batch-by-batch
-    (pyarrow ``iter_batches``) and STOPS after k live rows — at 100 TB a
-    "latest-k" query reads O(k) rows per segment instead of scanning and
-    sorting the table. The coordinator merge is an orderBy over ≤
-    k·segments rows."""
-    import pyarrow.parquet as pq_mod
-
+    and STOPS after k live rows — at 100 TB a "latest-k" query reads O(k)
+    rows per segment instead of scanning and sorting the table. The
+    coordinator merge is an orderBy over ≤ k·segments rows."""
     meta = store.IndexMeta.load(index_dir)
     if not meta.index_sort:
         raise ValueError("index was not built with index_sort")
     sfield, sorder = meta.index_sort
-    segs = store.list_segs(index_dir)
+    segs = query_segments(spark, index_dir, meta, routing=routing)
     out_cols = list(dict.fromkeys(list(columns) + [sfield]))
     if segs:
         # real column types from the store footer — a hardcoded name→type
         # map would declare a numeric index_sort field (or any custom
         # stored column) as string, breaking the Arrow conversion or
         # mis-sorting '9' > '10' at the coordinator merge
-        out_schema = spark.read.parquet(
-            os.path.join(store.seg_dir(index_dir, segs[0]), "docs.parquet")
-        ).select(*[F.col(f"`{c}`") for c in out_cols]).schema
+        out_schema = spark.read.parquet(Segment(index_dir, segs[0]).docs_path).select(
+            *[F.col(f"`{c}`") for c in out_cols]
+        ).schema
     else:
         out_schema = ", ".join(f"`{c}` string" for c in out_cols)
 
-    def fn(batches):
-        from .ops import seg_tombstones
+    def per_segment(seg: Segment) -> pd.DataFrame | None:
+        taken = []
+        n_live = 0
+        for batch in seg.docs_batches(out_cols, max(k, 128)):
+            part = batch.to_pandas()
+            part = part[~_member(part["doc_id"].to_numpy(), seg.tombstones)]
+            taken.append(part)
+            n_live += len(part)
+            if n_live >= k:
+                break  # early termination: later row groups unread
+        return pd.concat(taken, ignore_index=True).head(k) if taken else None
 
-        for pdf in batches:
-            for seg in pdf["seg"]:
-                d = store.seg_dir(index_dir, int(seg))
-                tomb = seg_tombstones(index_dir, d)
-                pf = pq_mod.ParquetFile(os.path.join(d, "docs.parquet"))
-                taken = []
-                n_live = 0
-                for batch in pf.iter_batches(batch_size=max(k, 128), columns=out_cols):
-                    part = batch.to_pandas()
-                    if len(tomb):
-                        part = part[~part["doc_id"].isin(tomb)]
-                    taken.append(part)
-                    n_live += len(part)
-                    if n_live >= k:
-                        break  # early termination: later row groups unread
-                if taken:
-                    yield pd.concat(taken, ignore_index=True).head(k)
-
-    segs_df = spark.createDataFrame([(int(s),) for s in segs], "seg int")
-    n_tasks = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
-    per_seg = segs_df.repartition(n_tasks).mapInPandas(fn, out_schema)
+    per_seg = launch(spark, index_dir, segs, per_segment, out_schema)
     order = F.col(sfield).desc() if sorder == "desc" else F.col(sfield).asc()
     return per_seg.orderBy(order, F.asc("doc_id")).limit(k)

@@ -154,3 +154,55 @@ def test_intra_batch_op_sequencing(spark, tmp_path):
     hits = {r["url"] for r in search_topk(spark, d, ["second"], k=10).collect()}
     assert hits == {"w1"}  # w1 carries the LAST body
     assert not {r["url"] for r in search_topk(spark, d, ["fresh"], k=10).collect()}
+
+
+@pytest.fixture(scope="module")
+def updated_engine(spark, tmp_path_factory):
+    """An Engine index after a bulk that updates ``upd`` and a delete of
+    ``del``; yields (engine, the old doc_id of ``upd``, its new doc_id)."""
+    from elasticsearch_spark.api import Engine
+    from elasticsearch_spark.operators.ops import live_docs
+
+    es = Engine(spark, root=str(tmp_path_factory.mktemp("upd_engine")))
+    es.create_index("pages", num_partitions=2)
+
+    def bulk(rows):
+        es.bulk("pages", spark.createDataFrame(
+            rows, "url string, text string, lang string",
+        ).withColumn("warc_ts", F.lit(TS).cast("timestamp")))
+
+    bulk([("keep", "a quick brown fox jumps", "en"),
+          ("upd", "the quick brown fox sleeps", "en"),
+          ("del", "one quick brown fox hides", "en"),
+          ("other", "lazy dog naps all day", "en")])
+
+    def doc_id(url):
+        return live_docs(spark, es._dir("pages")).where(F.col("url") == url).first()["doc_id"]
+
+    old = doc_id("upd")
+    bulk([("upd", "now a quick brown fox runs far", "en")])
+    es.delete("pages", ["del"])
+    return es, old, doc_id("upd")
+
+
+@pytest.mark.parametrize("query", [
+    {"match": {"text": "fox"}},
+    {"match": {"text": {"query": "quick fox", "operator": "and"}}},
+    {"match_phrase": {"text": "quick brown fox"}},
+    {"match_phrase_prefix": {"text": "quick brown fo"}},
+    {"intervals": {"text": {"match": {"query": "quick fox", "ordered": True}}}},
+    {"intervals": {"text": {"all_of": {
+        "intervals": [{"match": {"query": "quick"}}, {"prefix": {"prefix": "fo"}}],
+        "ordered": True}}}},
+    {"span_near": {"clauses": [{"span_term": {"text": "brown"}},
+                               {"span_term": {"text": "fox"}}],
+                   "slop": 0, "in_order": True}},
+], ids=["match_or", "match_and", "match_phrase", "match_phrase_prefix",
+        "intervals", "intervals_source", "span_near"])
+def test_deletes_and_updates_invisible_on_every_index_path(updated_engine, query):
+    es, old_id, new_id = updated_engine
+    hits = es.search("pages", {"query": query, "size": 10})["hits"].collect()
+    urls = [r["url"] for r in hits]
+    assert sorted(urls) == ["keep", "upd"]  # no deleted doc, no duplicate
+    assert old_id != new_id
+    assert {r["doc_id"] for r in hits if r["url"] == "upd"} == {new_id}

@@ -197,9 +197,14 @@ def test_array_field_term_agreement(spark):
     docs = spark.createDataFrame(
         [(1, ["red", "blue"], [3, 5]),
          (2, ["green"], [7]),
-         (3, ["blue", "green"], [3])],
+         (3, ["blue", "green"], [3]),
+         (4, ["3", "true"], [9])],
         "doc_id long, tags array<string>, nums array<bigint>")
     stored = [
+        # non-string literals on string elements compare as their
+        # canonical strings (dsl._term_lit)
+        ("t_int_tags", {"term": {"tags": 3}}),
+        ("t_bool_tags", {"term": {"tags": True}}),
         ("t_blue", {"term": {"tags": "blue"}}),
         ("ts_rg", {"terms": {"tags": ["red", "green"]}}),
         ("t_n3", {"term": {"nums": 3}}),
@@ -212,6 +217,8 @@ def test_array_field_term_agreement(spark):
     assert {d for q, d in pruned if q == "ts_rg"} == {1, 2, 3}
     assert {d for q, d in pruned if q == "t_n3"} == {1, 3}
     assert {d for q, d in pruned if q == "ts_37"} == {1, 2, 3}
+    assert {d for q, d in pruned if q == "t_int_tags"} == {4}
+    assert {d for q, d in pruned if q == "t_bool_tags"} == {4}
 
 
 def test_numeric_vs_string_literal_kinds(spark):
@@ -221,7 +228,8 @@ def test_numeric_vs_string_literal_kinds(spark):
     pruned path agrees with the compile path on every combination."""
     docs = spark.createDataFrame(
         [(1, "3.0", 3.0), (2, "3", 3.5), (3, "3.5", 4.0),
-         (4, "abc", None), (5, "1e3", 1000.0)],
+         (4, "abc", None), (5, "1e3", 1000.0), (6, "true", 2.0),
+         (7, "1", 5.0)],
         "doc_id long, sval string, dval double")
     stored = [
         ("f3_s", {"term": {"sval": 3.0}}),     # float lit on string col
@@ -231,6 +239,10 @@ def test_numeric_vs_string_literal_kinds(spark):
         ("i3_d", {"term": {"dval": 3}}),       # int lit on double col
         ("s3_d", {"term": {"dval": "3"}}),     # string lit on double col
         ("s30_d", {"term": {"dval": "3.0"}}),
+        ("b_true_s", {"term": {"sval": True}}),  # try_cast('boolean')
+        ("s1e3_d", {"term": {"dval": "1e3"}}),   # non-canonical numeric
+        ("s300_d", {"term": {"dval": "3.00"}}),  # string literals
+        ("s1000_d", {"term": {"dval": "1000"}}),
     ]
     legacy = _pairs(percolate(docs, stored, prune=False))
     pruned = _pairs(percolate(docs, stored, prune=True))
@@ -242,6 +254,10 @@ def test_numeric_vs_string_literal_kinds(spark):
     assert {d for q, d in pruned if q == "i3_d"} == {1}
     assert {d for q, d in pruned if q == "s3_d"} == {1}
     assert {d for q, d in pruned if q == "s30_d"} == {1}
+    assert {d for q, d in pruned if q == "b_true_s"} == {6, 7}
+    assert {d for q, d in pruned if q == "s1e3_d"} == {5}
+    assert {d for q, d in pruned if q == "s300_d"} == {1}
+    assert {d for q, d in pruned if q == "s1000_d"} == {5}
 
 
 def test_qterms_broadcast_size_gate(spark, corpus, monkeypatch):

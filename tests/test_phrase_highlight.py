@@ -167,8 +167,8 @@ def test_positionless_index_probe_and_fallback(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from elasticsearch_spark.operators.phrase import (
-        _POS_PROBE_CACHE, index_has_positions, search_intervals,
-        search_phrase_prefix)
+        index_has_positions, search_intervals, search_phrase_prefix)
+    from elasticsearch_spark.operators.topk import _POS_PROBE_CACHE
     from elasticsearch_spark.sources import index_store as store
 
     idx = str(tmp_path / "noposidx")

@@ -132,3 +132,36 @@ def test_op_batch_segments_route_correctly(spark):
         hits = search_topk(spark, IDX, ["routed"], k=50, fetch=True,
                            routing=url).collect()
         assert url in {r["url"] for r in hits}, url
+
+
+@pytest.mark.parametrize("query", [
+    {"match_phrase": {"text": "red fox"}},
+    {"span_near": {"clauses": [{"span_term": {"text": "red"}},
+                               {"span_term": {"text": "fox"}}],
+                   "slop": 0, "in_order": True}},
+], ids=["match_phrase", "span_near"])
+def test_positional_queries_honor_routing(spark, tmp_path, query):
+    """?routing= narrows the positional index paths exactly like match: the
+    routed search returns the url's shard and nothing else (it used to
+    scan every shard)."""
+    from pyspark.sql import functions as F
+
+    from elasticsearch_spark.api import Engine
+
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("pages", num_partitions=6, num_shards=3)
+    es.bulk("pages", spark.createDataFrame(
+        [(f"u{i}", "the red fox jumps", "en") for i in range(30)],
+        "url string, text string, lang string",
+    ).withColumn("warc_ts", F.lit("2024-01-01").cast("timestamp")))
+    d = es._dir("pages")
+    shard_urls = {
+        r["url"]
+        for s in routed_segs(spark, d, store.list_segs(d), "u0", store.IndexMeta.load(d))
+        for r in spark.read.parquet(f"{d}/segments/seg={s}/docs.parquet").select("url").collect()
+    }
+    assert "u0" in shard_urls and len(shard_urls) < 30
+    full = es.search("pages", {"query": query, "size": 50})["hits"]
+    assert {r["url"] for r in full.collect()} == {f"u{i}" for i in range(30)}
+    routed = es.search("pages", {"query": query, "size": 50}, routing="u0")["hits"]
+    assert {r["url"] for r in routed.collect()} == shard_urls
