@@ -58,7 +58,8 @@ __all__ = ["collation_key", "collation_key_udf", "sort_key_hex"]
 # lower (punct/space) group 1, non-Latin scripts group 4+ by codepoint
 # ranks are spaced by 4 so locale tailorings can slot a letter BETWEEN
 # two base letters (traditional-Spanish ñ between n and o)
-_LATIN_RANK = {c: (i + 1) * 4 for i, c in enumerate("abcdefghijklmnopqrstuvwxyz")}
+_RANK_SPACING = 4
+_LATIN_RANK = {c: (i + 1) * _RANK_SPACING for i, c in enumerate("abcdefghijklmnopqrstuvwxyz")}
 
 # NFD-resistant base-letter maps (these don't decompose to ASCII + mark)
 _BASE_MAP = {
@@ -196,11 +197,14 @@ def _parse_rules(rules: str) -> tuple:
     """Rules string → ((key, ((p, s), ...)), ...) tailoring entries.
 
     Relations: ``<`` bumps the reset's last primary (+1 per step, the
-    rank spacing of 4 leaves room), ``<<`` bumps its secondary, ``<<<`` /
-    ``,`` / ``=`` reuse the reset's elements verbatim (tertiary collapse —
-    equal through secondary strength, the DIN 5007-2 use-case)."""
+    rank spacing of 4 leaves room for 3 steps; a 4th raises ValueError
+    rather than collide with the next letter), ``<<`` bumps its secondary,
+    ``<<<`` / ``,`` / ``=`` reuse the reset's elements verbatim (tertiary
+    collapse — equal through secondary strength, the DIN 5007-2
+    use-case)."""
     toks = _lex_rules(rules)
     entries: list[tuple[str, tuple]] = []
+    steps_of: dict[str, int] = {}  # target -> '<' steps above its base letter
     i, n = 0, len(toks)
     while i < n:
         if toks[i][0] != "&":
@@ -216,6 +220,7 @@ def _parse_rules(rules: str) -> tuple:
                 _elements(reset, dict(entries), False)]
         if not base:
             continue
+        steps = steps_of.get(reset, 0)
         while i + 1 < n and toks[i][0] in ("<", "<<", "<<<", ",", "=") \
                 and toks[i + 1][0] == "text":
             rel, target = toks[i][0], toks[i + 1][1]
@@ -223,12 +228,19 @@ def _parse_rules(rules: str) -> tuple:
             els = list(base)
             lp, ls = els[-1]
             if rel == "<":
+                steps += 1
+                if steps > _RANK_SPACING - 1:
+                    raise ValueError(
+                        f"collation rules: {target!r} is {steps} '<' steps above "
+                        f"the base letter of reset {reset!r}; the primary rank "
+                        f"spacing holds {_RANK_SPACING - 1}")
                 els[-1] = (lp + 1, ls)
             elif rel == "<<":
                 els[-1] = (lp, (ls or 0x20) + 1)
             # <<< , = : elements verbatim (tertiary collapse)
             if target:
                 entries.append((target, tuple(els)))
+                steps_of[target] = steps
             base = els  # chains relate to the PREVIOUS target
     return tuple(entries)
 

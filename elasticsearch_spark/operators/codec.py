@@ -1,15 +1,26 @@
-"""Postings compression: delta + variable-byte (VByte), numpy-vectorized.
+"""The postings codec: delta + variable-byte (VByte), numpy-vectorized.
 
-Plays the role of Lucene's postings formats (delta-encoded docIDs in FOR
-blocks + VByte tails; codec selection pinned at
+Plays the role of Lucene's postings format (delta-encoded docIDs in FOR
+blocks + VByte tails; one format, pinned at
 ``server/src/main/java/org/elasticsearch/index/codec/CodecService.java:29-43``).
-We use VByte for both docID deltas and term frequencies; blocks are ≤128
-entries (Lucene's block size), each block carrying its absolute
-``first_doc_id`` so blocks are independently decodable (the skip-list
-property block-max WAND needs).
+This module is the only code that knows the block layout; the segment
+writers (build, merge) and every reader call it:
 
-Everything here is whole-array numpy — encode/decode of a segment's full
-postings happens in a handful of vectorized calls, no per-value Python.
+- a term's postings are cut into blocks of ≤128 entries (Lucene's block
+  size), each carrying its absolute ``first_doc_id`` and entry count
+  ``n`` so blocks are independently decodable (the skip-list property
+  block-max WAND needs);
+- ``ids_bytes``: VByte doc-id gaps, the first gap relative to
+  ``first_doc_id`` (so 0);
+- ``tf_bytes``: VByte term frequencies;
+- ``pos_bytes``: VByte within-doc token positions, tf per posting, each
+  posting's first position absolute and the rest deltas. Positions are
+  part of the format (DOCS_AND_FREQS_AND_POSITIONS): a block without them
+  is corrupt, and decoding it raises.
+
+VByte is self-delimiting, so a run of blocks encodes and decodes as whole
+streams in a handful of vectorized calls (``encode_blocks`` /
+``decode_blocks``), no per-value or per-block Python.
 """
 
 from __future__ import annotations
@@ -129,3 +140,83 @@ def decode_block(ids_buf: bytes, tf_buf: bytes, base: int) -> tuple[np.ndarray, 
     ids = delta_decode(vbyte_decode(ids_buf), base)
     tfs = vbyte_decode(tf_buf).astype(np.int64)
     return ids, tfs
+
+
+def encode_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """Occurrence-level positions (sorted per posting, postings
+    concatenated) → (VByte stream of within-posting deltas, per-OCCURRENCE
+    byte lengths). First occurrence of each posting is absolute."""
+    occ_starts = np.r_[0, np.cumsum(tfs)[:-1]].astype(np.int64)
+    gaps = np.empty(len(flat_pos), dtype=np.uint64)
+    if len(flat_pos):
+        gaps[0] = flat_pos[0]
+        gaps[1:] = (flat_pos[1:] - flat_pos[:-1]).astype(np.uint64)
+        gaps[occ_starts] = flat_pos[occ_starts].astype(np.uint64)
+    return vbyte_encode(gaps)
+
+
+def decode_positions(pos_buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """VByte positions stream + per-posting tfs → (flat absolute positions,
+    occurrence offsets per posting). Raises ValueError unless the stream
+    holds exactly ``sum(tfs)`` positions."""
+    gaps = vbyte_decode(pos_buf).astype(np.int64)
+    t = np.asarray(tfs, dtype=np.int64)
+    occ_off = np.r_[0, np.cumsum(t)]
+    if len(gaps) != occ_off[-1]:
+        raise ValueError(
+            f"postings position data holds {len(gaps)} positions for "
+            f"{occ_off[-1]} term occurrences (positions are part of the format)")
+    if len(gaps) == 0:
+        return gaps, occ_off
+    starts = occ_off[:-1]
+    csum = np.cumsum(gaps)
+    # abs[i] = csum[i] - (csum[start_of_its_posting] - gaps[start]) — the
+    # first occurrence of each posting is stored absolute (delta vs 0)
+    corr = csum[starts] - gaps[starts]
+    return csum - np.repeat(corr, t), occ_off
+
+
+def encode_blocks(
+    doc_ids: np.ndarray, tfs: np.ndarray, flat_pos: np.ndarray, block_starts: np.ndarray
+) -> tuple[tuple[bytes, np.ndarray], ...]:
+    """Postings in block order (doc ids ascending within each block, the
+    blocks starting at ``block_starts``; ``flat_pos`` the postings'
+    positions concatenated) → ``(stream, offsets)`` for ids, tfs and
+    positions, where block j's bytes are ``stream[offsets[j]:offsets[j+1]]``.
+    The whole run is encoded as one stream per column."""
+    gaps = np.zeros(len(doc_ids), dtype=np.uint64)
+    gaps[1:] = (doc_ids[1:] - doc_ids[:-1]).astype(np.uint64)
+    gaps[block_starts] = 0  # first entry in a block is relative to first_doc_id
+    ids_stream, ids_len = vbyte_encode(gaps)
+    tf_stream, tf_len = vbyte_encode(tfs.astype(np.uint64))
+    pos_stream, pos_len = encode_positions(flat_pos, tfs)
+    bounds = np.append(block_starts, len(doc_ids))
+    occ_off = np.r_[0, np.cumsum(tfs)].astype(np.int64)
+    return (
+        (ids_stream, np.r_[0, np.cumsum(ids_len)][bounds]),
+        (tf_stream, np.r_[0, np.cumsum(tf_len)][bounds]),
+        (pos_stream, np.r_[0, np.cumsum(pos_len)][occ_off[bounds]]),
+    )
+
+
+def decode_blocks(first_doc_id, n, ids_bytes, tf_bytes, pos_bytes=None) -> tuple:
+    """A run of blocks (per-block ``first_doc_id``, ``n`` and byte strings)
+    → flat ``(doc_ids, tfs)`` in block order, plus ``decode_positions``'
+    ``(flat_pos, occ_off)`` when ``pos_bytes`` is given. One
+    ``vbyte_decode`` per stream; per-block doc-id bases come back through
+    one cumsum + repeat."""
+    n = np.asarray(n, dtype=np.int64)
+    gaps = vbyte_decode(b"".join(ids_bytes))
+    tfs = vbyte_decode(b"".join(tf_bytes)).astype(np.int64)
+    total = int(n.sum())
+    if len(gaps) != total or len(tfs) != total:
+        raise ValueError(f"postings blocks hold {len(gaps)} doc ids and {len(tfs)} tfs, not n={total}")
+    # within-block prefix sums = the run's prefix sum minus its value just
+    # before each block (uint64 arithmetic wraps, so the run sum may overflow)
+    csum = np.cumsum(gaps)
+    starts = np.cumsum(n) - n
+    within = csum - np.repeat(csum[starts] - gaps[starts], n)
+    ids = within.astype(np.int64) + np.repeat(np.asarray(first_doc_id, dtype=np.int64), n)
+    if pos_bytes is None:
+        return ids, tfs
+    return (ids, tfs, *decode_positions(b"".join(pos_bytes), tfs))

@@ -41,6 +41,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import index_store as store
+from .codec import decode_blocks
 from .postings import encode_postings_blocks
 
 # reference defaults, scaled for sandbox testing via parameters
@@ -159,84 +160,44 @@ def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> dict:
     doc_ids_sorted = doc_ids_sorted[_id_order]
     ql_sorted = byte4_to_int(docs["norm"].to_numpy())[_id_order]
 
-    # postings: decode all blocks → flat (term, doc_id, tf), lexsort, re-encode
-    post_tables = [pq.read_table(os.path.join(store.seg_dir(index_dir, s), "postings.parquet")) for s in sorted(segs)]
-    post = pa.concat_tables(post_tables)
+    # postings: decode all blocks → flat (term, doc_id, tf, positions) in
+    # one codec call, drop expunged docs, lexsort, re-encode
+    post = pa.concat_tables(
+        pq.read_table(os.path.join(store.seg_dir(index_dir, s), "postings.parquet"))
+        for s in sorted(segs)
+    )
     terms = post["term"].to_numpy(zero_copy_only=False)
-    firsts = post["first_doc_id"].to_numpy()
-    ids_b = post["ids_bytes"].to_numpy(zero_copy_only=False)
-    tf_b = post["tf_bytes"].to_numpy(zero_copy_only=False)
     ns = post["n"].to_numpy()
-
-    # whole-table vectorized decode: VByte is self-delimiting, so ALL block
-    # byte-strings concatenate into one stream decoded in a single numpy
-    # pass; per-block docIDs are reconstructed with a segmented cumsum
-    # (gap[block_start] is 0 by the codec's layout, base = first_doc_id)
-    from .codec import vbyte_decode
-
-    n_total = int(ns.sum())
-    starts = np.r_[0, np.cumsum(ns)[:-1]]
-    gaps = vbyte_decode(b"".join(ids_b)).astype(np.int64)
-    flat_tfs = vbyte_decode(b"".join(tf_b)).astype(np.int64)
-    csum = np.cumsum(gaps)
-    base_correction = firsts - (csum[starts] - gaps[starts])
-    flat_ids = csum + np.repeat(base_correction, ns)
+    flat_ids, flat_tfs, flat_pos, occ_off = decode_blocks(
+        post["first_doc_id"].to_numpy(), ns,
+        *(post[c].to_numpy(zero_copy_only=False) for c in ("ids_bytes", "tf_bytes", "pos_bytes")),
+    )
     # term codes WITHOUT hashing millions of strings: the dictionary is the
     # block-level term column (~1000× smaller) — unique it, map rows by
     # binary search, expand to postings by repeat
     global_terms = np.unique(terms)
     flat_codes = np.repeat(np.searchsorted(global_terms, terms), ns)
-    assert len(flat_ids) == n_total
-
-    # positions (if every source segment carries them): decode the whole
-    # occurrence stream once; re-gathered after the postings reorder below
-    from .postings import decode_positions
-
-    flat_pos_all = None
-    occ_off_all = None
-    if "pos_bytes" in post.column_names:
-        pos_b = post["pos_bytes"].to_numpy(zero_copy_only=False)
-        stream = b"".join(x for x in pos_b if x is not None)
-        flat_pos_all, occ_off_all = decode_positions(stream, flat_tfs)
-        if len(flat_pos_all) != int(flat_tfs.sum()):
-            flat_pos_all = None  # mixed/absent positions → merged without
-
-    orig_tfs = flat_tfs
     if expunged:
         exp = np.sort(np.array(expunged, dtype=np.int64))
         pos = np.searchsorted(exp, flat_ids)
-        keep = ~((pos < len(exp)) & (exp[np.minimum(pos, len(exp) - 1)] == flat_ids))
-        sel = np.nonzero(keep)[0]
-        flat_codes, flat_ids, flat_tfs = flat_codes[keep], flat_ids[keep], flat_tfs[keep]
+        sel = np.nonzero(~((pos < len(exp)) & (exp[np.minimum(pos, len(exp) - 1)] == flat_ids)))[0]
     else:
         sel = np.arange(len(flat_ids))
 
-    if len(flat_ids) == 0:
+    if len(sel) == 0:
         from .postings import POSTINGS_FIELDS
 
         merged = pa.table({kname: pa.array([], type=t) for kname, t in POSTINGS_FIELDS})
     else:
-        codes, uniques = flat_codes, global_terms
-        order = np.lexsort((flat_ids, codes))
-        p_code, p_docid, p_tfs = codes[order], flat_ids[order], flat_tfs[order]
-        pos = np.searchsorted(doc_ids_sorted, p_docid)
-        p_ql = ql_sorted[pos]
-        flat_pos_new = None
-        if flat_pos_all is not None:
-            # gather the occurrence stream into the new posting order
-            final_idx = sel[order]  # source posting per output posting
-            lengths = orig_tfs[final_idx]
-            out_total = int(lengths.sum())
-            out_starts = np.r_[0, np.cumsum(lengths)[:-1]]
-            gather = (
-                np.repeat(occ_off_all[final_idx], lengths)
-                + np.arange(out_total)
-                - np.repeat(out_starts, lengths)
-            )
-            flat_pos_new = flat_pos_all[gather]
+        # source posting of each output posting, in (term, doc_id) order
+        src = sel[np.lexsort((flat_ids[sel], flat_codes[sel]))]
+        p_docid, p_tfs = flat_ids[src], flat_tfs[src]
+        p_ql = ql_sorted[np.searchsorted(doc_ids_sorted, p_docid)]
+        # gather the occurrence stream into the new posting order
+        out_starts = np.cumsum(p_tfs) - p_tfs
+        gather = np.repeat(occ_off[src] - out_starts, p_tfs) + np.arange(int(p_tfs.sum()))
         merged = encode_postings_blocks(
-            np.asarray(uniques, dtype=object), p_code, p_docid, p_tfs, p_ql, new_seg,
-            flat_pos=flat_pos_new,
+            global_terms, flat_codes[src], p_docid, p_tfs, p_ql, new_seg, flat_pos[gather]
         )
 
     d = store.seg_dir(index_dir, new_seg)

@@ -324,7 +324,7 @@ def _doc_terms(docs: DataFrame, key: str, fields: list[str],
     - ``num`` (non-string literal equality): the values' canonical
       integer/bool forms — scalar STRING columns surface the canonical
       form of numeric-looking values ("3.0"/"1e3" → "3"/"1000", matching
-      the compile path's implicit string→double cast) and of
+      the compile path's exact string→decimal cast) and of
       boolean-looking ones ("1"/"yes" → "true", the compile path's
       try_cast('boolean')), numeric columns surface both forms;
       array<string> columns surface their elements verbatim (the compile
@@ -361,16 +361,16 @@ def _doc_terms(docs: DataFrame, key: str, fields: list[str],
             raws = F.array(F.col(f).cast("string"))
             text = F.col(f).cast("string")
         toks = F.regexp_extract_all(F.lower(text), F.lit(analyzer_regex), F.lit(0))
-        # canonical integer form of every integral-numeric value
-        # (try_cast: ANSI mode must not throw on non-numeric strings,
-        # and int64-overflowing doubles drop out as null)
+        # canonical integer form of every integral-numeric value, parsed
+        # the way the compile path compares: exactly for string columns
+        # (dsl.EXACT_NUM), as doubles for numeric ones (try_cast: ANSI mode
+        # must not throw on non-numeric strings, and int64-overflowing
+        # values drop out as null)
+        num = dsl.EXACT_NUM if elem == "string" else "double"
         canon = F.array_compact(F.transform(
             raws, lambda x: F.when(
-                x.try_cast("double").isNotNull()
-                & (x.try_cast("double")
-                   == x.try_cast("double").try_cast("bigint")
-                      .try_cast("double")),
-                x.try_cast("double").try_cast("bigint").cast("string"))))
+                x.try_cast(num) == x.try_cast(num).try_cast("bigint").try_cast(num),
+                x.try_cast(num).try_cast("bigint").cast("string"))))
         if elem == "string":
             raw_terms = raws
             num_terms = raws if is_arr else F.concat(

@@ -40,7 +40,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from ..functions import analysis
 from ..sources import index_store as store
@@ -48,15 +47,6 @@ from .topk import HITS_SCHEMA, IndexReader, Segment, score_verified, search_segm
 
 _POS_BITS = 32
 _POS_MASK = (1 << _POS_BITS) - 1
-
-
-def index_has_positions(index_dir: str) -> bool:
-    """False when some current segment provably lacks positions. Unknown
-    (statistics absent) counts as positional — normal builds always store
-    positions and must not silently take the slow text-rescan path."""
-    return not any(
-        Segment(index_dir, s).has_positions() is False for s in store.list_segs(index_dir)
-    )
 
 
 # --------------------------------------------------------------------------
@@ -247,9 +237,8 @@ def search_phrase(
 ) -> DataFrame:
     """match_phrase over the positional index: per-segment conjunction +
     position-chain verify + BM25 top-k (score DESC, doc_id ASC). Exact —
-    every verified doc competes, not a candidate sample. Position-less
-    legacy indexes fall back to re-analyzing candidates' stored text.
-    ``routing`` scans only the value's shard (``query_segments``)."""
+    every verified doc competes, not a candidate sample. ``routing`` scans
+    only the value's shard (``query_segments``)."""
     reader = IndexReader(spark, index_dir)
     meta = reader.meta
     terms = analysis.analyze(phrase, meta.analyzer)
@@ -259,13 +248,6 @@ def search_phrase(
     if any(t not in weights for t in terms):
         # conjunction with a zero-df term matches nothing
         return spark.createDataFrame([], HITS_SCHEMA)
-    if not index_has_positions(index_dir):
-        # position-less segments (e.g. a merge over legacy sources that
-        # dropped mixed positions): re-analyze candidates' stored text.
-        # Detected DRIVER-side from the parquet footers — the positional
-        # plan is lazy, so an executor-side LookupError at collect time
-        # could never reach a driver try/except here
-        return _phrase_fallback(spark, index_dir, meta, terms, k, slop, routing)
     fn = _positional_segment(weights, meta, k, terms, [], True, slop)
     return search_segments(spark, index_dir, meta, fn, k, routing)
 
@@ -290,11 +272,6 @@ def search_phrase_prefix(
     terms = analysis.analyze(phrase, meta.analyzer)
     if not terms:
         return spark.createDataFrame([], HITS_SCHEMA)
-    if not index_has_positions(index_dir):
-        # the reference raises IllegalStateException ("field was indexed
-        # without position data") — surface it driver-side, not as an
-        # opaque executor traceback at collect time
-        raise ValueError("match_phrase_prefix requires position data; a current segment has none")
     fixed, prefix = terms[:-1], terms[-1]
     # prefix expansion over the GLOBAL term dictionary (the stats table is
     # term-sorted parquet — range predicate pushes to row groups); capped
@@ -337,54 +314,8 @@ def search_intervals(
     weights = reader.term_weights(terms)
     if any(t not in weights for t in terms):
         return spark.createDataFrame([], HITS_SCHEMA)
-    if not index_has_positions(index_dir):
-        raise ValueError("intervals requires position data; a current segment has none")
     fn = _positional_segment(weights, meta, k, terms, [], ordered, max_gaps)
     return search_segments(spark, index_dir, meta, fn, k, routing)
-
-
-# --------------------------------------------------------------------------
-# legacy fallback (position-less index): re-analyze candidates' stored text
-# --------------------------------------------------------------------------
-
-def _phrase_verify_udf(terms: list[str], analyzer: str, slop: int):
-    config = analysis.ANALYZER_CONFIGS.get(analyzer)
-
-    @F.pandas_udf(BooleanType())
-    def verify(texts: pd.Series) -> pd.Series:
-        if analyzer not in analysis.ANALYZERS and config is not None:
-            analysis.register_analyzer(analyzer, *config)
-        fn = analysis.ANALYZERS[analyzer]
-
-        def check(text: str) -> bool:
-            toks = fn(text) if text else []
-            pos = {t: np.array([i for i, x in enumerate(toks) if x == t], dtype=np.int64) for t in set(terms)}
-            keys = [pos[t] for t in terms]
-            if any(len(p) == 0 for p in keys):
-                return False
-            return len(_ordered_chain_verified(keys, slop)) > 0
-
-        return texts.map(check)
-
-    return verify
-
-
-def _phrase_fallback(spark, index_dir, meta, terms, k, slop, routing) -> DataFrame:
-    from .topk import search_topk
-
-    cands = search_topk(
-        spark, index_dir, terms, k=k * 20, operator="and", fetch=False, routing=routing
-    )
-    docs = spark.read.parquet(*store.docs_glob(index_dir)).select("doc_id", "url", "text")
-    verified = (
-        docs.join(F.broadcast(cands), "doc_id")
-        .where(_phrase_verify_udf(terms, meta.analyzer, slop)(F.col("text")))
-    )
-    return (
-        verified.select("doc_id", "url", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
 
 
 # --------------------------------------------------------------------------

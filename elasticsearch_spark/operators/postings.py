@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..functions import analysis
 from ..functions.smallfloat import byte4_to_int, int_to_byte4
 from ..sources import index_store as store
-from .codec import BLOCK_SIZE, vbyte_decode, vbyte_encode
+from .codec import BLOCK_SIZE, encode_blocks
 
 DOCID_PARTITION_SHIFT = 40
 
@@ -48,12 +48,11 @@ POSTINGS_FIELDS = [
     ("max_tf", pa.int32()),
     ("min_ql", pa.int32()),
     ("sum_tf", pa.int64()),
+    # the encoded block (layout: codec.py); positions are always stored —
+    # DOCS_AND_FREQS_AND_POSITIONS, the text-field default
+    # (S/index/mapper/TextFieldMapper.java:101)
     ("ids_bytes", pa.binary()),
     ("tf_bytes", pa.binary()),
-    # positions: per posting, delta-encoded within-doc token positions
-    # (VByte; counts = tf, so the stream is self-describing given tf_bytes)
-    # — DOCS_AND_FREQS_AND_POSITIONS, the text-field default
-    # (S/index/mapper/TextFieldMapper.java:101)
     ("pos_bytes", pa.binary()),
 ]
 POSTINGS_PA_SCHEMA = pa.schema(POSTINGS_FIELDS)
@@ -85,35 +84,6 @@ def tokenize_docs(texts: list[str], analyzer: str) -> tuple[np.ndarray, np.ndarr
     return flat, doc_idx, dls
 
 
-def encode_positions(flat_pos: np.ndarray, tfs: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Occurrence-level positions (sorted per posting, postings
-    concatenated) → (VByte stream of within-posting deltas, per-OCCURRENCE
-    byte lengths). First occurrence of each posting is absolute."""
-    occ_starts = np.r_[0, np.cumsum(tfs)[:-1]].astype(np.int64)
-    gaps = np.empty(len(flat_pos), dtype=np.uint64)
-    if len(flat_pos):
-        gaps[0] = flat_pos[0]
-        gaps[1:] = (flat_pos[1:] - flat_pos[:-1]).astype(np.uint64)
-        gaps[occ_starts] = flat_pos[occ_starts].astype(np.uint64)
-    return vbyte_encode(gaps)
-
-
-def decode_positions(pos_buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """VByte positions stream + per-posting tfs → (flat absolute positions,
-    occurrence offsets per posting)."""
-    gaps = vbyte_decode(pos_buf).astype(np.int64)
-    t = np.asarray(tfs, dtype=np.int64)
-    occ_off = np.r_[0, np.cumsum(t)]
-    if len(gaps) == 0:
-        return gaps, occ_off
-    starts = occ_off[:-1]
-    csum = np.cumsum(gaps)
-    # abs[i] = csum[i] - (csum[start_of_its_posting] - gaps[start]) — the
-    # first occurrence of each posting is stored absolute (delta vs 0)
-    corr = csum[starts] - gaps[starts]
-    return csum - np.repeat(corr, t), occ_off
-
-
 def _binary_col(stream: bytes, offsets64: np.ndarray):
     """pa.binary() column as a zero-copy view over one contiguous stream:
     entry j = stream[offsets64[j]:offsets64[j+1]]. Falls back to chunked
@@ -138,14 +108,15 @@ def encode_postings_blocks(
     tfs: np.ndarray,
     p_ql: np.ndarray,
     seg_id: int,
-    flat_pos: np.ndarray | None = None,
+    flat_pos: np.ndarray,
 ) -> pa.Table:
-    """Flat postings (term-code, docID, tf, quantized-dl), lexsorted by
-    (term, docID) → encoded block table: ≤BLOCK_SIZE postings per block,
-    blocks never span terms, whole-stream delta+VByte encode sliced per
-    block, per-block WAND stats (max_tf, min_ql). Shared by the initial
-    segment build and the sort-merge compaction (both produce the identical
-    layout, like Lucene segments regardless of provenance)."""
+    """Flat postings (term-code, docID, tf, quantized-dl, and the
+    postings' positions concatenated), lexsorted by (term, docID) → encoded
+    block table: ≤BLOCK_SIZE postings per block, blocks never span terms,
+    bytes from ``codec.encode_blocks``, per-block WAND stats (max_tf,
+    min_ql). Shared by the initial segment build and the sort-merge
+    compaction (both produce the identical layout, like Lucene segments
+    regardless of provenance)."""
     # block split
     newterm = np.r_[True, p_code[1:] != p_code[:-1]]
     term_start_idx = np.nonzero(newterm)[0]
@@ -154,38 +125,20 @@ def encode_postings_blocks(
     block_starts = np.nonzero(is_block_start)[0]
     block_sizes = np.diff(np.r_[block_starts, len(p_code)])
 
-    # whole-segment delta + VByte encode, then slice per block
-    gaps = np.empty(len(p_docid), dtype=np.uint64)
-    gaps[0] = 0
-    gaps[1:] = (p_docid[1:] - p_docid[:-1]).astype(np.uint64)
-    gaps[block_starts] = 0  # first entry in a block is relative to first_doc_id
-    ids_stream, ids_len = vbyte_encode(gaps)
-    tf_stream, tf_len = vbyte_encode(tfs.astype(np.uint64))
-    ids_off = np.r_[0, np.cumsum(ids_len)]
-    tf_off = np.r_[0, np.cumsum(tf_len)]
-
-    # per-block binary columns built straight from (int32 offsets, the one
-    # contiguous stream) — blocks tile the stream, so the arrow array is a
-    # zero-copy view; the old per-block bytes-slicing materialized ~1 Python
-    # object per block and dominated the whole encode stage
-    block_ends = block_starts + block_sizes
-    bounds = np.append(block_starts, len(p_code))
-    ids_col = _binary_col(ids_stream, ids_off[bounds])
-    tf_col = _binary_col(tf_stream, tf_off[bounds])
-    if flat_pos is not None:
-        pos_stream, pos_len = encode_positions(flat_pos, tfs)
-        occ_off = np.r_[0, np.cumsum(tfs)].astype(np.int64)
-        pos_byte_off = np.r_[0, np.cumsum(pos_len)]
-        pos_col = _binary_col(pos_stream, pos_byte_off[occ_off[bounds]])
-    else:
-        pos_col = _binary_col(b"", np.zeros(len(bounds), dtype=np.int64))
+    # one codec call encodes the whole run; each per-block binary column is
+    # a zero-copy view over its stream (slicing out ~1 Python object per
+    # block used to dominate the whole encode stage)
+    ids_col, tf_col, pos_col = (
+        _binary_col(stream, off)
+        for stream, off in encode_blocks(p_docid, tfs, flat_pos, block_starts)
+    )
 
     # per-block stats for WAND upper bounds: max tf, min quantized dl
     max_tf = np.maximum.reduceat(tfs, block_starts)
     min_ql = np.minimum.reduceat(p_ql, block_starts)
     sum_tf = np.add.reduceat(tfs, block_starts)
     first_doc = p_docid[block_starts]
-    last_doc = p_docid[block_ends - 1]
+    last_doc = p_docid[block_starts + block_sizes - 1]
     b_code = p_code[block_starts]
     # block_id within term
     term_of_block = np.r_[True, b_code[1:] != b_code[:-1]]
@@ -302,7 +255,7 @@ def build_segment_frames(
     p_doc = d_s[starts]  # already ascending within each term
 
     postings = encode_postings_blocks(
-        uniques, p_code, doc_ids[p_doc], tfs, ql[p_doc], pid, flat_pos=flat_pos
+        uniques, p_code, doc_ids[p_doc], tfs, ql[p_doc], pid, flat_pos
     )
     stats = {
         "n_docs": int(n_docs),

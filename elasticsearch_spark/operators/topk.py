@@ -52,16 +52,13 @@ from pyspark.sql import functions as F
 
 from ..functions import bm25
 from ..sources import index_store as store
-from .codec import decode_block
+from .codec import decode_blocks
 
 CAND_SCHEMA = "doc_id long, score double, n_terms_matched int"
 MCAND_SCHEMA = "qid string, doc_id long, score double, n_terms_matched int"
 
 _BLOCK_COLS = ["term", "first_doc_id", "last_doc_id", "n", "max_tf", "min_ql", "ids_bytes", "tf_bytes"]
-_POSITION_COLS = ["term", "first_doc_id", "ids_bytes", "tf_bytes", "pos_bytes"]
-
-# footer probe results; segments are immutable so a path's answer never changes
-_POS_PROBE_CACHE: dict[str, bool | None] = {}
+_POSITION_COLS = ["term", "first_doc_id", "n", "ids_bytes", "tf_bytes", "pos_bytes"]
 
 
 def _member(a: np.ndarray, sorted_b: np.ndarray) -> np.ndarray:
@@ -70,27 +67,6 @@ def _member(a: np.ndarray, sorted_b: np.ndarray) -> np.ndarray:
         return np.zeros(len(a), dtype=bool)
     pos = np.searchsorted(sorted_b, a)
     return (pos < len(sorted_b)) & (sorted_b[np.minimum(pos, len(sorted_b) - 1)] == a)
-
-
-def _decode_term(post: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """All blocks of ONE term in one segment → (doc_ids, tfs, flat_pos,
-    occ_off). Blocks concatenate cleanly: the VByte positions stream stores
-    each posting's first occurrence absolute, so per-posting offsets are
-    all that's needed to slice it."""
-    from .postings import decode_positions
-
-    ids_l, tfs_l = [], []
-    for fd, ib, tb in zip(post["first_doc_id"], post["ids_bytes"], post["tf_bytes"]):
-        ids, tfs = decode_block(ib, tb, int(fd))
-        ids_l.append(ids)
-        tfs_l.append(tfs)
-    ids = np.concatenate(ids_l)
-    tfs = np.concatenate(tfs_l)
-    stream = b"".join(x for x in post["pos_bytes"] if x)
-    if not stream:
-        raise LookupError("index has no positions")
-    flat_pos, occ_off = decode_positions(stream, tfs)
-    return ids, tfs, flat_pos, occ_off
 
 
 class Segment:
@@ -118,46 +94,26 @@ class Segment:
         ).to_pandas()
 
     def positions(self, terms, slots=()) -> dict[str, tuple]:
-        """term -> ``_decode_term`` tuple for each of ``terms`` present;
-        empty, with nothing decoded, when one of ``slots`` (lists of
-        alternative terms) has none of its terms present."""
+        """term -> (doc_ids, tfs, flat_pos, occ_off) for each of ``terms``
+        present, decoded in one ``decode_blocks`` call (``occ_off`` indexes
+        the segment-wide ``flat_pos``); empty, with nothing decoded, when
+        one of ``slots`` (lists of alternative terms) has none of its terms
+        present."""
         post = self.postings(terms, positions=True)
-        present = dict.fromkeys(post["term"])
-        if any(not any(t in present for t in st) for st in slots):
+        t = post["term"].to_numpy()
+        present = set(t)
+        if not present or any(present.isdisjoint(st) for st in slots):
             return {}
-        return {t: _decode_term(post[post["term"] == t]) for t in present}
-
-    def has_positions(self) -> bool | None:
-        """Footer-only probe: does the postings file carry position data?
-        Decided from the parquet column statistics (an all-empty
-        ``pos_bytes`` chunk has ``max == b""``); None when statistics are
-        absent (unknown). No data pages are read."""
-        path = self.postings_path
-        if path in _POS_PROBE_CACHE:
-            return _POS_PROBE_CACHE[path]
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        out: bool | None
-        if "pos_bytes" not in names:
-            out = False
-        else:
-            i = names.index("pos_bytes")
-            out = None
-            saw = False
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(i).statistics
-                if st is None or not st.has_min_max:
-                    continue
-                saw = True
-                if st.max not in (b"", None):
-                    out = True
-                    break
-            if out is None and saw:
-                out = False
-        _POS_PROBE_CACHE[path] = out
-        return out
+        ids, tfs, flat_pos, occ_off = decode_blocks(
+            post["first_doc_id"], post["n"], post["ids_bytes"], post["tf_bytes"], post["pos_bytes"]
+        )
+        # the file is term-sorted, so each term's blocks are one run
+        run = np.flatnonzero(np.r_[True, t[1:] != t[:-1], True])
+        p_off = np.r_[0, np.cumsum(post["n"].to_numpy())][run]
+        return {
+            t[r]: (ids[a:z], tfs[a:z], flat_pos, occ_off[a:z + 1])
+            for r, a, z in zip(run[:-1], p_off[:-1], p_off[1:])
+        }
 
     @functools.cached_property
     def tombstones(self) -> np.ndarray:
@@ -213,23 +169,9 @@ def _score_segment_arrays(
     allowed: np.ndarray | None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode + score all blocks in `post` → (doc_ids, scores, per-doc term counts)."""
-    all_docs, all_scores = [], []
-    for term, grp in post.groupby("term", sort=False):
-        w = weights[term][0]
-        ids_list, tf_list = [], []
-        for fd, ib, tb in zip(grp["first_doc_id"], grp["ids_bytes"], grp["tf_bytes"]):
-            ids, tfs = decode_block(ib, tb, int(fd))
-            ids_list.append(ids)
-            tf_list.append(tfs)
-        ids = np.concatenate(ids_list)
-        tfs = np.concatenate(tf_list)
-        pos = np.searchsorted(norm_doc_ids, ids)
-        ql = norm_ql[pos]
-        s = w * bm25.tf_norm(tfs, ql, avgdl, k1, b)
-        all_docs.append(ids)
-        all_scores.append(s)
-    docs = np.concatenate(all_docs)
-    scores = np.concatenate(all_scores)
+    docs, tfs = decode_blocks(post["first_doc_id"], post["n"], post["ids_bytes"], post["tf_bytes"])
+    w = np.repeat([weights[t][0] for t in post["term"]], post["n"])
+    scores = w * bm25.tf_norm(tfs, norm_ql[np.searchsorted(norm_doc_ids, docs)], avgdl, k1, b)
     if allowed is not None:
         ok = _member(docs, allowed)
         docs, scores = docs[ok], scores[ok]
@@ -282,6 +224,7 @@ def _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed
     n_blocks = len(post)
     b_ids: list[np.ndarray | None] = [None] * n_blocks
     b_scores: list[np.ndarray | None] = [None] * n_blocks
+    ns = post["n"].to_numpy()
     ids_bytes = post["ids_bytes"].to_numpy()
     tf_bytes = post["tf_bytes"].to_numpy()
 
@@ -304,14 +247,18 @@ def _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed
             break
         lo = bounds[r]
         hi = bounds[r + 1] if r + 1 < n_regions else np.iinfo(np.int64).max
+        # one decode for the region's not-yet-decoded blocks
+        todo = [i for i in blocks_by_region[r] if b_ids[i] is None]
+        if todo:
+            ids, tfs = decode_blocks(first[todo], ns[todo], ids_bytes[todo], tf_bytes[todo])
+            sc = np.repeat(w[todo], ns[todo]) * bm25.tf_norm(
+                tfs, norm_ql[np.searchsorted(norm_doc_ids, ids)], avgdl, k1, b
+            )
+            off = np.r_[0, np.cumsum(ns[todo])]
+            for i, lo_i, hi_i in zip(todo, off[:-1], off[1:]):
+                b_ids[i], b_scores[i] = ids[lo_i:hi_i], sc[lo_i:hi_i]
         docs_acc, score_acc = [], []
         for i in blocks_by_region[r]:
-            if b_ids[i] is None:
-                ids, tfs = decode_block(ids_bytes[i], tf_bytes[i], int(first[i]))
-                pos = np.searchsorted(norm_doc_ids, ids)
-                ql = norm_ql[pos]
-                b_ids[i] = ids
-                b_scores[i] = w[i] * bm25.tf_norm(tfs, ql, avgdl, k1, b)
             ids, sc = b_ids[i], b_scores[i]
             s0, s1 = np.searchsorted(ids, lo), np.searchsorted(ids, hi)
             docs_acc.append(ids[s0:s1])
@@ -464,9 +411,10 @@ class IndexReader:
 def routing_shard(spark: SparkSession, value: str, num_shards: int) -> int:
     """Shard for a routing value (IndexRouting.java's murmur3 analog):
     ``pmod(xxhash64(v), S)`` — identical to the build partition's
-    ``pmod(xxhash64(v), P) % S`` because S divides P. Evaluated as a Spark
-    constant expression so query- and index-time hashing can never drift
-    (constant-folded: no job is run)."""
+    ``pmod(xxhash64(v), P) % S`` because S divides P. Evaluated by Spark's
+    own ``xxhash64``, the expression the build routes with, so query- and
+    index-time hashing can never drift. The cost is one small Spark job per
+    routed search: ``first()`` on a one-row frame still runs a job."""
     row = spark.range(1).select(
         F.pmod(F.xxhash64(F.lit(value)), F.lit(num_shards)).cast("int").alias("s")
     ).first()

@@ -123,12 +123,19 @@ def _term_lit(v, elem_type: str):
     return F.lit(v).cast(elem_type)
 
 
+# exact numeric form of a string value for integral term literals: a
+# double cast rounds above 2**53 (9007199254740993 would equal
+# "9007199254740992"); shared with the percolator's canonical num terms
+EXACT_NUM = "decimal(38,18)"
+
+
 def _scalar_term_eq(ctx, fld: str, c, v):
     """Type-mismatch-safe scalar term equality: numeric literal vs STRING
     column compares numerically via try_cast (ES long-field semantics;
-    ANSI mode must not throw on non-numeric values), string literal vs
-    numeric column try_casts the literal (unparseable → no match),
-    same-type compares exactly."""
+    ANSI mode must not throw on non-numeric values) — exactly, through
+    ``EXACT_NUM``, for integral literals — string literal vs numeric
+    column try_casts the literal (unparseable → no match), same-type
+    compares exactly."""
     base = _field_dtype(ctx, fld)
     dt = base.simpleString() if base is not None else None
     if dt is not None and fld in getattr(ctx, "kw_norm", {}):
@@ -136,6 +143,9 @@ def _scalar_term_eq(ctx, fld: str, c, v):
     if dt == "string" and isinstance(v, bool):
         return c.try_cast("boolean") == F.lit(v)
     if dt == "string" and isinstance(v, (int, float)):
+        s = term_lit_str(v)
+        if s is not None:
+            return c.try_cast(EXACT_NUM) == F.lit(s).cast(EXACT_NUM)
         return c.try_cast("double") == F.lit(float(v))
     if dt is not None and dt != "string" and isinstance(v, str):
         return c == F.lit(v).try_cast(dt)

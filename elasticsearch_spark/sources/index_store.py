@@ -19,7 +19,9 @@ Layout:
       segments/seg=<id>/docs.parquet       doc_id,url,warc_ts,lang,text,dl,norm,seg_id
       segments/seg=<id>/postings.parquet   term,seg_id,block_id,first_doc_id,
                                            last_doc_id,n,max_tf,min_ql,sum_tf,
-                                           ids_bytes,tf_bytes
+                                           ids_bytes,tf_bytes,pos_bytes
+                                           (block layout: operators/codec.py;
+                                           positions are mandatory)
       stats/term_stats.parquet   term, df, cf   (the dfs-phase broadcast table)
       manifests/part-<pid>.json  {pid, lineage, input_rows, n_docs, sum_dl,
                                   n_terms, n_blocks, status, files}

@@ -5,6 +5,8 @@ ICUCollationKeywordFieldMapper (RuleBasedCollator.getSortKey)."""
 
 from __future__ import annotations
 
+import pytest
+
 from elasticsearch_spark.functions.collation import collation_key as K
 
 
@@ -249,6 +251,18 @@ def test_custom_rules_chain_and_secondary():
     r2 = "&e << y"
     assert _same("y", "e", strength="primary", rules=r2)
     assert K("e", rules=r2) < K("y", rules=r2)
+
+
+def test_custom_rules_primary_chain_past_rank_spacing_raises():
+    # base letters are 4 primary ranks apart: 3 '<' steps off one reset
+    # fit between b and c, a 4th would collide with c's primary
+    r = "&b < q < x < y"
+    assert K("b", rules=r) < K("q", rules=r) < K("x", rules=r) < K("y", rules=r) < K("c", rules=r)
+    with pytest.raises(ValueError, match="<"):
+        K("b", rules="&b < q < x < y < z")
+    # a reset on an earlier target continues that target's chain
+    with pytest.raises(ValueError, match="<"):
+        K("b", rules="&b < q < x & x < y < z")
 
 
 def test_custom_rules_filter_registration():

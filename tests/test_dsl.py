@@ -43,6 +43,26 @@ def test_term_terms_range_exists_ids(spark, corpus):
     assert keys(corpus.where(dsl.parse({"ids": {"values": [2, 5]}}).predicate(ctx))) == [2, 5]
 
 
+def test_int_term_on_string_column_compares_exactly(spark):
+    """An int literal on a string column compares numerically ("3.0" and
+    "1e3" hit) but exactly: above 2**53 a double cast would make
+    9007199254740993 equal "9007199254740992"."""
+    df = spark.createDataFrame(
+        [(1, "9007199254740992"), (2, "9007199254740993"), (3, "3.0"), (4, "1e3"), (5, "3.5")],
+        "doc_id long, s string")
+    ctx = dsl.SearchContext(df, "doc_id")
+
+    def hits(v):
+        return keys(df.where(dsl.parse({"term": {"s": v}}).predicate(ctx)))
+
+    assert hits(9007199254740993) == [2]
+    assert hits(9007199254740992) == [1]
+    assert hits(9007199254740992.0) == [1]
+    assert hits(3) == [3]
+    assert hits(1000) == [4]
+    assert hits(3.5) == [5]
+
+
 def test_prefix_wildcard_regexp_fuzzy(spark, corpus):
     ctx = dsl.SearchContext(corpus, "doc_id")
     assert keys(corpus.where(dsl.parse({"prefix": {"lang": {"value": "e"}}}).predicate(ctx))) == [1, 2]

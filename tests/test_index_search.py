@@ -200,6 +200,58 @@ def test_wand_scans_regions_tying_kth_score():
     assert got == exp
 
 
+def test_wand_decodes_only_visited_regions(monkeypatch):
+    """WAND decodes lazily, one ``decode_blocks`` call per visited region
+    covering that region's not-yet-decoded blocks: a block lying only in
+    regions past the stop is never decoded, and no block twice."""
+    from elasticsearch_spark.operators import topk
+    from elasticsearch_spark.operators.postings import encode_postings_blocks
+
+    # term a: docs 1000..1299 (blocks first at 1000, 1128, 1256), tf 1 but
+    # 50 at doc 1005; term b: docs 1130 and 1260 (one block)
+    a_ids = np.arange(1000, 1300, dtype=np.int64)
+    a_tfs = np.where(a_ids == 1005, 50, 1)
+    ids = np.r_[a_ids, 1130, 1260]
+    tfs = np.r_[a_tfs, 1, 1].astype(np.int64)
+    codes = np.r_[np.zeros(300, dtype=np.int64), 1, 1]
+    flat_pos = np.concatenate([np.arange(t) for t in tfs])
+    post = encode_postings_blocks(
+        np.array(["a", "b"], dtype=object), codes, ids, tfs,
+        np.full(len(ids), 10, dtype=np.int64), 0, flat_pos).to_pandas()
+    assert list(post["first_doc_id"]) == [1000, 1128, 1256, 1130]
+    norm_ids = np.unique(ids)
+    norm_ql = np.full(len(norm_ids), 10, dtype=np.int64)
+    weights = {"a": (1.0, 300), "b": (1.0, 2)}
+
+    arrays = topk._score_segment_arrays(post, weights, norm_ids, norm_ql, 10.0, 1.2, 0.75, None)
+    calls = []
+    real = topk.decode_blocks
+
+    def recording(first_doc_id, *rest):
+        calls.append([int(x) for x in first_doc_id])
+        return real(first_doc_id, *rest)
+
+    monkeypatch.setattr(topk, "decode_blocks", recording)
+
+    def check(k):
+        calls.clear()
+        wand = topk._wand_segment(post, weights, norm_ids, norm_ql, 10.0, 1.2, 0.75, k, None)
+        naive = topk._topk_from_arrays(*arrays, k, 1)
+        got = sorted(zip(wand["doc_id"], wand["score"]), key=lambda t: (-t[1], t[0]))
+        exp = sorted(zip(naive["doc_id"], naive["score"]), key=lambda t: (-t[1], t[0]))
+        assert got == exp
+        flat = [f for c in calls for f in c]
+        assert len(flat) == len(set(flat))  # no block decoded twice
+        return calls
+
+    # k=1: doc 1005's score beats every other region's bound — only the
+    # first block of a is ever decoded
+    assert check(1) == [[1000]]
+    # k=3: the region at 1130 decodes both of its blocks in one call; the
+    # region at 1128 lies past the stop, its one block already decoded
+    assert check(3) == [[1000], [1128, 1130], [1256]]
+
+
 def test_rebuild_with_changed_config_refuses(spark, tmp_path):
     """Rebuilding an existing index with a different analyzer /
     num_partitions / index_sort refuses loudly: the per-partition resume

@@ -229,7 +229,8 @@ def test_numeric_vs_string_literal_kinds(spark):
     docs = spark.createDataFrame(
         [(1, "3.0", 3.0), (2, "3", 3.5), (3, "3.5", 4.0),
          (4, "abc", None), (5, "1e3", 1000.0), (6, "true", 2.0),
-         (7, "1", 5.0)],
+         (7, "1", 5.0), (8, "9007199254740992", None),
+         (9, "9007199254740993", None)],
         "doc_id long, sval string, dval double")
     stored = [
         ("f3_s", {"term": {"sval": 3.0}}),     # float lit on string col
@@ -243,6 +244,9 @@ def test_numeric_vs_string_literal_kinds(spark):
         ("s1e3_d", {"term": {"dval": "1e3"}}),   # non-canonical numeric
         ("s300_d", {"term": {"dval": "3.00"}}),  # string literals
         ("s1000_d", {"term": {"dval": "1000"}}),
+        # above 2**53 a double cast conflates neighbours: exact compare
+        ("ibig_s", {"term": {"sval": 9007199254740993}}),
+        ("fbig_s", {"term": {"sval": 9007199254740992.0}}),
     ]
     legacy = _pairs(percolate(docs, stored, prune=False))
     pruned = _pairs(percolate(docs, stored, prune=True))
@@ -258,6 +262,8 @@ def test_numeric_vs_string_literal_kinds(spark):
     assert {d for q, d in pruned if q == "s1e3_d"} == {5}
     assert {d for q, d in pruned if q == "s300_d"} == {1}
     assert {d for q, d in pruned if q == "s1000_d"} == {5}
+    assert {d for q, d in pruned if q == "ibig_s"} == {9}
+    assert {d for q, d in pruned if q == "fbig_s"} == {8}
 
 
 def test_qterms_broadcast_size_gate(spark, corpus, monkeypatch):

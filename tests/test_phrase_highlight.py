@@ -158,50 +158,58 @@ def test_highlight_fragments_scored_by_match_count(spark):
     assert frags[1].count("<em>") == 1
 
 
-def test_positionless_index_probe_and_fallback(spark, tmp_path):
-    """Stripping positions from a segment must be detected DRIVER-side from
-    the parquet footers: phrase falls back to text re-analysis (same hits),
-    phrase_prefix/intervals raise a clear error instead of an executor
-    traceback (the old except-LookupError around a lazy plan was dead code)."""
+def test_missing_positions_fail_loudly(spark, tmp_path):
+    """Positions are part of the postings format: a segment whose
+    ``pos_bytes`` were stripped is corrupt, and every positional query and
+    the merge raise an error naming position data — never a silent empty
+    result or a merged segment without positions."""
+    import os
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from elasticsearch_spark.operators.phrase import (
-        index_has_positions, search_intervals, search_phrase_prefix)
-    from elasticsearch_spark.operators.topk import _POS_PROBE_CACHE
+    from elasticsearch_spark.operators.intervals import search_intervals_source
+    from elasticsearch_spark.operators.merge import merge_index
+    from elasticsearch_spark.operators.phrase import search_intervals, search_phrase_prefix
+    from elasticsearch_spark.operators.spans import search_spans
     from elasticsearch_spark.sources import index_store as store
 
     idx = str(tmp_path / "noposidx")
-    rows = [
-        ("p1", "alpha beta gamma", "en"),
-        ("p2", "beta alpha gamma", "en"),
-        ("p3", "alpha words beta", "en"),
-    ]
+    rows = [(f"p{i}", text, "en") for i, text in enumerate(
+        ["alpha beta gamma", "beta alpha gamma", "alpha words beta",
+         "alpha beta", "gamma alpha beta", "beta beta alpha"])]
     df = spark.createDataFrame(rows, "url string, text string, lang string").withColumn(
         "warc_ts", F.lit("2024-01-01").cast("timestamp"))
-    build_index(spark, df, idx, num_partitions=1)
-    assert index_has_positions(idx)
-    assert {r["url"] for r in search_phrase(spark, idx, "alpha beta").collect()} == {"p1"}
+    build_index(spark, df, idx, num_partitions=2)
+    segs = store.list_segs(idx)
+    assert len(segs) == 2
+    queries = {
+        "match_phrase": lambda: search_phrase(spark, idx, "alpha beta"),
+        "match_phrase_prefix": lambda: search_phrase_prefix(spark, idx, "alpha be"),
+        "intervals": lambda: search_intervals(spark, idx, "alpha beta"),
+        "intervals_source": lambda: search_intervals_source(
+            spark, idx, {"match": {"query": "alpha beta", "ordered": True}}),
+        "span_near": lambda: search_spans(spark, idx, {"span_near": {
+            "clauses": [{"span_term": {"text": "alpha"}}, {"span_term": {"text": "beta"}}],
+            "slop": 0, "in_order": True}}),
+    }
+    for name, q in queries.items():
+        assert q().count() > 0, name
 
-    # strip positions from every segment (legacy/position-less source)
-    for s in store.list_segs(idx):
-        import os as _os
-        p = _os.path.join(store.seg_dir(idx, s), "postings.parquet")
+    for s in segs:
+        p = os.path.join(store.seg_dir(idx, s), "postings.parquet")
         t = pq.read_table(p)
         t = t.set_column(
             t.column_names.index("pos_bytes"), "pos_bytes",
             pa.array([b""] * t.num_rows, type=pa.binary()))
         pq.write_table(t, p)
-    _POS_PROBE_CACHE.clear()
 
-    assert not index_has_positions(idx)
-    got = {r["url"] for r in search_phrase(spark, idx, "alpha beta").collect()}
-    assert got == {"p1"}  # fallback re-analyzes stored text, same answer
-    with pytest.raises(ValueError, match="position data"):
-        search_phrase_prefix(spark, idx, "alpha be")
-    with pytest.raises(ValueError, match="position data"):
-        search_intervals(spark, idx, "alpha beta")
-    _POS_PROBE_CACHE.clear()
+    for name, q in queries.items():
+        with pytest.raises(Exception, match="position data"):
+            q().collect()
+    with pytest.raises(Exception, match="position data"):
+        merge_index(spark, idx)
+    assert store.list_segs(idx) == segs  # the failed merge committed nothing
 
 
 def test_highlight_escapes_regex_and_sql_metacharacters(spark):

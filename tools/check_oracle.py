@@ -39,6 +39,10 @@ def norm(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> int:
     only = set(sys.argv[1:])
+    unknown = sorted(only - set(QUERIES))
+    if unknown:
+        print(f"unknown registry entries: {unknown}")
+        return 1
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
