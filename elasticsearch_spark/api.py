@@ -29,6 +29,7 @@ import itertools
 import os
 import re
 import shutil
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +41,7 @@ from .operators.phrase import highlight as highlight_fn
 from .operators.postings import build_index
 from .operators.suggest import explain as explain_fn
 from .operators.suggest import term_suggest
-from .operators.topk import search_topk
+from .operators.topk import IndexReader, search_topk
 from .plans import aggs as aggs_mod
 from .plans import dsl
 from .sources import index_store as store
@@ -140,6 +141,8 @@ class Engine:
         self._pits: dict[str, tuple[str, list[int]]] = {}
         self._scrolls: dict[str, dict] = {}  # scroll_id → pinned cursor state
         self._seq = itertools.count(1)  # monotonic ids (PITs, ad-hoc names)
+        self._readers: dict[str, IndexReader] = {}  # index dir → open reader
+        self._readers_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
         self._load_stored_scripts()  # re-register {"id": ...} script refs
         self._apply_cluster_settings(self.get_cluster_settings())
@@ -276,6 +279,18 @@ class Engine:
 
             shutil.rmtree(st.get("pin_dir", ""), ignore_errors=True)
         return {"succeeded": st is not None}
+
+    def _reader(self, index: str) -> IndexReader:
+        """The open reader of a concrete index, kept across searches and
+        reopened when the index's commit state on disk changed (any write,
+        from this or another process — see ``IndexReader``)."""
+        d = self._dir(index)
+        state = store.commit_state(d)
+        with self._readers_lock:
+            r = self._readers.get(d)
+            if r is None or r.state != state:
+                r = self._readers[d] = IndexReader(self.spark, d, state)
+        return r
 
     def _dir(self, index: str) -> str:
         if ":" in index:  # cluster-qualified (CCS) → the remote's storage
@@ -1321,8 +1336,11 @@ class Engine:
         that routing, ~P× less scan work.
 
         `match`-family queries at the TOP level of the body run through the
-        inverted index (postings + block-max WAND); compound/filter bodies
-        run through the DSL compiler over the live docs view.
+        inverted index (postings + block-max WAND) with this engine's open
+        reader of the index (``_reader``: meta, segments and term stats on
+        the driver); the hits frame is one Spark job — the segment tasks
+        score, attach the fetch fields and the collect merges. Compound/
+        filter bodies run through the DSL compiler over the live docs view.
 
         ``index`` may be an alias: multi-index aliases fan out through
         ``search_multi`` (cross-index semantics)."""
@@ -1441,11 +1459,10 @@ class Engine:
         (kind, spec), = q.items()
 
         hits: DataFrame
-        meta_sort = None
-        try:
-            meta_sort = store.IndexMeta.load(d).index_sort
-        except FileNotFoundError:
-            pass
+        # the index fast paths below need the reader; with no index meta
+        # only the DSL path can answer (an index path raises, re-opening it)
+        reader = self._reader(index) if os.path.exists(store.meta_path(d)) else None
+        meta_sort = reader.meta.index_sort if reader else None
         if (
             kind == "match_all"
             and meta_sort
@@ -1468,7 +1485,7 @@ class Engine:
                 # reads only its first k live rows
                 from .operators.topk import sorted_scan
 
-                hits = sorted_scan(self.spark, d, k=size, routing=routing)
+                hits = sorted_scan(self.spark, d, k=size, routing=routing, reader=reader)
                 out = {"hits": hits}
                 if "aggs" in body:
                     out["aggregations"] = aggs_mod.aggregate(_apply_runtime(self._docs_view(index)), body["aggs"])
@@ -1483,16 +1500,16 @@ class Engine:
             (fld, mspec), = spec.items()
             text = mspec["query"] if isinstance(mspec, dict) else mspec
             op = mspec.get("operator", "or") if isinstance(mspec, dict) else "or"
-            meta = store.IndexMeta.load(d)
-            terms = analysis.analyze(text, meta.analyzer)
+            reader = reader or self._reader(index)
+            terms = analysis.analyze(text, reader.meta.analyzer)
             hits = search_topk(
                 self.spark, d, terms, k=size, operator=op, mode="wand",
-                pit_segs=pit_segs, routing=routing,
+                reader=reader, pit_segs=pit_segs, routing=routing,
             )
             if body.get("highlight"):
                 docs_text = self._docs_view(index).select("url", "text")
                 hl_terms = self._highlight_terms(
-                    body["highlight"], terms, meta.analyzer)
+                    body["highlight"], terms, reader.meta.analyzer)
                 hits = highlight_fn(
                     hits.join(docs_text, "url"), hl_terms,
                     **self._highlight_opts(body["highlight"]),
@@ -1513,7 +1530,7 @@ class Engine:
             # spans exist only on the index path — implement `from` here
             # (the other fast paths fall back to the DSL path for it)
             frm = int(body.get("from", 0) or 0)
-            hits = search_spans(self.spark, d, q, k=size + frm, routing=routing)
+            hits = search_spans(reader or self._reader(index), q, k=size + frm, routing=routing)
             if frm:
                 from pyspark.sql import Window as _W
 
@@ -1543,6 +1560,7 @@ class Engine:
                 search_phrase_prefix,
             )
 
+            reader = reader or self._reader(index)
             if kind == "intervals":
                 (fld, ispec), = spec.items()
                 plain_match = (
@@ -1552,7 +1570,7 @@ class Engine:
                 if plain_match:
                     m = ispec["match"]
                     hits = search_intervals(
-                        self.spark, d, m["query"], ordered=m.get("ordered", False),
+                        reader, m["query"], ordered=m.get("ordered", False),
                         max_gaps=m.get("max_gaps", -1), k=size, routing=routing,
                     )
                 else:
@@ -1561,13 +1579,13 @@ class Engine:
                     from .operators.intervals import search_intervals_source
 
                     hits = search_intervals_source(
-                        self.spark, d, ispec, k=size, routing=routing)
+                        reader, ispec, k=size, routing=routing)
             else:
                 (fld, mspec), = spec.items()
                 text = mspec["query"] if isinstance(mspec, dict) else mspec
                 slop = mspec.get("slop", 0) if isinstance(mspec, dict) else 0
                 fn = search_phrase if kind == "match_phrase" else search_phrase_prefix
-                hits = fn(self.spark, d, text, k=size, slop=slop, routing=routing)
+                hits = fn(reader, text, k=size, slop=slop, routing=routing)
         else:
             # runtime mappings are applied INSIDE dsl.search (applying
             # them here too would double-apply shadowing scripts)
@@ -1812,7 +1830,8 @@ class Engine:
 
     def msearch(self, searches: list[tuple[str, dict]]) -> list[dict]:
         """POST /_msearch: a batch of (index, body) searches. Each returns
-        lazily-evaluated frames, so Spark can schedule them concurrently."""
+        lazily-evaluated frames: an index search's frame is one Spark job
+        (query + in-task fetch) that runs when the caller collects it."""
         return [self.search(ix, body) for ix, body in searches]
 
     def search_multi(self, indices: list[str], body: dict) -> DataFrame:

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import analysis
@@ -172,15 +172,15 @@ _FILTER_KINDS = (
 )
 
 
-def _expand_dict(spark: SparkSession, index_dir: str, pred) -> list[str]:
-    """Deterministic capped expansion over the GLOBAL term dictionary
-    (term-sorted parquet — predicate pushes to row groups)."""
-    df = spark.read.parquet(store.term_stats_path(index_dir))
+def _expand_dict(reader: IndexReader, pred) -> list[str]:
+    """Deterministic capped expansion of a wildcard, regexp or fuzzy leaf:
+    a Spark scan of the GLOBAL term dictionary in term order."""
+    df = reader.spark.read.parquet(store.term_stats_path(reader.index_dir))
     rows = df.where(pred(F.col("term"))).orderBy("term").limit(MAX_EXPANSIONS).collect()
     return [r["term"] for r in rows]
 
 
-def compile_source(spark: SparkSession, index_dir: str, src: dict, analyzer: str) -> dict:
+def compile_source(reader: IndexReader, src: dict) -> dict:
     """dict AST → eval tree: leaves carry concrete term lists; combinators
     carry children + params; filters attach a compiled reference tree."""
     (kind, body), = src.items()
@@ -197,12 +197,12 @@ def compile_source(spark: SparkSession, index_dir: str, src: dict, analyzer: str
         elif fkind not in _FILTER_KINDS:
             raise ValueError(f"unknown intervals filter {fkind!r}")
         else:
-            flt = (fkind, compile_source(spark, index_dir, fsrc, analyzer))
+            flt = (fkind, compile_source(reader, fsrc))
     if kind == "match":
         # per-leaf analyzer override (IntervalsSourceProvider.Match.analyzer,
         # search.query/70_intervals.yml); use_field (positions from a second
         # indexed field) is out of the one-positional-field doc model
-        words = analysis.analyze(body["query"], body.get("analyzer", analyzer))
+        words = analysis.analyze(body["query"], body.get("analyzer", reader.meta.analyzer))
         node = {
             "op": "all_of",
             "children": [{"op": "leaf", "terms": [w]} for w in words],
@@ -211,14 +211,14 @@ def compile_source(spark: SparkSession, index_dir: str, src: dict, analyzer: str
         }
     elif kind == "prefix":
         p = body["prefix"] if isinstance(body, dict) else body
-        node = {"op": "leaf", "terms": _expand_dict(spark, index_dir, lambda c: c.startswith(p))}
+        node = {"op": "leaf", "terms": reader.prefix_terms(p, MAX_EXPANSIONS)}
     elif kind == "wildcard":
         pat = body["pattern"]
         like = pat.replace("*", "%").replace("?", "_")
-        node = {"op": "leaf", "terms": _expand_dict(spark, index_dir, lambda c: c.like(like))}
+        node = {"op": "leaf", "terms": _expand_dict(reader, lambda c: c.like(like))}
     elif kind == "regexp":
         pat = body["pattern"]
-        node = {"op": "leaf", "terms": _expand_dict(spark, index_dir, lambda c: c.rlike(f"^(?:{pat})$"))}
+        node = {"op": "leaf", "terms": _expand_dict(reader, lambda c: c.rlike(f"^(?:{pat})$"))}
     elif kind == "fuzzy":
         t = body["term"]
         fuzz = int(body.get("fuzziness", 2))
@@ -226,7 +226,7 @@ def compile_source(spark: SparkSession, index_dir: str, src: dict, analyzer: str
         node = {
             "op": "leaf",
             "terms": _expand_dict(
-                spark, index_dir,
+                reader,
                 lambda c: (F.levenshtein(c, F.lit(t)) <= fuzz)
                 & (c.startswith(t[:plen]) if plen else F.lit(True)),
             ),
@@ -235,14 +235,14 @@ def compile_source(spark: SparkSession, index_dir: str, src: dict, analyzer: str
         node = {
             "op": "any_of",
             "children": [
-                compile_source(spark, index_dir, s, analyzer) for s in body["intervals"]
+                compile_source(reader, s) for s in body["intervals"]
             ],
         }
     elif kind == "all_of":
         node = {
             "op": "all_of",
             "children": [
-                compile_source(spark, index_dir, s, analyzer) for s in body["intervals"]
+                compile_source(reader, s) for s in body["intervals"]
             ],
             "ordered": bool(body.get("ordered", False)),
             "max_gaps": int(body.get("max_gaps", -1)),
@@ -434,16 +434,14 @@ def _intervals_segment(tree: dict, weights: dict[str, tuple[float, int]],
 
 
 def search_intervals_source(
-    spark: SparkSession, index_dir: str, source: dict, k: int = 10,
-    routing: str | None = None,
+    reader: IndexReader, source: dict, k: int = 10, routing: str | None = None,
 ) -> DataFrame:
     """intervals query with a full source AST (IntervalsSourceProvider):
     distributed per-segment verify + BM25 ranking over matched terms."""
-    reader = IndexReader(spark, index_dir)
-    tree = compile_source(spark, index_dir, source, reader.meta.analyzer)
+    tree = compile_source(reader, source)
     terms = tree_terms(tree)
     if not terms:
-        return spark.createDataFrame([], HITS_SCHEMA)
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
     weights = reader.term_weights(terms)
     fn = _intervals_segment(tree, weights, reader.meta, k)
-    return search_segments(spark, index_dir, reader.meta, fn, k, routing)
+    return search_segments(reader, fn, k, routing)

@@ -351,8 +351,13 @@ def _doc_terms(docs: DataFrame, key: str, fields: list[str],
         is_arr = dt.startswith("array<")
         elem = dt[6:-1] if is_arr else dt
         if elem != "string":
+            # float/double columns demote num literals past the type's
+            # exact integer range too: the compile path rounds them to the
+            # column type (2**53 + 1 == 2**53 on a double), the canonical
+            # integer forms here would not
+            kinds = ["raw", "num"] if elem in ("float", "double") else ["raw"]
             canon_lit = _CANON_LITERAL.get(elem, _CANON_INTEGER)
-            unsound.append((F.col("field") == f) & (F.col("kind") == "raw")
+            unsound.append((F.col("field") == f) & F.col("kind").isin(kinds)
                            & ~F.col("term").rlike(canon_lit))
         if is_arr:
             raws = F.col(f).cast("array<string>")

@@ -38,7 +38,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import analysis
@@ -228,8 +228,7 @@ def _positional_segment(
 # --------------------------------------------------------------------------
 
 def search_phrase(
-    spark: SparkSession,
-    index_dir: str,
+    reader: IndexReader,
     phrase: str,
     k: int = 10,
     slop: int = 0,
@@ -239,22 +238,20 @@ def search_phrase(
     position-chain verify + BM25 top-k (score DESC, doc_id ASC). Exact —
     every verified doc competes, not a candidate sample. ``routing`` scans
     only the value's shard (``query_segments``)."""
-    reader = IndexReader(spark, index_dir)
     meta = reader.meta
     terms = analysis.analyze(phrase, meta.analyzer)
     if not terms:
-        return spark.createDataFrame([], HITS_SCHEMA)
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
     weights = reader.term_weights(terms)
     if any(t not in weights for t in terms):
         # conjunction with a zero-df term matches nothing
-        return spark.createDataFrame([], HITS_SCHEMA)
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
     fn = _positional_segment(weights, meta, k, terms, [], True, slop)
-    return search_segments(spark, index_dir, meta, fn, k, routing)
+    return search_segments(reader, fn, k, routing)
 
 
 def search_phrase_prefix(
-    spark: SparkSession,
-    index_dir: str,
+    reader: IndexReader,
     phrase: str,
     k: int = 10,
     slop: int = 0,
@@ -264,38 +261,27 @@ def search_phrase_prefix(
     """match_phrase_prefix (``MatchPhrasePrefixQueryBuilder.java``): the
     last analyzed token is a PREFIX expanded against the global term
     dictionary (first ``max_expansions`` in term order — the reference's
-    expansion cap), and the phrase chain must end at one of the expansions'
-    positions (MultiPhraseQuery position union). Scored as the BM25 sum of
-    the fixed terms plus every matched expansion term."""
-    reader = IndexReader(spark, index_dir)
+    expansion cap, so every segment task sees the same deterministic set),
+    and the phrase chain must end at one of the expansions' positions
+    (MultiPhraseQuery position union). Scored as the BM25 sum of the fixed
+    terms plus every matched expansion term."""
     meta = reader.meta
     terms = analysis.analyze(phrase, meta.analyzer)
     if not terms:
-        return spark.createDataFrame([], HITS_SCHEMA)
-    fixed, prefix = terms[:-1], terms[-1]
-    # prefix expansion over the GLOBAL term dictionary (the stats table is
-    # term-sorted parquet — range predicate pushes to row groups); capped
-    # in term order so every segment task sees the same deterministic set
-    exp_rows = (
-        spark.read.parquet(store.term_stats_path(index_dir))
-        .where(F.col("term").startswith(prefix))
-        .orderBy("term")
-        .limit(max_expansions)
-        .collect()
-    )
-    expansions = [r["term"] for r in exp_rows]
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
+    fixed = terms[:-1]
+    expansions = reader.prefix_terms(terms[-1], max_expansions)
     if not expansions:
-        return spark.createDataFrame([], HITS_SCHEMA)
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
     weights = reader.term_weights(list(dict.fromkeys(fixed)) + expansions)
     if any(t not in weights for t in fixed):
-        return spark.createDataFrame([], HITS_SCHEMA)
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
     fn = _positional_segment(weights, meta, k, fixed, expansions, True, slop)
-    return search_segments(spark, index_dir, meta, fn, k, routing)
+    return search_segments(reader, fn, k, routing)
 
 
 def search_intervals(
-    spark: SparkSession,
-    index_dir: str,
+    reader: IndexReader,
     text: str,
     ordered: bool = True,
     max_gaps: int = -1,
@@ -306,16 +292,15 @@ def search_intervals(
     an interval containing all terms, in order when ``ordered``, total
     internal gap ≤ max_gaps (-1 = unbounded). Distributed per-segment
     verify, BM25-ranked like phrase."""
-    reader = IndexReader(spark, index_dir)
     meta = reader.meta
     terms = analysis.analyze(text, meta.analyzer)
     if not terms:
-        return spark.createDataFrame([], HITS_SCHEMA)
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
     weights = reader.term_weights(terms)
     if any(t not in weights for t in terms):
-        return spark.createDataFrame([], HITS_SCHEMA)
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
     fn = _positional_segment(weights, meta, k, terms, [], ordered, max_gaps)
-    return search_segments(spark, index_dir, meta, fn, k, routing)
+    return search_segments(reader, fn, k, routing)
 
 
 # --------------------------------------------------------------------------

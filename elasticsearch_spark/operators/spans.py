@@ -45,7 +45,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources import index_store as store
@@ -311,27 +311,26 @@ def _span_segment(node: SpanNode, weights: dict[str, tuple[float, int]],
     return per_segment
 
 
-def dict_expander(spark: SparkSession, index_dir: str, max_expansions: int = 50):
+def dict_expander(reader: IndexReader, max_expansions: int = 50):
     """Multi-term → concrete terms via the global term dictionary (term
-    order, capped — the reference's rewrite cap)."""
+    order, capped — the reference's rewrite cap). ``prefix`` is a range
+    read on the reader; wildcard, fuzzy and regexp scan the dictionary
+    with Spark."""
     def expand(kind: str, spec) -> list[str]:
-        terms = spark.read.parquet(store.term_stats_path(index_dir)).select("term")
+        if kind not in ("prefix", "wildcard", "fuzzy", "regexp"):
+            raise ValueError(f"span_multi cannot wrap: {kind}")
+        v = spec["value"] if isinstance(spec, dict) else spec
         if kind == "prefix":
-            v = spec["value"] if isinstance(spec, dict) else spec
-            cond = F.col("term").startswith(v)
-        elif kind == "wildcard":
-            v = spec["value"] if isinstance(spec, dict) else spec
+            return reader.prefix_terms(v, max_expansions)
+        if kind == "wildcard":
             rx = "^" + v.replace(".", "\\.").replace("*", ".*").replace("?", ".") + "$"
             cond = F.col("term").rlike(rx)
         elif kind == "fuzzy":
-            v = spec["value"] if isinstance(spec, dict) else spec
             fz = spec.get("fuzziness", 2) if isinstance(spec, dict) else 2
             cond = F.levenshtein("term", F.lit(v)) <= int(fz)
-        elif kind == "regexp":
-            v = spec["value"] if isinstance(spec, dict) else spec
-            cond = F.col("term").rlike("^" + v + "$")
         else:
-            raise ValueError(f"span_multi cannot wrap: {kind}")
+            cond = F.col("term").rlike("^" + v + "$")
+        terms = reader.spark.read.parquet(store.term_stats_path(reader.index_dir)).select("term")
         return [r["term"] for r in terms.where(cond).orderBy("term").limit(max_expansions).collect()]
 
     def expand_field(kind: str, ms) -> list[str]:
@@ -344,14 +343,13 @@ def dict_expander(spark: SparkSession, index_dir: str, max_expansions: int = 50)
     return expand_field
 
 
-def search_spans(spark: SparkSession, index_dir: str, span_body: dict, k: int = 10,
+def search_spans(reader: IndexReader, span_body: dict, k: int = 10,
                  routing: str | None = None) -> DataFrame:
     """Distributed span query → (doc_id, url, score) top-k."""
-    reader = IndexReader(spark, index_dir)
-    node = parse_span(span_body, dict_expander(spark, index_dir))
+    node = parse_span(span_body, dict_expander(reader))
     terms = sorted(leaf_terms(node))
     if not terms:
-        return spark.createDataFrame([], HITS_SCHEMA)
+        return reader.spark.createDataFrame([], HITS_SCHEMA)
     weights = reader.term_weights(terms)
     fn = _span_segment(node, weights, reader.meta, k)
-    return search_segments(spark, index_dir, reader.meta, fn, k, routing)
+    return search_segments(reader, fn, k, routing)

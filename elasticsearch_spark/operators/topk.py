@@ -29,14 +29,19 @@ intervals, spans and the index-sorted scan:
 - inside a task, ``Segment`` is the only reader of the segment files: the
   term-filtered postings slice, the live-doc mask and the SmallFloat doc
   lengths (read only when a doc must be scored);
-- each task emits ≤k candidates, and ``merge_fetch`` is the coordinator's
-  k-way merge ``orderBy(score desc, doc_id asc).limit(k)``
+- each task emits its ≤k candidates with the fetch fields already
+  attached (``Segment.fetch``: a ``doc_id IN (...)`` read of the task's
+  own docs.parquet — the fetch phase, ``FetchPhase.java``, run where the
+  query phase ran), and ``top_hits`` is the coordinator's k-way merge
+  ``orderBy(score desc, doc_id asc).limit(k)`` over ≤k·segments rows
   (``SearchPhaseController.java:186-205``, the reference's deterministic
-  tie-break) plus the broadcast fetch join (``FetchSearchPhase.java``).
+  tie-break). There is no fetch join: a search is ONE Spark job, the
+  segment-task wave, whose collect is the merge.
 
-df/avgdl are read from the build-time stats tables and shipped as
-broadcast locals — the dfs-phase determinism mechanism
-(``DfsPhase.java:31-81``): scores never depend on partitioning.
+df/avgdl come from the build-time stats tables through the driver-side
+``IndexReader`` (pyarrow, no Spark job) and ship to the tasks as closure
+locals — the dfs-phase determinism mechanism (``DfsPhase.java:31-81``):
+scores never depend on partitioning.
 """
 
 from __future__ import annotations
@@ -44,11 +49,13 @@ from __future__ import annotations
 import functools
 import heapq
 import os
+import threading
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions import bm25
 from ..sources import index_store as store
@@ -56,6 +63,9 @@ from .codec import decode_blocks
 
 CAND_SCHEMA = "doc_id long, score double, n_terms_matched int"
 MCAND_SCHEMA = "qid string, doc_id long, score double, n_terms_matched int"
+HITS_SCHEMA = "doc_id long, url string, score double"
+FETCH_FIELDS = ("url", "lang", "warc_ts")  # the match path's fetched fields
+_MAX_CACHED_TERMS = 1 << 20  # per-reader term-stats cache entries
 
 _BLOCK_COLS = ["term", "first_doc_id", "last_doc_id", "n", "max_tf", "min_ql", "ids_bytes", "tf_bytes"]
 _POSITION_COLS = ["term", "first_doc_id", "n", "ids_bytes", "tf_bytes", "pos_bytes"]
@@ -156,6 +166,18 @@ class Segment:
         yield from pq.ParquetFile(self.docs_path).iter_batches(
             batch_size=batch_size, columns=columns
         )
+
+    def fetch(self, hits: pd.DataFrame, fields) -> pd.DataFrame:
+        """``hits`` (this segment's ≤k candidates) with the stored
+        ``fields`` of their docs attached: ``doc_id, *fields, *rest``."""
+        import pyarrow.parquet as pq
+
+        docs = pq.read_table(
+            self.docs_path,
+            columns=["doc_id", *fields],
+            filters=[("doc_id", "in", hits["doc_id"].unique().tolist())],
+        ).to_pandas()
+        return docs.merge(hits, on="doc_id")
 
 
 def _score_segment_arrays(
@@ -370,59 +392,164 @@ def _bm25_segment(
 
 
 class IndexReader:
-    """Open index handle: the index meta plus a per-term stats cache — the
-    DfsPhase's per-query stats round-trip. At web scale the term
-    dictionary is 10^8-10^9 rows, so the reader never collects the whole
-    table; each lookup pulls only the terms not seen yet (term IN (...)
-    pushes to the term-sorted parquet row groups), and hot terms amortize
-    to zero across queries of a long-lived reader."""
+    """Open index handle: the index meta, the live segment list and a
+    per-term stats cache — the DfsPhase's per-query stats round-trip, on the
+    driver with no Spark job. ``Engine`` owns one reader per index and every
+    index search path (match, msearch, phrase, phrase_prefix, intervals,
+    spans, the sorted scan) takes it.
 
-    def __init__(self, spark: SparkSession, index_dir: str):
+    Term stats and prefix expansions are pyarrow reads of the term-sorted
+    ``stats/term_stats.parquet`` (``term IN (...)`` and a term range push to
+    its row groups); each lookup reads only the terms not seen yet, so hot
+    terms amortize to zero across the queries of a long-lived reader. At
+    web scale the term dictionary is 10^8-10^9 rows; it is never collected
+    whole.
+
+    A reader is a snapshot of one commit: ``state``
+    (``index_store.commit_state``) is its invalidation key, and
+    ``Engine._reader`` reopens the reader when the state on disk differs —
+    so a bulk, delete or merge from this process, a second ``Engine`` or
+    the streaming ingest is seen by the next search. Safe to share between
+    threads (the cache fill is locked)."""
+
+    def __init__(self, spark: SparkSession, index_dir: str, state: store.CommitState | None = None):
         self.spark = spark
         self.index_dir = index_dir
-        self.meta = store.IndexMeta.load(index_dir)
-        self._stats: dict[str, tuple[int, int] | None] = {}
+        self.state = state or store.commit_state(index_dir)
+        self.meta = store.IndexMeta.loads(self.state.meta)
+        self.segs = list(self.state.segs)
+        self._df: dict[str, int | None] = {}
+        self._lock = threading.Lock()
 
-    @functools.cached_property
-    def _stats_df(self) -> DataFrame:
-        return self.spark.read.parquet(store.term_stats_path(self.index_dir))
+    def _terms_table(self, filters, columns):
+        import pyarrow.parquet as pq
+
+        path = store.term_stats_path(self.index_dir)
+        if not os.path.exists(path):  # no segment committed yet
+            return None
+        return pq.read_table(path, columns=columns, filters=filters)
 
     def term_weights(self, terms: list[str]) -> dict[str, tuple[float, int]]:
         """term -> (idf·(k1+1) weight, df); zero-df terms drop out."""
-        missing = [t for t in dict.fromkeys(terms) if t not in self._stats]
-        if missing:
-            rows = self._stats_df.where(F.col("term").isin(missing)).collect()
-            found = {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
-            for t in missing:
-                self._stats[t] = found.get(t)  # None = zero-df, cached too
-        out = {}
-        for t in terms:
-            st = self._stats.get(t)
-            if st is not None:
-                df = st[0]
-                w = float(bm25.idf(np.float64(df), self.meta.doc_count) * (self.meta.k1 + 1.0))
-                out[t] = (w, df)
-        return out
+        with self._lock:
+            missing = [t for t in dict.fromkeys(terms) if t not in self._df]
+            if missing:
+                if len(self._df) > _MAX_CACHED_TERMS:
+                    self._df.clear()  # a long-lived reader's cache stays bounded
+                tab = self._terms_table([("term", "in", missing)], ["term", "df"])
+                found = {} if tab is None else dict(
+                    zip(tab["term"].to_pylist(), tab["df"].to_pylist()))
+                for t in missing:
+                    self._df[t] = found.get(t)  # None = zero-df, cached too
+            dfs = {t: self._df[t] for t in terms}
+        m = self.meta
+        return {
+            t: (float(bm25.idf(np.float64(df), m.doc_count) * (m.k1 + 1.0)), df)
+            for t, df in dfs.items()
+            if df is not None
+        }
+
+    def prefix_terms(self, prefix: str, max_expansions: int) -> list[str]:
+        """The first ``max_expansions`` dictionary terms (term order)
+        starting with ``prefix``: the rewrite of a prefix leaf
+        (match_phrase_prefix, intervals ``prefix``, span_multi ``prefix``).
+        A term range, so it pushes to the term-sorted row groups."""
+        filters = [("term", ">=", prefix)]
+        end = _prefix_end(prefix)
+        if end is not None:
+            filters.append(("term", "<", end))
+        tab = self._terms_table(filters, ["term"])
+        return [] if tab is None else sorted(tab["term"].to_pylist())[:max_expansions]
+
+    def docs_schema(self, columns) -> StructType:
+        """Spark types of stored ``columns``, from a segment's docs.parquet
+        footer (read on the driver, no schema-inference job) the way Spark's
+        parquet reader types them (tz-naive timestamps → timestamp_ntz)."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_type
+
+        if not self.segs:
+            return StructType([StructField(c, StringType()) for c in columns])
+        sch = pq.read_schema(Segment(self.index_dir, self.segs[0]).docs_path)
+        return StructType([
+            StructField(c, from_arrow_type(sch.field(c).type, prefer_timestamp_ntz=True))
+            for c in columns
+        ])
 
     def close(self) -> None:
-        self._stats.clear()
+        self._df.clear()
 
 
-def routing_shard(spark: SparkSession, value: str, num_shards: int) -> int:
+def _prefix_end(prefix: str) -> str | None:
+    """The smallest string above every string that starts with ``prefix``
+    (None: no upper bound). Code-point order is UTF-8 byte order, the
+    order parquet statistics and filters compare in."""
+    for i in range(len(prefix) - 1, -1, -1):
+        c = ord(prefix[i]) + 1
+        if c == 0xD800:  # surrogates do not occur in UTF-8 text
+            c = 0xE000
+        if c <= 0x10FFFF:
+            return prefix[:i] + chr(c)
+    return None
+
+
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as a signed 64-bit int — what Spark's
+    ``xxhash64`` (seed 42) returns for a string, over its UTF-8 bytes."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed & _M64, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh_round(v[j], int.from_bytes(data[i:i + 8], "little"))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h ^= byte * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
+
+
+def routing_shard(value: str, num_shards: int) -> int:
     """Shard for a routing value (IndexRouting.java's murmur3 analog):
     ``pmod(xxhash64(v), S)`` — identical to the build partition's
-    ``pmod(xxhash64(v), P) % S`` because S divides P. Evaluated by Spark's
-    own ``xxhash64``, the expression the build routes with, so query- and
-    index-time hashing can never drift. The cost is one small Spark job per
-    routed search: ``first()`` on a one-row frame still runs a job."""
-    row = spark.range(1).select(
-        F.pmod(F.xxhash64(F.lit(value)), F.lit(num_shards)).cast("int").alias("s")
-    ).first()
-    return int(row["s"])
+    ``pmod(xxhash64(v), P) % S`` because S divides P. Computed on the
+    driver by ``xxhash64``, which is pinned to Spark's own ``xxhash64`` (the
+    expression the build routes with) by a property test, so query- and
+    index-time hashing cannot drift; a routed search runs no extra job."""
+    return xxhash64(value.encode("utf-8")) % num_shards
 
 
 def routed_segs(
-    spark: SparkSession,
     index_dir: str,
     segs: list[int],
     routing: str,
@@ -436,7 +563,7 @@ def routed_segs(
             "routing requires an index built with num_shards "
             "(the number_of_shards index setting)"
         )
-    shard = routing_shard(spark, routing, meta.num_shards)
+    shard = routing_shard(routing, meta.num_shards)
     return [
         s
         for s in segs
@@ -445,21 +572,21 @@ def routed_segs(
 
 
 def query_segments(
-    spark: SparkSession,
-    index_dir: str,
-    meta: store.IndexMeta,
+    reader: IndexReader,
     pit_segs: list[int] | None = None,
     routing: str | None = None,
 ) -> list[int]:
     """Segments a query scans. ``pit_segs`` is a point-in-time reader's
     pinned set (segments are immutable, so pinning the set at open time
-    gives repeatable reads across concurrent bulks); ``routing``
-    (``?routing=``, IndexRouting.java) keeps only the value's shard plus
-    unknown-shard segments — query cost drops from O(segments) to
-    O(segments/P), the shard-pruning the reference gets by sending the
-    search to one shard."""
-    segs = pit_segs if pit_segs is not None else store.list_segs(index_dir)
-    return segs if routing is None else routed_segs(spark, index_dir, segs, routing, meta)
+    gives repeatable reads across concurrent bulks), else the reader's
+    segments; ``routing`` (``?routing=``, IndexRouting.java) keeps only the
+    value's shard plus unknown-shard segments — query cost drops from
+    O(segments) to O(segments/P), the shard-pruning the reference gets by
+    sending the search to one shard."""
+    segs = pit_segs if pit_segs is not None else reader.segs
+    if routing is None:
+        return segs
+    return routed_segs(reader.index_dir, segs, routing, reader.meta)
 
 
 def launch(
@@ -486,53 +613,52 @@ def launch(
     return spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, schema)
 
 
-def fetch_hits(
-    spark: SparkSession,
-    index_dir: str,
-    top: DataFrame,
-    fields=("url", "lang", "warc_ts"),
-    order=(),
+def fetch_wave(
+    reader: IndexReader,
+    segs: list[int],
+    per_segment,
+    fields=(),
+    schema=CAND_SCHEMA,
 ) -> DataFrame:
-    """Fetch phase: ship the tiny global top-k back to the wide store and
-    broadcast-join (the second round-trip of query_then_fetch,
-    FetchSearchPhase.java / FetchPhase.java:62)."""
-    docs = spark.read.parquet(*store.docs_glob(index_dir)).select("doc_id", *fields)
-    return docs.join(F.broadcast(top), "doc_id").orderBy(
-        *order, F.desc("score"), F.asc("doc_id")
+    """Query and fetch phase in one segment-task wave: ``launch`` of
+    ``per_segment`` whose candidates get the stored ``fields`` attached
+    inside the task (``Segment.fetch``). Rows are ``doc_id, *fields,
+    *rest of schema``, the fields typed from the docs.parquet footer."""
+    if not fields:
+        return launch(reader.spark, reader.index_dir, segs, per_segment, schema)
+    cand = StructType.fromDDL(schema)
+    out = StructType(
+        [StructField("doc_id", LongType())]
+        + reader.docs_schema(fields).fields
+        + [f for f in cand.fields if f.name != "doc_id"]
     )
 
+    names = out.names
 
-def merge_fetch(
-    spark: SparkSession,
-    index_dir: str,
-    cands: DataFrame,
-    k: int,
-    fetch: bool = True,
-    fields=("url", "lang", "warc_ts"),
-) -> DataFrame:
-    """Coordinator k-way merge of the per-segment candidates, then fetch."""
-    top = cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    return fetch_hits(spark, index_dir, top, fields) if fetch else top
+    def fetched(seg: Segment) -> pd.DataFrame | None:
+        top = per_segment(seg)
+        return top if top is None or not len(top) else seg.fetch(top, fields)[names]
+
+    return launch(reader.spark, reader.index_dir, segs, fetched, out)
 
 
-HITS_SCHEMA = "doc_id long, url string, score double"
+def top_hits(reader: IndexReader, segs: list[int], per_segment, k: int, fields=()) -> DataFrame:
+    """The coordinator's k-way merge of the per-segment candidates (fetch
+    ``fields`` attached in the tasks): one Spark job when collected."""
+    cands = fetch_wave(reader, segs, per_segment, fields)
+    return cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def search_segments(
-    spark: SparkSession,
-    index_dir: str,
-    meta: store.IndexMeta,
+    reader: IndexReader,
     per_segment,
     k: int,
     routing: str | None = None,
 ) -> DataFrame:
-    """Positional query phase + fetch: ``per_segment`` over the routed
-    segments, merged to the global top-k, fetched as ``HITS_SCHEMA`` rows."""
-    segs = query_segments(spark, index_dir, meta, routing=routing)
-    if not segs:
-        return spark.createDataFrame([], HITS_SCHEMA)
-    cands = launch(spark, index_dir, segs, per_segment)
-    return merge_fetch(spark, index_dir, cands, k, fields=("url",)).drop("n_terms_matched")
+    """Positional query phase + in-task fetch: ``per_segment`` over the
+    routed segments, merged to the global top-k ``HITS_SCHEMA`` rows."""
+    segs = query_segments(reader, routing=routing)
+    return top_hits(reader, segs, per_segment, k, ("url",)).drop("n_terms_matched")
 
 
 def search_topk(
@@ -549,7 +675,8 @@ def search_topk(
     routing: str | None = None,
 ) -> DataFrame:
     """Multi-term BM25 top-k over the index (query-then-fetch lifecycle):
-    the one-query case of the batched per-segment scorer.
+    the one-query case of the batched per-segment scorer. ``fetch``
+    attaches ``FETCH_FIELDS`` inside the segment tasks.
 
     pit_segs / routing: the segment pinning and shard pruning of
     ``query_segments``. Shard-aware tiered merge keeps merged segments
@@ -561,12 +688,11 @@ def search_topk(
     live = [t for t in terms if t in weights]
     msm = len(live) if operator == "and" else int(minimum_should_match or 1)
     if not live or (operator == "and" and len(live) < len(terms)):
-        cands = spark.createDataFrame([], CAND_SCHEMA)
+        segs = []  # nothing can match: an empty wave keeps the frame's schema
     else:
-        segs = query_segments(spark, index_dir, meta, pit_segs, routing)
-        fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k)
-        cands = launch(spark, index_dir, segs, fn)
-    return merge_fetch(spark, index_dir, cands, k, fetch)
+        segs = query_segments(reader, pit_segs, routing)
+    fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k)
+    return top_hits(reader, segs, fn, k, FETCH_FIELDS if fetch else ())
 
 
 def msearch_topk(
@@ -579,8 +705,8 @@ def msearch_topk(
     fetch: bool = False,
 ) -> DataFrame:
     """Batched _msearch at the postings layer: M top-k queries in ONE
-    segment-task wave (one Spark job, not M) — per-query results identical
-    to M search_topk calls, but scheduling overhead and the per-segment
+    segment-task wave (not M) — per-query results identical to M
+    search_topk calls, but scheduling overhead and the per-segment
     postings/norms/tombstone reads are amortized across the batch (the
     reference coordinates _msearch as one round the same way,
     ``TransportMultiSearchAction.java``).
@@ -588,7 +714,8 @@ def msearch_topk(
     queries: {qid: {"terms": [...], "operator": "or"|"and",
     "minimum_should_match": int?}} or a plain list of term-lists
     (qids q0..qN-1). Returns (qid, doc_id, score, n_terms_matched) rows,
-    per-qid top-k, plus fetch columns when fetch=True.
+    per-qid top-k, plus ``FETCH_FIELDS`` (attached in the segment tasks)
+    when fetch=True.
     """
     if isinstance(queries, list):
         queries = {f"q{i}": {"terms": t} for i, t in enumerate(queries)}
@@ -604,17 +731,16 @@ def msearch_topk(
             continue  # conjunctive query with a vocabulary miss: no hits
         msm = len(live) if op == "and" else int(q.get("minimum_should_match") or 1)
         per_q[qid] = (live, msm, mode)
-    if not per_q:
-        return spark.createDataFrame([], MCAND_SCHEMA)
     fn = _bm25_segment(per_q, weights, meta.avgdl, meta.k1, meta.b, k)
-    cands = launch(spark, index_dir, query_segments(spark, index_dir, meta), fn, MCAND_SCHEMA)
+    segs = query_segments(reader) if per_q else []
+    cands = fetch_wave(reader, segs, fn, FETCH_FIELDS if fetch else (), MCAND_SCHEMA)
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     top = (
         cands.withColumn("__rk", F.row_number().over(w))
         .where(F.col("__rk") <= k)
         .drop("__rk")
     )
-    return fetch_hits(spark, index_dir, top, order=("qid",)) if fetch else top
+    return top.orderBy("qid", F.desc("score"), F.asc("doc_id")) if fetch else top
 
 
 def sorted_scan(
@@ -623,6 +749,7 @@ def sorted_scan(
     k: int = 10,
     columns: tuple = ("doc_id", "url", "warc_ts", "lang"),
     routing: str | None = None,
+    reader: IndexReader | None = None,
 ) -> DataFrame:
     """Early-terminated sorted fetch over an index built with
     ``index_sort`` (Lucene index sorting, ``S/index/IndexSortConfig.java``
@@ -632,22 +759,17 @@ def sorted_scan(
     and STOPS after k live rows — at 100 TB a "latest-k" query reads O(k)
     rows per segment instead of scanning and sorting the table. The
     coordinator merge is an orderBy over ≤ k·segments rows."""
-    meta = store.IndexMeta.load(index_dir)
-    if not meta.index_sort:
+    reader = reader or IndexReader(spark, index_dir)
+    if not reader.meta.index_sort:
         raise ValueError("index was not built with index_sort")
-    sfield, sorder = meta.index_sort
-    segs = query_segments(spark, index_dir, meta, routing=routing)
+    sfield, sorder = reader.meta.index_sort
+    segs = query_segments(reader, routing=routing)
     out_cols = list(dict.fromkeys(list(columns) + [sfield]))
-    if segs:
-        # real column types from the store footer — a hardcoded name→type
-        # map would declare a numeric index_sort field (or any custom
-        # stored column) as string, breaking the Arrow conversion or
-        # mis-sorting '9' > '10' at the coordinator merge
-        out_schema = spark.read.parquet(Segment(index_dir, segs[0]).docs_path).select(
-            *[F.col(f"`{c}`") for c in out_cols]
-        ).schema
-    else:
-        out_schema = ", ".join(f"`{c}` string" for c in out_cols)
+    # real column types from the store footer — a hardcoded name→type map
+    # would declare a numeric index_sort field (or any custom stored
+    # column) as string, breaking the Arrow conversion or mis-sorting
+    # '9' > '10' at the coordinator merge
+    out_schema = reader.docs_schema(out_cols)
 
     def per_segment(seg: Segment) -> pd.DataFrame | None:
         taken = []
@@ -661,6 +783,6 @@ def sorted_scan(
                 break  # early termination: later row groups unread
         return pd.concat(taken, ignore_index=True).head(k) if taken else None
 
-    per_seg = launch(spark, index_dir, segs, per_segment, out_schema)
+    per_seg = launch(spark, reader.index_dir, segs, per_segment, out_schema)
     order = F.col(sfield).desc() if sorder == "desc" else F.col(sfield).asc()
     return per_seg.orderBy(order, F.asc("doc_id")).limit(k)

@@ -897,9 +897,10 @@ def q_index_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index-backed match_phrase: conjunctive WAND candidates → positional
     verify at fetch (operators/phrase.py)."""
     from .operators.phrase import search_phrase
+    from .operators.topk import IndexReader
 
     idx = _index_for(spark, sf_dir)
-    hits = search_phrase(spark, idx, "group order", k=10)
+    hits = search_phrase(IndexReader(spark, idx), "group order", k=10)
     return hits.select(
         F.expr("cast(substring(url, 4, 12) as bigint)").alias("doc_id"),
         F.round("score", 4).alias("score"),
@@ -1614,9 +1615,10 @@ def q_index_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_gaps=3) over the positional index — distributed per-segment verify
     (operators/phrase.py), BM25-ranked."""
     from .operators.phrase import search_intervals
+    from .operators.topk import IndexReader
 
     idx = _index_for(spark, sf_dir)
-    hits = search_intervals(spark, idx, "data stream", ordered=True, max_gaps=3, k=10)
+    hits = search_intervals(IndexReader(spark, idx), "data stream", ordered=True, max_gaps=3, k=10)
     return hits.select(
         F.expr("cast(substring(url, 4, 12) as bigint)").alias("doc_id"),
         F.round("score", 4).alias("score"),
@@ -1630,6 +1632,7 @@ def q_index_intervals_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     dictionary, interval filter pruning matches whose span contains the
     reference term. Distributed per-segment minimal-interval evaluation."""
     from .operators.intervals import search_intervals_source
+    from .operators.topk import IndexReader
 
     idx = _index_for(spark, sf_dir)
     src = {
@@ -1643,7 +1646,7 @@ def q_index_intervals_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             "filter": {"not_containing": {"match": {"query": "order"}}},
         }
     }
-    hits = search_intervals_source(spark, idx, src, k=10)
+    hits = search_intervals_source(IndexReader(spark, idx), src, k=10)
     return hits.select(
         F.expr("cast(substring(url, 4, 12) as bigint)").alias("doc_id"),
         F.round("score", 4).alias("score"),
@@ -1655,9 +1658,10 @@ def q_index_phrase_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     expanded as a prefix over the term dictionary, position-adjacent to the
     fixed terms; scored as BM25 over fixed + matched expansion terms."""
     from .operators.phrase import search_phrase_prefix
+    from .operators.topk import IndexReader
 
     idx = _index_for(spark, sf_dir)
-    hits = search_phrase_prefix(spark, idx, "group ord", k=10)
+    hits = search_phrase_prefix(IndexReader(spark, idx), "group ord", k=10)
     return hits.select(
         F.expr("cast(substring(url, 4, 12) as bigint)").alias("doc_id"),
         F.round("score", 4).alias("score"),
@@ -1946,6 +1950,7 @@ def q_span_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     slop 0)) — 'order' occurrences NOT immediately preceded by 'group',
     BM25-scored on the include term (SpanNotQueryBuilder.java)."""
     from .operators.spans import search_spans
+    from .operators.topk import IndexReader
 
     idx = _index_for(spark, sf_dir)
     body = {"span_not": {
@@ -1958,7 +1963,7 @@ def q_span_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"span_term": {"text": "order"}},
         ], "slop": 0, "in_order": True}},
     }}
-    hits = search_spans(spark, idx, body, k=10)
+    hits = search_spans(IndexReader(spark, idx), body, k=10)
     return hits.select(
         F.expr("cast(substring(url, 4, 12) as bigint)").alias("doc_id"),
         F.round("score", 4).alias("score"),

@@ -34,6 +34,10 @@ import os
 from dataclasses import dataclass, field
 
 
+def meta_path(index_dir: str) -> str:
+    return os.path.join(index_dir, "index_meta.json")
+
+
 def seg_dir(index_dir: str, seg: int) -> str:
     return os.path.join(index_dir, "segments", f"seg={seg}")
 
@@ -177,7 +181,7 @@ class IndexMeta:
         return float(self.sum_dl) / self.doc_count if self.doc_count else 1.0
 
     def save(self, index_dir: str) -> None:
-        p = os.path.join(index_dir, "index_meta.json")
+        p = meta_path(index_dir)
         tmp = p + ".tmp"
         with open(tmp, "w") as f:
             json.dump(
@@ -200,8 +204,12 @@ class IndexMeta:
 
     @classmethod
     def load(cls, index_dir: str) -> "IndexMeta":
-        with open(os.path.join(index_dir, "index_meta.json")) as f:
-            d = json.load(f)
+        with open(meta_path(index_dir), "rb") as f:
+            return cls.loads(f.read())
+
+    @classmethod
+    def loads(cls, raw: bytes) -> "IndexMeta":
+        d = json.loads(raw)
         meta = cls(
             analyzer=d["analyzer"],
             num_partitions=d["num_partitions"],
@@ -301,3 +309,28 @@ def docs_glob(index_dir: str) -> list[str]:
 
 def term_stats_path(index_dir: str) -> str:
     return os.path.join(index_dir, "stats", "term_stats.parquet")
+
+
+@dataclass(frozen=True)
+class CommitState:
+    """What an open reader depends on, as committed on disk: the raw
+    ``index_meta.json`` (doc count, avgdl, settings), the live segment list
+    and the identity of the term-stats table (rewritten whole by every
+    stats commit, so a new inode/mtime). Every write path — bulk, delete,
+    forcemerge, the streaming ingest, from any process — changes at least
+    one of them, so comparing states is the reader's staleness test."""
+
+    meta: bytes
+    segs: tuple
+    stats: tuple | None
+
+
+def commit_state(index_dir: str) -> CommitState:
+    try:
+        st = os.stat(term_stats_path(index_dir))
+        stats = (st.st_ino, st.st_mtime_ns)
+    except FileNotFoundError:
+        stats = None
+    with open(meta_path(index_dir), "rb") as f:
+        meta = f.read()
+    return CommitState(meta, tuple(list_segs(index_dir)), stats)

@@ -14,6 +14,7 @@ from elasticsearch_spark.operators.intervals import (
     iv_unordered,
     minimal,
 )
+from elasticsearch_spark.operators.topk import IndexReader
 
 
 def A(*pairs):
@@ -85,9 +86,9 @@ def test_intervals_source_end_to_end(spark, index_dir):
     # plain ordered match through the AST == the dedicated match path
     ast = {"match": {"query": "the of", "ordered": True, "max_gaps": 2}}
     got = [(r["doc_id"], round(r["score"], 8)) for r in
-           search_intervals_source(spark, index_dir, ast, k=10).collect()]
+           search_intervals_source(IndexReader(spark, index_dir), ast, k=10).collect()]
     want = [(r["doc_id"], round(r["score"], 8)) for r in
-            search_intervals(spark, index_dir, "the of", ordered=True, max_gaps=2, k=10).collect()]
+            search_intervals(IndexReader(spark, index_dir), "the of", ordered=True, max_gaps=2, k=10).collect()]
     assert got == want
 
     # prefix leaf inside any_of returns at least the match-only results
@@ -95,7 +96,7 @@ def test_intervals_source_end_to_end(spark, index_dir):
         {"match": {"query": "the of", "ordered": True, "max_gaps": 2}},
         {"prefix": {"prefix": "w000"}},
     ]}}
-    n = search_intervals_source(spark, index_dir, ast2, k=10).count()
+    n = search_intervals_source(IndexReader(spark, index_dir), ast2, k=10).count()
     assert n == 10
 
 
@@ -121,10 +122,10 @@ def test_intervals_script_filter_yaml(spark, tmp_path):
     build_index(spark, df, idx, num_partitions=1)
     ast = {"match": {"query": "cold",
                      "filter": {"script": {"source": "interval.start > 3"}}}}
-    hits = search_intervals_source(spark, idx, ast, k=10).collect()
+    hits = search_intervals_source(IndexReader(spark, idx), ast, k=10).collect()
     assert [r["url"] for r in hits] == ["1"]
     # boundary: start > 2 picks up doc 4 (position 3) too
     ast2 = {"match": {"query": "cold",
                       "filter": {"script": {"source": "interval.start > 2"}}}}
-    assert {r["url"] for r in search_intervals_source(spark, idx, ast2, k=10).collect()} \
+    assert {r["url"] for r in search_intervals_source(IndexReader(spark, idx), ast2, k=10).collect()} \
         == {"1", "4"}

@@ -230,7 +230,7 @@ def test_numeric_vs_string_literal_kinds(spark):
         [(1, "3.0", 3.0), (2, "3", 3.5), (3, "3.5", 4.0),
          (4, "abc", None), (5, "1e3", 1000.0), (6, "true", 2.0),
          (7, "1", 5.0), (8, "9007199254740992", None),
-         (9, "9007199254740993", None)],
+         (9, "9007199254740993", None), (10, None, 9007199254740992.0)],
         "doc_id long, sval string, dval double")
     stored = [
         ("f3_s", {"term": {"sval": 3.0}}),     # float lit on string col
@@ -247,6 +247,9 @@ def test_numeric_vs_string_literal_kinds(spark):
         # above 2**53 a double cast conflates neighbours: exact compare
         ("ibig_s", {"term": {"sval": 9007199254740993}}),
         ("fbig_s", {"term": {"sval": 9007199254740992.0}}),
+        # ...while on a double column the literal compares as a double:
+        # 2**53 + 1 rounds to 2**53
+        ("ibig_d", {"term": {"dval": 9007199254740993}}),
     ]
     legacy = _pairs(percolate(docs, stored, prune=False))
     pruned = _pairs(percolate(docs, stored, prune=True))
@@ -264,6 +267,7 @@ def test_numeric_vs_string_literal_kinds(spark):
     assert {d for q, d in pruned if q == "s1000_d"} == {5}
     assert {d for q, d in pruned if q == "ibig_s"} == {9}
     assert {d for q, d in pruned if q == "fbig_s"} == {8}
+    assert {d for q, d in pruned if q == "ibig_d"} == {10}
 
 
 def test_qterms_broadcast_size_gate(spark, corpus, monkeypatch):

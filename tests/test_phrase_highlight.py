@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from elasticsearch_spark.operators.phrase import highlight, search_phrase
 from elasticsearch_spark.operators.postings import build_index
+from elasticsearch_spark.operators.topk import IndexReader
 from elasticsearch_spark.sources.pages import pages_pdf
 
 
@@ -28,24 +29,24 @@ def phrase_index(spark, tmp_path_factory):
 
 
 def test_phrase_exact_adjacency(spark, phrase_index):
-    got = {r["url"] for r in search_phrase(spark, phrase_index, "quick brown").collect()}
+    got = {r["url"] for r in search_phrase(IndexReader(spark, phrase_index), "quick brown").collect()}
     assert got == {"u1", "u3"}
 
 
 def test_phrase_ranking_by_bm25_and_tie(spark, phrase_index):
-    rows = search_phrase(spark, phrase_index, "quick brown").collect()
+    rows = search_phrase(IndexReader(spark, phrase_index), "quick brown").collect()
     # u3 has tf 2 for both terms → higher BM25 than u1
     assert rows[0]["url"] == "u3"
 
 
 def test_phrase_slop(spark, phrase_index):
-    got = {r["url"] for r in search_phrase(spark, phrase_index, "quick brown", slop=2).collect()}
+    got = {r["url"] for r in search_phrase(IndexReader(spark, phrase_index), "quick brown", slop=2).collect()}
     assert got == {"u1", "u3", "u4"}  # u4: one token between, within slop
     assert "u2" not in got  # out of order never matches ordered sloppy phrase
 
 
 def test_phrase_no_match(spark, phrase_index):
-    assert search_phrase(spark, phrase_index, "fox jumps high").count() == 0
+    assert search_phrase(IndexReader(spark, phrase_index), "fox jumps high").count() == 0
 
 
 def test_highlight_fragment(spark):
@@ -83,9 +84,9 @@ def test_phrase_after_merge_keeps_positions(spark, phrase_index):
     from elasticsearch_spark.operators.merge import merge_index
     from elasticsearch_spark.operators.phrase import search_phrase
 
-    before = {r["url"] for r in search_phrase(spark, phrase_index, "quick brown").collect()}
+    before = {r["url"] for r in search_phrase(IndexReader(spark, phrase_index), "quick brown").collect()}
     merge_index(spark, phrase_index, segments_per_tier=4, floor_bytes=1)
-    after = {r["url"] for r in search_phrase(spark, phrase_index, "quick brown").collect()}
+    after = {r["url"] for r in search_phrase(IndexReader(spark, phrase_index), "quick brown").collect()}
     assert after == before == {"u1", "u3"}
 
 
@@ -97,23 +98,23 @@ def test_phrase_prefix_positional(spark, phrase_index):
 
     # 'quick b' → 'quick brown' (u1, u3); u4 'quick stuff then brown' has
     # no adjacency; u2 is out of order
-    got = {r["url"] for r in search_phrase_prefix(spark, phrase_index, "quick b").collect()}
+    got = {r["url"] for r in search_phrase_prefix(IndexReader(spark, phrase_index), "quick b").collect()}
     assert got == {"u1", "u3"}
     # slop lets u4's 'quick stuff then brown' match (2 tokens between)
-    got = {r["url"] for r in search_phrase_prefix(spark, phrase_index, "quick b", slop=2).collect()}
+    got = {r["url"] for r in search_phrase_prefix(IndexReader(spark, phrase_index), "quick b", slop=2).collect()}
     assert got == {"u1", "u3", "u4"}
     # single prefix token degenerates to prefix match
-    got = {r["url"] for r in search_phrase_prefix(spark, phrase_index, "jum").collect()}
+    got = {r["url"] for r in search_phrase_prefix(IndexReader(spark, phrase_index), "jum").collect()}
     assert got == {"u1"}
     # max_expansions caps the expansion set deterministically (term order)
-    got = {r["url"] for r in search_phrase_prefix(spark, phrase_index, "quick b", max_expansions=1).collect()}
+    got = {r["url"] for r in search_phrase_prefix(IndexReader(spark, phrase_index), "quick b", max_expansions=1).collect()}
     assert got == {"u1", "u3"}  # only expansion 'brown' (term order)
 
 
 def test_phrase_prefix_no_expansions(spark, phrase_index):
     from elasticsearch_spark.operators.phrase import search_phrase_prefix
 
-    assert search_phrase_prefix(spark, phrase_index, "quick zzz").count() == 0
+    assert search_phrase_prefix(IndexReader(spark, phrase_index), "quick zzz").count() == 0
 
 
 def test_intervals_ordered_and_unordered(spark, phrase_index):
@@ -121,13 +122,13 @@ def test_intervals_ordered_and_unordered(spark, phrase_index):
 
     # ordered 'quick brown' within any distance: u1, u3 (adjacent); u4 has
     # 'quick ... brown' with 2 tokens between → still ordered
-    got = {r["url"] for r in search_intervals(spark, phrase_index, "quick brown", ordered=True).collect()}
+    got = {r["url"] for r in search_intervals(IndexReader(spark, phrase_index), "quick brown", ordered=True).collect()}
     assert got == {"u1", "u3", "u4"}
     # max_gaps=1 excludes u4 (gap 2)
-    got = {r["url"] for r in search_intervals(spark, phrase_index, "quick brown", ordered=True, max_gaps=1).collect()}
+    got = {r["url"] for r in search_intervals(IndexReader(spark, phrase_index), "quick brown", ordered=True, max_gaps=1).collect()}
     assert got == {"u1", "u3"}
     # unordered picks up u2 ('brown quick')
-    got = {r["url"] for r in search_intervals(spark, phrase_index, "quick brown", ordered=False).collect()}
+    got = {r["url"] for r in search_intervals(IndexReader(spark, phrase_index), "quick brown", ordered=False).collect()}
     assert got == {"u1", "u2", "u3", "u4"}
 
 
@@ -184,12 +185,12 @@ def test_missing_positions_fail_loudly(spark, tmp_path):
     segs = store.list_segs(idx)
     assert len(segs) == 2
     queries = {
-        "match_phrase": lambda: search_phrase(spark, idx, "alpha beta"),
-        "match_phrase_prefix": lambda: search_phrase_prefix(spark, idx, "alpha be"),
-        "intervals": lambda: search_intervals(spark, idx, "alpha beta"),
+        "match_phrase": lambda: search_phrase(IndexReader(spark, idx), "alpha beta"),
+        "match_phrase_prefix": lambda: search_phrase_prefix(IndexReader(spark, idx), "alpha be"),
+        "intervals": lambda: search_intervals(IndexReader(spark, idx), "alpha beta"),
         "intervals_source": lambda: search_intervals_source(
-            spark, idx, {"match": {"query": "alpha beta", "ordered": True}}),
-        "span_near": lambda: search_spans(spark, idx, {"span_near": {
+            IndexReader(spark, idx), {"match": {"query": "alpha beta", "ordered": True}}),
+        "span_near": lambda: search_spans(IndexReader(spark, idx), {"span_near": {
             "clauses": [{"span_term": {"text": "alpha"}}, {"span_term": {"text": "beta"}}],
             "slop": 0, "in_order": True}}),
     }

@@ -9,10 +9,13 @@ from __future__ import annotations
 import shutil
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from elasticsearch_spark.operators.merge import merge_index, plan_merges
 from elasticsearch_spark.operators.postings import build_index
-from elasticsearch_spark.operators.topk import routed_segs, routing_shard, search_topk
+from elasticsearch_spark.operators.topk import routed_segs, routing_shard, search_topk, xxhash64
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_df
 
@@ -39,12 +42,35 @@ def test_routing_requires_sharded_index(spark):
         search_topk(spark, IDX, ["the"], k=3, fetch=False, routing="u1").collect()
 
 
+# every length class of XXH64: < 4, 4-7, 8-31, exactly 32 and > 32 bytes,
+# with 1-4-byte UTF-8 characters (the astral ones are 4 bytes)
+_EDGE = ["", "a", "ß", "東", "😀", "abcd", "abcdefg", "a" * 31, "a" * 32, "😀" * 8,
+         "x" * 33, "ß" * 40, "𝔘nicode-" * 9, "\x00"]
+
+
+@settings(max_examples=15, deadline=None)
+@given(st.lists(st.text(alphabet=st.characters(exclude_categories=("Cs",)), max_size=80),
+                max_size=40))
+def test_xxhash64_matches_spark(spark, values):
+    """The driver-side hash routed searches use equals Spark's xxhash64 —
+    the expression the build routes docs with — on arbitrary strings, so
+    query-time and index-time shards cannot drift."""
+    values = list(dict.fromkeys(values + _EDGE))
+    rows = spark.createDataFrame([(v,) for v in values], "v string").select(
+        "v", F.xxhash64("v").alias("h"), F.pmod(F.xxhash64("v"), F.lit(S)).alias("s")
+    ).collect()
+    assert len(rows) == len(values)
+    for r in rows:
+        assert xxhash64(r["v"].encode("utf-8")) == r["h"], r["v"]
+        assert routing_shard(r["v"], S) == r["s"]
+
+
 def test_routed_search_prunes_and_matches(spark):
     meta = _build(spark)
     url = spark.read.parquet(*store.docs_glob(IDX)).select("url").limit(1).collect()[0]["url"]
-    shard = routing_shard(spark, url, S)
+    shard = routing_shard(url, S)
     segs = store.list_segs(IDX)
-    pruned = routed_segs(spark, IDX, segs, url, meta)
+    pruned = routed_segs(IDX, segs, url, meta)
     assert len(pruned) == P // S  # 2 of 6 segments
     assert all(store.shard_of(IDX, s, meta) == shard for s in pruned)
 
@@ -66,7 +92,7 @@ def test_merge_is_shard_aware_and_routing_survives(spark):
     assert sorted(shards) == list(range(S))  # one shard-pure segment per shard
 
     url = spark.read.parquet(*store.docs_glob(IDX)).select("url").limit(1).collect()[0]["url"]
-    pruned = routed_segs(spark, IDX, segs, url, meta)
+    pruned = routed_segs(IDX, segs, url, meta)
     assert len(pruned) == 1
     _assert_routed_equals_shard_restricted(spark, meta, url, pruned)
 
@@ -157,7 +183,7 @@ def test_positional_queries_honor_routing(spark, tmp_path, query):
     d = es._dir("pages")
     shard_urls = {
         r["url"]
-        for s in routed_segs(spark, d, store.list_segs(d), "u0", store.IndexMeta.load(d))
+        for s in routed_segs(d, store.list_segs(d), "u0", store.IndexMeta.load(d))
         for r in spark.read.parquet(f"{d}/segments/seg={s}/docs.parquet").select("url").collect()
     }
     assert "u0" in shard_urls and len(shard_urls) < 30
