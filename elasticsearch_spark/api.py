@@ -1485,7 +1485,7 @@ class Engine:
                 # reads only its first k live rows
                 from .operators.topk import sorted_scan
 
-                hits = sorted_scan(self.spark, d, k=size, routing=routing, reader=reader)
+                hits = sorted_scan(reader, k=size, routing=routing)
                 out = {"hits": hits}
                 if "aggs" in body:
                     out["aggregations"] = aggs_mod.aggregate(_apply_runtime(self._docs_view(index)), body["aggs"])

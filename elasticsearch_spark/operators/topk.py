@@ -32,8 +32,8 @@ intervals, spans and the index-sorted scan:
 - each task emits its ≤k candidates with the fetch fields already
   attached (``Segment.fetch``: a ``doc_id IN (...)`` read of the task's
   own docs.parquet — the fetch phase, ``FetchPhase.java``, run where the
-  query phase ran), and ``top_hits`` is the coordinator's k-way merge
-  ``orderBy(score desc, doc_id asc).limit(k)`` over ≤k·segments rows
+  query phase ran, in the same ``launch``), and the coordinator's k-way
+  merge is ``orderBy(score desc, doc_id asc).limit(k)`` over ≤k·segments rows
   (``SearchPhaseController.java:186-205``, the reference's deterministic
   tie-break). There is no fetch join: a search is ONE Spark job, the
   segment-task wave, whose collect is the merge.
@@ -48,8 +48,10 @@ from __future__ import annotations
 
 import functools
 import heapq
+import itertools
 import os
 import threading
+import time
 
 import numpy as np
 import pandas as pd
@@ -66,6 +68,7 @@ MCAND_SCHEMA = "qid string, doc_id long, score double, n_terms_matched int"
 HITS_SCHEMA = "doc_id long, url string, score double"
 FETCH_FIELDS = ("url", "lang", "warc_ts")  # the match path's fetched fields
 _MAX_CACHED_TERMS = 1 << 20  # per-reader term-stats cache entries
+_STATS_SWAP_WAITS = 100  # 10 ms polls for a stats table mid-swap
 
 _BLOCK_COLS = ["term", "first_doc_id", "last_doc_id", "n", "max_tf", "min_ql", "ids_bytes", "tf_bytes"]
 _POSITION_COLS = ["term", "first_doc_id", "n", "ids_bytes", "tf_bytes", "pos_bytes"]
@@ -421,22 +424,34 @@ class IndexReader:
         self._df: dict[str, int | None] = {}
         self._lock = threading.Lock()
 
-    def _terms_table(self, filters, columns):
-        import pyarrow.parquet as pq
-
+    def _stats_path(self) -> str | None:
+        """The term-stats table, or None when the index has none (no segment
+        committed yet). A committed table is only ever replaced:
+        ``merge._commit_stats`` parks it at ``.old`` for the instant between
+        its two renames. So a table missing while the reader was opened on
+        one, or while ``.old`` exists, is waited for, and is an error (never
+        zero-df terms) if it does not come back."""
         path = store.term_stats_path(self.index_dir)
-        if not os.path.exists(path):  # no segment committed yet
-            return None
-        return pq.read_table(path, columns=columns, filters=filters)
+        for _ in range(_STATS_SWAP_WAITS):
+            if os.path.exists(path):
+                return path
+            if self.state.stats is None and not os.path.exists(path + ".old"):
+                return None
+            time.sleep(0.01)
+        raise FileNotFoundError(f"term stats table missing from a committed index: {path}")
 
     def term_weights(self, terms: list[str]) -> dict[str, tuple[float, int]]:
         """term -> (idf·(k1+1) weight, df); zero-df terms drop out."""
+        import pyarrow.parquet as pq
+
         with self._lock:
+            if len(self._df) > _MAX_CACHED_TERMS:
+                self._df.clear()  # a long-lived reader's cache stays bounded
             missing = [t for t in dict.fromkeys(terms) if t not in self._df]
             if missing:
-                if len(self._df) > _MAX_CACHED_TERMS:
-                    self._df.clear()  # a long-lived reader's cache stays bounded
-                tab = self._terms_table([("term", "in", missing)], ["term", "df"])
+                path = self._stats_path()
+                tab = None if path is None else pq.read_table(
+                    path, columns=["term", "df"], filters=[("term", "in", missing)])
                 found = {} if tab is None else dict(
                     zip(tab["term"].to_pylist(), tab["df"].to_pylist()))
                 for t in missing:
@@ -453,13 +468,28 @@ class IndexReader:
         """The first ``max_expansions`` dictionary terms (term order)
         starting with ``prefix``: the rewrite of a prefix leaf
         (match_phrase_prefix, intervals ``prefix``, span_multi ``prefix``).
-        A term range, so it pushes to the term-sorted row groups."""
-        filters = [("term", ">=", prefix)]
+        A term range pushed to the row groups of each term-sorted stats
+        file; each file yields at most ``max_expansions`` terms, so even an
+        empty prefix holds O(files · max_expansions) terms on the driver."""
+        import pyarrow.dataset as ds
+
+        path = self._stats_path()
+        if path is None or max_expansions < 1:
+            return []
+        cond = ds.field("term") >= prefix
         end = _prefix_end(prefix)
         if end is not None:
-            filters.append(("term", "<", end))
-        tab = self._terms_table(filters, ["term"])
-        return [] if tab is None else sorted(tab["term"].to_pylist())[:max_expansions]
+            cond &= ds.field("term") < end
+        runs = []
+        for frag in ds.dataset(path, format="parquet").get_fragments():
+            run: list[str] = []
+            for batch in frag.to_batches(columns=["term"], filter=cond,
+                                        batch_size=max(max_expansions, 4096)):
+                run += batch.column(0).to_pylist()[: max_expansions - len(run)]
+                if len(run) == max_expansions:
+                    break
+            runs.append(run)
+        return list(itertools.islice(heapq.merge(*runs), max_expansions))
 
     def docs_schema(self, columns) -> StructType:
         """Spark types of stored ``columns``, from a segment's docs.parquet
@@ -590,63 +620,48 @@ def query_segments(
 
 
 def launch(
-    spark: SparkSession,
-    index_dir: str,
+    reader: IndexReader,
     segs: list[int],
     per_segment,
     schema=CAND_SCHEMA,
+    fields=(),
 ) -> DataFrame:
     """Run ``per_segment(Segment) -> pandas frame | None`` over ``segs`` and
     concatenate the results. The seg-id frame is an explicit-slice
     ``parallelize`` (not createDataFrame().repartition()): the same task
-    layout without an Exchange stage per query."""
+    layout without an Exchange stage per query.
+
+    ``fields``: the fetch phase in the same wave — each task attaches the
+    stored ``fields`` to its candidates (``Segment.fetch``); rows are then
+    ``doc_id, *fields, *rest of schema``, the fields typed from the
+    docs.parquet footer."""
+    if fields:
+        cand = StructType.fromDDL(schema)
+        schema = StructType(
+            [StructField("doc_id", LongType())]
+            + reader.docs_schema(fields).fields
+            + [f for f in cand.fields if f.name != "doc_id"]
+        )
+        names = schema.names
+
+        def task(seg: Segment) -> pd.DataFrame | None:
+            top = per_segment(seg)
+            return top if top is None or not len(top) else seg.fetch(top, fields)[names]
+    else:
+        task = per_segment
+    index_dir = reader.index_dir
 
     def fn(batches):
         for pdf in batches:
-            outs = [per_segment(Segment(index_dir, s)) for s in pdf["seg"]]
+            outs = [task(Segment(index_dir, s)) for s in pdf["seg"]]
             outs = [r for r in outs if r is not None and len(r)]
             if outs:
                 yield pd.concat(outs, ignore_index=True)
 
-    n_tasks = max(1, min(len(segs), spark.sparkContext.defaultParallelism))
-    seg_rdd = spark.sparkContext.parallelize([(int(s),) for s in segs], n_tasks)
-    return spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, schema)
-
-
-def fetch_wave(
-    reader: IndexReader,
-    segs: list[int],
-    per_segment,
-    fields=(),
-    schema=CAND_SCHEMA,
-) -> DataFrame:
-    """Query and fetch phase in one segment-task wave: ``launch`` of
-    ``per_segment`` whose candidates get the stored ``fields`` attached
-    inside the task (``Segment.fetch``). Rows are ``doc_id, *fields,
-    *rest of schema``, the fields typed from the docs.parquet footer."""
-    if not fields:
-        return launch(reader.spark, reader.index_dir, segs, per_segment, schema)
-    cand = StructType.fromDDL(schema)
-    out = StructType(
-        [StructField("doc_id", LongType())]
-        + reader.docs_schema(fields).fields
-        + [f for f in cand.fields if f.name != "doc_id"]
-    )
-
-    names = out.names
-
-    def fetched(seg: Segment) -> pd.DataFrame | None:
-        top = per_segment(seg)
-        return top if top is None or not len(top) else seg.fetch(top, fields)[names]
-
-    return launch(reader.spark, reader.index_dir, segs, fetched, out)
-
-
-def top_hits(reader: IndexReader, segs: list[int], per_segment, k: int, fields=()) -> DataFrame:
-    """The coordinator's k-way merge of the per-segment candidates (fetch
-    ``fields`` attached in the tasks): one Spark job when collected."""
-    cands = fetch_wave(reader, segs, per_segment, fields)
-    return cands.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    sc = reader.spark.sparkContext
+    n_tasks = max(1, min(len(segs), sc.defaultParallelism))
+    seg_rdd = sc.parallelize([(int(s),) for s in segs], n_tasks)
+    return reader.spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, schema)
 
 
 def search_segments(
@@ -658,7 +673,8 @@ def search_segments(
     """Positional query phase + in-task fetch: ``per_segment`` over the
     routed segments, merged to the global top-k ``HITS_SCHEMA`` rows."""
     segs = query_segments(reader, routing=routing)
-    return top_hits(reader, segs, per_segment, k, ("url",)).drop("n_terms_matched")
+    hits = launch(reader, segs, per_segment, fields=("url",))
+    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).drop("n_terms_matched")
 
 
 def search_topk(
@@ -692,7 +708,8 @@ def search_topk(
     else:
         segs = query_segments(reader, pit_segs, routing)
     fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k)
-    return top_hits(reader, segs, fn, k, FETCH_FIELDS if fetch else ())
+    hits = launch(reader, segs, fn, fields=FETCH_FIELDS if fetch else ())
+    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def msearch_topk(
@@ -733,7 +750,7 @@ def msearch_topk(
         per_q[qid] = (live, msm, mode)
     fn = _bm25_segment(per_q, weights, meta.avgdl, meta.k1, meta.b, k)
     segs = query_segments(reader) if per_q else []
-    cands = fetch_wave(reader, segs, fn, FETCH_FIELDS if fetch else (), MCAND_SCHEMA)
+    cands = launch(reader, segs, fn, MCAND_SCHEMA, FETCH_FIELDS if fetch else ())
     w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
     top = (
         cands.withColumn("__rk", F.row_number().over(w))
@@ -744,12 +761,10 @@ def msearch_topk(
 
 
 def sorted_scan(
-    spark: SparkSession,
-    index_dir: str,
+    reader: IndexReader,
     k: int = 10,
     columns: tuple = ("doc_id", "url", "warc_ts", "lang"),
     routing: str | None = None,
-    reader: IndexReader | None = None,
 ) -> DataFrame:
     """Early-terminated sorted fetch over an index built with
     ``index_sort`` (Lucene index sorting, ``S/index/IndexSortConfig.java``
@@ -759,7 +774,6 @@ def sorted_scan(
     and STOPS after k live rows — at 100 TB a "latest-k" query reads O(k)
     rows per segment instead of scanning and sorting the table. The
     coordinator merge is an orderBy over ≤ k·segments rows."""
-    reader = reader or IndexReader(spark, index_dir)
     if not reader.meta.index_sort:
         raise ValueError("index was not built with index_sort")
     sfield, sorder = reader.meta.index_sort
@@ -783,6 +797,6 @@ def sorted_scan(
                 break  # early termination: later row groups unread
         return pd.concat(taken, ignore_index=True).head(k) if taken else None
 
-    per_seg = launch(spark, reader.index_dir, segs, per_segment, out_schema)
+    per_seg = launch(reader, segs, per_segment, out_schema)
     order = F.col(sfield).desc() if sorder == "desc" else F.col(sfield).asc()
     return per_seg.orderBy(order, F.asc("doc_id")).limit(k)

@@ -2004,7 +2004,7 @@ def q_sorted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from .operators.postings import build_index
-    from .operators.topk import sorted_scan
+    from .operators.topk import IndexReader, sorted_scan
 
     tag = sf_dir.strip("/").replace("/", "_")
     idx = f"/tmp/es_registry_sorted_{tag}"
@@ -2020,7 +2020,7 @@ def q_sorted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(idx, "index_meta.json")):
         build_index(spark, pages, idx, num_partitions=4,
                     analyzer="regex_simple", index_sort=("warc_ts", "desc"))
-    out = sorted_scan(spark, idx, k=10)
+    out = sorted_scan(IndexReader(spark, idx), k=10)
     return out.select(
         F.expr("cast(substring(url, 4, 12) as bigint)").alias("doc_id"),
         F.col("warc_ts").alias("ts"),

@@ -53,9 +53,9 @@ def test_sorted_match_all_early_termination(es):
 
 
 def test_sorted_scan_direct(es, spark):
-    from elasticsearch_spark.operators.topk import sorted_scan
+    from elasticsearch_spark.operators.topk import IndexReader, sorted_scan
 
-    out = sorted_scan(spark, os.path.join(ROOT, "pages"), k=7).collect()
+    out = sorted_scan(IndexReader(spark, os.path.join(ROOT, "pages")), k=7).collect()
     assert [r["url"] for r in out] == _expected_latest(7)
 
 
@@ -109,9 +109,9 @@ def test_sorted_scan_numeric_sort_field(spark, tmp_path):
     docs = spark.createDataFrame(
         rows, "url string, text string, lang string, warc_ts timestamp, price long")
     eng.bulk("priced", docs)
-    from elasticsearch_spark.operators.topk import sorted_scan
+    from elasticsearch_spark.operators.topk import IndexReader, sorted_scan
 
-    out = sorted_scan(spark, os.path.join(str(tmp_path), "priced"), k=5,
+    out = sorted_scan(IndexReader(spark, os.path.join(str(tmp_path), "priced")), k=5,
                       columns=("doc_id", "url", "price")).collect()
     assert [r["price"] for r in out] == sorted((i * 37) % 101 for i in range(30))[::-1][:5]
     assert out[0]["price"] > 9  # numeric, not lexicographic

@@ -4,16 +4,23 @@ outlives the commit it was opened on."""
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 import sys
 import threading
+import zlib
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from elasticsearch_spark.api import Engine
+from elasticsearch_spark.operators import topk
 from elasticsearch_spark.operators.topk import IndexReader, _prefix_end
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_df
@@ -140,19 +147,75 @@ def test_concurrent_searches_after_bulk(spark, tmp_path):
     assert out == [want, want]
 
 
-def test_reader_stats_match_the_term_dictionary(es, spark):
+def test_reader_stats_match_the_term_dictionary(spark, tmp_path):
     """Driver-side lookups equal the stats table read through Spark:
-    term_weights' df and prefix_terms' capped term-order expansion."""
-    path = store.term_stats_path(es._dir("pages"))
+    term_weights' df and prefix_terms' capped term-order expansion, merged
+    across the table's term-sorted files."""
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", pages_df(spark, 120, n_parts=2))
+    path = store.term_stats_path(es._dir("ix"))
+    # re-lay the table out as the stats writers do at scale: several files,
+    # each term-sorted (a hash split on term), in small row groups
+    parts = glob.glob(os.path.join(path, "part-*.parquet"))
+    tab = pq.read_table(parts)
+    split = np.array([zlib.crc32(t.encode()) % 3 for t in tab["term"].to_pylist()])
+    for p in parts:
+        os.remove(p)
+    for i in range(3):
+        part = tab.filter(pa.array(split == i)).sort_by("term")
+        pq.write_table(part, os.path.join(path, f"part-{i:05d}.parquet"), row_group_size=16)
     table = {r["term"]: r["df"] for r in spark.read.parquet(path).collect()}
     terms = sorted(table)
-    reader = IndexReader(spark, es._dir("pages"))
+    reader = IndexReader(spark, es._dir("ix"))
     probe = terms[::7] + ["no-such-term"]
     assert {t: df for t, (_, df) in reader.term_weights(probe).items()} == \
         {t: table[t] for t in probe if t in table}
     for p in ["", "t", "th", "of", "zz", terms[len(terms) // 2][:3]]:
-        for cap in (1, 5, 1000):
+        for cap in (1, 5, 1000, 100000):
             assert reader.prefix_terms(p, cap) == [t for t in terms if t.startswith(p)][:cap]
+
+
+def test_term_cache_bound_keeps_cached_terms(es, spark, monkeypatch):
+    """When a long-lived reader's term cache passes its bound it is emptied
+    and refilled: a lookup mixing cached and new terms still returns every
+    term's weight."""
+    terms = sorted(r["term"] for r in spark.read.parquet(
+        store.term_stats_path(es._dir("pages"))).limit(6).collect())
+    want = IndexReader(spark, es._dir("pages")).term_weights(terms)
+    monkeypatch.setattr(topk, "_MAX_CACHED_TERMS", 2)
+    reader = IndexReader(spark, es._dir("pages"))
+    assert reader.term_weights(terms[:3]) == {t: want[t] for t in terms[:3]}
+    mixed = [terms[0], terms[3], "no-such-term", terms[4]]
+    assert reader.term_weights(mixed) == {t: want[t] for t in mixed if t in want}
+    assert len(reader._df) <= len(mixed)
+
+
+def test_missing_stats_table_is_an_error(es, spark):
+    """A reader opened on a committed stats table waits out a stats swap
+    (the table is briefly parked at ``.old``) and raises when the table stays
+    gone — it never answers with zero-df terms, i.e. silently empty hits."""
+    path = store.term_stats_path(es._dir("pages"))
+    terms = sorted(r["term"] for r in spark.read.parquet(path).limit(4).collect())
+    want = IndexReader(spark, es._dir("pages")).term_weights(terms)
+    reader = IndexReader(spark, es._dir("pages"))
+    reader.term_weights(terms[:1])  # warm
+    os.replace(path, path + ".old")
+    try:
+        restore = threading.Timer(0.1, os.replace, (path + ".old", path))
+        restore.start()
+        assert reader.term_weights(terms) == want  # waited out the swap
+        restore.join()
+        os.replace(path, path + ".parked")
+        with pytest.raises(FileNotFoundError, match="term stats"):
+            reader.term_weights(["no-such-term-either"])
+        with pytest.raises(FileNotFoundError, match="term stats"):
+            reader.prefix_terms("t", 5)
+    finally:
+        for parked in (path + ".old", path + ".parked"):
+            if os.path.exists(parked):
+                os.replace(parked, path)
+    assert IndexReader(spark, es._dir("pages")).term_weights(terms) == want
 
 
 def test_reader_shared_by_threads(es, spark):
