@@ -124,6 +124,23 @@ def render_template(source: str, params: dict) -> str:
 # operators/percolate._query_fields / _pad_fields)
 
 
+def _fast_path_fields(kind: str, spec) -> set[str]:
+    """Fields an index fast-path query reads: the one key of a match /
+    match_phrase / match_phrase_prefix / intervals body, every field a
+    span tree names; empty for any other kind."""
+    if kind in ("match", "match_phrase", "match_phrase_prefix", "intervals",
+                "span_term", "span_gap"):
+        return set(spec)
+    if kind == "span_multi":
+        (_, inner), = spec["match"].items()
+        return set(inner)
+    if not kind.startswith("span_"):
+        return set()
+    subs = list(spec.get("clauses", [])) + [
+        spec[k] for k in ("match", "include", "exclude", "big", "little", "query") if k in spec]
+    return set().union(*(_fast_path_fields(*next(iter(c.items()))) for c in subs))
+
+
 def _tpl_get(params: dict, dotted: str):
     """Mustache dotted-name resolution ({{obj.field}})."""
     cur = params
@@ -1490,21 +1507,28 @@ class Engine:
                 if "aggs" in body:
                     out["aggregations"] = aggs_mod.aggregate(_apply_runtime(self._docs_view(index)), body["aggs"])
                 return _finish(out)
+        # the index fast paths score the positional "text" postings; a
+        # body on any other field takes the DSL path. `from` stays on the
+        # index path: each segment emits from+size, the merge skips from.
+        frm = int(body.get("from", 0) or 0)
+        on_text = _fast_path_fields(kind, spec) == {"text"}
         if (
             kind == "match"
+            and on_text
             and "sort" not in body
             and "search_after" not in body
             and "post_filter" not in body
-            and not body.get("from")  # pagination falls to the DSL path
         ):
             (fld, mspec), = spec.items()
-            text = mspec["query"] if isinstance(mspec, dict) else mspec
-            op = mspec.get("operator", "or") if isinstance(mspec, dict) else "or"
+            mspec = mspec if isinstance(mspec, dict) else {"query": mspec}
             reader = reader or self._reader(index)
-            terms = analysis.analyze(text, reader.meta.analyzer)
+            terms = analysis.analyze(mspec["query"], reader.meta.analyzer)
             hits = search_topk(
-                self.spark, d, terms, k=size, operator=op, mode="wand",
-                reader=reader, pit_segs=pit_segs, routing=routing,
+                self.spark, d, terms, k=size, operator=mspec.get("operator", "or"),
+                minimum_should_match=dsl.resolve_msm(
+                    mspec.get("minimum_should_match"), len(set(terms))),
+                mode="wand", reader=reader, pit_segs=pit_segs, routing=routing,
+                offset=frm,
             )
             if body.get("highlight"):
                 docs_text = self._docs_view(index).select("url", "text")
@@ -1514,7 +1538,7 @@ class Engine:
                     hits.join(docs_text, "url"), hl_terms,
                     **self._highlight_opts(body["highlight"]),
                 ).drop("text")
-        elif kind.startswith("span_") and "sort" not in body:
+        elif kind.startswith("span_") and on_text and "sort" not in body:
             if "post_filter" in body:
                 # span queries exist only on the index path, which has no
                 # post-collection filter stage — refuse instead of
@@ -1527,65 +1551,32 @@ class Engine:
             # semantics.
             from .operators.spans import search_spans
 
-            # spans exist only on the index path — implement `from` here
-            # (the other fast paths fall back to the DSL path for it)
-            frm = int(body.get("from", 0) or 0)
-            hits = search_spans(reader or self._reader(index), q, k=size + frm, routing=routing)
-            if frm:
-                from pyspark.sql import Window as _W
-
-                hits = (
-                    hits.withColumn(
-                        "__rn",
-                        F.row_number().over(
-                            _W.orderBy(F.desc("score"), F.asc("doc_id"))),
-                    )
-                    .where(F.col("__rn") > frm)
-                    .drop("__rn")
-                )
+            hits = search_spans(reader or self._reader(index), q, k=size,
+                                routing=routing, offset=frm)
         elif (
             kind in ("match_phrase", "match_phrase_prefix", "intervals")
+            and on_text
             and "sort" not in body
             and "post_filter" not in body
-            and not body.get("from")  # pagination falls to the DSL path
         ):
             # with a post_filter these fall through to the DSL path below
             # (token-stream positional evaluation), which applies it after
-            # scoring like every other query
-            # positional queries run against the index (per-segment
-            # position-chain verify), not the docs-frame DSL path
-            from .operators.phrase import (
-                search_intervals,
-                search_phrase,
-                search_phrase_prefix,
-            )
-
+            # scoring like every other query. On the index they run the
+            # one interval evaluator (operators/intervals.py).
             reader = reader or self._reader(index)
+            (fld, qspec), = spec.items()
             if kind == "intervals":
-                (fld, ispec), = spec.items()
-                plain_match = (
-                    set(ispec) == {"match"}
-                    and "filter" not in ispec["match"]
-                )
-                if plain_match:
-                    m = ispec["match"]
-                    hits = search_intervals(
-                        reader, m["query"], ordered=m.get("ordered", False),
-                        max_gaps=m.get("max_gaps", -1), k=size, routing=routing,
-                    )
-                else:
-                    # full source algebra (prefix/wildcard/fuzzy/regexp
-                    # leaves, any_of/all_of, interval filters)
-                    from .operators.intervals import search_intervals_source
+                from .operators.intervals import search_intervals_source
 
-                    hits = search_intervals_source(
-                        reader, ispec, k=size, routing=routing)
+                hits = search_intervals_source(
+                    reader, qspec, k=size, routing=routing, offset=frm)
             else:
-                (fld, mspec), = spec.items()
-                text = mspec["query"] if isinstance(mspec, dict) else mspec
-                slop = mspec.get("slop", 0) if isinstance(mspec, dict) else 0
+                from .operators.phrase import search_phrase, search_phrase_prefix
+
+                qspec = qspec if isinstance(qspec, dict) else {"query": qspec}
                 fn = search_phrase if kind == "match_phrase" else search_phrase_prefix
-                hits = fn(reader, text, k=size, slop=slop, routing=routing)
+                hits = fn(reader, qspec["query"], k=size, slop=qspec.get("slop", 0),
+                          routing=routing, offset=frm)
         else:
             # runtime mappings are applied INSIDE dsl.search (applying
             # them here too would double-apply shadowing scripts)

@@ -195,26 +195,6 @@ def mask_tombstones_pinned(
 _TOMB_ROW_GROUP = 131072
 
 
-def _write_tombstones(index_dir: str, doc_ids: np.ndarray) -> None:
-    """REWRITE the full tombstone set as the compact file (clears any
-    distributed-append batches — callers pass the complete surviving set).
-    Sorted + bounded row groups so range reads prune."""
-    import shutil
-
-    p = tombstones_path(index_dir)
-    tmp = p + ".tmp"
-    pq.write_table(
-        pa.table({"doc_id": pa.array(np.unique(doc_ids), type=pa.int64())}),
-        tmp, row_group_size=_TOMB_ROW_GROUP)
-    os.replace(tmp, p)
-    for d in (tombstones_dir(index_dir), tombstones_dir(index_dir) + ".old",
-              p + ".old"):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-        elif os.path.exists(d):
-            os.remove(d)
-
-
 def append_tombstone_batch(index_dir: str, doc_ids: np.ndarray) -> None:
     """Driver-local tombstone append (for op batches bounded by bulk size):
     one new sorted batch file under ``tombstones/`` — the full set is never
@@ -227,19 +207,6 @@ def append_tombstone_batch(index_dir: str, doc_ids: np.ndarray) -> None:
         pa.table({"doc_id": pa.array(np.unique(doc_ids), type=pa.int64())}),
         os.path.join(d, f"batch-{uuid.uuid4().hex}.parquet"),
         row_group_size=_TOMB_ROW_GROUP)
-
-
-def clear_tombstones(index_dir: str) -> None:
-    import shutil
-
-    p = tombstones_path(index_dir)
-    for f in (p, p + ".old"):
-        if os.path.exists(f):
-            os.remove(f)
-    base = tombstones_dir(index_dir)
-    for d in (base, base + ".old", base + ".reconcile"):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
 
 
 def append_tombstones(spark: SparkSession, index_dir: str, ids: DataFrame) -> int:

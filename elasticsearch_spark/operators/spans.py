@@ -9,7 +9,7 @@ SpanTermQueryBuilder.java``, ``SpanNearQueryBuilder.java``,
 ``SpanWithinQueryBuilder.java``, ``SpanMultiTermQueryBuilder.java``).
 
 Execution reuses the shared per-segment query phase (operators/topk.py)
-and phrase.py's occurrence keys: one task per segment slice,
+and intervals.py's occurrence keys: one task per segment slice,
 postings-with-positions term-filter pushdown to the parquet scan, span
 algebra evaluated per candidate doc INSIDE the segment task (zero
 shuffle, no driver reads), BM25 scoring of verified docs, ≤k rows per
@@ -32,7 +32,13 @@ Semantics (documented subset of Lucene spans):
 - ``span_containing`` keeps ``big`` spans that contain a ``little``
   span; ``span_within`` keeps ``little`` spans inside a ``big`` span.
 - ``span_multi``: the wrapped prefix/wildcard/fuzzy/regexp expands
-  against the global term dictionary (capped, term order) into span_or.
+  against the global term dictionary (``IndexReader.expand_terms``,
+  capped at 50, term order) into span_or.
+
+Spans keep non-minimal matches (``span_containing`` over a non-minimal
+``big`` span has no minimal-interval equivalent), so they keep this
+algebra instead of ``operators/intervals.py``'s; only the term expander is
+shared.
 
 Scoring: BM25 sum over the node's MATCH-side leaf terms (include branch
 for span_not, big for span_containing, little for span_within), global
@@ -46,10 +52,9 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..sources import index_store as store
-from .phrase import _POS_BITS, _occ_keys
+from .intervals import _POS_BITS, _POS_MASK, _occ_keys
 from .topk import HITS_SCHEMA, IndexReader, Segment, score_verified, search_segments
 
 _MAX_SPANS_PER_DOC = 256  # per-node emission cap (bounds pathological docs)
@@ -286,7 +291,7 @@ def _span_segment(node: SpanNode, weights: dict[str, tuple[float, int]],
         per_term_pos: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         for t in decoded:
             keys = _occ_keys(*decoded[t], cand)
-            per_term_pos[t] = (keys >> _POS_BITS, keys & ((1 << _POS_BITS) - 1))
+            per_term_pos[t] = (keys >> _POS_BITS, keys & _POS_MASK)
         # presence-decidable docs skip the per-doc span evaluator
         sure = np.intersect1d(
             _presence_sure_spans(node, decoded), cand, assume_unique=True
@@ -311,45 +316,32 @@ def _span_segment(node: SpanNode, weights: dict[str, tuple[float, int]],
     return per_segment
 
 
-def dict_expander(reader: IndexReader, max_expansions: int = 50):
-    """Multi-term → concrete terms via the global term dictionary (term
-    order, capped — the reference's rewrite cap). ``prefix`` is a range
-    read on the reader; wildcard, fuzzy and regexp scan the dictionary
-    with Spark."""
-    def expand(kind: str, spec) -> list[str]:
+def _span_multi_expander(reader: IndexReader, max_expansions: int = 50):
+    """span_multi's inner prefix / wildcard / fuzzy / regexp query →
+    concrete terms (``IndexReader.expand_terms``, the reference's rewrite
+    cap of 50)."""
+    def expand(kind: str, ms) -> list[str]:
         if kind not in ("prefix", "wildcard", "fuzzy", "regexp"):
             raise ValueError(f"span_multi cannot wrap: {kind}")
-        v = spec["value"] if isinstance(spec, dict) else spec
-        if kind == "prefix":
-            return reader.prefix_terms(v, max_expansions)
-        if kind == "wildcard":
-            rx = "^" + v.replace(".", "\\.").replace("*", ".*").replace("?", ".") + "$"
-            cond = F.col("term").rlike(rx)
-        elif kind == "fuzzy":
-            fz = spec.get("fuzziness", 2) if isinstance(spec, dict) else 2
-            cond = F.levenshtein("term", F.lit(v)) <= int(fz)
-        else:
-            cond = F.col("term").rlike("^" + v + "$")
-        terms = reader.spark.read.parquet(store.term_stats_path(reader.index_dir)).select("term")
-        return [r["term"] for r in terms.where(cond).orderBy("term").limit(max_expansions).collect()]
-
-    def expand_field(kind: str, ms) -> list[str]:
         # ES shape: {prefix: {field: {value: ...}}} — unwrap the field level
         if isinstance(ms, dict) and len(ms) == 1 and isinstance(next(iter(ms.values())), (dict, str)):
-            (fld, spec), = ms.items()
-            return expand(kind, spec)
-        return expand(kind, ms)
+            (_fld, ms), = ms.items()
+        spec = ms if isinstance(ms, dict) else {"value": ms}
+        return reader.expand_terms(
+            kind, spec["value"], max_expansions, int(spec.get("fuzziness", 2)),
+            int(spec.get("prefix_length", 0)))
 
-    return expand_field
+    return expand
 
 
 def search_spans(reader: IndexReader, span_body: dict, k: int = 10,
-                 routing: str | None = None) -> DataFrame:
-    """Distributed span query → (doc_id, url, score) top-k."""
-    node = parse_span(span_body, dict_expander(reader))
+                 routing: str | None = None, offset: int = 0) -> DataFrame:
+    """Distributed span query → (doc_id, url, score) hits ``offset ..
+    offset+k``."""
+    node = parse_span(span_body, _span_multi_expander(reader))
     terms = sorted(leaf_terms(node))
     if not terms:
         return reader.spark.createDataFrame([], HITS_SCHEMA)
     weights = reader.term_weights(terms)
-    fn = _span_segment(node, weights, reader.meta, k)
-    return search_segments(reader, fn, k, routing)
+    fn = _span_segment(node, weights, reader.meta, k + offset)
+    return search_segments(reader, fn, k, routing, offset)

@@ -35,8 +35,9 @@ intervals, spans and the index-sorted scan:
   query phase ran, in the same ``launch``), and the coordinator's k-way
   merge is ``orderBy(score desc, doc_id asc).limit(k)`` over ≤k·segments rows
   (``SearchPhaseController.java:186-205``, the reference's deterministic
-  tie-break). There is no fetch join: a search is ONE Spark job, the
-  segment-task wave, whose collect is the merge.
+  tie-break; a ``from`` page merges ``from + size`` and skips ``from``).
+  There is no fetch join: a search is ONE Spark job, the segment-task
+  wave, whose collect is the merge.
 
 df/avgdl come from the build-time stats tables through the driver-side
 ``IndexReader`` (pyarrow, no Spark job) and ship to the tasks as closure
@@ -50,6 +51,7 @@ import functools
 import heapq
 import itertools
 import os
+import re
 import threading
 import time
 
@@ -82,6 +84,26 @@ def _member(a: np.ndarray, sorted_b: np.ndarray) -> np.ndarray:
     return (pos < len(sorted_b)) & (sorted_b[np.minimum(pos, len(sorted_b) - 1)] == a)
 
 
+def term_positions(post: pd.DataFrame) -> dict[str, tuple]:
+    """term -> (doc_ids, tfs, flat_pos, occ_off) for each term of a
+    positional postings frame (``Segment.postings(..., positions=True)``),
+    decoded in one ``decode_blocks`` call (``occ_off`` indexes the
+    segment-wide ``flat_pos``)."""
+    if not len(post):
+        return {}
+    t = post["term"].to_numpy()
+    ids, tfs, flat_pos, occ_off = decode_blocks(
+        post["first_doc_id"], post["n"], post["ids_bytes"], post["tf_bytes"], post["pos_bytes"]
+    )
+    # the file is term-sorted, so each term's blocks are one run
+    run = np.flatnonzero(np.r_[True, t[1:] != t[:-1], True])
+    p_off = np.r_[0, np.cumsum(post["n"].to_numpy())][run]
+    return {
+        t[r]: (ids[a:z], tfs[a:z], flat_pos, occ_off[a:z + 1])
+        for r, a, z in zip(run[:-1], p_off[:-1], p_off[1:])
+    }
+
+
 class Segment:
     """One segment of the store, read inside a segment task — the only code
     that knows the segment file layout. Every read is lazy and runs at most
@@ -106,27 +128,9 @@ class Segment:
             filters=[("term", "in", list(terms))],
         ).to_pandas()
 
-    def positions(self, terms, slots=()) -> dict[str, tuple]:
-        """term -> (doc_ids, tfs, flat_pos, occ_off) for each of ``terms``
-        present, decoded in one ``decode_blocks`` call (``occ_off`` indexes
-        the segment-wide ``flat_pos``); empty, with nothing decoded, when
-        one of ``slots`` (lists of alternative terms) has none of its terms
-        present."""
-        post = self.postings(terms, positions=True)
-        t = post["term"].to_numpy()
-        present = set(t)
-        if not present or any(present.isdisjoint(st) for st in slots):
-            return {}
-        ids, tfs, flat_pos, occ_off = decode_blocks(
-            post["first_doc_id"], post["n"], post["ids_bytes"], post["tf_bytes"], post["pos_bytes"]
-        )
-        # the file is term-sorted, so each term's blocks are one run
-        run = np.flatnonzero(np.r_[True, t[1:] != t[:-1], True])
-        p_off = np.r_[0, np.cumsum(post["n"].to_numpy())][run]
-        return {
-            t[r]: (ids[a:z], tfs[a:z], flat_pos, occ_off[a:z + 1])
-            for r, a, z in zip(run[:-1], p_off[:-1], p_off[1:])
-        }
+    def positions(self, terms) -> dict[str, tuple]:
+        """``term_positions`` of the postings of ``terms``."""
+        return term_positions(self.postings(terms, positions=True))
 
     @functools.cached_property
     def tombstones(self) -> np.ndarray:
@@ -491,6 +495,38 @@ class IndexReader:
             runs.append(run)
         return list(itertools.islice(heapq.merge(*runs), max_expansions))
 
+    def expand_terms(self, kind: str, value: str, max_expansions: int,
+                     fuzziness: int = 2, prefix_length: int = 0) -> list[str]:
+        """The rewrite of a multi-term leaf (intervals prefix / wildcard /
+        regexp / fuzzy sources, span_multi): the first ``max_expansions``
+        dictionary terms, in term order, that
+        - ``prefix``: start with ``value`` (``prefix_terms``);
+        - ``wildcard``: match ``value`` whole, ``*`` any run, ``?`` any
+          one character, ``\\`` escaping the next; every other character
+          is literal;
+        - ``regexp``: match ``value`` whole;
+        - ``fuzzy``: are within Levenshtein ``fuzziness`` of ``value`` and
+          share its first ``prefix_length`` characters.
+        All but ``prefix`` scan the term dictionary with Spark."""
+        if kind == "prefix":
+            return self.prefix_terms(value, max_expansions)
+        term = F.col("term")
+        if kind == "wildcard":
+            cond = term.rlike(f"^{_wildcard_regex(value)}$")
+        elif kind == "regexp":
+            cond = term.rlike(f"^(?:{value})$")
+        elif kind == "fuzzy":
+            cond = (F.levenshtein(term, F.lit(value)) <= fuzziness) \
+                & term.startswith(value[:prefix_length])
+        else:
+            raise ValueError(f"cannot expand a {kind!r} leaf")
+        path = self._stats_path()
+        if path is None or max_expansions < 1:
+            return []
+        rows = self.spark.read.parquet(path).select("term").where(cond) \
+            .orderBy("term").limit(max_expansions).collect()
+        return [r["term"] for r in rows]
+
     def docs_schema(self, columns) -> StructType:
         """Spark types of stored ``columns``, from a segment's docs.parquet
         footer (read on the driver, no schema-inference job) the way Spark's
@@ -508,6 +544,18 @@ class IndexReader:
 
     def close(self) -> None:
         self._df.clear()
+
+
+def _wildcard_regex(pattern: str) -> str:
+    """A wildcard pattern as a Java regex body: ``*`` → ``.*``, ``?`` →
+    ``.``, ``\\x`` → literal x, every other character literal."""
+    out, chars = [], iter(pattern)
+    for c in chars:
+        if c == "\\":
+            out.append(re.escape(next(chars, c)))
+        else:
+            out.append({"*": ".*", "?": "."}.get(c) or re.escape(c))
+    return "".join(out)
 
 
 def _prefix_end(prefix: str) -> str | None:
@@ -669,12 +717,21 @@ def search_segments(
     per_segment,
     k: int,
     routing: str | None = None,
+    offset: int = 0,
 ) -> DataFrame:
-    """Positional query phase + in-task fetch: ``per_segment`` over the
-    routed segments, merged to the global top-k ``HITS_SCHEMA`` rows."""
+    """Positional query phase + in-task fetch: ``per_segment`` (emitting
+    its top ``offset + k``) over the routed segments, merged to the global
+    hits ``offset .. offset+k`` as ``HITS_SCHEMA`` rows."""
     segs = query_segments(reader, routing=routing)
     hits = launch(reader, segs, per_segment, fields=("url",))
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k).drop("n_terms_matched")
+    return _merge(hits, k, offset).drop("n_terms_matched")
+
+
+def _merge(hits: DataFrame, k: int, offset: int) -> DataFrame:
+    """The coordinator merge of a page: global ranks ``offset .. offset+k``
+    by score desc, doc_id asc (``from``/``size``)."""
+    top = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(offset + k)
+    return top.offset(offset) if offset else top
 
 
 def search_topk(
@@ -689,10 +746,12 @@ def search_topk(
     reader: IndexReader | None = None,
     pit_segs: list[int] | None = None,
     routing: str | None = None,
+    offset: int = 0,
 ) -> DataFrame:
     """Multi-term BM25 top-k over the index (query-then-fetch lifecycle):
     the one-query case of the batched per-segment scorer. ``fetch``
-    attaches ``FETCH_FIELDS`` inside the segment tasks.
+    attaches ``FETCH_FIELDS`` inside the segment tasks; ``offset`` skips
+    that many top hits (``from``), each segment emitting ``offset + k``.
 
     pit_segs / routing: the segment pinning and shard pruning of
     ``query_segments``. Shard-aware tiered merge keeps merged segments
@@ -707,9 +766,8 @@ def search_topk(
         segs = []  # nothing can match: an empty wave keeps the frame's schema
     else:
         segs = query_segments(reader, pit_segs, routing)
-    fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k)
-    hits = launch(reader, segs, fn, fields=FETCH_FIELDS if fetch else ())
-    return hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k + offset)
+    return _merge(launch(reader, segs, fn, fields=FETCH_FIELDS if fetch else ()), k, offset)
 
 
 def msearch_topk(

@@ -1612,13 +1612,14 @@ def t_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_index_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """intervals query (IntervalQueryBuilder.java match source, ordered,
-    max_gaps=3) over the positional index — distributed per-segment verify
-    (operators/phrase.py), BM25-ranked."""
-    from .operators.phrase import search_intervals
+    max_gaps=3) over the positional index — distributed per-segment
+    interval evaluation (operators/intervals.py), BM25-ranked."""
+    from .operators.intervals import search_intervals_source
     from .operators.topk import IndexReader
 
     idx = _index_for(spark, sf_dir)
-    hits = search_intervals(IndexReader(spark, idx), "data stream", ordered=True, max_gaps=3, k=10)
+    src = {"match": {"query": "data stream", "ordered": True, "max_gaps": 3}}
+    hits = search_intervals_source(IndexReader(spark, idx), src, k=10)
     return hits.select(
         F.expr("cast(substring(url, 4, 12) as bigint)").alias("doc_id"),
         F.round("score", 4).alias("score"),

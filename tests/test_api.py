@@ -824,3 +824,46 @@ def test_lookup_runtime_field(spark, tmp_path):
     loc1 = rows["log1"]["location"]
     assert len(loc1) == 1 and loc1[0]["city"] == "Montreal" and loc1[0]["country"] == "Canada"
     assert rows["log2"]["location"] is None
+
+
+def test_match_fast_path_keeps_its_options(es):
+    """minimum_should_match reaches the index path; a body on another field
+    takes the DSL path instead of scoring the text postings."""
+    msm = {"query": {"match": {"text": {
+        "query": "spark computing simple", "minimum_should_match": 2}}}, "size": 5}
+    assert [r["url"] for r in es.search("pages", msm)["hits"].collect()] == ["u1"]
+    def urls(query):
+        return {r["url"] for r in es.search("pages", {"query": query, "size": 50})["hits"].collect()}
+
+    want = urls({"term": {"lang": "en"}})
+    assert want
+    for kind in ("match", "match_phrase"):
+        assert urls({kind: {"lang": "en"}}) == want, kind
+
+
+@pytest.fixture(scope="module")
+def cjk_es(spark):
+    shutil.rmtree(ROOT + "_cjk", ignore_errors=True)
+    eng = Engine(spark, root=ROOT + "_cjk")
+    eng.create_index("cjk", analyzer="cjk", num_partitions=3)
+    rows = [(f"c{i}", "東京タワー " + "東京 " * (i % 3) + "見物 " * i, "ja") for i in range(8)]
+    eng.bulk("cjk", spark.createDataFrame(rows, "url string, text string, lang string")
+             .withColumn("warc_ts", F.lit("2024-01-01").cast("timestamp")))
+    return eng
+
+
+@pytest.mark.parametrize("query", [
+    {"match": {"text": "東京"}},
+    {"match_phrase": {"text": "東京タワー"}},
+    {"intervals": {"text": {"match": {"query": "東京タワー", "ordered": True}}}},
+    {"span_near": {"clauses": [{"span_term": {"text": "東京"}}, {"span_term": {"text": "タワー"}}],
+                   "slop": 0, "in_order": True}},
+], ids=["match", "match_phrase", "intervals", "span_near"])
+def test_from_pages_the_index_ranking(cjk_es, query):
+    """`from` stays on the index path: page 2 is ranks 3-4 of one page."""
+    def ranked(**page):
+        return [(r["url"], r["score"]) for r in cjk_es.search("cjk", {"query": query, **page})["hits"].collect()]
+
+    full = ranked(size=4)
+    assert len(full) == 4
+    assert ranked(size=2, **{"from": 2}) == full[2:]

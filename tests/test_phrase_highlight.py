@@ -118,18 +118,19 @@ def test_phrase_prefix_no_expansions(spark, phrase_index):
 
 
 def test_intervals_ordered_and_unordered(spark, phrase_index):
-    from elasticsearch_spark.operators.phrase import search_intervals
+    from elasticsearch_spark.operators.intervals import search_intervals_source
+
+    def urls(**match):
+        src = {"match": {"query": "quick brown", **match}}
+        return {r["url"] for r in search_intervals_source(IndexReader(spark, phrase_index), src).collect()}
 
     # ordered 'quick brown' within any distance: u1, u3 (adjacent); u4 has
     # 'quick ... brown' with 2 tokens between → still ordered
-    got = {r["url"] for r in search_intervals(IndexReader(spark, phrase_index), "quick brown", ordered=True).collect()}
-    assert got == {"u1", "u3", "u4"}
+    assert urls(ordered=True) == {"u1", "u3", "u4"}
     # max_gaps=1 excludes u4 (gap 2)
-    got = {r["url"] for r in search_intervals(IndexReader(spark, phrase_index), "quick brown", ordered=True, max_gaps=1).collect()}
-    assert got == {"u1", "u3"}
+    assert urls(ordered=True, max_gaps=1) == {"u1", "u3"}
     # unordered picks up u2 ('brown quick')
-    got = {r["url"] for r in search_intervals(IndexReader(spark, phrase_index), "quick brown", ordered=False).collect()}
-    assert got == {"u1", "u2", "u3", "u4"}
+    assert urls(ordered=False) == {"u1", "u2", "u3", "u4"}
 
 
 def test_highlight_multiple_fragments(spark):
@@ -171,7 +172,7 @@ def test_missing_positions_fail_loudly(spark, tmp_path):
 
     from elasticsearch_spark.operators.intervals import search_intervals_source
     from elasticsearch_spark.operators.merge import merge_index
-    from elasticsearch_spark.operators.phrase import search_intervals, search_phrase_prefix
+    from elasticsearch_spark.operators.phrase import search_phrase_prefix
     from elasticsearch_spark.operators.spans import search_spans
     from elasticsearch_spark.sources import index_store as store
 
@@ -187,7 +188,8 @@ def test_missing_positions_fail_loudly(spark, tmp_path):
     queries = {
         "match_phrase": lambda: search_phrase(IndexReader(spark, idx), "alpha beta"),
         "match_phrase_prefix": lambda: search_phrase_prefix(IndexReader(spark, idx), "alpha be"),
-        "intervals": lambda: search_intervals(IndexReader(spark, idx), "alpha beta"),
+        "intervals": lambda: search_intervals_source(
+            IndexReader(spark, idx), {"match": {"query": "alpha beta"}}),
         "intervals_source": lambda: search_intervals_source(
             IndexReader(spark, idx), {"match": {"query": "alpha beta", "ordered": True}}),
         "span_near": lambda: search_spans(IndexReader(spark, idx), {"span_near": {

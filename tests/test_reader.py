@@ -42,6 +42,7 @@ SEARCHES = {
         "clauses": [{"span_term": {"text": "of"}}, {"span_term": {"text": "the"}}],
         "slop": 0, "in_order": True}}}, None),
     "routed_match": ("pages", MATCH, "u1"),
+    "match_from": ("pages", {**MATCH, "from": 3}, None),
     "sorted_scan": ("sorted", {"query": {"match_all": {}},
                                "sort": [{"warc_ts": "desc"}], "size": 5}, None),
 }
