@@ -1316,10 +1316,11 @@ class Engine:
             raise ValueError(f"[from] parameter cannot be negative but was [{frm}]")
         if size < 0:
             raise ValueError(f"[size] parameter cannot be negative but was [{size}]")
-        if frm + size > self._max_result_window(index):
+        window = self._max_result_window(index)
+        if frm + size > window:
             raise ValueError(
                 f"Result window is too large, from + size must be less than "
-                f"or equal to: [{self._max_result_window(index)}] but was "
+                f"or equal to: [{window}] but was "
                 f"[{frm + size}]. See the scroll api for a more efficient "
                 "way to request large data sets.")
         q = body.get("query")
@@ -1355,8 +1356,8 @@ class Engine:
         `match`-family queries at the TOP level of the body run through the
         inverted index (postings + block-max WAND) with this engine's open
         reader of the index (``_reader``: meta, segments and term stats on
-        the driver); the hits frame is one Spark job — the segment tasks
-        score, attach the fetch fields and the collect merges. Compound/
+        the driver); the query phase, merge and fetch run on the driver and
+        the hits frame is a local relation — no Spark job. Compound/
         filter bodies run through the DSL compiler over the live docs view.
 
         ``index`` may be an alias: multi-index aliases fan out through
@@ -1512,6 +1513,21 @@ class Engine:
         # index path: each segment emits from+size, the merge skips from.
         frm = int(body.get("from", 0) or 0)
         on_text = _fast_path_fields(kind, spec) == {"text"}
+        # the fields retrieval API / docvalue_fields
+        # (``server/.../search/fetch/subphase/FieldFetcher.java``,
+        # ``FetchDocValuesPhase.java``): the stored fields they name ride an
+        # index path's one post-merge fetch
+        requested = list(dict.fromkeys(
+            fspec["field"] if isinstance(fspec, dict) else fspec
+            for k_ in ("fields", "docvalue_fields")
+            for fspec in body.get(k_, [])
+        ))
+
+        def stored(reader: IndexReader, *names: str) -> list[str]:
+            """The ``names`` the index stores (docs.parquet columns)."""
+            have = reader.docs_footer.names if reader.docs_footer is not None else []
+            return [n for n in names if n in have]
+
         if (
             kind == "match"
             and on_text
@@ -1523,21 +1539,19 @@ class Engine:
             mspec = mspec if isinstance(mspec, dict) else {"query": mspec}
             reader = reader or self._reader(index)
             terms = analysis.analyze(mspec["query"], reader.meta.analyzer)
+            hl = body.get("highlight")
             hits = search_topk(
                 self.spark, d, terms, k=size, operator=mspec.get("operator", "or"),
                 minimum_should_match=dsl.resolve_msm(
                     mspec.get("minimum_should_match"), len(set(terms))),
                 mode="wand", reader=reader, pit_segs=pit_segs, routing=routing,
-                offset=frm,
+                offset=frm, fields=stored(reader, *requested, *(["text"] if hl else [])),
             )
-            if body.get("highlight"):
-                docs_text = self._docs_view(index).select("url", "text")
-                hl_terms = self._highlight_terms(
-                    body["highlight"], terms, reader.meta.analyzer)
-                hits = highlight_fn(
-                    hits.join(docs_text, "url"), hl_terms,
-                    **self._highlight_opts(body["highlight"]),
-                ).drop("text")
+            if hl:
+                hl_terms = self._highlight_terms(hl, terms, reader.meta.analyzer)
+                hits = highlight_fn(hits, hl_terms, **self._highlight_opts(hl))
+                if "text" not in requested:
+                    hits = hits.drop("text")
         elif kind.startswith("span_") and on_text and "sort" not in body:
             if "post_filter" in body:
                 # span queries exist only on the index path, which has no
@@ -1551,8 +1565,9 @@ class Engine:
             # semantics.
             from .operators.spans import search_spans
 
-            hits = search_spans(reader or self._reader(index), q, k=size,
-                                routing=routing, offset=frm)
+            reader = reader or self._reader(index)
+            hits = search_spans(reader, q, k=size, routing=routing, offset=frm,
+                                fields=stored(reader, *requested))
         elif (
             kind in ("match_phrase", "match_phrase_prefix", "intervals")
             and on_text
@@ -1569,39 +1584,28 @@ class Engine:
                 from .operators.intervals import search_intervals_source
 
                 hits = search_intervals_source(
-                    reader, qspec, k=size, routing=routing, offset=frm)
+                    reader, qspec, k=size, routing=routing, offset=frm,
+                    fields=stored(reader, *requested))
             else:
                 from .operators.phrase import search_phrase, search_phrase_prefix
 
                 qspec = qspec if isinstance(qspec, dict) else {"query": qspec}
                 fn = search_phrase if kind == "match_phrase" else search_phrase_prefix
                 hits = fn(reader, qspec["query"], k=size, slop=qspec.get("slop", 0),
-                          routing=routing, offset=frm)
+                          routing=routing, offset=frm, fields=stored(reader, *requested))
         else:
             # runtime mappings are applied INSIDE dsl.search (applying
             # them here too would double-apply shadowing scripts)
             docs = self._docs_view(index)
             hits = dsl.search(self.spark, docs, body, key="url", text_col="text",
                               kw_norm=self._kw_normalizers(index))
+            # requested fields a _source filter dropped come back by url
+            have = [n for n in requested if n not in hits.columns and n in docs.columns]
+            if have and "url" in hits.columns:
+                hits = hits.join(docs.select("url", *have), "url", "left")
 
-        # the fields retrieval API / docvalue_fields
-        # (``server/.../search/fetch/subphase/FieldFetcher.java``,
-        # ``FetchDocValuesPhase.java``): formatted values alongside hits
-        # as ``fields.<name>`` columns; ``format`` renders dates
-        # (DocValueFormat.DateTime patterns). Index fast-path hits carry
-        # only (url, score, …), so requested doc fields absent from the
-        # hits frame are fetched with one broadcast-sized join first.
-        _requested = [
-            fspec["field"] if isinstance(fspec, dict) else fspec
-            for k_ in ("fields", "docvalue_fields")
-            for fspec in body.get(k_, [])
-        ]
-        _missing = [n for n in dict.fromkeys(_requested) if n not in hits.columns]
-        if _missing and "url" in hits.columns:
-            _view = self._docs_view(index)
-            _have = [n for n in _missing if n in _view.columns]
-            if _have:
-                hits = hits.join(_view.select("url", *_have), "url", "left")
+        # formatted values alongside hits as ``fields.<name>`` columns;
+        # ``format`` renders dates (DocValueFormat.DateTime patterns)
         for fspec_key in ("fields", "docvalue_fields"):
             for fspec in body.get(fspec_key, []):
                 name, fmt = (
@@ -1821,8 +1825,8 @@ class Engine:
 
     def msearch(self, searches: list[tuple[str, dict]]) -> list[dict]:
         """POST /_msearch: a batch of (index, body) searches. Each returns
-        lazily-evaluated frames: an index search's frame is one Spark job
-        (query + in-task fetch) that runs when the caller collects it."""
+        frames: an index search's hits are a local frame, computed on the
+        driver with no Spark job; a DSL search's frame stays lazy."""
         return [self.search(ix, body) for ix, body in searches]
 
     def search_multi(self, indices: list[str], body: dict) -> DataFrame:
@@ -3095,14 +3099,15 @@ class Engine:
 
     def _max_result_window(self, index: str) -> int:
         """index.max_result_window (IndexSettings.MAX_RESULT_WINDOW_SETTING,
-        default 10000) for the first concrete index the name maps to —
-        missing indices defer to the default so the not-found error (raised
-        later by resolve) stays the primary failure."""
+        default 10000) for the first concrete index the name maps to, from
+        its open reader's meta — missing and remote indices defer to the
+        default so the not-found error (raised later by resolve) stays the
+        primary failure."""
         try:
             concrete = self.resolve(index, ignore_unavailable=True)
             if not concrete or ":" in concrete[0]:
                 return 10_000
-            meta = store.IndexMeta.load(self._dir(concrete[0]))
+            meta = self._reader(concrete[0]).meta
             return int((meta.settings or {}).get(
                 "index.max_result_window",
                 (meta.settings or {}).get("max_result_window", 10_000)))

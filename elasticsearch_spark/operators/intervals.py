@@ -27,12 +27,12 @@ calls over the whole candidate set — the same-doc check is a compare of
 the keys' high bits. Script filters are the one per-interval loop.
 
 Execution is the shared per-segment query phase (``operators/topk.py``):
-leaf expansion runs once on the driver (capped, term-ordered — the same
-set in every task); a segment task reads the tree's postings, skips the
+leaf expansion runs once (capped, term-ordered — the same set for every
+segment); each segment's function reads the tree's postings, skips the
 segment before any decode when a required leaf has no term in it, derives
 candidates from the tree's presence requirements, evaluates the tree,
 scores verified docs by the BM25 sum of their matched terms (global df —
-DfsPhase determinism) and emits ≤k rows to the coordinator merge.
+DfsPhase determinism) and yields ≤k rows to the coordinator merge.
 
 Documented subset vs the reference: ordered ``all_of`` requires
 non-overlapping child order (Lucene ORDERED likewise) and chains each
@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame
 from ..functions import analysis
 from ..sources import index_store as store
 from .topk import (
-    HITS_SCHEMA, IndexReader, Segment, score_verified, search_segments, term_positions,
+    IndexReader, Segment, query_segments, score_verified, search_segments, term_positions,
 )
 
 MAX_EXPANSIONS = 128
@@ -444,20 +444,20 @@ def _tree_segment(tree: dict, weights: dict[str, tuple[float, int]],
 
 
 def search_tree(reader: IndexReader, tree: dict, k: int = 10,
-                routing: str | None = None, offset: int = 0) -> DataFrame:
-    """Hits ``offset .. offset+k`` of a compiled tree: distributed
-    per-segment verify + BM25 ranking over its matched terms. A tree whose
-    required terms are absent from the whole index runs no job."""
+                routing: str | None = None, offset: int = 0, fields=()) -> DataFrame:
+    """Hits ``offset .. offset+k`` of a compiled tree: per-segment verify +
+    BM25 ranking over its matched terms, as ``doc_id, url, *fields,
+    score`` rows. A tree whose required terms are absent from the whole
+    index reads no segment."""
     weights = reader.term_weights(tree_terms(tree))
-    if not _may_match(tree, weights):
-        return reader.spark.createDataFrame([], HITS_SCHEMA)
+    segs = query_segments(reader, routing=routing) if _may_match(tree, weights) else []
     fn = _tree_segment(tree, weights, reader.meta, k + offset)
-    return search_segments(reader, fn, k, routing, offset)
+    return search_segments(reader, segs, fn, k, offset, ("url", *fields)).drop("n_terms_matched")
 
 
 def search_intervals_source(
     reader: IndexReader, source: dict, k: int = 10, routing: str | None = None,
-    offset: int = 0,
+    offset: int = 0, fields=(),
 ) -> DataFrame:
     """intervals query with a full source AST (IntervalsSourceProvider)."""
-    return search_tree(reader, compile_source(reader, source), k, routing, offset)
+    return search_tree(reader, compile_source(reader, source), k, routing, offset, fields)

@@ -13,7 +13,7 @@ Spark re-expression:
   pids — segments stay immutable);
 - superseded/deleted doc_ids append to a global ``tombstones.parquet``
   (the liveDocs bitmap analog, atomic replace);
-- the query phase filters tombstoned ids inside each segment task
+- the query phase filters tombstoned ids per segment
   (sorted-array searchsorted — O(log n) per posting batch);
 - ``merge_index`` expunges: merged segments drop tombstoned docs and their
   postings, then those tombstones are cleared.
@@ -93,10 +93,10 @@ def read_tombstones_range(index_dir: str, lo: int, hi: int) -> np.ndarray:
     return np.unique(np.concatenate(parts))
 
 
-# per-worker memo for seg_tombstones: scorer tasks call it once per Arrow
-# batch per segment; the (files, mtime, size) fingerprint keeps it fresh
-# across deletes while long-lived python workers skip repeated footer +
-# range reads for the same segment
+# process memo for seg_tombstones: the query phase calls it once per
+# segment per search; the (files, mtime, size) fingerprint keeps it fresh
+# across deletes while repeated searches skip the footer + range reads for
+# the same segment
 _SEG_TOMB_CACHE: dict = {}
 
 
@@ -104,9 +104,9 @@ def seg_tombstones(index_dir: str, seg_d: str) -> np.ndarray:
     """Per-SEGMENT tombstone slice: the segment's doc_id range comes from
     its docs.parquet FOOTER stats (no data pages read), then the tombstone
     files are range-read. This is the 100 TB shape: one giant
-    delete_by_query costs each segment task only the tombstones that could
+    delete_by_query costs each segment read only the tombstones that could
     possibly mask its own docs. Memoized per (segment, tombstone-file
-    fingerprint) so repeated batches in one task pay once."""
+    fingerprint) so repeated reads of one segment pay once."""
     paths = _tomb_paths(index_dir)
     if not paths:
         return np.zeros(0, dtype=np.int64)

@@ -42,6 +42,7 @@ def search_phrase(
     slop: int = 0,
     routing: str | None = None,
     offset: int = 0,
+    fields=(),
 ) -> DataFrame:
     """match_phrase over the positional index: hits ``offset ..
     offset+k`` by BM25 (score DESC, doc_id ASC). Exact — every verified
@@ -49,7 +50,7 @@ def search_phrase(
     value's shard (``query_segments``)."""
     terms = analysis.analyze(phrase, reader.meta.analyzer)
     tree = all_of([leaf([t]) for t in terms], ordered=True, max_gaps=slop)
-    return search_tree(reader, tree, k, routing, offset)
+    return search_tree(reader, tree, k, routing, offset, fields)
 
 
 def search_phrase_prefix(
@@ -60,17 +61,18 @@ def search_phrase_prefix(
     max_expansions: int = 50,
     routing: str | None = None,
     offset: int = 0,
+    fields=(),
 ) -> DataFrame:
     """match_phrase_prefix (``MatchPhrasePrefixQueryBuilder.java``): the
     last analyzed token is a PREFIX expanded against the global term
     dictionary (first ``max_expansions`` in term order — the reference's
-    expansion cap, so every segment task sees the same deterministic set),
+    expansion cap, so every segment sees the same deterministic set),
     and the phrase must end at one of the expansions' positions. Scored as
     the BM25 sum of the fixed terms plus every matched expansion term."""
     terms = analysis.analyze(phrase, reader.meta.analyzer)
     last = reader.prefix_terms(terms[-1], max_expansions) if terms else []
     tree = all_of([leaf([t]) for t in terms[:-1]] + [leaf(last)], ordered=True, max_gaps=slop)
-    return search_tree(reader, tree, k, routing, offset)
+    return search_tree(reader, tree, k, routing, offset, fields)
 
 
 # --------------------------------------------------------------------------
@@ -80,7 +82,7 @@ def search_phrase_prefix(
 def _index_positions(index_dir: str, terms: list[str], cand_ids: set[int]) -> dict[str, dict[int, np.ndarray]]:
     """Per term: {doc_id: ascending positions} for candidate docs, decoded
     straight from the postings blocks. Local introspection used by tests —
-    the query path decodes positions inside the segment tasks instead."""
+    the query path decodes positions per segment in its query phase instead."""
     out: dict[str, dict[int, np.ndarray]] = {t: {} for t in terms}
     for seg in store.list_segs(index_dir):
         for term, (ids, _tfs, flat, occ_off) in Segment(index_dir, seg).positions(set(terms)).items():

@@ -9,11 +9,10 @@ SpanTermQueryBuilder.java``, ``SpanNearQueryBuilder.java``,
 ``SpanWithinQueryBuilder.java``, ``SpanMultiTermQueryBuilder.java``).
 
 Execution reuses the shared per-segment query phase (operators/topk.py)
-and intervals.py's occurrence keys: one task per segment slice,
-postings-with-positions term-filter pushdown to the parquet scan, span
-algebra evaluated per candidate doc INSIDE the segment task (zero
-shuffle, no driver reads), BM25 scoring of verified docs, ≤k rows per
-task to the coordinator merge.
+and intervals.py's occurrence keys: per segment, postings-with-positions
+term-filter pushdown to the parquet scan, span algebra evaluated per
+candidate doc, BM25 scoring of verified docs, ≤k rows to the coordinator
+merge.
 
 Semantics (documented subset of Lucene spans):
 - a span is an inclusive token-position interval ``(start, end)``;
@@ -55,7 +54,7 @@ from pyspark.sql import DataFrame
 
 from ..sources import index_store as store
 from .intervals import _POS_BITS, _POS_MASK, _occ_keys
-from .topk import HITS_SCHEMA, IndexReader, Segment, score_verified, search_segments
+from .topk import IndexReader, Segment, query_segments, score_verified, search_segments
 
 _MAX_SPANS_PER_DOC = 256  # per-node emission cap (bounds pathological docs)
 
@@ -335,13 +334,12 @@ def _span_multi_expander(reader: IndexReader, max_expansions: int = 50):
 
 
 def search_spans(reader: IndexReader, span_body: dict, k: int = 10,
-                 routing: str | None = None, offset: int = 0) -> DataFrame:
-    """Distributed span query → (doc_id, url, score) hits ``offset ..
+                 routing: str | None = None, offset: int = 0, fields=()) -> DataFrame:
+    """Span query → ``doc_id, url, *fields, score`` hits ``offset ..
     offset+k``."""
     node = parse_span(span_body, _span_multi_expander(reader))
     terms = sorted(leaf_terms(node))
-    if not terms:
-        return reader.spark.createDataFrame([], HITS_SCHEMA)
     weights = reader.term_weights(terms)
+    segs = query_segments(reader, routing=routing) if terms else []
     fn = _span_segment(node, weights, reader.meta, k + offset)
-    return search_segments(reader, fn, k, routing, offset)
+    return search_segments(reader, segs, fn, k, offset, ("url", *fields)).drop("n_terms_matched")

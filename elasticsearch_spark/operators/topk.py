@@ -19,30 +19,34 @@ results (tested):
   exact — rank-identical to naive.
 
 Distribution model (SURVEY §3.1) — the reference's one collector per
-shard (``QueryPhase.java:98``), shared by match, msearch, phrase,
-intervals, spans and the index-sorted scan:
+shard (``QueryPhase.java:98``) and its coordinator, shared by match,
+msearch, phrase, intervals, spans and the index-sorted scan. A search runs
+NO Spark job: at 8-16 segments a job's Arrow/Python round trip costs more
+than the per-segment work it would spread.
 
 - ``query_segments`` lists the segments a query scans (a PIT's pinned set
   or the current ones, pruned to a routing value's shard);
-- ``launch`` runs a per-segment function as ``mapInPandas`` over an
-  explicit-slice seg-id frame: one Spark task per slice, zero shuffle;
-- inside a task, ``Segment`` is the only reader of the segment files: the
+- ``query_phase`` runs a per-segment function over them on the driver's
+  query-phase thread pool (``sparkContext.defaultParallelism`` threads;
+  the pyarrow reads and numpy kernels release the GIL for most of their
+  time). ``Segment`` is the only reader of the segment files: the
   term-filtered postings slice, the live-doc mask and the SmallFloat doc
-  lengths (read only when a doc must be scored);
-- each task emits its ≤k candidates with the fetch fields already
-  attached (``Segment.fetch``: a ``doc_id IN (...)`` read of the task's
-  own docs.parquet — the fetch phase, ``FetchPhase.java``, run where the
-  query phase ran, in the same ``launch``), and the coordinator's k-way
-  merge is ``orderBy(score desc, doc_id asc).limit(k)`` over ≤k·segments rows
+  lengths (read only when a doc must be scored). Each segment yields its
+  ≤k candidates, tagged with its segment id; one failing segment fails
+  the search;
+- the coordinator merge ranks the candidates by score desc, doc_id asc
   (``SearchPhaseController.java:186-205``, the reference's deterministic
-  tie-break; a ``from`` page merges ``from + size`` and skips ``from``).
-  There is no fetch join: a search is ONE Spark job, the segment-task
-  wave, whose collect is the merge.
+  tie-break) and keeps ranks ``offset .. offset+k`` (``from``/``size``);
+- the fetch phase runs after the merge (``FetchSearchPhase.java``):
+  ``Segment.fetch`` reads the stored fields of the final hits, once per
+  segment that holds one — ≤k rows in all;
+- the hits become a local relation, ``createDataFrame`` of an Arrow table
+  (``hits_frame``), so neither building nor collecting them runs a job.
 
 df/avgdl come from the build-time stats tables through the driver-side
-``IndexReader`` (pyarrow, no Spark job) and ship to the tasks as closure
-locals — the dfs-phase determinism mechanism (``DfsPhase.java:31-81``):
-scores never depend on partitioning.
+``IndexReader`` (pyarrow, no Spark job) and reach every segment alike —
+the dfs-phase determinism mechanism (``DfsPhase.java:31-81``): scores
+never depend on how the segments are split.
 """
 
 from __future__ import annotations
@@ -54,20 +58,29 @@ import os
 import re
 import threading
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType, IntegerType, LongType, StringType, StructField, StructType,
+)
 
 from ..functions import bm25
 from ..sources import index_store as store
 from .codec import decode_blocks
 
-CAND_SCHEMA = "doc_id long, score double, n_terms_matched int"
-MCAND_SCHEMA = "qid string, doc_id long, score double, n_terms_matched int"
-HITS_SCHEMA = "doc_id long, url string, score double"
+CAND_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("score", DoubleType()),
+    StructField("n_terms_matched", IntegerType()),
+])
+MCAND_SCHEMA = StructType([StructField("qid", StringType()), *CAND_SCHEMA.fields])
 FETCH_FIELDS = ("url", "lang", "warc_ts")  # the match path's fetched fields
 _MAX_CACHED_TERMS = 1 << 20  # per-reader term-stats cache entries
 _STATS_SWAP_WAITS = 100  # 10 ms polls for a stats table mid-swap
@@ -105,9 +118,8 @@ def term_positions(post: pd.DataFrame) -> dict[str, tuple]:
 
 
 class Segment:
-    """One segment of the store, read inside a segment task — the only code
-    that knows the segment file layout. Every read is lazy and runs at most
-    once per handle."""
+    """One segment of the store — the only code that knows the segment file
+    layout. Every read is lazy and runs at most once per handle."""
 
     def __init__(self, index_dir: str, seg: int):
         self.index_dir = index_dir
@@ -120,8 +132,6 @@ class Segment:
         on the term-sorted file: tail terms cost ~nothing per non-matching
         segment); ``positions`` selects the positional columns instead of
         the block-max ones."""
-        import pyarrow.parquet as pq
-
         return pq.read_table(
             self.postings_path,
             columns=_POSITION_COLS if positions else _BLOCK_COLS,
@@ -136,7 +146,7 @@ class Segment:
     def tombstones(self) -> np.ndarray:
         """Sorted deleted doc ids in this segment's doc-id range: the
         segment range-reads ONLY its own tombstone slice, so a giant
-        delete_by_query never becomes a per-task memory tax."""
+        delete_by_query never becomes a per-segment memory tax."""
         from .ops import seg_tombstones
 
         return seg_tombstones(self.index_dir, self.dir)
@@ -150,8 +160,6 @@ class Segment:
     @functools.cached_property
     def norms(self) -> tuple[np.ndarray, np.ndarray]:
         """(sorted doc ids, SmallFloat-decoded doc lengths)."""
-        import pyarrow.parquet as pq
-
         from ..functions.smallfloat import byte4_to_int
 
         docs = pq.read_table(self.docs_path, columns=["doc_id", "norm"])
@@ -168,23 +176,18 @@ class Segment:
 
     def docs_batches(self, columns: list[str], batch_size: int):
         """Stream the stored docs in file (index-sort) order."""
-        import pyarrow.parquet as pq
-
         yield from pq.ParquetFile(self.docs_path).iter_batches(
             batch_size=batch_size, columns=columns
         )
 
-    def fetch(self, hits: pd.DataFrame, fields) -> pd.DataFrame:
-        """``hits`` (this segment's ≤k candidates) with the stored
-        ``fields`` of their docs attached: ``doc_id, *fields, *rest``."""
-        import pyarrow.parquet as pq
-
-        docs = pq.read_table(
+    def fetch(self, doc_ids, fields) -> pd.DataFrame:
+        """The stored ``fields`` of the docs ``doc_ids``: ``doc_id, *fields``
+        rows (a ``doc_id IN (...)`` read of docs.parquet)."""
+        return pq.read_table(
             self.docs_path,
             columns=["doc_id", *fields],
-            filters=[("doc_id", "in", hits["doc_id"].unique().tolist())],
+            filters=[("doc_id", "in", list(doc_ids))],
         ).to_pandas()
-        return docs.merge(hits, on="doc_id")
 
 
 def _score_segment_arrays(
@@ -446,8 +449,6 @@ class IndexReader:
 
     def term_weights(self, terms: list[str]) -> dict[str, tuple[float, int]]:
         """term -> (idf·(k1+1) weight, df); zero-df terms drop out."""
-        import pyarrow.parquet as pq
-
         with self._lock:
             if len(self._df) > _MAX_CACHED_TERMS:
                 self._df.clear()  # a long-lived reader's cache stays bounded
@@ -527,16 +528,21 @@ class IndexReader:
             .orderBy("term").limit(max_expansions).collect()
         return [r["term"] for r in rows]
 
-    def docs_schema(self, columns) -> StructType:
-        """Spark types of stored ``columns``, from a segment's docs.parquet
-        footer (read on the driver, no schema-inference job) the way Spark's
-        parquet reader types them (tz-naive timestamps → timestamp_ntz)."""
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_type
-
+    @functools.cached_property
+    def docs_footer(self) -> pa.Schema | None:
+        """Arrow schema of the stored docs: a segment's docs.parquet footer,
+        read on the driver once per reader (None with no segment)."""
         if not self.segs:
+            return None
+        return pq.read_schema(Segment(self.index_dir, self.segs[0]).docs_path)
+
+    def docs_schema(self, columns) -> StructType:
+        """Spark types of stored ``columns`` (no schema-inference job), the
+        way Spark's parquet reader types them (tz-naive timestamps →
+        timestamp_ntz)."""
+        sch = self.docs_footer
+        if sch is None:
             return StructType([StructField(c, StringType()) for c in columns])
-        sch = pq.read_schema(Segment(self.index_dir, self.segs[0]).docs_path)
         return StructType([
             StructField(c, from_arrow_type(sch.field(c).type, prefer_timestamp_ntz=True))
             for c in columns
@@ -667,71 +673,97 @@ def query_segments(
     return routed_segs(reader.index_dir, segs, routing, reader.meta)
 
 
-def launch(
-    reader: IndexReader,
-    segs: list[int],
-    per_segment,
-    schema=CAND_SCHEMA,
-    fields=(),
-) -> DataFrame:
-    """Run ``per_segment(Segment) -> pandas frame | None`` over ``segs`` and
-    concatenate the results. The seg-id frame is an explicit-slice
-    ``parallelize`` (not createDataFrame().repartition()): the same task
-    layout without an Exchange stage per query.
+_POOL: ThreadPoolExecutor | None = None
+_POOL_LOCK = threading.Lock()
+_POOL_NAME = "query-phase"
 
-    ``fields``: the fetch phase in the same wave — each task attaches the
-    stored ``fields`` to its candidates (``Segment.fetch``); rows are then
-    ``doc_id, *fields, *rest of schema``, the fields typed from the
-    docs.parquet footer."""
-    if fields:
-        cand = StructType.fromDDL(schema)
-        schema = StructType(
-            [StructField("doc_id", LongType())]
-            + reader.docs_schema(fields).fields
-            + [f for f in cand.fields if f.name != "doc_id"]
-        )
-        names = schema.names
 
-        def task(seg: Segment) -> pd.DataFrame | None:
-            top = per_segment(seg)
-            return top if top is None or not len(top) else seg.fetch(top, fields)[names]
+def _on_pool(spark: SparkSession, fn, items) -> list:
+    """``fn`` over ``items`` on the query-phase pool, results in item order.
+    The pool is the process's one, sized ``sparkContext.defaultParallelism``
+    and shared by every search (concurrent clients too). Its own tasks are
+    refused, so a busy pool cannot deadlock on itself. A failure cancels
+    the items not started yet and is raised: a search never returns part
+    of its hits."""
+    global _POOL
+    if threading.current_thread().name.startswith(_POOL_NAME):
+        raise RuntimeError("a query-phase task may not wait on the query-phase pool")
+    with _POOL_LOCK:
+        if _POOL is None:
+            _POOL = ThreadPoolExecutor(
+                spark.sparkContext.defaultParallelism, thread_name_prefix=_POOL_NAME)
+    futures = [_POOL.submit(fn, x) for x in items]
+    try:
+        return [f.result() for f in futures]
+    finally:
+        for f in futures:
+            f.cancel()
+
+
+def query_phase(reader: IndexReader, segs: list[int], per_segment) -> pd.DataFrame | None:
+    """``per_segment(Segment) -> candidates | None`` over ``segs``: every
+    segment's candidates in one frame, each row tagged with its ``seg``
+    (None when no segment has one)."""
+    def run(s: int) -> pd.DataFrame | None:
+        r = per_segment(Segment(reader.index_dir, s))
+        return None if r is None or not len(r) else r.assign(seg=s)
+
+    outs = [r for r in _on_pool(reader.spark, run, segs) if r is not None]
+    return pd.concat(outs, ignore_index=True) if outs else None
+
+
+def hits_frame(spark: SparkSession, rows: pd.DataFrame | None, schema: StructType) -> DataFrame:
+    """``rows`` (the ``schema`` columns) as a local relation: an Arrow table
+    handed to ``createDataFrame``, so neither building nor collecting the
+    frame runs a Spark job. An empty result is an empty Arrow table too —
+    an empty pandas frame would fall back to a one-job ``parallelize``."""
+    if rows is None or not len(rows):
+        table = to_arrow_schema(schema).empty_table()
     else:
-        task = per_segment
-    index_dir = reader.index_dir
+        table = pa.Table.from_pandas(rows[schema.names], preserve_index=False)
+    return spark.createDataFrame(table, schema)
 
-    def fn(batches):
-        for pdf in batches:
-            outs = [task(Segment(index_dir, s)) for s in pdf["seg"]]
-            outs = [r for r in outs if r is not None and len(r)]
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
 
-    sc = reader.spark.sparkContext
-    n_tasks = max(1, min(len(segs), sc.defaultParallelism))
-    seg_rdd = sc.parallelize([(int(s),) for s in segs], n_tasks)
-    return reader.spark.createDataFrame(seg_rdd, "seg int").mapInPandas(fn, schema)
+def _fetch_frame(reader: IndexReader, hits: pd.DataFrame | None, fields,
+                 schema: StructType) -> DataFrame:
+    """The fetch phase, after the merge (``FetchSearchPhase.java``): the
+    merged ``hits`` with the stored ``fields`` of their docs attached, one
+    ``Segment.fetch`` per segment that holds a hit. Rows keep the merge's
+    order; columns are ``schema``'s, or ``doc_id, *fields, *the rest``
+    when fields are fetched (a field the schema has is not fetched)."""
+    fields = [f for f in dict.fromkeys(fields) if f not in schema.names]
+    if fields:
+        schema = StructType([
+            schema["doc_id"], *reader.docs_schema(fields).fields,
+            *(f for f in schema.fields if f.name != "doc_id"),
+        ])
+        if hits is not None and len(hits):
+            docs = _on_pool(
+                reader.spark,
+                lambda g: Segment(reader.index_dir, g[0]).fetch(g[1].unique().tolist(), fields),
+                list(hits.groupby("seg")["doc_id"]),
+            )
+            hits = hits.merge(pd.concat(docs, ignore_index=True), on="doc_id", how="left")
+    return hits_frame(reader.spark, hits, schema)
 
 
 def search_segments(
     reader: IndexReader,
+    segs: list[int],
     per_segment,
     k: int,
-    routing: str | None = None,
     offset: int = 0,
+    fields=(),
 ) -> DataFrame:
-    """Positional query phase + in-task fetch: ``per_segment`` (emitting
-    its top ``offset + k``) over the routed segments, merged to the global
-    hits ``offset .. offset+k`` as ``HITS_SCHEMA`` rows."""
-    segs = query_segments(reader, routing=routing)
-    hits = launch(reader, segs, per_segment, fields=("url",))
-    return _merge(hits, k, offset).drop("n_terms_matched")
-
-
-def _merge(hits: DataFrame, k: int, offset: int) -> DataFrame:
-    """The coordinator merge of a page: global ranks ``offset .. offset+k``
-    by score desc, doc_id asc (``from``/``size``)."""
-    top = hits.orderBy(F.desc("score"), F.asc("doc_id")).limit(offset + k)
-    return top.offset(offset) if offset else top
+    """Query-then-fetch of a scored search: ``per_segment`` (emitting its
+    top ``offset + k``) over ``segs``, merged to the global ranks ``offset
+    .. offset+k`` by score desc, doc_id asc, with the stored ``fields``
+    attached: ``doc_id, *fields, score, n_terms_matched`` rows."""
+    cands = query_phase(reader, segs, per_segment)
+    if cands is not None:
+        cands = cands.sort_values(["score", "doc_id"], ascending=[False, True])
+        cands = cands.iloc[offset:offset + k]
+    return _fetch_frame(reader, cands, fields, CAND_SCHEMA)
 
 
 def search_topk(
@@ -747,11 +779,13 @@ def search_topk(
     pit_segs: list[int] | None = None,
     routing: str | None = None,
     offset: int = 0,
+    fields=(),
 ) -> DataFrame:
     """Multi-term BM25 top-k over the index (query-then-fetch lifecycle):
-    the one-query case of the batched per-segment scorer. ``fetch``
-    attaches ``FETCH_FIELDS`` inside the segment tasks; ``offset`` skips
-    that many top hits (``from``), each segment emitting ``offset + k``.
+    the one-query case of the batched per-segment scorer, run on the
+    driver with no Spark job. ``fetch`` attaches ``FETCH_FIELDS`` and the
+    stored ``fields`` to the final hits; ``offset`` skips that many top
+    hits (``from``), each segment emitting ``offset + k``.
 
     pit_segs / routing: the segment pinning and shard pruning of
     ``query_segments``. Shard-aware tiered merge keeps merged segments
@@ -763,11 +797,11 @@ def search_topk(
     live = [t for t in terms if t in weights]
     msm = len(live) if operator == "and" else int(minimum_should_match or 1)
     if not live or (operator == "and" and len(live) < len(terms)):
-        segs = []  # nothing can match: an empty wave keeps the frame's schema
+        segs = []  # nothing can match
     else:
         segs = query_segments(reader, pit_segs, routing)
     fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k + offset)
-    return _merge(launch(reader, segs, fn, fields=FETCH_FIELDS if fetch else ()), k, offset)
+    return search_segments(reader, segs, fn, k, offset, (*FETCH_FIELDS, *fields) if fetch else ())
 
 
 def msearch_topk(
@@ -779,18 +813,18 @@ def msearch_topk(
     reader: IndexReader | None = None,
     fetch: bool = False,
 ) -> DataFrame:
-    """Batched _msearch at the postings layer: M top-k queries in ONE
-    segment-task wave (not M) — per-query results identical to M
-    search_topk calls, but scheduling overhead and the per-segment
-    postings/norms/tombstone reads are amortized across the batch (the
-    reference coordinates _msearch as one round the same way,
-    ``TransportMultiSearchAction.java``).
+    """Batched _msearch at the postings layer: M top-k queries in ONE query
+    phase (not M) — per-query results identical to M search_topk calls,
+    but the per-segment postings/norms/tombstone reads are amortized across
+    the batch (the reference coordinates _msearch as one round the same
+    way, ``TransportMultiSearchAction.java``). No Spark job.
 
     queries: {qid: {"terms": [...], "operator": "or"|"and",
     "minimum_should_match": int?}} or a plain list of term-lists
     (qids q0..qN-1). Returns (qid, doc_id, score, n_terms_matched) rows,
-    per-qid top-k, plus ``FETCH_FIELDS`` (attached in the segment tasks)
-    when fetch=True.
+    per-qid top-k, ordered by qid, score desc, doc_id asc; fetch=True
+    attaches ``FETCH_FIELDS`` after the merge (``doc_id, *FETCH_FIELDS,
+    qid, score, n_terms_matched``).
     """
     if isinstance(queries, list):
         queries = {f"q{i}": {"terms": t} for i, t in enumerate(queries)}
@@ -807,15 +841,11 @@ def msearch_topk(
         msm = len(live) if op == "and" else int(q.get("minimum_should_match") or 1)
         per_q[qid] = (live, msm, mode)
     fn = _bm25_segment(per_q, weights, meta.avgdl, meta.k1, meta.b, k)
-    segs = query_segments(reader) if per_q else []
-    cands = launch(reader, segs, fn, MCAND_SCHEMA, FETCH_FIELDS if fetch else ())
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    top = (
-        cands.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .drop("__rk")
-    )
-    return top.orderBy("qid", F.desc("score"), F.asc("doc_id")) if fetch else top
+    cands = query_phase(reader, query_segments(reader) if per_q else [], fn)
+    if cands is not None:
+        cands = cands.sort_values(["qid", "score", "doc_id"], ascending=[True, False, True])
+        cands = cands.groupby("qid", sort=False).head(k)
+    return _fetch_frame(reader, cands, FETCH_FIELDS if fetch else (), MCAND_SCHEMA)
 
 
 def sorted_scan(
@@ -828,10 +858,11 @@ def sorted_scan(
     ``index_sort`` (Lucene index sorting, ``S/index/IndexSortConfig.java``
     + the sorted-query early-termination of ``CollectorManager``/
     ``TopFieldCollector``): each segment's docs.parquet is WRITTEN in
-    index-sort order, so a segment task streams the file batch-by-batch
+    index-sort order, so the query phase streams each file batch-by-batch
     and STOPS after k live rows — at 100 TB a "latest-k" query reads O(k)
     rows per segment instead of scanning and sorting the table. The
-    coordinator merge is an orderBy over ≤ k·segments rows."""
+    coordinator merge sorts the ≤ k·segments rows by the sort field, then
+    doc_id, and keeps k; no Spark job."""
     if not reader.meta.index_sort:
         raise ValueError("index was not built with index_sort")
     sfield, sorder = reader.meta.index_sort
@@ -855,6 +886,10 @@ def sorted_scan(
                 break  # early termination: later row groups unread
         return pd.concat(taken, ignore_index=True).head(k) if taken else None
 
-    per_seg = launch(reader, segs, per_segment, out_schema)
-    order = F.col(sfield).desc() if sorder == "desc" else F.col(sfield).asc()
-    return per_seg.orderBy(order, F.asc("doc_id")).limit(k)
+    cands = query_phase(reader, segs, per_segment)
+    if cands is not None:
+        asc = sorder != "desc"
+        # Spark's order: nulls first ascending, last descending
+        cands = cands.sort_values([sfield, "doc_id"], ascending=[asc, True],
+                                  na_position="first" if asc else "last").head(k)
+    return hits_frame(reader.spark, cands, out_schema)

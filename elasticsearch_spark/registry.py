@@ -856,7 +856,7 @@ def q_term_suggest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_msearch_wand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched _msearch at the postings layer (operators/topk.py:
-    msearch_topk): one segment-task wave answers both queries — per-query
+    msearch_topk): one query phase answers both queries — per-query
     results identical to separate search_topk calls."""
     from .operators.topk import msearch_topk
 
@@ -2000,7 +2000,7 @@ def a_percentiles_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sorted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index sorting + early-terminated sorted query (IndexSortConfig.java;
     operators/topk.py:sorted_scan): latest-10 by warc_ts over an index
-    built with index.sort = (warc_ts, desc) — each segment task reads only
+    built with index.sort = (warc_ts, desc) — each segment reads only
     its first k live rows of the sort-ordered docs file."""
     import os
 

@@ -1,4 +1,4 @@
-"""The Engine-owned IndexReader: every index search is one Spark job, term
+"""The Engine-owned IndexReader: an index search runs no Spark job, term
 stats and prefix expansions are driver-side reads, and a reader never
 outlives the commit it was opened on."""
 
@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 
 from elasticsearch_spark.api import Engine
 from elasticsearch_spark.operators import topk
-from elasticsearch_spark.operators.topk import IndexReader, _prefix_end
+from elasticsearch_spark.operators.phrase import highlight
+from elasticsearch_spark.operators.topk import IndexReader, _prefix_end, msearch_topk, search_topk
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_df
 
@@ -29,23 +30,41 @@ ROOT = "/tmp/es_spark_reader_test"
 FULL_MERGE = {"segments_per_tier": 1 << 20}
 
 MATCH = {"query": {"match": {"text": "the of"}}, "size": 10}
+MATCH_SCHEMA = [("doc_id", "bigint"), ("url", "string"), ("lang", "string"),
+                ("warc_ts", "timestamp_ntz"), ("score", "double"), ("n_terms_matched", "int")]
+POSITIONAL_SCHEMA = [("doc_id", "bigint"), ("url", "string"), ("score", "double")]
+SORTED_SCHEMA = [("doc_id", "bigint"), ("url", "string"), ("warc_ts", "timestamp_ntz"),
+                 ("lang", "string")]
+OOV = "zzqxv"
+# name -> (index, body, routing, hits schema, whether the search has hits)
 SEARCHES = {
-    "match_or": ("pages", MATCH, None),
+    "match_or": ("pages", MATCH, None, MATCH_SCHEMA, True),
     "match_and": ("pages", {"query": {"match": {"text": {
-        "query": "the of", "operator": "and"}}}, "size": 10}, None),
-    "match_phrase": ("pages", {"query": {"match_phrase": {"text": "of the"}}}, None),
+        "query": "the of", "operator": "and"}}}, "size": 10}, None, MATCH_SCHEMA, True),
+    "match_and_oov": ("pages", {"query": {"match": {"text": {
+        "query": f"the {OOV}", "operator": "and"}}}}, None, MATCH_SCHEMA, False),
+    "match_only_oov": ("pages", {"query": {"match": {"text": f"{OOV} {OOV}x"}}},
+                       None, MATCH_SCHEMA, False),
+    "match_phrase": ("pages", {"query": {"match_phrase": {"text": "of the"}}}, None,
+                     POSITIONAL_SCHEMA, True),
+    "match_phrase_absent": ("pages", {"query": {"match_phrase": {"text": f"of {OOV}"}}},
+                            None, POSITIONAL_SCHEMA, False),
     "match_phrase_prefix": ("pages", {"query": {"match_phrase_prefix": {
-        "text": "of th"}}}, None),
+        "text": "of th"}}}, None, POSITIONAL_SCHEMA, True),
     "intervals": ("pages", {"query": {"intervals": {"text": {"match": {
-        "query": "of the", "ordered": True}}}}}, None),
+        "query": "of the", "ordered": True}}}}}, None, POSITIONAL_SCHEMA, True),
     "span_near": ("pages", {"query": {"span_near": {
         "clauses": [{"span_term": {"text": "of"}}, {"span_term": {"text": "the"}}],
-        "slop": 0, "in_order": True}}}, None),
-    "routed_match": ("pages", MATCH, "u1"),
-    "match_from": ("pages", {**MATCH, "from": 3}, None),
+        "slop": 0, "in_order": True}}}, None, POSITIONAL_SCHEMA, True),
+    "routed_match": ("pages", MATCH, "u1", MATCH_SCHEMA, True),
+    "match_from": ("pages", {**MATCH, "from": 3}, None, MATCH_SCHEMA, True),
+    "routed_match_from": ("pages", {**MATCH, "from": 2}, "u1", MATCH_SCHEMA, True),
     "sorted_scan": ("sorted", {"query": {"match_all": {}},
-                               "sort": [{"warc_ts": "desc"}], "size": 5}, None),
+                               "sort": [{"warc_ts": "desc"}], "size": 5}, None,
+                    SORTED_SCHEMA, True),
 }
+MSEARCH = {"q0": {"terms": ["the", "of"]}, "q1": {"terms": ["of", "and"], "operator": "and"},
+           "q2": {"terms": [OOV]}}
 
 
 @pytest.fixture(scope="module")
@@ -59,23 +78,62 @@ def es(spark):
     return eng
 
 
-@pytest.mark.parametrize("name", list(SEARCHES))
-def test_one_spark_job_per_search(es, spark, name):
-    """Engine.search + collect on a warm reader runs exactly one Spark job:
-    the segment-task wave, whose collect is the coordinator merge (no
-    term-stats job, no schema-inference job, no fetch join, no routing
-    job)."""
-    index, body, routing = SEARCHES[name]
-    es.search(index, body, routing=routing)["hits"].collect()  # warm the reader
+def _jobs(spark, run):
+    """(run(), the number of Spark jobs it started)."""
     sc = spark.sparkContext
-    group = f"jobs-per-search-{name}"
+    group = f"jobs-{id(run)}"
     sc.setJobGroup(group, group)
     try:
-        rows = es.search(index, body, routing=routing)["hits"].collect()
+        out = run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert rows
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _collected(frame):
+    """(the frame, its collected rows)."""
+    return frame, frame.collect()
+
+
+def _fields(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+
+@pytest.mark.parametrize("name", list(SEARCHES))
+def test_zero_spark_jobs_per_search(es, spark, name):
+    """Engine.search + collect on a warm reader runs no Spark job at all —
+    query phase, merge and fetch run on the driver and the hits are a local
+    relation — also when nothing matches. The hits keep their exact schema
+    and equal a fresh Engine's."""
+    index, body, routing, schema, has_hits = SEARCHES[name]
+    es.search(index, body, routing=routing)["hits"].collect()  # warm the reader
+    (hits, rows), n_jobs = _jobs(
+        spark, lambda: _collected(es.search(index, body, routing=routing)["hits"]))
+    assert n_jobs == 0
+    assert _fields(hits) == schema
+    assert bool(rows) == has_hits
+    assert rows == Engine(spark, root=ROOT).search(index, body, routing=routing)["hits"].collect()
+
+
+def test_zero_spark_jobs_per_msearch(es, spark):
+    """msearch_topk runs no Spark job; per-qid top-k with the fetch fields,
+    equal to a fresh reader's answer and to one search_topk per query."""
+    reader = es._reader("pages")
+
+    def run():
+        return _collected(msearch_topk(spark, reader.index_dir, MSEARCH, reader=reader, fetch=True))
+
+    run()  # warm the term cache
+    (hits, rows), n_jobs = _jobs(spark, run)
+    assert n_jobs == 0
+    assert _fields(hits) == MATCH_SCHEMA[:4] + [("qid", "string")] + MATCH_SCHEMA[4:]
+    assert rows == msearch_topk(spark, reader.index_dir, MSEARCH, fetch=True).collect()
+    assert {r["qid"] for r in rows} == {"q0", "q1"}
+    for qid, q in MSEARCH.items():
+        one = search_topk(spark, reader.index_dir, q["terms"], reader=reader,
+                          operator=q.get("operator", "or")).collect()
+        assert [r.asDict() for r in one] == [
+            {k: v for k, v in r.asDict().items() if k != "qid"} for r in rows if r["qid"] == qid]
 
 
 def _docs(spark, rows):
@@ -266,3 +324,98 @@ def test_prefix_range_is_exact(prefix, s):
     if end is not None:
         assert (prefix <= prefix + s < end)
         end.encode("utf-8")  # a valid bound for parquet filters
+
+
+@pytest.mark.parametrize("name", ["match_or", "match_phrase", "span_near", "msearch"])
+def test_failing_segment_fails_the_search(es, spark, monkeypatch, name):
+    """One segment whose postings read raises fails the whole search with
+    that error — never a partial page from the other segments — and the
+    shared query-phase pool keeps serving afterwards."""
+    reader = es._reader("pages")
+    bad = store.seg_dir(reader.index_dir, reader.segs[len(reader.segs) // 2])
+    postings = topk.Segment.postings
+
+    def broken(self, terms, positions=False):
+        if self.dir == bad:
+            raise OSError(f"injected read failure in {bad}")
+        return postings(self, terms, positions)
+
+    if name == "msearch":
+        def search():
+            return msearch_topk(spark, reader.index_dir, MSEARCH, reader=reader).collect()
+    else:
+        index, body, routing, _, _ = SEARCHES[name]
+
+        def search():
+            return es.search(index, body, routing=routing)["hits"].collect()
+
+    want = search()
+    monkeypatch.setattr(topk.Segment, "postings", broken)
+    with pytest.raises(OSError, match="injected read failure"):
+        search()
+    monkeypatch.setattr(topk.Segment, "postings", postings)
+    assert search() == want
+
+
+def test_highlight_and_fields_ride_the_fetch(es, spark):
+    """highlight and fields / docvalue_fields on an index search read the
+    stored text and fields from the one post-merge fetch: no Spark job, and
+    the values a join of the hits with the live docs view gives."""
+    body = {**MATCH, "highlight": {"fields": {"text": {"fragment_size": 40}}},
+            "fields": [{"field": "warc_ts", "format": "yyyy-MM-dd"}, "lang", "doc_id",
+                       "no_such_field"],
+            "docvalue_fields": ["text"]}
+    es.search("pages", body)["hits"].collect()
+    (hits, rows), n_jobs = _jobs(spark, lambda: _collected(es.search("pages", body)["hits"]))
+    assert n_jobs == 0
+    assert rows and all(r["highlight"] for r in rows)
+    plain = es.search("pages", MATCH)["hits"].collect()
+    assert [(r["url"], r["score"]) for r in rows] == [(r["url"], r["score"]) for r in plain]
+    view = es._docs_view("pages").select("url", "text")
+    want = highlight(
+        es.search("pages", MATCH)["hits"].join(view, "url"), ["the", "of"], fragment_size=40,
+    ).select("url", "text", "highlight", F.date_format("warc_ts", "yyyy-MM-dd").alias("day"),
+             "lang")
+    want = {r["url"]: r for r in want.collect()}
+    for r in rows:
+        w = want[r["url"]]
+        assert (r["highlight"], r["text"], r["fields.text"], r["fields.warc_ts"],
+                r["fields.lang"]) == (w["highlight"], w["text"], w["text"], w["day"], w["lang"])
+        assert r["fields.doc_id"] == str(r["doc_id"])
+    assert hits.columns.count("doc_id") == 1
+    assert "fields.no_such_field" not in hits.columns
+
+    phrase = {"query": {"match_phrase": {"text": "of the"}}, "fields": ["lang"]}
+    es.search("pages", phrase)["hits"].collect()
+    (hits, rows), n_jobs = _jobs(spark, lambda: _collected(es.search("pages", phrase)["hits"]))
+    assert n_jobs == 0
+    langs = {r["url"]: r["lang"] for r in es._docs_view("pages").select("url", "lang").collect()}
+    assert rows and all(r["lang"] == r["fields.lang"] == langs[r["url"]] for r in rows)
+
+
+def test_result_window_reads_the_open_reader(es, monkeypatch):
+    """The from + size window check reads index.max_result_window from the
+    Engine's open reader: a warm search loads no index meta from disk."""
+    es.search("pages", MATCH)
+    loads = []
+    load = store.IndexMeta.load.__func__
+    monkeypatch.setattr(store.IndexMeta, "load",
+                        classmethod(lambda cls, d: loads.append(d) or load(cls, d)))
+    es.search("pages", MATCH)["hits"].collect()
+    with pytest.raises(ValueError, match=r"equal to: \[10000\]"):
+        es.search("pages", {**MATCH, "from": 10_000})
+    assert loads == []
+    with pytest.raises(ValueError, match="index_not_found_exception"):
+        es.search("no_such_index", MATCH)
+
+
+def test_query_phase_tasks_may_not_use_the_pool(es):
+    """A per-segment function that starts a query phase of its own is
+    refused loudly instead of deadlocking the shared pool."""
+    reader = es._reader("pages")
+
+    def nested(seg):
+        return topk.query_phase(reader, reader.segs[:1], lambda s: None)
+
+    with pytest.raises(RuntimeError, match="may not wait on the query-phase pool"):
+        topk.query_phase(reader, reader.segs, nested)
