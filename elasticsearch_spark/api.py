@@ -25,6 +25,8 @@ view — the same split as the reference's query-then-fetch.
 
 from __future__ import annotations
 
+import copy
+import functools
 import itertools
 import os
 import re
@@ -1255,6 +1257,89 @@ class Engine:
     def _docs_view(self, index: str) -> DataFrame:
         return ops_mod.live_docs(self.spark, self._dir(index))
 
+    def _index_hits(self, reader: IndexReader, q: dict, k: int, segs=None,
+                    routing: str | None = None, offset: int = 0,
+                    fields=(), fetch: bool = True) -> DataFrame | None:
+        """The one index-leaf dispatcher: hits ``offset .. offset+k`` of the
+        leaf ``q`` on the index's positional ``text`` field — match
+        (``search_topk``), span_* (``search_spans``), match_phrase and
+        match_phrase_prefix (``operators/phrase.py``) and intervals
+        (``search_intervals_source``) — or None when the index cannot
+        answer ``q`` (another field or kind). Text is analyzed by the
+        index's analyzer and scored by its postings BM25; the stored
+        ``fields`` ride the fetch. ``fetch=False`` (a match set, which
+        needs only its keys) fetches ``url`` alone where match would also
+        fetch ``lang`` and ``warc_ts``. ``segs`` pins the segment set the
+        way a PIT does; ``routing`` keeps one shard's segments."""
+        (kind, spec), = q.items()
+        if _fast_path_fields(kind, spec) != {"text"}:
+            return None
+        if segs is not None:
+            reader = copy.copy(reader)  # the same reader over the pinned segments
+            reader.segs = list(segs)
+        opts = {"k": k, "routing": routing, "offset": offset, "fields": fields}
+        if kind.startswith("span_"):
+            from .operators.spans import search_spans
+
+            return search_spans(reader, q, **opts)
+        (_, qspec), = spec.items()
+        if kind == "intervals":
+            from .operators.intervals import search_intervals_source
+
+            return search_intervals_source(reader, qspec, **opts)
+        qspec = qspec if isinstance(qspec, dict) else {"query": qspec}
+        if kind == "match":
+            terms = analysis.analyze(qspec["query"], reader.meta.analyzer)
+            if not fetch:
+                opts["fields"] = ("url", *fields)
+            return search_topk(
+                self.spark, reader.index_dir, terms, operator=qspec.get("operator", "or"),
+                minimum_should_match=dsl.resolve_msm(
+                    qspec.get("minimum_should_match"), len(set(terms))),
+                # WAND pays off only when k cuts the match set
+                mode="wand" if offset + k < reader.meta.doc_count else "naive",
+                fetch=fetch, reader=reader, **opts)
+        from .operators.phrase import search_phrase, search_phrase_prefix
+
+        fn = search_phrase if kind == "match_phrase" else search_phrase_prefix
+        return fn(reader, qspec["query"], slop=qspec.get("slop", 0), **opts)
+
+    def _index_leaves(self, index: str, segs=None):
+        """``SearchContext.index_leaf`` over ``index``: a text leaf's match
+        set — every matching live doc of ``segs`` (default: the current
+        ones) as its ``url`` and score — from ``_index_hits``; None when
+        the index has no meta yet (only the DSL can answer). The set is
+        built on the driver, so it holds one row per matching doc."""
+        if not os.path.exists(store.meta_path(self._dir(index))):
+            return None
+        reader = self._reader(index)
+        return lambda q: self._index_hits(reader, q, reader.meta.doc_count, segs, fetch=False)
+
+    def _context(self, index: str, docs: DataFrame, segs=None) -> dsl.SearchContext:
+        """The query context over ``docs``, a view of ``index``'s live docs:
+        key ``url``, the index's keyword normalizers and its answer for
+        text leaves."""
+        return dsl.SearchContext(docs, "url", text_col="text",
+                                 kw_norm=self._kw_normalizers(index),
+                                 index_leaf=self._index_leaves(index, segs))
+
+    def _matching(self, index: str, query: dict | None, docs: DataFrame | None = None,
+                  segs=None) -> DataFrame:
+        """The rows of ``docs`` (default: the live docs view) that ``query``
+        matches — the one answer to "which docs does this query match" for
+        count and track_total_hits, aggs, validate_query, the async partial
+        reduce, delete/update-by-query, reindex, datafeeds and vector tiles.
+        A search's hits agree with it: text leaves on the index (match,
+        match_phrase, match_phrase_prefix, intervals) are its postings'
+        match sets, computed by the driver-side query phase; every other
+        clause compiles to a predicate over ``docs``. A query with no
+        predicate (a scoring-only node, or a compound holding an index
+        leaf) is a semi-join on its frame's keys (``dsl.matching``)."""
+        docs = self._docs_view(index) if docs is None else docs
+        if not query or "match_all" in query:
+            return docs
+        return dsl.matching(dsl.parse(query), self._context(index, docs, segs))
+
     # ----- query rules (x-pack/plugin/ent-search rules API) -----
 
     def _query_rulesets_path(self) -> str:
@@ -1353,12 +1438,17 @@ class Engine:
         value's shard segments — same results when docs were indexed with
         that routing, ~P× less scan work.
 
-        `match`-family queries at the TOP level of the body run through the
-        inverted index (postings + block-max WAND) with this engine's open
-        reader of the index (``_reader``: meta, segments and term stats on
-        the driver); the query phase, merge and fetch run on the driver and
-        the hits frame is a local relation — no Spark job. Compound/
-        filter bodies run through the DSL compiler over the live docs view.
+        A text leaf on ``text`` at the TOP level of the body (match,
+        span_*, match_phrase, match_phrase_prefix, intervals) takes its
+        hits from ``_index_hits`` with this engine's open reader of the
+        index (``_reader``: meta, segments and term stats on the driver);
+        the query phase, merge and fetch run on the driver and the hits
+        frame is a local relation — no Spark job. Every other body runs
+        through the DSL compiler over the live docs view; its text leaves
+        on ``text`` are the same dispatcher's match sets
+        (``_index_leaves``), so wrapping a query in ``bool`` keeps its
+        matches and scores. ``aggs`` and ``track_total_hits`` count the
+        docs ``_matching`` selects — the docs the hits come from.
 
         ``index`` may be an alias: multi-index aliases fan out through
         ``search_multi`` (cross-index semantics)."""
@@ -1528,77 +1618,35 @@ class Engine:
             have = reader.docs_footer.names if reader.docs_footer is not None else []
             return [n for n in names if n in have]
 
-        if (
-            kind == "match"
-            and on_text
-            and "sort" not in body
-            and "search_after" not in body
-            and "post_filter" not in body
+        hits = None
+        if on_text and "sort" not in body and (
+            kind.startswith("span_") or not {"search_after", "post_filter"} & body.keys()
         ):
-            (fld, mspec), = spec.items()
-            mspec = mspec if isinstance(mspec, dict) else {"query": mspec}
-            reader = reader or self._reader(index)
-            terms = analysis.analyze(mspec["query"], reader.meta.analyzer)
-            hl = body.get("highlight")
-            hits = search_topk(
-                self.spark, d, terms, k=size, operator=mspec.get("operator", "or"),
-                minimum_should_match=dsl.resolve_msm(
-                    mspec.get("minimum_should_match"), len(set(terms))),
-                mode="wand", reader=reader, pit_segs=pit_segs, routing=routing,
-                offset=frm, fields=stored(reader, *requested, *(["text"] if hl else [])),
-            )
-            if hl:
-                hl_terms = self._highlight_terms(hl, terms, reader.meta.analyzer)
-                hits = highlight_fn(hits, hl_terms, **self._highlight_opts(hl))
-                if "text" not in requested:
-                    hits = hits.drop("text")
-        elif kind.startswith("span_") and on_text and "sort" not in body:
             if "post_filter" in body:
                 # span queries exist only on the index path, which has no
                 # post-collection filter stage — refuse instead of
                 # returning un-filtered hits
                 raise ValueError("post_filter is not supported with span_* queries")
-            # full span family (SpanNearQueryBuilder.java et al.): the
-            # span-algebra evaluator over the positional index
-            # (operators/spans.py). span_term values are used verbatim
-            # (not re-analyzed), matching the reference's span_term
-            # semantics.
-            from .operators.spans import search_spans
-
+            hl = body.get("highlight") if kind == "match" else None
             reader = reader or self._reader(index)
-            hits = search_spans(reader, q, k=size, routing=routing, offset=frm,
-                                fields=stored(reader, *requested))
-        elif (
-            kind in ("match_phrase", "match_phrase_prefix", "intervals")
-            and on_text
-            and "sort" not in body
-            and "post_filter" not in body
-        ):
-            # with a post_filter these fall through to the DSL path below
-            # (token-stream positional evaluation), which applies it after
-            # scoring like every other query. On the index they run the
-            # one interval evaluator (operators/intervals.py).
-            reader = reader or self._reader(index)
-            (fld, qspec), = spec.items()
-            if kind == "intervals":
-                from .operators.intervals import search_intervals_source
-
-                hits = search_intervals_source(
-                    reader, qspec, k=size, routing=routing, offset=frm,
-                    fields=stored(reader, *requested))
-            else:
-                from .operators.phrase import search_phrase, search_phrase_prefix
-
-                qspec = qspec if isinstance(qspec, dict) else {"query": qspec}
-                fn = search_phrase if kind == "match_phrase" else search_phrase_prefix
-                hits = fn(reader, qspec["query"], k=size, slop=qspec.get("slop", 0),
-                          routing=routing, offset=frm, fields=stored(reader, *requested))
-        else:
+            hits = self._index_hits(
+                reader, q, size, segs=pit_segs, routing=routing, offset=frm,
+                fields=stored(reader, *requested, *(["text"] if hl else [])))
+            if hl:
+                (_, mspec), = spec.items()
+                terms = analysis.analyze(
+                    mspec["query"] if isinstance(mspec, dict) else mspec, reader.meta.analyzer)
+                hl_terms = self._highlight_terms(hl, terms, reader.meta.analyzer)
+                hits = highlight_fn(hits, hl_terms, **self._highlight_opts(hl))
+                if "text" not in requested:
+                    hits = hits.drop("text")
+        if hits is None:
             # runtime mappings are applied INSIDE dsl.search (applying
             # them here too would double-apply shadowing scripts)
             docs = self._docs_view(index)
             hits = dsl.search(self.spark, docs, body, key="url", text_col="text",
-                              kw_norm=self._kw_normalizers(index))
+                              kw_norm=self._kw_normalizers(index),
+                              index_leaf=self._index_leaves(index))
             # requested fields a _source filter dropped come back by url
             have = [n for n in requested if n not in hits.columns and n in docs.columns]
             if have and "url" in hits.columns:
@@ -1630,22 +1678,11 @@ class Engine:
         out = {"hits": hits}
         if kind == "nested" and "inner_hits" in spec:
             # InnerHitsPhase: the matching sub-docs per parent hit
-            node = dsl.parse(q)
-            ih_ctx = dsl.SearchContext(_apply_runtime(self._docs_view(index)), "url", text_col="text")
-            out["inner_hits"] = node.inner_hits_frame(
-                ih_ctx, size=int((spec["inner_hits"] or {}).get("size", 3))
-            )
+            out["inner_hits"] = dsl.parse(q).inner_hits_frame(
+                self._context(index, _apply_runtime(self._docs_view(index))),
+                size=int((spec["inner_hits"] or {}).get("size", 3)))
         if "aggs" in body:
-            base = _apply_runtime(self._docs_view(index))
-            if kind != "match_all":
-                node = dsl.parse(q)
-                ctx = dsl.SearchContext(base, "url", text_col="text",
-                                        kw_norm=self._kw_normalizers(index))
-                try:
-                    base = base.where(node.predicate(ctx))
-                except NotImplementedError:
-                    keyed = node.frame(ctx).select("__key")
-                    base = base.join(keyed.withColumnRenamed("__key", "url"), "url", "left_semi")
+            base = self._matching(index, q, _apply_runtime(self._docs_view(index)))
             out["aggregations"] = aggs_mod.aggregate(base, body["aggs"])
         if body.get("profile"):
             # SearchProfileResults analog: the Spark physical plan for the
@@ -1704,7 +1741,7 @@ class Engine:
                 if any(fnmatch.fnmatch(c, p) for p in inc)
                 and not any(fnmatch.fnmatch(c, p) for p in exc)
             }
-        return hits.select(*[c for c in hits.columns if is_meta(c) or c in keep])
+        return hits.select(*[F.col(f"`{c}`") for c in hits.columns if is_meta(c) or c in keep])
 
     def _run_suggest(self, index: str, suggest: dict) -> dict:
         """The search body ``suggest`` section (SuggestBuilder): named
@@ -1763,7 +1800,8 @@ class Engine:
                 res[name] = completion_suggest(
                     self.spark, d, text,
                     size=sbody.get("size", 5),
-                    fuzziness=(sbody.get("fuzzy") or {}).get("fuzziness", 0),
+                    fuzziness=dsl.resolve_fuzziness(
+                        (sbody.get("fuzzy") or {}).get("fuzziness", 0), text),
                     contexts=spec.get("contexts") or sbody.get("contexts"),
                 )
         return res
@@ -2022,16 +2060,7 @@ class Engine:
         concrete = self.resolve(index)
         if len(concrete) > 1:
             return sum(self.count(i, query) for i in concrete)
-        docs = self._docs_view(concrete[0])
-        if not query:
-            return docs.count()
-        node = dsl.parse(query)
-        ctx = dsl.SearchContext(docs, "url", text_col="text",
-                                kw_norm=self._kw_normalizers(concrete[0]))
-        try:
-            return docs.where(node.predicate(ctx)).count()
-        except NotImplementedError:
-            return node.frame(ctx).count()
+        return self._matching(concrete[0], query).count()
 
     # ---- introspection / helpers -----------------------------------------
 
@@ -2395,26 +2424,21 @@ class Engine:
         """GET /{index}/_validate/query: compile the DSL without executing
         (ValidateQueryAction) — reports the parse/compile error if any.
         Accepts a bare query dict or a full ``{"query": ..., "explain":
-        bool}`` body; ``explain: true`` adds the compiled Spark predicate
-        (the reference's Lucene-query explanation analog)."""
+        bool}`` body; ``explain: true`` adds the analyzed Spark plan of the
+        matching docs (the reference's Lucene-query explanation analog).
+        The compile is ``_matching``'s, so it is not free of work: a text
+        leaf on the index runs its query phase and builds its match set on
+        the driver."""
         explain = False
         if set(query) <= {"query", "explain", "rewrite"}:
             explain = bool(query.get("explain"))
             query = query.get("query", {"match_all": {}})
         docs = self._docs_view(index)
         try:
-            node = dsl.parse(query)
-            ctx = dsl.SearchContext(docs, "url", text_col="text")
+            plan = self._matching(index, query, docs)._jdf.queryExecution().analyzed()
             out = {"valid": True, "error": None}
-            try:
-                pred = node.predicate(ctx)
-                _ = docs.where(pred).schema  # force analysis
-                if explain:
-                    out["explanation"] = str(pred)
-            except NotImplementedError:
-                node.frame(ctx)
-                if explain:
-                    out["explanation"] = type(node).__name__
+            if explain:
+                out["explanation"] = plan.toString()
             return out
         except Exception as e:  # noqa: BLE001 — the API reports, not raises
             return {"valid": False, "error": f"{type(e).__name__}: {e}"}
@@ -2708,25 +2732,20 @@ class Engine:
                 return None
             total = len(segs)
             k = max(1, total // 2)
-            paths = [os.path.join(store.seg_dir(d, s), "docs.parquet")
-                     for s in segs[:k]]
+            half = segs[:k]
+            paths = [os.path.join(store.seg_dir(d, s), "docs.parquet") for s in half]
             view = ops_mod.mask_tombstones(
                 self.spark, d, self.spark.read.parquet(*paths))
             part_body = {kk: vv for kk, vv in body.items()
                          if kk not in ("aggs", "aggregations")}
-            hits = dsl.search(self.spark, view, part_body,
-                              key="url", text_col="text").collect()
+            hits = dsl.search(self.spark, view, part_body, key="url", text_col="text",
+                              kw_norm=self._kw_normalizers(concrete[0]),
+                              index_leaf=self._index_leaves(concrete[0], half)).collect()
             aggs_out = {}
             agg_spec = body.get("aggs") or body.get("aggregations")
             if agg_spec:
-                from .plans import aggs as aggs_mod2
-
-                q = body.get("query")
-                base = view
-                if q:
-                    ctx = dsl.SearchContext(view, "url", text_col="text")
-                    base = view.where(dsl.parse(q).predicate(ctx))
-                for an, af in aggs_mod2.aggregate(base, agg_spec).items():
+                base = self._matching(concrete[0], body.get("query"), view, half)
+                for an, af in aggs_mod.aggregate(base, agg_spec).items():
                     aggs_out[an] = af.collect()
             return {
                 "hits": hits,
@@ -2942,23 +2961,17 @@ class Engine:
         }
 
     def delete_by_query(self, index: str, query: dict) -> dict:
-        """POST /{index}/_delete_by_query: DISTRIBUTED tombstone write — the
-        matching doc_ids go straight from the executors into a tombstone
-        batch (no driver collect; a broad delete at 100 TB never funnels
-        ids through one process). doc_count/df keep counting masked docs
+        """POST /{index}/_delete_by_query: a tombstone write of the docs
+        ``_matching`` selects — the same docs a search with this query
+        hits. The matching doc_ids go from the executors into a tombstone
+        batch; a query of stored-field predicates never collects ids on the
+        driver, while a text leaf on the index takes its match set from the
+        driver-side query phase. doc_count/df keep counting masked docs
         until a merge expunges them — reference semantics."""
         self._check_write_allowed(index)
         if set(query) == {"query"}:  # REST body shape {"query": {...}}
             query = query["query"]
-        docs = self._docs_view(index)
-        node = dsl.parse(query)
-        ctx = dsl.SearchContext(docs, "url", text_col="text",
-                                kw_norm=self._kw_normalizers(index))
-        try:
-            matched = docs.where(node.predicate(ctx))
-        except NotImplementedError:
-            keyed = node.frame(ctx).select("__key").withColumnRenamed("__key", "url")
-            matched = docs.join(keyed, "url", "left_semi")
+        matched = self._matching(index, query)
         n = ops_mod.append_tombstones(self.spark, self._dir(index), matched.select("doc_id"))
         return {"deleted": n}
 
@@ -2987,11 +3000,7 @@ class Engine:
         path) or a Painless ``ctx._source`` mutator
         (UpdateByQueryRequest's script context)."""
         self._check_write_allowed(index)
-        docs = self._docs_view(index)
-        node = dsl.parse(query)
-        ctx = dsl.SearchContext(docs, "url", text_col="text",
-                                kw_norm=self._kw_normalizers(index))
-        matched = docs.where(node.predicate(ctx))
+        matched = self._matching(index, query)
         rewritten = self._source_script(
             matched.drop("doc_id", "dl", "norm", "seg_id"), script_expr)
         extra = [c for c in rewritten.columns
@@ -3009,12 +3018,7 @@ class Engine:
         # full _source: every stored column rides along (ES reindex copies
         # the whole document) — the fixed 4-column select silently dropped
         # custom fields
-        docs = self._docs_view(source).drop("doc_id", "dl", "norm", "seg_id")
-        if query:
-            node = dsl.parse(query)
-            ctx = dsl.SearchContext(docs, "url", text_col="text",
-                                    kw_norm=self._kw_normalizers(source))
-            docs = docs.where(node.predicate(ctx))
+        docs = self._matching(source, query).drop("doc_id", "dl", "norm", "seg_id")
         if script is not None:
             ssrc, _ = dsl.script_source(script)
             docs = self._source_script(docs, ssrc)
@@ -3597,18 +3601,9 @@ class Engine:
         state = self._load_ml()
         feed = state["datafeeds"][datafeed_id]
         job = state["jobs"][feed["job_id"]]
-        frames = []
-        for index in feed["indices"]:
-            docs = self._docs_view(index)
-            if feed.get("query"):
-                node = dsl.parse(feed["query"])
-                ctx = dsl.SearchContext(docs, "url", text_col="text",
-                                        kw_norm=self._kw_normalizers(index))
-                docs = docs.where(node.predicate(ctx))
-            frames.append(docs)
-        docs = frames[0]
-        for f in frames[1:]:
-            docs = docs.unionByName(f, allowMissingColumns=True)
+        docs = functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [self._matching(index, feed.get("query")) for index in feed["indices"]])
         ac = job["analysis_config"]
         tf = job.get("data_description", {}).get("time_field", "warc_ts")
         if start:
@@ -3798,10 +3793,7 @@ class Engine:
         lon_max = (x + 1) / n * 360.0 - 180.0
         lat_max = _m.degrees(_m.atan(_m.sinh(_m.pi * (1 - 2 * y / n))))
         lat_min = _m.degrees(_m.atan(_m.sinh(_m.pi * (1 - 2 * (y + 1) / n))))
-        docs = self._docs_view(index)
-        if query is not None:
-            node = dsl.parse(query)
-            docs = docs.where(node.predicate(dsl.SearchContext(docs, "url")))
+        docs = self._matching(index, query)
         in_tile = docs.where(
             (F.col(f"{field}.lon") >= lon_min) & (F.col(f"{field}.lon") < lon_max)
             & (F.col(f"{field}.lat") > lat_min) & (F.col(f"{field}.lat") <= lat_max)

@@ -296,8 +296,11 @@ def compile_source(reader: IndexReader, src: dict) -> dict:
     elif kind in ("wildcard", "regexp"):
         node = leaf(reader.expand_terms(kind, body["pattern"], MAX_EXPANSIONS))
     elif kind == "fuzzy":
+        from ..plans.dsl import resolve_fuzziness
+
         node = leaf(reader.expand_terms(
-            kind, body["term"], MAX_EXPANSIONS, int(body.get("fuzziness", 2)),
+            kind, body["term"], MAX_EXPANSIONS,
+            resolve_fuzziness(body.get("fuzziness", 2), body["term"]),
             int(body.get("prefix_length", 0))))
     elif kind == "any_of":
         node = {"op": "any_of", "children": [compile_source(reader, s) for s in body["intervals"]]}

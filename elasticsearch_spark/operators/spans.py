@@ -326,8 +326,11 @@ def _span_multi_expander(reader: IndexReader, max_expansions: int = 50):
         if isinstance(ms, dict) and len(ms) == 1 and isinstance(next(iter(ms.values())), (dict, str)):
             (_fld, ms), = ms.items()
         spec = ms if isinstance(ms, dict) else {"value": ms}
+        from ..plans.dsl import resolve_fuzziness
+
         return reader.expand_terms(
-            kind, spec["value"], max_expansions, int(spec.get("fuzziness", 2)),
+            kind, spec["value"], max_expansions,
+            resolve_fuzziness(spec.get("fuzziness", 2), str(spec["value"])),
             int(spec.get("prefix_length", 0)))
 
     return expand

@@ -24,8 +24,9 @@ msearch, phrase, intervals, spans and the index-sorted scan. A search runs
 NO Spark job: at 8-16 segments a job's Arrow/Python round trip costs more
 than the per-segment work it would spread.
 
-- ``query_segments`` lists the segments a query scans (a PIT's pinned set
-  or the current ones, pruned to a routing value's shard);
+- ``query_segments`` lists the segments a query scans (the reader's,
+  pruned to a routing value's shard; a point-in-time search pins a copy
+  of the reader over its segment set);
 - ``query_phase`` runs a per-segment function over them on the driver's
   query-phase thread pool (``sparkContext.defaultParallelism`` threads;
   the pyarrow reads and numpy kernels release the GIL for most of their
@@ -655,22 +656,14 @@ def routed_segs(
     ]
 
 
-def query_segments(
-    reader: IndexReader,
-    pit_segs: list[int] | None = None,
-    routing: str | None = None,
-) -> list[int]:
-    """Segments a query scans. ``pit_segs`` is a point-in-time reader's
-    pinned set (segments are immutable, so pinning the set at open time
-    gives repeatable reads across concurrent bulks), else the reader's
-    segments; ``routing`` (``?routing=``, IndexRouting.java) keeps only the
-    value's shard plus unknown-shard segments — query cost drops from
-    O(segments) to O(segments/P), the shard-pruning the reference gets by
-    sending the search to one shard."""
-    segs = pit_segs if pit_segs is not None else reader.segs
+def query_segments(reader: IndexReader, routing: str | None = None) -> list[int]:
+    """Segments a query scans: the reader's; ``routing`` (``?routing=``,
+    IndexRouting.java) keeps only the value's shard plus unknown-shard
+    segments — query cost drops from O(segments) to O(segments/P), the
+    shard-pruning the reference gets by sending the search to one shard."""
     if routing is None:
-        return segs
-    return routed_segs(reader.index_dir, segs, routing, reader.meta)
+        return reader.segs
+    return routed_segs(reader.index_dir, reader.segs, routing, reader.meta)
 
 
 _POOL: ThreadPoolExecutor | None = None
@@ -776,20 +769,18 @@ def search_topk(
     mode: str = "wand",
     fetch: bool = True,
     reader: IndexReader | None = None,
-    pit_segs: list[int] | None = None,
     routing: str | None = None,
     offset: int = 0,
     fields=(),
 ) -> DataFrame:
     """Multi-term BM25 top-k over the index (query-then-fetch lifecycle):
     the one-query case of the batched per-segment scorer, run on the
-    driver with no Spark job. ``fetch`` attaches ``FETCH_FIELDS`` and the
-    stored ``fields`` to the final hits; ``offset`` skips that many top
+    driver with no Spark job. ``fetch`` attaches ``FETCH_FIELDS``, and the
+    stored ``fields`` ride the fetch either way; ``offset`` skips that many top
     hits (``from``), each segment emitting ``offset + k``.
 
-    pit_segs / routing: the segment pinning and shard pruning of
-    ``query_segments``. Shard-aware tiered merge keeps merged segments
-    prunable."""
+    routing: the shard pruning of ``query_segments``. Shard-aware tiered
+    merge keeps merged segments prunable."""
     reader = reader or IndexReader(spark, index_dir)
     meta = reader.meta
     terms = list(dict.fromkeys(query_terms))
@@ -799,9 +790,9 @@ def search_topk(
     if not live or (operator == "and" and len(live) < len(terms)):
         segs = []  # nothing can match
     else:
-        segs = query_segments(reader, pit_segs, routing)
+        segs = query_segments(reader, routing)
     fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k + offset)
-    return search_segments(reader, segs, fn, k, offset, (*FETCH_FIELDS, *fields) if fetch else ())
+    return search_segments(reader, segs, fn, k, offset, (*(FETCH_FIELDS if fetch else ()), *fields))
 
 
 def msearch_topk(

@@ -29,12 +29,20 @@ shuffles, full pushdown). Match clauses share ONE tokenize+tf+dl subtree
 per search (built once, reused across clauses); each clause is a filtered
 aggregation over it. Everything stays JVM-side (regexp tokenizer is a
 native Spark expression; no Python UDFs in this path).
+
+Over an Engine index the context carries the index's answer for text
+leaves (``SearchContext.index_leaf``): match, match_phrase,
+match_phrase_prefix and intervals on the indexed ``text`` field become the
+index's match set — its analyzer, its postings BM25 — and compose like any
+other leaf frame. They have no filter-context predicate there; every
+filter-context consumer goes through ``matching``, the one semi-join
+fallback.
 """
 
 from __future__ import annotations
 
 import re
-
+from collections.abc import Callable
 from dataclasses import dataclass, field, replace as _dc_replace
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -178,6 +186,10 @@ class SearchContext:
     # stored column via the Column chain, literals/patterns via the mirrored
     # Python chain (functions/analysis.normalize_col / normalize_str).
     kw_norm: dict = field(default_factory=dict)
+    # set by Engine over an index: ``{kind: {field: spec}}`` → the index's
+    # hits frame (``url``, ``score``) for a text leaf, or None when the
+    # index cannot answer it. Only the ``text_col`` view carries it.
+    index_leaf: Callable[[dict], DataFrame | None] | None = field(default=None, repr=False)
     _tf: DataFrame | None = field(default=None, repr=False)
     _dl: DataFrame | None = field(default=None, repr=False)
     _coll: DataFrame | None = field(default=None, repr=False)
@@ -198,7 +210,15 @@ class SearchContext:
         cached analysis frames reset since they belong to the other field."""
         if fld == self.text_col:
             return self
-        return _dc_replace(self, text_col=fld, _tf=None, _dl=None, _coll=None)
+        return _dc_replace(self, text_col=fld, index_leaf=None, _tf=None, _dl=None, _coll=None)
+
+    def index_frame(self, q: dict, boost: float = 1.0) -> DataFrame | None:
+        """The index's match set for the text leaf ``q`` as a score frame
+        (its postings BM25 × ``boost``), or None over a raw frame."""
+        hits = self.index_leaf(q) if self.index_leaf is not None else None
+        if hits is None:
+            return None
+        return hits.select(F.col("url").alias("__key"), (F.col("score") * boost).alias("_score"))
 
     def toks_sql(self) -> str:
         """The token-stream as SQL text (for expressions that must embed it
@@ -280,7 +300,7 @@ class Node:
         """DataFrame[__key] of docs passing this node as a filter — the
         semi-join form of the filter context (used by bool.filter/must_not
         for nodes whose predicate needs its own plan, e.g. nested)."""
-        return ctx.df.where(self.predicate(ctx)).select(F.col(ctx.key).alias("__key"))
+        return matching(self, ctx).select(F.col(ctx.key).alias("__key"))
 
     def frame(self, ctx: SearchContext) -> DataFrame:
         """DataFrame[__key, _score]; default = constant_score(predicate)."""
@@ -289,6 +309,20 @@ class Node:
             .select(F.col(ctx.key).alias("__key"))
             .withColumn("_score", F.lit(self.boost if hasattr(self, "boost") else 1.0))
         )
+
+
+def matching(node: Node, ctx: SearchContext, rows: DataFrame | None = None) -> DataFrame:
+    """The ``rows`` (default ``ctx.df``; any frame with ``ctx.key`` and the
+    columns ``node`` reads) that ``node`` matches: its filter-context
+    predicate, or a semi-join on its frame's keys when it has none
+    (scoring-only nodes, and the text leaves an index answers). Never a
+    literal list of matched keys, whose size would be unbounded."""
+    rows = ctx.df if rows is None else rows
+    try:
+        return rows.where(node.predicate(ctx))
+    except NotImplementedError:
+        keys = node.frame(ctx).select(F.col("__key").alias(ctx.key))
+        return rows.join(keys, ctx.key, "left_semi")
 
 
 @dataclass
@@ -531,6 +565,21 @@ def resolve_msm(msm, n: int) -> int:
     return v if v >= 0 else max(0, n + v)
 
 
+def resolve_fuzziness(fuzziness, term: str) -> int:
+    """A ``fuzziness`` value → max edits for ``term`` (``Fuzziness.java``):
+    ``AUTO`` allows 0/1/2 edits for terms of length 1-2 / 3-5 / >5
+    (``AUTO:low,high`` moves those bounds, edits = 0 below ``low``, 1 below
+    ``high``, else 2); ints and numeric strings pass through."""
+    s = str(fuzziness).strip()
+    if s.upper().startswith("AUTO"):
+        low, high = 3, 6
+        if ":" in s:
+            low, high = (int(x) for x in s.split(":", 1)[1].split(","))
+        n = len(term)
+        return 0 if n < low else 1 if n < high else 2
+    return int(float(s))
+
+
 @dataclass
 class MatchQ(Node):
     """match (MatchQueryBuilder.java): analyze → per-term BM25, OR/AND."""
@@ -541,8 +590,16 @@ class MatchQ(Node):
     minimum_should_match: int | str = 1
     boost: float = 1.0
 
+    def _spec(self) -> dict:
+        return {"match": {self.fld: {
+            "query": self.query, "operator": self.operator,
+            "minimum_should_match": self.minimum_should_match}}}
+
     def frame(self, ctx):
         ctx = ctx.for_field(self.fld)  # match scopes to ITS field, not the default
+        fr = ctx.index_frame(self._spec(), self.boost)
+        if fr is not None:
+            return fr
         terms = list(dict.fromkeys(ctx.analyze(self.query)))
         if not terms:
             return ctx.df.limit(0).select(
@@ -556,6 +613,8 @@ class MatchQ(Node):
     def predicate(self, ctx):
         # match in filter context: containment of required terms
         ctx = ctx.for_field(self.fld)
+        if ctx.index_leaf is not None:
+            raise NotImplementedError("the index answers match on its text field")
         terms = list(dict.fromkeys(ctx.analyze(self.query)))
         if not terms:
             # zero_terms_query: none — nothing matches (frame() agrees)
@@ -645,11 +704,6 @@ class CommonTermsQ(Node):
             .select("__key", "_score")
         )
 
-    def filter_keys(self, ctx):
-        # filter context: same selection, scores dropped (the df split is
-        # data-dependent, so there is no standalone Column predicate)
-        return self.frame(ctx).select("__key")
-
 
 @dataclass
 class MatchPhraseQ(Node):
@@ -666,8 +720,15 @@ class MatchPhraseQ(Node):
     boost: float = 1.0
     slop: int = 0
 
+    def frame(self, ctx):
+        fr = ctx.for_field(self.fld).index_frame(
+            {"match_phrase": {self.fld: {"query": self.query, "slop": self.slop}}}, self.boost)
+        return super().frame(ctx) if fr is None else fr
+
     def predicate(self, ctx):
-        ctx = ctx.for_field(self.fld) if self.fld != ctx.text_col else ctx
+        ctx = ctx.for_field(self.fld)
+        if ctx.index_leaf is not None:
+            raise NotImplementedError("the index answers match_phrase on its text field")
         terms = ctx.analyze(self.query)
         if not terms:
             return F.lit(False)
@@ -707,10 +768,17 @@ class MatchPhrasePrefixQ(Node):
     query: str = ""
     boost: float = 1.0
 
+    def frame(self, ctx):
+        fr = ctx.for_field(self.fld).index_frame(
+            {"match_phrase_prefix": {self.fld: {"query": self.query}}}, self.boost)
+        return super().frame(ctx) if fr is None else fr
+
     def predicate(self, ctx):
         import re as _re
 
         ctx = ctx.for_field(self.fld)
+        if ctx.index_leaf is not None:
+            raise NotImplementedError("the index answers match_phrase_prefix on its text field")
         terms = ctx.analyze(self.query)
         if not terms:
             return F.lit(False)
@@ -718,6 +786,23 @@ class MatchPhrasePrefixQ(Node):
         pat = " " + "".join(_re.escape(t) + " " for t in fixed) + _re.escape(prefix) + "[^ ]*"
         stream = F.concat(F.lit(" "), F.array_join(ctx.toks_col(), " "), F.lit(" "))
         return stream.rlike(pat)
+
+
+@dataclass
+class IntervalsQ(Node):
+    """intervals (IntervalQueryBuilder.java): positional rules over the
+    index's text postings (operators/intervals.py). Only an Engine index
+    answers it — a raw frame has no positions to evaluate."""
+
+    fld: str
+    source: dict = field(default_factory=dict)
+
+    def frame(self, ctx):
+        fr = ctx.for_field(self.fld).index_frame({"intervals": {self.fld: self.source}})
+        if fr is None:
+            raise ValueError(f"intervals needs the positional index of an Engine index "
+                             f"(field {self.fld!r})")
+        return fr
 
 
 @dataclass
@@ -1155,9 +1240,7 @@ class KnnQ(Node):
     boost: float = 1.0
 
     def frame(self, ctx):
-        df_ = ctx.df
-        if self.filter is not None:
-            df_ = df_.where(self.filter.predicate(ctx))
+        df_ = ctx.df if self.filter is None else matching(self.filter, ctx)
         vcol = F.col(self.fld).cast("array<double>")
         qv = F.array(*[F.lit(float(x)) for x in self.query_vector])
         dot = F.aggregate(
@@ -1529,9 +1612,6 @@ class HasChildQ(Node):
             out = out.where(F.col("__nc") <= self.max_children)
         return out.drop("__nc")
 
-    def filter_keys(self, ctx):
-        return self.frame(ctx).select("__key")
-
 
 def _join_normalized(df: DataFrame, join_field: str,
                      parent_field: str) -> DataFrame:
@@ -1742,11 +1822,7 @@ class ConstantScoreQ(Node):
         return self.filter_q.predicate(ctx)
 
     def frame(self, ctx):
-        return (
-            ctx.df.where(self.filter_q.predicate(ctx))
-            .select(F.col(ctx.key).alias("__key"))
-            .withColumn("_score", F.lit(float(self.boost)))
-        )
+        return self.filter_q.filter_keys(ctx).withColumn("_score", F.lit(float(self.boost)))
 
 
 @dataclass
@@ -1760,9 +1836,7 @@ class BoostingQ(Node):
 
     def frame(self, ctx):
         pos = self.positive.frame(ctx)
-        neg_keys = ctx.df.where(F.coalesce(self.negative.predicate(ctx), F.lit(False))).select(
-            F.col(ctx.key).alias("__key"), F.lit(True).alias("_neg")
-        )
+        neg_keys = self.negative.filter_keys(ctx).withColumn("_neg", F.lit(True))
         return (
             pos.join(neg_keys, "__key", "left")
             .withColumn(
@@ -1789,7 +1863,7 @@ class FunctionScoreQ(Node):
     boost: float = 1.0      # top-level query boost (multiplies the result)
     min_score: float = None  # drop docs scoring below (FunctionScoreQuery)
 
-    def _fn_col(self, ctx: SearchContext, spec: dict, joined: DataFrame) -> Column:
+    def _fn_col(self, ctx: SearchContext, spec: dict, joined: DataFrame, flag: str) -> Column:
         if "weight" in spec and set(spec) <= {"weight", "filter"}:
             v = F.lit(float(spec["weight"]))
         elif "field_value_factor" in spec:
@@ -1846,8 +1920,20 @@ class FunctionScoreQ(Node):
         if "weight" in spec and not set(spec) <= {"weight", "filter"}:
             v = v * float(spec["weight"])
         if "filter" in spec:
-            v = F.when(parse(spec["filter"]).predicate(ctx), v).otherwise(F.lit(None))
+            v = F.when(F.col(flag), v)  # a doc failing the filter gets null
         return v
+
+    @staticmethod
+    def _with_filter_flag(joined: DataFrame, node: Node, ctx: SearchContext,
+                          flag: str) -> DataFrame:
+        """``joined`` plus ``flag``: the doc passes the filter ``node`` —
+        its predicate, or membership in its keys when it has none (a
+        scoring-only node, or a text leaf an index answers)."""
+        try:
+            return joined.withColumn(flag, node.predicate(ctx))
+        except NotImplementedError:
+            keys = node.filter_keys(ctx).dropDuplicates(["__key"]).withColumn(flag, F.lit(True))
+            return joined.join(keys, "__key", "left")
 
     def frame(self, ctx):
         base = (self.query or MatchAll()).frame(ctx)
@@ -1861,7 +1947,11 @@ class FunctionScoreQ(Node):
                 base = base.where(F.col("_score") >= float(self.min_score))
             return base
         joined = base.join(ctx.df.withColumn("__key", F.col(ctx.key)), "__key")
-        cols = [self._fn_col(ctx, s, joined) for s in self.functions]
+        flags = [f"__fsf{i}" for i in range(len(self.functions))]
+        for s, flag in zip(self.functions, flags):
+            if "filter" in s:
+                joined = self._with_filter_flag(joined, parse(s["filter"]), ctx, flag)
+        cols = [self._fn_col(ctx, s, joined, flag) for s, flag in zip(self.functions, flags)]
         if self.score_mode == "sum":
             fn = sum([F.coalesce(c, F.lit(0.0)) for c in cols[1:]], F.coalesce(cols[0], F.lit(0.0)))
         elif self.score_mode == "max":
@@ -2260,7 +2350,8 @@ def parse(q: dict) -> Node:
     if kind == "fuzzy":
         (fld, spec), = body.items()
         return FuzzyQ(
-            fld, value=spec["value"], fuzziness=int(spec.get("fuzziness", 2)),
+            fld, value=spec["value"],
+            fuzziness=resolve_fuzziness(spec.get("fuzziness", 2), str(spec["value"])),
             prefix_length=int(spec.get("prefix_length", 0)),
             transpositions=bool(spec.get("transpositions", True)),
         )
@@ -2296,6 +2387,9 @@ def parse(q: dict) -> Node:
     if kind == "match_phrase_prefix":
         (fld, spec), = body.items()
         return MatchPhrasePrefixQ(fld, query=spec["query"] if isinstance(spec, dict) else spec)
+    if kind == "intervals":
+        (fld, src), = body.items()
+        return IntervalsQ(fld, source=src)
     if kind == "multi_match":
         return MultiMatchQ(
             flds=body["fields"], query=body["query"],
@@ -2610,12 +2704,17 @@ def search(
     key: str = "doc_id",
     text_col: str = "text",
     kw_norm: dict | None = None,
+    *,
+    index_leaf: Callable[[dict], DataFrame | None] | None = None,
 ) -> DataFrame:
     """Run a DSL search body over an arbitrary corpus frame — the
     query_then_fetch lifecycle. Supported body keys: query, size, from,
     sort (field sorts, FieldSortBuilder), search_after (keyset pagination,
     SearchAfterBuilder.java:97), rescore (top-window re-rank,
-    QueryRescorer.java:66), _source (column projection)."""
+    QueryRescorer.java:66), _source (column projection).
+
+    ``index_leaf`` is the Engine's ``SearchContext.index_leaf`` when
+    ``df`` is an index's docs view; over a raw frame it stays None."""
     # runtime fields (RuntimeField.java / `runtime_mappings`): query-time
     # computed columns — SQL-expression Painless analog, visible to the
     # query, sort, and _source of THIS search only
@@ -2655,7 +2754,8 @@ def search(
         body = dict(body)
         body["query"] = _collect_named(body["query"], named)
 
-    ctx = SearchContext(df, key, text_col=text_col, kw_norm=kw_norm or {})
+    ctx = SearchContext(df, key, text_col=text_col, kw_norm=kw_norm or {},
+                        index_leaf=index_leaf)
     size = int(body.get("size", 10))
     from_ = int(body.get("from", 0))
 
@@ -2680,7 +2780,7 @@ def search(
             # ES accepts a LIST of filters here (implicit AND).
             kf = kn["filter"]
             fnode = parse({"bool": {"filter": kf}} if isinstance(kf, list) else kf)
-            base_knn = df.where(fnode.predicate(ctx))
+            base_knn = matching(fnode, ctx)
         out_knn = (
             base_knn.select(F.col(key).alias("__key"), (dot / nrm).alias("_score"))
             .orderBy(F.desc("_score"), F.asc("__key"))
@@ -2790,18 +2890,12 @@ def search(
 
     fetched = fr.withColumnRenamed("__key", key).join(df, key)
     if pf_node is not None:
-        fetched = fetched.where(pf_node.predicate(ctx))
+        fetched = matching(pf_node, ctx, fetched)
 
     if named:
         flags = []
         for i, (nm, subq) in enumerate(named):
-            node = parse(subq)
-            try:
-                keys = ctx.df.where(node.predicate(ctx)).select(
-                    F.col(key).alias(key)
-                )
-            except NotImplementedError:  # scoring-only nodes: frame membership
-                keys = node.frame(ctx).withColumnRenamed("__key", key).select(key)
+            keys = parse(subq).filter_keys(ctx).withColumnRenamed("__key", key)
             flag = f"__mq_{i}"
             fetched = fetched.join(
                 keys.withColumn(flag, F.lit(True)).dropDuplicates([key]), key, "left"
@@ -2840,8 +2934,7 @@ def search(
             rq = rs["query"]
             qw = float(rq.get("query_weight", 1.0))
             rqw = float(rq.get("rescore_query_weight", 1.0))
-            sec = parse(rq["rescore_query"]).frame(
-                SearchContext(df, key, text_col=text_col, kw_norm=kw_norm or {}))
+            sec = parse(rq["rescore_query"]).frame(ctx)
             sec = sec.withColumnRenamed("__key", key).withColumnRenamed("_score", "_rescore")
             in_w = F.col("__cur") <= window
             fetched = (

@@ -91,6 +91,17 @@ def test_fields_retrieval_on_index_fast_path(es):
     assert all(r["fields.rank"] is not None for r in out)
 
 
+def test_source_list_with_fields_on_index_fast_path(es):
+    # a _source list keeps the dotted ``fields.<name>`` columns: they are
+    # selected as column names, not struct paths
+    out = es.search("docs", {
+        "query": {"match": {"text": "alpha"}},
+        "fields": ["lang"], "_source": ["url"], "size": 5,
+    })["hits"]
+    assert "fields.lang" in out.columns and "lang" not in out.columns
+    assert {r["fields.lang"] for r in out.collect()} == {"en", "de"}
+
+
 def test_epoch_millis_keeps_milliseconds(es, spark):
     # finding #5
     import datetime as dt
