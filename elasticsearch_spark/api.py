@@ -307,8 +307,10 @@ class Engine:
         state = store.commit_state(d)
         with self._readers_lock:
             r = self._readers.get(d)
-            if r is None or r.state != state:
+            if r is None:
                 r = self._readers[d] = IndexReader(self.spark, d, state)
+            elif r.state != state:
+                r = self._readers[d] = r.reopen(state)
         return r
 
     def _dir(self, index: str) -> str:
@@ -1774,7 +1776,7 @@ class Engine:
                     "global suggest.text")
             if skind == "term":
                 res[name] = term_suggest(
-                    self.spark, d, text,
+                    self.spark, d, text, reader=self._reader(index),
                     max_edits=sbody.get("max_edits", 2),
                     size=sbody.get("size", 3),
                     suggest_mode=sbody.get("suggest_mode", "missing"),
@@ -1798,7 +1800,7 @@ class Engine:
                 res[name] = fr
             else:
                 res[name] = completion_suggest(
-                    self.spark, d, text,
+                    self.spark, d, text, reader=self._reader(index),
                     size=sbody.get("size", 5),
                     fuzziness=dsl.resolve_fuzziness(
                         (sbody.get("fuzzy") or {}).get("fuzziness", 0), text),
@@ -2093,7 +2095,7 @@ class Engine:
         return analysis.analyze_detail(text, analyzer)
 
     def suggest(self, index: str, text: str, **kw) -> DataFrame:
-        return term_suggest(self.spark, self._dir(index), text, **kw)
+        return term_suggest(self.spark, self._dir(index), text, reader=self._reader(index), **kw)
 
     def suggest_phrase(self, index: str, text: str, **kw) -> DataFrame:
         """Phrase suggester with bigram-LM rescoring (PhraseSuggester.java);
@@ -2103,7 +2105,7 @@ class Engine:
         d = self._dir(index)
         if not os.path.isdir(os.path.join(d, "lm_bigrams")):
             build_bigram_lm(self.spark, d)
-        return phrase_suggest(self.spark, d, text, **kw)
+        return phrase_suggest(self.spark, d, text, reader=self._reader(index), **kw)
 
     def esql(self, query: str, dims: list[str] | None = None,
              params=None) -> DataFrame:
@@ -2373,16 +2375,16 @@ class Engine:
         """POST /{index}/_terms_enum (TransportTermsEnumAction.java):
         enumerate up to ``size`` index terms for ``field`` starting with
         ``string``, ascending. For the analyzed text field the source is
-        the term DICTIONARY (stats/term_stats.parquet) — a pruned parquet
-        scan of the vocab table, never the postings; other fields enumerate
-        distinct doc-values. Like the reference, terms from
-        deleted-but-unmerged docs may still appear. Alias-aware: per-index
-        frames union, dedup, and re-cut to size."""
+        the term DICTIONARY (the open reader's segment dictionaries, never
+        the postings blocks); other fields enumerate distinct doc-values.
+        Like the reference, terms from deleted-but-unmerged docs may still
+        appear. Alias-aware: per-index frames union, dedup, and re-cut to
+        size."""
         frames = []
         for concrete in self.resolve(index):
             if field == "text":
-                src = self.spark.read.parquet(
-                    store.term_stats_path(self._dir(concrete))
+                src = self.spark.createDataFrame(
+                    self._reader(concrete).term_stats().select(["term"])
                 ).select(F.col("term").alias("t"))
             else:
                 src = self._docs_view(concrete).select(
@@ -2499,7 +2501,7 @@ class Engine:
         }
 
     def explain(self, index: str, terms: list[str], url: str) -> DataFrame:
-        return explain_fn(self.spark, self._dir(index), terms, url)
+        return explain_fn(self.spark, self._dir(index), terms, url, reader=self._reader(index))
 
     def termvectors(self, index: str, url: str, term_statistics: bool = False) -> DataFrame:
         """GET /{index}/_termvectors/{id} (``server/src/main/java/org/
@@ -2931,7 +2933,7 @@ class Engine:
             )
         )
         if term_statistics:
-            stats = self.spark.read.parquet(store.term_stats_path(d))
+            stats = self.spark.createDataFrame(self._reader(index).term_stats())
             tv = tv.join(
                 F.broadcast(
                     stats.join(tv.select("term").distinct(), "term", "left_semi")
@@ -3194,9 +3196,9 @@ class Engine:
         sizes give the exact per-column cost; columns map to the
         reference's categories — postings columns = inverted_index,
         positions = term_vectors-equivalent positional payload, docs
-        columns = stored_fields, stats = points/doc_values analog. Driver
-        walks file METADATA footers only (O(segments × columns)), never
-        data pages — same cost shape as the reference's per-shard analyze."""
+        columns = stored_fields. Driver walks file METADATA footers only
+        (O(segments × columns)), never data pages — same cost shape as the
+        reference's per-shard analyze."""
         import pyarrow.parquet as pq
 
         d = self._dir(index)
@@ -3211,8 +3213,6 @@ class Engine:
                     continue
                 if "postings" in base or "postings" in fn:
                     cat = "inverted_index"
-                elif "stats" in base or "stats" in fn:
-                    cat = "doc_values"
                 else:
                     cat = "stored_fields"
                 md = pq.ParquetFile(fp).metadata
@@ -3333,7 +3333,7 @@ class Engine:
         for s in sorted(lead_segs - foll_segs):
             shutil.copytree(os.path.join(lseg, s), os.path.join(fseg, s))
             copied.append(s)
-        for name in os.listdir(lsrc):  # control files: stats/manifests/meta/…
+        for name in os.listdir(lsrc):  # control files: manifests/meta/tombstones/…
             if name == "segments":
                 continue
             src_p, dst_p = os.path.join(lsrc, name), os.path.join(fdst, name)

@@ -1,4 +1,4 @@
-"""Tiered segment merge (compaction) + salted global term-stats rebuild.
+"""Tiered segment merge (compaction).
 
 The Spark re-expression of the reference's background merge
 (``server/src/main/java/org/elasticsearch/index/MergePolicyConfig.java:108-113``:
@@ -16,15 +16,9 @@ group-spec frame) — each task reads the group's segment files from shared
 storage, merges in numpy, writes the new segment, and commits a merge
 manifest. At 100 TB scale this is the standard compaction-job shape: the
 work is embarrassingly parallel across groups and each group is bounded by
-``max_merged_bytes``.
-
-Hot-term skew (north rule): the global term-stats rebuild aggregates
-postings blocks with an EXPLICIT two-phase salted aggregation —
-``groupBy(term, salt = pmod(seg_id, S))`` partial sums, then
-``groupBy(term)`` final — so a stopword-scale term ("the" in 60% of docs)
-never funnels all its block rows through one reducer. (The analog of the
-reference spreading a hot routing key via ``routing_partition_size``,
-``server/.../cluster/routing/IndexRouting.java:217-227``.)
+``max_merged_bytes``. A merged segment's postings carry its term
+dictionary, so term statistics need no second pass: df stays the sum over
+the live segments.
 """
 
 from __future__ import annotations
@@ -38,7 +32,6 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from ..sources import index_store as store
 from .codec import decode_blocks
@@ -237,122 +230,6 @@ def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> dict:
     return manifest
 
 
-def _folded_segs_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "stats", "folded_segs.json")
-
-
-def _read_folded_segs(index_dir: str) -> set[int]:
-    # the authoritative copy commits ATOMICALLY with the stats table (a
-    # `_`-prefixed sidecar inside the parquet dir — invisible to Spark);
-    # the legacy standalone file is the fallback for older indexes
-    for p in (
-        os.path.join(store.term_stats_path(index_dir), "_folded_segs.json"),
-        _folded_segs_path(index_dir),
-    ):
-        if os.path.exists(p):
-            try:
-                with open(p) as f:
-                    return set(json.load(f))
-            except (json.JSONDecodeError, OSError):
-                continue
-    return set()
-
-
-def _recover_stats(index_dir: str) -> None:
-    """Finish a stats swap a crash interrupted: the table is parked at
-    `.old` between the two renames; restore it if the live path is gone."""
-    ts_path = store.term_stats_path(index_dir)
-    old_path = ts_path + ".old"
-    if not os.path.exists(ts_path) and os.path.exists(old_path):
-        os.replace(old_path, ts_path)
-
-
-def _commit_stats(index_dir: str, tmp_path: str, folded: set[int]) -> None:
-    """Atomically publish a freshly-written stats table TOGETHER with its
-    folded-segment set: the set rides inside the parquet dir, so one
-    rename commits both (a separate post-write folded file let a replayed
-    micro-batch double-fold df/cf), and the old table parks at `.old`
-    during the swap so no crash point loses it (the old rmtree-then-replace
-    had a window with NO stats table on disk)."""
-    ts_path = store.term_stats_path(index_dir)
-    old_path = ts_path + ".old"
-    with open(os.path.join(tmp_path, "_folded_segs.json"), "w") as f:
-        json.dump(sorted(int(s) for s in folded), f)
-    if os.path.exists(old_path):
-        shutil.rmtree(old_path)
-    if os.path.exists(ts_path):
-        os.replace(ts_path, old_path)
-    os.replace(tmp_path, ts_path)  # commit point
-    if os.path.exists(old_path):
-        shutil.rmtree(old_path)
-    # legacy location kept in sync for older readers
-    _write_folded_segs(index_dir, set(folded))
-
-
-def _write_folded_segs(index_dir: str, segs: set[int]) -> None:
-    p = _folded_segs_path(index_dir)
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    with open(p + ".tmp", "w") as f:
-        json.dump(sorted(segs), f)
-    os.replace(p + ".tmp", p)
-
-
-def rebuild_term_stats(spark: SparkSession, index_dir: str, num_salts: int = 16) -> None:
-    """Global (term, df, cf) rebuild with explicit two-phase salted
-    aggregation (hot-term skew handling, north rule)."""
-    postings = spark.read.parquet(*store.postings_glob(index_dir))
-    partial = (
-        postings.groupBy("term", F.pmod(F.col("seg_id").cast("long"), F.lit(num_salts)).alias("salt"))
-        .agg(F.sum("n").cast("long").alias("pdf"), F.sum("sum_tf").cast("long").alias("pcf"))
-    )
-    final = partial.groupBy("term").agg(
-        F.sum("pdf").cast("long").alias("df"), F.sum("pcf").cast("long").alias("cf")
-    )
-    ts_path = store.term_stats_path(index_dir)
-    tmp_path = ts_path + ".tmp"
-    final.repartition(8, "term").sortWithinPartitions("term").write.mode("overwrite").parquet(tmp_path)
-    _commit_stats(index_dir, tmp_path, set(store.list_segs(index_dir)))
-
-
-def merge_term_stats(spark: SparkSession, index_dir: str, new_segs: list[int]) -> None:
-    """INCREMENTAL (term, df, cf) update: fold only the NEW segments'
-    postings partials into the existing stats table — per-batch cost is
-    O(|vocab| + |new postings|), independent of total index size (a full
-    ``rebuild_term_stats`` per streaming micro-batch is O(index), i.e.
-    O(n²) over a day of streaming). Idempotent under micro-batch REPLAY
-    (Structured Streaming may re-run a batch after a crash): segments
-    already folded — tracked in ``stats/folded_segs.json``, committed
-    after the stats write — are skipped."""
-    _recover_stats(index_dir)
-    folded = _read_folded_segs(index_dir)
-    todo = [
-        s for s in new_segs
-        if s not in folded
-        and os.path.exists(os.path.join(store.seg_dir(index_dir, s), "postings.parquet"))
-    ]
-    if not todo:
-        return
-    paths = [os.path.join(store.seg_dir(index_dir, s), "postings.parquet") for s in todo]
-    new = (
-        spark.read.parquet(*paths)
-        .groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"), F.sum("sum_tf").cast("long").alias("cf"))
-    )
-    ts_path = store.term_stats_path(index_dir)
-    if os.path.exists(ts_path):
-        old = spark.read.parquet(ts_path)
-        merged = (
-            old.unionByName(new)
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"), F.sum("cf").cast("long").alias("cf"))
-        )
-    else:
-        merged = new
-    tmp_path = ts_path + ".tmp"
-    merged.repartition(8, "term").sortWithinPartitions("term").write.mode("overwrite").parquet(tmp_path)
-    _commit_stats(index_dir, tmp_path, folded | set(todo))
-
-
 def merge_index(
     spark: SparkSession,
     index_dir: str,
@@ -361,8 +238,9 @@ def merge_index(
     floor_bytes: int = FLOOR_BYTES,
 ) -> dict:
     """Run one round of tiered compaction: plan groups → one Spark task per
-    group → salted stats rebuild. Scores are unchanged by construction
-    (df/avgdl are global, docIDs survive the merge verbatim)."""
+    group → tombstone and doc-count reconcile. Scores are unchanged by
+    construction (df/avgdl are global, docIDs survive the merge verbatim)
+    except that expunged deletes stop counting."""
     store.reconcile(index_dir)  # reclaim crash-leftover merged-away dirs
     groups = plan_merges(index_dir, segments_per_tier, max_merged_bytes, floor_bytes)
     if not groups:
@@ -395,7 +273,6 @@ def merge_index(
         .mapInPandas(run, "new_seg int, n_docs long, n_blocks long")
         .collect()
     )
-    rebuild_term_stats(spark, index_dir)
 
     # reconcile tombstones expunged by the merge (ids no longer in any
     # segment) — a fully distributed semi-join + clustered rewrite, never a
@@ -406,9 +283,7 @@ def merge_index(
     docs = spark.read.parquet(*store.docs_glob(index_dir))
     reconcile_tombstones(spark, index_dir, docs)
     meta = store.IndexMeta.load(index_dir)
-    agg = docs.agg(F.count("*").alias("n"), F.sum("dl").alias("s")).collect()[0]
-    meta.doc_count = int(agg["n"])
-    meta.sum_dl = int(agg["s"] or 0)
+    meta.doc_count, meta.sum_dl = store.doc_totals(index_dir)
     meta.save(index_dir)
     return {
         "merges": len(res),

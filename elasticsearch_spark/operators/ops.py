@@ -436,24 +436,10 @@ def apply_ops(
         # driver work stays O(batch), independent of historical delete count
         append_tombstone_batch(index_dir, np.array(sorted(new_tombs), dtype=np.int64))
 
-    # stats/meta refresh: df/doc_count keep counting masked docs (reference
-    # semantics — cleaned up by merge), but must include the NEW docs.
-    # Incremental fold of just the new segments — O(vocab + batch), not
-    # O(total index) per op batch.
-    from .merge import merge_term_stats
-
-    merge_term_stats(spark, index_dir, new_segs)
-    # doc_count/sum_dl from the LIVE segment docs tables (masked/tombstoned
-    # docs still count until a merge expunges them — reference semantics),
-    # not from build manifests: manifests of merged-away segments survive
-    # for resume and would resurrect counts a merge already corrected.
-    agg = (
-        spark.read.parquet(*store.docs_glob(index_dir))
-        .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
-        .collect()[0]
-    )
-    meta.doc_count = int(agg["n"])
-    meta.sum_dl = int(agg["s"] or 0)
+    # doc_count/sum_dl from the live segments' docs files: masked docs
+    # still count until a merge expunges them (reference semantics), like
+    # their postings in each segment's df
+    meta.doc_count, meta.sum_dl = store.doc_totals(index_dir)
     meta.save(index_dir)
     return counts
 

@@ -385,7 +385,7 @@ def build_index(
     index_sort: tuple | None = None,
     num_shards: int | None = None,
 ) -> dict:
-    """Full index build: route → per-partition segment build → stats tables.
+    """Full index build: route → per-partition segment build → index meta.
 
     One shuffle total. Scale notes: num_partitions is the shard count — size
     it so one partition's working set (~tokens × pointers, roughly 100-200×
@@ -394,9 +394,9 @@ def build_index(
     throughput drops ~2× when partitions exceed ~5k web docs (page-fault /
     bandwidth pressure), so prefer MORE, SMALLER partitions — e.g. 100 TB /
     ~250 MB of text per partition ≈ 400k partitions. Oversplitting is cheap
-    (tasks are ~seconds); undersplitting is superlinear. Everything
-    downstream (stats aggregation) is partial/final aggregation over the
-    compact postings, orders of magnitude smaller than the input.
+    (tasks are ~seconds); undersplitting is superlinear. Nothing runs
+    downstream of the build: each segment's postings carry its term
+    dictionary, and the doc totals are a driver read of the docs files.
     """
     num_partitions = num_partitions or max(spark.sparkContext.defaultParallelism, 8)
     # rebuilding an EXISTING index with different structure must refuse
@@ -455,27 +455,7 @@ def build_index(
         index_sort=list(index_sort) if index_sort else None,
         num_shards=num_shards,
     )
-    meta.doc_count = sum(r["n_docs"] for r in metrics)
-    meta.sum_dl = sum(r["sum_dl"] for r in metrics)
-
-    # dfs-phase stats table: global (term, df, cf) — partial/final agg over
-    # compact postings blocks (SURVEY §3.1 DFS variant / DfsPhase.java:31-81)
-    postings = spark.read.parquet(*store.postings_glob(index_dir))
-    ts_path = store.term_stats_path(index_dir)
-    os.makedirs(os.path.dirname(ts_path), exist_ok=True)
-    (
-        postings.groupBy("term")
-        .agg(F.sum("n").cast("long").alias("df"), F.sum("sum_tf").cast("long").alias("cf"))
-        .repartition(max(1, num_partitions // 8), "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .parquet(ts_path)
-    )
-    # record which segments are folded into the stats table (the
-    # incremental merge_term_stats path consults this for idempotence)
-    from .merge import _write_folded_segs
-
-    _write_folded_segs(index_dir, set(store.list_segs(index_dir)))
+    meta.doc_count, meta.sum_dl = store.doc_totals(index_dir)
     meta.save(index_dir)
     return {
         "doc_count": meta.doc_count,

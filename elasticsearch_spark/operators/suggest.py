@@ -2,7 +2,8 @@
 
 - **term suggester** (``server/src/main/java/org/elasticsearch/search/
   suggest/term/TermSuggestionBuilder.java``): edit-distance candidates from
-  the term dictionary (the build-time stats table = the live term dict),
+  the term dictionary (``IndexReader.term_stats``: Σ of the live
+  segments' dictionaries),
   ranked like the reference: exact-match terms are skipped unless
   ``suggest_mode='always'``; candidates sorted by (edit distance ASC,
   doc frequency DESC, term ASC).
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions import analysis
 from ..sources import index_store as store
+from .topk import IndexReader
 
 
 def term_suggest(
@@ -36,6 +38,7 @@ def term_suggest(
     sort: str = "score",
     prefix_length: int = 1,
     min_word_length: int = 4,
+    reader: IndexReader | None = None,
 ) -> DataFrame:
     """Per input token: up to `size` corrections from the term dictionary.
 
@@ -44,11 +47,11 @@ def term_suggest(
     df DESC; "frequency" = df DESC then distance ASC). ``prefix_length``
     (default 1, like DirectSpellChecker) requires candidates to share the
     leading chars; ``min_word_length`` (default 4) leaves short tokens
-    uncorrected."""
-    meta = store.IndexMeta.load(index_dir)
-    tokens = list(dict.fromkeys(analysis.analyze(text, meta.analyzer)))
+    uncorrected. ``reader``: the index's open reader (default: a new one)."""
+    reader = reader or IndexReader(spark, index_dir)
+    tokens = list(dict.fromkeys(analysis.analyze(text, reader.meta.analyzer)))
     tokens = [t for t in tokens if len(t) >= min_word_length]
-    terms = spark.read.parquet(store.term_stats_path(index_dir)).select("term", "df")
+    terms = spark.createDataFrame(reader.term_stats().select(["term", "df"]))
     toks_df = spark.createDataFrame([(t,) for t in tokens], "token string")
     # each mode's driver round-trip runs ONLY for its mode — "always"
     # (which phrase_suggest calls per invocation) pays zero extra jobs
@@ -143,6 +146,7 @@ def completion_suggest(
     size: int = 5,
     fuzziness: int = 0,
     contexts: list[str] | dict[str, float] | None = None,
+    reader: IndexReader | None = None,
 ) -> DataFrame:
     """Completion suggester (``server/.../search/suggest/completion/
     CompletionSuggestionBuilder.java:46``): search-as-you-type prefix →
@@ -151,8 +155,8 @@ def completion_suggest(
 
     Source table: the dedicated completion table when built
     (``build_completion_index``), else the live TERM DICTIONARY with df as
-    the weight (the stats table doubles as the suggestion FST, the same
-    reuse as the term suggester).
+    the weight (``reader``'s, default a new reader's: the term dictionary
+    doubles as the suggestion FST, the same reuse as the term suggester).
 
     Exact prefix (default) compiles to a RANGE predicate on the
     suggestion-sorted parquet — row-group pruning makes the probe
@@ -193,10 +197,9 @@ def completion_suggest(
             raise ValueError(
                 "completion contexts require a completion index "
                 "(build_completion_index); this index has none")
-        src = (
-            spark.read.parquet(store.term_stats_path(index_dir))
-            .select(F.col("term").alias("suggestion"), F.col("df").cast("long").alias("weight"))
-        )
+        src = spark.createDataFrame(
+            (reader or IndexReader(spark, index_dir)).term_stats().select(["term", "df"])
+        ).select(F.col("term").alias("suggestion"), F.col("df").alias("weight"))
     if fuzziness <= 0:
         hit = src.where(F.col("suggestion").startswith(prefix))
     else:
@@ -252,6 +255,7 @@ def phrase_suggest(
     discount: float = 0.4,
     alpha: float = 0.5,
     max_combos: int = 64,
+    reader: IndexReader | None = None,
 ) -> DataFrame:
     """Phrase suggester WITH language-model rescoring (``server/.../search/
     suggest/phrase/PhraseSuggester.java``; scorers ``StupidBackoffScorer
@@ -273,9 +277,9 @@ def phrase_suggest(
       gate).
 
     The candidate LATTICE (≤ ``max_combos`` phrases) is scored driver-side
-    over counts fetched by ONE term-filtered read each of the stats and
-    bigram tables (parquet predicate pushdown) — the per-shard rescore
-    analog; nothing scales with corpus size.
+    over the unigram counts of ``reader``'s term dictionary (default: a new
+    reader's) and ONE term-filtered read of the bigram table (parquet
+    predicate pushdown) — the per-shard rescore analog.
 
     Returns a DataFrame (suggestion, score) — score is the log score
     rounded to 6 digits."""
@@ -283,7 +287,11 @@ def phrase_suggest(
     import math
     import os
 
-    meta = store.IndexMeta.load(index_dir)
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    reader = reader or IndexReader(spark, index_dir)
+    meta = reader.meta
     tokens = analysis.analyze(text, meta.analyzer)
     empty = spark.createDataFrame([], "suggestion string, score double")
     if not tokens:
@@ -291,17 +299,18 @@ def phrase_suggest(
 
     cand_rows = term_suggest(
         spark, index_dir, text, max_edits=max_edits, size=num_candidates,
-        suggest_mode="always",
+        suggest_mode="always", reader=reader,
     ).collect()
     per_tok: dict[str, list[tuple[str, int]]] = {}
     for r in cand_rows:
         per_tok.setdefault(r["token"], []).append((r["suggestion"], int(r["distance"])))
 
-    stats = spark.read.parquet(store.term_stats_path(index_dir))
+    stats = reader.term_stats()
     all_terms = sorted({t for t in tokens} | {s for v in per_tok.values() for s, _ in v})
+    found = stats.filter(pc.is_in(stats["term"], value_set=pa.array(all_terms, pa.string())))
     uni = {
-        r["term"]: (float(r["cf"]), float(r["df"]))
-        for r in stats.where(F.col("term").isin(all_terms)).collect()
+        t: (float(cf), float(df))
+        for t, df, cf in zip(*(found[c].to_pylist() for c in ("term", "df", "cf")))
     }
     cands: list[list[tuple[str, int]]] = []
     for t in tokens:
@@ -380,12 +389,15 @@ def phrase_suggest(
 
 
 def explain(
-    spark: SparkSession, index_dir: str, query_terms: list[str], url: str
+    spark: SparkSession, index_dir: str, query_terms: list[str], url: str,
+    reader: IndexReader | None = None,
 ) -> DataFrame:
     """Score breakdown for one doc: per matching query term — tf, df, idf,
     quantized dl, avgdl, and the BM25 contribution (sums to the hit's
-    score; the `_explain` API shape)."""
-    meta = store.IndexMeta.load(index_dir)
+    score; the `_explain` API shape). df is ``reader``'s (default: a new
+    reader's)."""
+    reader = reader or IndexReader(spark, index_dir)
+    meta = reader.meta
     docs = spark.read.parquet(*store.docs_glob(index_dir))
     row = docs.where(F.col("url") == url).select("doc_id", "text", "dl").first()
     if row is None:
@@ -400,12 +412,7 @@ def explain(
 
     c = Counter(toks)
     ql = float(quantize_length(int(row["dl"])))
-    stats = {
-        r["term"]: int(r["df"])
-        for r in spark.read.parquet(store.term_stats_path(index_dir))
-        .where(F.col("term").isin(list(dict.fromkeys(query_terms))))
-        .collect()
-    }
+    stats = {t: df for t, (_, df) in reader.term_weights(query_terms).items()}
     out = []
     for t in dict.fromkeys(query_terms):
         tf = c.get(t, 0)

@@ -44,10 +44,11 @@ than the per-segment work it would spread.
 - the hits become a local relation, ``createDataFrame`` of an Arrow table
   (``hits_frame``), so neither building nor collecting them runs a job.
 
-df/avgdl come from the build-time stats tables through the driver-side
-``IndexReader`` (pyarrow, no Spark job) and reach every segment alike —
-the dfs-phase determinism mechanism (``DfsPhase.java:31-81``): scores
-never depend on how the segments are split.
+df is the sum of each segment's own df (Lucene's ``TermStates``), read
+from the segments' term dictionaries by the driver-side ``IndexReader``
+(pyarrow, no Spark job); df and avgdl reach every segment alike — the
+dfs-phase determinism mechanism (``DfsPhase.java:31-81``): scores never
+depend on how the segments are split.
 """
 
 from __future__ import annotations
@@ -58,7 +59,6 @@ import itertools
 import os
 import re
 import threading
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -66,7 +66,6 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
 from pyspark.sql.types import (
     DoubleType, IntegerType, LongType, StringType, StructField, StructType,
@@ -83,8 +82,6 @@ CAND_SCHEMA = StructType([
 ])
 MCAND_SCHEMA = StructType([StructField("qid", StringType()), *CAND_SCHEMA.fields])
 FETCH_FIELDS = ("url", "lang", "warc_ts")  # the match path's fetched fields
-_MAX_CACHED_TERMS = 1 << 20  # per-reader term-stats cache entries
-_STATS_SWAP_WAITS = 100  # 10 ms polls for a stats table mid-swap
 
 _BLOCK_COLS = ["term", "first_doc_id", "last_doc_id", "n", "max_tf", "min_ql", "ids_bytes", "tf_bytes"]
 _POSITION_COLS = ["term", "first_doc_id", "n", "ids_bytes", "tf_bytes", "pos_bytes"]
@@ -92,10 +89,16 @@ _POSITION_COLS = ["term", "first_doc_id", "n", "ids_bytes", "tf_bytes", "pos_byt
 
 def _member(a: np.ndarray, sorted_b: np.ndarray) -> np.ndarray:
     """Mask of the elements of ``a`` that occur in the sorted ``sorted_b``."""
+    return _find(a, sorted_b)[1]
+
+
+def _find(a: np.ndarray, sorted_b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(position of each element of ``a`` in the sorted ``sorted_b``, clipped
+    to a valid index; mask of the elements found)."""
     if len(sorted_b) == 0:
-        return np.zeros(len(a), dtype=bool)
-    pos = np.searchsorted(sorted_b, a)
-    return (pos < len(sorted_b)) & (sorted_b[np.minimum(pos, len(sorted_b) - 1)] == a)
+        return np.zeros(len(a), dtype=np.int64), np.zeros(len(a), dtype=bool)
+    pos = np.minimum(np.searchsorted(sorted_b, a), len(sorted_b) - 1)
+    return pos, sorted_b[pos] == a
 
 
 def term_positions(post: pd.DataFrame) -> dict[str, tuple]:
@@ -142,6 +145,18 @@ class Segment:
     def positions(self, terms) -> dict[str, tuple]:
         """``term_positions`` of the postings of ``terms``."""
         return term_positions(self.postings(terms, positions=True))
+
+    def terms(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """The segment's term dictionary: (sorted terms, df, cf), where df
+        sums the term's blocks' ``n`` (docs) and cf their ``sum_tf``
+        (occurrences) — three narrow columns of the term-sorted file."""
+        tab = pq.read_table(self.postings_path, columns=["term", "n", "sum_tf"])
+        t = tab["term"].to_numpy(zero_copy_only=False)
+        if not len(t):
+            return t, np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
+        start = np.flatnonzero(np.r_[True, t[1:] != t[:-1]])
+        return (t[start], np.add.reduceat(tab["n"].to_numpy().astype(np.int64), start),
+                np.add.reduceat(tab["sum_tf"].to_numpy().astype(np.int64), start))
 
     @functools.cached_property
     def tombstones(self) -> np.ndarray:
@@ -403,99 +418,85 @@ def _bm25_segment(
 
 
 class IndexReader:
-    """Open index handle: the index meta, the live segment list and a
-    per-term stats cache — the DfsPhase's per-query stats round-trip, on the
-    driver with no Spark job. ``Engine`` owns one reader per index and every
-    index search path (match, msearch, phrase, phrase_prefix, intervals,
-    spans, the sorted scan) takes it.
+    """Open index handle: the index meta, the live segment list and one
+    term dictionary per live segment (``Segment.terms``) — the DfsPhase's
+    per-query stats round-trip, on the driver with no Spark job. ``Engine``
+    owns one reader per index and every index search path (match, msearch,
+    phrase, phrase_prefix, intervals, spans, the sorted scan) takes it.
 
-    Term stats and prefix expansions are pyarrow reads of the term-sorted
-    ``stats/term_stats.parquet`` (``term IN (...)`` and a term range push to
-    its row groups); each lookup reads only the terms not seen yet, so hot
-    terms amortize to zero across the queries of a long-lived reader. At
-    web scale the term dictionary is 10^8-10^9 rows; it is never collected
-    whole.
+    A term's df is the sum of its per-segment df over the committed
+    segments (Lucene's ``TermStates``): masked docs count until a merge
+    expunges them, and no write can leave a term's df behind its postings.
+    Each dictionary is loaded on the first lookup and kept, keyed by the
+    segment and its postings file's identity. At 4,000 pages in 16
+    segments (48,911 distinct terms, 201,304 segment entries) all sixteen
+    take ~95-130 ms of driver CPU to load and hold ~15 MB (Python strings
+    and int64 df/cf); at web scale a dictionary needs a range-readable
+    on-disk form.
 
     A reader is a snapshot of one commit: ``state``
     (``index_store.commit_state``) is its invalidation key, and
     ``Engine._reader`` reopens the reader when the state on disk differs —
     so a bulk, delete or merge from this process, a second ``Engine`` or
-    the streaming ingest is seen by the next search. Safe to share between
-    threads (the cache fill is locked)."""
+    the streaming ingest is seen by the next search. A reopened reader
+    takes over the dictionaries of the segments that survived the write.
+    Safe to share between threads (the dictionary load is locked)."""
 
-    def __init__(self, spark: SparkSession, index_dir: str, state: store.CommitState | None = None):
+    def __init__(self, spark: SparkSession, index_dir: str,
+                 state: store.CommitState | None = None, dicts: dict | None = None):
         self.spark = spark
         self.index_dir = index_dir
         self.state = state or store.commit_state(index_dir)
         self.meta = store.IndexMeta.loads(self.state.meta)
         self.segs = list(self.state.segs)
-        self._df: dict[str, int | None] = {}
+        self._keys = list(zip(self.state.segs, self.state.postings))
+        dicts = dicts or {}
+        self._dicts = {k: dicts[k] for k in self._keys if k in dicts}
         self._lock = threading.Lock()
 
-    def _stats_path(self) -> str | None:
-        """The term-stats table, or None when the index has none (no segment
-        committed yet). A committed table is only ever replaced:
-        ``merge._commit_stats`` parks it at ``.old`` for the instant between
-        its two renames. So a table missing while the reader was opened on
-        one, or while ``.old`` exists, is waited for, and is an error (never
-        zero-df terms) if it does not come back."""
-        path = store.term_stats_path(self.index_dir)
-        for _ in range(_STATS_SWAP_WAITS):
-            if os.path.exists(path):
-                return path
-            if self.state.stats is None and not os.path.exists(path + ".old"):
-                return None
-            time.sleep(0.01)
-        raise FileNotFoundError(f"term stats table missing from a committed index: {path}")
+    def reopen(self, state: store.CommitState) -> "IndexReader":
+        """A reader on ``state`` that keeps this reader's dictionaries of the
+        segments ``state`` still holds."""
+        return IndexReader(self.spark, self.index_dir, state, self._dicts)
+
+    def _dictionaries(self) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+        """The committed segments' term dictionaries, each loaded once."""
+        with self._lock:
+            for k in self._keys:
+                if k not in self._dicts:
+                    self._dicts[k] = Segment(self.index_dir, k[0]).terms()
+            return [self._dicts[k] for k in self._keys]
+
+    def _runs(self, prefix: str):
+        """Per segment, its dictionary's terms that start with ``prefix``
+        (a range of the sorted terms)."""
+        end = _prefix_end(prefix)
+        for terms, _, _ in self._dictionaries():
+            lo = np.searchsorted(terms, prefix)
+            yield terms[lo:len(terms) if end is None else np.searchsorted(terms, end)]
 
     def term_weights(self, terms: list[str]) -> dict[str, tuple[float, int]]:
         """term -> (idf·(k1+1) weight, df); zero-df terms drop out."""
-        with self._lock:
-            if len(self._df) > _MAX_CACHED_TERMS:
-                self._df.clear()  # a long-lived reader's cache stays bounded
-            missing = [t for t in dict.fromkeys(terms) if t not in self._df]
-            if missing:
-                path = self._stats_path()
-                tab = None if path is None else pq.read_table(
-                    path, columns=["term", "df"], filters=[("term", "in", missing)])
-                found = {} if tab is None else dict(
-                    zip(tab["term"].to_pylist(), tab["df"].to_pylist()))
-                for t in missing:
-                    self._df[t] = found.get(t)  # None = zero-df, cached too
-            dfs = {t: self._df[t] for t in terms}
+        terms = np.array(list(dict.fromkeys(terms)), dtype=object)
+        dfs = np.zeros(len(terms), dtype=np.int64)
+        for seg_terms, seg_df, _ in self._dictionaries():
+            pos, hit = _find(terms, seg_terms)
+            dfs += np.where(hit, seg_df[pos], 0)
         m = self.meta
         return {
-            t: (float(bm25.idf(np.float64(df), m.doc_count) * (m.k1 + 1.0)), df)
-            for t, df in dfs.items()
-            if df is not None
+            t: (float(bm25.idf(np.float64(df), m.doc_count) * (m.k1 + 1.0)), int(df))
+            for t, df in zip(terms, dfs)
+            if df
         }
 
     def prefix_terms(self, prefix: str, max_expansions: int) -> list[str]:
         """The first ``max_expansions`` dictionary terms (term order)
         starting with ``prefix``: the rewrite of a prefix leaf
         (match_phrase_prefix, intervals ``prefix``, span_multi ``prefix``).
-        A term range pushed to the row groups of each term-sorted stats
-        file; each file yields at most ``max_expansions`` terms, so even an
-        empty prefix holds O(files · max_expansions) terms on the driver."""
-        import pyarrow.dataset as ds
-
-        path = self._stats_path()
-        if path is None or max_expansions < 1:
-            return []
-        cond = ds.field("term") >= prefix
-        end = _prefix_end(prefix)
-        if end is not None:
-            cond &= ds.field("term") < end
-        runs = []
-        for frag in ds.dataset(path, format="parquet").get_fragments():
-            run: list[str] = []
-            for batch in frag.to_batches(columns=["term"], filter=cond,
-                                        batch_size=max(max_expansions, 4096)):
-                run += batch.column(0).to_pylist()[: max_expansions - len(run)]
-                if len(run) == max_expansions:
-                    break
-            runs.append(run)
-        return list(itertools.islice(heapq.merge(*runs), max_expansions))
+        Each segment contributes at most ``max_expansions`` terms of its
+        range, so even an empty prefix holds O(segments · max_expansions)
+        terms."""
+        return _first_distinct((run[:max_expansions] for run in self._runs(prefix)), max_expansions)
 
     def expand_terms(self, kind: str, value: str, max_expansions: int,
                      fuzziness: int = 2, prefix_length: int = 0) -> list[str]:
@@ -509,25 +510,33 @@ class IndexReader:
         - ``regexp``: match ``value`` whole;
         - ``fuzzy``: are within Levenshtein ``fuzziness`` of ``value`` and
           share its first ``prefix_length`` characters.
-        All but ``prefix`` scan the term dictionary with Spark."""
+        A scan of the segments' dictionaries on the driver."""
         if kind == "prefix":
             return self.prefix_terms(value, max_expansions)
-        term = F.col("term")
+        head = ""
         if kind == "wildcard":
-            cond = term.rlike(f"^{_wildcard_regex(value)}$")
+            match = re.compile(_wildcard_regex(value), re.DOTALL).fullmatch
         elif kind == "regexp":
-            cond = term.rlike(f"^(?:{value})$")
+            match = re.compile(value).fullmatch
         elif kind == "fuzzy":
-            cond = (F.levenshtein(term, F.lit(value)) <= fuzziness) \
-                & term.startswith(value[:prefix_length])
+            head = value[:prefix_length]
+            match = functools.partial(_within_edits, value, k=fuzziness)
         else:
             raise ValueError(f"cannot expand a {kind!r} leaf")
-        path = self._stats_path()
-        if path is None or max_expansions < 1:
-            return []
-        rows = self.spark.read.parquet(path).select("term").where(cond) \
-            .orderBy("term").limit(max_expansions).collect()
-        return [r["term"] for r in rows]
+        runs = (itertools.islice(filter(match, run), max(max_expansions, 0))
+                for run in self._runs(head))
+        return _first_distinct(runs, max_expansions)
+
+    def term_stats(self) -> pa.Table:
+        """``term, df, cf`` of every term of the committed segments, in term
+        order: the whole vocabulary, for the suggesters, ``_terms_enum``
+        and term vectors."""
+        terms, df, cf = (np.concatenate(c) for c in zip(
+            (np.zeros(0, object), np.zeros(0, np.int64), np.zeros(0, np.int64)),
+            *self._dictionaries()))
+        tab = pa.table({"term": pa.array(terms, pa.string()), "df": df, "cf": cf})
+        return tab.group_by("term").aggregate([("df", "sum"), ("cf", "sum")]) \
+            .rename_columns(["term", "df", "cf"]).sort_by("term")
 
     @functools.cached_property
     def docs_footer(self) -> pa.Schema | None:
@@ -550,12 +559,36 @@ class IndexReader:
         ])
 
     def close(self) -> None:
-        self._df.clear()
+        """Drop the loaded dictionaries."""
+        with self._lock:
+            self._dicts.clear()
+
+
+def _first_distinct(runs, n: int) -> list[str]:
+    """The first ``n`` distinct terms of the union of sorted ``runs``."""
+    merged = heapq.merge(*runs)
+    return [t for t, _ in itertools.islice(itertools.groupby(merged), max(n, 0))]
+
+
+def _within_edits(a: str, b: str, k: int) -> bool:
+    """Whether the Levenshtein distance of ``a`` and ``b`` (code points) is
+    at most ``k``: the dynamic program, stopped once a row exceeds ``k``."""
+    if abs(len(a) - len(b)) > k:
+        return False
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        if min(cur) > k:
+            return False
+        prev = cur
+    return prev[-1] <= k
 
 
 def _wildcard_regex(pattern: str) -> str:
-    """A wildcard pattern as a Java regex body: ``*`` → ``.*``, ``?`` →
-    ``.``, ``\\x`` → literal x, every other character literal."""
+    """A wildcard pattern as a regex body: ``*`` → ``.*``, ``?`` → ``.``,
+    ``\\x`` → literal x, every other character literal."""
     out, chars = [], iter(pattern)
     for c in chars:
         if c == "\\":

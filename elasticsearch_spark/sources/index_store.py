@@ -21,8 +21,10 @@ Layout:
                                            last_doc_id,n,max_tf,min_ql,sum_tf,
                                            ids_bytes,tf_bytes,pos_bytes
                                            (block layout: operators/codec.py;
-                                           positions are mandatory)
-      stats/term_stats.parquet   term, df, cf   (the dfs-phase broadcast table)
+                                           positions are mandatory; a
+                                           segment's term dictionary — df
+                                           = Σ n, cf = Σ sum_tf per term —
+                                           is read from these blocks)
       manifests/part-<pid>.json  {pid, lineage, input_rows, n_docs, sum_dl,
                                   n_terms, n_blocks, status, files}
 """
@@ -307,30 +309,43 @@ def docs_glob(index_dir: str) -> list[str]:
     return [os.path.join(seg_dir(index_dir, s), "docs.parquet") for s in list_segs(index_dir)]
 
 
-def term_stats_path(index_dir: str) -> str:
-    return os.path.join(index_dir, "stats", "term_stats.parquet")
+def doc_totals(index_dir: str) -> tuple[int, int]:
+    """(doc_count, sum_dl) of the index: the rows and the summed ``dl`` of
+    the live segments' docs.parquet, read on the driver. Masked docs count
+    until a merge expunges them, as in the reference."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    n = s = 0
+    for p in docs_glob(index_dir):
+        dl = pq.read_table(p, columns=["dl"])["dl"]
+        n += len(dl)
+        s += pc.sum(dl).as_py() or 0
+    return n, s
 
 
 @dataclass(frozen=True)
 class CommitState:
     """What an open reader depends on, as committed on disk: the raw
     ``index_meta.json`` (doc count, avgdl, settings), the live segment list
-    and the identity of the term-stats table (rewritten whole by every
-    stats commit, so a new inode/mtime). Every write path — bulk, delete,
-    forcemerge, the streaming ingest, from any process — changes at least
-    one of them, so comparing states is the reader's staleness test."""
+    and each live segment's postings file identity (inode, mtime), so a
+    partition a resumed build rewrote under the same id is a new segment.
+    Every write path — bulk, delete, forcemerge, the streaming ingest, from
+    any process — changes at least one of them, so comparing states is the
+    reader's staleness test."""
 
     meta: bytes
     segs: tuple
-    stats: tuple | None
+    postings: tuple
 
 
 def commit_state(index_dir: str) -> CommitState:
-    try:
-        st = os.stat(term_stats_path(index_dir))
-        stats = (st.st_ino, st.st_mtime_ns)
-    except FileNotFoundError:
-        stats = None
     with open(meta_path(index_dir), "rb") as f:
         meta = f.read()
-    return CommitState(meta, tuple(list_segs(index_dir)), stats)
+    while True:
+        segs = list_segs(index_dir)
+        try:
+            files = [os.stat(os.path.join(seg_dir(index_dir, s), "postings.parquet")) for s in segs]
+        except FileNotFoundError:
+            continue  # a merge retired a listed segment: list again
+        return CommitState(meta, tuple(segs), tuple((f.st_ino, f.st_mtime_ns) for f in files))

@@ -20,8 +20,12 @@ Each micro-batch builds complete immutable segments through the SAME
 segment builder as the batch path (one shuffle, per-partition postings
 build), with segment ids namespaced by batch so doc ids never collide:
 ``seg = (batch_id + 1) * num_partitions + pid`` and doc ids carry the seg
-base. Background tiered merge (operators/merge.py) compacts the
-accumulating small segments — the streaming analog of ES's merge policy.
+base. A batch's commit is its segments' manifests plus the index meta's
+doc totals (``_commit_meta``); each segment carries its own term
+dictionary, so there is no term-stats table to fold, and a replayed batch
+rebuilds nothing its manifests already committed. Background tiered merge
+(operators/merge.py) compacts the accumulating small segments — the
+streaming analog of ES's merge policy.
 
 Also here: watermarked event-time windowed aggregation
 (``windowed_event_counts``) — the streaming date_histogram.
@@ -38,17 +42,11 @@ from ..operators.postings import METRICS_SCHEMA, segment_builder
 from ..sources import index_store as store
 
 
-def _update_meta_and_stats(
-    spark: SparkSession, index_dir: str, analyzer: str, num_partitions: int,
-    new_segs: list[int],
-) -> None:
-    """Per-batch commit: INCREMENTAL term-stats fold of just this batch's
-    segments (merge_term_stats is O(|vocab| + |batch|), independent of
-    index size — a full rebuild per batch would be O(n²) over a long
-    stream) + meta counts from the build manifests (cheap JSON listing)."""
-    manifests = [m for m in store.all_manifests(index_dir) if "pid" in m]
-    dead = store.merged_away_segs(index_dir)
-    live = [m for m in manifests if m["pid"] not in dead]
+def _commit_meta(index_dir: str, analyzer: str, num_partitions: int) -> None:
+    """Per-batch commit: the index meta's doc totals (``store.doc_totals``
+    over the live segments, merged ones included). The batch's segments
+    carry their own term dictionaries, so there are no term stats to fold
+    and a replayed batch has nothing to double-count."""
     # UPDATE the persisted meta, never rebuild it: a fresh IndexMeta here
     # would clobber analyzer_config/index_sort/num_shards/settings/seg_map
     # (and custom k1/b) that create_index or a background merge persisted
@@ -56,11 +54,7 @@ def _update_meta_and_stats(
         meta = store.IndexMeta.load(index_dir)
     except FileNotFoundError:
         meta = store.IndexMeta(analyzer=analyzer, num_partitions=num_partitions)
-    meta.doc_count = sum(m["n_docs"] for m in live)
-    meta.sum_dl = sum(m["sum_dl"] for m in live)
-    from ..operators.merge import merge_term_stats
-
-    merge_term_stats(spark, index_dir, new_segs)
+    meta.doc_count, meta.sum_dl = store.doc_totals(index_dir)
     meta.save(index_dir)
 
 
@@ -100,13 +94,10 @@ def start_indexing_stream(
                 + F.pmod(F.xxhash64("url"), F.lit(num_partitions))
             ).cast("int"),
         )
-        metrics = routed.groupBy("pid").applyInPandas(
+        routed.groupBy("pid").applyInPandas(
             segment_builder(index_dir, analyzer), METRICS_SCHEMA
         ).collect()
-        _update_meta_and_stats(
-            spark, index_dir, analyzer, num_partitions,
-            new_segs=[int(r["pid"]) for r in metrics],
-        )
+        _commit_meta(index_dir, analyzer, num_partitions)
 
     writer = (
         pages_stream.writeStream.foreachBatch(process_batch)

@@ -94,3 +94,29 @@ def doc_id_of(url_of):
 def assert_rank_identical(got, exp, rtol=1e-9):
     assert [g[0] for g in got] == [e[0] for e in exp], (got, exp)
     np.testing.assert_allclose([g[1] for g in got], [e[1] for e in exp], rtol=rtol)
+
+
+def assert_term_stats_are_segment_sums(spark, index_dir):
+    """The engine's term statistics equal the reference: per term, the sum
+    of ``n`` (df) and of ``sum_tf`` (cf) over the live segments' postings
+    blocks, by a Spark groupBy — for the whole vocabulary and for
+    ``term_weights``."""
+    from pyspark.sql import functions as F
+
+    from elasticsearch_spark.operators.topk import IndexReader
+    from elasticsearch_spark.sources import index_store as store
+
+    paths = store.postings_glob(index_dir)
+    want = {} if not paths else {
+        r["term"]: (r["df"], r["cf"])
+        for r in spark.read.parquet(*paths).groupBy("term")
+        .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf")).collect()
+    }
+    reader = IndexReader(spark, index_dir)
+    tab = reader.term_stats()
+    terms = tab["term"].to_pylist()
+    assert terms == sorted(want)
+    assert dict(zip(terms, zip(tab["df"].to_pylist(), tab["cf"].to_pylist()))) == want
+    probe = terms[::3] + ["no-such-term"]
+    assert {t: df for t, (_, df) in reader.term_weights(probe).items()} == \
+        {t: want[t][0] for t in probe if t in want}

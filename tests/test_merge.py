@@ -14,6 +14,7 @@ from elasticsearch_spark.operators.postings import build_index
 from elasticsearch_spark.operators.topk import search_topk
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_df
+from tests.conftest import assert_term_stats_are_segment_sums
 
 MERGE_DIR = "/tmp/es_spark_merge_index"
 QUERIES = [
@@ -34,7 +35,9 @@ def merge_env(spark):
         ]
         for t, op in QUERIES
     }
+    assert_term_stats_are_segment_sums(spark, MERGE_DIR)
     info = merge_index(spark, MERGE_DIR, segments_per_tier=4, floor_bytes=1)
+    assert_term_stats_are_segment_sums(spark, MERGE_DIR)
     return before, info
 
 
@@ -65,6 +68,7 @@ def test_resume_after_merge_skips_all(spark, merge_env):
     info = build_index(spark, pages_df(spark, 400, n_parts=4), MERGE_DIR, num_partitions=8)
     assert info["built"] == 0
     assert info["skipped"] == 8
+    assert_term_stats_are_segment_sums(spark, MERGE_DIR)
 
 
 def test_plan_merges_respects_tier_size(spark, merge_env):
@@ -93,32 +97,7 @@ def test_uncommitted_merge_output_not_live(spark, tmp_path):
     orphan = store.MERGED_SEG_BASE + 1
     _sh.copytree(store.seg_dir(d, live_before[0]), store.seg_dir(d, orphan))
     assert store.list_segs(d) == live_before  # orphan not live
+    assert_term_stats_are_segment_sums(spark, d)
     reclaimed = store.reconcile(d)
     assert orphan in reclaimed
     assert not os.path.isdir(store.seg_dir(d, orphan))
-
-
-def test_stats_swap_crash_recovery_and_atomic_folded(spark, tmp_path):
-    """merge_term_stats survives both crash windows: a table parked at
-    .old (crash mid-swap) is restored, and the folded set commits WITH the
-    table so a replayed batch never double-folds df."""
-    import os
-
-    from elasticsearch_spark.operators.merge import merge_term_stats
-    from elasticsearch_spark.operators.postings import build_index
-    from elasticsearch_spark.sources import index_store as store
-    from elasticsearch_spark.sources.pages import pages_df
-
-    d = str(tmp_path / "stats_idx")
-    build_index(spark, pages_df(spark, 60, n_parts=2), d, num_partitions=2)
-    ts = store.term_stats_path(d)
-    before = {r["term"]: r["df"] for r in spark.read.parquet(ts).collect()}
-    # crash window 2: table parked at .old, live path missing
-    os.replace(ts, ts + ".old")
-    merge_term_stats(spark, d, [])  # no-op fold must first RECOVER the table
-    assert os.path.exists(ts)
-    # replay idempotence: re-folding the same segments is a no-op
-    segs = store.list_segs(d)
-    merge_term_stats(spark, d, segs)
-    after = {r["term"]: r["df"] for r in spark.read.parquet(ts).collect()}
-    assert after == before

@@ -14,6 +14,7 @@ from elasticsearch_spark.operators.ops import apply_ops, live_docs, read_tombsto
 from elasticsearch_spark.operators.postings import build_index
 from elasticsearch_spark.operators.topk import search_topk
 from elasticsearch_spark.sources import index_store as store
+from tests.conftest import assert_term_stats_are_segment_sums
 
 OPS_DIR = "/tmp/es_spark_ops_test"
 TS = dt.datetime(2024, 6, 1)
@@ -39,6 +40,7 @@ def ops_index(spark):
         "url", F.lit(TS).cast("timestamp").alias("warc_ts"), "text", F.lit("en").alias("lang")
     )
     build_index(spark, df, OPS_DIR, num_partitions=2)
+    assert_term_stats_are_segment_sums(spark, OPS_DIR)
     return OPS_DIR
 
 
@@ -50,6 +52,7 @@ def test_delete_masks_doc(spark, ops_index):
     after = {r["url"] for r in search_topk(spark, ops_index, ["zebra"], k=10).collect()}
     assert after == {"u1", "u4"}
     assert live_docs(spark, ops_index).count() == 3
+    assert_term_stats_are_segment_sums(spark, ops_index)
 
 
 def test_update_is_delete_plus_add(spark, ops_index):
@@ -59,6 +62,7 @@ def test_update_is_delete_plus_add(spark, ops_index):
     # old content of u1 is no longer searchable
     assert {r["url"] for r in search_topk(spark, ops_index, ["zebra"], k=10).collect()} == {"u4"}
     assert live_docs(spark, ops_index).count() == 3
+    assert_term_stats_are_segment_sums(spark, ops_index)
 
 
 def test_create_conflict_and_new(spark, ops_index):
@@ -70,6 +74,7 @@ def test_create_conflict_and_new(spark, ops_index):
     assert {r["url"] for r in search_topk(spark, ops_index, ["walrus"], k=10).collect()} == {"u9"}
     # u3 unchanged (create never overwrites)
     assert {r["url"] for r in search_topk(spark, ops_index, ["plain"], k=10).collect()} == {"u3"}
+    assert_term_stats_are_segment_sums(spark, ops_index)
 
 
 def test_merge_expunges_tombstones(spark, ops_index):
@@ -84,6 +89,7 @@ def test_merge_expunges_tombstones(spark, ops_index):
     # results unchanged by the expunging merge
     assert {r["url"] for r in search_topk(spark, ops_index, ["zebra"], k=10).collect()} == {"u4"}
     assert {r["url"] for r in search_topk(spark, ops_index, ["quokka"], k=10).collect()} == {"u1"}
+    assert_term_stats_are_segment_sums(spark, ops_index)
 
 
 def test_external_versioning(spark, tmp_path):
@@ -120,6 +126,7 @@ def test_external_versioning(spark, tmp_path):
     res2 = es.bulk("pages", batch([("u2", "v2 again", "en", 2)]),
                    version_type="external")
     assert res2["version_conflicts"] == 1 and res2["updated"] == 0
+    assert_term_stats_are_segment_sums(spark, es._dir("pages"))
 
 
 def test_intra_batch_op_sequencing(spark, tmp_path):
@@ -154,6 +161,7 @@ def test_intra_batch_op_sequencing(spark, tmp_path):
     hits = {r["url"] for r in search_topk(spark, d, ["second"], k=10).collect()}
     assert hits == {"w1"}  # w1 carries the LAST body
     assert not {r["url"] for r in search_topk(spark, d, ["fresh"], k=10).collect()}
+    assert_term_stats_are_segment_sums(spark, d)
 
 
 @pytest.fixture(scope="module")
@@ -182,6 +190,7 @@ def updated_engine(spark, tmp_path_factory):
     old = doc_id("upd")
     bulk([("upd", "now a quick brown fox runs far", "en")])
     es.delete("pages", ["del"])
+    assert_term_stats_are_segment_sums(spark, es._dir("pages"))
     return es, old, doc_id("upd")
 
 
@@ -206,3 +215,72 @@ def test_deletes_and_updates_invisible_on_every_index_path(updated_engine, query
     assert sorted(urls) == ["keep", "upd"]  # no deleted doc, no duplicate
     assert old_id != new_id
     assert {r["doc_id"] for r in hits if r["url"] == "upd"} == {new_id}
+
+
+def test_interrupted_bulk_stays_searchable(spark, tmp_path, monkeypatch):
+    """A bulk that stops after its segments commit (here: its tombstone
+    append raises) leaves its docs searchable: df is the sum of the live
+    segments' own postings, so no later write has to fold it in. The
+    updated url's old version stays live too — the segment commit and the
+    tombstone append are not one commit yet."""
+    from elasticsearch_spark.api import Engine
+    from elasticsearch_spark.operators import ops
+    from elasticsearch_spark.sources.pages import pages_df
+
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", pages_df(spark, 60, n_parts=2).drop("html"))
+    live_url = es._docs_view("ix").orderBy("url").first()["url"]
+
+    def docs(rows):
+        return spark.createDataFrame(rows, "url string, text string, lang string") \
+            .withColumn("warc_ts", F.lit(TS).cast("timestamp"))
+
+    append = ops.append_tombstone_batch
+
+    def crash_once(*args):
+        monkeypatch.setattr(ops, "append_tombstone_batch", append)
+        raise OSError("injected crash before the tombstone append")
+
+    monkeypatch.setattr(ops, "append_tombstone_batch", crash_once)
+    with pytest.raises(OSError, match="injected crash"):
+        es.bulk("ix", docs([(live_url, "zqxjkw updated body", "en"),
+                            ("https://new.example/zq", "zqxjkw fresh body", "en")]))
+    es.bulk("ix", docs([("https://other.example/x", "unrelated words only", "en")]))
+
+    assert {t: df for t, (_, df) in es._reader("ix").term_weights(["zqxjkw"]).items()} == \
+        {"zqxjkw": 2}
+    query = {"match": {"text": "zqxjkw"}}
+    hits = {r["url"] for r in es.search("ix", {"query": query})["hits"].collect()}
+    assert hits == {live_url, "https://new.example/zq"}
+    # count keys the match set by url, so it also counts the old version of
+    # live_url, live because the crash came before its tombstone (ROADMAP)
+    versions = es._docs_view("ix").where(F.col("url").isin(sorted(hits))).count()
+    assert es.count("ix", query) == versions >= 2
+    assert_term_stats_are_segment_sums(spark, es._dir("ix"))
+
+
+def test_no_term_stats_table_on_disk(spark, tmp_path):
+    """Build, bulk, delete and forcemerge write segments, manifests,
+    tombstones and the index meta — no second copy of the term statistics."""
+    import os
+
+    from elasticsearch_spark.api import Engine
+
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    d = es._dir("ix")
+    writes = [
+        lambda: es.bulk("ix", spark.createDataFrame(
+            [(f"u{i}", f"words {i} here", "en") for i in range(6)],
+            "url string, text string, lang string")),
+        lambda: es.bulk("ix", spark.createDataFrame(
+            [("u1", "new words", "en"), ("u9", "more words", "en")],
+            "url string, text string, lang string")),
+        lambda: es.delete("ix", ["u2"]),
+        lambda: es.forcemerge("ix", segments_per_tier=1 << 20),
+    ]
+    for write in writes:
+        write()
+        assert "stats" not in os.listdir(d)
+        assert_term_stats_are_segment_sums(spark, d)

@@ -1,19 +1,14 @@
 """The Engine-owned IndexReader: an index search runs no Spark job, term
-stats and prefix expansions are driver-side reads, and a reader never
-outlives the commit it was opened on."""
+stats and prefix expansions are lookups in the segments' term
+dictionaries, and a reader never outlives the commit it was opened on."""
 
 from __future__ import annotations
 
-import glob
-import os
 import shutil
 import sys
 import threading
-import zlib
 
 import numpy as np
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -25,6 +20,7 @@ from elasticsearch_spark.operators.phrase import highlight
 from elasticsearch_spark.operators.topk import IndexReader, _prefix_end, msearch_topk, search_topk
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_df
+from tests.conftest import assert_term_stats_are_segment_sums
 
 ROOT = "/tmp/es_spark_reader_test"
 FULL_MERGE = {"segments_per_tier": 1 << 20}
@@ -207,82 +203,35 @@ def test_concurrent_searches_after_bulk(spark, tmp_path):
 
 
 def test_reader_stats_match_the_term_dictionary(spark, tmp_path):
-    """Driver-side lookups equal the stats table read through Spark:
-    term_weights' df and prefix_terms' capped term-order expansion, merged
-    across the table's term-sorted files."""
+    """Driver-side lookups over several segments equal the postings read
+    through Spark: term_weights' df summed over the segments, and
+    prefix_terms' capped term-order expansion merged from the segments'
+    overlapping runs."""
     es = Engine(spark, root=str(tmp_path))
-    es.create_index("ix", num_partitions=2)
-    es.bulk("ix", pages_df(spark, 120, n_parts=2))
-    path = store.term_stats_path(es._dir("ix"))
-    # re-lay the table out as the stats writers do at scale: several files,
-    # each term-sorted (a hash split on term), in small row groups
-    parts = glob.glob(os.path.join(path, "part-*.parquet"))
-    tab = pq.read_table(parts)
-    split = np.array([zlib.crc32(t.encode()) % 3 for t in tab["term"].to_pylist()])
-    for p in parts:
-        os.remove(p)
-    for i in range(3):
-        part = tab.filter(pa.array(split == i)).sort_by("term")
-        pq.write_table(part, os.path.join(path, f"part-{i:05d}.parquet"), row_group_size=16)
-    table = {r["term"]: r["df"] for r in spark.read.parquet(path).collect()}
+    es.create_index("ix", num_partitions=3)
+    es.bulk("ix", pages_df(spark, 120, n_parts=2).drop("html"))
+    es.bulk("ix", pages_df(spark, 160, n_parts=2).drop("html"))  # 120 updates, 40 new docs
+    d = es._dir("ix")
+    assert len(store.list_segs(d)) >= 4
+    assert_term_stats_are_segment_sums(spark, d)
+    table = {r["term"]: r["df"] for r in spark.read.parquet(*store.postings_glob(d))
+             .groupBy("term").agg(F.sum("n").alias("df")).collect()}
     terms = sorted(table)
-    reader = IndexReader(spark, es._dir("ix"))
+    reader = IndexReader(spark, d)
     probe = terms[::7] + ["no-such-term"]
     assert {t: df for t, (_, df) in reader.term_weights(probe).items()} == \
         {t: table[t] for t in probe if t in table}
     for p in ["", "t", "th", "of", "zz", terms[len(terms) // 2][:3]]:
-        for cap in (1, 5, 1000, 100000):
+        for cap in (0, 1, 5, 1000, 100000):
             assert reader.prefix_terms(p, cap) == [t for t in terms if t.startswith(p)][:cap]
-
-
-def test_term_cache_bound_keeps_cached_terms(es, spark, monkeypatch):
-    """When a long-lived reader's term cache passes its bound it is emptied
-    and refilled: a lookup mixing cached and new terms still returns every
-    term's weight."""
-    terms = sorted(r["term"] for r in spark.read.parquet(
-        store.term_stats_path(es._dir("pages"))).limit(6).collect())
-    want = IndexReader(spark, es._dir("pages")).term_weights(terms)
-    monkeypatch.setattr(topk, "_MAX_CACHED_TERMS", 2)
-    reader = IndexReader(spark, es._dir("pages"))
-    assert reader.term_weights(terms[:3]) == {t: want[t] for t in terms[:3]}
-    mixed = [terms[0], terms[3], "no-such-term", terms[4]]
-    assert reader.term_weights(mixed) == {t: want[t] for t in mixed if t in want}
-    assert len(reader._df) <= len(mixed)
-
-
-def test_missing_stats_table_is_an_error(es, spark):
-    """A reader opened on a committed stats table waits out a stats swap
-    (the table is briefly parked at ``.old``) and raises when the table stays
-    gone — it never answers with zero-df terms, i.e. silently empty hits."""
-    path = store.term_stats_path(es._dir("pages"))
-    terms = sorted(r["term"] for r in spark.read.parquet(path).limit(4).collect())
-    want = IndexReader(spark, es._dir("pages")).term_weights(terms)
-    reader = IndexReader(spark, es._dir("pages"))
-    reader.term_weights(terms[:1])  # warm
-    os.replace(path, path + ".old")
-    try:
-        restore = threading.Timer(0.1, os.replace, (path + ".old", path))
-        restore.start()
-        assert reader.term_weights(terms) == want  # waited out the swap
-        restore.join()
-        os.replace(path, path + ".parked")
-        with pytest.raises(FileNotFoundError, match="term stats"):
-            reader.term_weights(["no-such-term-either"])
-        with pytest.raises(FileNotFoundError, match="term stats"):
-            reader.prefix_terms("t", 5)
-    finally:
-        for parked in (path + ".old", path + ".parked"):
-            if os.path.exists(parked):
-                os.replace(parked, path)
-    assert IndexReader(spark, es._dir("pages")).term_weights(terms) == want
 
 
 def test_reader_shared_by_threads(es, spark):
     """More threads than cores reopen and query the Engine's reader with a
     tiny switch interval: every thread gets one shared reader and the
     single-threaded term stats (no lost or torn cache fill)."""
-    terms = [r["term"] for r in spark.read.parquet(
-        store.term_stats_path(es._dir("pages"))).limit(400).collect()] + ["no-such-term"]
+    terms = IndexReader(spark, es._dir("pages")).term_stats()["term"].to_pylist()[:400] \
+        + ["no-such-term"]
     want = IndexReader(spark, es._dir("pages")).term_weights(terms)
     es._readers.clear()
     readers, results, errors = [], [], []
@@ -419,3 +368,44 @@ def test_query_phase_tasks_may_not_use_the_pool(es):
 
     with pytest.raises(RuntimeError, match="may not wait on the query-phase pool"):
         topk.query_phase(reader, reader.segs, nested)
+
+
+WORDS = ["", "a", "ab", "abc", "abcd", "acb", "a.c", "a*c", "a?c", "a\\c", "a+", "a_c",
+         "[ab]", "ba", "bac", "cat", "cut", "xabc", "é", "aé", "éa", "東", "東京", "京東"]
+
+
+def test_expansion_rules_equal_spark(es, spark, monkeypatch):
+    """The driver-side wildcard, regexp and fuzzy rewrites keep the rules of
+    the Spark scans they replace (``rlike`` on the anchored pattern,
+    ``levenshtein`` plus the ``prefix_length`` head), in term order, on a
+    mixed-script vocabulary with regex metacharacters in it."""
+    vocab = np.array(sorted(WORDS), dtype=object)
+    ones = np.ones(len(vocab), dtype=np.int64)
+    reader = IndexReader(spark, es._dir("pages"))
+    monkeypatch.setattr(reader, "_dictionaries", lambda: [(vocab, ones, ones)] * 2)
+    words = spark.createDataFrame([(w,) for w in WORDS], "t string")
+
+    def spark_rule(specs, schema, cond):
+        rows = words.crossJoin(spark.createDataFrame(specs, schema)).where(cond) \
+            .orderBy("t").collect()
+        return {s: [r["t"] for r in rows if r["spec"] == s] for s in {x[0] for x in specs}}
+
+    wildcards = ["a*", "a?c", "*c", "a\\*c", "a\\?c", "[ab]", "a+", "a.c", "*", "?",
+                 "東*", "?é", "a\\\\c", "a_c"]
+    want = spark_rule([(p, f"^{topk._wildcard_regex(p)}$") for p in wildcards],
+                      "spec string, rx string", F.expr("t rlike rx"))
+    for p in wildcards:
+        assert reader.expand_terms("wildcard", p, 100) == want[p], p
+    regexps = ["a.c", "ab|ba", "[a-c]+", "東.*", ".", "a\\.c"]
+    want = spark_rule([(p, f"^(?:{p})$") for p in regexps], "spec string, rx string",
+                      F.expr("t rlike rx"))
+    for p in regexps:
+        assert reader.expand_terms("regexp", p, 100) == want[p], p
+    fuzzy = [(v, k, n) for v in ["abc", "cat", "東京", "aé", ""] for k in (0, 1, 2) for n in (0, 1)]
+    want = spark_rule([(f"{v}|{k}|{n}", v, k, v[:n]) for v, k, n in fuzzy],
+                      "spec string, v string, k int, head string",
+                      (F.levenshtein("t", "v") <= F.col("k")) & F.col("t").startswith(F.col("head")))
+    for v, k, n in fuzzy:
+        assert reader.expand_terms("fuzzy", v, 100, k, n) == want[f"{v}|{k}|{n}"], (v, k, n)
+    # the cap counts distinct terms across segments, in term order
+    assert reader.expand_terms("wildcard", "a*", 2) == ["a", "a*c"]

@@ -14,6 +14,7 @@ from elasticsearch_spark.operators.postings import build_index
 from elasticsearch_spark.operators.topk import search_topk
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_df
+from tests.conftest import assert_term_stats_are_segment_sums
 
 RESUME_DIR = "/tmp/es_spark_resume_test"
 N_PARTS = 6
@@ -27,6 +28,7 @@ def built(spark):
         (r["doc_id"], round(r["score"], 9))
         for r in search_topk(spark, RESUME_DIR, ["the", "w00123"], fetch=False).collect()
     ]
+    assert_term_stats_are_segment_sums(spark, RESUME_DIR)
     return info, baseline
 
 
@@ -45,6 +47,7 @@ def test_crash_before_manifest_rebuilds_only_lost_partitions(spark, built):
         for r in search_topk(spark, RESUME_DIR, ["the", "w00123"], fetch=False).collect()
     ]
     assert got == baseline
+    assert_term_stats_are_segment_sums(spark, RESUME_DIR)
 
 
 def test_stale_lineage_triggers_rebuild(spark, built):
@@ -56,6 +59,7 @@ def test_stale_lineage_triggers_rebuild(spark, built):
     meta = store.IndexMeta.load(RESUME_DIR)
     docs = spark.read.parquet(*store.docs_glob(RESUME_DIR))
     assert docs.count() == meta.doc_count
+    assert_term_stats_are_segment_sums(spark, RESUME_DIR)
 
 
 def test_segment_file_loss_with_manifest_rebuilds(spark, built):
@@ -65,3 +69,4 @@ def test_segment_file_loss_with_manifest_rebuilds(spark, built):
     info4 = build_index(spark, pages_df(spark, 301, n_parts=4), RESUME_DIR, num_partitions=N_PARTS)
     assert info4["built"] >= 1
     assert os.path.exists(os.path.join(store.seg_dir(RESUME_DIR, pid), "postings.parquet"))
+    assert_term_stats_are_segment_sums(spark, RESUME_DIR)

@@ -9,10 +9,12 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from elasticsearch_spark.operators.topk import search_topk
+from elasticsearch_spark.operators.merge import merge_index
+from elasticsearch_spark.operators.topk import IndexReader, search_topk
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_pdf
 from elasticsearch_spark.streaming import ingest
+from tests.conftest import assert_term_stats_are_segment_sums
 
 STREAM_DIR = "/tmp/es_spark_stream_test"
 
@@ -67,35 +69,54 @@ def test_stream_restart_is_exactly_once(spark, stream_dirs):
     assert store.IndexMeta.load(idx).doc_count == before
 
 
-def test_incremental_stats_match_full_rebuild(spark, stream_dirs):
-    """Per-batch stats are folded INCREMENTALLY (merge_term_stats over just
-    the new segments): the folded table must equal a full rebuild, and
-    re-folding already-folded segments (micro-batch replay) is a no-op."""
-    import os
-
-    from elasticsearch_spark.operators.merge import (
-        _read_folded_segs,
-        merge_term_stats,
-        rebuild_term_stats,
-    )
-
+def test_replayed_micro_batch_keeps_df(spark, stream_dirs):
+    """A micro-batch that Structured Streaming re-runs after a crash (its
+    commit missing from the checkpoint) rebuilds nothing and leaves the
+    reader's term statistics and the doc count as they were: df is read
+    from the committed segments, so there is nothing to fold twice."""
     idx = f"{STREAM_DIR}/index"
-    # the streaming fixture folded every segment incrementally
-    assert _read_folded_segs(idx) == set(store.list_segs(idx))
-    inc = {
-        r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(store.term_stats_path(idx)).collect()
-    }
-    rebuild_term_stats(spark, idx)
-    full = {
-        r["term"]: (r["df"], r["cf"])
-        for r in spark.read.parquet(store.term_stats_path(idx)).collect()
-    }
-    assert inc == full
-    # replay idempotence: folding the same segments again changes nothing
-    mtime = os.path.getmtime(store.term_stats_path(idx))
-    merge_term_stats(spark, idx, store.list_segs(idx))
-    assert os.path.getmtime(store.term_stats_path(idx)) == mtime
+    ckpt = f"{STREAM_DIR}/ckpt"
+    assert_term_stats_are_segment_sums(spark, idx)
+    before = IndexReader(spark, idx).term_stats()
+    doc_count = store.IndexMeta.load(idx).doc_count
+    last = max(int(n) for n in os.listdir(f"{ckpt}/commits") if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        os.remove(f"{ckpt}/commits/{name}")
+    schema = spark.read.parquet(f"{stream_dirs}/a").schema
+    stream = spark.readStream.schema(schema).parquet(f"{stream_dirs}/*")
+    q = ingest.start_indexing_stream(
+        spark, stream, idx, ckpt, num_partitions=4, trigger={"availableNow": True}
+    )
+    q.awaitTermination(300)
+    assert os.path.exists(f"{ckpt}/commits/{last}")  # the batch ran again
+    assert IndexReader(spark, idx).term_stats().equals(before)
+    assert store.IndexMeta.load(idx).doc_count == doc_count
+    assert_term_stats_are_segment_sums(spark, idx)
+
+
+def test_micro_batch_after_forcemerge_keeps_doc_count(spark, tmp_path):
+    """A micro-batch committed after a forcemerge counts the merged
+    segment's docs too: doc_count is the live segments' rows."""
+    src, idx, ckpt = (str(tmp_path / n) for n in ("src", "index", "ckpt"))
+    spark.createDataFrame(pages_pdf(120)).write.parquet(f"{src}/a")
+    schema = spark.read.parquet(f"{src}/a").schema
+
+    def drain():
+        stream = spark.readStream.schema(schema).parquet(f"{src}/*")
+        ingest.start_indexing_stream(
+            spark, stream, idx, ckpt, num_partitions=4, trigger={"availableNow": True}
+        ).awaitTermination(300)
+
+    drain()
+    merge_index(spark, idx, segments_per_tier=1 << 20, floor_bytes=1)
+    assert len(store.list_segs(idx)) == 1
+    spark.createDataFrame(pages_pdf(80, start=200)).write.parquet(f"{src}/b")
+    drain()
+    rows = spark.read.parquet(*store.docs_glob(idx)).count()
+    assert rows > 150  # both batches
+    assert store.IndexMeta.load(idx).doc_count == rows
+    assert not os.path.exists(os.path.join(idx, "stats"))
+    assert_term_stats_are_segment_sums(spark, idx)
 
 
 def test_windowed_event_counts_plan(spark):
@@ -242,11 +263,11 @@ def test_dedup_stream_exact_first_wins(spark, tmp_path):
 
 
 def test_stream_commit_preserves_index_meta(spark, tmp_path):
-    """The per-batch meta/stats commit must UPDATE the persisted meta, not
+    """The per-batch meta commit must UPDATE the persisted meta, not
     rebuild it — a fresh IndexMeta wiped analyzer_config/index_sort/
     num_shards/settings/seg_map persisted by create_index or a merge."""
     from elasticsearch_spark.sources import index_store as store
-    from elasticsearch_spark.streaming.ingest import _update_meta_and_stats
+    from elasticsearch_spark.streaming.ingest import _commit_meta
 
     d = str(tmp_path / "meta_idx")
     import os as _os
@@ -256,7 +277,7 @@ def test_stream_commit_preserves_index_meta(spark, tmp_path):
                            index_sort=["warc_ts", "desc"], num_shards=2,
                            settings={"custom": 1}, k1=0.9, b=0.3)
     meta.save(d)
-    _update_meta_and_stats(spark, d, "standard", 4, new_segs=[])
+    _commit_meta(d, "standard", 4)
     got = store.IndexMeta.load(d)
     assert got.analyzer_config == ["standard", ["lowercase"]]
     assert got.index_sort == ["warc_ts", "desc"]

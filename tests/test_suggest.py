@@ -128,15 +128,11 @@ def test_term_suggest_popular_mode(spark, index_dir):
     rows_pop = out_pop.collect()
     assert len(rows_pop) <= len(rows_always)
     # every popular suggestion beats the input's own df
-    import pyspark.sql.functions as F
-    from elasticsearch_spark.sources import index_store as store
+    from elasticsearch_spark.operators.topk import IndexReader
 
-    the_df = (
-        spark.read.parquet(store.term_stats_path(index_dir))
-        .where(F.col("term") == "the").collect()
-    )
+    the_df = {t: df for t, (_, df) in IndexReader(spark, index_dir).term_weights(["the"]).items()}
     if the_df and rows_pop:
-        assert all(r["df"] > the_df[0]["df"] for r in rows_pop)
+        assert all(r["df"] > the_df["the"] for r in rows_pop)
 
 
 def test_search_body_suggest_routing(spark, tmp_path_factory):
