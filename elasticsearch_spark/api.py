@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import copy
 import functools
+import heapq
 import itertools
 import os
 import re
@@ -43,7 +44,7 @@ from .operators.phrase import highlight as highlight_fn
 from .operators.postings import build_index
 from .operators.suggest import explain as explain_fn
 from .operators.suggest import term_suggest
-from .operators.topk import IndexReader, search_topk
+from .operators.topk import IndexReader, edit_distances, search_topk
 from .plans import aggs as aggs_mod
 from .plans import dsl
 from .sources import index_store as store
@@ -141,6 +142,62 @@ def _fast_path_fields(kind: str, spec) -> set[str]:
     subs = list(spec.get("clauses", [])) + [
         spec[k] for k in ("match", "include", "exclude", "big", "little", "query") if k in spec]
     return set().union(*(_fast_path_fields(*next(iter(c.items()))) for c in subs))
+
+
+def _pinned(reader: IndexReader, segs) -> IndexReader:
+    """``reader`` over the pinned segment set ``segs`` (a PIT's), or
+    ``reader`` itself when ``segs`` is None."""
+    if segs is None:
+        return reader
+    pinned = copy.copy(reader)
+    pinned.segs = list(segs)
+    return pinned
+
+
+class _IndexText:
+    """An Engine index's ``text`` field as ``dsl.SearchContext.index``: the
+    index's analyzer, its postings BM25, df and term dictionary, and its
+    positional leaves (``Engine._index_hits``). A score frame holds every
+    matching live doc of ``segs`` (default: the reader's), one row per
+    doc, built on the driver with no Spark job."""
+
+    def __init__(self, engine: "Engine", reader: IndexReader, segs=None):
+        self.engine = engine
+        self.reader = _pinned(reader, segs)
+
+    def analyze(self, text: str) -> list[str]:
+        return analysis.analyze(text, self.reader.meta.analyzer)
+
+    def doc_freqs(self, terms: list[str]) -> dict[str, int]:
+        return {t: df for t, (_, df) in self.reader.term_weights(terms).items()}
+
+    def doc_count(self) -> int:
+        return self.reader.meta.doc_count
+
+    def bm25(self, terms: list[str], need: int, boost: float) -> DataFrame:
+        r = self.reader
+        hits = search_topk(
+            self.engine.spark, r.index_dir, terms, k=r.meta.doc_count,
+            # "and" skips the segments when a term is missing from the index
+            operator="and" if need == len(terms) else "or", minimum_should_match=need,
+            mode="naive", fetch=False, reader=r, fields=("url",))
+        return hits.select(F.col("url").alias("__key"), (F.col("score") * boost).alias("_score"),
+                           F.col("n_terms_matched").alias("_matched"))
+
+    def multi_term(self, kind: str, value: str, boost: float, fuzziness: int) -> DataFrame:
+        if kind == "prefix":
+            # the constant-score rewrite: every dictionary term of the prefix
+            terms = self.reader.prefix_terms(value, None)
+        else:
+            # the top-terms rewrite: the 50 closest terms (max_expansions),
+            # ties in term order
+            near = self.reader.expand_terms(kind, value, None, fuzziness=fuzziness)
+            terms = [t for _, t in heapq.nsmallest(50, zip(edit_distances(value, near, fuzziness), near))]
+        return self.bm25(terms, 1, 1.0).select("__key", F.lit(float(boost)).alias("_score"))
+
+    def positional(self, q: dict, boost: float) -> DataFrame:
+        hits = self.engine._index_hits(self.reader, q, self.reader.meta.doc_count, fetch=False)
+        return hits.select(F.col("url").alias("__key"), (F.col("score") * boost).alias("_score"))
 
 
 def _tpl_get(params: dict, dotted: str):
@@ -250,8 +307,8 @@ class Engine:
             base["sort"] = sort
         sid = f"scroll~{next(self._seq)}"
         ix = self._pits[pit][0]
-        # pin the tombstone set too: segments pin via the PIT, but the
-        # compact tombstone file is rewritten by later deletes/updates —
+        # pin the tombstone set too: segments pin via the PIT, but later
+        # deletes/updates add tombstone batches and a merge swaps the set —
         # hard-linked snapshot gives the cursor repeatable reads (ES scroll
         # returns the snapshot-time view, Scroll.java keep-alive contract)
         pin_dir = os.path.join(self._dir(ix), ".scroll", sid.replace("~", "_"))
@@ -1276,9 +1333,7 @@ class Engine:
         (kind, spec), = q.items()
         if _fast_path_fields(kind, spec) != {"text"}:
             return None
-        if segs is not None:
-            reader = copy.copy(reader)  # the same reader over the pinned segments
-            reader.segs = list(segs)
+        reader = _pinned(reader, segs)
         opts = {"k": k, "routing": routing, "offset": offset, "fields": fields}
         if kind.startswith("span_"):
             from .operators.spans import search_spans
@@ -1306,24 +1361,20 @@ class Engine:
         fn = search_phrase if kind == "match_phrase" else search_phrase_prefix
         return fn(reader, qspec["query"], slop=qspec.get("slop", 0), **opts)
 
-    def _index_leaves(self, index: str, segs=None):
-        """``SearchContext.index_leaf`` over ``index``: a text leaf's match
-        set — every matching live doc of ``segs`` (default: the current
-        ones) as its ``url`` and score — from ``_index_hits``; None when
-        the index has no meta yet (only the DSL can answer). The set is
-        built on the driver, so it holds one row per matching doc."""
+    def _text_index(self, index: str, segs=None) -> _IndexText | None:
+        """``SearchContext.index`` over ``index``'s ``text`` field, pinned
+        to ``segs`` (default: the current segments); None when the index
+        has no meta yet (only the DSL can answer)."""
         if not os.path.exists(store.meta_path(self._dir(index))):
             return None
-        reader = self._reader(index)
-        return lambda q: self._index_hits(reader, q, reader.meta.doc_count, segs, fetch=False)
+        return _IndexText(self, self._reader(index), segs)
 
     def _context(self, index: str, docs: DataFrame, segs=None) -> dsl.SearchContext:
         """The query context over ``docs``, a view of ``index``'s live docs:
-        key ``url``, the index's keyword normalizers and its answer for
-        text leaves."""
+        key ``url``, the index's keyword normalizers and its text field."""
         return dsl.SearchContext(docs, "url", text_col="text",
                                  kw_norm=self._kw_normalizers(index),
-                                 index_leaf=self._index_leaves(index, segs))
+                                 index=self._text_index(index, segs))
 
     def _matching(self, index: str, query: dict | None, docs: DataFrame | None = None,
                   segs=None) -> DataFrame:
@@ -1331,10 +1382,10 @@ class Engine:
         matches — the one answer to "which docs does this query match" for
         count and track_total_hits, aggs, validate_query, the async partial
         reduce, delete/update-by-query, reindex, datafeeds and vector tiles.
-        A search's hits agree with it: text leaves on the index (match,
-        match_phrase, match_phrase_prefix, intervals) are its postings'
-        match sets, computed by the driver-side query phase; every other
-        clause compiles to a predicate over ``docs``. A query with no
+        A search's hits agree with it: text leaves on the index's ``text``
+        field take their terms, df and scores from the index
+        (``_IndexText``), computed by the driver-side query phase; every
+        other clause compiles to a predicate over ``docs``. A query with no
         predicate (a scoring-only node, or a compound holding an index
         leaf) is a semi-join on its frame's keys (``dsl.matching``)."""
         docs = self._docs_view(index) if docs is None else docs
@@ -1447,10 +1498,11 @@ class Engine:
         the query phase, merge and fetch run on the driver and the hits
         frame is a local relation — no Spark job. Every other body runs
         through the DSL compiler over the live docs view; its text leaves
-        on ``text`` are the same dispatcher's match sets
-        (``_index_leaves``), so wrapping a query in ``bool`` keeps its
-        matches and scores. ``aggs`` and ``track_total_hits`` count the
-        docs ``_matching`` selects — the docs the hits come from.
+        on ``text`` ask the index (``_IndexText``: its analyzer, postings
+        BM25, df, term dictionary and this dispatcher), so wrapping a query
+        in ``bool`` keeps its matches and scores. ``aggs`` and
+        ``track_total_hits`` count the docs ``_matching`` selects — the
+        docs the hits come from.
 
         ``index`` may be an alias: multi-index aliases fan out through
         ``search_multi`` (cross-index semantics)."""
@@ -1648,7 +1700,7 @@ class Engine:
             docs = self._docs_view(index)
             hits = dsl.search(self.spark, docs, body, key="url", text_col="text",
                               kw_norm=self._kw_normalizers(index),
-                              index_leaf=self._index_leaves(index))
+                              index=self._text_index(index))
             # requested fields a _source filter dropped come back by url
             have = [n for n in requested if n not in hits.columns and n in docs.columns]
             if have and "url" in hits.columns:
@@ -2742,7 +2794,7 @@ class Engine:
                          if kk not in ("aggs", "aggregations")}
             hits = dsl.search(self.spark, view, part_body, key="url", text_col="text",
                               kw_norm=self._kw_normalizers(concrete[0]),
-                              index_leaf=self._index_leaves(concrete[0], half)).collect()
+                              index=self._text_index(concrete[0], half)).collect()
             aggs_out = {}
             agg_spec = body.get("aggs") or body.get("aggregations")
             if agg_spec:

@@ -11,12 +11,12 @@ the merge — scores drift slightly exactly as they do in the reference.
 Spark re-expression:
 - new/changed docs build a NEW segment generation (op-batch-namespaced
   pids — segments stay immutable);
-- superseded/deleted doc_ids append to a global ``tombstones.parquet``
-  (the liveDocs bitmap analog, atomic replace);
+- superseded/deleted doc_ids append a batch file under ``tombstones/``
+  (the liveDocs bitmap analog; a batch is never rewritten);
 - the query phase filters tombstoned ids per segment
   (sorted-array searchsorted — O(log n) per posting batch);
 - ``merge_index`` expunges: merged segments drop tombstoned docs and their
-  postings, then those tombstones are cleared.
+  postings, then ``reconcile_tombstones`` swaps in the surviving set.
 """
 
 from __future__ import annotations
@@ -35,31 +35,21 @@ from .postings import METRICS_SCHEMA, segment_builder
 OPS_SEG_BASE = store.OPS_SEG_BASE  # op-batch segments live above initial pids, below merged
 
 
-def tombstones_path(index_dir: str) -> str:
-    """Compact single-file tombstone set (rewritten whole on small batches
-    and after merges)."""
-    return os.path.join(index_dir, "tombstones.parquet")
-
-
 def tombstones_dir(index_dir: str) -> str:
-    """Distributed-append tombstone batches: ``delete_by_query`` writes its
-    matching doc_ids here as Spark parquet output — no driver collect, so a
-    broad delete at 100 TB never funnels ids through one process. Readers
-    union this dir with the compact file; merges fold both back into the
-    compact file."""
+    """The tombstone set, one parquet file per batch: ``delete_by_query``
+    writes its matching doc_ids here as Spark parquet output — no driver
+    collect, so a broad delete at 100 TB never funnels ids through one
+    process — and a bulk appends one driver-written batch. A merge swaps
+    in the reconciled set (``reconcile_tombstones``)."""
     return os.path.join(index_dir, "tombstones")
 
 
 def _tomb_paths(index_dir: str) -> list[str]:
-    """Every live tombstone parquet file: the compact file, the
-    distributed-append dir, plus their ``.old`` parked twins — the parked
-    copies cover the reconcile swap's crash window (worst case they mask
-    ids a merge already expunged, which is a harmless no-op)."""
+    """Every live tombstone parquet file: the batch dir plus its ``.old``
+    parked twin — the parked copy covers the reconcile swap's crash window
+    (worst case it masks ids a merge already expunged, which is a harmless
+    no-op)."""
     paths = []
-    p = tombstones_path(index_dir)
-    for f in (p, p + ".old"):
-        if os.path.exists(f):
-            paths.append(f)
     base = tombstones_dir(index_dir)
     for d in (base, base + ".old"):
         if os.path.isdir(d):
@@ -163,9 +153,9 @@ def mask_tombstones(spark: SparkSession, index_dir: str, docs: DataFrame) -> Dat
 def pin_tombstones(index_dir: str, dest_dir: str) -> list[str]:
     """Snapshot the CURRENT tombstone set for a cursor (scroll isolation):
     hard-link every live tombstone file into ``dest_dir``. Writers only
-    ever atomically REPLACE the compact file / append NEW batch files, so
-    the linked inodes stay frozen — content-pinning at zero copy cost,
-    independent of delete count. Returns the pinned paths."""
+    append NEW batch files or swap in a whole new batch dir, never rewrite
+    a file, so the linked inodes stay frozen — content-pinning at zero
+    copy cost, independent of delete count. Returns the pinned paths."""
     os.makedirs(dest_dir, exist_ok=True)
     pinned = []
     for i, src in enumerate(_tomb_paths(index_dir)):
@@ -252,19 +242,11 @@ def reconcile_tombstones(spark: SparkSession, index_dir: str, docs: DataFrame) -
     )
     live_dir = tombstones_dir(index_dir)
     old_dir = live_dir + ".old"
-    compact = tombstones_path(index_dir)
-    compact_old = compact + ".old"
     shutil.rmtree(old_dir, ignore_errors=True)
-    if os.path.exists(compact_old):
-        os.remove(compact_old)
-    if os.path.exists(compact):
-        os.replace(compact, compact_old)      # park compact
     if os.path.isdir(live_dir):
-        os.rename(live_dir, old_dir)          # park append dir
+        os.rename(live_dir, old_dir)          # park the current set
     os.rename(rec, live_dir)                  # swap reconciled set in
     shutil.rmtree(old_dir, ignore_errors=True)
-    if os.path.exists(compact_old):
-        os.remove(compact_old)
 
 
 def apply_ops(

@@ -419,11 +419,8 @@ def explain(
         if tf == 0 or t not in stats:
             continue
         df_ = stats[t]
-        idf = float(bm25.idf(df_, meta.doc_count))
-        contrib = (
-            idf * (meta.k1 + 1.0) * tf / (tf + meta.k1 * (1 - meta.b + meta.b * ql / meta.avgdl))
-        )
-        out.append((t, tf, df_, idf, ql, contrib))
+        contrib = bm25.score(tf, df_, ql, meta.doc_count, meta.avgdl, meta.k1, meta.b)
+        out.append((t, tf, df_, float(bm25.idf(df_, meta.doc_count)), ql, float(contrib)))
     return spark.createDataFrame(
         out, "term string, tf long, df long, idf double, ql double, contribution double"
     )

@@ -489,20 +489,21 @@ class IndexReader:
             if df
         }
 
-    def prefix_terms(self, prefix: str, max_expansions: int) -> list[str]:
+    def prefix_terms(self, prefix: str, max_expansions: int | None) -> list[str]:
         """The first ``max_expansions`` dictionary terms (term order)
         starting with ``prefix``: the rewrite of a prefix leaf
-        (match_phrase_prefix, intervals ``prefix``, span_multi ``prefix``).
-        Each segment contributes at most ``max_expansions`` terms of its
-        range, so even an empty prefix holds O(segments · max_expansions)
-        terms."""
+        (match_phrase_prefix, intervals ``prefix``, span_multi ``prefix``;
+        None: every such term, the constant-score rewrite of
+        match_bool_prefix's last term). Each segment contributes at most
+        ``max_expansions`` terms of its range, so even an empty prefix
+        holds O(segments · max_expansions) terms."""
         return _first_distinct((run[:max_expansions] for run in self._runs(prefix)), max_expansions)
 
-    def expand_terms(self, kind: str, value: str, max_expansions: int,
+    def expand_terms(self, kind: str, value: str, max_expansions: int | None,
                      fuzziness: int = 2, prefix_length: int = 0) -> list[str]:
         """The rewrite of a multi-term leaf (intervals prefix / wildcard /
         regexp / fuzzy sources, span_multi): the first ``max_expansions``
-        dictionary terms, in term order, that
+        (None: all) dictionary terms, in term order, that
         - ``prefix``: start with ``value`` (``prefix_terms``);
         - ``wildcard``: match ``value`` whole, ``*`` any run, ``?`` any
           one character, ``\\`` escaping the next; every other character
@@ -513,18 +514,20 @@ class IndexReader:
         A scan of the segments' dictionaries on the driver."""
         if kind == "prefix":
             return self.prefix_terms(value, max_expansions)
-        head = ""
         if kind == "wildcard":
             match = re.compile(_wildcard_regex(value), re.DOTALL).fullmatch
         elif kind == "regexp":
             match = re.compile(value).fullmatch
-        elif kind == "fuzzy":
-            head = value[:prefix_length]
-            match = functools.partial(_within_edits, value, k=fuzziness)
-        else:
+        elif kind != "fuzzy":
             raise ValueError(f"cannot expand a {kind!r} leaf")
-        runs = (itertools.islice(filter(match, run), max(max_expansions, 0))
-                for run in self._runs(head))
+
+        def keep(run):
+            if kind == "fuzzy":
+                return run[edit_distances(value, run, fuzziness) <= fuzziness]
+            return filter(match, run)
+
+        head = value[:prefix_length] if kind == "fuzzy" else ""
+        runs = (itertools.islice(keep(run), _cap(max_expansions)) for run in self._runs(head))
         return _first_distinct(runs, max_expansions)
 
     def term_stats(self) -> pa.Table:
@@ -564,26 +567,46 @@ class IndexReader:
             self._dicts.clear()
 
 
-def _first_distinct(runs, n: int) -> list[str]:
-    """The first ``n`` distinct terms of the union of sorted ``runs``."""
+def _cap(n: int | None) -> int | None:
+    """An expansion cap as an ``islice`` stop (None: no cap)."""
+    return None if n is None else max(n, 0)
+
+
+def _first_distinct(runs, n: int | None) -> list[str]:
+    """The first ``n`` (None: all) distinct terms of the union of sorted
+    ``runs``."""
     merged = heapq.merge(*runs)
-    return [t for t, _ in itertools.islice(itertools.groupby(merged), max(n, 0))]
+    return [t for t, _ in itertools.islice(itertools.groupby(merged), _cap(n))]
 
 
-def _within_edits(a: str, b: str, k: int) -> bool:
-    """Whether the Levenshtein distance of ``a`` and ``b`` (code points) is
-    at most ``k``: the dynamic program, stopped once a row exceeds ``k``."""
-    if abs(len(a) - len(b)) > k:
-        return False
-    prev = list(range(len(b) + 1))
+def edit_distances(a: str, terms, k: int) -> np.ndarray:
+    """The Levenshtein distance (code points) of ``a`` to each of ``terms``,
+    capped at ``k + 1``: the dynamic program run over every term at once,
+    one numpy column per character of the longest term within ``k`` of
+    ``a``'s length, stopped once every row exceeds ``k``."""
+    terms = np.asarray(terms, dtype=object)
+    out = np.full(len(terms), k + 1, dtype=np.int64)
+    lens = np.fromiter(map(len, terms), np.int64, len(terms))
+    near = np.flatnonzero(np.abs(lens - len(a)) <= k)
+    if not len(near):
+        return out
+    width = len(a) + k
+    # UCS-4 code points, zero past each term's end (columns the term's own
+    # cell never reads)
+    cps = np.array(terms[near].tolist(), dtype=f"<U{max(width, 1)}").view(np.int32)
+    cps = cps.reshape(len(near), -1)[:, :width]
+    prev = np.tile(np.arange(width + 1), (len(near), 1))
     for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        if min(cur) > k:
-            return False
+        best = np.minimum(prev[:, :-1] + (cps != ord(ca)), prev[:, 1:] + 1)
+        cur = np.empty_like(prev)
+        cur[:, 0] = i
+        for j in range(1, width + 1):
+            cur[:, j] = np.minimum(best[:, j - 1], cur[:, j - 1] + 1)
+        if (cur.min(axis=1) > k).all():
+            return out
         prev = cur
-    return prev[-1] <= k
+    out[near] = np.minimum(prev[np.arange(len(near)), lens[near]], k + 1)
+    return out
 
 
 def _wildcard_regex(pattern: str) -> str:

@@ -15,41 +15,41 @@ exactly as in the reference:
   frames (bool = join algebra, dis_max = greatest + tie_breaker,
   function_score = arithmetic over score + fields).
 
-Supported leaves: match_all, match_none, term, terms, terms_set, range,
-exists, ids, prefix, wildcard, regexp, fuzzy, match (or/and +
-minimum_should_match), match_phrase, multi_match (best_fields/most_fields).
-Compounds: bool, dis_max, constant_score, boosting, function_score.
-
-``search(spark, df, body, ...)`` runs the full query_then_fetch shape:
-score → top-k with deterministic tie-break (score DESC, key ASC —
+``parse`` covers the reference's query kinds (term-level, full-text,
+compound, geo, joining, vector and specialized leaves); ``search(spark,
+df, body, ...)`` runs the full query_then_fetch shape: score → top-k with
+deterministic tie-break (score DESC, key ASC —
 ``SearchPhaseController.java:202-205``) → fetch source columns.
 
-Scale notes: all leaves except match are single Column expressions (zero
-shuffles, full pushdown). Match clauses share ONE tokenize+tf+dl subtree
-per search (built once, reused across clauses); each clause is a filtered
-aggregation over it. Everything stays JVM-side (regexp tokenizer is a
-native Spark expression; no Python UDFs in this path).
-
-Over an Engine index the context carries the index's answer for text
-leaves (``SearchContext.index_leaf``): match, match_phrase,
-match_phrase_prefix and intervals on the indexed ``text`` field become the
-index's match set — its analyzer, its postings BM25 — and compose like any
-other leaf frame. They have no filter-context predicate there; every
-filter-context consumer goes through ``matching``, the one semi-join
-fallback.
+Text leaves (match, multi_match, combined_fields, common,
+match_bool_prefix, more_like_this, query_string's text terms, the
+phrase and intervals leaves) never tokenize on their own: they ask the
+``SearchContext`` to analyze a string, score analyzed terms with BM25,
+look up their df or expand a multi-term leaf. Over a raw frame the
+context answers with an ``[a-z0-9]+`` token stream (a native Spark
+expression) and one tokenize+tf+dl subtree per field, built once per
+search and shared by every clause; term-level leaves are single Column
+expressions (zero shuffles, full pushdown). Over an Engine index it
+answers for the indexed ``text`` field with the index's analyzer, its
+postings BM25 and its term dictionary, and match_phrase,
+match_phrase_prefix and intervals become the index's positional match
+sets; those leaves compose like any other leaf frame. They have no
+filter-context predicate there; every filter-context consumer goes
+through ``matching``, the one semi-join fallback.
 """
 
 from __future__ import annotations
 
+import functools
+import math
 import re
-from collections.abc import Callable
+from collections import Counter
 from dataclasses import dataclass, field, replace as _dc_replace
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-K1 = 1.2
-B = 0.75
+from ..functions import bm25
 
 # search.allow_expensive_queries (SearchService.java:165
 # ALLOW_EXPENSIVE_QUERIES, dynamic cluster scope): when false, query types
@@ -159,18 +159,23 @@ def _scalar_term_eq(ctx, fld: str, c, v):
         return c == F.lit(v).try_cast(dt)
     return c == F.lit(v)
 
-_QDL = (
-    "case when dl < 8 then dl else "
-    "(dl >> (cast(floor(log2(dl)) as int) - 3)) << (cast(floor(log2(dl)) as int) - 3) end"
-)
-
 
 @dataclass
 class SearchContext:
-    """Per-search shared state: the corpus frame and the lazily-built
-    analysis subtrees (tokens, tf, dl, collection stats) reused by every
-    scoring clause — the analog of one Lucene IndexSearcher + shared
-    TermStates per query."""
+    """Per-search shared state: the corpus frame and the one place that
+    knows where a text field's terms and statistics come from — the
+    analog of one Lucene IndexSearcher + shared TermStates per query.
+
+    Every text node asks it, never tokenizes on its own: ``analyze`` a
+    string, the ``bm25`` frame of analyzed terms, their ``doc_freqs`` and
+    ``doc_count``, a ``multi_term`` expansion, and (match_phrase,
+    match_phrase_prefix, intervals) the ``positional`` leaf. Over a raw
+    frame these are the ``analyzer_regex`` token stream and its lazily
+    built tf / dl / collection subtrees, shared by every clause. Over an
+    Engine index, ``index`` answers them for ``text_col`` with the index's
+    analyzer, postings BM25 and term dictionary, and the regex token
+    stream raises ``NotImplementedError`` — so a text leaf there has no
+    filter-context predicate and ``matching`` takes the semi-join."""
 
     df: DataFrame
     key: str
@@ -186,10 +191,9 @@ class SearchContext:
     # stored column via the Column chain, literals/patterns via the mirrored
     # Python chain (functions/analysis.normalize_col / normalize_str).
     kw_norm: dict = field(default_factory=dict)
-    # set by Engine over an index: ``{kind: {field: spec}}`` → the index's
-    # hits frame (``url``, ``score``) for a text leaf, or None when the
-    # index cannot answer it. Only the ``text_col`` view carries it.
-    index_leaf: Callable[[dict], DataFrame | None] | None = field(default=None, repr=False)
+    # set by Engine over an index: the index's text field, answering the
+    # methods below for the ``text_col`` view (api.py ``_IndexText``)
+    index: object | None = field(default=None, repr=False)
     _tf: DataFrame | None = field(default=None, repr=False)
     _dl: DataFrame | None = field(default=None, repr=False)
     _coll: DataFrame | None = field(default=None, repr=False)
@@ -205,24 +209,51 @@ class SearchContext:
         return normalize_col(col, filters), normalize_str(s, filters)
 
     def for_field(self, fld: str) -> "SearchContext":
-        """A view of this context tokenizing `fld` instead of the default
-        text column (query_string field scoping for token-level queries);
-        cached analysis frames reset since they belong to the other field."""
-        if fld == self.text_col:
+        """A view of this context over ``fld`` instead of the default text
+        column (a node scoped to its own field); ``title._2gram`` names
+        the shingle subfield of ``title``. Only the index's own field keeps
+        the index, which has no shingle subfields."""
+        m = re.fullmatch(r"(.*)\._(\d+)gram", fld)
+        base, sh = (m.group(1), int(m.group(2))) if m else (fld, 1)
+        if (base, sh) == (self.text_col, self.shingle):
             return self
-        return _dc_replace(self, text_col=fld, index_leaf=None, _tf=None, _dl=None, _coll=None)
+        if self.index is not None and base == self.text_col:
+            raise ValueError(f"the index of field {base!r} has no shingle subfield {fld!r}")
+        return _dc_replace(self, text_col=base, shingle=sh, index=None,
+                           _tf=None, _dl=None, _coll=None)
 
-    def index_frame(self, q: dict, boost: float = 1.0) -> DataFrame | None:
-        """The index's match set for the text leaf ``q`` as a score frame
-        (its postings BM25 × ``boost``), or None over a raw frame."""
-        hits = self.index_leaf(q) if self.index_leaf is not None else None
-        if hits is None:
-            return None
-        return hits.select(F.col("url").alias("__key"), (F.col("score") * boost).alias("_score"))
+    def blend(self, flds: list, kind: str) -> list["SearchContext"]:
+        """The views of ``flds`` that ``kind`` scores as one field
+        (combined_fields, cross_fields): they must share one analyzer, so
+        the index's field blends with no other."""
+        views = [self.for_field(f) for f in flds]
+        for f, v in zip(flds, views):
+            if len(views) > 1 and v.index is not None:
+                raise ValueError(
+                    f"{kind} cannot blend field {f!r}, analyzed by the index, with "
+                    f"{[g for g in flds if g != f]}: its fields must share one analyzer")
+        return views
+
+    def combined(self, flds: list) -> "SearchContext":
+        """combined_fields' one virtual field over ``flds``: their token
+        streams concatenated, so term freqs and doc lengths merge before
+        scoring. The index's field is a combination of itself alone."""
+        views = self.blend(flds, "combined_fields")
+        if views[0].index is not None:
+            return views[0]
+        # coalesce each field's token array: concat is NULL-poisoning, and a
+        # missing field must read as EMPTY (the reference treats absent
+        # fields as contributing no tokens, not as nulling the document)
+        toks = F.concat(*[F.coalesce(v.toks_col(), F.expr("array()")) for v in views])
+        return SearchContext(self.df.withColumn("__combined_text", F.array_join(toks, " ")),
+                             self.key, text_col="__combined_text",
+                             analyzer_regex=self.analyzer_regex)
 
     def toks_sql(self) -> str:
-        """The token-stream as SQL text (for expressions that must embed it
-        inside higher-order lambdas textually)."""
+        """The raw frame's token stream as SQL text (for expressions that
+        must embed it inside higher-order lambdas textually)."""
+        if self.index is not None:
+            raise NotImplementedError(f"the index analyzes {self.text_col!r}: no regex token stream")
         b = f"regexp_extract_all(lower({self.text_col}), '{self.analyzer_regex}', 0)"
         if self.shingle <= 1:
             return b
@@ -249,7 +280,7 @@ class SearchContext:
         if self._dl is None:
             self._dl = self.df.select(
                 F.col(self.key).alias("__key"), F.size(self.toks_col()).cast("long").alias("dl")
-            ).withColumn("qdl", F.expr(_QDL).cast("double"))
+            ).withColumn("qdl", F.expr(bm25.sql_quantized_dl_expr("dl")).cast("double"))
         return self._dl
 
     def coll(self) -> DataFrame:
@@ -260,32 +291,94 @@ class SearchContext:
         return self._coll
 
     def analyze(self, text: str) -> list[str]:
-        import re
-
+        """``text``'s tokens, the way the field's docs were tokenized."""
+        if self.index is not None:
+            return self.index.analyze(text)
         toks = re.findall(self.analyzer_regex, text.lower())
         if self.shingle > 1:
             n = self.shingle
             return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
         return toks
 
+    def bm25(self, terms: list[str], need: int = 1, boost: float = 1.0) -> DataFrame:
+        """``__key, _score, _matched``: per doc holding at least ``need`` of
+        the analyzed ``terms``, its BM25 sum × ``boost`` and how many terms
+        it holds."""
+        if self.index is not None:
+            return self.index.bm25(terms, need, boost)
+        return blended_bm25([self], terms, need, boost)
 
-def _bm25_frame(ctx: SearchContext, terms: list[str], boost: float = 1.0) -> DataFrame:
-    """Score frame for a bag of analyzed terms: per-doc BM25 sum + matched
-    count. df stats and collection stats are broadcast (tiny)."""
-    q = ctx.tf().where(F.col("term").isin(terms))
-    dfstats = q.groupBy("term").agg(F.count("*").cast("double").alias("df"))
+    def doc_freqs(self, terms: list[str]) -> dict[str, int]:
+        """term → df of the ``terms`` the field holds (zero-df terms are
+        absent)."""
+        if self.index is not None:
+            return self.index.doc_freqs(terms)
+        if not terms:
+            return {}
+        q = self.tf().where(F.col("term").isin(terms)).groupBy("term").count()
+        return {r["term"]: int(r["count"]) for r in q.collect()}
+
+    def doc_count(self) -> int:
+        """The N of BM25's idf."""
+        if self.index is not None:
+            return self.index.doc_count()
+        return int(self.coll().first()["n_docs"])
+
+    def multi_term_pred(self, kind: str, value: str, fuzziness: int = 2) -> Column:
+        """Whether a raw doc holds a token that ``kind`` matches: ``prefix``
+        (starts with ``value``) or ``fuzzy`` (within ``fuzziness`` edits)."""
+        test = {
+            "prefix": lambda t: t.startswith(value),
+            "fuzzy": lambda t: F.levenshtein(t, F.lit(value)) <= fuzziness,
+        }[kind]
+        return F.exists(self.toks_col(), test)
+
+    def multi_term(self, kind: str, value: str, boost: float = 1.0,
+                   fuzziness: int = 2) -> DataFrame:
+        """``__key, _score``: the docs holding a term ``kind`` expands
+        ``value`` to, at constant ``boost``. The index expands over its
+        term dictionary (every prefix term; the 50 closest fuzzy terms,
+        like the reference's rewrites); a raw frame tests every token."""
+        if self.index is not None:
+            return self.index.multi_term(kind, value, boost, fuzziness)
+        return self.df.where(self.multi_term_pred(kind, value, fuzziness)).select(
+            F.col(self.key).alias("__key"), F.lit(float(boost)).alias("_score"))
+
+    def positional(self, q: dict, boost: float = 1.0) -> DataFrame | None:
+        """The index's score frame (× ``boost``) for the positional leaf
+        ``q`` (match_phrase, match_phrase_prefix, intervals), or None over
+        a raw frame, where those nodes test the token stream instead."""
+        return None if self.index is None else self.index.positional(q, boost)
+
+    def no_hits(self) -> DataFrame:
+        """An empty score frame."""
+        return self.df.limit(0).select(F.col(self.key).alias("__key"), F.lit(0.0).alias("_score"))
+
+
+def blended_bm25(views: list[SearchContext], terms: list[str], need: int = 1,
+                 boost: float = 1.0) -> DataFrame:
+    """``SearchContext.bm25`` over raw field ``views`` of one frame scored
+    as one field (cross_fields' BlendedTermQuery): a term's df is its max
+    across the views, each view scores with its own length norm, and the
+    term takes its best view's score; a doc's score is the sum over its
+    terms × ``boost``. Over one view, plain BM25."""
+    hits = [v.tf().where(F.col("term").isin(terms)) for v in views]
+    dfs = functools.reduce(DataFrame.unionByName, [
+        h.groupBy("term").agg(F.count("*").cast("double").alias("df")) for h in hits])
+    if len(views) > 1:
+        dfs = dfs.groupBy("term").agg(F.max("df").alias("df"))
+    scored = functools.reduce(DataFrame.unionByName, [
+        h.join(F.broadcast(dfs), "term")
+        .join(v.dl().select("__key", "qdl"), "__key")
+        .crossJoin(F.broadcast(v.coll()))
+        for h, v in zip(hits, views)
+    ]).withColumn("s", F.expr(bm25.sql_score_expr("tf", "df", "qdl", "n_docs", "avgdl")))
+    if len(views) > 1:
+        scored = scored.groupBy("__key", "term").agg(F.max("s").alias("s"))
     return (
-        q.join(F.broadcast(dfstats), "term")
-        .join(ctx.dl().select("__key", "qdl"), "__key")
-        .crossJoin(F.broadcast(ctx.coll()))
-        .withColumn("idf", F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)))
-        .withColumn(
-            "s",
-            F.col("idf") * (K1 + 1.0) * F.col("tf")
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("qdl") / F.col("avgdl"))),
-        )
-        .groupBy("__key")
+        scored.groupBy("__key")
         .agg((F.sum("s") * boost).alias("_score"), F.count("*").cast("int").alias("_matched"))
+        .where(F.col("_matched") >= need)
     )
 
 
@@ -506,13 +599,11 @@ class FuzzyTokenQ(Node):
     boost: float = 1.0
 
     def predicate(self, ctx):
-        ctx = ctx.for_field(self.fld)
-        # Column API (no textual embedding of the user term — backslashes
-        # and quotes stay data, never SQL)
-        return F.exists(
-            ctx.toks_col(),
-            lambda t: F.levenshtein(t, F.lit(self.value.lower())) <= self.fuzziness,
-        )
+        return ctx.for_field(self.fld).multi_term_pred("fuzzy", self.value.lower(), self.fuzziness)
+
+    def frame(self, ctx):
+        return ctx.for_field(self.fld).multi_term(
+            "fuzzy", self.value.lower(), self.boost, fuzziness=self.fuzziness)
 
 
 @dataclass
@@ -590,41 +681,25 @@ class MatchQ(Node):
     minimum_should_match: int | str = 1
     boost: float = 1.0
 
-    def _spec(self) -> dict:
-        return {"match": {self.fld: {
-            "query": self.query, "operator": self.operator,
-            "minimum_should_match": self.minimum_should_match}}}
+    def _need(self, n: int) -> int:
+        return n if self.operator == "and" else resolve_msm(self.minimum_should_match, n)
 
     def frame(self, ctx):
         ctx = ctx.for_field(self.fld)  # match scopes to ITS field, not the default
-        fr = ctx.index_frame(self._spec(), self.boost)
-        if fr is not None:
-            return fr
+        # no terms: zero_terms_query none (MatchQueryParser.java:133)
         terms = list(dict.fromkeys(ctx.analyze(self.query)))
-        if not terms:
-            return ctx.df.limit(0).select(
-                F.col(ctx.key).alias("__key"), F.lit(0.0).alias("_score")
-            )  # zero_terms_query: none (MatchQueryParser.java:133)
-        fr = _bm25_frame(ctx, terms, self.boost)
-        need = len(terms) if self.operator == "and" else resolve_msm(
-            self.minimum_should_match, len(terms))
-        return fr.where(F.col("_matched") >= need).select("__key", "_score")
+        return ctx.bm25(terms, self._need(len(terms)), self.boost).select("__key", "_score")
 
     def predicate(self, ctx):
         # match in filter context: containment of required terms
         ctx = ctx.for_field(self.fld)
-        if ctx.index_leaf is not None:
-            raise NotImplementedError("the index answers match on its text field")
+        toks = ctx.toks_col()
         terms = list(dict.fromkeys(ctx.analyze(self.query)))
         if not terms:
             # zero_terms_query: none — nothing matches (frame() agrees)
             return F.lit(False)
-        toks = ctx.toks_col()
         per = [F.array_contains(toks, t).cast("int") for t in terms]
-        total = sum(per[1:], per[0])
-        need = len(terms) if self.operator == "and" else resolve_msm(
-            self.minimum_should_match, len(terms))
-        return total >= need
+        return sum(per[1:], per[0]) >= self._need(len(terms))
 
 
 @dataclass
@@ -637,9 +712,8 @@ class CommonTermsQ(Node):
     only add score to docs the low-freq clause already selected — unless NO
     term is low-frequency, in which case the high-freq clause selects.
 
-    Fully declarative: the df classification is a broadcast join against the
-    per-term df frame (no driver collect), so the split happens inside the
-    same plan that scores — scale-safe at any vocabulary size."""
+    The split reads the context's df of the analyzed terms; terms the field
+    does not hold take no part (nor count toward an ``and`` operator)."""
 
     fld: str
     query: str = ""
@@ -651,58 +725,25 @@ class CommonTermsQ(Node):
     boost: float = 1.0
 
     def frame(self, ctx):
-        terms = list(dict.fromkeys(ctx.analyze(self.query)))
-        if not terms:
-            return ctx.df.limit(0).select(
-                F.col(ctx.key).alias("__key"), F.lit(0.0).alias("_score")
-            )
-        q = ctx.tf().where(F.col("term").isin(terms))
-        dfstats = q.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-        cutoff = (
-            F.lit(float(self.cutoff_frequency))
-            if self.cutoff_frequency >= 1.0
-            else F.lit(float(self.cutoff_frequency)) * F.col("n_docs")
-        )
-        cls = (
-            dfstats.crossJoin(F.broadcast(ctx.coll()))
-            .withColumn("is_low", (F.col("df") < cutoff).cast("int"))
-            .select("term", "df", "is_low")
-        )
-        # global clause shape (1 row): how many terms landed in each class
-        shape = cls.agg(
-            F.sum("is_low").alias("n_low"),
-            (F.count("*") - F.sum("is_low")).alias("n_high"),
-        )
-        scored = (
-            q.join(F.broadcast(cls), "term")
-            .join(ctx.dl().select("__key", "qdl"), "__key")
-            .crossJoin(F.broadcast(ctx.coll()))
-            .withColumn(
-                "idf",
-                F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-            )
-            .withColumn(
-                "s",
-                F.col("idf") * (K1 + 1.0) * F.col("tf")
-                / (F.col("tf") + K1 * (1.0 - B + B * F.col("qdl") / F.col("avgdl"))),
-            )
-            .groupBy("__key")
-            .agg(
-                (F.sum("s") * self.boost).alias("_score"),
-                F.sum("is_low").alias("m_low"),
-                F.sum(1 - F.col("is_low")).alias("m_high"),
-            )
-        )
-        need_low = F.col("n_low") if self.low_freq_operator == "and" else F.lit(self.low_msm)
-        need_high = F.col("n_high") if self.high_freq_operator == "and" else F.lit(self.high_msm)
-        return (
-            scored.crossJoin(F.broadcast(shape))
-            .where(
-                F.when(F.col("n_low") > 0, F.col("m_low") >= need_low)
-                .otherwise(F.col("m_high") >= need_high)
-            )
-            .select("__key", "_score")
-        )
+        ctx = ctx.for_field(self.fld)
+        dfs = ctx.doc_freqs(list(dict.fromkeys(ctx.analyze(self.query))))
+        if not dfs:
+            return ctx.no_hits()
+        cutoff = self.cutoff_frequency
+        if cutoff < 1.0:
+            cutoff *= ctx.doc_count()
+        low = [t for t in dfs if dfs[t] < cutoff]
+        high = [t for t in dfs if dfs[t] >= cutoff]
+        if not low:
+            need = len(high) if self.high_freq_operator == "and" else self.high_msm
+            return ctx.bm25(high, need, self.boost).select("__key", "_score")
+        need = len(low) if self.low_freq_operator == "and" else self.low_msm
+        out = ctx.bm25(low, need, self.boost).select("__key", "_score")
+        if not high:
+            return out
+        extra = ctx.bm25(high, 1, self.boost).select("__key", F.col("_score").alias("_hs"))
+        return out.join(extra, "__key", "left").select(
+            "__key", (F.col("_score") + F.coalesce("_hs", F.lit(0.0))).alias("_score"))
 
 
 @dataclass
@@ -721,14 +762,13 @@ class MatchPhraseQ(Node):
     slop: int = 0
 
     def frame(self, ctx):
-        fr = ctx.for_field(self.fld).index_frame(
+        fr = ctx.for_field(self.fld).positional(
             {"match_phrase": {self.fld: {"query": self.query, "slop": self.slop}}}, self.boost)
         return super().frame(ctx) if fr is None else fr
 
     def predicate(self, ctx):
         ctx = ctx.for_field(self.fld)
-        if ctx.index_leaf is not None:
-            raise NotImplementedError("the index answers match_phrase on its text field")
+        T = ctx.toks_sql()
         terms = ctx.analyze(self.query)
         if not terms:
             return F.lit(False)
@@ -736,7 +776,6 @@ class MatchPhraseQ(Node):
             needle = " " + " ".join(terms) + " "
             stream = F.concat(F.lit(" "), F.array_join(ctx.toks_col(), " "), F.lit(" "))
             return stream.contains(needle)
-        T = ctx.toks_sql()
 
         def pos(t: str) -> str:
             tt = t.replace("'", "''")
@@ -769,22 +808,18 @@ class MatchPhrasePrefixQ(Node):
     boost: float = 1.0
 
     def frame(self, ctx):
-        fr = ctx.for_field(self.fld).index_frame(
+        fr = ctx.for_field(self.fld).positional(
             {"match_phrase_prefix": {self.fld: {"query": self.query}}}, self.boost)
         return super().frame(ctx) if fr is None else fr
 
     def predicate(self, ctx):
-        import re as _re
-
         ctx = ctx.for_field(self.fld)
-        if ctx.index_leaf is not None:
-            raise NotImplementedError("the index answers match_phrase_prefix on its text field")
+        stream = F.concat(F.lit(" "), F.array_join(ctx.toks_col(), " "), F.lit(" "))
         terms = ctx.analyze(self.query)
         if not terms:
             return F.lit(False)
         *fixed, prefix = terms
-        pat = " " + "".join(_re.escape(t) + " " for t in fixed) + _re.escape(prefix) + "[^ ]*"
-        stream = F.concat(F.lit(" "), F.array_join(ctx.toks_col(), " "), F.lit(" "))
+        pat = " " + "".join(re.escape(t) + " " for t in fixed) + re.escape(prefix) + "[^ ]*"
         return stream.rlike(pat)
 
 
@@ -798,7 +833,7 @@ class IntervalsQ(Node):
     source: dict = field(default_factory=dict)
 
     def frame(self, ctx):
-        fr = ctx.for_field(self.fld).index_frame({"intervals": {self.fld: self.source}})
+        fr = ctx.for_field(self.fld).positional({"intervals": {self.fld: self.source}})
         if fr is None:
             raise ValueError(f"intervals needs the positional index of an Engine index "
                              f"(field {self.fld!r})")
@@ -822,78 +857,31 @@ class MultiMatchQ(Node):
     boost: float = 1.0
 
     def _cross_fields_frame(self, ctx):
-        terms = list(dict.fromkeys(ctx.analyze(self.query)))
-        if not terms:
-            return ctx.df.limit(0).select(
-                F.col(ctx.key).alias("__key"), F.lit(0.0).alias("_score")
-            )
-        parts = []
-        for f_ in self.flds:
-            sub = SearchContext(ctx.df, ctx.key, text_col=f_, analyzer_regex=ctx.analyzer_regex)
-            q = sub.tf().where(F.col("term").isin(terms))
-            dfs = q.groupBy("term").agg(F.count("*").cast("double").alias("df"))
-            parts.append(
-                q.join(F.broadcast(dfs), "term")
-                .join(sub.dl().select("__key", "qdl"), "__key")
-                .crossJoin(F.broadcast(sub.coll()))
-            )
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        # blended df: max across fields per term (BlendedTermQuery.java)
-        bdf = u.groupBy("term").agg(
-            F.max("df").alias("bdf"), F.max("n_docs").alias("nd")
-        )
-        scored = (
-            u.join(F.broadcast(bdf), "term")
-            .withColumn("idf", F.log(1.0 + (F.col("nd") - F.col("bdf") + 0.5) / (F.col("bdf") + 0.5)))
-            .withColumn(
-                "s",
-                F.col("idf") * (K1 + 1.0) * F.col("tf")
-                / (F.col("tf") + K1 * (1.0 - B + B * F.col("qdl") / F.col("avgdl"))),
-            )
-        )
-        per_term = scored.groupBy("__key", "term").agg(F.max("s").alias("ts"))
-        out = per_term.groupBy("__key").agg(
-            (F.sum("ts") * self.boost).alias("_score"),
-            F.count("*").cast("int").alias("_matched"),
-        )
+        # over more than one field: ``blend`` admits no index field
+        views = ctx.blend(self.flds, "cross_fields")
+        terms = list(dict.fromkeys(views[0].analyze(self.query)))
         need = len(terms) if self.operator == "and" else 1
-        return out.where(F.col("_matched") >= need).select("__key", "_score")
+        return blended_bm25(views, terms, need, self.boost).select("__key", "_score")
 
     def frame(self, ctx):
-        if self.mm_type == "cross_fields":
+        if self.mm_type == "cross_fields" and len(self.flds) > 1:
             return self._cross_fields_frame(ctx)
         # phrase / phrase_prefix / bool_prefix delegate to the per-field
         # node family (MultiMatchQueryBuilder.java type switch); phrase
         # kinds combine best-field (dis_max), bool_prefix combines by sum
         # (the search_as_you_type query shape over field + its shingle
-        # subfields).
+        # subfields, `title._2gram` / `title._3gram`). cross_fields over
+        # one field is that field's match.
         node_cls = {
             "phrase": MatchPhraseQ,
             "phrase_prefix": MatchPhrasePrefixQ,
             "bool_prefix": MatchBoolPrefixQ,
-        }.get(self.mm_type, MatchQ)
-        frames = []
-        for f_ in self.flds:
-            # `title._2gram` / `title._3gram` = search_as_you_type shingle
-            # subfields over the base column (derived at query time — same
-            # semantics as the mapper's materialized subfields)
-            m = re.match(r"^(.*)\._(\d+)gram$", f_)
-            base, sh = (m.group(1), int(m.group(2))) if m else (f_, 1)
-            sub = SearchContext(
-                ctx.df, ctx.key, text_col=base,
-                analyzer_regex=ctx.analyzer_regex, shingle=sh,
-            )
-            # fld = the SCOPED base column (sub already views the shingle
-            # subfield); forwarding the literal `title._2gram` name would
-            # make the node's own for_field() re-scope to a nonexistent col
-            if node_cls is MatchQ:
-                node = MatchQ(base, self.query, boost=self.boost,
-                              operator=self.operator)
-            else:
-                node = node_cls(base, self.query, boost=self.boost)
-            frames.append(node.frame(sub))
+        }.get(self.mm_type)
+        frames = [
+            node_cls(f_, self.query, boost=self.boost).frame(ctx) if node_cls
+            else MatchQ(f_, self.query, operator=self.operator, boost=self.boost).frame(ctx)
+            for f_ in self.flds
+        ]
         if self.mm_type in ("most_fields", "bool_prefix"):
             return _sum_frames(frames, min_should=1).select(
                 "__key", F.col("_s_should").alias("_score")
@@ -905,8 +893,6 @@ _EARTH_RADIUS_M = 6371008.8
 
 
 def _haversine_m(lat_col: Column, lon_col: Column, lat: float, lon: float) -> Column:
-    import math
-
     lat1, lon1 = math.radians(lat), math.radians(lon)
     lat2 = F.radians(lat_col)
     lon2 = F.radians(lon_col)
@@ -1036,11 +1022,13 @@ class GeoShapeQ(Node):
 class SparseVectorQ(Node):
     """sparse_vector query (x-pack ``SparseVectorQueryBuilder.java`` / the
     ELSER weighted-tokens query): score = Σ_t query_weight(t) · stored_weight
-    (t, doc). Over a text field the stored weight is the analyzed term
-    frequency (the rank_features analog the tables here support); over a
-    map<string,float> column it reads the stored weights directly. Per-doc
-    work is a handful of JVM higher-order-function lambdas over the token
-    array — whole-stage-codegen, no shuffle until the final top-k."""
+    (t, doc). Over a raw frame's text field the stored weight is the
+    field's term frequency (the rank_features analog the tables here
+    support); over a map<string,float> column it reads the stored weights
+    directly. An index's text field stores no per-term weights (the
+    reference accepts sparse_vector fields only), so it is an error there.
+    Per-doc work is a handful of JVM higher-order-function lambdas over the
+    token array — whole-stage-codegen, no shuffle until the final top-k."""
 
     fld: str
     query_vector: dict = field(default_factory=dict)
@@ -1058,7 +1046,11 @@ class SparseVectorQ(Node):
                 c = F.coalesce(m.getItem(t), F.lit(0.0)) * F.lit(float(w))
                 s = c if s is None else s + c
         else:
-            toks = ctx.toks_col()
+            view = ctx.for_field(self.fld)
+            if view.index is not None:
+                raise ValueError(f"sparse_vector needs stored term weights: field {self.fld!r} "
+                                 "is analyzed by the index (use a map<string,float> field)")
+            toks = view.toks_col()
 
             def _eq(term):
                 # single-arg lambda (a two-arg lambda would be bound to
@@ -1069,9 +1061,7 @@ class SparseVectorQ(Node):
                 c = F.size(F.filter(toks, _eq(t))).cast("double") * F.lit(float(w))
                 s = c if s is None else s + c
         if s is None:
-            return ctx.df.limit(0).select(
-                F.col(ctx.key).alias("__key"), F.lit(0.0).alias("_score")
-            )
+            return ctx.no_hits()
         return (
             ctx.df.select(
                 F.col(ctx.key).alias("__key"), (s * self.boost).alias("_score")
@@ -1125,17 +1115,12 @@ class MatchBoolPrefixQ(Node):
         ctx = ctx.for_field(self.fld)
         terms = ctx.analyze(self.query)
         if not terms:
-            return ctx.df.limit(0).select(F.col(ctx.key).alias("__key"), F.lit(0.0).alias("_score"))
+            return ctx.no_hits()
         *full, last = terms
         frames = []
         if full:
-            frames.append(_bm25_frame(ctx, list(dict.fromkeys(full)), self.boost).select("__key", "_score"))
-        prefix_hit = (
-            ctx.df.where(F.exists(ctx.toks_col(), lambda t: t.startswith(last)))
-            .select(F.col(ctx.key).alias("__key"))
-            .withColumn("_score", F.lit(1.0 * self.boost))
-        )
-        frames.append(prefix_hit)
+            frames.append(ctx.bm25(list(dict.fromkeys(full)), 1, self.boost).select("__key", "_score"))
+        frames.append(ctx.multi_term("prefix", last, self.boost))
         return _sum_frames(frames, min_should=1).select("__key", F.col("_s_should").alias("_score"))
 
 
@@ -1143,7 +1128,9 @@ class MatchBoolPrefixQ(Node):
 class CombinedFieldsQ(Node):
     """combined_fields (CombinedFieldsQueryBuilder.java): term-centric
     BM25F — term freqs and doc lengths merged across fields BEFORE scoring
-    (one virtual combined field), unlike multi_match's per-field scores."""
+    (one virtual combined field), unlike multi_match's per-field scores.
+    The fields must share one analyzer: over an index, its text field is
+    combined with no other."""
 
     flds: list = field(default_factory=list)
     query: str = ""
@@ -1151,18 +1138,9 @@ class CombinedFieldsQ(Node):
     boost: float = 1.0
 
     def frame(self, ctx):
-        # coalesce each field's token array: concat is NULL-poisoning, and
-        # a missing field must read as EMPTY (the reference treats absent
-        # fields as contributing no tokens, not as nulling the document)
-        combined = F.concat(*[
-            F.coalesce(
-                F.expr(f"regexp_extract_all(lower({f_}), '{ctx.analyzer_regex}', 0)"),
-                F.expr("array()"),
-            ) for f_ in self.flds
-        ])
-        virt = ctx.df.withColumn("__combined_text", F.array_join(combined, " "))
-        sub = SearchContext(virt, ctx.key, text_col="__combined_text", analyzer_regex=ctx.analyzer_regex)
-        return MatchQ("__combined_text", self.query, operator=self.operator, boost=self.boost).frame(sub)
+        view = ctx.combined(self.flds)
+        return MatchQ(view.text_col, self.query, operator=self.operator,
+                      boost=self.boost).frame(view)
 
 
 @dataclass
@@ -1275,27 +1253,16 @@ class MoreLikeThisQ(Node):
     boost: float = 1.0
 
     def frame(self, ctx):
-        liked_tf = ctx.tf().join(
-            ctx.df.where(F.col(ctx.key).isin(self.like_ids)).select(F.col(ctx.key).alias("__key")),
-            "__key",
-        )
-        dfstats = ctx.tf().groupBy("term").agg(F.countDistinct("__key").alias("df"))
-        coll = ctx.coll()
-        top_terms = [
-            r["term"]
-            for r in liked_tf.groupBy("term")
-            .agg(F.sum("tf").alias("ltf"))
-            .join(dfstats, "term")
-            .where(F.col("df") >= self.min_doc_freq)
-            .crossJoin(F.broadcast(coll))
-            .withColumn("tfidf", F.col("ltf") * F.log(F.col("n_docs") / (F.col("df") + 1.0)))
-            .orderBy(F.desc("tfidf"), F.asc("term"))
-            .limit(self.max_query_terms)
-            .collect()
-        ]
-        if not top_terms:
-            return ctx.df.limit(0).select(F.col(ctx.key).alias("__key"), F.lit(0.0).alias("_score"))
-        fr = _bm25_frame(ctx, top_terms, self.boost).select("__key", "_score")
+        liked = ctx.df.where(F.col(ctx.key).isin(self.like_ids)).select(ctx.text_col).collect()
+        ltf = Counter(t for (text,) in liked if text for t in ctx.analyze(text))
+        dfs = ctx.doc_freqs(list(ltf))
+        if not dfs:
+            return ctx.no_hits()
+        n_docs = ctx.doc_count()
+        tfidf = {t: ltf[t] * math.log(n_docs / (df + 1.0))
+                 for t, df in dfs.items() if df >= self.min_doc_freq}
+        top_terms = sorted(tfidf, key=lambda t: (-tfidf[t], t))[: self.max_query_terms]
+        fr = ctx.bm25(top_terms, 1, self.boost).select("__key", "_score")
         return fr.where(~F.col("__key").isin(self.like_ids))
 
 
@@ -1886,13 +1853,9 @@ class FunctionScoreQ(Node):
             offset = float(params.get("offset", 0.0))
             d = F.greatest(dist - offset, F.lit(0.0))
             if kind == "gauss":
-                import math
-
                 sigma2 = scale * scale / (-2.0 * math.log(decay))
                 v = F.exp(-(d * d) / (2.0 * sigma2))
             elif kind == "exp":
-                import math
-
                 lam = math.log(decay) / scale
                 v = F.exp(lam * d)
             else:
@@ -2705,7 +2668,7 @@ def search(
     text_col: str = "text",
     kw_norm: dict | None = None,
     *,
-    index_leaf: Callable[[dict], DataFrame | None] | None = None,
+    index: object | None = None,
 ) -> DataFrame:
     """Run a DSL search body over an arbitrary corpus frame — the
     query_then_fetch lifecycle. Supported body keys: query, size, from,
@@ -2713,8 +2676,8 @@ def search(
     SearchAfterBuilder.java:97), rescore (top-window re-rank,
     QueryRescorer.java:66), _source (column projection).
 
-    ``index_leaf`` is the Engine's ``SearchContext.index_leaf`` when
-    ``df`` is an index's docs view; over a raw frame it stays None."""
+    ``index`` is the Engine's ``SearchContext.index`` when ``df`` is an
+    index's docs view; over a raw frame it stays None."""
     # runtime fields (RuntimeField.java / `runtime_mappings`): query-time
     # computed columns — SQL-expression Painless analog, visible to the
     # query, sort, and _source of THIS search only
@@ -2755,7 +2718,7 @@ def search(
         body["query"] = _collect_named(body["query"], named)
 
     ctx = SearchContext(df, key, text_col=text_col, kw_norm=kw_norm or {},
-                        index_leaf=index_leaf)
+                        index=index)
     size = int(body.get("size", 10))
     from_ = int(body.get("from", 0))
 

@@ -946,8 +946,8 @@ def dsl_dismax(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dsl_common_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """common terms query (CommonTermsQueryBuilder.java): at cutoff 0.5 the
     rare term 'dup' (df≈0.05) is the low-frequency SELECTING clause while
-    'spark'/'merge' (df≈0.77) only add score to docs 'dup' selected. The df
-    classification is an in-plan broadcast join — no driver collect."""
+    'spark'/'merge' (df≈0.77) only add score to docs 'dup' selected. The
+    split reads the search context's df of the three terms."""
     return _dsl_search(spark, sf_dir, {
         "query": {"common": {"text": {
             "query": "dup spark merge", "cutoff_frequency": 0.5,

@@ -17,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_spark.api import Engine
+from elasticsearch_spark.plans import dsl
 from elasticsearch_spark.sources import index_store as store
 
 ROOT = "/tmp/es_spark_matching_test"
@@ -28,20 +29,57 @@ DOCS = [
     ("u5", "東京 タワー", "ja", "Blue", 50.0),
 ]
 LANG = {u: lang for u, _, lang, _, _ in DOCS}
+TEXT_OF = {u: text for u, text, *_ in DOCS}
 TEXTS = ["zürich", "don't", "東京"]
-KINDS = {
+# the docs each query text matches under both index analyzers
+ANALYZER_MATCH = {"zürich": {"u1"}, "don't": {"u3"}, "東京": {"u5"}}
+# the index's top-level fast path
+FAST_KINDS = {
     "match": lambda t: {"match": {"text": t}},
     "match_phrase": lambda t: {"match_phrase": {"text": t}},
     "intervals": lambda t: {"intervals": {"text": {"match": {"query": t}}}},
 }
-CASES = list(itertools.product(["standard", "cjk"], TEXTS, KINDS))
+# the doc each text's more_like_this case likes
+LIKED = {"zürich": "u1", "don't": "u3", "東京": "u5"}
+
+
+def _mm(kind):
+    return lambda t: {"multi_match": {"query": t, "fields": ["text"], "type": kind}}
+
+
+# text queries the DSL answers by asking its search context for terms and
+# statistics, which over an index are the index's
+CONTEXT_KINDS = {
+    **{f"multi_match_{k}": _mm(k) for k in (
+        "best_fields", "most_fields", "cross_fields", "phrase", "phrase_prefix", "bool_prefix")},
+    "combined_fields": lambda t: {"combined_fields": {"query": t, "fields": ["text"]}},
+    "match_bool_prefix": lambda t: {"match_bool_prefix": {"text": t}},
+    "common": lambda t: {"common": {"text": {"query": t}}},
+    "more_like_this": lambda t: {"more_like_this": {"like": [{"_id": LIKED[t]}]}},
+}
+KINDS = {**FAST_KINDS, **CONTEXT_KINDS, "query_string": lambda t: {"query_string": {"query": t}}}
+# query_string's prefix and fuzzy terms: "zür" and "zürick" reach zürich
+QUERY_STRINGS = {"zür*": {"u1"}, "zürick~1": {"u1"}}
+
+
+def _analyzer_match(text, kind):
+    if kind == "more_like_this":
+        # u1's and u5's terms are in no other doc; u3 shares "know" with u4
+        return {"u4"} if LIKED[text] == "u3" else set()
+    return {**ANALYZER_MATCH, **QUERY_STRINGS}[text]
+
+
+CASES = [
+    *itertools.product(["standard", "cjk"], TEXTS, [k for k in KINDS if k != "query_string"]),
+    *itertools.product(["standard", "cjk"], QUERY_STRINGS, ["query_string"]),
+]
 _seq = itertools.count()
 
 
-def _bulk(es, spark, name, analyzer, num_partitions=1):
+def _bulk(es, spark, name, analyzer, num_partitions=1, docs=DOCS):
     es.create_index(name, analyzer=analyzer, num_partitions=num_partitions)
     es.bulk(name, spark.createDataFrame(
-        DOCS, "url string, text string, lang string, tag string, lat double",
+        docs, "url string, text string, lang string, tag string, lat double",
     ).withColumn("warc_ts", F.lit("2024-01-01").cast("timestamp"))
      .withColumn("loc", F.struct(F.col("lat"), F.col("lat").alias("lon"))).drop("lat"))
     return name
@@ -69,7 +107,7 @@ def expected(es):
 
 
 def test_fast_path_hits_are_the_analyzer_matches(expected):
-    for a, k in itertools.product(["standard", "cjk"], KINDS):
+    for a, k in itertools.product(["standard", "cjk"], FAST_KINDS):
         assert set(expected[(a, "zürich", k)]) == {"u1"}
         assert set(expected[(a, "don't", k)]) == {"u3"}
         assert set(expected[(a, "東京", k)]) == {"u5"}
@@ -79,6 +117,13 @@ def test_fast_path_hits_are_the_analyzer_matches(expected):
 def test_read_paths_agree_with_the_hits(es, expected, analyzer, text, kind):
     q = KINDS[kind](text)
     want = expected[(analyzer, text, kind)]
+    assert set(want) == _analyzer_match(text, kind)
+    if kind == "more_like_this":
+        # every term of the liked doc passes min_doc_freq and
+        # max_query_terms here: the OR match of its text, less the doc
+        liked = LIKED[text]
+        match = _hits(es, analyzer, {"match": {"text": TEXT_OF[liked]}})
+        assert want == pytest.approx({u: s for u, s in match.items() if u != liked}, abs=1e-9)
     assert es.count(analyzer, q) == len(want)
     out = es.search(analyzer, {"query": q, "size": 10, "track_total_hits": True})
     assert out["total"]["value"] == len(want)
@@ -96,7 +141,7 @@ def test_read_paths_agree_with_the_hits(es, expected, analyzer, text, kind):
 
 @pytest.mark.parametrize("analyzer", ["standard", "cjk"])
 def test_write_paths_agree_with_the_hits(es, spark, expected, analyzer):
-    cases = [(t, k) for a, t, k in CASES if a == analyzer]
+    cases = [(t, k) for a, t, k in CASES if a == analyzer and k in FAST_KINDS]
     for text, kind in cases:  # identity rewrite: the match sets stay put
         q = KINDS[kind](text)
         want = set(expected[(analyzer, text, kind)])
@@ -195,3 +240,106 @@ def test_query_string_text_leaves_take_the_index_answer(es):
         body = {"query_string": {"query": q}}
         assert set(_hits(es, "standard", body)) == want
         assert es.count("standard", body) == len(want)
+
+
+# ---- the search context is the one source of terms and statistics --------
+
+
+def test_no_table_case_reads_the_regex_token_stream(es, monkeypatch):
+    # over an index, no text node builds the raw frame's [a-z0-9]+ stream
+    regex_stream = dsl.SearchContext.toks_sql
+
+    def guarded(ctx):
+        if ctx.index is None:
+            raise AssertionError(f"regex token stream over {ctx.text_col!r}")
+        return regex_stream(ctx)
+
+    monkeypatch.setattr(dsl.SearchContext, "toks_sql", guarded)
+    for analyzer, text, kind in CASES:
+        q, want = KINDS[kind](text), _analyzer_match(text, kind)
+        assert set(_hits(es, analyzer, q)) == want, (analyzer, text, kind)
+        assert es.count(analyzer, q) == len(want), (analyzer, text, kind)
+
+
+@pytest.mark.parametrize("operator", ["or", "and"])
+def test_one_field_kinds_score_as_match(es, operator):
+    for text in ["zürich today", "don't know", "東京 タワー"]:
+        match = {"match": {"text": {"query": text, "operator": operator}}}
+        want = _hits(es, "standard", match)
+        in_bool = _hits(es, "standard", {"bool": {"must": [match]}})
+        assert want and in_bool == pytest.approx(want, abs=1e-9)
+        for q in [
+            {"multi_match": {"query": text, "fields": ["text"], "operator": operator}},
+            {"multi_match": {"query": text, "fields": ["text"], "operator": operator,
+                             "type": "most_fields"}},
+            {"multi_match": {"query": text, "fields": ["text"], "operator": operator,
+                             "type": "cross_fields"}},
+            {"combined_fields": {"query": text, "fields": ["text"], "operator": operator}},
+        ]:
+            assert _hits(es, "standard", q) == pytest.approx(want, abs=1e-9), q
+            assert _hits(es, "standard", {"bool": {"must": [q]}}) == pytest.approx(want, abs=1e-9), q
+
+
+@pytest.mark.parametrize("query,field", [
+    ({"multi_match": {"query": "zürich", "fields": ["text", "text._2gram"]}}, "text._2gram"),
+    ({"combined_fields": {"query": "zürich", "fields": ["text", "lang"]}}, "text"),
+    ({"multi_match": {"query": "zürich", "fields": ["text", "lang"], "type": "cross_fields"}},
+     "text"),
+])
+def test_the_index_field_blends_with_no_other_analyzer(es, query, field):
+    # the index has no shingle subfield, and one BM25F / blended-df query
+    # needs one analyzer: no silent fallback to the regex tokens
+    with pytest.raises(ValueError, match=f"'{field}'"):
+        _hits(es, "standard", query)
+    with pytest.raises(ValueError, match=f"'{field}'"):
+        es.count("standard", query)
+
+
+def test_sparse_vector_on_the_index_field_is_an_error(es):
+    # the index stores no per-term weights, and its analyzer is not the
+    # raw frame's token stream
+    q = {"sparse_vector": {"field": "text", "query_vector": {"zürich": 1.0}}}
+    with pytest.raises(ValueError, match="'text'"):
+        _hits(es, "standard", q)
+    with pytest.raises(ValueError, match="'text'"):
+        es.count("standard", q)
+
+
+# ---- multi-term expansion over the index's term dictionary ---------------
+
+# 60 terms share the prefix "pre"; 64 terms are 2 edits from "mmmm" and
+# sort before it, "zmmm" is 1 edit from it and sorts after every one
+PREFIXED = [f"pre{i:03d}" for i in range(60)]
+TWO_EDITS = [f"{a}{b}mm" for a in "abcdefgh" for b in "abcdefgh"]
+EXPAND_URL = {w: f"e{i:03d}" for i, w in enumerate([*PREFIXED, *TWO_EDITS, "mmmm", "zmmm"])}
+
+
+@pytest.fixture(scope="module")
+def expand_index(es, spark):
+    return _bulk(es, spark, "expand", "standard", docs=[
+        (u, w, "en", "red", 0.0) for w, u in EXPAND_URL.items()])
+
+
+@pytest.mark.parametrize("query", [
+    {"match_bool_prefix": {"text": "pre"}},
+    {"multi_match": {"query": "pre", "fields": ["text"], "type": "bool_prefix"}},
+    {"query_string": {"query": "pre*"}},
+])
+def test_prefix_expands_to_every_dictionary_term(es, spark, expand_index, query):
+    # the constant-score rewrite keeps every term of the prefix, as a raw
+    # frame's token test does
+    want = {EXPAND_URL[w] for w in PREFIXED}
+    assert set(_hits(es, expand_index, query, size=100)) == want
+    assert es.count(expand_index, query) == len(want)
+    raw = spark.createDataFrame([(u, w) for w, u in EXPAND_URL.items()], "url string, text string")
+    got = dsl.search(spark, raw, {"query": query, "size": 100}, key="url").collect()
+    assert {r.url for r in got} == want
+
+
+def test_fuzzy_keeps_the_closest_terms(es, expand_index):
+    # the top-terms rewrite keeps max_expansions (50) terms, closest first:
+    # mmmm, zmmm, then 48 of the two-edit terms in term order
+    want = {EXPAND_URL[w] for w in ["mmmm", "zmmm", *TWO_EDITS[:48]]}
+    q = {"query_string": {"query": "mmmm~2"}}
+    assert set(_hits(es, expand_index, q, size=100)) == want
+    assert es.count(expand_index, q) == len(want)
