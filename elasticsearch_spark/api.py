@@ -44,7 +44,7 @@ from .operators.phrase import highlight as highlight_fn
 from .operators.postings import build_index
 from .operators.suggest import explain as explain_fn
 from .operators.suggest import term_suggest
-from .operators.topk import IndexReader, edit_distances, search_topk
+from .operators.topk import IndexReader, edit_distances, search_term_docs, search_topk
 from .plans import aggs as aggs_mod
 from .plans import dsl
 from .sources import index_store as store
@@ -156,10 +156,11 @@ def _pinned(reader: IndexReader, segs) -> IndexReader:
 
 class _IndexText:
     """An Engine index's ``text`` field as ``dsl.SearchContext.index``: the
-    index's analyzer, its postings BM25, df and term dictionary, and its
-    positional leaves (``Engine._index_hits``). A score frame holds every
-    matching live doc of ``segs`` (default: the reader's), one row per
-    doc, built on the driver with no Spark job."""
+    index's analyzer, its postings BM25, df and term dictionary, its
+    constant-score multi-term leaves (a doc-id union of the expanded
+    terms) and its positional leaves (``Engine._index_hits``). A score
+    frame holds every matching live doc of ``segs`` (default: the
+    reader's), one row per doc, built on the driver with no Spark job."""
 
     def __init__(self, engine: "Engine", reader: IndexReader, segs=None):
         self.engine = engine
@@ -193,7 +194,8 @@ class _IndexText:
             # ties in term order
             near = self.reader.expand_terms(kind, value, None, fuzziness=fuzziness)
             terms = [t for _, t in heapq.nsmallest(50, zip(edit_distances(value, near, fuzziness), near))]
-        return self.bm25(terms, 1, 1.0).select("__key", F.lit(float(boost)).alias("_score"))
+        hits = search_term_docs(self.reader, terms, ("url",))
+        return hits.select(F.col("url").alias("__key"), F.lit(float(boost)).alias("_score"))
 
     def positional(self, q: dict, boost: float) -> DataFrame:
         hits = self.engine._index_hits(self.reader, q, self.reader.meta.doc_count, fetch=False)
@@ -214,7 +216,7 @@ class Engine:
     def __init__(self, spark: SparkSession, root: str = "/tmp/es_spark_indices"):
         self.spark = spark
         self.root = root
-        self._pits: dict[str, tuple[str, list[int]]] = {}
+        self._pits: dict[str, tuple[str, IndexReader]] = {}
         self._scrolls: dict[str, dict] = {}  # scroll_id → pinned cursor state
         self._seq = itertools.count(1)  # monotonic ids (PITs, ad-hoc names)
         self._readers: dict[str, IndexReader] = {}  # index dir → open reader
@@ -226,22 +228,21 @@ class Engine:
     # ---- point-in-time readers ---------------------------------------------
 
     def open_pit(self, index: str, keep_alive: str = "1m") -> dict:
-        """POST /{index}/_pit: pin the CURRENT segment set. Segments are
-        immutable, so a search carrying this id sees no documents ADDED
-        after the PIT opened. Scope vs the reference's PointInTimeBuilder:
-        deletes/updates are NOT pinned (tombstones apply live), and a
-        forcemerge that expunges pinned segments invalidates the PIT —
-        this embedded engine does not refcount segment files or snapshot
-        the liveDocs bitset. keep_alive is accepted for API parity; expiry
-        is the caller's concern."""
+        """POST /{index}/_pit: pin the CURRENT reader (``IndexReader.pin``):
+        its segments held open, their live-doc masks frozen. A search
+        carrying this id sees no document added, updated or deleted after
+        the PIT opened, also after a forcemerge retired the pinned
+        segments — the reference's PointInTimeBuilder holding its reader.
+        keep_alive is accepted for API parity; expiry is the caller's
+        concern (``close_pit`` releases the files)."""
         concrete = self.resolve(index)
         if len(concrete) != 1:
             raise ValueError(f"open_pit needs exactly one concrete index, got {concrete}")
-        segs = store.list_segs(self._dir(concrete[0]))
-        if not segs:
+        if not store.list_segs(self._dir(concrete[0])):
             raise ValueError(f"open_pit: index has no segments: {concrete[0]}")
+        reader = self._reader(concrete[0])
         pid = f"pit~{concrete[0]}~{next(self._seq)}"
-        self._pits[pid] = (concrete[0], segs)
+        self._pits[pid] = (concrete[0], reader.pin())
         return {"id": pid, "keep_alive": keep_alive}
 
     def close_pit(self, pit_id: str) -> dict:
@@ -313,10 +314,17 @@ class Engine:
         # returns the snapshot-time view, Scroll.java keep-alive contract)
         pin_dir = os.path.join(self._dir(ix), ".scroll", sid.replace("~", "_"))
         pinned = ops_mod.pin_tombstones(self._dir(ix), pin_dir)
+        # and the pinned segments' docs files, so a merge that retires them
+        # leaves the cursor its pages
+        docs_paths = []
+        for s in self._pits[pit][1].segs:
+            docs_paths.append(os.path.join(pin_dir, f"docs_{s}.parquet"))
+            os.link(os.path.join(store.seg_dir(self._dir(ix), s), "docs.parquet"),
+                    docs_paths[-1])
         self._scrolls[sid] = {
             "pit": pit, "index": ix, "body": base,
             "fields": sort_fields, "after": None, "src": src_spec,
-            "pin_dir": pin_dir, "pinned_tombs": pinned,
+            "pin_dir": pin_dir, "pinned_tombs": pinned, "docs": docs_paths,
         }
         return self.scroll(sid)
 
@@ -325,12 +333,8 @@ class Engine:
         st = self._scrolls.get(scroll_id)
         if st is None:
             raise ValueError(f"unknown or cleared scroll id: {scroll_id}")
-        index, pit_segs = self._pits[st["pit"]]
-        d = self._dir(index)
-        paths = [os.path.join(store.seg_dir(d, s), "docs.parquet")
-                 for s in pit_segs]
         view = ops_mod.mask_tombstones_pinned(
-            self.spark, st["pinned_tombs"], self.spark.read.parquet(*paths))
+            self.spark, st["pinned_tombs"], self.spark.read.parquet(*st["docs"]))
         body = dict(st["body"])
         if st["after"] is not None:
             body["search_after"] = st["after"]
@@ -1506,14 +1510,14 @@ class Engine:
 
         ``index`` may be an alias: multi-index aliases fan out through
         ``search_multi`` (cross-index semantics)."""
-        pit_segs = None
+        pit_reader = None
         if "pit" in body:
             # a PIT id names both the index and the pinned segment set —
             # the reference's search-with-pit drops the URL index the same way
             pid = body["pit"]["id"]
             if pid not in self._pits:
                 raise ValueError(f"unknown or closed PIT id: {pid}")
-            index, pit_segs = self._pits[pid]
+            index, pit_reader = self._pits[pid]
             (kind0, _), = body.get("query", {"match_all": {}}).items()
             if kind0 != "match" or "sort" in body or "aggs" in body:
                 # only the index fast path threads the pinned segment set;
@@ -1623,7 +1627,8 @@ class Engine:
         hits: DataFrame
         # the index fast paths below need the reader; with no index meta
         # only the DSL path can answer (an index path raises, re-opening it)
-        reader = self._reader(index) if os.path.exists(store.meta_path(d)) else None
+        reader = pit_reader or (
+            self._reader(index) if os.path.exists(store.meta_path(d)) else None)
         meta_sort = reader.meta.index_sort if reader else None
         if (
             kind == "match_all"
@@ -1684,7 +1689,7 @@ class Engine:
             hl = body.get("highlight") if kind == "match" else None
             reader = reader or self._reader(index)
             hits = self._index_hits(
-                reader, q, size, segs=pit_segs, routing=routing, offset=frm,
+                reader, q, size, routing=routing, offset=frm,
                 fields=stored(reader, *requested, *(["text"] if hl else [])))
             if hl:
                 (_, mspec), = spec.items()
@@ -2997,20 +3002,20 @@ class Engine:
 
     def stats(self, index: str) -> dict:
         """GET /{index}/_stats (docs + store + segments subset): live doc
-        count, segment count, and on-disk store bytes — metadata plus one
-        aggregate over the live-docs view (tombstone-masked, like _count)."""
+        count, segment count, and on-disk store bytes — read from the open
+        reader's segments (each one's doc ids minus its tombstone slice,
+        like _count) with no Spark job."""
         d = self._dir(index)
-        meta = store.IndexMeta.load(d)
-        live = self._docs_view(index).count()
-        segs = store.list_segs(d)
+        reader = self._reader(index)
+        live = reader.live_count()
         store_bytes = 0
         for base, _, files in os.walk(d):
             store_bytes += sum(
                 os.path.getsize(os.path.join(base, fn)) for fn in files
             )
         return {
-            "docs": {"count": live, "deleted": meta.doc_count - live},
-            "segments": {"count": len(segs)},
+            "docs": {"count": live, "deleted": reader.meta.doc_count - live},
+            "segments": {"count": len(reader.segs)},
             "store": {"size_in_bytes": store_bytes},
         }
 

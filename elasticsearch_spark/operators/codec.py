@@ -205,18 +205,25 @@ def decode_blocks(first_doc_id, n, ids_bytes, tf_bytes, pos_bytes=None) -> tuple
     ``(flat_pos, occ_off)`` when ``pos_bytes`` is given. One
     ``vbyte_decode`` per stream; per-block doc-id bases come back through
     one cumsum + repeat."""
+    ids = decode_ids(first_doc_id, n, ids_bytes)
+    tfs = vbyte_decode(b"".join(tf_bytes)).astype(np.int64)
+    if len(tfs) != len(ids):
+        raise ValueError(f"postings blocks hold {len(ids)} doc ids and {len(tfs)} tfs")
+    if pos_bytes is None:
+        return ids, tfs
+    return (ids, tfs, *decode_positions(b"".join(pos_bytes), tfs))
+
+
+def decode_ids(first_doc_id, n, ids_bytes) -> np.ndarray:
+    """The doc ids alone of a run of blocks, flat in block order (what a
+    constant-score leaf needs: no tfs, no positions)."""
     n = np.asarray(n, dtype=np.int64)
     gaps = vbyte_decode(b"".join(ids_bytes))
-    tfs = vbyte_decode(b"".join(tf_bytes)).astype(np.int64)
-    total = int(n.sum())
-    if len(gaps) != total or len(tfs) != total:
-        raise ValueError(f"postings blocks hold {len(gaps)} doc ids and {len(tfs)} tfs, not n={total}")
+    if len(gaps) != int(n.sum()):
+        raise ValueError(f"postings blocks hold {len(gaps)} doc ids, not n={int(n.sum())}")
     # within-block prefix sums = the run's prefix sum minus its value just
     # before each block (uint64 arithmetic wraps, so the run sum may overflow)
     csum = np.cumsum(gaps)
     starts = np.cumsum(n) - n
     within = csum - np.repeat(csum[starts] - gaps[starts], n)
-    ids = within.astype(np.int64) + np.repeat(np.asarray(first_doc_id, dtype=np.int64), n)
-    if pos_bytes is None:
-        return ids, tfs
-    return (ids, tfs, *decode_positions(b"".join(pos_bytes), tfs))
+    return within.astype(np.int64) + np.repeat(np.asarray(first_doc_id, dtype=np.int64), n)

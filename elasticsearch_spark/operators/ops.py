@@ -90,13 +90,13 @@ def read_tombstones_range(index_dir: str, lo: int, hi: int) -> np.ndarray:
 _SEG_TOMB_CACHE: dict = {}
 
 
-def seg_tombstones(index_dir: str, seg_d: str) -> np.ndarray:
-    """Per-SEGMENT tombstone slice: the segment's doc_id range comes from
-    its docs.parquet FOOTER stats (no data pages read), then the tombstone
-    files are range-read. This is the 100 TB shape: one giant
-    delete_by_query costs each segment read only the tombstones that could
-    possibly mask its own docs. Memoized per (segment, tombstone-file
-    fingerprint) so repeated reads of one segment pay once."""
+def seg_tombstones(index_dir: str, seg_d: str, lo: int, hi: int) -> np.ndarray:
+    """Per-SEGMENT tombstone slice: the tombstones in the segment's doc_id
+    range ``[lo, hi]``, range-read from the tombstone files. This is the
+    100 TB shape: one giant delete_by_query costs each segment read only
+    the tombstones that could possibly mask its own docs. Memoized per
+    (segment, tombstone-file fingerprint) so repeated reads of one segment
+    pay once."""
     paths = _tomb_paths(index_dir)
     if not paths:
         return np.zeros(0, dtype=np.int64)
@@ -109,30 +109,12 @@ def seg_tombstones(index_dir: str, seg_d: str) -> np.ndarray:
         hit = _SEG_TOMB_CACHE.get(key)
         if hit is not None and hit[0] == fp:
             return hit[1]
-    out = _seg_tombstones_read(index_dir, seg_d)
+    out = read_tombstones_range(index_dir, lo, hi)
     if fp is not None:
         if len(_SEG_TOMB_CACHE) > 512:
             _SEG_TOMB_CACHE.clear()
         _SEG_TOMB_CACHE[key] = (fp, out)
     return out
-
-
-def _seg_tombstones_read(index_dir: str, seg_d: str) -> np.ndarray:
-    md = pq.ParquetFile(os.path.join(seg_d, "docs.parquet")).metadata
-    try:
-        col = md.schema.names.index("doc_id")
-    except ValueError:
-        return read_tombstones(index_dir)
-    lo = hi = None
-    for i in range(md.num_row_groups):
-        st = md.row_group(i).column(col).statistics
-        if st is None or not st.has_min_max:
-            return read_tombstones(index_dir)  # no stats → full fallback
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    if lo is None:
-        return np.zeros(0, dtype=np.int64)
-    return read_tombstones_range(index_dir, lo, hi)
 
 
 def tombstones_df(spark: SparkSession, index_dir: str) -> DataFrame | None:

@@ -30,29 +30,36 @@ than the per-segment work it would spread.
 - ``query_phase`` runs a per-segment function over them on the driver's
   query-phase thread pool (``sparkContext.defaultParallelism`` threads;
   the pyarrow reads and numpy kernels release the GIL for most of their
-  time). ``Segment`` is the only reader of the segment files: the
-  term-filtered postings slice, the live-doc mask and the SmallFloat doc
-  lengths (read only when a doc must be scored). Each segment yields its
-  ≤k candidates, tagged with its segment id; one failing segment fails
-  the search;
+  time). ``Segment`` is the only reader of the segment files, opened once
+  per ``IndexReader`` and shared by every search (Lucene's
+  ``SegmentReader``): it holds both files' footers, the block table
+  (``term, first_doc_id, last_doc_id, n, max_tf, min_ql, sum_tf`` per
+  postings block), the sorted doc ids with their SmallFloat norms and the
+  doc-id → row map of the fetch — ~20 MB for all 16 segments at 4,000
+  pages. A warm search finds its terms' block rows by ``searchsorted`` and
+  reads only their ``ids_bytes`` / ``tf_bytes`` (+ ``pos_bytes``) column
+  values; only the live-doc mask is derived per search, from the
+  memoized tombstone slice. Each segment yields its ≤k candidates, tagged
+  with its segment id; one failing segment fails the search;
 - the coordinator merge ranks the candidates by score desc, doc_id asc
   (``SearchPhaseController.java:186-205``, the reference's deterministic
   tie-break) and keeps ranks ``offset .. offset+k`` (``from``/``size``);
 - the fetch phase runs after the merge (``FetchSearchPhase.java``):
-  ``Segment.fetch`` reads the stored fields of the final hits, once per
-  segment that holds one — ≤k rows in all;
+  ``Segment.fetch`` reads the stored fields of the final hits by row from
+  the open docs file, once per segment that holds one — ≤k rows in all;
 - the hits become a local relation, ``createDataFrame`` of an Arrow table
   (``hits_frame``), so neither building nor collecting them runs a job.
 
 df is the sum of each segment's own df (Lucene's ``TermStates``), read
-from the segments' term dictionaries by the driver-side ``IndexReader``
-(pyarrow, no Spark job); df and avgdl reach every segment alike — the
+from the open segments' block tables by the driver-side ``IndexReader``
+(no Spark job); df and avgdl reach every segment alike — the
 dfs-phase determinism mechanism (``DfsPhase.java:31-81``): scores never
 depend on how the segments are split.
 """
 
 from __future__ import annotations
 
+import copy
 import functools
 import heapq
 import itertools
@@ -73,7 +80,7 @@ from pyspark.sql.types import (
 
 from ..functions import bm25
 from ..sources import index_store as store
-from .codec import decode_blocks
+from .codec import decode_blocks, decode_ids
 
 CAND_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -83,22 +90,22 @@ CAND_SCHEMA = StructType([
 MCAND_SCHEMA = StructType([StructField("qid", StringType()), *CAND_SCHEMA.fields])
 FETCH_FIELDS = ("url", "lang", "warc_ts")  # the match path's fetched fields
 
-_BLOCK_COLS = ["term", "first_doc_id", "last_doc_id", "n", "max_tf", "min_ql", "ids_bytes", "tf_bytes"]
-_POSITION_COLS = ["term", "first_doc_id", "n", "ids_bytes", "tf_bytes", "pos_bytes"]
+# the block table: one row per postings block, held by the open segment
+_BLOCK_TABLE = ["term", "first_doc_id", "last_doc_id", "n", "max_tf", "min_ql", "sum_tf"]
+_FRAME_COLS = ["term", "first_doc_id", "last_doc_id", "n", "max_tf", "min_ql"]
 
 
 def _member(a: np.ndarray, sorted_b: np.ndarray) -> np.ndarray:
     """Mask of the elements of ``a`` that occur in the sorted ``sorted_b``."""
-    return _find(a, sorted_b)[1]
-
-
-def _find(a: np.ndarray, sorted_b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(position of each element of ``a`` in the sorted ``sorted_b``, clipped
-    to a valid index; mask of the elements found)."""
     if len(sorted_b) == 0:
-        return np.zeros(len(a), dtype=np.int64), np.zeros(len(a), dtype=bool)
-    pos = np.minimum(np.searchsorted(sorted_b, a), len(sorted_b) - 1)
-    return pos, sorted_b[pos] == a
+        return np.zeros(len(a), dtype=bool)
+    return sorted_b[np.minimum(np.searchsorted(sorted_b, a), len(sorted_b) - 1)] == a
+
+
+def _ranges(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """The concatenation of ``arange(lo[i], hi[i])`` over i."""
+    n = hi - lo
+    return np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(int(n.sum()))
 
 
 def term_positions(post: pd.DataFrame) -> dict[str, tuple]:
@@ -121,89 +128,178 @@ def term_positions(post: pd.DataFrame) -> dict[str, tuple]:
     }
 
 
+class _File:
+    """A parquet file held open: its footer is read once, and ``rows``
+    reads chosen rows of chosen columns from only the row groups holding
+    them. Holding the file open also keeps it readable after a merge
+    deletes it (POSIX unlink semantics), as a point in time needs."""
+
+    def __init__(self, path: str):
+        self.file = pq.ParquetFile(path)
+        md = self.file.metadata
+        self.starts = np.cumsum([0] + [md.row_group(i).num_rows for i in range(md.num_row_groups)])
+
+    def rows(self, rows: np.ndarray, columns: list[str]) -> pa.Table:
+        """``columns`` of the ascending file rows ``rows``."""
+        if not len(rows):
+            return self.file.schema_arrow.empty_table().select(columns)
+        rg = np.searchsorted(self.starts, rows, side="right") - 1
+        groups = np.unique(rg)
+        # where each read group's first row lands in the read table
+        base = np.r_[0, np.cumsum(np.diff(self.starts)[groups])[:-1]]
+        # one thread: the query phase already reads the segments in parallel
+        tab = self.file.read_row_groups(groups.tolist(), columns=columns, use_threads=False)
+        return tab.take(rows - self.starts[rg] + base[np.searchsorted(groups, rg)])
+
+
 class Segment:
-    """One segment of the store — the only code that knows the segment file
-    layout. Every read is lazy and runs at most once per handle."""
+    """One committed segment, opened once per reader and shared by every
+    search and thread (Lucene's ``SegmentReader``) — the only code that
+    knows the segment file layout. Opening reads, and then holds:
+
+    - both files' parquet footers, the files kept open;
+    - the block table: ``term, first_doc_id, last_doc_id, n, max_tf,
+      min_ql, sum_tf`` per postings block, term-sorted, so a term's blocks
+      are one run found by ``searchsorted``; its df (docs) and cf
+      (occurrences) sum the run's ``n`` and ``sum_tf``;
+    - the sorted doc ids with their SmallFloat-decoded lengths (``norms``)
+      and file rows (the doc-id → row map of ``fetch``).
+
+    A query then reads only the byte columns of its terms' block rows
+    (``postings``); it scans no ``term`` column and builds no dataset. At
+    4,000 pages in 16 segments (205,291 block rows) the sixteen hold
+    ~20 MB, most of it the block table's term strings.
+
+    The live-doc mask is not open state: ``tombstones`` reads the current
+    slice at every call (memoized per tombstone-file fingerprint by
+    ``ops.seg_tombstones``), so a delete shows on the next search without
+    a reopen — except on a ``frozen`` copy, a point in time's."""
 
     def __init__(self, index_dir: str, seg: int):
         self.index_dir = index_dir
         self.dir = store.seg_dir(index_dir, int(seg))
-        self.postings_path = os.path.join(self.dir, "postings.parquet")
-        self.docs_path = os.path.join(self.dir, "docs.parquet")
+        self._postings = _File(os.path.join(self.dir, "postings.parquet"))
+        self._docs = _File(os.path.join(self.dir, "docs.parquet"))
+        blocks = self._postings.file.read(columns=_BLOCK_TABLE)
+        self.blocks = {c: blocks[c].to_numpy(zero_copy_only=False) for c in _BLOCK_TABLE}
+        from ..functions.smallfloat import byte4_to_int
+
+        docs = self._docs.file.read(columns=["doc_id", "norm"])
+        ids = docs["doc_id"].to_numpy()
+        self._rows = np.argsort(ids, kind="mergesort")
+        self.norms = ids[self._rows], byte4_to_int(docs["norm"].to_numpy())[self._rows]
+        self._frozen: np.ndarray | None = None
+
+    @property
+    def doc_ids(self) -> np.ndarray:
+        """Every doc id of the segment, sorted (deleted ones too)."""
+        return self.norms[0]
+
+    @property
+    def docs_schema(self) -> pa.Schema:
+        """Arrow schema of the stored docs (the docs.parquet footer)."""
+        return self._docs.file.schema_arrow
+
+    def _block_rows(self, terms) -> np.ndarray:
+        """The block-table rows of ``terms``' blocks, in term order."""
+        t = self.blocks["term"]
+        q = sorted(set(terms))
+        if len(q) * 8 > len(t):
+            # a large expansion (a prefix): one hash pass over the table
+            # beats this many binary searches of Python strings
+            return np.flatnonzero(pd.Series(t).isin(q).to_numpy())
+        q = np.array(q, dtype=object)
+        return _ranges(np.searchsorted(t, q), np.searchsorted(t, q, side="right"))
 
     def postings(self, terms, positions: bool = False) -> pd.DataFrame:
-        """Postings blocks of ``terms`` (parquet predicate + column pushdown
-        on the term-sorted file: tail terms cost ~nothing per non-matching
-        segment); ``positions`` selects the positional columns instead of
-        the block-max ones."""
-        return pq.read_table(
-            self.postings_path,
-            columns=_POSITION_COLS if positions else _BLOCK_COLS,
-            filters=[("term", "in", list(terms))],
-        ).to_pandas()
+        """The postings blocks of ``terms``, in term order: the block
+        table's rows with their ``ids_bytes`` and ``tf_bytes`` read from
+        the open file (and ``pos_bytes`` when ``positions``)."""
+        rows = self._block_rows(terms)
+        cols = ["ids_bytes", "tf_bytes", *(["pos_bytes"] if positions else [])]
+        data = self._postings.rows(rows, cols)
+        return pd.DataFrame({
+            **{c: self.blocks[c][rows] for c in _FRAME_COLS},
+            **{c: data[c].to_numpy(zero_copy_only=False) for c in cols},
+        })
 
     def positions(self, terms) -> dict[str, tuple]:
         """``term_positions`` of the postings of ``terms``."""
         return term_positions(self.postings(terms, positions=True))
 
-    def terms(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """The segment's term dictionary: (sorted terms, df, cf), where df
-        sums the term's blocks' ``n`` (docs) and cf their ``sum_tf``
-        (occurrences) — three narrow columns of the term-sorted file."""
-        tab = pq.read_table(self.postings_path, columns=["term", "n", "sum_tf"])
-        t = tab["term"].to_numpy(zero_copy_only=False)
+    def term_docs(self, terms) -> np.ndarray:
+        """The sorted union of ``terms``' doc ids, read from their blocks'
+        ``ids_bytes`` alone (deleted docs too)."""
+        rows = self._block_rows(terms)
+        ids = self._postings.rows(rows, ["ids_bytes"])["ids_bytes"]
+        b = self.blocks
+        return np.unique(decode_ids(b["first_doc_id"][rows], b["n"][rows],
+                                    ids.to_numpy(zero_copy_only=False)))
+
+    def doc_freqs(self, terms: np.ndarray) -> np.ndarray:
+        """The df of each of ``terms`` (an object array) in this segment, 0
+        when absent."""
+        t = self.blocks["term"]
+        c = np.r_[0, np.cumsum(self.blocks["n"], dtype=np.int64)]
+        return c[np.searchsorted(t, terms, side="right")] - c[np.searchsorted(t, terms)]
+
+    def dictionary(self, start: str = "", end: str | None = None):
+        """The segment's term dictionary in ``[start, end)`` (None: no upper
+        bound): (sorted distinct terms, df, cf)."""
+        t = self.blocks["term"]
+        a, z = np.searchsorted(t, start), len(t) if end is None else np.searchsorted(t, end)
+        t = t[a:z]
         if not len(t):
             return t, np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-        start = np.flatnonzero(np.r_[True, t[1:] != t[:-1]])
-        return (t[start], np.add.reduceat(tab["n"].to_numpy().astype(np.int64), start),
-                np.add.reduceat(tab["sum_tf"].to_numpy().astype(np.int64), start))
+        first = np.flatnonzero(np.r_[True, t[1:] != t[:-1]])
+        return (t[first], np.add.reduceat(self.blocks["n"][a:z].astype(np.int64), first),
+                np.add.reduceat(self.blocks["sum_tf"][a:z].astype(np.int64), first))
 
-    @functools.cached_property
+    @property
     def tombstones(self) -> np.ndarray:
         """Sorted deleted doc ids in this segment's doc-id range: the
         segment range-reads ONLY its own tombstone slice, so a giant
         delete_by_query never becomes a per-segment memory tax."""
+        if self._frozen is not None:
+            return self._frozen
+        ids = self.doc_ids
+        if not len(ids):
+            return ids
         from .ops import seg_tombstones
 
-        return seg_tombstones(self.index_dir, self.dir)
+        return seg_tombstones(self.index_dir, self.dir, int(ids[0]), int(ids[-1]))
+
+    def frozen(self) -> "Segment":
+        """This open segment with its live-doc mask fixed as of now: the
+        view a point in time holds."""
+        pinned = copy.copy(self)
+        pinned._frozen = self.tombstones
+        return pinned
 
     def live(self, ids: np.ndarray) -> np.ndarray:
         """``ids`` minus deleted and superseded docs (the liveDocs mask)."""
-        if len(ids) == 0 or len(self.tombstones) == 0:
+        tombs = self.tombstones
+        if len(ids) == 0 or len(tombs) == 0:
             return ids
-        return ids[~_member(ids, self.tombstones)]
+        return ids[~_member(ids, tombs)]
 
-    @functools.cached_property
-    def norms(self) -> tuple[np.ndarray, np.ndarray]:
-        """(sorted doc ids, SmallFloat-decoded doc lengths)."""
-        from ..functions.smallfloat import byte4_to_int
-
-        docs = pq.read_table(self.docs_path, columns=["doc_id", "norm"])
-        ids = docs["doc_id"].to_numpy()
-        order = np.argsort(ids, kind="mergesort")
-        return ids[order], byte4_to_int(docs["norm"].to_numpy())[order]
-
-    @functools.cached_property
+    @property
     def allowed(self) -> np.ndarray | None:
-        """Sorted live doc ids, or None when no doc of the segment is dead."""
-        ids = self.norms[0]
-        live = self.live(ids)
-        return None if len(live) == len(ids) else live
+        """Sorted live doc ids, or None when no doc of the segment is dead
+        (derived anew at every call)."""
+        live = self.live(self.doc_ids)
+        return None if len(live) == len(self.doc_ids) else live
 
     def docs_batches(self, columns: list[str], batch_size: int):
         """Stream the stored docs in file (index-sort) order."""
-        yield from pq.ParquetFile(self.docs_path).iter_batches(
-            batch_size=batch_size, columns=columns
-        )
+        yield from self._docs.file.iter_batches(batch_size=batch_size, columns=columns)
 
     def fetch(self, doc_ids, fields) -> pd.DataFrame:
-        """The stored ``fields`` of the docs ``doc_ids``: ``doc_id, *fields``
-        rows (a ``doc_id IN (...)`` read of docs.parquet)."""
-        return pq.read_table(
-            self.docs_path,
-            columns=["doc_id", *fields],
-            filters=[("doc_id", "in", list(doc_ids))],
-        ).to_pandas()
+        """The stored ``fields`` of the docs ``doc_ids`` (ids of this
+        segment): ``doc_id, *fields`` rows, read by row from the open
+        docs file."""
+        pos = np.searchsorted(self.doc_ids, np.unique(np.asarray(doc_ids, dtype=np.int64)))
+        return self._docs.rows(np.sort(self._rows[pos]), ["doc_id", *fields]).to_pandas()
 
 
 def _score_segment_arrays(
@@ -382,8 +478,8 @@ def _bm25_segment(
     k: int,
 ):
     """Per-segment fn for a batch of term queries: the segment's postings
-    are read ONCE for the union of every query's terms (one parquet probe,
-    one norms read, one tombstone mask), then the WAND / scored loop runs
+    are read ONCE for the union of every query's terms (one read of their
+    block rows, one tombstone mask), then the WAND / scored loop runs
     per query on the in-memory slice. per_q: qid -> (live_terms, msm,
     mode); qid None = a single query, emitted without a qid column."""
     live = sorted({t for terms, _, _ in per_q.values() for t in terms})
@@ -393,19 +489,20 @@ def _bm25_segment(
         if len(post) == 0:
             return None
         norm_doc_ids, norm_ql = seg.norms
+        allowed = seg.allowed
         outs = []
         for qid, (terms, msm, mode) in per_q.items():
-            post_q = post[post["term"].isin(terms)]
+            post_q = post if len(per_q) == 1 else post[post["term"].isin(terms)]
             if len(post_q) == 0:
                 continue
             if mode == "wand" and msm <= 1:
                 r = _wand_segment(
-                    post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, seg.allowed
+                    post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed
                 )
             else:
                 r = _topk_from_arrays(
                     *_score_segment_arrays(
-                        post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, seg.allowed
+                        post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, allowed
                     ),
                     k, msm,
                 )
@@ -419,69 +516,99 @@ def _bm25_segment(
 
 class IndexReader:
     """Open index handle: the index meta, the live segment list and one
-    term dictionary per live segment (``Segment.terms``) — the DfsPhase's
-    per-query stats round-trip, on the driver with no Spark job. ``Engine``
-    owns one reader per index and every index search path (match, msearch,
-    phrase, phrase_prefix, intervals, spans, the sorted scan) takes it.
+    open ``Segment`` per live segment — the DfsPhase's per-query stats
+    round-trip, on the driver with no Spark job. ``Engine`` owns one reader
+    per index and every index search path (match, msearch, phrase,
+    phrase_prefix, intervals, spans, the sorted scan) takes it.
 
     A term's df is the sum of its per-segment df over the committed
-    segments (Lucene's ``TermStates``): masked docs count until a merge
-    expunges them, and no write can leave a term's df behind its postings.
-    Each dictionary is loaded on the first lookup and kept, keyed by the
-    segment and its postings file's identity. At 4,000 pages in 16
-    segments (48,911 distinct terms, 201,304 segment entries) all sixteen
-    take ~95-130 ms of driver CPU to load and hold ~15 MB (Python strings
-    and int64 df/cf); at web scale a dictionary needs a range-readable
-    on-disk form.
+    segments (Lucene's ``TermStates``), read from the segments' block
+    tables: masked docs count until a merge expunges them, and no write can
+    leave a term's df behind its postings. Each segment is opened on first
+    use — once, however many threads ask; the first search opens the
+    missing ones on the query-phase pool — and kept, keyed by the segment
+    and its postings file's identity. At 4,000 pages in 16 segments the
+    open state is ~20 MB (``Segment``); at web scale the block table needs
+    an on-disk term dictionary that is read by range.
 
     A reader is a snapshot of one commit: ``state``
     (``index_store.commit_state``) is its invalidation key, and
     ``Engine._reader`` reopens the reader when the state on disk differs —
     so a bulk, delete or merge from this process, a second ``Engine`` or
     the streaming ingest is seen by the next search. A reopened reader
-    takes over the dictionaries of the segments that survived the write.
-    Safe to share between threads (the dictionary load is locked)."""
+    takes over the open segments that survived the write; a delete, which
+    leaves the state alone, reaches the next search through each segment's
+    live-doc mask. Safe to share between threads."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 state: store.CommitState | None = None, dicts: dict | None = None):
+                 state: store.CommitState | None = None, segments: dict | None = None):
         self.spark = spark
         self.index_dir = index_dir
         self.state = state or store.commit_state(index_dir)
         self.meta = store.IndexMeta.loads(self.state.meta)
         self.segs = list(self.state.segs)
-        self._keys = list(zip(self.state.segs, self.state.postings))
-        dicts = dicts or {}
-        self._dicts = {k: dicts[k] for k in self._keys if k in dicts}
+        self._ids = dict(zip(self.state.segs, self.state.postings))
+        segments = segments or {}
+        self._open = {k: segments[k] for k in self._ids.items() if k in segments}
+        self._opening: dict = {}  # key -> the lock its one opener holds
         self._lock = threading.Lock()
 
     def reopen(self, state: store.CommitState) -> "IndexReader":
-        """A reader on ``state`` that keeps this reader's dictionaries of the
-        segments ``state`` still holds."""
-        return IndexReader(self.spark, self.index_dir, state, self._dicts)
+        """A reader on ``state`` that keeps this reader's open segments
+        ``state`` still holds."""
+        return IndexReader(self.spark, self.index_dir, state, self._open)
 
-    def _dictionaries(self) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
-        """The committed segments' term dictionaries, each loaded once."""
-        with self._lock:
-            for k in self._keys:
-                if k not in self._dicts:
-                    self._dicts[k] = Segment(self.index_dir, k[0]).terms()
-            return [self._dicts[k] for k in self._keys]
+    def segment(self, s: int) -> Segment:
+        """Segment ``s``, opened on first use: a thread that finds another
+        opening it waits for that open instead of repeating it."""
+        key = (s, self._ids.get(s))
+        seg = self._open.get(key)
+        if seg is None:
+            with self._lock:
+                lock = self._opening.setdefault(key, threading.Lock())
+            with lock:
+                seg = self._open.get(key)
+                if seg is None:
+                    seg = self._open[key] = Segment(self.index_dir, s)
+        return seg
+
+    def _segments(self) -> list[Segment]:
+        """The committed segments, open; the missing ones are opened in
+        parallel on the query-phase pool."""
+        missing = [s for s in self._ids.items() if s not in self._open]
+        if missing:
+            _on_pool(self.spark, self.segment, [s for s, _ in missing])
+        return [self.segment(s) for s in self._ids]
+
+    def pin(self) -> "IndexReader":
+        """A point in time over this reader's commit: every segment open
+        now, its live-doc mask frozen as of now. The view sees no later
+        write or delete, and it outlives a merge that retires its segments,
+        whose files it holds open."""
+        pinned = copy.copy(self)
+        pinned._open = {(s, self._ids[s]): seg.frozen()
+                        for s, seg in zip(self._ids, self._segments())}
+        pinned._opening = {}
+        return pinned
+
+    def live_count(self) -> int:
+        """The live docs of the committed segments: each segment's doc ids
+        minus its tombstone slice."""
+        return sum(len(seg.live(seg.doc_ids)) for seg in self._segments())
 
     def _runs(self, prefix: str):
         """Per segment, its dictionary's terms that start with ``prefix``
         (a range of the sorted terms)."""
         end = _prefix_end(prefix)
-        for terms, _, _ in self._dictionaries():
-            lo = np.searchsorted(terms, prefix)
-            yield terms[lo:len(terms) if end is None else np.searchsorted(terms, end)]
+        for seg in self._segments():
+            yield seg.dictionary(prefix, end)[0]
 
     def term_weights(self, terms: list[str]) -> dict[str, tuple[float, int]]:
         """term -> (idf·(k1+1) weight, df); zero-df terms drop out."""
         terms = np.array(list(dict.fromkeys(terms)), dtype=object)
         dfs = np.zeros(len(terms), dtype=np.int64)
-        for seg_terms, seg_df, _ in self._dictionaries():
-            pos, hit = _find(terms, seg_terms)
-            dfs += np.where(hit, seg_df[pos], 0)
+        for seg in self._segments():
+            dfs += seg.doc_freqs(terms)
         m = self.meta
         return {
             t: (float(bm25.idf(np.float64(df), m.doc_count) * (m.k1 + 1.0)), int(df))
@@ -536,7 +663,7 @@ class IndexReader:
         and term vectors."""
         terms, df, cf = (np.concatenate(c) for c in zip(
             (np.zeros(0, object), np.zeros(0, np.int64), np.zeros(0, np.int64)),
-            *self._dictionaries()))
+            *(seg.dictionary() for seg in self._segments())))
         tab = pa.table({"term": pa.array(terms, pa.string()), "df": df, "cf": cf})
         return tab.group_by("term").aggregate([("df", "sum"), ("cf", "sum")]) \
             .rename_columns(["term", "df", "cf"]).sort_by("term")
@@ -547,7 +674,7 @@ class IndexReader:
         read on the driver once per reader (None with no segment)."""
         if not self.segs:
             return None
-        return pq.read_schema(Segment(self.index_dir, self.segs[0]).docs_path)
+        return self.segment(self.segs[0]).docs_schema
 
     def docs_schema(self, columns) -> StructType:
         """Spark types of stored ``columns`` (no schema-inference job), the
@@ -562,9 +689,9 @@ class IndexReader:
         ])
 
     def close(self) -> None:
-        """Drop the loaded dictionaries."""
+        """Drop the open segments."""
         with self._lock:
-            self._dicts.clear()
+            self._open.clear()
 
 
 def _cap(n: int | None) -> int | None:
@@ -754,7 +881,7 @@ def query_phase(reader: IndexReader, segs: list[int], per_segment) -> pd.DataFra
     segment's candidates in one frame, each row tagged with its ``seg``
     (None when no segment has one)."""
     def run(s: int) -> pd.DataFrame | None:
-        r = per_segment(Segment(reader.index_dir, s))
+        r = per_segment(reader.segment(s))
         return None if r is None or not len(r) else r.assign(seg=s)
 
     outs = [r for r in _on_pool(reader.spark, run, segs) if r is not None]
@@ -789,7 +916,7 @@ def _fetch_frame(reader: IndexReader, hits: pd.DataFrame | None, fields,
         if hits is not None and len(hits):
             docs = _on_pool(
                 reader.spark,
-                lambda g: Segment(reader.index_dir, g[0]).fetch(g[1].unique().tolist(), fields),
+                lambda g: reader.segment(g[0]).fetch(g[1].to_numpy(), fields),
                 list(hits.groupby("seg")["doc_id"]),
             )
             hits = hits.merge(pd.concat(docs, ignore_index=True), on="doc_id", how="left")
@@ -849,6 +976,20 @@ def search_topk(
         segs = query_segments(reader, routing)
     fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k + offset)
     return search_segments(reader, segs, fn, k, offset, (*(FETCH_FIELDS if fetch else ()), *fields))
+
+
+def search_term_docs(reader: IndexReader, terms, fields=()) -> DataFrame:
+    """Every live doc holding any of ``terms``, unscored, with its stored
+    ``fields``: ``doc_id, *fields`` rows — the constant-score rewrite of a
+    multi-term leaf (prefix, fuzzy), whose every doc scores the boost.
+    Each segment reads only the terms' ``ids_bytes`` rows and subtracts its
+    tombstones; no norm is read and nothing is scored. No Spark job."""
+    def per_segment(seg: Segment) -> pd.DataFrame | None:
+        ids = seg.live(seg.term_docs(terms))
+        return pd.DataFrame({"doc_id": ids}) if len(ids) else None
+
+    hits = query_phase(reader, query_segments(reader) if len(terms) else [], per_segment)
+    return _fetch_frame(reader, hits, fields, StructType([CAND_SCHEMA["doc_id"]]))
 
 
 def msearch_topk(
@@ -924,9 +1065,10 @@ def sorted_scan(
     def per_segment(seg: Segment) -> pd.DataFrame | None:
         taken = []
         n_live = 0
+        tombs = seg.tombstones
         for batch in seg.docs_batches(out_cols, max(k, 128)):
             part = batch.to_pandas()
-            part = part[~_member(part["doc_id"].to_numpy(), seg.tombstones)]
+            part = part[~_member(part["doc_id"].to_numpy(), tombs)]
             taken.append(part)
             n_live += len(part)
             if n_live >= k:

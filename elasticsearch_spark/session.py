@@ -10,33 +10,31 @@ Scale notes (100 TB / 1000-executor design):
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
 
-def _package_zip() -> str:
-    """Zip this package so executors can import it — the local-mode analog
-    of ``spark-submit --py-files elasticsearch_spark.zip`` (the north-rule
-    deployment shape). Rebuilt when sources are newer than the zip."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+def _package_zip(pkg_dir: str | None = None) -> str:
+    """Zip a package directory (default: this package) so executors can
+    import it — the local-mode analog of ``spark-submit --py-files
+    elasticsearch_spark.zip`` (the north-rule deployment shape). Each
+    checkout gets its own zip, named by a digest of its package directory,
+    and rebuilds it only when its own sources are newer: two checkouts on
+    one host never run each other's executor code."""
+    pkg_dir = os.path.abspath(pkg_dir or os.path.dirname(os.path.abspath(__file__)))
     root = os.path.dirname(pkg_dir)
-    out = os.path.join("/tmp", "elasticsearch_spark_pkg.zip")
-    src_mtime = max(
-        os.path.getmtime(os.path.join(dp, f))
-        for dp, _, fs in os.walk(pkg_dir)
-        for f in fs
-        if f.endswith(".py")
-    )
-    if not os.path.exists(out) or os.path.getmtime(out) < src_mtime:
-        tmp = out + ".tmp"
+    digest = hashlib.sha1(pkg_dir.encode()).hexdigest()[:16]
+    out = os.path.join(tempfile.gettempdir(), f"{os.path.basename(pkg_dir)}_pkg-{digest}.zip")
+    sources = [os.path.join(dp, f) for dp, _, fs in os.walk(pkg_dir) for f in fs if f.endswith(".py")]
+    if not os.path.exists(out) or os.path.getmtime(out) < max(map(os.path.getmtime, sources)):
+        tmp = f"{out}.{os.getpid()}.tmp"
         with zipfile.ZipFile(tmp, "w") as z:
-            for dp, _, fs in os.walk(pkg_dir):
-                for f in fs:
-                    if f.endswith(".py"):
-                        p = os.path.join(dp, f)
-                        z.write(p, os.path.relpath(p, root))
+            for p in sources:
+                z.write(p, os.path.relpath(p, root))
         os.replace(tmp, out)
     return out
 

@@ -343,3 +343,27 @@ def test_fuzzy_keeps_the_closest_terms(es, expand_index):
     q = {"query_string": {"query": "mmmm~2"}}
     assert set(_hits(es, expand_index, q, size=100)) == want
     assert es.count(expand_index, q) == len(want)
+
+
+@pytest.mark.parametrize("analyzer", ["standard", "cjk"])
+@pytest.mark.parametrize("query", ["zür*", "kno*", "t*", "zürick~1", "knoe~1", "lisd~1"])
+def test_multi_term_leaves_score_the_boost(es, analyzer, query):
+    # a prefix or fuzzy leaf is a constant-score union of the expanded
+    # terms' docs: the docs holding a term of the prefix, or one edit from
+    # the fuzzy term (the top-terms rewrite keeps 50, more than exist here)
+    from elasticsearch_spark.functions import analysis
+    from elasticsearch_spark.operators.topk import edit_distances
+
+    value = query.rstrip("*~1")
+    terms = {u: analysis.analyze(text, analyzer) for u, text, *_ in DOCS}
+    if query.endswith("*"):
+        want = {u for u, ts in terms.items() if any(t.startswith(value) for t in ts)}
+    else:
+        want = {u for u, ts in terms.items() if (edit_distances(value, ts, 1) <= 1).any()}
+    assert want
+    for boost, suffix in [(1.0, ""), (2.5, "^2.5")]:
+        body = {"query_string": {"query": query + suffix}}
+        got = _hits(es, analyzer, body)
+        assert set(got) == want
+        assert set(got.values()) == {boost}
+        assert es.count(analyzer, body) == len(want)

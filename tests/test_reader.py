@@ -4,6 +4,7 @@ dictionaries, and a reader never outlives the commit it was opened on."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import threading
@@ -382,7 +383,9 @@ def test_expansion_rules_equal_spark(es, spark, monkeypatch):
     vocab = np.array(sorted(WORDS), dtype=object)
     ones = np.ones(len(vocab), dtype=np.int64)
     reader = IndexReader(spark, es._dir("pages"))
-    monkeypatch.setattr(reader, "_dictionaries", lambda: [(vocab, ones, ones)] * 2)
+    seg = object.__new__(topk.Segment)  # two segments whose block tables hold vocab
+    seg.blocks = {"term": vocab, "n": ones, "sum_tf": ones}
+    monkeypatch.setattr(reader, "_segments", lambda: [seg] * 2)
     words = spark.createDataFrame([(w,) for w in WORDS], "t string")
 
     def spark_rule(specs, schema, cond):
@@ -409,3 +412,193 @@ def test_expansion_rules_equal_spark(es, spark, monkeypatch):
         assert reader.expand_terms("fuzzy", v, 100, k, n) == want[f"{v}|{k}|{n}"], (v, k, n)
     # the cap counts distinct terms across segments, in term order
     assert reader.expand_terms("wildcard", "a*", 2) == ["a", "a*c"]
+
+
+# ---- the open segments: opened once per reader, shared by every search ----
+
+
+def _count_opens(monkeypatch):
+    """The segment ids ``topk.Segment`` opens from now on, in order."""
+    opened = []
+    init = topk.Segment.__init__
+
+    def counting(self, index_dir, seg):
+        opened.append(int(seg))
+        init(self, index_dir, seg)
+
+    monkeypatch.setattr(topk.Segment, "__init__", counting)
+    return opened
+
+
+def test_threads_cold_start_one_reader(es, spark, monkeypatch):
+    """8 threads searching a cold reader at once open each segment once,
+    and every thread gets the serial hits."""
+    d = es._dir("pages")
+    queries = [["the", "of"], ["and", "w00042"], ["of", OOV]]
+    serial = [search_topk(spark, d, q, k=20).collect() for q in queries]
+    opened = _count_opens(monkeypatch)
+    reader = IndexReader(spark, d)
+    start = threading.Barrier(8)
+    out, errors = {}, []
+
+    def run(i):
+        try:
+            start.wait()
+            out[i] = [search_topk(spark, d, q, k=20, reader=reader).collect() for q in queries]
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(i,)) for i in range(8)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads) and not errors
+    assert sorted(opened) == sorted(reader.segs)
+    assert all(out[i] == serial for i in range(8))
+
+
+def test_delete_reaches_the_open_reader(spark, tmp_path):
+    """A delete changes no segment: the open reader's next search masks the
+    deleted doc without a reopen."""
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", _docs(spark, [(f"u{i}", f"common words {i}", "en") for i in range(6)]))
+    reader = es._reader("ix")
+
+    def urls():
+        return {r["url"] for r in search_topk(spark, reader.index_dir, ["common"], k=10,
+                                              reader=reader).collect()}
+
+    assert urls() == {f"u{i}" for i in range(6)}
+    es.delete("ix", ["u3"])
+    assert urls() == {f"u{i}" for i in range(6)} - {"u3"}
+    assert reader.live_count() == 5
+
+
+def test_reopen_keeps_the_surviving_open_segments(spark, tmp_path, monkeypatch):
+    """A bulk reopens the reader with the old segments' open state and opens
+    only the new segments; a forcemerge's reader drops the retired ones."""
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", _docs(spark, [(f"u{i}", f"common words {i}", "en") for i in range(6)]))
+    _ranked(es, BODY)
+    old = es._reader("ix")
+    kept = {s: old.segment(s) for s in old.segs}
+    opened = _count_opens(monkeypatch)
+
+    es.bulk("ix", _docs(spark, [("new", "marker common marker", "en")]))
+    assert _ranked(es, BODY)[0][0] == "new"
+    r = es._reader("ix")
+    assert r is not old and set(kept) < set(r.segs)
+    assert all(r.segment(s) is seg for s, seg in kept.items())
+    assert sorted(opened) == sorted(set(r.segs) - set(kept))
+
+    es.forcemerge("ix", **FULL_MERGE)
+    _ranked(es, BODY)
+    merged = es._reader("ix")
+    assert not set(merged.segs) & set(r.segs)
+    assert {s for s, _ in merged._open} == set(merged.segs)
+
+
+def test_pit_and_scroll_outlive_a_merge(spark, tmp_path):
+    """A point in time and a scroll cursor keep their pinned hits after a
+    forcemerge retired (deleted) the segments they pinned, and neither sees
+    a later bulk or delete."""
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=3)
+    es.bulk("ix", _docs(spark, [(f"u{i:02d}", f"common words {i}", "en") for i in range(25)]))
+    es.delete("ix", ["u00"])
+    body = {"query": {"match": {"text": "common words"}}, "size": 50}
+    want = _ranked(es, body)
+    pit = es.open_pit("ix")["id"]
+    page1 = es.search_scroll("ix", {"query": {"match": {"text": "common"}}, "size": 10})
+    pinned = es._pits[pit][1].segs
+
+    es.bulk("ix", _docs(spark, [("late", "common words late", "en")]))
+    es.delete("ix", ["u01"])
+    assert es.forcemerge("ix", **FULL_MERGE)["merges"] >= 1
+    assert not any(map(os.path.exists, (store.seg_dir(es._dir("ix"), s) for s in pinned)))
+    live = _ranked(es, body)
+    assert "late" in dict(live) and "u01" not in dict(live) and "u00" not in dict(live)
+
+    got = es.search("ix", {**body, "pit": {"id": pit}})["hits"].collect()
+    assert [(r["url"], r["score"]) for r in got] == want
+    sid = page1["_scroll_id"]
+    pages = [page1["hits"], es.scroll(sid)["hits"], es.scroll(sid)["hits"]]
+    assert sorted(r["url"] for p in pages for r in p) == sorted(u for u, _ in want)
+    assert es.close_pit(pit)["succeeded"] and es.clear_scroll(sid)["succeeded"]
+
+
+def test_warm_searches_read_only_postings_bytes(es, monkeypatch):
+    """After one warm-up, a repeated match and match_phrase read no parquet
+    file through ``read_table``, open no postings.parquet footer and read
+    no ``norm`` column: the open segments hold the footers, block tables
+    and norms."""
+    import pyarrow.parquet as pq
+
+    bodies = [MATCH, SEARCHES["match_phrase"][1]]
+    for body in bodies:
+        es.search("pages", body)["hits"].collect()
+    tables, footers, columns = [], [], []
+    read_table = pq.read_table
+    monkeypatch.setattr(pq, "read_table", lambda *a, **kw: tables.append(a) or read_table(*a, **kw))
+    init = pq.ParquetFile.__init__
+
+    def opening(self, source, *a, **kw):
+        footers.append(str(source))
+        init(self, source, *a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "__init__", opening)
+    for name in ("read", "read_row_group", "read_row_groups", "iter_batches"):
+        method = getattr(pq.ParquetFile, name)
+
+        def reading(self, *a, _method=method, **kw):
+            columns.extend(kw.get("columns") or ["*"])
+            return _method(self, *a, **kw)
+
+        monkeypatch.setattr(pq.ParquetFile, name, reading)
+    for body in bodies:
+        assert es.search("pages", body)["hits"].collect()
+    assert tables == []
+    assert not [f for f in footers if f.endswith("postings.parquet")]
+    assert "norm" not in columns and "*" not in columns
+    assert {"ids_bytes", "tf_bytes", "pos_bytes"} <= set(columns)
+
+
+def test_stats_counts_live_docs_without_a_job(spark, tmp_path):
+    """``Engine.stats`` takes the live count from the open segments: it
+    equals the live docs view after a bulk with updates, a delete and a
+    forcemerge, and the call runs no Spark job."""
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", _docs(spark, [(f"u{i}", f"common words {i}", "en") for i in range(8)]))
+    steps = [
+        lambda: es.bulk("ix", _docs(spark, [(f"u{i}", f"updated {i}", "en") for i in (1, 2, 9)])),
+        lambda: es.delete("ix", ["u4", "u9"]),
+        lambda: es.forcemerge("ix", **FULL_MERGE),
+    ]
+    for step in steps:
+        step()
+        want = es._docs_view("ix").count()
+        es.stats("ix")  # opens the new segments
+        got, n_jobs = _jobs(spark, lambda: es.stats("ix"))
+        assert n_jobs == 0
+        assert got["docs"]["count"] == want
+        assert got["segments"]["count"] == len(store.list_segs(es._dir("ix")))
+    assert want == 7
+
+
+def test_file_rows_across_row_groups(tmp_path):
+    """An open file reads chosen rows from several row groups, in order."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "rg.parquet")
+    pq.write_table(pa.table({"a": np.arange(20), "b": [str(i) for i in range(20)]}), path,
+                   row_group_size=3)
+    f = topk._File(path)
+    for rows in [[0, 1, 5, 6, 7, 19], [4], [], list(range(20))]:
+        got = f.rows(np.array(rows, dtype=np.int64), ["b", "a"])
+        assert got.column_names == ["b", "a"]
+        assert got["a"].to_pylist() == rows and got["b"].to_pylist() == [str(i) for i in rows]

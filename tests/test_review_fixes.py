@@ -400,6 +400,7 @@ def test_tombstones_range_sliced_and_reconciled(spark, tmp_path):
 
     from elasticsearch_spark.api import Engine
     from elasticsearch_spark.operators import ops as ops_mod
+    from elasticsearch_spark.operators.topk import Segment
     from elasticsearch_spark.sources import index_store as store
 
     eng = Engine(spark, root=str(tmp_path / "root"))
@@ -419,7 +420,7 @@ def test_tombstones_range_sliced_and_reconciled(spark, tmp_path):
     assert np.array_equal(sl, full[(full >= lo) & (full <= hi)])
     # per-segment slice ⊆ full and covers only that segment's range
     segs = store.list_segs(idx)
-    per_seg = [ops_mod.seg_tombstones(idx, store.seg_dir(idx, s)) for s in segs]
+    per_seg = [Segment(idx, s).tombstones for s in segs]
     assert set(np.concatenate(per_seg).tolist()) == set(full.tolist())
     # search still correct: only live docs
     hits = eng.search("dh", {"query": {"match": {"text": "common"}}, "size": 500})
