@@ -575,9 +575,9 @@ class IndexReader:
     def _segments(self) -> list[Segment]:
         """The committed segments, open; the missing ones are opened in
         parallel on the query-phase pool."""
-        missing = [s for s in self._ids.items() if s not in self._open]
+        missing = [s for s, i in self._ids.items() if (s, i) not in self._open]
         if missing:
-            _on_pool(self.spark, self.segment, [s for s, _ in missing])
+            _on_pool(self.spark, self.segment, missing)
         return [self.segment(s) for s in self._ids]
 
     def pin(self) -> "IndexReader":
@@ -978,7 +978,7 @@ def search_topk(
     return search_segments(reader, segs, fn, k, offset, (*(FETCH_FIELDS if fetch else ()), *fields))
 
 
-def search_term_docs(reader: IndexReader, terms, fields=()) -> DataFrame:
+def search_term_docs(reader: IndexReader, terms, fields) -> DataFrame:
     """Every live doc holding any of ``terms``, unscored, with its stored
     ``fields``: ``doc_id, *fields`` rows — the constant-score rewrite of a
     multi-term leaf (prefix, fuzzy), whose every doc scores the boost.

@@ -1,6 +1,7 @@
 """The Engine-owned IndexReader: an index search runs no Spark job, term
-stats and prefix expansions are lookups in the segments' term
-dictionaries, and a reader never outlives the commit it was opened on."""
+stats and prefix expansions are lookups in the open segments' block
+tables, each segment is opened once per reader, and a reader never
+outlives the commit it was opened on."""
 
 from __future__ import annotations
 
