@@ -25,7 +25,6 @@ view — the same split as the reference's query-then-fetch.
 
 from __future__ import annotations
 
-import copy
 import functools
 import heapq
 import itertools
@@ -33,6 +32,7 @@ import os
 import re
 import shutil
 import threading
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -144,27 +144,17 @@ def _fast_path_fields(kind: str, spec) -> set[str]:
     return set().union(*(_fast_path_fields(*next(iter(c.items()))) for c in subs))
 
 
-def _pinned(reader: IndexReader, segs) -> IndexReader:
-    """``reader`` over the pinned segment set ``segs`` (a PIT's), or
-    ``reader`` itself when ``segs`` is None."""
-    if segs is None:
-        return reader
-    pinned = copy.copy(reader)
-    pinned.segs = list(segs)
-    return pinned
-
-
 class _IndexText:
     """An Engine index's ``text`` field as ``dsl.SearchContext.index``: the
     index's analyzer, its postings BM25, df and term dictionary, its
     constant-score multi-term leaves (a doc-id union of the expanded
     terms) and its positional leaves (``Engine._index_hits``). A score
-    frame holds every matching live doc of ``segs`` (default: the
-    reader's), one row per doc, built on the driver with no Spark job."""
+    frame holds every matching live doc of the reader's segments, one row
+    per doc, built on the driver with no Spark job."""
 
-    def __init__(self, engine: "Engine", reader: IndexReader, segs=None):
+    def __init__(self, engine: "Engine", reader: IndexReader):
         self.engine = engine
-        self.reader = _pinned(reader, segs)
+        self.reader = reader
 
     def analyze(self, text: str) -> list[str]:
         return analysis.analyze(text, self.reader.meta.analyzer)
@@ -188,13 +178,13 @@ class _IndexText:
     def multi_term(self, kind: str, value: str, boost: float, fuzziness: int) -> DataFrame:
         if kind == "prefix":
             # the constant-score rewrite: every dictionary term of the prefix
-            terms = self.reader.prefix_terms(value, None)
+            hits = search_term_docs(self.reader, ("url",), prefix=value)
         else:
             # the top-terms rewrite: the 50 closest terms (max_expansions),
             # ties in term order
             near = self.reader.expand_terms(kind, value, None, fuzziness=fuzziness)
             terms = [t for _, t in heapq.nsmallest(50, zip(edit_distances(value, near, fuzziness), near))]
-        hits = search_term_docs(self.reader, terms, ("url",))
+            hits = search_term_docs(self.reader, ("url",), terms)
         return hits.select(F.col("url").alias("__key"), F.lit(float(boost)).alias("_score"))
 
     def positional(self, q: dict, boost: float) -> DataFrame:
@@ -250,17 +240,25 @@ class Engine:
 
     # ---- scroll cursors (``server/src/main/java/org/elasticsearch/search/
     # Scroll.java``, yaml suite ``rest-api-spec/.../scroll/10_basic.yml``):
-    # a scroll_id is a persisted cursor = pinned PIT segment set + the last
-    # page's sort tuple; each page re-runs the search over ONLY the pinned
-    # segments with keyset (search_after) continuation, so concurrent bulk
-    # writes land in NEW segments and never leak into an open scroll. -----
+    # a scroll_id is a persisted cursor = a snapshot of the index's docs and
+    # tombstone files + the last page's sort tuple; each page re-runs the
+    # search over ONLY the snapshot with keyset (search_after)
+    # continuation, so concurrent bulk writes land in NEW segments and
+    # never leak into an open scroll. -----
 
     def search_scroll(self, index: str, body: dict, scroll: str = "1m") -> dict:
         """GET /{index}/_search?scroll=...: open a cursor, return page 1.
         Response: {"_scroll_id", "hits": [Row...]} — pages are size-bounded
         (default 10), so the per-page collect is the reference's own
         response materialization, not a scale hazard."""
-        pit = self.open_pit(index, keep_alive=scroll)["id"]
+        concrete = self.resolve(index)
+        if len(concrete) != 1:
+            raise ValueError(f"search_scroll needs exactly one concrete index, got {concrete}")
+        ix = concrete[0]
+        d = self._dir(ix)
+        segs = store.list_segs(d)
+        if not segs:
+            raise ValueError(f"search_scroll: index has no segments: {ix}")
         base = dict(body)
         # _source is applied per PAGE (after the cursor reads its sort
         # values) — dsl.search's projection would drop non-envelope sort
@@ -307,24 +305,22 @@ class Engine:
             sort_fields.append("url")
             base["sort"] = sort
         sid = f"scroll~{next(self._seq)}"
-        ix = self._pits[pit][0]
-        # pin the tombstone set too: segments pin via the PIT, but later
-        # deletes/updates add tombstone batches and a merge swaps the set —
-        # hard-linked snapshot gives the cursor repeatable reads (ES scroll
-        # returns the snapshot-time view, Scroll.java keep-alive contract)
-        pin_dir = os.path.join(self._dir(ix), ".scroll", sid.replace("~", "_"))
-        pinned = ops_mod.pin_tombstones(self._dir(ix), pin_dir)
-        # and the pinned segments' docs files, so a merge that retires them
-        # leaves the cursor its pages
-        docs_paths = []
-        for s in self._pits[pit][1].segs:
-            docs_paths.append(os.path.join(pin_dir, f"docs_{s}.parquet"))
-            os.link(os.path.join(store.seg_dir(self._dir(ix), s), "docs.parquet"),
-                    docs_paths[-1])
+        # the cursor's one snapshot: the segments' docs files and the
+        # tombstone set, hard-linked now, give it repeatable reads — later
+        # bulks add segments, deletes add tombstone batches and a merge
+        # retires the linked files without touching their inodes (ES
+        # scroll returns the snapshot-time view, Scroll.java keep-alive
+        # contract). The directory's name is unique to this cursor, so
+        # Engines sharing a root, or a cursor left open by an earlier
+        # process, never collide.
+        pin_dir = os.path.join(d, ".scroll", uuid.uuid4().hex)
+        docs = ops_mod.pin_files(
+            [os.path.join(store.seg_dir(d, s), "docs.parquet") for s in segs], pin_dir, "docs")
         self._scrolls[sid] = {
-            "pit": pit, "index": ix, "body": base,
+            "index": ix, "body": base,
             "fields": sort_fields, "after": None, "src": src_spec,
-            "pin_dir": pin_dir, "pinned_tombs": pinned, "docs": docs_paths,
+            "pin_dir": pin_dir, "pinned_tombs": ops_mod.pin_tombstones(d, pin_dir),
+            "docs": docs,
         }
         return self.scroll(sid)
 
@@ -350,14 +346,10 @@ class Engine:
         return {"_scroll_id": scroll_id, "hits": rows}
 
     def clear_scroll(self, scroll_id: str) -> dict:
-        """DELETE /_search/scroll — drop the cursor, its pinned PIT, and
-        the pinned tombstone snapshot."""
+        """DELETE /_search/scroll — drop the cursor and its snapshot."""
         st = self._scrolls.pop(scroll_id, None)
         if st is not None:
-            self.close_pit(st["pit"])
-            import shutil
-
-            shutil.rmtree(st.get("pin_dir", ""), ignore_errors=True)
+            shutil.rmtree(st["pin_dir"], ignore_errors=True)
         return {"succeeded": st is not None}
 
     def _reader(self, index: str) -> IndexReader:
@@ -1320,7 +1312,7 @@ class Engine:
     def _docs_view(self, index: str) -> DataFrame:
         return ops_mod.live_docs(self.spark, self._dir(index))
 
-    def _index_hits(self, reader: IndexReader, q: dict, k: int, segs=None,
+    def _index_hits(self, reader: IndexReader, q: dict, k: int,
                     routing: str | None = None, offset: int = 0,
                     fields=(), fetch: bool = True) -> DataFrame | None:
         """The one index-leaf dispatcher: hits ``offset .. offset+k`` of the
@@ -1332,12 +1324,11 @@ class Engine:
         index's analyzer and scored by its postings BM25; the stored
         ``fields`` ride the fetch. ``fetch=False`` (a match set, which
         needs only its keys) fetches ``url`` alone where match would also
-        fetch ``lang`` and ``warc_ts``. ``segs`` pins the segment set the
-        way a PIT does; ``routing`` keeps one shard's segments."""
+        fetch ``lang`` and ``warc_ts``. ``routing`` keeps one shard's
+        segments."""
         (kind, spec), = q.items()
         if _fast_path_fields(kind, spec) != {"text"}:
             return None
-        reader = _pinned(reader, segs)
         opts = {"k": k, "routing": routing, "offset": offset, "fields": fields}
         if kind.startswith("span_"):
             from .operators.spans import search_spans
@@ -1367,11 +1358,12 @@ class Engine:
 
     def _text_index(self, index: str, segs=None) -> _IndexText | None:
         """``SearchContext.index`` over ``index``'s ``text`` field, pinned
-        to ``segs`` (default: the current segments); None when the index
-        has no meta yet (only the DSL can answer)."""
+        to ``segs`` (``IndexReader.pin``; default: the current segments);
+        None when the index has no meta yet (only the DSL can answer)."""
         if not os.path.exists(store.meta_path(self._dir(index))):
             return None
-        return _IndexText(self, self._reader(index), segs)
+        reader = self._reader(index)
+        return _IndexText(self, reader if segs is None else reader.pin(segs))
 
     def _context(self, index: str, docs: DataFrame, segs=None) -> dsl.SearchContext:
         """The query context over ``docs``, a view of ``index``'s live docs:
@@ -2786,7 +2778,7 @@ class Engine:
             if len(concrete) != 1:
                 return None
             d = self._dir(concrete[0])
-            segs = store.list_segs(d)
+            segs = self._reader(concrete[0]).segs
             if len(segs) < 2:
                 return None
             total = len(segs)
@@ -3004,12 +2996,16 @@ class Engine:
         """GET /{index}/_stats (docs + store + segments subset): live doc
         count, segment count, and on-disk store bytes — read from the open
         reader's segments (each one's doc ids minus its tombstone slice,
-        like _count) with no Spark job."""
+        like _count) with no Spark job. The store bytes leave out the
+        scroll snapshots (``.scroll``), hard links to files counted once
+        already or to files a merge retired."""
         d = self._dir(index)
         reader = self._reader(index)
         live = reader.live_count()
         store_bytes = 0
-        for base, _, files in os.walk(d):
+        for base, dirs, files in os.walk(d):
+            if base == d and ".scroll" in dirs:
+                dirs.remove(".scroll")
             store_bytes += sum(
                 os.path.getsize(os.path.join(base, fn)) for fn in files
             )

@@ -132,24 +132,30 @@ def mask_tombstones(spark: SparkSession, index_dir: str, docs: DataFrame) -> Dat
     return docs if tdf is None else docs.join(tdf, "doc_id", "left_anti")
 
 
-def pin_tombstones(index_dir: str, dest_dir: str) -> list[str]:
-    """Snapshot the CURRENT tombstone set for a cursor (scroll isolation):
-    hard-link every live tombstone file into ``dest_dir``. Writers only
-    append NEW batch files or swap in a whole new batch dir, never rewrite
-    a file, so the linked inodes stay frozen — content-pinning at zero
-    copy cost, independent of delete count. Returns the pinned paths."""
+def pin_files(paths: list[str], dest_dir: str, prefix: str) -> list[str]:
+    """Snapshot files for a cursor (scroll isolation): hard-link each of
+    ``paths`` into ``dest_dir`` as ``{prefix}_{i:04d}.parquet``, or copy it
+    where no link can be made (another file system). Writers never rewrite
+    a segment or tombstone file in place — they add new files or swap in
+    whole directories — so the linked inodes stay frozen: content pinning
+    at zero copy cost. Returns the pinned paths."""
+    import shutil
+
     os.makedirs(dest_dir, exist_ok=True)
     pinned = []
-    for i, src in enumerate(_tomb_paths(index_dir)):
-        dst = os.path.join(dest_dir, f"pin_{i:04d}.parquet")
+    for i, src in enumerate(paths):
+        dst = os.path.join(dest_dir, f"{prefix}_{i:04d}.parquet")
         try:
             os.link(src, dst)
-        except OSError:  # cross-device fallback
-            import shutil
-
+        except OSError:
             shutil.copy2(src, dst)
         pinned.append(dst)
     return pinned
+
+
+def pin_tombstones(index_dir: str, dest_dir: str) -> list[str]:
+    """The CURRENT tombstone set, pinned into ``dest_dir`` (``pin_files``)."""
+    return pin_files(_tomb_paths(index_dir), dest_dir, "tomb")
 
 
 def mask_tombstones_pinned(

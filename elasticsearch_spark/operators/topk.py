@@ -203,13 +203,14 @@ class Segment:
     def _block_rows(self, terms) -> np.ndarray:
         """The block-table rows of ``terms``' blocks, in term order."""
         t = self.blocks["term"]
-        q = sorted(set(terms))
-        if len(q) * 8 > len(t):
-            # a large expansion (a prefix): one hash pass over the table
-            # beats this many binary searches of Python strings
-            return np.flatnonzero(pd.Series(t).isin(q).to_numpy())
-        q = np.array(q, dtype=object)
+        q = np.array(sorted(set(terms)), dtype=object)
         return _ranges(np.searchsorted(t, q), np.searchsorted(t, q, side="right"))
+
+    def _range_rows(self, start: str, end: str | None) -> np.ndarray:
+        """The block-table rows of the terms in ``[start, end)`` (None: no
+        upper bound): one run of the term-sorted table."""
+        t = self.blocks["term"]
+        return np.arange(np.searchsorted(t, start), len(t) if end is None else np.searchsorted(t, end))
 
     def postings(self, terms, positions: bool = False) -> pd.DataFrame:
         """The postings blocks of ``terms``, in term order: the block
@@ -227,10 +228,12 @@ class Segment:
         """``term_positions`` of the postings of ``terms``."""
         return term_positions(self.postings(terms, positions=True))
 
-    def term_docs(self, terms) -> np.ndarray:
-        """The sorted union of ``terms``' doc ids, read from their blocks'
-        ``ids_bytes`` alone (deleted docs too)."""
-        rows = self._block_rows(terms)
+    def term_docs(self, terms=(), prefix: str | None = None) -> np.ndarray:
+        """The sorted union of the doc ids of ``terms``, or of every term
+        that starts with ``prefix``, read from their blocks' ``ids_bytes``
+        alone (deleted docs too)."""
+        rows = self._block_rows(terms) if prefix is None else \
+            self._range_rows(prefix, _prefix_end(prefix))
         ids = self._postings.rows(rows, ["ids_bytes"])["ids_bytes"]
         b = self.blocks
         return np.unique(decode_ids(b["first_doc_id"][rows], b["n"][rows],
@@ -246,14 +249,13 @@ class Segment:
     def dictionary(self, start: str = "", end: str | None = None):
         """The segment's term dictionary in ``[start, end)`` (None: no upper
         bound): (sorted distinct terms, df, cf)."""
-        t = self.blocks["term"]
-        a, z = np.searchsorted(t, start), len(t) if end is None else np.searchsorted(t, end)
-        t = t[a:z]
+        rows = self._range_rows(start, end)
+        t = self.blocks["term"][rows]
         if not len(t):
             return t, np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
         first = np.flatnonzero(np.r_[True, t[1:] != t[:-1]])
-        return (t[first], np.add.reduceat(self.blocks["n"][a:z].astype(np.int64), first),
-                np.add.reduceat(self.blocks["sum_tf"][a:z].astype(np.int64), first))
+        return (t[first], np.add.reduceat(self.blocks["n"][rows].astype(np.int64), first),
+                np.add.reduceat(self.blocks["sum_tf"][rows].astype(np.int64), first))
 
     @property
     def tombstones(self) -> np.ndarray:
@@ -492,7 +494,7 @@ def _bm25_segment(
         allowed = seg.allowed
         outs = []
         for qid, (terms, msm, mode) in per_q.items():
-            post_q = post if len(per_q) == 1 else post[post["term"].isin(terms)]
+            post_q = post[post["term"].isin(terms)]
             if len(post_q) == 0:
                 continue
             if mode == "wand" and msm <= 1:
@@ -580,14 +582,22 @@ class IndexReader:
             _on_pool(self.spark, self.segment, missing)
         return [self.segment(s) for s in self._ids]
 
-    def pin(self) -> "IndexReader":
-        """A point in time over this reader's commit: every segment open
-        now, its live-doc mask frozen as of now. The view sees no later
-        write or delete, and it outlives a merge that retires its segments,
-        whose files it holds open."""
+    def pin(self, segs=None) -> "IndexReader":
+        """A point in time over ``segs`` of this reader's commit (None:
+        all): each segment open now, its live-doc mask frozen as of now.
+        The view sees no later write or delete, and it outlives a merge
+        that retires its segments, whose files it holds open. A point in
+        time pins the whole commit; an async search's partial reduce pins
+        the segments it has reduced."""
         pinned = copy.copy(self)
-        pinned._open = {(s, self._ids[s]): seg.frozen()
-                        for s, seg in zip(self._ids, self._segments())}
+        if segs is not None:
+            keep = set(segs)
+            pinned.segs = [s for s in self.segs if s in keep]
+            pinned._ids = {s: i for s, i in self._ids.items() if s in keep}
+        # the opens land in this reader's shared state; the copy holds its
+        # own frozen segments
+        pinned._open = {(s, i): seg.frozen()
+                        for (s, i), seg in zip(pinned._ids.items(), pinned._segments())}
         pinned._opening = {}
         return pinned
 
@@ -620,8 +630,7 @@ class IndexReader:
         """The first ``max_expansions`` dictionary terms (term order)
         starting with ``prefix``: the rewrite of a prefix leaf
         (match_phrase_prefix, intervals ``prefix``, span_multi ``prefix``;
-        None: every such term, the constant-score rewrite of
-        match_bool_prefix's last term). Each segment contributes at most
+        None: every such term). Each segment contributes at most
         ``max_expansions`` terms of its range, so even an empty prefix
         holds O(segments · max_expansions) terms."""
         return _first_distinct((run[:max_expansions] for run in self._runs(prefix)), max_expansions)
@@ -978,17 +987,20 @@ def search_topk(
     return search_segments(reader, segs, fn, k, offset, (*(FETCH_FIELDS if fetch else ()), *fields))
 
 
-def search_term_docs(reader: IndexReader, terms, fields) -> DataFrame:
-    """Every live doc holding any of ``terms``, unscored, with its stored
-    ``fields``: ``doc_id, *fields`` rows — the constant-score rewrite of a
-    multi-term leaf (prefix, fuzzy), whose every doc scores the boost.
-    Each segment reads only the terms' ``ids_bytes`` rows and subtracts its
-    tombstones; no norm is read and nothing is scored. No Spark job."""
+def search_term_docs(reader: IndexReader, fields, terms=(), prefix: str | None = None) -> DataFrame:
+    """Every live doc holding any of ``terms`` — or, given ``prefix``, any
+    term that starts with it — unscored, with its stored ``fields``:
+    ``doc_id, *fields`` rows. The constant-score rewrite of a multi-term
+    leaf (prefix, fuzzy), whose every doc scores the boost. Each segment
+    reads only the ``ids_bytes`` of the terms' block rows (a prefix's are
+    one run of its term-sorted block table) and subtracts its tombstones;
+    no norm is read and nothing is scored. No Spark job."""
     def per_segment(seg: Segment) -> pd.DataFrame | None:
-        ids = seg.live(seg.term_docs(terms))
+        ids = seg.live(seg.term_docs(terms, prefix))
         return pd.DataFrame({"doc_id": ids}) if len(ids) else None
 
-    hits = query_phase(reader, query_segments(reader) if len(terms) else [], per_segment)
+    segs = query_segments(reader) if prefix is not None or len(terms) else []
+    hits = query_phase(reader, segs, per_segment)
     return _fetch_frame(reader, hits, fields, StructType([CAND_SCHEMA["doc_id"]]))
 
 

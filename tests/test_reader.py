@@ -531,6 +531,80 @@ def test_pit_and_scroll_outlive_a_merge(spark, tmp_path):
     assert es.close_pit(pit)["succeeded"] and es.clear_scroll(sid)["succeeded"]
 
 
+def _scroll_urls(es, body):
+    """(scroll id, every url the cursor pages through, sorted)."""
+    page = es.search_scroll("ix", body)
+    sid, urls = page["_scroll_id"], []
+    while page["hits"]:
+        urls += [r["url"] for r in page["hits"]]
+        page = es.scroll(sid)
+    return sid, sorted(urls)
+
+
+def test_scroll_snapshots_never_collide(spark, tmp_path):
+    """Each scroll cursor snapshots into its own directory: two Engines on
+    one root scroll an index side by side, and a cursor an earlier Engine
+    left open (its snapshot still on disk, as after a crash) does not stop
+    a later Engine's first scroll. Clearing a cursor removes its snapshot
+    alone, and no snapshot counts in the store size."""
+    root = str(tmp_path)
+    first = Engine(spark, root=root)
+    first.create_index("ix", num_partitions=2)
+    first.bulk("ix", _docs(spark, [(f"u{i:02d}", f"common words {i}", "en") for i in range(12)]))
+    first.delete("ix", ["u00"])  # a tombstone file to pin as well
+    size = first.stats("ix")["store"]["size_in_bytes"]
+    body = {"query": {"match": {"text": "common"}}, "size": 5}
+    want = [f"u{i:02d}" for i in range(1, 12)]
+    snapshots = os.path.join(first._dir("ix"), ".scroll")
+
+    _, got = _scroll_urls(first, body)  # left open
+    assert got == want
+    second = Engine(spark, root=root)
+    sid, got = _scroll_urls(second, body)
+    assert got == want
+    del first
+    later = Engine(spark, root=root)
+    _, got = _scroll_urls(later, body)
+    assert got == want
+    assert len(os.listdir(snapshots)) == 3
+    assert later.stats("ix")["store"]["size_in_bytes"] == size
+
+    assert second.clear_scroll(sid)["succeeded"]
+    assert len(os.listdir(snapshots)) == 2
+
+
+def test_partial_reduce_pins_its_segments(spark, tmp_path):
+    """An async search's partial reduce answers a text leaf from the first
+    half of the segments alone (``IndexReader.pin(segs)``), and leaves the
+    Engine's reader over every segment."""
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    for b in range(2):
+        es.bulk("ix", _docs(spark, [(f"b{b}u{i}", f"common words {i}", "en") for i in range(5)]))
+    reader = es._reader("ix")
+    segs = list(reader.segs)
+    half = segs[:len(segs) // 2]
+    want = {u for s in half for u in reader.segment(s).fetch(reader.segment(s).doc_ids, ["url"])["url"]}
+    assert 0 < len(want) < 10
+    snap = es._partial_reduce("ix", {"query": {"match": {"text": "common"}}, "size": 50,
+                                     "aggs": {"l": {"terms": {"field": "lang"}}}})
+    assert {r["url"] for r in snap["hits"]} == want
+    assert [r["doc_count"] for r in snap["aggregations"]["l"]] == [len(want)]
+    assert es._reader("ix").segs == segs
+    assert len(_ranked(es, {"query": {"match": {"text": "common"}}, "size": 50})) == 10
+
+
+def test_prefix_docs_read_one_run_of_blocks(es):
+    """A prefix leaf's docs, read as one row range of each segment's block
+    table, are the docs of the prefix's dictionary terms."""
+    reader = es._reader("pages")
+    for seg in reader._segments():
+        vocab = np.unique(seg.blocks["term"])
+        for p in ["", "t", "th", "the", "w0", "of", OOV, "\U0010ffff"]:
+            terms = [t for t in vocab if t.startswith(p)]
+            assert np.array_equal(seg.term_docs(prefix=p), seg.term_docs(terms)), p
+
+
 def test_warm_searches_read_only_postings_bytes(es, monkeypatch):
     """After one warm-up, a repeated match and match_phrase read no parquet
     file through ``read_table``, open no postings.parquet footer and read
