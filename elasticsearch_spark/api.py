@@ -28,12 +28,16 @@ from __future__ import annotations
 import functools
 import heapq
 import itertools
+import json
 import os
 import re
 import shutil
 import threading
+import time
 import uuid
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -202,126 +206,168 @@ def _tpl_get(params: dict, dotted: str):
     return cur
 
 
+class _Pin(NamedTuple):
+    """An open pin (``Engine._pin``); ``keep_alive`` in seconds."""
+
+    index: str
+    reader: IndexReader
+    dir: str
+    docs: list[str]
+    keep_alive: float
+
+
+def _pin_dirs(index_dir: str) -> list[str]:
+    root = os.path.join(index_dir, "pins")
+    return [os.path.join(root, n) for n in os.listdir(root)] if os.path.isdir(root) else []
+
+
+def _expiry(pin_dir: str) -> float:
+    """A pin's expiry (epoch seconds) from its ``pin.json``. A pin with none
+    is being opened, or was left half-open by a crash: it lapses a minute
+    after its directory last changed; a reaped one has lapsed."""
+    try:
+        with open(os.path.join(pin_dir, "pin.json")) as f:
+            return json.load(f)["expires"]
+    except (OSError, ValueError):
+        try:
+            return os.path.getmtime(pin_dir) + 60.0
+        except OSError:
+            return 0.0
+
+
+def _store_files(index_dir: str):
+    """The index's files, less ``pins/`` (hard links to files counted once
+    already, or to files a merge retired)."""
+    for base, dirs, files in os.walk(index_dir):
+        if base == index_dir and "pins" in dirs:
+            dirs.remove("pins")
+        yield from (os.path.join(base, fn) for fn in files)
+
+
+def _renew(pin_dir: str, keep_alive: float) -> None:
+    """Set a pin's expiry to ``keep_alive`` seconds from now (``pin.json``
+    replaced whole, so a reader never sees half of it)."""
+    tmp = os.path.join(pin_dir, f".{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump({"expires": time.time() + keep_alive}, f)
+    os.replace(tmp, os.path.join(pin_dir, "pin.json"))
+
+
 class Engine:
     def __init__(self, spark: SparkSession, root: str = "/tmp/es_spark_indices"):
         self.spark = spark
         self.root = root
-        self._pits: dict[str, tuple[str, IndexReader]] = {}
-        self._scrolls: dict[str, dict] = {}  # scroll_id → pinned cursor state
-        self._seq = itertools.count(1)  # monotonic ids (PITs, ad-hoc names)
+        self._pits: dict[str, _Pin] = {}  # pin id → open pin (PITs, scrolls)
+        self._scrolls: dict[str, dict] = {}  # pin id → scroll cursor state
+        self._seq = itertools.count(1)  # monotonic ids (ad-hoc names)
         self._readers: dict[str, IndexReader] = {}  # index dir → open reader
         self._readers_lock = threading.Lock()
         os.makedirs(root, exist_ok=True)
         self._load_stored_scripts()  # re-register {"id": ...} script refs
         self._apply_cluster_settings(self.get_cluster_settings())
 
-    # ---- point-in-time readers ---------------------------------------------
+    # ---- pins: point in time, scroll and the async partial reduce ---------
 
-    def open_pit(self, index: str, keep_alive: str = "1m") -> dict:
-        """POST /{index}/_pit: pin the CURRENT reader (``IndexReader.pin``):
-        its segments held open, their live-doc masks frozen. A search
-        carrying this id sees no document added, updated or deleted after
-        the PIT opened, also after a forcemerge retired the pinned
-        segments — the reference's PointInTimeBuilder holding its reader.
-        keep_alive is accepted for API parity; expiry is the caller's
-        concern (``close_pit`` releases the files)."""
+    def _pin(self, index: str, segs=None, keep_alive="1m") -> str:
+        """Pin ``segs`` (None: all) of one index as of now — the
+        reference's ``ReaderContext`` — and return its id, which a search
+        body names as ``{"pit": {"id": ...}}``. Beside ``IndexReader.pin``,
+        ``<index>/pins/<id>/`` holds hard links of the pinned docs files and
+        one tombstone file of the reader's frozen masks, so a Spark plan
+        sees the reader's live set, also after a merge; and ``pin.json``."""
         concrete = self.resolve(index)
         if len(concrete) != 1:
-            raise ValueError(f"open_pit needs exactly one concrete index, got {concrete}")
-        if not store.list_segs(self._dir(concrete[0])):
-            raise ValueError(f"open_pit: index has no segments: {concrete[0]}")
-        reader = self._reader(concrete[0])
-        pid = f"pit~{concrete[0]}~{next(self._seq)}"
-        self._pits[pid] = (concrete[0], reader.pin())
-        return {"id": pid, "keep_alive": keep_alive}
+            raise ValueError(f"a pin needs exactly one concrete index, got {concrete}")
+        d = self._dir(concrete[0])
+        self._reap_pins(d)
+        reader = self._reader(concrete[0]).pin(segs)
+        if not reader.segs:
+            raise ValueError(f"index has no segments: {concrete[0]}")
+        pid = uuid.uuid4().hex
+        pin_dir = os.path.join(d, "pins", pid)
+        os.makedirs(pin_dir)
+        alive = self._ilm_age(keep_alive)
+        _renew(pin_dir, alive)
+        docs = ops_mod.pin_files([os.path.join(store.seg_dir(d, s), "docs.parquet")
+                                  for s in reader.segs], pin_dir)
+        ops_mod.write_tombstones(os.path.join(pin_dir, "tombstones.parquet"), np.concatenate(
+            [reader.segment(s).tombstones for s in reader.segs]))
+        self._pits[pid] = _Pin(concrete[0], reader, pin_dir, docs, alive)
+        return pid
+
+    def _use(self, pid: str) -> _Pin:
+        """The open pin ``pid``, its expiry renewed by its keep_alive; a
+        lapsed pin is released and refused."""
+        pin = self._pits.get(pid)
+        if pin is None or _expiry(pin.dir) < time.time():
+            self._release(pid)
+            raise ValueError(f"point in time {pid} is unknown, closed or lapsed "
+                             "(unused past its keep_alive)")
+        _renew(pin.dir, pin.keep_alive)
+        return pin
+
+    def _release(self, pid: str) -> bool:
+        """Close pin ``pid`` and its scroll cursor; False when unknown."""
+        pin = self._pits.pop(pid, None)
+        self._scrolls.pop(pid, None)
+        if pin is not None:
+            shutil.rmtree(pin.dir, ignore_errors=True)
+        return pin is not None
+
+    def _reap_pins(self, index_dir: str) -> None:
+        """Remove the lapsed pins of an index, whichever Engine opened them
+        (also one dropped with its pins open)."""
+        now = time.time()
+        for pin_dir in _pin_dirs(index_dir):
+            if _expiry(pin_dir) < now:
+                shutil.rmtree(pin_dir, ignore_errors=True)
+        for pid in [p for p, pin in list(self._pits.items()) if not os.path.isdir(pin.dir)]:
+            self._release(pid)
+
+    def open_pit(self, index: str, keep_alive: str = "1m") -> dict:
+        """POST /{index}/_pit: pin the index (``_pin``). ``keep_alive`` is
+        honoured: each search renews it; a PIT unused for longer is
+        refused, and reaped at the next pin open or forcemerge."""
+        return {"id": self._pin(index, keep_alive=keep_alive), "keep_alive": keep_alive}
 
     def close_pit(self, pit_id: str) -> dict:
-        return {"succeeded": self._pits.pop(pit_id, None) is not None}
+        return {"succeeded": self._release(pit_id)}
 
-    # ---- scroll cursors (``server/src/main/java/org/elasticsearch/search/
-    # Scroll.java``, yaml suite ``rest-api-spec/.../scroll/10_basic.yml``):
-    # a scroll_id is a persisted cursor = a snapshot of the index's docs and
-    # tombstone files + the last page's sort tuple; each page re-runs the
-    # search over ONLY the snapshot with keyset (search_after)
-    # continuation, so concurrent bulk writes land in NEW segments and
-    # never leak into an open scroll. -----
+    # ---- scroll cursors (``search/Scroll.java``, ``scroll/10_basic.yml``):
+    # a pin plus the last page's sort tuple; each page is the search over
+    # the pin with keyset (search_after) continuation. -----
 
     def search_scroll(self, index: str, body: dict, scroll: str = "1m") -> dict:
         """GET /{index}/_search?scroll=...: open a cursor, return page 1.
         Response: {"_scroll_id", "hits": [Row...]} — pages are size-bounded
         (default 10), so the per-page collect is the reference's own
-        response materialization, not a scale hazard."""
-        concrete = self.resolve(index)
-        if len(concrete) != 1:
-            raise ValueError(f"search_scroll needs exactly one concrete index, got {concrete}")
-        ix = concrete[0]
-        d = self._dir(ix)
-        segs = store.list_segs(d)
-        if not segs:
-            raise ValueError(f"search_scroll: index has no segments: {ix}")
+        response materialization, not a scale hazard. ``scroll`` is the
+        cursor's keep_alive, honoured as ``open_pit``'s."""
         base = dict(body)
         # _source is applied per PAGE (after the cursor reads its sort
-        # values) — dsl.search's projection would drop non-envelope sort
+        # values) — the search's projection would drop non-envelope sort
         # columns and break keyset continuation
         src_spec = base.pop("_source", None)
-        sort = base.get("sort") or [{"_doc": "asc"}]
-
-        # _doc order ≈ the stable doc key (url) in this engine; _shard_doc
-        # (the PIT tiebreaker) maps the same way. Exact-name match only: a
-        # FIELD named n_docs must not be rewritten
-        def _is_doc(s):
-            return s in ("_doc", "_shard_doc") if isinstance(s, str) else \
-                isinstance(s, dict) and ("_doc" in s or "_shard_doc" in s)
-
-        def _doc_dir(s):
-            # keep the requested direction when rewriting to the doc key
-            if isinstance(s, dict):
-                sd = s.get("_doc", s.get("_shard_doc"))
-                d = sd.get("order", "asc") if isinstance(sd, dict) else sd
-                return {"url": d or "asc"}
-            return {"url": "asc"}
-
-        # ES parses each key of a multi-key sort object as its own sort —
-        # flatten first so the _doc rewrite can't swallow sibling fields
-        flat = []
-        for s in sort:
-            if isinstance(s, dict) and len(s) > 1:
-                flat.extend({k: v} for k, v in s.items())
-            else:
-                flat.append(s)
-        sort = [_doc_dir(s) if _is_doc(s) else s for s in flat]
-        base["sort"] = sort
-        sort_fields = []
-        for s in sort:
-            if isinstance(s, str):
-                sort_fields.append("url" if s == "_doc" else s)
-            else:
-                (sf, _), = s.items()
-                sort_fields.append(sf)
+        # ES parses each key of a multi-key sort object as its own sort.
+        # _doc order ≈ the stable doc key (url) in this engine, in the
+        # requested direction; _shard_doc (the PIT tiebreaker) maps the
+        # same way. Exact-name match only: a FIELD named n_docs keeps its name
+        sort = []
+        for s in base.get("sort") or ["_doc"]:
+            for f, spec in s.items() if isinstance(s, dict) else [(s, None)]:
+                if f in ("_doc", "_shard_doc"):
+                    spec = spec.get("order") if isinstance(spec, dict) else spec
+                    f, spec = "url", spec or "asc"
+                sort.append(f if spec is None else {f: spec})
+        sort_fields = [s if isinstance(s, str) else next(iter(s)) for s in sort]
         if "url" not in sort_fields:
             # tie-break on the doc key so keyset pagination never stalls on
             # duplicate sort values (FieldSortBuilder's implicit shard-doc)
-            sort = sort + [{"url": "asc"}]
+            sort.append({"url": "asc"})
             sort_fields.append("url")
-            base["sort"] = sort
-        sid = f"scroll~{next(self._seq)}"
-        # the cursor's one snapshot: the segments' docs files and the
-        # tombstone set, hard-linked now, give it repeatable reads — later
-        # bulks add segments, deletes add tombstone batches and a merge
-        # retires the linked files without touching their inodes (ES
-        # scroll returns the snapshot-time view, Scroll.java keep-alive
-        # contract). The directory's name is unique to this cursor, so
-        # Engines sharing a root, or a cursor left open by an earlier
-        # process, never collide.
-        pin_dir = os.path.join(d, ".scroll", uuid.uuid4().hex)
-        docs = ops_mod.pin_files(
-            [os.path.join(store.seg_dir(d, s), "docs.parquet") for s in segs], pin_dir, "docs")
-        self._scrolls[sid] = {
-            "index": ix, "body": base,
-            "fields": sort_fields, "after": None, "src": src_spec,
-            "pin_dir": pin_dir, "pinned_tombs": ops_mod.pin_tombstones(d, pin_dir),
-            "docs": docs,
-        }
+        base["sort"] = sort
+        sid = self._pin(index, keep_alive=scroll)
+        self._scrolls[sid] = {"body": base, "fields": sort_fields, "after": None, "src": src_spec}
         return self.scroll(sid)
 
     def scroll(self, scroll_id: str) -> dict:
@@ -329,12 +375,10 @@ class Engine:
         st = self._scrolls.get(scroll_id)
         if st is None:
             raise ValueError(f"unknown or cleared scroll id: {scroll_id}")
-        view = ops_mod.mask_tombstones_pinned(
-            self.spark, st["pinned_tombs"], self.spark.read.parquet(*st["docs"]))
-        body = dict(st["body"])
+        body = {**st["body"], "pit": {"id": scroll_id}}
         if st["after"] is not None:
             body["search_after"] = st["after"]
-        hits = dsl.search(self.spark, view, body, key="url", text_col="text")
+        hits = self._search_impl(self._pits[scroll_id].index, body)["hits"]
         if st.get("src") is not None:
             # sort fields ride the envelope (ES returns them per hit) so the
             # cursor can read them even when _source drops the columns
@@ -346,11 +390,8 @@ class Engine:
         return {"_scroll_id": scroll_id, "hits": rows}
 
     def clear_scroll(self, scroll_id: str) -> dict:
-        """DELETE /_search/scroll — drop the cursor and its snapshot."""
-        st = self._scrolls.pop(scroll_id, None)
-        if st is not None:
-            shutil.rmtree(st["pin_dir"], ignore_errors=True)
-        return {"succeeded": st is not None}
+        """DELETE /_search/scroll — drop the cursor and its pin."""
+        return {"succeeded": scroll_id in self._scrolls and self._release(scroll_id)}
 
     def _reader(self, index: str) -> IndexReader:
         """The open reader of a concrete index, kept across searches and
@@ -821,17 +862,14 @@ class Engine:
         if os.path.exists(dst):
             raise ValueError(f"snapshot {snapshot} already exists for {index}")
         n_files = 0
-        for dirpath, _, files in os.walk(src):
-            rel = os.path.relpath(dirpath, src)
-            os.makedirs(os.path.join(dst, rel), exist_ok=True)
-            for fname in files:
-                s = os.path.join(dirpath, fname)
-                d = os.path.join(dst, rel, fname)
-                try:
-                    os.link(s, d)  # hard link: incremental, O(1) space
-                except OSError:
-                    shutil.copy2(s, d)
-                n_files += 1
+        for s in _store_files(src):
+            d = os.path.join(dst, os.path.relpath(s, src))
+            os.makedirs(os.path.dirname(d), exist_ok=True)
+            try:
+                os.link(s, d)  # hard link: incremental, O(1) space
+            except OSError:
+                shutil.copy2(s, d)
+            n_files += 1
         with open(os.path.join(repo_dir, snapshot, f"{index}.snapshot.json"), "w") as f:
             json.dump({"index": index, "files": n_files, "state": "SUCCESS"}, f)
         return {"snapshot": snapshot, "index": index, "files": n_files, "state": "SUCCESS"}
@@ -1093,7 +1131,9 @@ class Engine:
         return ops_mod.apply_ops(self.spark, self._dir(index), ops_df)
 
     def forcemerge(self, index: str, **kw) -> dict:
-        """POST /{index}/_forcemerge — tiered compaction + delete expunge."""
+        """POST /{index}/_forcemerge — tiered compaction + delete expunge;
+        first reaps the index's lapsed pins (``_reap_pins``)."""
+        self._reap_pins(self._dir(index))
         return merge_index(self.spark, self._dir(index), **kw)
 
     # ---- index lifecycle management (x-pack/plugin/ilm) --------------------
@@ -1309,8 +1349,13 @@ class Engine:
 
     # ---- search -----------------------------------------------------------
 
-    def _docs_view(self, index: str) -> DataFrame:
-        return ops_mod.live_docs(self.spark, self._dir(index))
+    def _docs_view(self, index: str, pin: _Pin | None = None) -> DataFrame:
+        """The live docs of ``index``, or of ``pin``: its docs files less
+        its one tombstone file."""
+        if pin is None:
+            return ops_mod.live_docs(self.spark, self._dir(index))
+        return ops_mod.mask_tombstones(self.spark, self.spark.read.parquet(*pin.docs),
+                                       [os.path.join(pin.dir, "tombstones.parquet")])
 
     def _index_hits(self, reader: IndexReader, q: dict, k: int,
                     routing: str | None = None, offset: int = 0,
@@ -1356,38 +1401,40 @@ class Engine:
         fn = search_phrase if kind == "match_phrase" else search_phrase_prefix
         return fn(reader, qspec["query"], slop=qspec.get("slop", 0), **opts)
 
-    def _text_index(self, index: str, segs=None) -> _IndexText | None:
-        """``SearchContext.index`` over ``index``'s ``text`` field, pinned
-        to ``segs`` (``IndexReader.pin``; default: the current segments);
-        None when the index has no meta yet (only the DSL can answer)."""
+    def _text_index(self, index: str, pin: _Pin | None = None) -> _IndexText | None:
+        """``SearchContext.index`` over ``index``'s ``text`` field, read
+        through ``pin``'s reader or the Engine's open one; None when the
+        index has no meta yet (only the DSL can answer)."""
+        if pin is not None:
+            return _IndexText(self, pin.reader)
         if not os.path.exists(store.meta_path(self._dir(index))):
             return None
-        reader = self._reader(index)
-        return _IndexText(self, reader if segs is None else reader.pin(segs))
+        return _IndexText(self, self._reader(index))
 
-    def _context(self, index: str, docs: DataFrame, segs=None) -> dsl.SearchContext:
-        """The query context over ``docs``, a view of ``index``'s live docs:
-        key ``url``, the index's keyword normalizers and its text field."""
+    def _context(self, index: str, docs: DataFrame, pin: _Pin | None = None) -> dsl.SearchContext:
+        """The query context over ``docs``, a view of ``index``'s live docs
+        (or ``pin``'s): key ``url``, the index's keyword normalizers and its
+        text field."""
         return dsl.SearchContext(docs, "url", text_col="text",
                                  kw_norm=self._kw_normalizers(index),
-                                 index=self._text_index(index, segs))
+                                 index=self._text_index(index, pin))
 
     def _matching(self, index: str, query: dict | None, docs: DataFrame | None = None,
-                  segs=None) -> DataFrame:
-        """The rows of ``docs`` (default: the live docs view) that ``query``
-        matches — the one answer to "which docs does this query match" for
-        count and track_total_hits, aggs, validate_query, the async partial
-        reduce, delete/update-by-query, reindex, datafeeds and vector tiles.
+                  pin: _Pin | None = None) -> DataFrame:
+        """The rows of ``docs`` (default: the live docs view, or ``pin``'s)
+        that ``query`` matches — the one answer to "which docs does this
+        query match" for count and track_total_hits, aggs, validate_query,
+        delete/update-by-query, reindex, datafeeds and vector tiles.
         A search's hits agree with it: text leaves on the index's ``text``
         field take their terms, df and scores from the index
         (``_IndexText``), computed by the driver-side query phase; every
         other clause compiles to a predicate over ``docs``. A query with no
         predicate (a scoring-only node, or a compound holding an index
         leaf) is a semi-join on its frame's keys (``dsl.matching``)."""
-        docs = self._docs_view(index) if docs is None else docs
+        docs = self._docs_view(index, pin) if docs is None else docs
         if not query or "match_all" in query:
             return docs
-        return dsl.matching(dsl.parse(query), self._context(index, docs, segs))
+        return dsl.matching(dsl.parse(query), self._context(index, docs, pin))
 
     # ----- query rules (x-pack/plugin/ent-search rules API) -----
 
@@ -1498,26 +1545,18 @@ class Engine:
         BM25, df, term dictionary and this dispatcher), so wrapping a query
         in ``bool`` keeps its matches and scores. ``aggs`` and
         ``track_total_hits`` count the docs ``_matching`` selects — the
-        docs the hits come from.
+        docs the hits come from. A body naming a pin (``{"pit": {"id":
+        ...}}``: a PIT search, a scroll page, the partial reduce) takes the
+        reader, the docs view and the context of every path from the pin.
 
         ``index`` may be an alias: multi-index aliases fan out through
         ``search_multi`` (cross-index semantics)."""
-        pit_reader = None
+        pin = None
         if "pit" in body:
-            # a PIT id names both the index and the pinned segment set —
-            # the reference's search-with-pit drops the URL index the same way
-            pid = body["pit"]["id"]
-            if pid not in self._pits:
-                raise ValueError(f"unknown or closed PIT id: {pid}")
-            index, pit_reader = self._pits[pid]
-            (kind0, _), = body.get("query", {"match_all": {}}).items()
-            if kind0 != "match" or "sort" in body or "aggs" in body:
-                # only the index fast path threads the pinned segment set;
-                # refuse loudly rather than silently reading the live view
-                raise ValueError(
-                    "PIT searches support only a top-level match query "
-                    "without sort/aggs in this engine"
-                )
+            # a pin id names both the index and its fixed view — the
+            # reference's search-with-pit drops the URL index the same way
+            pin = self._use(body["pit"]["id"])
+            index = pin.index
         # runtime_mappings (search-time runtime fields,
         # ``server/.../search/runtime/``): computed columns over the live
         # docs view before query/agg compilation — one compiler
@@ -1559,7 +1598,7 @@ class Engine:
                     # multi-index searches, silently emitting NULL lookups)
                     views = []
                     for cix in concrete:
-                        v = self._docs_view(cix)
+                        v = self._docs_view(cix, pin)
                         if inp in v.columns:
                             sel = v.select("url", inp)
                             if "_index" in hits0.columns:
@@ -1584,7 +1623,7 @@ class Engine:
                 # source columns — fetch-phase join like highlight, then the
                 # script expressions run over the ≤size joined rows
                 hits0 = out_dict["hits"]
-                docs_v = _apply_runtime(self._docs_view(concrete[0]))
+                docs_v = _apply_runtime(self._docs_view(concrete[0], pin))
                 extra_src = [c for c in docs_v.columns if c not in hits0.columns]
                 joined = hits0.join(docs_v.select("url", *extra_src), "url", "left")
                 for n in missing_sf:
@@ -1619,7 +1658,7 @@ class Engine:
         hits: DataFrame
         # the index fast paths below need the reader; with no index meta
         # only the DSL path can answer (an index path raises, re-opening it)
-        reader = pit_reader or (
+        reader = pin.reader if pin else (
             self._reader(index) if os.path.exists(store.meta_path(d)) else None)
         meta_sort = reader.meta.index_sort if reader else None
         if (
@@ -1647,7 +1686,9 @@ class Engine:
                 hits = sorted_scan(reader, k=size, routing=routing)
                 out = {"hits": hits}
                 if "aggs" in body:
-                    out["aggregations"] = aggs_mod.aggregate(_apply_runtime(self._docs_view(index)), body["aggs"])
+                    docs = _apply_runtime(self._docs_view(index, pin))
+                    out["aggregations"] = aggs_mod.aggregate(
+                        docs, body["aggs"], self._context(index, docs, pin))
                 return _finish(out)
         # the index fast paths score the positional "text" postings; a
         # body on any other field takes the DSL path. `from` stays on the
@@ -1694,10 +1735,10 @@ class Engine:
         if hits is None:
             # runtime mappings are applied INSIDE dsl.search (applying
             # them here too would double-apply shadowing scripts)
-            docs = self._docs_view(index)
+            docs = self._docs_view(index, pin)
             hits = dsl.search(self.spark, docs, body, key="url", text_col="text",
                               kw_norm=self._kw_normalizers(index),
-                              index=self._text_index(index))
+                              index=self._text_index(index, pin))
             # requested fields a _source filter dropped come back by url
             have = [n for n in requested if n not in hits.columns and n in docs.columns]
             if have and "url" in hits.columns:
@@ -1730,11 +1771,12 @@ class Engine:
         if kind == "nested" and "inner_hits" in spec:
             # InnerHitsPhase: the matching sub-docs per parent hit
             out["inner_hits"] = dsl.parse(q).inner_hits_frame(
-                self._context(index, _apply_runtime(self._docs_view(index))),
+                self._context(index, _apply_runtime(self._docs_view(index, pin)), pin),
                 size=int((spec["inner_hits"] or {}).get("size", 3)))
         if "aggs" in body:
-            base = self._matching(index, q, _apply_runtime(self._docs_view(index)))
-            out["aggregations"] = aggs_mod.aggregate(base, body["aggs"])
+            docs = _apply_runtime(self._docs_view(index, pin))
+            out["aggregations"] = aggs_mod.aggregate(
+                self._matching(index, q, docs, pin), body["aggs"], self._context(index, docs, pin))
         if body.get("profile"):
             # SearchProfileResults analog: the Spark physical plan for the
             # hits frame (the honest profile of THIS engine — scan pushdown,
@@ -1751,7 +1793,7 @@ class Engine:
             # only on request (an extra count action).
             tth = body["track_total_hits"]
             cap = None if tth is True else int(tth) if not isinstance(tth, bool) else 10_000
-            n = self.count(index, None if kind == "match_all" else q)
+            n = self._matching(index, q, pin=pin).count()
             out["total"] = {
                 "value": n if cap is None else min(n, cap),
                 "relation": "eq" if (cap is None or n <= cap) else "gte",
@@ -2771,38 +2813,25 @@ class Engine:
         return {"id": sid, "is_running": True}
 
     def _partial_reduce(self, index: str, body: dict) -> dict | None:
-        """One partial snapshot over the first half of the segment set
-        (best-effort; None when the index shape doesn't allow it)."""
+        """One partial snapshot: the search over a pin of the first half of
+        the segment set (best-effort; None when the index shape doesn't
+        allow it)."""
         try:
-            concrete = self.resolve(index)
-            if len(concrete) != 1:
-                return None
-            d = self._dir(concrete[0])
-            segs = self._reader(concrete[0]).segs
+            ix, = self.resolve(index)
+            segs = self._reader(ix).segs
             if len(segs) < 2:
                 return None
-            total = len(segs)
-            k = max(1, total // 2)
-            half = segs[:k]
-            paths = [os.path.join(store.seg_dir(d, s), "docs.parquet") for s in half]
-            view = ops_mod.mask_tombstones(
-                self.spark, d, self.spark.read.parquet(*paths))
-            part_body = {kk: vv for kk, vv in body.items()
-                         if kk not in ("aggs", "aggregations")}
-            hits = dsl.search(self.spark, view, part_body, key="url", text_col="text",
-                              kw_norm=self._kw_normalizers(concrete[0]),
-                              index=self._text_index(concrete[0], half)).collect()
-            aggs_out = {}
-            agg_spec = body.get("aggs") or body.get("aggregations")
-            if agg_spec:
-                base = self._matching(concrete[0], body.get("query"), view, half)
-                for an, af in aggs_mod.aggregate(base, agg_spec).items():
-                    aggs_out[an] = af.collect()
-            return {
-                "hits": hits,
-                "aggregations": aggs_out,
-                "_shards": {"total": total, "successful": k},
-            }
+            half = segs[:len(segs) // 2]
+            pid = self._pin(ix, half)
+            try:
+                out = self._search_impl(ix, {**body, "pit": {"id": pid}})
+                return {
+                    "hits": out["hits"].collect(),
+                    "aggregations": {n: f.collect() for n, f in out.get("aggregations", {}).items()},
+                    "_shards": {"total": len(segs), "successful": len(half)},
+                }
+            finally:
+                self._release(pid)
         except Exception:  # noqa: BLE001 — partials are best-effort
             return None
 
@@ -2993,26 +3022,22 @@ class Engine:
         return tv.orderBy("url", "term")
 
     def stats(self, index: str) -> dict:
-        """GET /{index}/_stats (docs + store + segments subset): live doc
-        count, segment count, and on-disk store bytes — read from the open
-        reader's segments (each one's doc ids minus its tombstone slice,
-        like _count) with no Spark job. The store bytes leave out the
-        scroll snapshots (``.scroll``), hard links to files counted once
-        already or to files a merge retired."""
+        """GET /{index}/_stats (docs + store + segments + search subset):
+        live doc count, segment count, on-disk store bytes and the open
+        search contexts (unlapsed pins, from any Engine) — read from the
+        open reader's segments (each one's doc ids minus its tombstone
+        slice, like _count) with no Spark job. The store bytes leave out
+        ``pins/``, hard links to files counted once already or to files a
+        merge retired."""
         d = self._dir(index)
         reader = self._reader(index)
         live = reader.live_count()
-        store_bytes = 0
-        for base, dirs, files in os.walk(d):
-            if base == d and ".scroll" in dirs:
-                dirs.remove(".scroll")
-            store_bytes += sum(
-                os.path.getsize(os.path.join(base, fn)) for fn in files
-            )
+        now = time.time()
         return {
             "docs": {"count": live, "deleted": reader.meta.doc_count - live},
             "segments": {"count": len(reader.segs)},
-            "store": {"size_in_bytes": store_bytes},
+            "store": {"size_in_bytes": sum(map(os.path.getsize, _store_files(d)))},
+            "search": {"open_contexts": sum(_expiry(p) >= now for p in _pin_dirs(d))},
         }
 
     def delete_by_query(self, index: str, query: dict) -> dict:
@@ -3257,29 +3282,27 @@ class Engine:
         d = self._dir(index)
         fields: dict[str, dict] = {}
         total = 0
-        for base, _, files in os.walk(d):
-            for fn in files:
-                fp = os.path.join(base, fn)
-                sz = os.path.getsize(fp)
-                total += sz
-                if not fn.endswith(".parquet"):
-                    continue
-                if "postings" in base or "postings" in fn:
-                    cat = "inverted_index"
-                else:
-                    cat = "stored_fields"
-                md = pq.ParquetFile(fp).metadata
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        col = g.column(ci)
-                        name = col.path_in_schema.split(".")[0]
-                        rec = fields.setdefault(
-                            name, {"total_in_bytes": 0, cat + "_in_bytes": 0})
-                        rec["total_in_bytes"] += col.total_compressed_size
-                        rec[cat + "_in_bytes"] = (
-                            rec.get(cat + "_in_bytes", 0) + col.total_compressed_size
-                        )
+        for fp in _store_files(d):
+            sz = os.path.getsize(fp)
+            total += sz
+            if not fp.endswith(".parquet"):
+                continue
+            if "postings" in fp:
+                cat = "inverted_index"
+            else:
+                cat = "stored_fields"
+            md = pq.ParquetFile(fp).metadata
+            for rg in range(md.num_row_groups):
+                g = md.row_group(rg)
+                for ci in range(g.num_columns):
+                    col = g.column(ci)
+                    name = col.path_in_schema.split(".")[0]
+                    rec = fields.setdefault(
+                        name, {"total_in_bytes": 0, cat + "_in_bytes": 0})
+                    rec["total_in_bytes"] += col.total_compressed_size
+                    rec[cat + "_in_bytes"] = (
+                        rec.get(cat + "_in_bytes", 0) + col.total_compressed_size
+                    )
         return {index: {"store_size_in_bytes": total, "fields": fields}}
 
     def _save_blocks(self, b: dict) -> None:
@@ -3387,7 +3410,7 @@ class Engine:
             shutil.copytree(os.path.join(lseg, s), os.path.join(fseg, s))
             copied.append(s)
         for name in os.listdir(lsrc):  # control files: manifests/meta/tombstones/…
-            if name == "segments":
+            if name in ("segments", "pins"):  # pins are the leader's readers
                 continue
             src_p, dst_p = os.path.join(lsrc, name), os.path.join(fdst, name)
             if os.path.isdir(src_p):

@@ -117,34 +117,32 @@ def seg_tombstones(index_dir: str, seg_d: str, lo: int, hi: int) -> np.ndarray:
     return out
 
 
-def tombstones_df(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """Parquet-only Spark view of the tombstone set (for distributed
-    anti-joins — never materialized on the driver)."""
-    paths = _tomb_paths(index_dir)
+def tombstones_df(spark: SparkSession, paths: list[str]) -> DataFrame | None:
+    """Parquet-only Spark view of the tombstone files ``paths`` (for
+    distributed anti-joins — never materialized on the driver)."""
     if not paths:
         return None
     return spark.read.parquet(*paths).select(F.col("doc_id").cast("long"))
 
 
-def mask_tombstones(spark: SparkSession, index_dir: str, docs: DataFrame) -> DataFrame:
-    """liveDocs as a distributed anti-join (no driver materialization)."""
-    tdf = tombstones_df(spark, index_dir)
+def mask_tombstones(spark: SparkSession, docs: DataFrame, tomb_paths: list[str]) -> DataFrame:
+    """liveDocs as a distributed anti-join (no driver materialization)
+    against the tombstone files ``tomb_paths``: an index's live set
+    (``live_docs``) or a pin's one frozen file."""
+    tdf = tombstones_df(spark, tomb_paths)
     return docs if tdf is None else docs.join(tdf, "doc_id", "left_anti")
 
 
-def pin_files(paths: list[str], dest_dir: str, prefix: str) -> list[str]:
-    """Snapshot files for a cursor (scroll isolation): hard-link each of
-    ``paths`` into ``dest_dir`` as ``{prefix}_{i:04d}.parquet``, or copy it
-    where no link can be made (another file system). Writers never rewrite
-    a segment or tombstone file in place — they add new files or swap in
-    whole directories — so the linked inodes stay frozen: content pinning
-    at zero copy cost. Returns the pinned paths."""
+def pin_files(paths: list[str], dest_dir: str) -> list[str]:
+    """Hard-link each docs file of ``paths`` into a pin's ``dest_dir`` (a
+    copy where no link can be made); returns the links. No writer rewrites
+    a segment file in place, so a linked inode stays frozen, also after a
+    merge deleted the original."""
     import shutil
 
-    os.makedirs(dest_dir, exist_ok=True)
     pinned = []
     for i, src in enumerate(paths):
-        dst = os.path.join(dest_dir, f"{prefix}_{i:04d}.parquet")
+        dst = os.path.join(dest_dir, f"docs_{i:04d}.parquet")
         try:
             os.link(src, dst)
         except OSError:
@@ -153,24 +151,16 @@ def pin_files(paths: list[str], dest_dir: str, prefix: str) -> list[str]:
     return pinned
 
 
-def pin_tombstones(index_dir: str, dest_dir: str) -> list[str]:
-    """The CURRENT tombstone set, pinned into ``dest_dir`` (``pin_files``)."""
-    return pin_files(_tomb_paths(index_dir), dest_dir, "tomb")
-
-
-def mask_tombstones_pinned(
-    spark: SparkSession, pinned: list[str], docs: DataFrame
-) -> DataFrame:
-    """liveDocs against a pinned snapshot instead of the live set."""
-    if not pinned:
-        return docs
-    tdf = spark.read.parquet(*pinned).select(F.col("doc_id").cast("long"))
-    return docs.join(tdf, "doc_id", "left_anti")
-
-
 # row-group size for tombstone writes: small enough that range reads prune
 # hard, large enough that footers stay tiny
 _TOMB_ROW_GROUP = 131072
+
+
+def write_tombstones(path: str, doc_ids: np.ndarray) -> None:
+    """One sorted tombstone file of ``doc_ids`` at ``path``."""
+    pq.write_table(
+        pa.table({"doc_id": pa.array(np.unique(doc_ids), type=pa.int64())}),
+        path, row_group_size=_TOMB_ROW_GROUP)
 
 
 def append_tombstone_batch(index_dir: str, doc_ids: np.ndarray) -> None:
@@ -181,10 +171,7 @@ def append_tombstone_batch(index_dir: str, doc_ids: np.ndarray) -> None:
 
     d = tombstones_dir(index_dir)
     os.makedirs(d, exist_ok=True)
-    pq.write_table(
-        pa.table({"doc_id": pa.array(np.unique(doc_ids), type=pa.int64())}),
-        os.path.join(d, f"batch-{uuid.uuid4().hex}.parquet"),
-        row_group_size=_TOMB_ROW_GROUP)
+    write_tombstones(os.path.join(d, f"batch-{uuid.uuid4().hex}.parquet"), doc_ids)
 
 
 def append_tombstones(spark: SparkSession, index_dir: str, ids: DataFrame) -> int:
@@ -195,7 +182,7 @@ def append_tombstones(spark: SparkSession, index_dir: str, ids: DataFrame) -> in
     view — no driver materialization at any delete rate. Returns the
     number of NEW tombstones."""
     ids = ids.select(F.col("doc_id").cast("long")).distinct()
-    ex_df = tombstones_df(spark, index_dir)
+    ex_df = tombstones_df(spark, _tomb_paths(index_dir))
     if ex_df is not None:
         ids = ids.join(ex_df, "doc_id", "left_anti")
     ids = ids.sortWithinPartitions("doc_id").persist()
@@ -218,7 +205,7 @@ def reconcile_tombstones(spark: SparkSession, index_dir: str, docs: DataFrame) -
     expunged ids are no-ops)."""
     import shutil
 
-    tdf = tombstones_df(spark, index_dir)
+    tdf = tombstones_df(spark, _tomb_paths(index_dir))
     if tdf is None:
         return
     rec = tombstones_dir(index_dir) + ".reconcile"
@@ -273,7 +260,7 @@ def apply_ops(
                 "version_type=external: the index's docs carry no 'version' field")
     doc_cols = ["doc_id", "url"] + (["version"] if has_version else [])
     docs = spark.read.parquet(*store.docs_glob(index_dir)).select(*doc_cols)
-    docs = mask_tombstones(spark, index_dir, docs)
+    docs = mask_tombstones(spark, docs, _tomb_paths(index_dir))
     existing = docs.join(F.broadcast(ops.select("url").distinct()), "url")
     existing_rows = existing.collect()  # ops batch ≤ bulk size — small
     existing_ids = {r["url"]: r["doc_id"] for r in existing_rows}
@@ -418,4 +405,4 @@ def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     """Docs minus tombstones (the liveDocs view used by fetch/tests) — a
     distributed anti-join against the parquet tombstone view."""
     docs = spark.read.parquet(*store.docs_glob(index_dir))
-    return mask_tombstones(spark, index_dir, docs)
+    return mask_tombstones(spark, docs, _tomb_paths(index_dir))

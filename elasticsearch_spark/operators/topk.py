@@ -586,9 +586,9 @@ class IndexReader:
         """A point in time over ``segs`` of this reader's commit (None:
         all): each segment open now, its live-doc mask frozen as of now.
         The view sees no later write or delete, and it outlives a merge
-        that retires its segments, whose files it holds open. A point in
-        time pins the whole commit; an async search's partial reduce pins
-        the segments it has reduced."""
+        that retires its segments, whose files it holds open. The reader
+        of an ``Engine._pin``: a point in time or a scroll pins the whole
+        commit; an async search's partial reduce the segments it reduces."""
         pinned = copy.copy(self)
         if segs is not None:
             keep = set(segs)

@@ -372,6 +372,17 @@ def _bucket_col(spec: dict):
     raise ValueError(f"unsupported bucket agg: {kind}")
 
 
+def _matching(df: DataFrame, query: dict) -> DataFrame:
+    """The rows of ``df`` that ``query`` matches (``dsl.matching``), asked
+    of the request's search context — over an Engine index, its analyzer
+    and postings answer the text leaves — or, outside a request, of a raw
+    context over ``df`` keyed by its first column."""
+    from . import dsl
+
+    ctx = getattr(_TLS, "ctx", None) or dsl.SearchContext(df, df.columns[0])
+    return dsl.matching(dsl.parse(query), ctx, df)
+
+
 def _apply_metric_subaggs(grouped, sub_aggs: dict, doc_count=True, df=None):
     # external callers (transform pivot) pass their source `df` so the
     # histogram-field detection reflects THEIR schema, not whatever frame
@@ -537,34 +548,19 @@ def _compile_agg(df: DataFrame, name: str, spec: dict) -> DataFrame:
         return _apply_metric_subaggs(df.groupBy(), sub)
 
     if kind == "filter":
-        from . import dsl
-
-        node = dsl.parse(body)
-        ctx = dsl.SearchContext(df, df.columns[0])
-        return _apply_metric_subaggs(df.where(node.predicate(ctx)).groupBy(), sub)
+        return _apply_metric_subaggs(_matching(df, body).groupBy(), sub)
 
     if kind == "filters":
-        from . import dsl
-
-        frames = []
-        preds = []
-        ctx = dsl.SearchContext(df, df.columns[0])
-        for bname, q in body["filters"].items():
-            node = dsl.parse(q)
-            p = node.predicate(ctx)
-            preds.append(p)
-            fr = _apply_metric_subaggs(df.where(p).groupBy(), sub)
-            frames.append(fr.select(F.lit(bname).alias("key"), "*"))
+        buckets = dict(body["filters"])
         if body.get("other_bucket"):
             # FiltersAggregationBuilder other_bucket: docs matching NO filter
-            none_of = ~preds[0]
-            for p in preds[1:]:
-                none_of = none_of & ~p
-            obk = body.get("other_bucket_key", "_other_")
-            frames.append(
-                _apply_metric_subaggs(df.where(none_of).groupBy(), sub)
-                .select(F.lit(obk).alias("key"), "*")
-            )
+            buckets[body.get("other_bucket_key", "_other_")] = {
+                "bool": {"must_not": list(body["filters"].values())}}
+        frames = [
+            _apply_metric_subaggs(_matching(df, q).groupBy(), sub)
+            .select(F.lit(bname).alias("key"), "*")
+            for bname, q in buckets.items()
+        ]
         out = frames[0]
         for fr in frames[1:]:
             out = out.unionByName(fr)
@@ -1113,19 +1109,14 @@ def _compile_agg(df: DataFrame, name: str, spec: dict) -> DataFrame:
         return _apply_metric_subaggs(sampled.groupBy(), sub)
 
     if kind == "adjacency_matrix":
-        from . import dsl
-
-        names = list(body["filters"].keys())
-        preds = {}
-        for bname, q in body["filters"].items():
-            node = dsl.parse(q)
-            ctx = dsl.SearchContext(df, df.columns[0])
-            preds[bname] = node.predicate(ctx)
+        qs = body["filters"]
+        names = list(qs)
         frames = []
         for i, a in enumerate(names):
             for b in names[i:]:
                 key = a if a == b else f"{a}&{b}"
-                fr = df.where(preds[a] & preds[b]).agg(F.count("*").alias("doc_count"))
+                both = _matching(df, {"bool": {"filter": [qs[a], qs[b]]}})
+                fr = both.agg(F.count("*").alias("doc_count"))
                 frames.append(fr.select(F.lit(key).alias("key"), "doc_count"))
         out = frames[0]
         for fr in frames[1:]:
@@ -1192,12 +1183,7 @@ def _compile_agg(df: DataFrame, name: str, spec: dict) -> DataFrame:
             na = nb = n
         else:
             def _moments(side):
-                from . import dsl
-
-                sdf = df
-                if side.get("filter"):
-                    ctx = dsl.SearchContext(df, df.columns[0])
-                    sdf = df.where(dsl.parse(side["filter"]).predicate(ctx))
+                sdf = _matching(df, side["filter"]) if side.get("filter") else df
                 c = F.col(side["field"])
                 return sdf.agg(
                     F.count(c).alias("n"), F.avg(c).alias("m"), F.var_samp(c).alias("v")
@@ -1306,12 +1292,7 @@ def _compile_agg(df: DataFrame, name: str, spec: dict) -> DataFrame:
         bg_df = body.get("_background_df")
         bg_df = bg_df if bg_df is not None else df
         if "background_filter" in body:
-            from . import dsl
-
-            node = dsl.parse(body["background_filter"])
-            bg_df = bg_df.where(
-                node.predicate(dsl.SearchContext(bg_df, bg_df.columns[0]))
-            )
+            bg_df = _matching(bg_df, body["background_filter"])
         fg_counts = df.groupBy(F.col(f).alias("key")).agg(F.count("*").cast("double").alias("fg_count"))
         bg_counts = bg_df.groupBy(F.col(f).alias("key")).agg(F.count("*").cast("double").alias("bg_count"))
         fg_tot = df.count()
@@ -2259,11 +2240,22 @@ def _resolve_value_scripts(df: DataFrame, aggs: dict) -> tuple[DataFrame, dict]:
     return df, aggs
 
 
-def aggregate(df: DataFrame, aggs: dict) -> dict[str, DataFrame]:
+def aggregate(df: DataFrame, aggs: dict, ctx=None) -> dict[str, DataFrame]:
     """Run an ES ``aggs`` body → {agg name: bucket/metric frame}. Pipeline
     sub-aggs nested under a bucket agg are applied to that bucket frame in
     declaration order; sibling `*_bucket` pipelines aggregate a previously
-    declared agg's frame (the coordinator post-reduce step)."""
+    declared agg's frame (the coordinator post-reduce step). ``ctx`` is the
+    request's ``dsl.SearchContext``, which the query-bearing aggs ask for
+    their docs (``_matching``)."""
+    prev = getattr(_TLS, "ctx", None)
+    _TLS.ctx = ctx
+    try:
+        return _aggregate(df, aggs)
+    finally:
+        _TLS.ctx = prev
+
+
+def _aggregate(df: DataFrame, aggs: dict) -> dict[str, DataFrame]:
     df, aggs = _resolve_value_scripts(df, aggs)
     out: dict[str, DataFrame] = {}
     for name, spec in aggs.items():

@@ -100,6 +100,44 @@ def _hits(es, index, query, **body):
     return {r["url"]: r["score"] if "score" in r else r["_score"] for r in rows}
 
 
+def _scrolled(es, index, query):
+    """Every url a scroll of ``query`` pages through, sorted."""
+    page = es.search_scroll(index, {"query": query, "size": 1})
+    urls = []
+    while page["hits"]:
+        urls += [r["url"] for r in page["hits"]]
+        page = es.scroll(page["_scroll_id"])
+    es.clear_scroll(page["_scroll_id"])
+    return sorted(urls)
+
+
+EN = {"term": {"lang": "en"}}
+
+
+def _filter_aggs(query):
+    """A filter, a filters and an adjacency_matrix agg of ``query`` beside a
+    ``lang:en`` filter."""
+    return {
+        "filter": {"filter": query},
+        "filters": {"filters": {"filters": {"q": query, "en": EN}}},
+        "adjacency_matrix": {"adjacency_matrix": {"filters": {"q": query, "en": EN}}},
+    }
+
+
+def _filter_counts(aggs):
+    """{agg: {bucket: doc_count}} of the answer to ``_filter_aggs``."""
+    got = {name: {r["key"]: r["doc_count"] for r in aggs[name].collect()}
+           for name in ("filters", "adjacency_matrix")}
+    return {"filter": aggs["filter"].first()["doc_count"], **got}
+
+
+def _want_filter_aggs(want):
+    en = {u for u in LANG if LANG[u] == "en"}
+    adjacency = {"q": len(want), "q&en": len(want & en), "en": len(en)}
+    return {"filter": len(want), "filters": {"q": len(want), "en": len(en)},
+            "adjacency_matrix": {k: n for k, n in adjacency.items() if n}}
+
+
 @pytest.fixture(scope="module")
 def expected(es):
     """url → score of the top-level (index fast path) search, per case."""
@@ -137,6 +175,9 @@ def test_read_paths_agree_with_the_hits(es, expected, analyzer, text, kind):
         assert s == pytest.approx(want[u], abs=1e-9)
     filtered = _hits(es, analyzer, {"bool": {"must": [q], "filter": [{"term": {"lang": "en"}}]}})
     assert set(filtered) == {u for u in want if LANG[u] == "en"}
+    aggs = es.search(analyzer, {"size": 0, "aggs": _filter_aggs(q)})["aggregations"]
+    assert _filter_counts(aggs) == _want_filter_aggs(set(want))
+    assert _scrolled(es, analyzer, q) == sorted(want)
 
 
 @pytest.mark.parametrize("analyzer", ["standard", "cjk"])
@@ -245,8 +286,17 @@ def test_query_string_text_leaves_take_the_index_answer(es):
 # ---- the search context is the one source of terms and statistics --------
 
 
-def test_no_table_case_reads_the_regex_token_stream(es, monkeypatch):
-    # over an index, no text node builds the raw frame's [a-z0-9]+ stream
+def test_no_table_case_reads_the_regex_token_stream(es, spark, monkeypatch):
+    # over an index, no text node builds the raw frame's [a-z0-9]+ stream:
+    # not a search or count, nor (one case per kind) a scroll page, a PIT
+    # search with sort and aggs, an agg that filters (filter, filters,
+    # adjacency_matrix, t_test, significant_terms) or the async partial
+    # reduce
+    halves = _bulk(es, spark, "halves", "standard", num_partitions=2)
+    d = es._dir(halves)
+    first = pq.read_table(os.path.join(store.seg_dir(d, store.list_segs(d)[0]), "docs.parquet"),
+                          columns=["url"])["url"].to_pylist()
+    pit = {"id": es.open_pit("standard", keep_alive="30m")["id"]}
     regex_stream = dsl.SearchContext.toks_sql
 
     def guarded(ctx):
@@ -255,10 +305,33 @@ def test_no_table_case_reads_the_regex_token_stream(es, monkeypatch):
         return regex_stream(ctx)
 
     monkeypatch.setattr(dsl.SearchContext, "toks_sql", guarded)
+    by_lang = {"l": {"terms": {"field": "lang"}}}
     for analyzer, text, kind in CASES:
+        case = (analyzer, text, kind)
         q, want = KINDS[kind](text), _analyzer_match(text, kind)
-        assert set(_hits(es, analyzer, q)) == want, (analyzer, text, kind)
-        assert es.count(analyzer, q) == len(want), (analyzer, text, kind)
+        assert set(_hits(es, analyzer, q)) == want, case
+        assert es.count(analyzer, q) == len(want), case
+        if analyzer != "standard" or text not in ("zürich", "zür*"):
+            continue
+        assert _scrolled(es, analyzer, q) == sorted(want), case
+        out = es.search(analyzer, {"query": q, "size": 10, "sort": [{"url": "asc"}],
+                                   "aggs": by_lang, "pit": pit})
+        assert [r["url"] for r in out["hits"].collect()] == sorted(want), case
+        assert {r["key"]: r["doc_count"] for r in out["aggregations"]["l"].collect()} == \
+            {LANG[u]: 1 for u in want}, case
+        aggs = es.search(analyzer, {"size": 0, "pit": pit, "aggs": {
+            **_filter_aggs(q),
+            "t": {"t_test": {"a": {"field": "doc_id", "filter": q}, "b": {"field": "doc_id"}}},
+            "sig": {"significant_terms": {"field": "lang", "background_filter": q}},
+        }})["aggregations"]
+        assert _filter_counts(aggs) == _want_filter_aggs(want), case
+        assert aggs["t"].collect(), case
+        assert {r["key"] for r in aggs["sig"].collect()} <= {LANG[u] for u in want}, case
+        if kind != "more_like_this":
+            snap = es._partial_reduce(halves, {"query": q, "size": 10, "aggs": by_lang})
+            assert {r["url"] for r in snap["hits"]} == want & set(first), case
+            assert sum(r["doc_count"] for r in snap["aggregations"]["l"]) == \
+                len(want & set(first)), case
 
 
 @pytest.mark.parametrize("operator", ["or", "and"])

@@ -9,6 +9,7 @@ import os
 import shutil
 import sys
 import threading
+import time
 
 import numpy as np
 import pytest
@@ -555,7 +556,7 @@ def test_scroll_snapshots_never_collide(spark, tmp_path):
     size = first.stats("ix")["store"]["size_in_bytes"]
     body = {"query": {"match": {"text": "common"}}, "size": 5}
     want = [f"u{i:02d}" for i in range(1, 12)]
-    snapshots = os.path.join(first._dir("ix"), ".scroll")
+    snapshots = os.path.join(first._dir("ix"), "pins")
 
     _, got = _scroll_urls(first, body)  # left open
     assert got == want
@@ -592,6 +593,203 @@ def test_partial_reduce_pins_its_segments(spark, tmp_path):
     assert [r["doc_count"] for r in snap["aggregations"]["l"]] == [len(want)]
     assert es._reader("ix").segs == segs
     assert len(_ranked(es, {"query": {"match": {"text": "common"}}, "size": 50})) == 10
+
+
+# ---- pins: one fixed view for PIT, scroll and the partial reduce ----------
+
+PIT_BODIES = {
+    "sort": {"query": {"match": {"text": "common"}}, "sort": [{"url": "desc"}], "size": 30},
+    "bool": {"query": {"bool": {"must": [{"match": {"text": "common words"}}],
+                                "filter": [{"term": {"lang": "en"}}]}}, "size": 30},
+    "aggs": {"query": {"match": {"text": "common"}}, "size": 30,
+             "aggs": {"l": {"terms": {"field": "lang"}}}},
+    "total": {"query": {"match": {"text": "common"}}, "size": 30, "track_total_hits": True},
+}
+SCROLL = {"query": {"match": {"text": "common"}}, "size": 4}
+
+
+def _pinned_ix(spark, root, n=12):
+    es = Engine(spark, root=root)
+    es.create_index("ix", num_partitions=3)
+    es.bulk("ix", _docs(spark, [(f"u{i:02d}", f"common words {i}", "en" if i % 3 else "de")
+                                for i in range(n)]))
+    return es
+
+
+def _answer(es, body):
+    """(hit rows, agg rows, total) of a search."""
+    out = es.search("ix", body)
+    return ([r.asDict() for r in out["hits"].collect()],
+            {k: sorted(map(tuple, v.collect())) for k, v in out.get("aggregations", {}).items()},
+            out.get("total"))
+
+
+def _disk_bytes(d):
+    """The bytes of the distinct files under ``d`` (a hard link counted once)."""
+    sizes = {}
+    for base, _, files in os.walk(d):
+        for fn in files:
+            st = os.stat(os.path.join(base, fn))
+            sizes[st.st_ino] = st.st_size
+    return sum(sizes.values())
+
+
+def test_pit_search_equals_the_search_at_open(spark, tmp_path):
+    """A PIT search with sort, with a filtered bool, with aggs and with
+    track_total_hits answers as the same search did when the PIT opened,
+    after a bulk (new and updated docs), a delete and a forcemerge."""
+    es = _pinned_ix(spark, str(tmp_path))
+    es.delete("ix", ["u00"])
+    want = {name: _answer(es, body) for name, body in PIT_BODIES.items()}
+    assert want["total"][2]["value"] == len(want["total"][0]) == 11
+    pit = es.open_pit("ix")["id"]
+    steps = [
+        lambda: es.bulk("ix", _docs(spark, [("late", "common words late", "en"),
+                                            ("u04", "common words updated", "de")])),
+        lambda: es.delete("ix", ["u01", "u02"]),
+        lambda: es.forcemerge("ix", **FULL_MERGE),
+    ]
+    for step in steps:
+        step()
+        for name, body in PIT_BODIES.items():
+            assert _answer(es, {**body, "pit": {"id": pit}}) == want[name], name
+    assert _answer(es, PIT_BODIES["total"])[2]["value"] == 10
+
+
+def test_pit_total_hits_after_a_delete(spark, tmp_path):
+    """track_total_hits of a PIT search counts the pinned view: the docs
+    deleted after the PIT opened are among its hits and in its total."""
+    es = _pinned_ix(spark, str(tmp_path), n=6)
+    pit = es.open_pit("ix")["id"]
+    es.delete("ix", ["u00", "u01"])
+    out = es.search("ix", {**PIT_BODIES["total"], "pit": {"id": pit}})
+    assert out["hits"].count() == out["total"]["value"] == 6
+
+
+def test_lapsed_pit_is_refused(spark, tmp_path):
+    """Each search renews a PIT by its keep_alive; one unused for longer
+    raises, and so does a scroll cursor past its ``scroll``."""
+    es = _pinned_ix(spark, str(tmp_path), n=6)
+    pit = es.open_pit("ix", keep_alive="4s")["id"]
+    body = {**PIT_BODIES["sort"], "pit": {"id": pit}}
+    for _ in range(2):  # 4.4 s and more after the open
+        time.sleep(2.2)
+        assert es.search("ix", body)["hits"].count() == 6
+    sid = es.search_scroll("ix", SCROLL, scroll="1s")["_scroll_id"]
+    time.sleep(4.2)
+    with pytest.raises(ValueError, match="lapsed"):
+        es.search("ix", body)
+    with pytest.raises(ValueError, match="lapsed"):
+        es.scroll(sid)
+    assert not es.close_pit(pit)["succeeded"]
+
+
+def test_threads_share_one_pit(spark, tmp_path):
+    """Eight threads searching one PIT, with a short switch interval, each
+    renew it and all get the pinned hits; the PIT stays open."""
+    es = _pinned_ix(spark, str(tmp_path), n=6)
+    pit = es.open_pit("ix")["id"]
+    body = {"query": {"match": {"text": "common"}}, "size": 10, "pit": {"id": pit}}
+    want = _ranked(es, body)
+    es.delete("ix", ["u00"])
+    got, errors = [], []
+
+    def search():
+        try:
+            got.extend(_ranked(es, body) for _ in range(3))
+        except Exception as e:  # noqa: BLE001 — reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=search) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads) and errors == []
+    assert got == [want] * 24 and len(want) == 6
+    assert es.stats("ix")["search"]["open_contexts"] == 1
+
+
+@pytest.mark.parametrize("reaper", ["open_pit", "search_scroll", "forcemerge"])
+def test_lapsed_pins_are_reaped(spark, tmp_path, reaper):
+    """A lapsed pin's directory is removed by the next pin open or
+    forcemerge, also one an Engine dropped without closing it left behind;
+    then the store holds no byte the stats leave out."""
+    root = str(tmp_path)
+    first = _pinned_ix(spark, root)
+    first.delete("ix", ["u00"])
+    size = first.stats("ix")["store"]["size_in_bytes"]
+    first.open_pit("ix", keep_alive="3s")
+    first.search_scroll("ix", SCROLL, scroll="3s")
+    assert first.stats("ix")["search"]["open_contexts"] == 2
+    pins = os.path.join(first._dir("ix"), "pins")
+    del first
+    time.sleep(3.2)
+    later = Engine(spark, root=root)
+    assert later.stats("ix")["search"]["open_contexts"] == 0
+    assert len(os.listdir(pins)) == 2
+    {
+        "open_pit": lambda: later.close_pit(later.open_pit("ix")["id"]),
+        "search_scroll": lambda: later.clear_scroll(later.search_scroll("ix", SCROLL)["_scroll_id"]),
+        "forcemerge": lambda: later.forcemerge("ix", **FULL_MERGE),
+    }[reaper]()
+    assert os.listdir(pins) == []
+    stats = later.stats("ix")
+    assert stats["store"]["size_in_bytes"] == _disk_bytes(later._dir("ix"))
+    if reaper != "forcemerge":
+        assert stats["store"]["size_in_bytes"] == size
+
+
+def test_live_pin_survives_a_second_engines_forcemerge(spark, tmp_path):
+    """A second Engine's forcemerge keeps an unlapsed pin: its filtered bool
+    and sorted searches answer from the retired segments."""
+    root = str(tmp_path)
+    first = _pinned_ix(spark, root)
+    want = {name: _answer(first, PIT_BODIES[name]) for name in ("bool", "sort")}
+    pit = first.open_pit("ix")["id"]
+    pinned = first._pits[pit].reader.segs
+    second = Engine(spark, root=root)
+    second.bulk("ix", _docs(spark, [("late", "common words late", "en")]))
+    second.delete("ix", ["u01"])
+    assert second.forcemerge("ix", **FULL_MERGE)["merges"] >= 1
+    assert not any(map(os.path.exists, (store.seg_dir(first._dir("ix"), s) for s in pinned)))
+    for name, rows in want.items():
+        assert _answer(first, {**PIT_BODIES[name], "pit": {"id": pit}}) == rows, name
+
+
+def test_stats_count_open_search_contexts(spark, tmp_path):
+    """``stats()["search"]["open_contexts"]`` is the number of unlapsed
+    pins of the index: 1 with a PIT open, 0 once it is closed, and 0 once a
+    lapsed one is reaped, also one a crash left half-open. The disk usage
+    and a snapshot leave the pin's links out."""
+    es = _pinned_ix(spark, str(tmp_path), n=6)
+    contexts = lambda: es.stats("ix")["search"]["open_contexts"]  # noqa: E731
+    disk_usage = lambda: es.disk_usage("ix")["ix"]["store_size_in_bytes"]  # noqa: E731
+    assert contexts() == 0
+    size = disk_usage()
+    pit = es.open_pit("ix")["id"]
+    assert contexts() == 1
+    assert disk_usage() == size
+    es.snapshot("ix", str(tmp_path / "repo"), "s1")
+    assert "pins" not in os.listdir(tmp_path / "repo" / "s1" / "ix")
+    assert es.close_pit(pit)["succeeded"]
+    assert contexts() == 0
+    es.open_pit("ix", keep_alive="2s")
+    pins = os.path.join(es._dir("ix"), "pins")
+    half_open = os.path.join(pins, "half-open")  # as a crash mid-open leaves it
+    os.makedirs(half_open)
+    assert contexts() == 2
+    time.sleep(2.2)
+    assert contexts() == 1  # a pin with no pin.json lapses a minute after it was made
+    os.utime(half_open, (time.time() - 61, time.time() - 61))
+    assert contexts() == 0
+    es.forcemerge("ix", **FULL_MERGE)
+    assert os.listdir(pins) == []
 
 
 def test_prefix_docs_read_one_run_of_blocks(es):
