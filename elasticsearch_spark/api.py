@@ -167,12 +167,12 @@ class _IndexText:
         return {t: df for t, (_, df) in self.reader.term_weights(terms).items()}
 
     def doc_count(self) -> int:
-        return self.reader.meta.doc_count
+        return self.reader.doc_count
 
     def bm25(self, terms: list[str], need: int, boost: float) -> DataFrame:
         r = self.reader
         hits = search_topk(
-            self.engine.spark, r.index_dir, terms, k=r.meta.doc_count,
+            self.engine.spark, r.index_dir, terms, k=r.doc_count,
             # "and" skips the segments when a term is missing from the index
             operator="and" if need == len(terms) else "or", minimum_should_match=need,
             mode="naive", fetch=False, reader=r, fields=("url",))
@@ -192,7 +192,7 @@ class _IndexText:
         return hits.select(F.col("url").alias("__key"), F.lit(float(boost)).alias("_score"))
 
     def positional(self, q: dict, boost: float) -> DataFrame:
-        hits = self.engine._index_hits(self.reader, q, self.reader.meta.doc_count, fetch=False)
+        hits = self.engine._index_hits(self.reader, q, self.reader.doc_count, fetch=False)
         return hits.select(F.col("url").alias("__key"), (F.col("score") * boost).alias("_score"))
 
 
@@ -1394,7 +1394,7 @@ class Engine:
                 minimum_should_match=dsl.resolve_msm(
                     qspec.get("minimum_should_match"), len(set(terms))),
                 # WAND pays off only when k cuts the match set
-                mode="wand" if offset + k < reader.meta.doc_count else "naive",
+                mode="wand" if offset + k < reader.doc_count else "naive",
                 fetch=fetch, reader=reader, **opts)
         from .operators.phrase import search_phrase, search_phrase_prefix
 
@@ -1550,7 +1550,14 @@ class Engine:
         reader, the docs view and the context of every path from the pin.
 
         ``index`` may be an alias: multi-index aliases fan out through
-        ``search_multi`` (cross-index semantics)."""
+        ``search_multi`` (cross-index semantics); their aggs run over the
+        union of each index's ``_matching`` docs, tagged ``_index``, and
+        their total is the sum of the per-index counts. ``aggregations``
+        is accepted as a synonym of ``aggs``."""
+        if "aggregations" in body:
+            if "aggs" in body:
+                raise ValueError("Found two aggregation definitions: [aggs] and [aggregations]")
+            body = {("aggs" if k == "aggregations" else k): v for k, v in body.items()}
         pin = None
         if "pit" in body:
             # a pin id names both the index and its fixed view — the
@@ -1647,11 +1654,34 @@ class Engine:
                     extra_meta=set(body.get("script_fields") or {}))
             return out_dict
 
+        def _total(n: int) -> dict:
+            # SearchContext.java:61-63 — default caps counting at 10k
+            # ("gte" relation); true = exact; int = custom cap. Computed
+            # only on request (an extra count action).
+            tth = body["track_total_hits"]
+            cap = None if tth is True else int(tth) if not isinstance(tth, bool) else 10_000
+            return {
+                "value": n if cap is None else min(n, cap),
+                "relation": "eq" if (cap is None or n <= cap) else "gte",
+            }
+
+        q = body.get("query", {"match_all": {}})
         if len(concrete) > 1:
-            return _finish({"hits": self.search_multi(concrete, body)})
+            # aggs and the total count each index's own _matching docs
+            out = {"hits": self.search_multi(concrete, body)}
+            if "aggs" in body:
+                docs = functools.reduce(
+                    lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                    (self._matching(ix, q, _apply_runtime(self._docs_view(ix)))
+                     .withColumn("_index", F.lit(ix)) for ix in concrete))
+                docs = docs.withColumn("_ccs_key", F.concat_ws(":", "_index", "url"))
+                out["aggregations"] = aggs_mod.aggregate(
+                    docs, body["aggs"], dsl.SearchContext(docs, "_ccs_key", text_col="text"))
+            if "track_total_hits" in body:
+                out["total"] = _total(sum(self._matching(ix, q).count() for ix in concrete))
+            return _finish(out)
         index = concrete[0]
         d = self._dir(index)
-        q = body.get("query", {"match_all": {}})
         size = int(body.get("size", 10))
         (kind, spec), = q.items()
 
@@ -1788,16 +1818,7 @@ class Engine:
             except Exception as e:  # pragma: no cover - connect-mode fallback
                 out["profile"] = {"hits_plan": f"unavailable: {e}"}
         if "track_total_hits" in body:
-            # SearchContext.java:61-63 — default caps counting at 10k
-            # ("gte" relation); true = exact; int = custom cap. Computed
-            # only on request (an extra count action).
-            tth = body["track_total_hits"]
-            cap = None if tth is True else int(tth) if not isinstance(tth, bool) else 10_000
-            n = self._matching(index, q, pin=pin).count()
-            out["total"] = {
-                "value": n if cap is None else min(n, cap),
-                "relation": "eq" if (cap is None or n <= cap) else "gte",
-            }
+            out["total"] = _total(self._matching(index, q, pin=pin).count())
         return _finish(out)
 
     @staticmethod
@@ -3034,7 +3055,7 @@ class Engine:
         live = reader.live_count()
         now = time.time()
         return {
-            "docs": {"count": live, "deleted": reader.meta.doc_count - live},
+            "docs": {"count": live, "deleted": reader.doc_count - live},
             "segments": {"count": len(reader.segs)},
             "store": {"size_in_bytes": sum(map(os.path.getsize, _store_files(d)))},
             "search": {"open_contexts": sum(_expiry(p) >= now for p in _pin_dirs(d))},

@@ -42,7 +42,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import ArrayType, StringType
 
 MAX_TOKEN_LENGTH = 255
 
@@ -204,197 +204,6 @@ _ASCII_COARSE_TO_SPACE = {
     i: " " for i in range(128)
     if chr(i) not in "abcdefghijklmnopqrstuvwxyz0123456789_'.:,"
 }
-
-# --- fully-vectorized standard-analyzer batch path (segment build) ----------
-# Per-byte class tables over lowercased ASCII: the UAX#29 word rule reduces
-# to "alnum and underscore are word chars; a MidLetter joiner (' . :) binds
-# iff both neighbors are letters, a MidNum joiner (, . ') iff both neighbors
-# are digits" — provably equivalent to TOKEN_RE_NOMARK on ASCII (the same
-# derivation as the per-doc fast path above, but with zero per-token Python:
-# one numpy pass over the batch's concatenated bytes, token extraction as an
-# Arrow LargeString built straight from (offsets, compacted bytes), and
-# vocabulary encoding via Arrow dictionary_encode).
-
-
-def _ascii_tables():
-    import numpy as _np
-
-    letter = _np.zeros(256, dtype=bool)
-    digit = _np.zeros(256, dtype=bool)
-    under = _np.zeros(256, dtype=bool)
-    ml = _np.zeros(256, dtype=bool)
-    mn = _np.zeros(256, dtype=bool)
-    letter[ord("a"):ord("z") + 1] = True
-    digit[ord("0"):ord("9") + 1] = True
-    under[ord("_")] = True
-    for c in "'.:":
-        ml[ord(c)] = True
-    for c in ",.'":
-        mn[ord(c)] = True
-    return letter, digit, under, ml, mn
-
-
-_B_LETTER, _B_DIGIT, _B_UNDER, _B_ML, _B_MN = _ascii_tables()
-
-
-def _batch_tokenize_ascii(lows: list[str]):
-    """Lowercased all-ASCII docs → (token codes int64 in occurrence order,
-    sorted unique terms object ndarray, per-doc token counts int64).
-    Vectorized: no per-token Python objects are ever created except the
-    (small) unique vocabulary."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    n_docs = len(lows)
-    big = "\n".join(lows)
-    b = np.frombuffer(big.encode("ascii"), dtype=np.uint8)
-    if len(b) == 0:
-        return (np.zeros(0, np.int64), np.zeros(0, object),
-                np.zeros(n_docs, np.int64))
-    letter = _B_LETTER[b]
-    digit = _B_DIGIT[b]
-    alnum = letter | digit
-    # joiners bind only with the right class on BOTH sides
-    prev_l = np.r_[False, letter[:-1]]
-    next_l = np.r_[letter[1:], False]
-    prev_d = np.r_[False, digit[:-1]]
-    next_d = np.r_[digit[1:], False]
-    keep = alnum | _B_UNDER[b] | (_B_ML[b] & prev_l & next_l) \
-        | (_B_MN[b] & prev_d & next_d)
-
-    tok_start = keep & ~np.r_[False, keep[:-1]]
-    tok_end = keep & ~np.r_[keep[1:], False]
-    s_idx = np.nonzero(tok_start)[0]
-    if len(s_idx) == 0:
-        return (np.zeros(0, np.int64), np.zeros(0, object),
-                np.zeros(n_docs, np.int64))
-    e_idx = np.nonzero(tok_end)[0] + 1
-    lens = e_idx - s_idx
-    # gaps contain no alnum (alnum ⊆ keep), so reduceat over start indices
-    # tests exactly each token's run; tokens without an alnum (underscore-
-    # only runs) are dropped, same as the per-doc path
-    valid = np.logical_or.reduceat(alnum, s_idx)
-    # doc of each token: docs occupy [starts[i], starts[i]+len_i) in `big`
-    doc_starts = np.r_[0, np.cumsum(
-        np.fromiter((len(s) + 1 for s in lows), np.int64, count=n_docs))]
-    doc_of = np.searchsorted(doc_starts, s_idx, side="right") - 1
-    if not valid.all():
-        s_idx, lens, doc_of = s_idx[valid], lens[valid], doc_of[valid]
-
-    # 255-char cap: split overlong runs into MAX_TOKEN_LENGTH chunks (rare)
-    if len(lens) and int(lens.max()) > MAX_TOKEN_LENGTH:
-        over = np.nonzero(lens > MAX_TOKEN_LENGTH)[0]
-        pieces_s, pieces_l, pieces_d = [s_idx], [lens], [doc_of]
-        keep_mask = np.ones(len(lens), dtype=bool)
-        ins = {}
-        for i in over:
-            keep_mask[i] = False
-            st, ln, dc = int(s_idx[i]), int(lens[i]), int(doc_of[i])
-            ss = np.arange(st, st + ln, MAX_TOKEN_LENGTH, dtype=np.int64)
-            ll = np.minimum(MAX_TOKEN_LENGTH, st + ln - ss)
-            ins[i] = (ss, ll, np.full(len(ss), dc, np.int64))
-        # rebuild in order
-        out_s, out_l, out_d = [], [], []
-        last = 0
-        for i in sorted(ins):
-            out_s.append(s_idx[last:i][keep_mask[last:i]])
-            out_l.append(lens[last:i][keep_mask[last:i]])
-            out_d.append(doc_of[last:i][keep_mask[last:i]])
-            ss, ll, dd = ins[i]
-            out_s.append(ss)
-            out_l.append(ll)
-            out_d.append(dd)
-            last = i + 1
-        out_s.append(s_idx[last:])
-        out_l.append(lens[last:])
-        out_d.append(doc_of[last:])
-        s_idx = np.concatenate(out_s)
-        lens = np.concatenate(out_l)
-        doc_of = np.concatenate(out_d)
-
-    total = int(lens.sum())
-    # compacted token bytes: for token j spanning [s_j, s_j+len_j), the flat
-    # char index is arange(total) + repeat(s_j - prefix_j, len_j)
-    prefix = np.r_[0, np.cumsum(lens)[:-1]]
-    char_idx = np.repeat(s_idx - prefix, lens) + np.arange(total, dtype=np.int64)
-    compact = b[char_idx]
-    offsets = np.r_[0, np.cumsum(lens)].astype(np.int64)
-    arr = pa.Array.from_buffers(
-        pa.large_utf8(), len(lens),
-        [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(compact.tobytes())],
-    )
-    enc = pc.dictionary_encode(arr)
-    codes = enc.indices.to_numpy().astype(np.int64)
-    uniq = enc.dictionary.to_numpy(zero_copy_only=False)
-    # remap to sorted-vocabulary codes (pd.factorize(sort=True) equivalence)
-    order = np.argsort(uniq)
-    rank = np.empty(len(uniq), dtype=np.int64)
-    rank[order] = np.arange(len(uniq))
-    dls = np.bincount(doc_of, minlength=n_docs).astype(np.int64)
-    return rank[codes], uniq[order], dls
-
-
-def standard_tokenize_batch(texts: list) -> tuple:
-    """Batch standard-analyzer tokenization for the segment build:
-    texts → (codes int64 in occurrence order, sorted uniques object
-    ndarray, per-doc token counts int64). ASCII docs (the overwhelming
-    web-text case) run the fully-vectorized numpy/Arrow path; the rest
-    fall back to the per-doc tokenizer; results merge at the CODES level
-    so the flat per-token object array never materializes."""
-    import numpy as np
-
-    n = len(texts)
-    lows = [(t or "").lower() for t in texts]
-    is_a = np.fromiter((s.isascii() for s in lows), bool, count=n)
-    a_pos = np.nonzero(is_a)[0]
-    o_pos = np.nonzero(~is_a)[0]
-
-    codes_a, uniq_a, dls_a = _batch_tokenize_ascii([lows[i] for i in a_pos])
-    if len(o_pos):
-        tok_lists = [standard_tokenize(texts[i]) for i in o_pos]
-        dls_o = np.fromiter((len(t) for t in tok_lists), np.int64,
-                            count=len(tok_lists))
-        flat_o = np.concatenate(
-            [np.asarray(t, dtype=object) for t in tok_lists]
-        ) if tok_lists else np.zeros(0, object)
-        codes_o, uniq_o = pd.factorize(flat_o, sort=True)
-        codes_o = codes_o.astype(np.int64)
-    else:
-        codes_o = np.zeros(0, np.int64)
-        uniq_o = np.zeros(0, object)
-        dls_o = np.zeros(0, np.int64)
-
-    # merge vocabularies (sorted union) and remap both code spaces
-    if len(uniq_o) == 0:
-        uniq, codes_a2, codes_o2 = uniq_a, codes_a, codes_o
-    elif len(uniq_a) == 0:
-        uniq, codes_a2, codes_o2 = uniq_o, codes_a, codes_o
-    else:
-        uniq = np.union1d(uniq_a, uniq_o)
-        codes_a2 = np.searchsorted(uniq, uniq_a)[codes_a]
-        codes_o2 = np.searchsorted(uniq, uniq_o)[codes_o]
-
-    # scatter group codes back into original doc-occurrence order
-    dls = np.zeros(n, np.int64)
-    dls[a_pos] = dls_a
-    if len(o_pos):
-        dls[o_pos] = dls_o
-    tok_doc_start = np.r_[0, np.cumsum(dls)[:-1]]
-    codes = np.empty(int(dls.sum()), np.int64)
-
-    def _scatter(pos, group_dls, group_codes):
-        if not len(pos) or not len(group_codes):
-            return
-        g_prefix = np.r_[0, np.cumsum(group_dls)[:-1]]
-        dest = np.repeat(tok_doc_start[pos] - g_prefix, group_dls) \
-            + np.arange(len(group_codes), dtype=np.int64)
-        codes[dest] = group_codes
-
-    _scatter(a_pos, dls_a, codes_a2)
-    _scatter(o_pos, dls_o, codes_o2)
-    return codes, uniq, dls
-
 
 _SIMPLE_RE = re.compile(r"[a-z0-9]+")
 
@@ -2978,11 +2787,6 @@ def analyze_detail(text: str, analyzer: str = "standard") -> list[dict]:
 
 # --- Spark UDF surface (Arrow-batched) ---------------------------------------
 
-def _tokenize_series(s: pd.Series, analyzer: str) -> pd.Series:
-    fn = ANALYZERS[analyzer]
-    return s.map(lambda x: fn(x) if x is not None else [])
-
-
 def tokens_udf(analyzer: str = "standard"):
     """pandas UDF: string column → array<string> of analyzed tokens.
 
@@ -3011,33 +2815,6 @@ def tokens_udf(analyzer: str = "standard"):
 def html_strip_udf(s: pd.Series) -> pd.Series:
     """pandas UDF: html (binary or string) column → extracted text."""
     return s.map(html_strip)
-
-
-ANALYZE_DETAIL_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("token", StringType()),
-            StructField("start_offset", IntegerType()),
-            StructField("end_offset", IntegerType()),
-            StructField("position", IntegerType()),
-        ]
-    )
-)
-
-
-def analyze_detail_udf(analyzer: str = "standard"):
-    @F.pandas_udf(ANALYZE_DETAIL_SCHEMA)
-    def _udf(s: pd.Series) -> pd.Series:
-        return s.map(
-            lambda x: [
-                (d["token"], d["start_offset"], d["end_offset"], d["position"])
-                for d in analyze_detail(x, analyzer)
-            ]
-            if x is not None
-            else []
-        )
-
-    return _udf
 
 
 # ---- keyword normalizers (AnalysisRegistry normalizers, applied to keyword

@@ -2714,25 +2714,6 @@ def _clean(v):
     return v
 
 
-def run_rows(src: str, rows, base_env: dict | None = None,
-             score=None, value=None):
-    """Execute the script once per row dict; yields results. ``rows`` is an
-    iterable of plain dicts (field → cleaned value); score/value are
-    optional parallel iterables bound as _score/_value."""
-    prog = compile_painless(src)
-    base = dict(base_env or {})
-    score = list(score) if score is not None else None
-    value = list(value) if value is not None else None
-    for i, row in enumerate(rows):
-        env = dict(base)
-        env["doc"] = DocMap(row)
-        if score is not None:
-            env["_score"] = score[i]
-        if value is not None:
-            env["_value"] = value[i]
-        yield execute(prog, env)
-
-
 def _coerce(v, root: str):
     """Coerce an interpreter result to the declared Spark return type's
     Python analog so Arrow serialization never guesses."""

@@ -68,30 +68,6 @@ def lang_id(text_col: str) -> Column:
     )
 
 
-def quality_signals(text_col: str) -> list[Column]:
-    """Gopher/C4-style quality columns: length, mean word length, alpha
-    ratio, punctuation density, stopword ratio, type-token ratio, max-line
-    fraction — the standard pre-training filter features."""
-    toks = tokens_col(text_col)
-    n_tok = F.greatest(F.size(toks), F.lit(1))
-    n_chars = F.greatest(F.length(F.col(text_col)), F.lit(1))
-    stop_all = [m for ms in _LANG_MARKERS.values() for m in ms]
-    return [
-        F.size(toks).cast("long").alias("n_tokens"),
-        (
-            F.aggregate(F.transform(toks, F.length), F.lit(0), lambda a, x: a + x) / n_tok
-        ).alias("mean_word_len"),
-        (
-            F.length(F.expr(f"regexp_replace({text_col}, '[^\\\\p{{L}}]', '')")) / n_chars
-        ).alias("alpha_ratio"),
-        (
-            F.length(F.expr(f"regexp_replace({text_col}, \"[^.,;:!?'\\\"]\", '')")) / n_chars
-        ).alias("punct_ratio"),
-        (F.size(F.filter(toks, lambda t: t.isin(stop_all))) / n_tok).alias("stop_ratio"),
-        (F.size(F.array_distinct(toks)) / n_tok).alias("type_token_ratio"),
-    ]
-
-
 def quality_score(text_col: str) -> Column:
     """Composite [0,1] quality score from the signal columns (monotone
     heuristics with saturations, tuned to the usual web-text thresholds)."""

@@ -48,7 +48,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions import analysis
-from ..sources import index_store as store
 from .topk import (
     IndexReader, Segment, query_segments, score_verified, search_segments, term_positions,
 )
@@ -421,13 +420,13 @@ def evaluate(node: dict, keys: dict[str, np.ndarray]) -> np.ndarray:
 
 
 def _tree_segment(tree: dict, weights: dict[str, tuple[float, int]],
-                  meta: store.IndexMeta, k: int):
+                  reader: IndexReader, k: int):
     """Per-segment fn: read the tree's postings, skip the segment before
     decoding when a required leaf is absent, evaluate the tree over every
     candidate doc at once, BM25-score the verified docs."""
     fetch_terms = tree_terms(tree)
     score_terms = tree_terms(tree, include_filters=False)
-    avgdl, k1, b = meta.avgdl, meta.k1, meta.b
+    avgdl, k1, b = reader.avgdl, reader.meta.k1, reader.meta.b
 
     def per_segment(seg: Segment) -> pd.DataFrame | None:
         post = seg.postings(fetch_terms, positions=True)
@@ -454,7 +453,7 @@ def search_tree(reader: IndexReader, tree: dict, k: int = 10,
     index reads no segment."""
     weights = reader.term_weights(tree_terms(tree))
     segs = query_segments(reader, routing=routing) if _may_match(tree, weights) else []
-    fn = _tree_segment(tree, weights, reader.meta, k + offset)
+    fn = _tree_segment(tree, weights, reader, k + offset)
     return search_segments(reader, segs, fn, k, offset, ("url", *fields)).drop("n_terms_matched")
 
 

@@ -238,9 +238,9 @@ def merge_index(
     floor_bytes: int = FLOOR_BYTES,
 ) -> dict:
     """Run one round of tiered compaction: plan groups → one Spark task per
-    group → tombstone and doc-count reconcile. Scores are unchanged by
-    construction (df/avgdl are global, docIDs survive the merge verbatim)
-    except that expunged deletes stop counting."""
+    group → tombstone reconcile. Scores are unchanged by construction
+    (df, N and avgdl are sums over the segments, docIDs survive the merge
+    verbatim) except that expunged deletes stop counting."""
     store.reconcile(index_dir)  # reclaim crash-leftover merged-away dirs
     groups = plan_merges(index_dir, segments_per_tier, max_merged_bytes, floor_bytes)
     if not groups:
@@ -282,9 +282,6 @@ def merge_index(
 
     docs = spark.read.parquet(*store.docs_glob(index_dir))
     reconcile_tombstones(spark, index_dir, docs)
-    meta = store.IndexMeta.load(index_dir)
-    meta.doc_count, meta.sum_dl = store.doc_totals(index_dir)
-    meta.save(index_dir)
     return {
         "merges": len(res),
         "merged_docs": sum(r["n_docs"] for r in res),

@@ -393,11 +393,6 @@ def apply_ops(
         # driver work stays O(batch), independent of historical delete count
         append_tombstone_batch(index_dir, np.array(sorted(new_tombs), dtype=np.int64))
 
-    # doc_count/sum_dl from the live segments' docs files: masked docs
-    # still count until a merge expunges them (reference semantics), like
-    # their postings in each segment's df
-    meta.doc_count, meta.sum_dl = store.doc_totals(index_dir)
-    meta.save(index_dir)
     return counts
 
 

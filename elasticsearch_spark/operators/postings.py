@@ -197,21 +197,9 @@ def build_segment_frames(
     base = pid << DOCID_PARTITION_SHIFT
     doc_ids = base + np.arange(n_docs, dtype=np.int64)
 
-    # 3) analysis chain. A fully-vectorized batch tokenizer exists
-    # (analysis.standard_tokenize_batch, SPARK_GRAFT_BATCH_TOKENIZE=1) and
-    # is ~8% faster warm single-thread — but it streams multi-MB arrays
-    # (concatenated bytes + class masks + gathers) where the per-doc path
-    # works cache-resident doc-at-a-time, and the no-Spark control
-    # (tools/bandwidth_control.py) measures 8-process scaling efficiency
-    # 0.95 per-doc vs 0.67 batch on this shared-memory-bus host. For a
-    # 1000-executor target, per-core cache residency wins over single-core
-    # throughput, so per-doc is the default.
-    flat = None
-    if analyzer == "standard" and os.environ.get("SPARK_GRAFT_BATCH_TOKENIZE"):
-        codes, uniques, dls = analysis.standard_tokenize_batch(pdf["text"].tolist())
-        doc_idx = np.repeat(np.arange(len(dls), dtype=np.int64), dls)
-    else:
-        flat, doc_idx, dls = tokenize_docs(pdf["text"].tolist(), analyzer)
+    # 3) analysis chain, one doc at a time: each core's working set stays
+    #    cache-resident (the scaling control in BENCH/BASELINE.md)
+    flat, doc_idx, dls = tokenize_docs(pdf["text"].tolist(), analyzer)
     norms = int_to_byte4(dls)
     ql = byte4_to_int(norms)  # quantized lengths (what BM25 sees)
 
@@ -241,8 +229,7 @@ def build_segment_frames(
     # 4) tf per (term, doc): factorize, lexsort, run-length; occurrence
     # positions ride along (lexsort is stable → within a (term, doc) run
     # occurrences keep ascending in-doc position order)
-    if flat is not None:
-        codes, uniques = pd.factorize(flat, sort=True)
+    codes, uniques = pd.factorize(flat, sort=True)
     order = np.lexsort((doc_idx, codes))
     doc_starts = np.r_[0, np.cumsum(dls)[:-1]]
     pos_in_doc = np.arange(len(codes), dtype=np.int64) - np.repeat(doc_starts, dls)
@@ -395,15 +382,16 @@ def build_index(
     bandwidth pressure), so prefer MORE, SMALLER partitions — e.g. 100 TB /
     ~250 MB of text per partition ≈ 400k partitions. Oversplitting is cheap
     (tasks are ~seconds); undersplitting is superlinear. Nothing runs
-    downstream of the build: each segment's postings carry its term
-    dictionary, and the doc totals are a driver read of the docs files.
+    downstream of the build: each segment carries its term dictionary and
+    its share of the collection statistics (``topk.IndexReader``). The
+    index meta is written only when none exists; the returned
+    ``doc_count`` / ``sum_dl`` / ``avgdl`` sum this build's partitions.
     """
     num_partitions = num_partitions or max(spark.sparkContext.defaultParallelism, 8)
     # rebuilding an EXISTING index with different structure must refuse
     # loudly: the per-partition resume keys on (url, warc_ts) lineage only,
-    # so a changed analyzer would SKIP every partition yet save the new
-    # analyzer into meta (queries then tokenize differently from the
-    # postings), a changed index_sort would lie to sorted_scan's early
+    # so a changed analyzer would SKIP every partition and report postings
+    # it never wrote, a changed index_sort would lie to sorted_scan's early
     # termination, and a smaller num_partitions would leave the old pids'
     # segments live and double-counted
     try:
@@ -448,19 +436,20 @@ def build_index(
         .collect()
     )
 
-    cfg = analysis.ANALYZER_CONFIGS.get(analyzer)
-    meta = store.IndexMeta(
-        analyzer=analyzer, num_partitions=num_partitions,
-        analyzer_config=list(cfg) if cfg else None,
-        index_sort=list(index_sort) if index_sort else None,
-        num_shards=num_shards,
-    )
-    meta.doc_count, meta.sum_dl = store.doc_totals(index_dir)
-    meta.save(index_dir)
+    if prev is None:
+        cfg = analysis.ANALYZER_CONFIGS.get(analyzer)
+        store.IndexMeta(
+            analyzer=analyzer, num_partitions=num_partitions,
+            analyzer_config=list(cfg) if cfg else None,
+            index_sort=list(index_sort) if index_sort else None,
+            num_shards=num_shards,
+        ).save(index_dir)
+    doc_count = sum(r["n_docs"] for r in metrics)
+    sum_dl = sum(r["sum_dl"] for r in metrics)
     return {
-        "doc_count": meta.doc_count,
-        "sum_dl": meta.sum_dl,
-        "avgdl": meta.avgdl,
+        "doc_count": doc_count,
+        "sum_dl": sum_dl,
+        "avgdl": float(sum_dl) / doc_count if doc_count else 1.0,
         "partitions": num_partitions,
         "built": sum(1 for r in metrics if r["status"] == "built"),
         "skipped": sum(1 for r in metrics if r["status"] == "skipped"),

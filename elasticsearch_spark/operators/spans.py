@@ -52,7 +52,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..sources import index_store as store
 from .intervals import _POS_BITS, _POS_MASK, _occ_keys
 from .topk import IndexReader, Segment, query_segments, score_verified, search_segments
 
@@ -272,13 +271,13 @@ def _eval_spans(node: SpanNode, pos: dict[str, list[int]]) -> list[tuple[int, in
 
 
 def _span_segment(node: SpanNode, weights: dict[str, tuple[float, int]],
-                  meta: store.IndexMeta, k: int):
+                  reader: IndexReader, k: int):
     """Per-segment fn: decode leaf-term postings with positions, prefilter
     candidates by the conjunctive skeleton, evaluate the span tree per
     candidate doc, BM25-score verified docs."""
     fetch_terms = sorted(leaf_terms(node))
     score_terms = sorted(match_terms(node))
-    avgdl, k1, b = meta.avgdl, meta.k1, meta.b
+    avgdl, k1, b = reader.avgdl, reader.meta.k1, reader.meta.b
 
     def per_segment(seg: Segment) -> pd.DataFrame | None:
         decoded = seg.positions(fetch_terms)
@@ -344,5 +343,5 @@ def search_spans(reader: IndexReader, span_body: dict, k: int = 10,
     terms = sorted(leaf_terms(node))
     weights = reader.term_weights(terms)
     segs = query_segments(reader, routing=routing) if terms else []
-    fn = _span_segment(node, weights, reader.meta, k + offset)
+    fn = _span_segment(node, weights, reader, k + offset)
     return search_segments(reader, segs, fn, k, offset, ("url", *fields)).drop("n_terms_matched")

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions import analysis
 from ..sources import index_store as store
+from .ops import live_docs
 from .topk import IndexReader
 
 
@@ -341,7 +342,7 @@ def phrase_suggest(
         )
         bi = {(r["w1"], r["w2"]): float(r["n"]) for r in rows if (r["w1"], r["w2"]) in pairs}
 
-    n_total = float(max(meta.sum_dl, 1))
+    n_total = float(max(reader.sum_dl, 1))
     vocab = float(max(len(uni), 1))
 
     def uni_p(w: str) -> float:
@@ -394,12 +395,11 @@ def explain(
 ) -> DataFrame:
     """Score breakdown for one doc: per matching query term — tf, df, idf,
     quantized dl, avgdl, and the BM25 contribution (sums to the hit's
-    score; the `_explain` API shape). df is ``reader``'s (default: a new
-    reader's)."""
+    score; the `_explain` API shape) of the live version of ``url``. df,
+    N and avgdl are ``reader``'s (default: a new reader's)."""
     reader = reader or IndexReader(spark, index_dir)
     meta = reader.meta
-    docs = spark.read.parquet(*store.docs_glob(index_dir))
-    row = docs.where(F.col("url") == url).select("doc_id", "text", "dl").first()
+    row = live_docs(spark, index_dir).where(F.col("url") == url).select("text", "dl").first()
     if row is None:
         return spark.createDataFrame(
             [], "term string, tf long, df long, idf double, ql double, contribution double"
@@ -419,8 +419,8 @@ def explain(
         if tf == 0 or t not in stats:
             continue
         df_ = stats[t]
-        contrib = bm25.score(tf, df_, ql, meta.doc_count, meta.avgdl, meta.k1, meta.b)
-        out.append((t, tf, df_, float(bm25.idf(df_, meta.doc_count)), ql, float(contrib)))
+        contrib = bm25.score(tf, df_, ql, reader.doc_count, reader.avgdl, meta.k1, meta.b)
+        out.append((t, tf, df_, float(bm25.idf(df_, reader.doc_count)), ql, float(contrib)))
     return spark.createDataFrame(
         out, "term string, tf long, df long, idf double, ql double, contribution double"
     )

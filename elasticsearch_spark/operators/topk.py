@@ -50,11 +50,12 @@ than the per-segment work it would spread.
 - the hits become a local relation, ``createDataFrame`` of an Arrow table
   (``hits_frame``), so neither building nor collecting them runs a job.
 
-df is the sum of each segment's own df (Lucene's ``TermStates``), read
-from the open segments' block tables by the driver-side ``IndexReader``
-(no Spark job); df and avgdl reach every segment alike — the
-dfs-phase determinism mechanism (``DfsPhase.java:31-81``): scores never
-depend on how the segments are split.
+df, N and sum_dl are sums of each segment's own counts (Lucene's
+``TermStates`` and ``CollectionStatistics``), read from the open segments
+by the driver-side ``IndexReader`` (no Spark job); df and avgdl reach
+every segment alike — the dfs-phase determinism mechanism
+(``DfsPhase.java:31-81``): scores never depend on how the segments are
+split.
 """
 
 from __future__ import annotations
@@ -163,7 +164,11 @@ class Segment:
       are one run found by ``searchsorted``; its df (docs) and cf
       (occurrences) sum the run's ``n`` and ``sum_tf``;
     - the sorted doc ids with their SmallFloat-decoded lengths (``norms``)
-      and file rows (the doc-id → row map of ``fetch``).
+      and file rows (the doc-id → row map of ``fetch``);
+    - its share of the collection statistics: its doc count (``doc_ids``,
+      deleted docs too) and ``sum_dl``, the block table's Σ ``sum_tf`` —
+      every token of every doc is one posting occurrence, so it equals the
+      docs' summed lengths.
 
     A query then reads only the byte columns of its terms' block rows
     (``postings``); it scans no ``term`` column and builds no dataset. At
@@ -182,6 +187,7 @@ class Segment:
         self._docs = _File(os.path.join(self.dir, "docs.parquet"))
         blocks = self._postings.file.read(columns=_BLOCK_TABLE)
         self.blocks = {c: blocks[c].to_numpy(zero_copy_only=False) for c in _BLOCK_TABLE}
+        self.sum_dl = int(self.blocks["sum_tf"].sum())
         from ..functions.smallfloat import byte4_to_int
 
         docs = self._docs.file.read(columns=["doc_id", "norm"])
@@ -525,13 +531,18 @@ class IndexReader:
 
     A term's df is the sum of its per-segment df over the committed
     segments (Lucene's ``TermStates``), read from the segments' block
-    tables: masked docs count until a merge expunges them, and no write can
-    leave a term's df behind its postings. Each segment is opened on first
-    use — once, however many threads ask; the first search opens the
-    missing ones on the query-phase pool — and kept, keyed by the segment
-    and its postings file's identity. At 4,000 pages in 16 segments the
-    open state is ~20 MB (``Segment``); at web scale the block table needs
-    an on-disk term dictionary that is read by range.
+    tables, and so are the collection statistics (the DFS phase's
+    ``CollectionStatistics``): ``doc_count`` (N) sums the segments' doc
+    ids, ``sum_dl`` their ``Segment.sum_dl``, and ``avgdl`` is their ratio.
+    Masked docs count until a merge expunges them, and no write can leave
+    a statistic behind its postings, as none is persisted; the meta gives
+    only the settings (analyzer, k1, b, ...). A pin keeps its parent's
+    statistics. Each segment is opened on first use — once, however many
+    threads ask; the first search opens the missing ones on the
+    query-phase pool — and kept, keyed by the segment and its postings
+    file's identity. At 4,000 pages in 16 segments the open state is
+    ~20 MB (``Segment``); at web scale the block table needs an on-disk
+    term dictionary that is read by range.
 
     A reader is a snapshot of one commit: ``state``
     (``index_store.commit_state``) is its invalidation key, and
@@ -590,6 +601,8 @@ class IndexReader:
         of an ``Engine._pin``: a point in time or a scroll pins the whole
         commit; an async search's partial reduce the segments it reduces."""
         pinned = copy.copy(self)
+        # scores over a part of the commit use the whole commit's statistics
+        pinned._totals = self._totals
         if segs is not None:
             keep = set(segs)
             pinned.segs = [s for s in self.segs if s in keep]
@@ -600,6 +613,28 @@ class IndexReader:
                         for (s, i), seg in zip(pinned._ids.items(), pinned._segments())}
         pinned._opening = {}
         return pinned
+
+    @functools.cached_property
+    def _totals(self) -> tuple[int, int]:
+        """(N, sum_dl) over the committed segments."""
+        segs = self._segments()
+        return sum(len(seg.doc_ids) for seg in segs), sum(seg.sum_dl for seg in segs)
+
+    @property
+    def doc_count(self) -> int:
+        """N: the docs of the committed segments, masked ones included."""
+        return self._totals[0]
+
+    @property
+    def sum_dl(self) -> int:
+        """The summed doc lengths (tokens) of the committed segments."""
+        return self._totals[1]
+
+    @property
+    def avgdl(self) -> float:
+        """sum_dl / N (1.0 for an empty index)."""
+        n, s = self._totals
+        return float(s) / n if n else 1.0
 
     def live_count(self) -> int:
         """The live docs of the committed segments: each segment's doc ids
@@ -619,9 +654,8 @@ class IndexReader:
         dfs = np.zeros(len(terms), dtype=np.int64)
         for seg in self._segments():
             dfs += seg.doc_freqs(terms)
-        m = self.meta
         return {
-            t: (float(bm25.idf(np.float64(df), m.doc_count) * (m.k1 + 1.0)), int(df))
+            t: (float(bm25.idf(np.float64(df), self.doc_count) * (self.meta.k1 + 1.0)), int(df))
             for t, df in zip(terms, dfs)
             if df
         }
@@ -983,7 +1017,7 @@ def search_topk(
         segs = []  # nothing can match
     else:
         segs = query_segments(reader, routing)
-    fn = _bm25_segment({None: (live, msm, mode)}, weights, meta.avgdl, meta.k1, meta.b, k + offset)
+    fn = _bm25_segment({None: (live, msm, mode)}, weights, reader.avgdl, meta.k1, meta.b, k + offset)
     return search_segments(reader, segs, fn, k, offset, (*(FETCH_FIELDS if fetch else ()), *fields))
 
 
@@ -1040,7 +1074,7 @@ def msearch_topk(
             continue  # conjunctive query with a vocabulary miss: no hits
         msm = len(live) if op == "and" else int(q.get("minimum_should_match") or 1)
         per_q[qid] = (live, msm, mode)
-    fn = _bm25_segment(per_q, weights, meta.avgdl, meta.k1, meta.b, k)
+    fn = _bm25_segment(per_q, weights, reader.avgdl, meta.k1, meta.b, k)
     cands = query_phase(reader, query_segments(reader) if per_q else [], fn)
     if cands is not None:
         cands = cands.sort_values(["qid", "score", "doc_id"], ascending=[True, False, True])

@@ -14,8 +14,11 @@ Iceberg runtime so plain Parquet directories stand in.
 
 Layout:
     <index_dir>/
-      index_meta.json            {analyzer, num_partitions, doc_count, sum_dl,
-                                  avgdl, k1, b, seg_map}
+      index_meta.json            the settings: {analyzer, num_partitions,
+                                  k1, b, analyzer_config, index_sort,
+                                  num_shards, settings} — no collection
+                                  totals: N and sum_dl are read from the
+                                  open segments (operators/topk.IndexReader)
       segments/seg=<id>/docs.parquet       doc_id,url,warc_ts,lang,text,dl,norm,seg_id
       segments/seg=<id>/postings.parquet   term,seg_id,block_id,first_doc_id,
                                            last_doc_id,n,max_tf,min_ql,sum_tf,
@@ -33,7 +36,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 def meta_path(index_dir: str) -> str:
@@ -153,14 +156,17 @@ def all_manifests(index_dir: str) -> list[dict]:
 
 @dataclass
 class IndexMeta:
+    """The index's settings (``index_meta.json``): written by
+    ``Engine.create_index`` and ``put_settings``; ``build_index`` and the
+    streaming ingest write a default one only when none exists, and no
+    write path rewrites it. It holds no collection statistics — N and
+    sum_dl are sums over the open segments (``topk.IndexReader``), so
+    settings and statistics cannot drift apart in a crash or race."""
+
     analyzer: str
     num_partitions: int
-    doc_count: int = 0
-    sum_dl: int = 0
     k1: float = 1.2
     b: float = 0.75
-    # container seg -> current (post-merge) segment id; identity at build
-    seg_map: dict = field(default_factory=dict)
     # custom analyzer chain (tokenizer, filters), persisted so a fresh
     # driver process can re-register the chain by NAME alone — an
     # in-memory-only registration would KeyError (or silently tokenize
@@ -178,10 +184,6 @@ class IndexMeta:
     # settings the engine doesn't interpret structurally live here verbatim
     settings: dict | None = None
 
-    @property
-    def avgdl(self) -> float:
-        return float(self.sum_dl) / self.doc_count if self.doc_count else 1.0
-
     def save(self, index_dir: str) -> None:
         p = meta_path(index_dir)
         tmp = p + ".tmp"
@@ -190,11 +192,8 @@ class IndexMeta:
                 {
                     "analyzer": self.analyzer,
                     "num_partitions": self.num_partitions,
-                    "doc_count": self.doc_count,
-                    "sum_dl": self.sum_dl,
                     "k1": self.k1,
                     "b": self.b,
-                    "seg_map": self.seg_map,
                     "analyzer_config": self.analyzer_config,
                     "index_sort": self.index_sort,
                     "num_shards": self.num_shards,
@@ -215,11 +214,8 @@ class IndexMeta:
         meta = cls(
             analyzer=d["analyzer"],
             num_partitions=d["num_partitions"],
-            doc_count=d["doc_count"],
-            sum_dl=d["sum_dl"],
             k1=d["k1"],
             b=d["b"],
-            seg_map={str(k): int(v) for k, v in d.get("seg_map", {}).items()},
             analyzer_config=d.get("analyzer_config"),
             index_sort=d.get("index_sort"),
             num_shards=d.get("num_shards"),
@@ -238,9 +234,6 @@ class IndexMeta:
                 )
         return meta
 
-    def current_seg(self, container_seg: int) -> int:
-        return int(self.seg_map.get(str(container_seg), container_seg))
-
 
 def list_segs(index_dir: str) -> list[int]:
     """Current segment ids (post-merge survivors) from the store layout.
@@ -248,7 +241,7 @@ def list_segs(index_dir: str) -> list[int]:
     A segment listed in a committed merge manifest's ``merged_from`` is
     dead even if its files still exist on disk (crash between manifest
     rename and source-dir delete): its docs live on in the merged segment,
-    so including it would double-count hits and inflate df/doc_count.
+    so including it would double-count hits and inflate df and N.
     ``reconcile`` reclaims the space; this read path is correct either way.
     """
     root = os.path.join(index_dir, "segments")
@@ -309,30 +302,16 @@ def docs_glob(index_dir: str) -> list[str]:
     return [os.path.join(seg_dir(index_dir, s), "docs.parquet") for s in list_segs(index_dir)]
 
 
-def doc_totals(index_dir: str) -> tuple[int, int]:
-    """(doc_count, sum_dl) of the index: the rows and the summed ``dl`` of
-    the live segments' docs.parquet, read on the driver. Masked docs count
-    until a merge expunges them, as in the reference."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    n = s = 0
-    for p in docs_glob(index_dir):
-        dl = pq.read_table(p, columns=["dl"])["dl"]
-        n += len(dl)
-        s += pc.sum(dl).as_py() or 0
-    return n, s
-
-
 @dataclass(frozen=True)
 class CommitState:
     """What an open reader depends on, as committed on disk: the raw
-    ``index_meta.json`` (doc count, avgdl, settings), the live segment list
-    and each live segment's postings file identity (inode, mtime), so a
-    partition a resumed build rewrote under the same id is a new segment.
-    Every write path — bulk, delete, forcemerge, the streaming ingest, from
-    any process — changes at least one of them, so comparing states is the
-    reader's staleness test."""
+    ``index_meta.json`` (the settings), the live segment list and each live
+    segment's postings file identity (inode, mtime), so a partition a
+    resumed build rewrote under the same id is a new segment. A bulk,
+    forcemerge or streaming batch — from any process — changes the segment
+    list, a settings change the meta, so comparing states is the reader's
+    staleness test; a delete changes neither and reaches an open reader
+    through each segment's live-doc mask."""
 
     meta: bytes
     segs: tuple

@@ -20,12 +20,11 @@ Each micro-batch builds complete immutable segments through the SAME
 segment builder as the batch path (one shuffle, per-partition postings
 build), with segment ids namespaced by batch so doc ids never collide:
 ``seg = (batch_id + 1) * num_partitions + pid`` and doc ids carry the seg
-base. A batch's commit is its segments' manifests plus the index meta's
-doc totals (``_commit_meta``); each segment carries its own term
-dictionary, so there is no term-stats table to fold, and a replayed batch
-rebuilds nothing its manifests already committed. Background tiered merge
-(operators/merge.py) compacts the accumulating small segments — the
-streaming analog of ES's merge policy.
+base. A batch's commit is its segments' manifests: each segment carries
+its own term dictionary and collection counts, so there are no statistics
+to fold, and a replayed batch rebuilds nothing its manifests already
+committed. Background tiered merge (operators/merge.py) compacts the
+accumulating small segments — the streaming analog of ES's merge policy.
 
 Also here: watermarked event-time windowed aggregation
 (``windowed_event_counts``) — the streaming date_histogram.
@@ -42,22 +41,6 @@ from ..operators.postings import METRICS_SCHEMA, segment_builder
 from ..sources import index_store as store
 
 
-def _commit_meta(index_dir: str, analyzer: str, num_partitions: int) -> None:
-    """Per-batch commit: the index meta's doc totals (``store.doc_totals``
-    over the live segments, merged ones included). The batch's segments
-    carry their own term dictionaries, so there are no term stats to fold
-    and a replayed batch has nothing to double-count."""
-    # UPDATE the persisted meta, never rebuild it: a fresh IndexMeta here
-    # would clobber analyzer_config/index_sort/num_shards/settings/seg_map
-    # (and custom k1/b) that create_index or a background merge persisted
-    try:
-        meta = store.IndexMeta.load(index_dir)
-    except FileNotFoundError:
-        meta = store.IndexMeta(analyzer=analyzer, num_partitions=num_partitions)
-    meta.doc_count, meta.sum_dl = store.doc_totals(index_dir)
-    meta.save(index_dir)
-
-
 def start_indexing_stream(
     spark: SparkSession,
     pages_stream: DataFrame,
@@ -70,8 +53,12 @@ def start_indexing_stream(
     """pages stream → per-batch segment build. Returns the StreamingQuery.
 
     trigger: e.g. {"processingTime": "1 second"} (the refresh interval) or
-    {"availableNow": True} (drain-and-stop, used in tests)."""
+    {"availableNow": True} (drain-and-stop, used in tests). Writes the
+    index meta only when none exists, so the settings ``create_index`` or
+    ``put_settings`` persisted stay as they are."""
     os.makedirs(index_dir, exist_ok=True)
+    if not os.path.exists(store.meta_path(index_dir)):
+        store.IndexMeta(analyzer=analyzer, num_partitions=num_partitions).save(index_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         # seg ids must stay below the op-batch namespace, and the mapping
@@ -97,7 +84,6 @@ def start_indexing_stream(
         routed.groupBy("pid").applyInPandas(
             segment_builder(index_dir, analyzer), METRICS_SCHEMA
         ).collect()
-        _commit_meta(index_dir, analyzer, num_partitions)
 
     writer = (
         pages_stream.writeStream.foreachBatch(process_batch)

@@ -202,44 +202,6 @@ def test_analyze_detail_honors_named_chain():
         ("hello", 0, 5), ("wörld", 7, 12), ("42", 13, 15)]
 
 
-# ---- batch tokenizer ≡ per-doc tokenizer (segment-build fast path) ----
-
-def _batch_equiv(texts):
-    import numpy as np
-
-    from elasticsearch_spark.functions.analysis import (
-        standard_tokenize, standard_tokenize_batch)
-
-    codes, uniq, dls = standard_tokenize_batch(texts)
-    toks = uniq[codes] if len(codes) else []
-    off = np.r_[0, np.cumsum(dls)]
-    for i, t in enumerate(texts):
-        assert list(toks[off[i]:off[i + 1]]) == standard_tokenize(t or ""), t
-
-
-def test_batch_tokenizer_adversarial_pins():
-    _batch_equiv([
-        "", "   ", "___", "_a_ b_c", "don't stop O'Brien's",
-        "3.14159 1,000,000 a.b.c x:y 1:2 a:1 .45 45. ,x x,",
-        "a'1 1'a a.1 1.a a..b 1,,2 'hello' \"quoted\"",
-        "x" * 300, ("ab" * 200) + " tail", "a.....b",
-        "foo_bar __init__ _ __ a_b_c_",
-        "Zürich café naïve 例子 中文 する",
-        "MiXeD CaSe UPPER lower", "tab\tsep\nnewline\rcr",
-        "a-b e-mail re-use", "1e5 2.5e-3 0x1f",
-        "end.", "end.'", "'.:,", "a,b c.d e:f", "1.2.3.4", "v1.2.3", None,
-    ])
-
-
-@hyp_settings(max_examples=150, deadline=None)
-@given(st.lists(st.text(
-    alphabet=st.sampled_from(list(
-        "abzAZ019_'.:,- \t\néü中カᄉ")),
-    max_size=60), min_size=0, max_size=8))
-def test_batch_tokenizer_matches_per_doc(texts):
-    _batch_equiv(texts)
-
-
 def test_analyze_explain_stages():
     """_analyze explain=true (TransportAnalyzeAction.detailAnalyze): the
     char-filtered text, the tokenizer stream, then every filter's output in

@@ -117,7 +117,7 @@ def test_segment_skipped_before_decode_when_a_required_leaf_is_absent(spark, ind
     segs = [Segment(index_dir, s) for s in store.list_segs(index_dir)]
 
     def run(tree):
-        fn = ivs._tree_segment(tree, reader.term_weights(ivs.tree_terms(tree)), reader.meta, 10)
+        fn = ivs._tree_segment(tree, reader.term_weights(ivs.tree_terms(tree)), reader, 10)
         return [fn(seg) for seg in segs]
 
     assert run(all_of([leaf(["the"]), leaf(["zzzabsent"])], ordered=True)) == [None] * len(segs)

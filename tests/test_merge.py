@@ -11,7 +11,7 @@ import pytest
 
 from elasticsearch_spark.operators.merge import merge_index, plan_merges
 from elasticsearch_spark.operators.postings import build_index
-from elasticsearch_spark.operators.topk import search_topk
+from elasticsearch_spark.operators.topk import IndexReader, search_topk
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_df
 from tests.conftest import assert_term_stats_are_segment_sums
@@ -59,9 +59,9 @@ def test_merge_preserves_topk(spark, merge_env):
 
 def test_merge_doc_count_preserved(spark, merge_env):
     docs = spark.read.parquet(*store.docs_glob(MERGE_DIR))
-    meta = store.IndexMeta.load(MERGE_DIR)
-    assert docs.count() == meta.doc_count
-    assert docs.select("doc_id").distinct().count() == meta.doc_count
+    reader = IndexReader(spark, MERGE_DIR)
+    assert docs.count() == reader.doc_count
+    assert docs.select("doc_id").distinct().count() == reader.doc_count
 
 
 def test_resume_after_merge_skips_all(spark, merge_env):

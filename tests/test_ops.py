@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from elasticsearch_spark.operators.merge import merge_index
 from elasticsearch_spark.operators.ops import apply_ops, live_docs, read_tombstones
 from elasticsearch_spark.operators.postings import build_index
-from elasticsearch_spark.operators.topk import search_topk
+from elasticsearch_spark.operators.topk import IndexReader, search_topk
 from elasticsearch_spark.sources import index_store as store
 from tests.conftest import assert_term_stats_are_segment_sums
 
@@ -84,8 +84,7 @@ def test_merge_expunges_tombstones(spark, ops_index):
     assert len(read_tombstones(ops_index)) == 0  # expunged
     docs = spark.read.parquet(*store.docs_glob(ops_index))
     assert docs.count() == n_live  # dead versions physically gone
-    meta = store.IndexMeta.load(ops_index)
-    assert meta.doc_count == n_live
+    assert IndexReader(spark, ops_index).doc_count == n_live
     # results unchanged by the expunging merge
     assert {r["url"] for r in search_topk(spark, ops_index, ["zebra"], k=10).collect()} == {"u4"}
     assert {r["url"] for r in search_topk(spark, ops_index, ["quokka"], k=10).collect()} == {"u1"}

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from elasticsearch_spark.operators.postings import build_index
-from elasticsearch_spark.operators.topk import search_topk
+from elasticsearch_spark.operators.topk import IndexReader, search_topk
 from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import pages_df
 from tests.conftest import assert_term_stats_are_segment_sums
@@ -56,9 +56,8 @@ def test_stale_lineage_triggers_rebuild(spark, built):
     info3 = build_index(spark, pages_df(spark, 301, n_parts=4), RESUME_DIR, num_partitions=N_PARTS)
     assert info3["built"] >= 1  # the partition that received row 300
     assert info3["built"] + info3["skipped"] == N_PARTS
-    meta = store.IndexMeta.load(RESUME_DIR)
     docs = spark.read.parquet(*store.docs_glob(RESUME_DIR))
-    assert docs.count() == meta.doc_count
+    assert docs.count() == IndexReader(spark, RESUME_DIR).doc_count
     assert_term_stats_are_segment_sums(spark, RESUME_DIR)
 
 

@@ -41,10 +41,10 @@ def test_stream_ingest_builds_searchable_index(spark, stream_dirs):
         spark, stream, idx, ckpt, num_partitions=4, trigger={"availableNow": True}
     )
     q.awaitTermination(300)
-    meta = store.IndexMeta.load(idx)
+    reader = IndexReader(spark, idx)
     docs = spark.read.parquet(*store.docs_glob(idx))
-    assert meta.doc_count == docs.count()
-    assert meta.doc_count > 150  # both batches landed (minus url dups)
+    assert reader.doc_count == docs.count()
+    assert reader.doc_count > 150  # both batches landed (minus url dups)
     # multiple batches → multiple segment namespaces
     segs = {r["seg_id"] for r in docs.select("seg_id").distinct().collect()}
     assert len(segs) >= 2
@@ -59,14 +59,14 @@ def test_stream_restart_is_exactly_once(spark, stream_dirs):
     rebuild or duplicate anything (translog replay semantics)."""
     idx = f"{STREAM_DIR}/index"
     ckpt = f"{STREAM_DIR}/ckpt"
-    before = store.IndexMeta.load(idx).doc_count
+    before = IndexReader(spark, idx).doc_count
     schema = spark.read.parquet(f"{stream_dirs}/a").schema
     stream = spark.readStream.schema(schema).parquet(f"{stream_dirs}/*")
     q = ingest.start_indexing_stream(
         spark, stream, idx, ckpt, num_partitions=4, trigger={"availableNow": True}
     )
     q.awaitTermination(300)
-    assert store.IndexMeta.load(idx).doc_count == before
+    assert IndexReader(spark, idx).doc_count == before
 
 
 def test_replayed_micro_batch_keeps_df(spark, stream_dirs):
@@ -78,7 +78,7 @@ def test_replayed_micro_batch_keeps_df(spark, stream_dirs):
     ckpt = f"{STREAM_DIR}/ckpt"
     assert_term_stats_are_segment_sums(spark, idx)
     before = IndexReader(spark, idx).term_stats()
-    doc_count = store.IndexMeta.load(idx).doc_count
+    doc_count = IndexReader(spark, idx).doc_count
     last = max(int(n) for n in os.listdir(f"{ckpt}/commits") if n.isdigit())
     for name in (str(last), f".{last}.crc"):
         os.remove(f"{ckpt}/commits/{name}")
@@ -90,7 +90,7 @@ def test_replayed_micro_batch_keeps_df(spark, stream_dirs):
     q.awaitTermination(300)
     assert os.path.exists(f"{ckpt}/commits/{last}")  # the batch ran again
     assert IndexReader(spark, idx).term_stats().equals(before)
-    assert store.IndexMeta.load(idx).doc_count == doc_count
+    assert IndexReader(spark, idx).doc_count == doc_count
     assert_term_stats_are_segment_sums(spark, idx)
 
 
@@ -114,7 +114,7 @@ def test_micro_batch_after_forcemerge_keeps_doc_count(spark, tmp_path):
     drain()
     rows = spark.read.parquet(*store.docs_glob(idx)).count()
     assert rows > 150  # both batches
-    assert store.IndexMeta.load(idx).doc_count == rows
+    assert IndexReader(spark, idx).doc_count == rows
     assert not os.path.exists(os.path.join(idx, "stats"))
     assert_term_stats_are_segment_sums(spark, idx)
 
@@ -263,21 +263,22 @@ def test_dedup_stream_exact_first_wins(spark, tmp_path):
 
 
 def test_stream_commit_preserves_index_meta(spark, tmp_path):
-    """The per-batch meta commit must UPDATE the persisted meta, not
-    rebuild it — a fresh IndexMeta wiped analyzer_config/index_sort/
-    num_shards/settings/seg_map persisted by create_index or a merge."""
-    from elasticsearch_spark.sources import index_store as store
-    from elasticsearch_spark.streaming.ingest import _commit_meta
-
-    d = str(tmp_path / "meta_idx")
-    import os as _os
-    _os.makedirs(d, exist_ok=True)
+    """The streaming ingest writes the index meta only when none exists:
+    the analyzer_config/index_sort/num_shards/settings (and custom k1/b)
+    that create_index or put_settings persisted survive its batches."""
+    src, d, ckpt = (str(tmp_path / n) for n in ("src", "meta_idx", "ckpt"))
+    os.makedirs(d)
     meta = store.IndexMeta(analyzer="standard", num_partitions=4,
                            analyzer_config=["standard", ["lowercase"]],
                            index_sort=["warc_ts", "desc"], num_shards=2,
                            settings={"custom": 1}, k1=0.9, b=0.3)
     meta.save(d)
-    _commit_meta(d, "standard", 4)
+    spark.createDataFrame(pages_pdf(20)).write.parquet(f"{src}/a")
+    stream = spark.readStream.schema(spark.read.parquet(f"{src}/a").schema).parquet(f"{src}/*")
+    ingest.start_indexing_stream(
+        spark, stream, d, ckpt, num_partitions=4, trigger={"availableNow": True}
+    ).awaitTermination(300)
+    assert store.list_segs(d)  # a batch committed
     got = store.IndexMeta.load(d)
     assert got.analyzer_config == ["standard", ["lowercase"]]
     assert got.index_sort == ["warc_ts", "desc"]
