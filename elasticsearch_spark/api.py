@@ -273,7 +273,7 @@ class Engine:
         reference's ``ReaderContext`` — and return its id, which a search
         body names as ``{"pit": {"id": ...}}``. Beside ``IndexReader.pin``,
         ``<index>/pins/<id>/`` holds hard links of the pinned docs files and
-        one tombstone file of the reader's frozen masks, so a Spark plan
+        one tombstone file of the reader's live-doc masks, so a Spark plan
         sees the reader's live set, also after a merge; and ``pin.json``."""
         concrete = self.resolve(index)
         if len(concrete) != 1:
@@ -291,7 +291,7 @@ class Engine:
         docs = ops_mod.pin_files([os.path.join(store.seg_dir(d, s), "docs.parquet")
                                   for s in reader.segs], pin_dir)
         ops_mod.write_tombstones(os.path.join(pin_dir, "tombstones.parquet"), np.concatenate(
-            [reader.segment(s).tombstones for s in reader.segs]))
+            [reader.deleted(s) for s in reader.segs]))
         self._pits[pid] = _Pin(concrete[0], reader, pin_dir, docs, alive)
         return pid
 
@@ -1654,12 +1654,13 @@ class Engine:
                     extra_meta=set(body.get("script_fields") or {}))
             return out_dict
 
+        # SearchContext.java:61-63 — true = exact; int = custom cap ("gte"
+        # relation past it); false disables hit counting, so the response
+        # has no total. Counted only on request (an extra count action).
+        tth = body.get("track_total_hits", False)
+
         def _total(n: int) -> dict:
-            # SearchContext.java:61-63 — default caps counting at 10k
-            # ("gte" relation); true = exact; int = custom cap. Computed
-            # only on request (an extra count action).
-            tth = body["track_total_hits"]
-            cap = None if tth is True else int(tth) if not isinstance(tth, bool) else 10_000
+            cap = None if tth is True else int(tth)
             return {
                 "value": n if cap is None else min(n, cap),
                 "relation": "eq" if (cap is None or n <= cap) else "gte",
@@ -1677,7 +1678,7 @@ class Engine:
                 docs = docs.withColumn("_ccs_key", F.concat_ws(":", "_index", "url"))
                 out["aggregations"] = aggs_mod.aggregate(
                     docs, body["aggs"], dsl.SearchContext(docs, "_ccs_key", text_col="text"))
-            if "track_total_hits" in body:
+            if tth is not False:
                 out["total"] = _total(sum(self._matching(ix, q).count() for ix in concrete))
             return _finish(out)
         index = concrete[0]
@@ -1817,7 +1818,7 @@ class Engine:
                 out["profile"] = {"hits_plan": qe.explainString(mode)}
             except Exception as e:  # pragma: no cover - connect-mode fallback
                 out["profile"] = {"hits_plan": f"unavailable: {e}"}
-        if "track_total_hits" in body:
+        if tth is not False:
             out["total"] = _total(self._matching(index, q, pin=pin).count())
         return _finish(out)
 
@@ -3046,10 +3047,9 @@ class Engine:
         """GET /{index}/_stats (docs + store + segments + search subset):
         live doc count, segment count, on-disk store bytes and the open
         search contexts (unlapsed pins, from any Engine) — read from the
-        open reader's segments (each one's doc ids minus its tombstone
-        slice, like _count) with no Spark job. The store bytes leave out
-        ``pins/``, hard links to files counted once already or to files a
-        merge retired."""
+        open reader (each segment's doc ids less its deleted ones) with no
+        Spark job. The store bytes leave out ``pins/``, hard links to files
+        counted once already or to files a merge retired."""
         d = self._dir(index)
         reader = self._reader(index)
         live = reader.live_count()

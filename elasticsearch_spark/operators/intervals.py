@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame
 
 from ..functions import analysis
 from .topk import (
-    IndexReader, Segment, query_segments, score_verified, search_segments, term_positions,
+    IndexReader, Segment, _live, query_segments, score_verified, search_segments, term_positions,
 )
 
 MAX_EXPANSIONS = 128
@@ -428,12 +428,12 @@ def _tree_segment(tree: dict, weights: dict[str, tuple[float, int]],
     score_terms = tree_terms(tree, include_filters=False)
     avgdl, k1, b = reader.avgdl, reader.meta.k1, reader.meta.b
 
-    def per_segment(seg: Segment) -> pd.DataFrame | None:
+    def per_segment(seg: Segment, deleted: np.ndarray) -> pd.DataFrame | None:
         post = seg.postings(fetch_terms, positions=True)
         if not _may_match(tree, set(post["term"])):
             return None
         decoded = term_positions(post)
-        cand = seg.live(_required_docs(tree, {t: v[0] for t, v in decoded.items()}))
+        cand = _live(_required_docs(tree, {t: v[0] for t, v in decoded.items()}), deleted)
         if len(cand) == 0:
             return None
         root = evaluate(tree, {t: _occ_keys(*v, cand) for t, v in decoded.items()})

@@ -18,7 +18,9 @@ manifest. At 100 TB scale this is the standard compaction-job shape: the
 work is embarrassingly parallel across groups and each group is bounded by
 ``max_merged_bytes``. A merged segment's postings carry its term
 dictionary, so term statistics need no second pass: df stays the sum over
-the live segments.
+the live segments. Each task returns the tombstoned doc ids it expunged,
+and the driver writes back the committed tombstones less those ids, so
+no Spark job runs after the tasks.
 """
 
 from __future__ import annotations
@@ -35,6 +37,7 @@ from pyspark.sql import SparkSession
 
 from ..sources import index_store as store
 from .codec import decode_blocks
+from .ops import read_tombstones_range, reconcile_tombstones
 from .postings import encode_postings_blocks
 
 # reference defaults, scaled for sandbox testing via parameters
@@ -102,10 +105,10 @@ def plan_merges(
     return [g for g in groups if len(g) > 1]
 
 
-def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> dict:
+def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> tuple[dict, list[int]]:
     """Sort-merge one group of segments into ``seg=<new_seg>``. Pure local
     function (one Spark task; also unit-testable). Returns the merge
-    manifest dict."""
+    manifest dict and the tombstoned doc ids the merge expunged."""
     # docs: concat, keep sorted by doc_id (disjoint per-segment ranges) —
     # except under index sorting (IndexSortConfig.java), where the merged
     # docs file must be re-sorted on the sort field so sorted_scan's
@@ -125,11 +128,10 @@ def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> dict:
     docs = docs.take(d_sort)
 
     # expunge deletes (the reference's merge purging masked docs): drop
-    # tombstoned rows here; the caller reconciles the tombstone store after
-    # commit. Range-read only this merge group's id span — a broad
-    # delete_by_query never ships the full tombstone set to every task.
-    from .ops import read_tombstones_range
-
+    # tombstoned rows here; the driver drops them from the tombstone store
+    # once every group committed. Range-read only this merge group's id
+    # span — a broad delete_by_query never ships the full tombstone set to
+    # every task.
     ids_all = docs["doc_id"].to_numpy()
     tomb = (read_tombstones_range(index_dir, int(ids_all.min()), int(ids_all.max()))
             if len(ids_all) else np.zeros(0, dtype=np.int64))
@@ -227,7 +229,7 @@ def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> dict:
     # failure here used to silently double-count.
     for s in segs:
         shutil.rmtree(store.seg_dir(index_dir, s))
-    return manifest
+    return manifest, expunged
 
 
 def merge_index(
@@ -238,9 +240,10 @@ def merge_index(
     floor_bytes: int = FLOOR_BYTES,
 ) -> dict:
     """Run one round of tiered compaction: plan groups → one Spark task per
-    group → tombstone reconcile. Scores are unchanged by construction
-    (df, N and avgdl are sums over the segments, docIDs survive the merge
-    verbatim) except that expunged deletes stop counting."""
+    group → the driver drops the expunged ids from the tombstones. Scores
+    are unchanged by construction (df, N and avgdl are sums over the
+    segments, docIDs survive the merge verbatim) except that expunged
+    deletes stop counting."""
     store.reconcile(index_dir)  # reclaim crash-leftover merged-away dirs
     groups = plan_merges(index_dir, segments_per_tier, max_merged_bytes, floor_bytes)
     if not groups:
@@ -263,25 +266,24 @@ def merge_index(
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                m = merge_group_local(index_dir, json.loads(row["segs"]), int(row["new_seg"]))
-                out.append({"new_seg": m["new_seg"], "n_docs": m["n_docs"], "n_blocks": m["n_blocks"]})
+                m, expunged = merge_group_local(index_dir, json.loads(row["segs"]), int(row["new_seg"]))
+                out.append({"new_seg": m["new_seg"], "n_docs": m["n_docs"], "n_blocks": m["n_blocks"],
+                            "expunged": expunged})
             yield pd.DataFrame(out)
 
     res = (
         spark.createDataFrame(specs)
         .repartition(len(groups), "gid")
-        .mapInPandas(run, "new_seg int, n_docs long, n_blocks long")
+        .mapInPandas(run, "new_seg int, n_docs long, n_blocks long, expunged array<long>")
         .collect()
     )
 
-    # reconcile tombstones expunged by the merge (ids no longer in any
-    # segment) — a fully distributed semi-join + clustered rewrite, never a
-    # driver collect (delete-count-independent driver memory); deletes
-    # stop counting after a merge, exactly the reference's behavior
-    from .ops import reconcile_tombstones
-
-    docs = spark.read.parquet(*store.docs_glob(index_dir))
-    reconcile_tombstones(spark, index_dir, docs)
+    # the tombstones of the expunged docs mask nothing any more: the rest
+    # is written back as one batch on the driver; deletes stop counting
+    # after a merge, exactly the reference's behavior
+    expunged = np.array([d for r in res for d in r["expunged"]], dtype=np.int64)
+    if len(expunged):
+        reconcile_tombstones(index_dir, expunged)
     return {
         "merges": len(res),
         "merged_docs": sum(r["n_docs"] for r in res),

@@ -12,16 +12,22 @@ Spark re-expression:
 - new/changed docs build a NEW segment generation (op-batch-namespaced
   pids — segments stay immutable);
 - superseded/deleted doc_ids append a batch file under ``tombstones/``
-  (the liveDocs bitmap analog; a batch is never rewritten);
-- the query phase filters tombstoned ids per segment
-  (sorted-array searchsorted — O(log n) per posting batch);
+  (the liveDocs analog; a batch is committed by rename and never
+  rewritten). The batch is part of the next commit
+  (``index_store.commit_state``), so the Engine's reader reopens on it;
+- the reader reads each tombstone file once and holds every segment's
+  deleted doc ids, its live-doc mask, for all the searches of that
+  commit (``topk.IndexReader``);
 - ``merge_index`` expunges: merged segments drop tombstoned docs and their
-  postings, then ``reconcile_tombstones`` swaps in the surviving set.
+  postings, then the driver swaps in the committed set less the expunged
+  ids (``reconcile_tombstones``).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -35,33 +41,14 @@ from .postings import METRICS_SCHEMA, segment_builder
 OPS_SEG_BASE = store.OPS_SEG_BASE  # op-batch segments live above initial pids, below merged
 
 
-def tombstones_dir(index_dir: str) -> str:
-    """The tombstone set, one parquet file per batch: ``delete_by_query``
-    writes its matching doc_ids here as Spark parquet output — no driver
-    collect, so a broad delete at 100 TB never funnels ids through one
-    process — and a bulk appends one driver-written batch. A merge swaps
-    in the reconciled set (``reconcile_tombstones``)."""
-    return os.path.join(index_dir, "tombstones")
-
-
-def _tomb_paths(index_dir: str) -> list[str]:
-    """Every live tombstone parquet file: the batch dir plus its ``.old``
-    parked twin — the parked copy covers the reconcile swap's crash window
-    (worst case it masks ids a merge already expunged, which is a harmless
-    no-op)."""
-    paths = []
-    base = tombstones_dir(index_dir)
-    for d in (base, base + ".old"):
-        if os.path.isdir(d):
-            paths.extend(
-                os.path.join(d, f) for f in sorted(os.listdir(d))
-                if f.endswith(".parquet")
-            )
-    return paths
+def tombstone_ids(path: str) -> np.ndarray:
+    """The doc ids of one tombstone file."""
+    return pq.read_table(path, columns=["doc_id"])["doc_id"].to_numpy()
 
 
 def read_tombstones(index_dir: str) -> np.ndarray:
-    parts = [pq.read_table(f)["doc_id"].to_numpy() for f in _tomb_paths(index_dir)]
+    """The sorted, distinct doc ids of every committed tombstone file."""
+    parts = [tombstone_ids(f) for f in store.tombstone_files(index_dir)]
     parts = [p for p in parts if len(p)]
     if not parts:
         return np.zeros(0, dtype=np.int64)
@@ -70,10 +57,10 @@ def read_tombstones(index_dir: str) -> np.ndarray:
 
 def read_tombstones_range(index_dir: str, lo: int, hi: int) -> np.ndarray:
     """Tombstones within [lo, hi] only — the parquet reads prune on
-    row-group doc_id stats (every writer clusters by doc_id), so a segment
-    task pays for its own id slice, not the global delete set."""
+    row-group doc_id stats (every writer clusters by doc_id), so a merge
+    task pays for its group's id slice, not the global delete set."""
     parts = []
-    for f in _tomb_paths(index_dir):
+    for f in store.tombstone_files(index_dir):
         t = pq.read_table(
             f, filters=[("doc_id", ">=", int(lo)), ("doc_id", "<=", int(hi))])
         if t.num_rows:
@@ -81,40 +68,6 @@ def read_tombstones_range(index_dir: str, lo: int, hi: int) -> np.ndarray:
     if not parts:
         return np.zeros(0, dtype=np.int64)
     return np.unique(np.concatenate(parts))
-
-
-# process memo for seg_tombstones: the query phase calls it once per
-# segment per search; the (files, mtime, size) fingerprint keeps it fresh
-# across deletes while repeated searches skip the footer + range reads for
-# the same segment
-_SEG_TOMB_CACHE: dict = {}
-
-
-def seg_tombstones(index_dir: str, seg_d: str, lo: int, hi: int) -> np.ndarray:
-    """Per-SEGMENT tombstone slice: the tombstones in the segment's doc_id
-    range ``[lo, hi]``, range-read from the tombstone files. This is the
-    100 TB shape: one giant delete_by_query costs each segment read only
-    the tombstones that could possibly mask its own docs. Memoized per
-    (segment, tombstone-file fingerprint) so repeated reads of one segment
-    pay once."""
-    paths = _tomb_paths(index_dir)
-    if not paths:
-        return np.zeros(0, dtype=np.int64)
-    try:
-        fp = tuple((p, os.path.getmtime(p), os.path.getsize(p)) for p in paths)
-    except OSError:
-        fp = None  # racing writer — skip the cache this round
-    key = (index_dir, seg_d)
-    if fp is not None:
-        hit = _SEG_TOMB_CACHE.get(key)
-        if hit is not None and hit[0] == fp:
-            return hit[1]
-    out = read_tombstones_range(index_dir, lo, hi)
-    if fp is not None:
-        if len(_SEG_TOMB_CACHE) > 512:
-            _SEG_TOMB_CACHE.clear()
-        _SEG_TOMB_CACHE[key] = (fp, out)
-    return out
 
 
 def tombstones_df(spark: SparkSession, paths: list[str]) -> DataFrame | None:
@@ -128,7 +81,7 @@ def tombstones_df(spark: SparkSession, paths: list[str]) -> DataFrame | None:
 def mask_tombstones(spark: SparkSession, docs: DataFrame, tomb_paths: list[str]) -> DataFrame:
     """liveDocs as a distributed anti-join (no driver materialization)
     against the tombstone files ``tomb_paths``: an index's live set
-    (``live_docs``) or a pin's one frozen file."""
+    (``live_docs``) or a pin's one file."""
     tdf = tombstones_df(spark, tomb_paths)
     return docs if tdf is None else docs.join(tdf, "doc_id", "left_anti")
 
@@ -138,8 +91,6 @@ def pin_files(paths: list[str], dest_dir: str) -> list[str]:
     copy where no link can be made); returns the links. No writer rewrites
     a segment file in place, so a linked inode stays frozen, also after a
     merge deleted the original."""
-    import shutil
-
     pinned = []
     for i, src in enumerate(paths):
         dst = os.path.join(dest_dir, f"docs_{i:04d}.parquet")
@@ -157,19 +108,21 @@ _TOMB_ROW_GROUP = 131072
 
 
 def write_tombstones(path: str, doc_ids: np.ndarray) -> None:
-    """One sorted tombstone file of ``doc_ids`` at ``path``."""
+    """One sorted tombstone file of ``doc_ids`` at ``path``, written under
+    a dot-prefixed temporary name and renamed into place, so no reader
+    lists it half written."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
     pq.write_table(
         pa.table({"doc_id": pa.array(np.unique(doc_ids), type=pa.int64())}),
-        path, row_group_size=_TOMB_ROW_GROUP)
+        tmp, row_group_size=_TOMB_ROW_GROUP)
+    os.replace(tmp, path)
 
 
 def append_tombstone_batch(index_dir: str, doc_ids: np.ndarray) -> None:
     """Driver-local tombstone append (for op batches bounded by bulk size):
     one new sorted batch file under ``tombstones/`` — the full set is never
     read or rewritten."""
-    import uuid
-
-    d = tombstones_dir(index_dir)
+    d = store.tombstones_dir(index_dir)
     os.makedirs(d, exist_ok=True)
     write_tombstones(os.path.join(d, f"batch-{uuid.uuid4().hex}.parquet"), doc_ids)
 
@@ -182,45 +135,37 @@ def append_tombstones(spark: SparkSession, index_dir: str, ids: DataFrame) -> in
     view — no driver materialization at any delete rate. Returns the
     number of NEW tombstones."""
     ids = ids.select(F.col("doc_id").cast("long")).distinct()
-    ex_df = tombstones_df(spark, _tomb_paths(index_dir))
+    ex_df = tombstones_df(spark, store.tombstone_files(index_dir))
     if ex_df is not None:
         ids = ids.join(ex_df, "doc_id", "left_anti")
     ids = ids.sortWithinPartitions("doc_id").persist()
     try:
         n = ids.count()
         if n:
-            ids.write.mode("append").parquet(tombstones_dir(index_dir))
+            ids.write.mode("append").parquet(store.tombstones_dir(index_dir))
     finally:
         ids.unpersist()
     return int(n)
 
 
-def reconcile_tombstones(spark: SparkSession, index_dir: str, docs: DataFrame) -> None:
-    """Post-merge tombstone reconciliation WITHOUT a driver collect
-    (round-2 judge weak #2): surviving = tombstones semi-joined against the
-    live docs view, written distributed (globally sorted so row-group
-    stats stay disjoint for range pruning), then swapped in with the old
-    set parked at ``.old`` until the swap completes — a crash at any point
-    leaves a superset of the surviving tombstones readable (extra masks of
-    expunged ids are no-ops)."""
-    import shutil
-
-    tdf = tombstones_df(spark, _tomb_paths(index_dir))
-    if tdf is None:
-        return
-    rec = tombstones_dir(index_dir) + ".reconcile"
+def reconcile_tombstones(index_dir: str, expunged: np.ndarray) -> None:
+    """After a merge, on the driver: the committed tombstones less the ids
+    the merge ``expunged`` (no segment holds them any more), written as
+    one batch and swapped in with the old set parked at ``.old`` until the
+    swap completes — a crash at any point leaves a superset of the
+    surviving tombstones readable (extra masks of expunged ids are
+    no-ops)."""
+    live_dir = store.tombstones_dir(index_dir)
+    rec, old_dir = live_dir + ".reconcile", live_dir + ".old"
     shutil.rmtree(rec, ignore_errors=True)
-    (
-        tdf.join(docs.select("doc_id"), "doc_id", "left_semi")
-        .sort("doc_id")
-        .write.parquet(rec)
-    )
-    live_dir = tombstones_dir(index_dir)
-    old_dir = live_dir + ".old"
+    os.makedirs(rec)
+    surviving = np.setdiff1d(read_tombstones(index_dir), expunged)
+    if len(surviving):
+        write_tombstones(os.path.join(rec, f"batch-{uuid.uuid4().hex}.parquet"), surviving)
     shutil.rmtree(old_dir, ignore_errors=True)
     if os.path.isdir(live_dir):
         os.rename(live_dir, old_dir)          # park the current set
-    os.rename(rec, live_dir)                  # swap reconciled set in
+    os.rename(rec, live_dir)                  # swap the surviving set in
     shutil.rmtree(old_dir, ignore_errors=True)
 
 
@@ -260,7 +205,7 @@ def apply_ops(
                 "version_type=external: the index's docs carry no 'version' field")
     doc_cols = ["doc_id", "url"] + (["version"] if has_version else [])
     docs = spark.read.parquet(*store.docs_glob(index_dir)).select(*doc_cols)
-    docs = mask_tombstones(spark, docs, _tomb_paths(index_dir))
+    docs = mask_tombstones(spark, docs, store.tombstone_files(index_dir))
     existing = docs.join(F.broadcast(ops.select("url").distinct()), "url")
     existing_rows = existing.collect()  # ops batch ≤ bulk size — small
     existing_ids = {r["url"]: r["doc_id"] for r in existing_rows}
@@ -400,4 +345,4 @@ def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     """Docs minus tombstones (the liveDocs view used by fetch/tests) — a
     distributed anti-join against the parquet tombstone view."""
     docs = spark.read.parquet(*store.docs_glob(index_dir))
-    return mask_tombstones(spark, docs, _tomb_paths(index_dir))
+    return mask_tombstones(spark, docs, store.tombstone_files(index_dir))

@@ -53,7 +53,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .intervals import _POS_BITS, _POS_MASK, _occ_keys
-from .topk import IndexReader, Segment, query_segments, score_verified, search_segments
+from .topk import IndexReader, Segment, _live, query_segments, score_verified, search_segments
 
 _MAX_SPANS_PER_DOC = 256  # per-node emission cap (bounds pathological docs)
 
@@ -279,9 +279,9 @@ def _span_segment(node: SpanNode, weights: dict[str, tuple[float, int]],
     score_terms = sorted(match_terms(node))
     avgdl, k1, b = reader.avgdl, reader.meta.k1, reader.meta.b
 
-    def per_segment(seg: Segment) -> pd.DataFrame | None:
+    def per_segment(seg: Segment, deleted: np.ndarray) -> pd.DataFrame | None:
         decoded = seg.positions(fetch_terms)
-        cand = seg.live(np.unique(_cand_docs(node, decoded)))
+        cand = _live(np.unique(_cand_docs(node, decoded)), deleted)
         if len(cand) == 0:
             return None
 

@@ -38,9 +38,11 @@ than the per-segment work it would spread.
   doc-id → row map of the fetch — ~20 MB for all 16 segments at 4,000
   pages. A warm search finds its terms' block rows by ``searchsorted`` and
   reads only their ``ids_bytes`` / ``tf_bytes`` (+ ``pos_bytes``) column
-  values; only the live-doc mask is derived per search, from the
-  memoized tombstone slice. Each segment yields its ≤k candidates, tagged
-  with its segment id; one failing segment fails the search;
+  values. The reader is one commit, deletes included: it holds each
+  segment's live-doc mask (its deleted doc ids), computed once, and hands
+  it to the per-segment function with the segment, so one search sees
+  one delete set. Each segment yields its ≤k candidates, tagged with its
+  segment id; one failing segment fails the search;
 - the coordinator merge ranks the candidates by score desc, doc_id asc
   (``SearchPhaseController.java:186-205``, the reference's deterministic
   tie-break) and keeps ranks ``offset .. offset+k`` (``from``/``size``);
@@ -82,6 +84,7 @@ from pyspark.sql.types import (
 from ..functions import bm25
 from ..sources import index_store as store
 from .codec import decode_blocks, decode_ids
+from .ops import tombstone_ids
 
 CAND_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -101,6 +104,11 @@ def _member(a: np.ndarray, sorted_b: np.ndarray) -> np.ndarray:
     if len(sorted_b) == 0:
         return np.zeros(len(a), dtype=bool)
     return sorted_b[np.minimum(np.searchsorted(sorted_b, a), len(sorted_b) - 1)] == a
+
+
+def _live(ids: np.ndarray, deleted: np.ndarray) -> np.ndarray:
+    """``ids`` less the sorted ``deleted``."""
+    return ids[~_member(ids, deleted)] if len(deleted) else ids
 
 
 def _ranges(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -175,13 +183,11 @@ class Segment:
     4,000 pages in 16 segments (205,291 block rows) the sixteen hold
     ~20 MB, most of it the block table's term strings.
 
-    The live-doc mask is not open state: ``tombstones`` reads the current
-    slice at every call (memoized per tombstone-file fingerprint by
-    ``ops.seg_tombstones``), so a delete shows on the next search without
-    a reopen — except on a ``frozen`` copy, a point in time's."""
+    A segment holds only what its files hold, so one object serves every
+    reader and pin that has it; which of its docs are deleted is the
+    reader's (``IndexReader.deleted``)."""
 
     def __init__(self, index_dir: str, seg: int):
-        self.index_dir = index_dir
         self.dir = store.seg_dir(index_dir, int(seg))
         self._postings = _File(os.path.join(self.dir, "postings.parquet"))
         self._docs = _File(os.path.join(self.dir, "docs.parquet"))
@@ -194,7 +200,6 @@ class Segment:
         ids = docs["doc_id"].to_numpy()
         self._rows = np.argsort(ids, kind="mergesort")
         self.norms = ids[self._rows], byte4_to_int(docs["norm"].to_numpy())[self._rows]
-        self._frozen: np.ndarray | None = None
 
     @property
     def doc_ids(self) -> np.ndarray:
@@ -263,41 +268,6 @@ class Segment:
         return (t[first], np.add.reduceat(self.blocks["n"][rows].astype(np.int64), first),
                 np.add.reduceat(self.blocks["sum_tf"][rows].astype(np.int64), first))
 
-    @property
-    def tombstones(self) -> np.ndarray:
-        """Sorted deleted doc ids in this segment's doc-id range: the
-        segment range-reads ONLY its own tombstone slice, so a giant
-        delete_by_query never becomes a per-segment memory tax."""
-        if self._frozen is not None:
-            return self._frozen
-        ids = self.doc_ids
-        if not len(ids):
-            return ids
-        from .ops import seg_tombstones
-
-        return seg_tombstones(self.index_dir, self.dir, int(ids[0]), int(ids[-1]))
-
-    def frozen(self) -> "Segment":
-        """This open segment with its live-doc mask fixed as of now: the
-        view a point in time holds."""
-        pinned = copy.copy(self)
-        pinned._frozen = self.tombstones
-        return pinned
-
-    def live(self, ids: np.ndarray) -> np.ndarray:
-        """``ids`` minus deleted and superseded docs (the liveDocs mask)."""
-        tombs = self.tombstones
-        if len(ids) == 0 or len(tombs) == 0:
-            return ids
-        return ids[~_member(ids, tombs)]
-
-    @property
-    def allowed(self) -> np.ndarray | None:
-        """Sorted live doc ids, or None when no doc of the segment is dead
-        (derived anew at every call)."""
-        live = self.live(self.doc_ids)
-        return None if len(live) == len(self.doc_ids) else live
-
     def docs_batches(self, columns: list[str], batch_size: int):
         """Stream the stored docs in file (index-sort) order."""
         yield from self._docs.file.iter_batches(batch_size=batch_size, columns=columns)
@@ -318,14 +288,15 @@ def _score_segment_arrays(
     avgdl: float,
     k1: float,
     b: float,
-    allowed: np.ndarray | None,
+    deleted: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode + score all blocks in `post` → (doc_ids, scores, per-doc term counts)."""
+    """Decode + score all blocks in `post` → (doc_ids, scores, per-doc term
+    counts) of the docs not in the sorted ``deleted``."""
     docs, tfs = decode_blocks(post["first_doc_id"], post["n"], post["ids_bytes"], post["tf_bytes"])
     w = np.repeat([weights[t][0] for t in post["term"]], post["n"])
     scores = w * bm25.tf_norm(tfs, norm_ql[np.searchsorted(norm_doc_ids, docs)], avgdl, k1, b)
-    if allowed is not None:
-        ok = _member(docs, allowed)
+    if len(deleted):
+        ok = ~_member(docs, deleted)
         docs, scores = docs[ok], scores[ok]
     if len(docs) == 0:
         return docs, scores, np.zeros(0, dtype=np.int64)
@@ -349,8 +320,9 @@ def _topk_from_arrays(docs, scores, counts, k, msm) -> pd.DataFrame:
     )
 
 
-def _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed) -> pd.DataFrame:
-    """Region-at-a-time block-max WAND within one segment."""
+def _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, deleted) -> pd.DataFrame:
+    """Region-at-a-time block-max WAND within one segment, over the docs
+    not in the sorted ``deleted``."""
     terms = post["term"].to_numpy()
     first = post["first_doc_id"].to_numpy()
     last = post["last_doc_id"].to_numpy()
@@ -419,8 +391,8 @@ def _wand_segment(post, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed
             continue
         docs = np.concatenate(docs_acc)
         scores = np.concatenate(score_acc)
-        if allowed is not None and len(docs):
-            ok = _member(docs, allowed)
+        if len(deleted):
+            ok = ~_member(docs, deleted)
             docs, scores = docs[ok], scores[ok]
         if len(docs) == 0:
             continue
@@ -487,17 +459,16 @@ def _bm25_segment(
 ):
     """Per-segment fn for a batch of term queries: the segment's postings
     are read ONCE for the union of every query's terms (one read of their
-    block rows, one tombstone mask), then the WAND / scored loop runs
-    per query on the in-memory slice. per_q: qid -> (live_terms, msm,
-    mode); qid None = a single query, emitted without a qid column."""
+    block rows), then the WAND / scored loop runs per query on the
+    in-memory slice. per_q: qid -> (live_terms, msm, mode); qid None = a
+    single query, emitted without a qid column."""
     live = sorted({t for terms, _, _ in per_q.values() for t in terms})
 
-    def per_segment(seg: Segment) -> pd.DataFrame | None:
+    def per_segment(seg: Segment, deleted: np.ndarray) -> pd.DataFrame | None:
         post = seg.postings(live)
         if len(post) == 0:
             return None
         norm_doc_ids, norm_ql = seg.norms
-        allowed = seg.allowed
         outs = []
         for qid, (terms, msm, mode) in per_q.items():
             post_q = post[post["term"].isin(terms)]
@@ -505,12 +476,12 @@ def _bm25_segment(
                 continue
             if mode == "wand" and msm <= 1:
                 r = _wand_segment(
-                    post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, allowed
+                    post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, k, deleted
                 )
             else:
                 r = _topk_from_arrays(
                     *_score_segment_arrays(
-                        post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, allowed
+                        post_q, weights, norm_doc_ids, norm_ql, avgdl, k1, b, deleted
                     ),
                     k, msm,
                 )
@@ -523,10 +494,11 @@ def _bm25_segment(
 
 
 class IndexReader:
-    """Open index handle: the index meta, the live segment list and one
-    open ``Segment`` per live segment — the DfsPhase's per-query stats
-    round-trip, on the driver with no Spark job. ``Engine`` owns one reader
-    per index and every index search path (match, msearch, phrase,
+    """Open index handle: the snapshot of one commit — the index meta, the
+    live segment list with one open ``Segment`` each, and the commit's
+    deletes — and the DfsPhase's per-query stats round-trip, on the driver
+    with no Spark job (Lucene's ``DirectoryReader``). ``Engine`` owns one
+    reader per index and every index search path (match, msearch, phrase,
     phrase_prefix, intervals, spans, the sorted scan) takes it.
 
     A term's df is the sum of its per-segment df over the committed
@@ -536,40 +508,54 @@ class IndexReader:
     ids, ``sum_dl`` their ``Segment.sum_dl``, and ``avgdl`` is their ratio.
     Masked docs count until a merge expunges them, and no write can leave
     a statistic behind its postings, as none is persisted; the meta gives
-    only the settings (analyzer, k1, b, ...). A pin keeps its parent's
-    statistics. Each segment is opened on first use — once, however many
-    threads ask; the first search opens the missing ones on the
-    query-phase pool — and kept, keyed by the segment and its postings
-    file's identity. At 4,000 pages in 16 segments the open state is
-    ~20 MB (``Segment``); at web scale the block table needs an on-disk
-    term dictionary that is read by range.
+    only the settings (analyzer, k1, b, ...). Each segment is opened on
+    first use — once, however many threads ask; the first search opens
+    the missing ones on the query-phase pool — and kept, keyed by the
+    segment and its postings file's identity. At 4,000 pages in 16
+    segments the open state is ~20 MB (``Segment``); at web scale the
+    block table needs an on-disk term dictionary that is read by range.
 
-    A reader is a snapshot of one commit: ``state``
-    (``index_store.commit_state``) is its invalidation key, and
-    ``Engine._reader`` reopens the reader when the state on disk differs —
-    so a bulk, delete or merge from this process, a second ``Engine`` or
-    the streaming ingest is seen by the next search. A reopened reader
-    takes over the open segments that survived the write; a delete, which
-    leaves the state alone, reaches the next search through each segment's
-    live-doc mask. Safe to share between threads."""
+    The deletes are the commit's tombstone files, each read once when the
+    reader opens and kept by file identity. From them the reader derives
+    each segment's live-doc mask, its sorted deleted doc ids
+    (``deleted``), once; ``query_phase`` hands it to the per-segment
+    function with the segment. A delete landing mid-search therefore
+    reaches no segment of that search.
+
+    ``state`` (``index_store.commit_state``) is the reader's invalidation
+    key: ``Engine._reader`` reopens the reader when the state on disk
+    differs — so a bulk, delete or merge from this process, a second
+    ``Engine`` or the streaming ingest is seen by the next search. A
+    reopened reader takes over the open segments and the tombstone files
+    that survived the write. Safe to share between threads."""
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 state: store.CommitState | None = None, segments: dict | None = None):
+                 state: store.CommitState | None = None, segments: dict | None = None,
+                 tombstones: dict | None = None):
         self.spark = spark
         self.index_dir = index_dir
-        self.state = state or store.commit_state(index_dir)
-        self.meta = store.IndexMeta.loads(self.state.meta)
-        self.segs = list(self.state.segs)
-        self._ids = dict(zip(self.state.segs, self.state.postings))
+        state = state or store.commit_state(index_dir)
+        tombstones = tombstones or {}
+        while True:
+            try:
+                self._tombstones = {f: tombstones[f] if f in tombstones else tombstone_ids(f[0])
+                                    for f in state.tombstones}
+                break
+            except FileNotFoundError:  # a merge swapped the tombstones: list again
+                state = store.commit_state(index_dir)
+        self.state = state
+        self.meta = store.IndexMeta.loads(state.meta)
+        self.segs = list(state.segs)
+        self._ids = dict(zip(state.segs, state.postings))
         segments = segments or {}
         self._open = {k: segments[k] for k in self._ids.items() if k in segments}
         self._opening: dict = {}  # key -> the lock its one opener holds
         self._lock = threading.Lock()
 
     def reopen(self, state: store.CommitState) -> "IndexReader":
-        """A reader on ``state`` that keeps this reader's open segments
-        ``state`` still holds."""
-        return IndexReader(self.spark, self.index_dir, state, self._open)
+        """A reader on ``state`` that keeps this reader's open segments and
+        tombstone files ``state`` still holds."""
+        return IndexReader(self.spark, self.index_dir, state, self._open, self._tombstones)
 
     def segment(self, s: int) -> Segment:
         """Segment ``s``, opened on first use: a thread that finds another
@@ -594,24 +580,21 @@ class IndexReader:
         return [self.segment(s) for s in self._ids]
 
     def pin(self, segs=None) -> "IndexReader":
-        """A point in time over ``segs`` of this reader's commit (None:
-        all): each segment open now, its live-doc mask frozen as of now.
-        The view sees no later write or delete, and it outlives a merge
-        that retires its segments, whose files it holds open. The reader
-        of an ``Engine._pin``: a point in time or a scroll pins the whole
-        commit; an async search's partial reduce the segments it reduces."""
+        """This reader restricted to ``segs`` (None: all), with this
+        reader's statistics and live-doc masks: the reader of an
+        ``Engine._pin``. A point in time or a scroll pins the whole commit;
+        an async search's partial reduce the segments it reduces. A reader
+        never changes, so the view sees no later write or delete, and it
+        outlives a merge that retires its segments, whose files its
+        segments hold open."""
         pinned = copy.copy(self)
         # scores over a part of the commit use the whole commit's statistics
-        pinned._totals = self._totals
+        pinned._totals, pinned._deleted = self._totals, self._deleted
         if segs is not None:
             keep = set(segs)
             pinned.segs = [s for s in self.segs if s in keep]
             pinned._ids = {s: i for s, i in self._ids.items() if s in keep}
-        # the opens land in this reader's shared state; the copy holds its
-        # own frozen segments
-        pinned._open = {(s, i): seg.frozen()
-                        for (s, i), seg in zip(pinned._ids.items(), pinned._segments())}
-        pinned._opening = {}
+        pinned._open = {(s, i): self.segment(s) for s, i in pinned._ids.items()}
         return pinned
 
     @functools.cached_property
@@ -619,6 +602,20 @@ class IndexReader:
         """(N, sum_dl) over the committed segments."""
         segs = self._segments()
         return sum(len(seg.doc_ids) for seg in segs), sum(seg.sum_dl for seg in segs)
+
+    @functools.cached_property
+    def _deleted(self) -> dict[int, np.ndarray]:
+        """Per committed segment, the sorted doc ids of it that the
+        commit's tombstones hold."""
+        parts = [ids for ids in self._tombstones.values() if len(ids)]
+        dead = np.unique(np.concatenate(parts)) if parts else np.zeros(0, dtype=np.int64)
+        return {s: seg.doc_ids[_member(seg.doc_ids, dead)]
+                for s, seg in zip(self._ids, self._segments())}
+
+    def deleted(self, s: int) -> np.ndarray:
+        """Segment ``s``'s live-doc mask: its deleted and superseded doc
+        ids, sorted."""
+        return self._deleted[s]
 
     @property
     def doc_count(self) -> int:
@@ -637,9 +634,8 @@ class IndexReader:
         return float(s) / n if n else 1.0
 
     def live_count(self) -> int:
-        """The live docs of the committed segments: each segment's doc ids
-        minus its tombstone slice."""
-        return sum(len(seg.live(seg.doc_ids)) for seg in self._segments())
+        """The live docs of the committed segments."""
+        return self.doc_count - sum(map(len, self._deleted.values()))
 
     def _runs(self, prefix: str):
         """Per segment, its dictionary's terms that start with ``prefix``
@@ -920,11 +916,14 @@ def _on_pool(spark: SparkSession, fn, items) -> list:
 
 
 def query_phase(reader: IndexReader, segs: list[int], per_segment) -> pd.DataFrame | None:
-    """``per_segment(Segment) -> candidates | None`` over ``segs``: every
-    segment's candidates in one frame, each row tagged with its ``seg``
-    (None when no segment has one)."""
+    """``per_segment(Segment, deleted) -> candidates | None`` over ``segs``,
+    each segment handed with the reader's live-doc mask (its sorted deleted
+    doc ids): every segment's candidates in one frame, each row tagged
+    with its ``seg`` (None when no segment has one)."""
+    deleted = {s: reader.deleted(s) for s in segs}  # computed off the pool
+
     def run(s: int) -> pd.DataFrame | None:
-        r = per_segment(reader.segment(s))
+        r = per_segment(reader.segment(s), deleted[s])
         return None if r is None or not len(r) else r.assign(seg=s)
 
     outs = [r for r in _on_pool(reader.spark, run, segs) if r is not None]
@@ -1027,10 +1026,10 @@ def search_term_docs(reader: IndexReader, fields, terms=(), prefix: str | None =
     ``doc_id, *fields`` rows. The constant-score rewrite of a multi-term
     leaf (prefix, fuzzy), whose every doc scores the boost. Each segment
     reads only the ``ids_bytes`` of the terms' block rows (a prefix's are
-    one run of its term-sorted block table) and subtracts its tombstones;
+    one run of its term-sorted block table) and subtracts its deleted docs;
     no norm is read and nothing is scored. No Spark job."""
-    def per_segment(seg: Segment) -> pd.DataFrame | None:
-        ids = seg.live(seg.term_docs(terms, prefix))
+    def per_segment(seg: Segment, deleted: np.ndarray) -> pd.DataFrame | None:
+        ids = _live(seg.term_docs(terms, prefix), deleted)
         return pd.DataFrame({"doc_id": ids}) if len(ids) else None
 
     segs = query_segments(reader) if prefix is not None or len(terms) else []
@@ -1049,7 +1048,7 @@ def msearch_topk(
 ) -> DataFrame:
     """Batched _msearch at the postings layer: M top-k queries in ONE query
     phase (not M) — per-query results identical to M search_topk calls,
-    but the per-segment postings/norms/tombstone reads are amortized across
+    but the per-segment postings and norms reads are amortized across
     the batch (the reference coordinates _msearch as one round the same
     way, ``TransportMultiSearchAction.java``). No Spark job.
 
@@ -1108,13 +1107,12 @@ def sorted_scan(
     # '9' > '10' at the coordinator merge
     out_schema = reader.docs_schema(out_cols)
 
-    def per_segment(seg: Segment) -> pd.DataFrame | None:
+    def per_segment(seg: Segment, deleted: np.ndarray) -> pd.DataFrame | None:
         taken = []
         n_live = 0
-        tombs = seg.tombstones
         for batch in seg.docs_batches(out_cols, max(k, 128)):
             part = batch.to_pandas()
-            part = part[~_member(part["doc_id"].to_numpy(), tombs)]
+            part = part[~_member(part["doc_id"].to_numpy(), deleted)]
             taken.append(part)
             n_live += len(part)
             if n_live >= k:

@@ -30,6 +30,14 @@ Layout:
                                            is read from these blocks)
       manifests/part-<pid>.json  {pid, lineage, input_rows, n_docs, sum_dl,
                                   n_terms, n_blocks, status, files}
+      manifests/merge-<seg>.json {new_seg, merged_from, shard, n_docs, ...}
+      tombstones/*.parquet       doc_id — the deleted and superseded docs
+                                  (the liveDocs analog), one file per delete
+                                  batch, each committed by rename; a merge
+                                  swaps in the set it leaves, parking the old
+                                  one at tombstones.old/ (counted while it
+                                  exists). ``commit_state`` lists them.
+      pins/<id>/                 a point in time's hard links (api.Engine._pin)
 """
 
 from __future__ import annotations
@@ -302,29 +310,54 @@ def docs_glob(index_dir: str) -> list[str]:
     return [os.path.join(seg_dir(index_dir, s), "docs.parquet") for s in list_segs(index_dir)]
 
 
+def tombstones_dir(index_dir: str) -> str:
+    """The tombstone set, one parquet file per batch: ``delete_by_query``
+    writes its matching doc_ids here as Spark parquet output — no driver
+    collect, so a broad delete never funnels ids through one process — and
+    a bulk appends one driver-written batch (``operators/ops.py``). A
+    merge swaps in the set it leaves."""
+    return os.path.join(index_dir, "tombstones")
+
+
+def tombstone_files(index_dir: str) -> list[str]:
+    """Every committed tombstone file: the batches under ``tombstones/``
+    plus its parked ``tombstones.old/`` twin while a merge's swap has not
+    finished (worst case that masks ids the merge expunged, a no-op). A
+    dot-prefixed name is a batch still being written."""
+    paths = []
+    for d in (tombstones_dir(index_dir), tombstones_dir(index_dir) + ".old"):
+        if os.path.isdir(d):
+            paths.extend(os.path.join(d, f) for f in sorted(os.listdir(d))
+                         if f.endswith(".parquet") and not f.startswith("."))
+    return paths
+
+
 @dataclass(frozen=True)
 class CommitState:
-    """What an open reader depends on, as committed on disk: the raw
-    ``index_meta.json`` (the settings), the live segment list and each live
-    segment's postings file identity (inode, mtime), so a partition a
-    resumed build rewrote under the same id is a new segment. A bulk,
-    forcemerge or streaming batch — from any process — changes the segment
-    list, a settings change the meta, so comparing states is the reader's
-    staleness test; a delete changes neither and reaches an open reader
-    through each segment's live-doc mask."""
+    """One commit, as on disk: the raw ``index_meta.json`` (the settings),
+    the live segment list, each live segment's postings file identity
+    (inode, mtime), so a partition a resumed build rewrote under the same
+    id is a new segment, and the committed tombstone files as (path,
+    inode, mtime). A bulk, delete, forcemerge or streaming batch — from
+    any process — changes the segments or the tombstones, a settings
+    change the meta, so comparing states is the reader's staleness
+    test."""
 
     meta: bytes
     segs: tuple
     postings: tuple
+    tombstones: tuple
 
 
 def commit_state(index_dir: str) -> CommitState:
     with open(meta_path(index_dir), "rb") as f:
         meta = f.read()
     while True:
-        segs = list_segs(index_dir)
         try:
+            segs = list_segs(index_dir)
             files = [os.stat(os.path.join(seg_dir(index_dir, s), "postings.parquet")) for s in segs]
+            tombs = [(p, os.stat(p)) for p in tombstone_files(index_dir)]
         except FileNotFoundError:
-            continue  # a merge retired a listed segment: list again
-        return CommitState(meta, tuple(segs), tuple((f.st_ino, f.st_mtime_ns) for f in files))
+            continue  # a merge retired a listed segment or tombstone file: list again
+        return CommitState(meta, tuple(segs), tuple((f.st_ino, f.st_mtime_ns) for f in files),
+                           tuple((p, f.st_ino, f.st_mtime_ns) for p, f in tombs))

@@ -7,6 +7,7 @@ of a doc's live version."""
 
 from __future__ import annotations
 
+import functools
 import sys
 import threading
 
@@ -168,6 +169,27 @@ def test_alias_search_counts_aggs_and_total_over_every_index(two_indices):
     assert sum(o["total"]["value"] for o in singles) == 4
     capped = es.search("both", {**body, "track_total_hits": 3})
     assert capped["total"] == {"value": 3, "relation": "gte"}
+
+
+def test_track_total_hits_false_counts_nothing(spark, two_indices):
+    """``track_total_hits: false`` disables hit counting, as in the
+    reference: on one index and on an alias the response has no
+    ``total``, and the search starts no more Spark jobs than the same
+    search without the key."""
+    from tests.test_reader import _jobs
+
+    es = two_indices
+    # each run keeps its own job group: ``_jobs`` names it by id(run)
+    bodies = {"plain": SPARK, "false": {**SPARK, "track_total_hits": False}}
+    runs = {(ix, name): functools.partial(es.search, ix, body)
+            for ix in ("a", "both") for name, body in bodies.items()}
+    for ix in ("a", "both"):
+        _, plain = _jobs(spark, runs[ix, "plain"])
+        out, n_jobs = _jobs(spark, runs[ix, "false"])
+        assert "total" not in out, ix
+        assert n_jobs == plain, ix
+        assert sorted(r.url for r in out["hits"].collect()) == \
+            sorted(r.url for r in es.search(ix, SPARK)["hits"].collect())
 
 
 def test_aggregations_is_a_synonym_of_aggs(two_indices):

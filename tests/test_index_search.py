@@ -14,6 +14,8 @@ from elasticsearch_spark.sources import index_store as store
 from elasticsearch_spark.sources.pages import query_set
 from tests.conftest import assert_rank_identical
 
+NO_DELETES = np.zeros(0, dtype=np.int64)  # a segment's live-doc mask with no delete
+
 
 def run(spark, index_dir, url_of, terms, op="or", mode="wand", k=10, msm=None):
     res = search_topk(
@@ -176,9 +178,9 @@ def test_wand_scans_regions_tying_kth_score():
         "ids_bytes": [ids_a, ids_b], "tf_bytes": [tf_a, tf_b],
     })
     weights = {"a": (1.0, 2), "b": (1.0, 2)}
-    wand = _wand_segment(post, weights, norm_doc_ids, norm_ql, 10.0, 1.2, 0.75, 2, None)
+    wand = _wand_segment(post, weights, norm_doc_ids, norm_ql, 10.0, 1.2, 0.75, 2, NO_DELETES)
     naive = _topk_from_arrays(
-        *_score_segment_arrays(post, weights, norm_doc_ids, norm_ql, 10.0, 1.2, 0.75, None),
+        *_score_segment_arrays(post, weights, norm_doc_ids, norm_ql, 10.0, 1.2, 0.75, NO_DELETES),
         2, 1,
     )
     exp = sorted(zip(naive["doc_id"], naive["score"]), key=lambda t: (-t[1], t[0]))
@@ -186,12 +188,12 @@ def test_wand_scans_regions_tying_kth_score():
     assert [d for d, _ in exp] == [100, 1]  # the tie-break scenario is live
     assert got == exp
 
-    # doc 1 tombstoned (``allowed`` = the live ids): doc 2 now ties doc 101
-    # and wins on doc_id — on both paths alike
-    allowed = np.array([2, 100, 101], dtype=np.int64)
-    wand = _wand_segment(post, weights, norm_doc_ids, norm_ql, 10.0, 1.2, 0.75, 2, allowed)
+    # doc 1 tombstoned (``deleted`` = the segment's deleted ids): doc 2 now
+    # ties doc 101 and wins on doc_id — on both paths alike
+    deleted = np.array([1], dtype=np.int64)
+    wand = _wand_segment(post, weights, norm_doc_ids, norm_ql, 10.0, 1.2, 0.75, 2, deleted)
     naive = _topk_from_arrays(
-        *_score_segment_arrays(post, weights, norm_doc_ids, norm_ql, 10.0, 1.2, 0.75, allowed),
+        *_score_segment_arrays(post, weights, norm_doc_ids, norm_ql, 10.0, 1.2, 0.75, deleted),
         2, 1,
     )
     exp = sorted(zip(naive["doc_id"], naive["score"]), key=lambda t: (-t[1], t[0]))
@@ -223,7 +225,7 @@ def test_wand_decodes_only_visited_regions(monkeypatch):
     norm_ql = np.full(len(norm_ids), 10, dtype=np.int64)
     weights = {"a": (1.0, 300), "b": (1.0, 2)}
 
-    arrays = topk._score_segment_arrays(post, weights, norm_ids, norm_ql, 10.0, 1.2, 0.75, None)
+    arrays = topk._score_segment_arrays(post, weights, norm_ids, norm_ql, 10.0, 1.2, 0.75, NO_DELETES)
     calls = []
     real = topk.decode_blocks
 
@@ -235,7 +237,7 @@ def test_wand_decodes_only_visited_regions(monkeypatch):
 
     def check(k):
         calls.clear()
-        wand = topk._wand_segment(post, weights, norm_ids, norm_ql, 10.0, 1.2, 0.75, k, None)
+        wand = topk._wand_segment(post, weights, norm_ids, norm_ql, 10.0, 1.2, 0.75, k, NO_DELETES)
         naive = topk._topk_from_arrays(*arrays, k, 1)
         got = sorted(zip(wand["doc_id"], wand["score"]), key=lambda t: (-t[1], t[0]))
         exp = sorted(zip(naive["doc_id"], naive["score"]), key=lambda t: (-t[1], t[0]))

@@ -118,7 +118,7 @@ def test_segment_skipped_before_decode_when_a_required_leaf_is_absent(spark, ind
 
     def run(tree):
         fn = ivs._tree_segment(tree, reader.term_weights(ivs.tree_terms(tree)), reader, 10)
-        return [fn(seg) for seg in segs]
+        return [fn(seg, np.zeros(0, dtype=np.int64)) for seg in segs]
 
     assert run(all_of([leaf(["the"]), leaf(["zzzabsent"])], ordered=True)) == [None] * len(segs)
     assert decoded == []

@@ -5,6 +5,7 @@ outlives the commit it was opened on."""
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import sys
@@ -19,6 +20,7 @@ from pyspark.sql import functions as F
 
 from elasticsearch_spark.api import Engine
 from elasticsearch_spark.operators import topk
+from elasticsearch_spark.operators.ops import read_tombstones
 from elasticsearch_spark.operators.phrase import highlight
 from elasticsearch_spark.operators.topk import IndexReader, _prefix_end, msearch_topk, search_topk
 from elasticsearch_spark.sources import index_store as store
@@ -366,8 +368,8 @@ def test_query_phase_tasks_may_not_use_the_pool(es):
     refused loudly instead of deadlocking the shared pool."""
     reader = es._reader("pages")
 
-    def nested(seg):
-        return topk.query_phase(reader, reader.segs[:1], lambda s: None)
+    def nested(seg, deleted):
+        return topk.query_phase(reader, reader.segs[:1], lambda s, d: None)
 
     with pytest.raises(RuntimeError, match="may not wait on the query-phase pool"):
         topk.query_phase(reader, reader.segs, nested)
@@ -461,26 +463,99 @@ def test_threads_cold_start_one_reader(es, spark, monkeypatch):
 
 
 def test_delete_reaches_the_open_reader(spark, tmp_path):
-    """A delete changes no segment: the open reader's next search masks the
-    deleted doc without a reopen."""
+    """A delete is a new commit: ``Engine.search`` and the reader
+    ``Engine._reader`` reopens on it mask the deleted doc, while a reader
+    opened before the delete keeps its snapshot — its hits and its live
+    count."""
     es = Engine(spark, root=str(tmp_path))
     es.create_index("ix", num_partitions=2)
     es.bulk("ix", _docs(spark, [(f"u{i}", f"common words {i}", "en") for i in range(6)]))
-    reader = es._reader("ix")
+    before = es._reader("ix")
 
-    def urls():
+    def urls(reader):
         return {r["url"] for r in search_topk(spark, reader.index_dir, ["common"], k=10,
                                               reader=reader).collect()}
 
-    assert urls() == {f"u{i}" for i in range(6)}
+    everything = {f"u{i}" for i in range(6)}
+    assert urls(before) == everything
     es.delete("ix", ["u3"])
-    assert urls() == {f"u{i}" for i in range(6)} - {"u3"}
-    assert reader.live_count() == 5
+    after = es._reader("ix")
+    assert after is not before
+    body = {"query": {"match": {"text": "common"}}, "size": 10}
+    assert {u for u, _ in _ranked(es, body)} == urls(after) == everything - {"u3"}
+    assert after.live_count() == 5
+    assert urls(before) == everything
+    assert before.live_count() == 6
+
+
+def test_a_search_sees_one_delete_set(spark, tmp_path, monkeypatch):
+    """A delete that lands while a search's query phase runs reaches none
+    of that search's segments, and every segment of the next search: a
+    search reads the deletes of the commit its reader was opened on."""
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=3)
+    es.bulk("ix", _docs(spark, [(f"u{i:02d}", f"common words {i}", "en") for i in range(12)]))
+    body = {"query": {"match": {"text": "common"}}, "size": 20}
+    everything = {f"u{i:02d}" for i in range(12)}
+    assert {u for u, _ in _ranked(es, body)} == everything
+    reader = es._reader("ix")
+    assert len(reader.segs) >= 3
+    doomed = {reader.segment(s).fetch(reader.segment(s).doc_ids[:1], ["url"])["url"][0]
+              for s in reader.segs}  # one doc of every segment
+    postings = topk.Segment.postings
+    calls, lock = [], threading.Lock()
+
+    def deleting(self, terms, positions=False):
+        with lock:
+            first = not calls
+            calls.append(self.dir)
+        if first:
+            es.delete("ix", sorted(doomed))
+        return postings(self, terms, positions)
+
+    monkeypatch.setattr(topk.Segment, "postings", deleting)
+    during = {u for u, _ in _ranked(es, body)}
+    monkeypatch.setattr(topk.Segment, "postings", postings)
+    assert len(calls) == len(reader.segs)
+    assert during == everything
+    assert {u for u, _ in _ranked(es, body)} == everything - doomed
+
+
+def test_tombstone_batch_commits_by_rename(spark, tmp_path, monkeypatch):
+    """A tombstone batch appears under its name only once whole: a search
+    that runs while the batch's parquet file is half written neither
+    opens it nor masks its doc, and the next search masks it."""
+    import pyarrow.parquet as pq
+
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", _docs(spark, [(f"u{i}", f"common words {i}", "en") for i in range(6)]))
+    body = {"query": {"match": {"text": "common"}}, "size": 10}
+    everything = {f"u{i}" for i in range(6)}
+    assert {u for u, _ in _ranked(es, body)} == everything
+    write_table, during = pq.write_table, []
+
+    def half_written(table, where, **kw):
+        write_table(table, where, **kw)
+        with open(where, "rb") as f:
+            data = f.read()
+        with open(where, "wb") as f:
+            f.write(data[:len(data) // 2])
+        during.append({u for u, _ in _ranked(es, body)})
+        with open(where, "wb") as f:
+            f.write(data)
+
+    monkeypatch.setattr(pq, "write_table", half_written)
+    es.delete("ix", ["u3"])
+    monkeypatch.setattr(pq, "write_table", write_table)
+    assert during == [everything]
+    assert {u for u, _ in _ranked(es, body)} == everything - {"u3"}
 
 
 def test_reopen_keeps_the_surviving_open_segments(spark, tmp_path, monkeypatch):
     """A bulk reopens the reader with the old segments' open state and opens
-    only the new segments; a forcemerge's reader drops the retired ones."""
+    only the new segments; a delete reopens it with every segment kept and
+    none opened; a forcemerge's reader drops the retired ones."""
     es = Engine(spark, root=str(tmp_path))
     es.create_index("ix", num_partitions=2)
     es.bulk("ix", _docs(spark, [(f"u{i}", f"common words {i}", "en") for i in range(6)]))
@@ -496,11 +571,38 @@ def test_reopen_keeps_the_surviving_open_segments(spark, tmp_path, monkeypatch):
     assert all(r.segment(s) is seg for s, seg in kept.items())
     assert sorted(opened) == sorted(set(r.segs) - set(kept))
 
+    es.delete("ix", ["u1"])
+    assert "u1" not in dict(_ranked(es, BODY))
+    deleted = es._reader("ix")
+    assert deleted is not r and deleted.segs == r.segs
+    assert all(deleted.segment(s) is r.segment(s) for s in r.segs)
+    assert sorted(opened) == sorted(set(r.segs) - set(kept))
+
     es.forcemerge("ix", **FULL_MERGE)
     _ranked(es, BODY)
     merged = es._reader("ix")
     assert not set(merged.segs) & set(r.segs)
     assert {s for s, _ in merged._open} == set(merged.segs)
+
+
+def test_forcemerge_runs_no_job_past_its_tasks(spark, tmp_path):
+    """A forcemerge that expunges deletes runs no more Spark jobs than one
+    with nothing to expunge: the tombstones the merge leaves are written
+    on the driver from the ids its tasks expunged."""
+    runs, jobs = [], []  # each run kept alive: ``_jobs`` names its group by id(run)
+    for deleted in ([], ["u01", "u02", "u07"]):
+        es = Engine(spark, root=str(tmp_path / str(len(deleted))))
+        es.create_index("ix", num_partitions=3)
+        es.bulk("ix", _docs(spark, [(f"u{i:02d}", f"common words {i}", "en") for i in range(12)]))
+        if deleted:
+            es.delete("ix", deleted)
+        runs.append(functools.partial(es.forcemerge, "ix", **FULL_MERGE))
+        out, n_jobs = _jobs(spark, runs[-1])
+        assert out["merges"] == 1 and out["merged_docs"] == 12 - len(deleted)
+        assert len(read_tombstones(es._dir("ix"))) == 0
+        assert es.stats("ix")["docs"] == {"count": 12 - len(deleted), "deleted": 0}
+        jobs.append(n_jobs)
+    assert jobs[1] == jobs[0]
 
 
 def test_pit_and_scroll_outlive_a_merge(spark, tmp_path):

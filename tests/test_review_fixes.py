@@ -394,14 +394,12 @@ def test_change_point_capped(spark):
 
 def test_tombstones_range_sliced_and_reconciled(spark, tmp_path):
     """Delete-heavy path: tombstone reads are per-segment range slices and
-    the post-merge reconciliation is distributed (no driver materialization
-    of the delete set)."""
+    the post-merge reconciliation is a driver-side rewrite of the
+    committed set less the expunged ids."""
     import numpy as np
 
     from elasticsearch_spark.api import Engine
     from elasticsearch_spark.operators import ops as ops_mod
-    from elasticsearch_spark.operators.topk import Segment
-    from elasticsearch_spark.sources import index_store as store
 
     eng = Engine(spark, root=str(tmp_path / "root"))
     eng.create_index("dh", num_partitions=4, num_shards=2)
@@ -418,14 +416,14 @@ def test_tombstones_range_sliced_and_reconciled(spark, tmp_path):
     sl = ops_mod.read_tombstones_range(idx, lo, hi)
     assert sl.min() >= lo and sl.max() <= hi
     assert np.array_equal(sl, full[(full >= lo) & (full <= hi)])
-    # per-segment slice ⊆ full and covers only that segment's range
-    segs = store.list_segs(idx)
-    per_seg = [Segment(idx, s).tombstones for s in segs]
+    # the reader's per-segment masks (each ⊆ full) cover the full set
+    reader = eng._reader("dh")
+    per_seg = [reader.deleted(s) for s in reader.segs]
     assert set(np.concatenate(per_seg).tolist()) == set(full.tolist())
     # search still correct: only live docs
     hits = eng.search("dh", {"query": {"match": {"text": "common"}}, "size": 500})
     assert hits["hits"].count() == 100
-    # merge expunges + reconciles distributed; tombstones now empty
+    # merge expunges + reconciles on the driver; tombstones now empty
     eng.forcemerge("dh")
     assert len(ops_mod.read_tombstones(idx)) == 0
     hits = eng.search("dh", {"query": {"match": {"text": "common"}}, "size": 500})
