@@ -38,8 +38,10 @@ import uuid
 from typing import NamedTuple
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .functions import analysis
 from .operators import ops as ops_mod
@@ -48,7 +50,9 @@ from .operators.phrase import highlight as highlight_fn
 from .operators.postings import build_index
 from .operators.suggest import explain as explain_fn
 from .operators.suggest import term_suggest
-from .operators.topk import IndexReader, edit_distances, search_term_docs, search_topk
+from .operators.topk import (
+    IndexReader, edit_distances, hits_frame, search_term_docs, search_topk,
+)
 from .plans import aggs as aggs_mod
 from .plans import dsl
 from .sources import index_store as store
@@ -290,7 +294,7 @@ class Engine:
         _renew(pin_dir, alive)
         docs = ops_mod.pin_files([os.path.join(store.seg_dir(d, s), "docs.parquet")
                                   for s in reader.segs], pin_dir)
-        ops_mod.write_tombstones(os.path.join(pin_dir, "tombstones.parquet"), np.concatenate(
+        store.write_tombstones(os.path.join(pin_dir, "tombstones.parquet"), np.concatenate(
             [reader.deleted(s) for s in reader.segs]))
         self._pits[pid] = _Pin(concrete[0], reader, pin_dir, docs, alive)
         return pid
@@ -1082,15 +1086,15 @@ class Engine:
             if os.path.exists(os.path.join(self.root, n, "index_meta.json"))
         )
 
-    def bulk(self, index: str, docs: DataFrame, num_partitions: int | None = None,
-             version_type: str | None = None) -> dict:
+    def bulk(self, index: str, docs: DataFrame, version_type: str | None = None) -> dict:
         """POST /{index}/_bulk with implicit op=index. `docs` needs columns
         url, text (+ optional warc_ts, lang). First bulk builds the index;
-        later bulks are op batches (delete+add upserts). An alias routes to
-        its write index (is_write_index semantics). ``version_type=
-        "external"`` with a ``version`` column enables the reference's
-        optimistic-concurrency contract: stale versions are skipped and
-        counted as version_conflicts."""
+        later bulks are op batches (delete+add upserts) applied through the
+        open reader (``ops.apply_ops``). An alias routes to its write index
+        (is_write_index semantics). ``version_type="external"`` with a
+        ``version`` column enables the reference's optimistic-concurrency
+        contract: stale versions are skipped and counted as
+        version_conflicts."""
         index = self._write_index(index)
         self._check_write_allowed(index)
         if version_type == "external" and "version" not in docs.columns:
@@ -1098,16 +1102,16 @@ class Engine:
             # silently index with versioning disabled
             raise ValueError("version_type=external requires a 'version' column")
         d = self._dir(index)
-        meta = store.IndexMeta.load(d)
         cols = docs.columns
         if "warc_ts" not in cols:
             docs = docs.withColumn("warc_ts", F.current_timestamp())
         if "lang" not in cols:
             docs = docs.withColumn("lang", F.lit("unk"))
         if not store.list_segs(d):
+            meta = store.IndexMeta.load(d)
             return build_index(
                 self.spark, docs, d,
-                num_partitions=num_partitions or meta.num_partitions,
+                num_partitions=meta.num_partitions,
                 analyzer=meta.analyzer,
                 index_sort=tuple(meta.index_sort) if meta.index_sort else None,
                 num_shards=meta.num_shards,
@@ -1116,19 +1120,19 @@ class Engine:
         ops_df = docs.select(
             "url", F.lit("index").alias("op"), "text", "lang", "warc_ts", *extra
         )
-        return ops_mod.apply_ops(self.spark, d, ops_df,
-                                 num_partitions=num_partitions or meta.num_partitions,
-                                 version_type=version_type)
+        return ops_mod.apply_ops(self.spark, d, ops_df, version_type=version_type,
+                                 reader=self._reader(index))
 
     def delete(self, index: str, urls: list[str]) -> dict:
-        """DELETE /{index}/_doc/{id} (bulk form)."""
+        """DELETE /{index}/_doc/{id} (bulk form): one tombstone batch of the
+        urls' live docs, with no Spark job."""
         index = self._write_index(index)
         self._check_write_allowed(index)
-        ops_df = self.spark.createDataFrame(
-            [(u, "delete", None, None, None) for u in urls],
-            "url string, op string, text string, lang string, warc_ts timestamp",
-        )
-        return ops_mod.apply_ops(self.spark, self._dir(index), ops_df)
+        ops_df = hits_frame(self.spark, pd.DataFrame({"url": list(urls), "op": "delete"}),
+                            StructType([StructField("url", StringType()),
+                                        StructField("op", StringType())]))
+        return ops_mod.apply_ops(self.spark, self._dir(index), ops_df,
+                                 reader=self._reader(index))
 
     def forcemerge(self, index: str, **kw) -> dict:
         """POST /{index}/_forcemerge — tiered compaction + delete expunge;
@@ -2523,17 +2527,18 @@ class Engine:
         }
 
     def mget(self, index: str, ids: list[str]) -> DataFrame:
-        """POST /{index}/_mget: fetch docs by url id, input order preserved
-        via a broadcast position join."""
-        pos = self.spark.createDataFrame(
-            [(u, i) for i, u in enumerate(ids)], "url string, __ord int"
-        )
-        return (
-            self._docs_view(index)
-            .join(F.broadcast(pos), "url")
-            .orderBy("__ord")
-            .drop("__ord")
-        )
+        """POST /{index}/_mget: the live docs of the url ids, in input
+        order, found through the open reader (``IndexReader.lookup``) and
+        read by row (``Segment.fetch``): a local relation, no Spark job."""
+        reader = self._reader(index)
+        names = reader.docs_footer.names if reader.docs_footer is not None else ["url"]
+        cols = ["url", *(c for c in names if c != "url")]
+        fields = [c for c in cols if c != "doc_id"]
+        docs = [reader.segment(s).fetch(g.to_numpy(), fields)
+                for s, g in reader.lookup(ids).groupby("seg")["doc_id"]]
+        rows = pd.DataFrame({"url": list(ids), "__ord": range(len(ids))}).merge(
+            pd.concat(docs), on="url").sort_values("__ord", kind="stable") if docs else None
+        return hits_frame(self.spark, rows, reader.docs_schema(cols))
 
     def validate_query(self, index: str, query: dict) -> dict:
         """GET /{index}/_validate/query: compile the DSL without executing
@@ -2696,9 +2701,9 @@ class Engine:
         # carry EVERY stored field (incl. custom columns) — a 4-column
         # update frame on a custom-field index would trip the op-batch
         # schema guard and, worse, silently drop the extras
-        view = self._docs_view(index)
-        keep = [c for c in view.columns if c not in ("doc_id", "dl", "norm", "seg_id")]
-        schema = view.select(*keep).schema
+        reader = self._reader(index)
+        keep = [c for c in reader.docs_footer.names if c not in ("doc_id", "dl", "norm", "seg_id")]
+        schema = reader.docs_schema(keep)
         # fields the script/upsert introduced beyond the stored schema ride
         # along (apply_ops dynamic-maps them, like update_by_query's path)
         from .sources.ingest_pipeline import _py_spark_type
@@ -2724,7 +2729,7 @@ class Engine:
             *[c for c in keep if c != "url"], *extras)
         if script_expr:
             updated = updated.withColumn("text", F.expr(script_expr))
-        res = ops_mod.apply_ops(self.spark, self._dir(index), updated)
+        res = ops_mod.apply_ops(self.spark, self._dir(index), updated, reader=reader)
         if isinstance(res, dict):
             res.setdefault("result", "created" if created else "updated")
         return res
@@ -3064,17 +3069,18 @@ class Engine:
     def delete_by_query(self, index: str, query: dict) -> dict:
         """POST /{index}/_delete_by_query: a tombstone write of the docs
         ``_matching`` selects — the same docs a search with this query
-        hits. The matching doc_ids go from the executors into a tombstone
-        batch; a query of stored-field predicates never collects ids on the
-        driver, while a text leaf on the index takes its match set from the
-        driver-side query phase. doc_count/df keep counting masked docs
-        until a merge expunges them — reference semantics."""
+        hits. Their doc_ids are collected and appended as one driver batch,
+        like every other delete; returns the number of distinct docs it
+        masked. doc_count/df keep counting masked docs until a merge
+        expunges them — reference semantics."""
         self._check_write_allowed(index)
         if set(query) == {"query"}:  # REST body shape {"query": {...}}
             query = query["query"]
-        matched = self._matching(index, query)
-        n = ops_mod.append_tombstones(self.spark, self._dir(index), matched.select("doc_id"))
-        return {"deleted": n}
+        matched = self._matching(index, query).select("doc_id").toArrow()
+        ids = np.unique(matched["doc_id"].to_numpy())
+        if len(ids):
+            ops_mod.append_tombstone_batch(self._dir(index), ids)
+        return {"deleted": len(ids)}
 
     @staticmethod
     def _source_script(docs: DataFrame, script_expr: str) -> DataFrame:
@@ -3109,7 +3115,8 @@ class Engine:
         updated = rewritten.select(
             "url", F.lit("update").alias("op"), "text", "lang", "warc_ts", *extra,
         )
-        return ops_mod.apply_ops(self.spark, self._dir(index), updated)
+        return ops_mod.apply_ops(self.spark, self._dir(index), updated,
+                                 reader=self._reader(index))
 
     def reindex(self, source: str, dest: str, query: dict | None = None,
                 script: str | dict | None = None) -> dict:

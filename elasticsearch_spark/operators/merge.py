@@ -18,9 +18,12 @@ manifest. At 100 TB scale this is the standard compaction-job shape: the
 work is embarrassingly parallel across groups and each group is bounded by
 ``max_merged_bytes``. A merged segment's postings carry its term
 dictionary, so term statistics need no second pass: df stays the sum over
-the live segments. Each task returns the tombstoned doc ids it expunged,
-and the driver writes back the committed tombstones less those ids, so
-no Spark job runs after the tasks.
+the live segments. Before the tasks start, the driver folds the carried
+deletes of every segment a group retires into one tombstone batch: they
+may mask docs of a segment outside the group, and a retired segment's
+directory goes with its carried file. Each task returns the tombstoned
+doc ids it expunged, and the driver writes back the tombstone batches
+less those ids, so no Spark job runs after the tasks.
 """
 
 from __future__ import annotations
@@ -37,15 +40,13 @@ from pyspark.sql import SparkSession
 
 from ..sources import index_store as store
 from .codec import decode_blocks
-from .ops import read_tombstones_range, reconcile_tombstones
-from .postings import encode_postings_blocks
+from .ops import append_tombstone_batch, read_tombstones_range, reconcile_tombstones
+from .postings import _write_file, encode_postings_blocks
 
 # reference defaults, scaled for sandbox testing via parameters
 SEGMENTS_PER_TIER = 10
 MAX_MERGED_BYTES = 5 * 2**30
 FLOOR_BYTES = 2 * 2**20
-
-MERGED_SEG_BASE = store.MERGED_SEG_BASE  # merged segment ids live above build pids
 
 
 def _seg_sizes(index_dir: str) -> dict[int, int]:
@@ -105,10 +106,12 @@ def plan_merges(
     return [g for g in groups if len(g) > 1]
 
 
-def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> tuple[dict, list[int]]:
-    """Sort-merge one group of segments into ``seg=<new_seg>``. Pure local
-    function (one Spark task; also unit-testable). Returns the merge
-    manifest dict and the tombstoned doc ids the merge expunged."""
+def merge_group_local(index_dir: str, segs: list[int], new_seg: int,
+                      tomb_files: list[str]) -> tuple[dict, list[int]]:
+    """Sort-merge one group of segments into ``seg=<new_seg>``, expunging
+    the ids of the tombstone files ``tomb_files``. Pure local function
+    (one Spark task; also unit-testable). Returns the merge manifest dict
+    and the tombstoned doc ids the merge expunged."""
     # docs: concat, keep sorted by doc_id (disjoint per-segment ranges) —
     # except under index sorting (IndexSortConfig.java), where the merged
     # docs file must be re-sorted on the sort field so sorted_scan's
@@ -133,7 +136,7 @@ def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> tuple[di
     # span — a broad delete_by_query never ships the full tombstone set to
     # every task.
     ids_all = docs["doc_id"].to_numpy()
-    tomb = (read_tombstones_range(index_dir, int(ids_all.min()), int(ids_all.max()))
+    tomb = (read_tombstones_range(index_dir, int(ids_all.min()), int(ids_all.max()), tomb_files)
             if len(ids_all) else np.zeros(0, dtype=np.int64))
     expunged: list[int] = []
     if len(tomb):
@@ -197,10 +200,8 @@ def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> tuple[di
 
     d = store.seg_dir(index_dir, new_seg)
     os.makedirs(d, exist_ok=True)
-    for name, tbl in (("docs.parquet", docs), ("postings.parquet", merged)):
-        tmp = os.path.join(d, f".{name}.tmp")
-        pq.write_table(tbl, tmp, compression="zstd")
-        os.replace(tmp, os.path.join(d, name))
+    _write_file(d, "docs.parquet", docs)
+    _write_file(d, "postings.parquet", merged)
 
     # record the group's routing shard (shard-pure by plan_merges) so
     # routed searches can prune merged segments in O(1)
@@ -215,12 +216,7 @@ def merge_group_local(index_dir: str, segs: list[int], new_seg: int) -> tuple[di
         "postings_bytes": int(merged.nbytes),
         "status": "complete",
     }
-    mdir = os.path.join(index_dir, "manifests")
-    os.makedirs(mdir, exist_ok=True)
-    mp = os.path.join(mdir, f"merge-{new_seg}.json")
-    with open(mp + ".tmp", "w") as f:
-        json.dump(manifest, f)
-    os.replace(mp + ".tmp", mp)  # commit point: manifest rename
+    store.write_json(store.merge_manifest_path(index_dir, new_seg), manifest)  # commit point
 
     # only after commit: drop the source segment dirs. A crash before this
     # leaves both copies on disk, but readers consult merge manifests
@@ -239,8 +235,9 @@ def merge_index(
     max_merged_bytes: int = MAX_MERGED_BYTES,
     floor_bytes: int = FLOOR_BYTES,
 ) -> dict:
-    """Run one round of tiered compaction: plan groups → one Spark task per
-    group → the driver drops the expunged ids from the tombstones. Scores
+    """Run one round of tiered compaction: plan groups → fold the groups'
+    carried deletes into the tombstone batches → one Spark task per group
+    → the driver drops the expunged ids from the batches. Scores
     are unchanged by construction (df, N and avgdl are sums over the
     segments, docIDs survive the merge verbatim) except that expunged
     deletes stop counting."""
@@ -251,9 +248,17 @@ def merge_index(
     existing_merged = [
         int(n.split("=", 1)[1])
         for n in os.listdir(os.path.join(index_dir, "segments"))
-        if n.startswith("seg=") and int(n.split("=", 1)[1]) >= MERGED_SEG_BASE
+        if n.startswith("seg=") and int(n.split("=", 1)[1]) >= store.MERGED_SEG_BASE
     ]
-    next_id = max(existing_merged, default=MERGED_SEG_BASE - 1) + 1
+    next_id = max(existing_merged, default=store.MERGED_SEG_BASE - 1) + 1
+    retired = {s for g in groups for s in g}
+    carried = [p for s in retired if os.path.exists(p := store.deletes_path(index_dir, s))]
+    if carried:
+        append_tombstone_batch(index_dir, np.concatenate([store.tombstone_ids(p) for p in carried]))
+    # listed once, here: a task removes its sources right after its commit,
+    # so the tasks read no file of a retired segment
+    tomb_files = store.tombstone_files(
+        index_dir, [s for s in store.list_segs(index_dir) if s not in retired])
     specs = pd.DataFrame(
         {
             "gid": range(len(groups)),
@@ -266,7 +271,8 @@ def merge_index(
         for pdf in batches:
             out = []
             for _, row in pdf.iterrows():
-                m, expunged = merge_group_local(index_dir, json.loads(row["segs"]), int(row["new_seg"]))
+                m, expunged = merge_group_local(index_dir, json.loads(row["segs"]), int(row["new_seg"]),
+                                                tomb_files)
                 out.append({"new_seg": m["new_seg"], "n_docs": m["n_docs"], "n_blocks": m["n_blocks"],
                             "expunged": expunged})
             yield pd.DataFrame(out)

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import time
 
 import numpy as np
 import pandas as pd
@@ -253,12 +254,15 @@ def build_segment_frames(
     return docs_pdf, postings, stats
 
 
-def _write_segment(
-    index_dir: str, pid: int, docs_pdf: pd.DataFrame, postings: pa.Table,
-    extra_types: dict | None = None,
-) -> int:
-    d = store.seg_dir(index_dir, pid)
-    os.makedirs(d, exist_ok=True)
+def _write_file(seg_dir: str, name: str, table: pa.Table) -> None:
+    """``table`` as ``seg_dir/name``, written under a temporary name and
+    renamed into place."""
+    tmp = os.path.join(seg_dir, f".{name}.tmp")
+    pq.write_table(table, tmp, compression="zstd")
+    os.replace(tmp, os.path.join(seg_dir, name))
+
+
+def _docs_table(docs_pdf: pd.DataFrame, extra_types: dict | None) -> pa.Table:
     docs_tbl = pa.Table.from_pandas(docs_pdf, preserve_index=False)
     # custom stored fields: pin each extra column to the INPUT schema's
     # arrow type — a partition whose values are all null would otherwise
@@ -275,11 +279,7 @@ def _write_segment(
             docs_tbl = docs_tbl.set_column(
                 i, pa.field(f.name, pa.timestamp("us")), docs_tbl.column(i).cast(pa.timestamp("us"))
             )
-    for name, final in (("docs.parquet", docs_tbl), ("postings.parquet", postings)):
-        tmp = os.path.join(d, f".{name}.tmp")
-        pq.write_table(final, tmp, compression="zstd")
-        os.replace(tmp, os.path.join(d, name))
-    return int(postings.nbytes)
+    return docs_tbl
 
 
 def _extra_arrow_types(df: DataFrame) -> dict:
@@ -295,70 +295,68 @@ def _extra_arrow_types(df: DataFrame) -> dict:
     }
 
 
+def write_segment(
+    index_dir: str, pid: int, pdf: pd.DataFrame, analyzer: str,
+    index_sort: tuple | None = None, extra_types: dict | None = None,
+    deletes: np.ndarray | None = None, **manifest,
+) -> dict:
+    """Build the pages ``pdf`` into segment ``pid`` and commit it — the one
+    segment write, run by each ``build_index`` task and by a bulk on the
+    driver. The files go in commit order: docs.parquet, the doc ids of
+    other segments that the segment supersedes (``deletes``, at
+    ``store.deletes_path``), the manifest (``manifest`` plus the build
+    stats), and last postings.parquet, whose rename is the commit point
+    (``store.list_segs``). A crash before it leaves no live segment, so a
+    bulk's deletes and adds land together or not at all. Returns the
+    manifest. ``extra_types``: {column: pyarrow type} for custom stored
+    fields, from the input Spark schema."""
+    t0 = time.perf_counter()
+    docs_pdf, postings, stats = build_segment_frames(pdf, pid, analyzer, index_sort)
+    d = store.seg_dir(index_dir, pid)
+    os.makedirs(d, exist_ok=True)
+    _write_file(d, "docs.parquet", _docs_table(docs_pdf, extra_types))
+    if deletes is not None and len(deletes):
+        store.write_tombstones(store.deletes_path(index_dir, pid), deletes)
+    manifest = {"pid": pid, **manifest, "status": "complete",
+                "postings_bytes": int(postings.nbytes), **stats}
+    # per-partition build metrics (the north rule's lineage + METRICS
+    # contract): wall seconds and docs/s of the build and docs write
+    manifest["build_s"] = round(time.perf_counter() - t0, 3)
+    if manifest["build_s"] > 0:
+        manifest["docs_per_sec"] = round(stats["n_docs"] / manifest["build_s"], 1)
+    store.write_manifest(index_dir, pid, manifest)
+    _write_file(d, "postings.parquet", postings)
+    return manifest
+
+
 def segment_builder(
     index_dir: str, analyzer: str, index_sort: tuple | None = None,
     extra_types: dict | None = None,
 ):
-    """applyInPandas function: one partition's pages → segment files on the
-    segment store + manifest; returns a one-row metrics frame.
-
-    ``extra_types``: {column: pyarrow type} for custom stored fields,
-    derived from the input Spark schema on the driver."""
+    """applyInPandas function: one partition's pages → one segment
+    (``write_segment``), skipped when its manifest records the same input
+    lineage and its segment committed; returns a one-row metrics frame."""
     # custom analyzer chains are driver-registered; ship the config so the
     # executor-side module can re-materialize the chain
     analyzer_config = analysis.ANALYZER_CONFIGS.get(analyzer)
 
-    def fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(key, pdf):
         if analyzer not in analysis.ANALYZERS and analyzer_config is not None:
             analysis.register_analyzer(analyzer, *analyzer_config)
         pid = int(key[0])
         lin = lineage_hash(pdf["url"], pdf["warc_ts"])
-        existing = store.read_manifest(index_dir, pid)
+        m = store.read_manifest(index_dir, pid)
         seg_present = os.path.exists(
             os.path.join(store.seg_dir(index_dir, pid), "postings.parquet")
         ) or pid in store.merged_away_segs(index_dir)
-        if (
-            existing
-            and existing.get("lineage") == lin
-            and existing.get("status") == "complete"
-            and seg_present
-        ):
-            return pd.DataFrame(
-                [
-                    {
-                        "pid": pid,
-                        "status": "skipped",
-                        "input_rows": len(pdf),
-                        "n_docs": existing["n_docs"],
-                        "sum_dl": existing["sum_dl"],
-                        "n_terms": existing["n_terms"],
-                        "n_blocks": existing["n_blocks"],
-                        "postings_bytes": existing["postings_bytes"],
-                        "lineage": lin,
-                    }
-                ]
-            )
-        import time as _time
-
-        _t0 = _time.perf_counter()
-        docs_pdf, postings, stats = build_segment_frames(pdf, pid, analyzer, index_sort)
-        nbytes = _write_segment(index_dir, pid, docs_pdf, postings, extra_types)
-        manifest = {
-            "pid": pid,
-            "lineage": lin,
-            "input_rows": len(pdf),
-            "status": "complete",
-            "postings_bytes": nbytes,
-            # per-partition build metrics (the north rule's lineage +
-            # METRICS contract): task-local wall seconds and docs/s
-            "build_s": round(_time.perf_counter() - _t0, 3),
-            **stats,
-        }
-        if manifest["build_s"] > 0:
-            manifest["docs_per_sec"] = round(
-                stats.get("n_docs", len(pdf)) / manifest["build_s"], 1)
-        store.write_manifest(index_dir, pid, manifest)
-        return pd.DataFrame([{"pid": pid, "status": "built", "input_rows": len(pdf), "postings_bytes": nbytes, "lineage": lin, **stats}])
+        status = "skipped"
+        if not (m and m.get("lineage") == lin and m.get("status") == "complete" and seg_present):
+            m, status = write_segment(index_dir, pid, pdf, analyzer, index_sort, extra_types,
+                                      lineage=lin, input_rows=len(pdf)), "built"
+        return pd.DataFrame([{
+            "pid": pid, "status": status, "input_rows": len(pdf), "lineage": lin,
+            **{k: m[k] for k in ("n_docs", "sum_dl", "n_terms", "n_blocks", "postings_bytes")},
+        }])
 
     return fn
 

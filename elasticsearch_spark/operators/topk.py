@@ -74,6 +74,7 @@ from concurrent.futures import ThreadPoolExecutor
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_type, to_arrow_schema
@@ -84,7 +85,6 @@ from pyspark.sql.types import (
 from ..functions import bm25
 from ..sources import index_store as store
 from .codec import decode_blocks, decode_ids
-from .ops import tombstone_ids
 
 CAND_SCHEMA = StructType([
     StructField("doc_id", LongType()),
@@ -271,6 +271,12 @@ class Segment:
     def docs_batches(self, columns: list[str], batch_size: int):
         """Stream the stored docs in file (index-sort) order."""
         yield from self._docs.file.iter_batches(batch_size=batch_size, columns=columns)
+
+    def find(self, urls: pa.Array) -> pa.Table:
+        """``doc_id, url`` of the segment's docs (deleted ones too) whose
+        url is one of ``urls``, read from the open docs file."""
+        docs = self._docs.file.read(columns=["doc_id", "url"])
+        return docs.filter(pc.is_in(docs["url"], value_set=urls))
 
     def fetch(self, doc_ids, fields) -> pd.DataFrame:
         """The stored ``fields`` of the docs ``doc_ids`` (ids of this
@@ -538,7 +544,7 @@ class IndexReader:
         tombstones = tombstones or {}
         while True:
             try:
-                self._tombstones = {f: tombstones[f] if f in tombstones else tombstone_ids(f[0])
+                self._tombstones = {f: tombstones[f] if f in tombstones else store.tombstone_ids(f[0])
                                     for f in state.tombstones}
                 break
             except FileNotFoundError:  # a merge swapped the tombstones: list again
@@ -636,6 +642,22 @@ class IndexReader:
     def live_count(self) -> int:
         """The live docs of the committed segments."""
         return self.doc_count - sum(map(len, self._deleted.values()))
+
+    def lookup(self, urls) -> pd.DataFrame:
+        """The live docs whose url is one of ``urls``: ``doc_id, url, seg``
+        rows, from each committed segment's doc_id and url columns less its
+        deleted ids (the realtime get's id lookup; a bulk resolves its urls
+        with it). Runs on the calling thread, not the query-phase pool."""
+        want = pa.array(list(dict.fromkeys(urls)), pa.string())
+        parts = [pd.DataFrame({"doc_id": np.zeros(0, np.int64), "seg": np.zeros(0, int),
+                               "url": np.zeros(0, object)})]
+        for s in self.segs:
+            t = self.segment(s).find(want)
+            ids = t["doc_id"].to_numpy()
+            live = ~_member(ids, self.deleted(s))
+            parts.append(pd.DataFrame({"doc_id": ids[live], "seg": s,
+                                       "url": t["url"].to_numpy(zero_copy_only=False)[live]}))
+        return pd.concat(parts, ignore_index=True)
 
     def _runs(self, prefix: str):
         """Per segment, its dictionary's terms that start with ``prefix``

@@ -5,12 +5,14 @@ Plays the role of the reference's shard/segment/translog persistence
 translog + seqno checkpoints: ``server/.../index/translog/Translog.java:90-102``,
 ``server/.../index/seqno/LocalCheckpointTracker.java:99-133``), re-expressed
 as: immutable Parquet segment files + per-partition JSON lineage manifests.
-A manifest is written only after its segment files are fully written
-(write-temp-then-rename), so a manifest's existence IS the commit point —
-the resume path skips any partition whose manifest matches the input
-lineage hash. In production the same layout is an Iceberg table whose
-snapshot commit replaces the manifest-of-manifests; this sandbox has no
-Iceberg runtime so plain Parquet directories stand in.
+Every file is written under a temporary name and renamed into place. A
+segment's ``postings.parquet`` is written last, after its docs, its
+carried deletes and its manifest, so its rename IS the segment's commit
+point (``list_segs``); the resume path skips any partition whose manifest
+matches the input lineage hash and whose segment committed. In
+production the same layout is an Iceberg table whose snapshot commit
+replaces the manifest-of-manifests; this sandbox has no Iceberg runtime
+so plain Parquet directories stand in.
 
 Layout:
     <index_dir>/
@@ -20,6 +22,8 @@ Layout:
                                   totals: N and sum_dl are read from the
                                   open segments (operators/topk.IndexReader)
       segments/seg=<id>/docs.parquet       doc_id,url,warc_ts,lang,text,dl,norm,seg_id
+      segments/seg=<id>/deletes.parquet    doc_id — a bulk segment's carried deletes
+                                           (``deletes_path``)
       segments/seg=<id>/postings.parquet   term,seg_id,block_id,first_doc_id,
                                            last_doc_id,n,max_tf,min_ql,sum_tf,
                                            ids_bytes,tf_bytes,pos_bytes
@@ -28,15 +32,16 @@ Layout:
                                            segment's term dictionary — df
                                            = Σ n, cf = Σ sum_tf per term —
                                            is read from these blocks)
-      manifests/part-<pid>.json  {pid, lineage, input_rows, n_docs, sum_dl,
-                                  n_terms, n_blocks, status, files}
+      manifests/part-<pid>.json  {pid, status, n_docs, sum_dl, n_terms,
+                                  n_blocks, postings_bytes, build_s} plus a
+                                  build partition's {lineage, input_rows}
+                                  or a bulk segment's {shard}
       manifests/merge-<seg>.json {new_seg, merged_from, shard, n_docs, ...}
-      tombstones/*.parquet       doc_id — the deleted and superseded docs
-                                  (the liveDocs analog), one file per delete
-                                  batch, each committed by rename; a merge
-                                  swaps in the set it leaves, parking the old
-                                  one at tombstones.old/ (counted while it
-                                  exists). ``commit_state`` lists them.
+      tombstones/*.parquet       doc_id — deletes no segment carries (the
+                                  liveDocs analog), one batch per file,
+                                  committed by rename; a merge swaps in the
+                                  set it leaves, parking the old one at
+                                  tombstones.old/ (counted while it exists)
       pins/<id>/                 a point in time's hard links (api.Engine._pin)
 """
 
@@ -45,6 +50,10 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 
 def meta_path(index_dir: str) -> str:
@@ -59,10 +68,7 @@ def manifest_path(index_dir: str, pid: int) -> str:
     return os.path.join(index_dir, "manifests", f"part-{pid}.json")
 
 
-def read_manifest(index_dir: str, pid: int) -> dict | None:
-    p = manifest_path(index_dir, pid)
-    if not os.path.exists(p):
-        return None
+def _read_json(p: str) -> dict | None:
     try:
         with open(p) as f:
             return json.load(f)
@@ -70,30 +76,34 @@ def read_manifest(index_dir: str, pid: int) -> dict | None:
         return None
 
 
+def write_json(p: str, obj: dict) -> None:
+    """``obj`` as the JSON file ``p``, committed by rename."""
+    os.makedirs(os.path.dirname(p), exist_ok=True)
+    with open(p + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(p + ".tmp", p)  # atomic commit point
+
+
+def read_manifest(index_dir: str, pid: int) -> dict | None:
+    return _read_json(manifest_path(index_dir, pid))
+
+
 def write_manifest(index_dir: str, pid: int, manifest: dict) -> None:
-    os.makedirs(os.path.join(index_dir, "manifests"), exist_ok=True)
-    p = manifest_path(index_dir, pid)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, p)  # atomic commit point
+    write_json(manifest_path(index_dir, pid), manifest)
 
 
 OPS_SEG_BASE = 1 << 16  # op-batch segments live above initial pids
 MERGED_SEG_BASE = 1 << 20  # merged segment ids live above build pids
 
 
+def merge_manifest_path(index_dir: str, seg: int) -> str:
+    return os.path.join(index_dir, "manifests", f"merge-{seg}.json")
+
+
 def merge_manifest(index_dir: str, seg: int) -> dict | None:
     """The committed merge manifest that produced ``seg`` (None if ``seg``
     is not a merged segment)."""
-    p = os.path.join(index_dir, "manifests", f"merge-{seg}.json")
-    if not os.path.exists(p):
-        return None
-    try:
-        with open(p) as f:
-            return json.load(f)
-    except (json.JSONDecodeError, OSError):
-        return None
+    return _read_json(merge_manifest_path(index_dir, seg))
 
 
 def shard_of(index_dir: str, seg: int, meta: "IndexMeta") -> int | None:
@@ -104,9 +114,10 @@ def shard_of(index_dir: str, seg: int, meta: "IndexMeta") -> int | None:
     from build parallelism: the build routes docs to ``P = num_partitions``
     partitions by ``pmod(hash(url), P)``, and with ``S | P`` every
     partition maps to routing shard ``pid % S`` (hash mod P mod S ==
-    hash mod S). The id namespaces make the pid derivable without state:
-    - initial build segments: seg == pid;
-    - op-batch segments (``operators/ops.py``): pid = gen*OPS_SEG_BASE + p;
+    hash mod S). By id namespace:
+    - initial build segments: seg == pid, so the shard is ``pid % S``;
+    - bulk segments (``operators/ops.py``): one per routing shard a bulk
+      touches, its manifest records ``shard``;
     - merged segments: the merge manifest records ``shard`` (shard-aware
       tiered merge keeps groups shard-pure).
 
@@ -120,10 +131,9 @@ def shard_of(index_dir: str, seg: int, meta: "IndexMeta") -> int | None:
         # initial build: seg == pid == pmod(hash, P), and S | P
         return seg % meta.num_partitions % meta.num_shards
     if seg < MERGED_SEG_BASE:
-        # op-batch segments allocate DENSELY (operators/ops.py) so the pid
-        # offset is no longer derivable arithmetically — apply_ops records
-        # the shard in the build manifest post-build; None (pre-recording
-        # crash or legacy) means unknown → routed searches keep the segment
+        # a bulk segment's manifest commits before its postings, so a live
+        # one has it; None (a legacy segment) means unknown → routed
+        # searches keep the segment
         m = read_manifest(index_dir, seg)
         return m.get("shard") if m else None
     m = merge_manifest(index_dir, seg)
@@ -132,34 +142,19 @@ def shard_of(index_dir: str, seg: int, meta: "IndexMeta") -> int | None:
     return m.get("shard")  # may be None (pre-sharding mixed merge)
 
 
+def manifest_ids(index_dir: str, kind: str = "part") -> list[int]:
+    """The ids of the committed ``manifests/<kind>-<id>.json`` files."""
+    d = os.path.join(index_dir, "manifests")
+    names = os.listdir(d) if os.path.isdir(d) else []
+    return [int(n[len(kind) + 1:-5]) for n in names if n.startswith(f"{kind}-") and n.endswith(".json")]
+
+
 def merged_away_segs(index_dir: str) -> set[int]:
     """Segments consumed by a committed merge (their files are gone but their
     docs live on in the merged segment) — the resume path must treat these
     build partitions as complete."""
-    d = os.path.join(index_dir, "manifests")
-    out: set[int] = set()
-    if not os.path.isdir(d):
-        return out
-    for name in os.listdir(d):
-        if name.startswith("merge-") and name.endswith(".json"):
-            try:
-                with open(os.path.join(d, name)) as f:
-                    out.update(json.load(f).get("merged_from", []))
-            except (json.JSONDecodeError, OSError):
-                continue
-    return out
-
-
-def all_manifests(index_dir: str) -> list[dict]:
-    d = os.path.join(index_dir, "manifests")
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for name in sorted(os.listdir(d)):
-        if name.startswith("part-") and name.endswith(".json"):
-            with open(os.path.join(d, name)) as f:
-                out.append(json.load(f))
-    return out
+    return {s for m in manifest_ids(index_dir, "merge")
+            for s in (merge_manifest(index_dir, m) or {}).get("merged_from", [])}
 
 
 @dataclass
@@ -193,23 +188,16 @@ class IndexMeta:
     settings: dict | None = None
 
     def save(self, index_dir: str) -> None:
-        p = meta_path(index_dir)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "analyzer": self.analyzer,
-                    "num_partitions": self.num_partitions,
-                    "k1": self.k1,
-                    "b": self.b,
-                    "analyzer_config": self.analyzer_config,
-                    "index_sort": self.index_sort,
-                    "num_shards": self.num_shards,
-                    "settings": self.settings,
-                },
-                f,
-            )
-        os.replace(tmp, p)
+        write_json(meta_path(index_dir), {
+            "analyzer": self.analyzer,
+            "num_partitions": self.num_partitions,
+            "k1": self.k1,
+            "b": self.b,
+            "analyzer_config": self.analyzer_config,
+            "index_sort": self.index_sort,
+            "num_shards": self.num_shards,
+            "settings": self.settings,
+        })
 
     @classmethod
     def load(cls, index_dir: str) -> "IndexMeta":
@@ -311,25 +299,60 @@ def docs_glob(index_dir: str) -> list[str]:
 
 
 def tombstones_dir(index_dir: str) -> str:
-    """The tombstone set, one parquet file per batch: ``delete_by_query``
-    writes its matching doc_ids here as Spark parquet output — no driver
-    collect, so a broad delete never funnels ids through one process — and
-    a bulk appends one driver-written batch (``operators/ops.py``). A
-    merge swaps in the set it leaves."""
+    """The tombstone batches, one parquet file per batch: the deletes no
+    new segment carries (a bulk of deletes, ``Engine.delete_by_query``),
+    each appended by the driver (``operators/ops.py``). A merge swaps in
+    the set it leaves."""
     return os.path.join(index_dir, "tombstones")
 
 
-def tombstone_files(index_dir: str) -> list[str]:
-    """Every committed tombstone file: the batches under ``tombstones/``
-    plus its parked ``tombstones.old/`` twin while a merge's swap has not
-    finished (worst case that masks ids the merge expunged, a no-op). A
-    dot-prefixed name is a batch still being written."""
+def deletes_path(index_dir: str, seg: int) -> str:
+    """The carried deletes of ``seg``: the doc ids of other segments that
+    its docs supersede, written before the segment's postings, so the
+    deletes and the adds of a bulk commit in one rename."""
+    return os.path.join(seg_dir(index_dir, seg), "deletes.parquet")
+
+
+def tombstone_batches(index_dir: str) -> list[str]:
+    """The committed batches under ``tombstones/``, plus its parked
+    ``tombstones.old/`` twin while a merge's swap has not finished (worst
+    case that masks ids the merge expunged, a no-op). A dot-prefixed name
+    is a batch still being written."""
     paths = []
     for d in (tombstones_dir(index_dir), tombstones_dir(index_dir) + ".old"):
         if os.path.isdir(d):
             paths.extend(os.path.join(d, f) for f in sorted(os.listdir(d))
                          if f.endswith(".parquet") and not f.startswith("."))
     return paths
+
+
+def tombstone_files(index_dir: str, segs: list[int] | None = None) -> list[str]:
+    """Every committed tombstone file: the batches and the carried deletes
+    of the live segments ``segs`` (default ``list_segs``)."""
+    segs = list_segs(index_dir) if segs is None else segs
+    return tombstone_batches(index_dir) + [
+        p for s in segs if os.path.exists(p := deletes_path(index_dir, s))]
+
+
+def tombstone_ids(path: str) -> np.ndarray:
+    """The doc ids of one tombstone file."""
+    return pq.read_table(path, columns=["doc_id"])["doc_id"].to_numpy()
+
+
+# row-group size for tombstone writes: small enough that range reads prune
+# hard, large enough that footers stay tiny
+_TOMB_ROW_GROUP = 131072
+
+
+def write_tombstones(path: str, doc_ids: np.ndarray) -> None:
+    """One sorted tombstone file of ``doc_ids`` at ``path``, written under
+    a dot-prefixed temporary name and renamed into place, so no reader
+    lists it half written."""
+    tmp = os.path.join(os.path.dirname(path), f".{os.path.basename(path)}.tmp")
+    pq.write_table(
+        pa.table({"doc_id": pa.array(np.unique(doc_ids), type=pa.int64())}),
+        tmp, row_group_size=_TOMB_ROW_GROUP)
+    os.replace(tmp, path)
 
 
 @dataclass(frozen=True)
@@ -355,8 +378,10 @@ def commit_state(index_dir: str) -> CommitState:
     while True:
         try:
             segs = list_segs(index_dir)
+            tombs = [(p, os.stat(p)) for p in tombstone_files(index_dir, segs)]
+            # after the carried deletes: a segment retired before they were
+            # listed fails here, so none of its files is missed silently
             files = [os.stat(os.path.join(seg_dir(index_dir, s), "postings.parquet")) for s in segs]
-            tombs = [(p, os.stat(p)) for p in tombstone_files(index_dir)]
         except FileNotFoundError:
             continue  # a merge retired a listed segment or tombstone file: list again
         return CommitState(meta, tuple(segs), tuple((f.st_ino, f.st_mtime_ns) for f in files),

@@ -7,7 +7,6 @@ of a doc's live version."""
 
 from __future__ import annotations
 
-import functools
 import sys
 import threading
 
@@ -59,14 +58,16 @@ def test_settings_put_during_a_bulk_survive_it(spark, tmp_path, monkeypatch, fir
     es.create_index("ix", num_partitions=2)
     if not first:
         es.bulk("ix", _frame(spark, DOCS_1))
-    module = postings if first else ops
-    builder = module.segment_builder
+    # the first bulk's tasks build through segment_builder, a later bulk's
+    # segments are written on the driver by write_segment
+    module, name = (postings, "segment_builder") if first else (ops, "write_segment")
+    builder = getattr(module, name)
 
     def racing_builder(*args, **kw):
         es.put_settings("ix", SETTINGS)
         return builder(*args, **kw)
 
-    monkeypatch.setattr(module, "segment_builder", racing_builder)
+    monkeypatch.setattr(module, name, racing_builder)
     es.bulk("ix", _frame(spark, DOCS_2 if not first else DOCS_1))
     monkeypatch.undo()
     _assert_settings_kept(es, "ix")
@@ -179,13 +180,9 @@ def test_track_total_hits_false_counts_nothing(spark, two_indices):
     from tests.test_reader import _jobs
 
     es = two_indices
-    # each run keeps its own job group: ``_jobs`` names it by id(run)
-    bodies = {"plain": SPARK, "false": {**SPARK, "track_total_hits": False}}
-    runs = {(ix, name): functools.partial(es.search, ix, body)
-            for ix in ("a", "both") for name, body in bodies.items()}
     for ix in ("a", "both"):
-        _, plain = _jobs(spark, runs[ix, "plain"])
-        out, n_jobs = _jobs(spark, runs[ix, "false"])
+        _, plain = _jobs(spark, lambda: es.search(ix, SPARK))
+        out, n_jobs = _jobs(spark, lambda: es.search(ix, {**SPARK, "track_total_hits": False}))
         assert "total" not in out, ix
         assert n_jobs == plain, ix
         assert sorted(r.url for r in out["hits"].collect()) == \

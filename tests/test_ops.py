@@ -217,11 +217,12 @@ def test_deletes_and_updates_invisible_on_every_index_path(updated_engine, query
 
 
 def test_interrupted_bulk_stays_searchable(spark, tmp_path, monkeypatch):
-    """A bulk that stops after its segments commit (here: its tombstone
-    append raises) leaves its docs searchable: df is the sum of the live
-    segments' own postings, so no later write has to fold it in. The
-    updated url's old version stays live too — the segment commit and the
-    tombstone append are not one commit yet."""
+    """A bulk that stops right after its segment commits (here: the segment
+    write raises once the segment's postings are in place) leaves its docs
+    searchable: df is the sum of the live segments' own postings, so no
+    later write has to fold it in. The updated url's old version is masked
+    as well: the segment carries the superseded id, so the delete and the
+    add committed in one rename — one live doc per url."""
     from elasticsearch_spark.api import Engine
     from elasticsearch_spark.operators import ops
     from elasticsearch_spark.sources.pages import pages_df
@@ -235,13 +236,14 @@ def test_interrupted_bulk_stays_searchable(spark, tmp_path, monkeypatch):
         return spark.createDataFrame(rows, "url string, text string, lang string") \
             .withColumn("warc_ts", F.lit(TS).cast("timestamp"))
 
-    append = ops.append_tombstone_batch
+    write = ops.write_segment
 
-    def crash_once(*args):
-        monkeypatch.setattr(ops, "append_tombstone_batch", append)
-        raise OSError("injected crash before the tombstone append")
+    def crash_once(*args, **kw):
+        monkeypatch.setattr(ops, "write_segment", write)
+        write(*args, **kw)
+        raise OSError("injected crash after the segment commit")
 
-    monkeypatch.setattr(ops, "append_tombstone_batch", crash_once)
+    monkeypatch.setattr(ops, "write_segment", crash_once)
     with pytest.raises(OSError, match="injected crash"):
         es.bulk("ix", docs([(live_url, "zqxjkw updated body", "en"),
                             ("https://new.example/zq", "zqxjkw fresh body", "en")]))
@@ -252,11 +254,206 @@ def test_interrupted_bulk_stays_searchable(spark, tmp_path, monkeypatch):
     query = {"match": {"text": "zqxjkw"}}
     hits = {r["url"] for r in es.search("ix", {"query": query})["hits"].collect()}
     assert hits == {live_url, "https://new.example/zq"}
-    # count keys the match set by url, so it also counts the old version of
-    # live_url, live because the crash came before its tombstone (ROADMAP)
     versions = es._docs_view("ix").where(F.col("url").isin(sorted(hits))).count()
-    assert es.count("ix", query) == versions >= 2
+    assert es.count("ix", query) == versions == 2
     assert_term_stats_are_segment_sums(spark, es._dir("ix"))
+
+
+def test_bulk_crash_before_its_commit_changes_nothing(spark, tmp_path, monkeypatch):
+    """A bulk that stops after writing its segment's docs, carried deletes
+    and manifest, but before the postings rename that commits the segment,
+    changes nothing: neither the updated url's new version nor the delete
+    of its old one is seen, and the next bulk commits as usual."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from elasticsearch_spark.api import Engine
+    from elasticsearch_spark.sources.pages import pages_df
+
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", pages_df(spark, 60, n_parts=2).drop("html"))
+    live_url = es._docs_view("ix").orderBy("url").first()["url"]
+    n_live = es.count("ix")
+    write_table = pq.write_table
+
+    def crash_at_postings(table, where, **kw):
+        if os.path.basename(str(where)) == ".postings.parquet.tmp":
+            raise OSError("injected crash before the segment commit")
+        return write_table(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", crash_at_postings)
+    with pytest.raises(OSError, match="injected crash"):
+        es.bulk("ix", spark.createDataFrame(
+            [(live_url, "zqxjkw updated body", "en"), ("https://new.example/zq", "zqxjkw fresh body", "en")],
+            "url string, text string, lang string"))
+    monkeypatch.setattr(pq, "write_table", write_table)
+
+    assert es.count("ix") == n_live
+    assert es.count("ix", {"match": {"text": "zqxjkw"}}) == 0
+    assert es.get("ix", live_url)["text"] != "zqxjkw updated body"
+    es.bulk("ix", spark.createDataFrame([(live_url, "zqxjkw again", "en")],
+                                        "url string, text string, lang string"))
+    assert es.count("ix") == n_live
+    assert es.get("ix", live_url)["text"] == "zqxjkw again"
+    assert_term_stats_are_segment_sums(spark, es._dir("ix"))
+
+
+def test_partial_merge_keeps_a_carried_delete(spark, tmp_path):
+    """A tiered merge that retires the segment carrying an update's
+    superseded id, but leaves the segment holding the old version
+    unmerged, keeps the old version masked: the merge folds the ids its
+    retired segments carry into the tombstone batches first."""
+    import os
+
+    from elasticsearch_spark.api import Engine
+    from elasticsearch_spark.operators.merge import plan_merges
+
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", spark.createDataFrame(
+        [(f"u{i:02d}", f"common words {i} " + "filler " * i, "en") for i in range(20)],
+        "url string, text string, lang string"))
+    d = es._dir("ix")
+    reader = es._reader("ix")
+
+    def size(s):
+        return os.path.getsize(os.path.join(store.seg_dir(d, s), "postings.parquet"))
+
+    # the tier sorts by size: the one-doc bulk segment groups with the
+    # smaller build segment, the larger one stays out
+    big = max(reader.segs, key=lambda s: (size(s), s))
+    seg = reader.segment(big)
+    url = seg.fetch(seg.doc_ids[:1], ["url"])["url"][0]
+    es.bulk("ix", spark.createDataFrame([(url, "zqxjkw replaced body", "en")],
+                                        "url string, text string, lang string"))
+    groups = plan_merges(d, segments_per_tier=2, floor_bytes=1)
+    (added,) = set(store.list_segs(d)) - set(reader.segs)
+    assert [g for g in groups if added in g] and not [g for g in groups if big in g]
+
+    assert es.forcemerge("ix", segments_per_tier=2, floor_bytes=1)["merges"] == 1
+    assert big in store.list_segs(d) and added not in store.list_segs(d)
+    assert es.count("ix") == 20
+    assert es._docs_view("ix").where(F.col("url") == url).count() == 1
+    assert [r["url"] for r in es.search("ix", {"query": {"match": {"text": "zqxjkw"}}})["hits"]
+            .collect()] == [url]
+    assert es.get("ix", url)["text"] == "zqxjkw replaced body"
+
+
+def test_merge_groups_with_carried_deletes(spark, tmp_path, monkeypatch):
+    """Two merge groups whose segments carry deletes merge in concurrent
+    tasks, and each task removes its sources right after its commit. The
+    driver folds the carried ids and lists the tombstone files once, so
+    every old version is expunged and a task lists no tombstone file of
+    its own (it would find another task's retired segments)."""
+    import os
+
+    from elasticsearch_spark.api import Engine
+    from elasticsearch_spark.operators.merge import merge_group_local, plan_merges
+
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    urls = [f"u{i:02d}" for i in range(40)]
+    es.bulk("ix", spark.createDataFrame(
+        [(u, f"common words {u} " + "filler " * 30, "en") for u in urls],
+        "url string, text string, lang string"))
+    d = es._dir("ix")
+    for b in range(4):  # four small bulk segments, each masking three docs
+        es.bulk("ix", spark.createDataFrame(
+            [(u, f"zqxjkw update {b}", "en") for u in urls[b * 3:b * 3 + 3]],
+            "url string, text string, lang string"))
+    groups = plan_merges(d, segments_per_tier=2, floor_bytes=1)
+    carrying = [g for g in groups if any(os.path.exists(store.deletes_path(d, s)) for s in g)]
+    assert len(carrying) >= 2
+
+    assert es.forcemerge("ix", segments_per_tier=2, floor_bytes=1)["merges"] == len(groups)
+    assert es.count("ix") == len(es._docs_view("ix").collect()) == 40
+    assert len(read_tombstones(d)) == 0
+    assert es.count("ix", {"match": {"text": "zqxjkw"}}) == 12
+
+    # one group's task, run here with listing disabled, expunges the ids
+    # of exactly the files it is handed
+    es.delete("ix", urls[::2])
+    reader = es._reader("ix")
+    segs = sorted(reader.segs, key=lambda s: -len(reader.deleted(s)))[:2]
+
+    def no_listing(*args, **kw):
+        raise AssertionError("a merge task listed the tombstone files")
+
+    dead = sorted(int(x) for s in segs for x in reader.deleted(s))
+    monkeypatch.setattr(store, "tombstone_files", no_listing)
+    _, expunged = merge_group_local(d, segs, max(store.list_segs(d)) + 1,
+                                    store.tombstone_batches(d))
+    assert dead and sorted(expunged) == dead
+
+
+def test_later_bulk_stores_timestamps_as_the_build_off_utc(spark, tmp_path):
+    """A later bulk collects its batch on the driver, where a timestamp
+    comes back as a naive datetime in the process's local zone. Off UTC it
+    still stores the session-zone wall time a build task stores."""
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    from elasticsearch_spark.api import Engine
+
+    ts = dt.datetime(2020, 6, 1, 12, 30, 15, 250, tzinfo=dt.timezone.utc)
+    schema = "url string, text string, lang string, warc_ts timestamp"
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=2)
+    es.bulk("ix", spark.createDataFrame([("u0", "alpha", "en", ts)], schema))
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        es.bulk("ix", spark.createDataFrame([("u1", "beta", "en", ts)], schema))
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    d = es._dir("ix")
+    stored = {r["url"]: r["warc_ts"] for s in store.list_segs(d) for r in pq.read_table(
+        os.path.join(store.seg_dir(d, s), "docs.parquet"), columns=["url", "warc_ts"]).to_pylist()}
+    wall = ts.astimezone(dt.timezone.utc).replace(tzinfo=None)  # the session zone is UTC
+    assert stored == {"u0": wall, "u1": wall}
+
+
+@pytest.mark.parametrize("num_shards", [None, 2], ids=["unsharded", "sharded"])
+def test_bulk_and_delete_run_no_spark_job(spark, tmp_path, num_shards):
+    """A bulk of a local frame into an existing index and ``Engine.delete``
+    run no Spark job: the urls resolve through the open reader and the
+    segments are written on the driver. The bulk adds one segment to an
+    unsharded index and at most num_shards to a sharded one."""
+    import pandas as pd
+
+    from elasticsearch_spark.api import Engine
+    from elasticsearch_spark.sources.pages import pages_df
+    from tests.test_reader import _jobs
+
+    es = Engine(spark, root=str(tmp_path))
+    es.create_index("ix", num_partitions=4, num_shards=num_shards)
+    es.bulk("ix", pages_df(spark, 60, n_parts=2).drop("html"))
+    d = es._dir("ix")
+    urls = sorted(r["url"] for r in es._docs_view("ix").collect())
+    before = set(store.list_segs(d))
+    new = [f"https://new.example/{i}" for i in range(5)]
+    frame = spark.createDataFrame(pd.DataFrame({
+        "url": urls[:5] + new, "text": [f"zqxjkw body {i}" for i in range(10)], "lang": "en"}))
+
+    out, n_jobs = _jobs(spark, lambda: es.bulk("ix", frame))
+    assert n_jobs == 0
+    assert (out["updated"], out["indexed"]) == (5, 5)
+    added = set(store.list_segs(d)) - before
+    assert len(added) == 1 if num_shards is None else 1 <= len(added) <= num_shards
+    out, n_jobs = _jobs(spark, lambda: es.delete("ix", urls[5:8] + ["https://absent.example/"]))
+    assert n_jobs == 0 and out["deleted"] == 3
+    assert es.count("ix") == len(urls) + 5 - 3
+    assert es.count("ix", {"match": {"text": "zqxjkw"}}) == 10
+    assert_term_stats_are_segment_sums(spark, d)
 
 
 def test_no_term_stats_table_on_disk(spark, tmp_path):

@@ -5,12 +5,12 @@ outlives the commit it was opened on."""
 
 from __future__ import annotations
 
-import functools
 import os
 import shutil
 import sys
 import threading
 import time
+import uuid
 
 import numpy as np
 import pytest
@@ -82,7 +82,7 @@ def es(spark):
 def _jobs(spark, run):
     """(run(), the number of Spark jobs it started)."""
     sc = spark.sparkContext
-    group = f"jobs-{id(run)}"
+    group = f"jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         out = run()
@@ -589,15 +589,14 @@ def test_forcemerge_runs_no_job_past_its_tasks(spark, tmp_path):
     """A forcemerge that expunges deletes runs no more Spark jobs than one
     with nothing to expunge: the tombstones the merge leaves are written
     on the driver from the ids its tasks expunged."""
-    runs, jobs = [], []  # each run kept alive: ``_jobs`` names its group by id(run)
+    jobs = []
     for deleted in ([], ["u01", "u02", "u07"]):
         es = Engine(spark, root=str(tmp_path / str(len(deleted))))
         es.create_index("ix", num_partitions=3)
         es.bulk("ix", _docs(spark, [(f"u{i:02d}", f"common words {i}", "en") for i in range(12)]))
         if deleted:
             es.delete("ix", deleted)
-        runs.append(functools.partial(es.forcemerge, "ix", **FULL_MERGE))
-        out, n_jobs = _jobs(spark, runs[-1])
+        out, n_jobs = _jobs(spark, lambda: es.forcemerge("ix", **FULL_MERGE))
         assert out["merges"] == 1 and out["merged_docs"] == 12 - len(deleted)
         assert len(read_tombstones(es._dir("ix"))) == 0
         assert es.stats("ix")["docs"] == {"count": 12 - len(deleted), "deleted": 0}
